@@ -3,8 +3,9 @@ package graft.engine
 import scala.annotation.tailrec
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One data file tracked by the transaction log, with its row count and
   * min/max stats on the table's key column (the pruning index). `part`
@@ -26,11 +27,19 @@ final case class TxFile(path: String, rows: Long, minKey: Long,
   * physical names dropped from the table — still present in old data
   * files, projected away on read, physically purged as files get
   * rewritten by merge/delete/compact. Both are metadata-only state:
-  * rename/drop never rewrite data. */
+  * rename/drop never rewrite data.
+  *
+  * `schema` is the table's PHYSICAL schema: the union of every schema
+  * a data write has committed since the last overwrite (which records
+  * its own files' schema), so it covers every listed file (columns a
+  * file lacks read as null). Scans read with it instead of merging the
+  * files' parquet footers. None only for a version committed before
+  * manifests carried it. */
 final case class TxSnapshot(version: Long, files: Seq[TxFile],
                             renames: Seq[(String, String)] = Seq.empty,
                             dropped: Seq[String] = Seq.empty,
-                            retired: Seq[String] = Seq.empty)
+                            retired: Seq[String] = Seq.empty,
+                            schema: Option[StructType] = None)
 
 /** A writer raced a concurrent RENAME/DROP it could not have seen: its
   * batch names a column that no longer exists under that name. Raised
@@ -51,6 +60,13 @@ final class TxSchemaConflictException(msg: String)
   *     _txlog/00000000000000000001.manifest   // one per committed version
   *     data/<uuid>.parquet                    // immutable data files
   * }}}
+  *
+  * A manifest lists the version's data files with their key stats and
+  * carries the table's metadata: the column mapping (`#rename=`,
+  * `#drop=`, `#retired=`), the epoch tag (`#epoch=`), and the union
+  * schema of the listed files (`#schema=`, Spark's StructType JSON).
+  * Readers take the schema from the log, so no read opens footers to
+  * learn it (Delta keeps the schema in its log for the same reason).
   *
   * The core invariant: READERS ONLY SEE MANIFEST-LISTED FILES. Writers
   * first write immutable data files (invisible), then publish a new
@@ -115,6 +131,17 @@ object TxLog {
       .foldLeft(0L)(math.max)
   }
 
+  private def manifestText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      var n = in.read(buf)
+      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+      out.toString("UTF-8")
+    } finally in.close()
+  }
+
   /** The table at `version` (default: latest). Version 0 = the empty
     * table (no files). */
   def snapshot(spark: SparkSession, root: String,
@@ -125,15 +152,7 @@ object TxLog {
       val fs = hfs(spark, root)
       val p = manifestPath(root, v)
       require(fs.exists(p), s"no committed version $v at $root")
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
-      val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+      val lines = manifestText(fs, p).split("\n").toSeq.filter(_.nonEmpty)
       require(lines.headOption.contains(Magic), s"bad manifest header in $p")
       // '#'-prefixed lines are commit metadata (e.g. #epoch=N), not files
       // 4 fields = unpartitioned (pre-partition manifests stay readable),
@@ -157,7 +176,9 @@ object TxLog {
         .map(_.stripPrefix("#drop="))
       val retired = lines.filter(_.startsWith("#retired="))
         .map(_.stripPrefix("#retired="))
-      TxSnapshot(v, files, renames, dropped, retired)
+      val schema = lines.find(_.startsWith("#schema=")).map(l =>
+        DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType])
+      TxSnapshot(v, files, renames, dropped, retired, schema)
     }
   }
 
@@ -224,18 +245,8 @@ object TxLog {
     val fs = hfs(spark, root)
     val p = manifestPath(root, v)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
-      text.split("\n").find(_.startsWith("#epoch="))
-        .map(_.stripPrefix("#epoch=").toLong)
-    }
+    else manifestText(fs, p).split("\n").find(_.startsWith("#epoch="))
+      .map(_.stripPrefix("#epoch=").toLong)
   }
 
   /** Latest committed epoch tag: versions are scanned newest-first and
@@ -253,15 +264,21 @@ object TxLog {
     * an empty frame with `schemaFrom`'s schema if provided.
     *
     * SCHEMA EVOLUTION (additive): files written before a column existed
-    * coexist with files written after — `mergeSchema` unions the
-    * per-file parquet schemas and old files read the new column as
-    * null, the Delta/Iceberg add-column semantic. The footer-merge cost
-    * is per-FILE metadata, bounded by the manifest's file count (which
-    * [[compact]] keeps small), not by data volume. RENAME and DROP are
-    * metadata-only via name-based column mapping ([[renameColumn]] /
-    * [[dropColumn]]): the snapshot's mapping projects stored physical
-    * names to the logical view here, so no data rewrite ever happens
-    * for a schema change. Type changes remain unsupported. */
+    * coexist with files written after. The manifest carries the union
+    * of the committed writes' schemas since the last [[overwrite]]
+    * (widened at commit by Spark's own schema merge, the one
+    * `mergeSchema` applies to footers), and
+    * the scan reads every file with it: old files read the new column
+    * as null, the Delta/Iceberg add-column semantic. No footer is
+    * opened per read, so building the frame runs no job. RENAME and
+    * DROP are metadata-only via name-based column mapping
+    * ([[renameColumn]] / [[dropColumn]]): the snapshot's mapping
+    * projects stored physical names to the logical view here, so no
+    * data rewrite ever happens for a schema change. Type changes need
+    * an [[overwrite]]: any other write whose column type conflicts with
+    * the table's fails before it writes a file. A [[delete]] never
+    * narrows the schema: a column whose every file it empties stays,
+    * reading as null. */
   def read(spark: SparkSession, root: String,
            version: Option[Long] = None,
            schemaFrom: Option[DataFrame] = None): DataFrame = {
@@ -270,8 +287,30 @@ object TxLog {
       require(schemaFrom.isDefined,
         s"table $root is empty at v${s.version} and no schemaFrom given")
       schemaFrom.get.limit(0)
-    } else toLogical(spark.read.option("mergeSchema", "true")
-      .parquet(s.files.map(f => s"$root/${f.path}"): _*), s)
+    } else toLogical(scan(spark, root, s.files, s), s)
+  }
+
+  /** The physical scan of `files` (some or all of `snap`'s), read with
+    * the manifest's schema. A version committed before manifests
+    * carried one falls back to `mergeSchema` footer inference. */
+  private def scan(spark: SparkSession, root: String, files: Seq[TxFile],
+                   snap: TxSnapshot): DataFrame =
+    snap.schema.fold(spark.read.option("mergeSchema", "true"))(
+        s => spark.read.schema(s))
+      .parquet(files.map(f => s"$root/${f.path}"): _*)
+
+  /** The schema the version after `snap` records once a write adds
+    * files of physical schema `written`: `snap`'s schema widened with
+    * it. A pre-schema manifest's union is inferred from its files once
+    * here, and the commit then records it. Throws on an incompatible
+    * column type, so the conflict fails the commit, not a later read. */
+  private def widen(spark: SparkSession, root: String, snap: TxSnapshot,
+                    written: StructType): Option[StructType] = {
+    val base = snap.schema.getOrElse(
+      if (snap.files.isEmpty) new StructType()
+      else scan(spark, root, snap.files, snap).schema)
+    Some(GraftSqlBridge.mergeSchemas(base, written,
+      spark.sessionState.conf.caseSensitiveAnalysis))
   }
 
   /** Write `df` as immutable data files under `data/` (NOT visible until
@@ -286,7 +325,10 @@ object TxLog {
     // the stats pass (hidden-path filters skip dot/underscore names)
     val tmp = s"$root/data/tmp-${java.util.UUID.randomUUID()}"
     df.write.mode("overwrite").parquet(tmp)
-    val stats = spark.read.parquet(tmp)
+    // read back only the key column, typed as just written: no footer
+    // job to learn a schema the writer already holds
+    val key = df.select(col(keyCol)).schema.head
+    val stats = spark.read.schema(StructType(Seq(key))).parquet(tmp)
       .groupBy(input_file_name().as("__f"))
       .agg(count(lit(1)).as("__rows"),
         min(col(keyCol).cast("long")).as("__mn"),
@@ -303,33 +345,31 @@ object TxLog {
     moved
   }
 
-  /** Atomic commit attempt: manifest for version `v` listing `files`.
-    * False iff another writer already committed `v`. Writes the full
+  /** Atomic commit attempt: the manifest of version `next.version`,
+    * listing `next`'s files, column mapping and schema. False iff
+    * another writer already committed that version. Writes the full
     * manifest to a hidden temp name, then hands publication to the
     * filesystem's [[LogStore]] — the create-exclusive CAS that makes
     * exactly one racer win (see [[logStoreProvider]]). */
-  /** Atomic commit attempt for version `v`: `files` plus the column
-    * mapping carried in `meta` (whose version/files fields are
-    * ignored). False iff another writer already committed `v`. */
-  private def tryCommit(fs: FileSystem, root: String, v: Long,
-                        files: Seq[TxFile], epoch: Option[Long],
-                        meta: TxSnapshot): Boolean = {
-    require((meta.renames.flatMap(r => Seq(r._1, r._2)) ++ meta.dropped ++
-        meta.retired).forall(n =>
+  private def tryCommit(fs: FileSystem, root: String, next: TxSnapshot,
+                        epoch: Option[Long]): Boolean = {
+    require((next.renames.flatMap(r => Seq(r._1, r._2)) ++ next.dropped ++
+        next.retired).forall(n =>
         !n.contains(":") && !n.contains("\t") && !n.contains("\n")),
       "column names must not contain ':', tab, or newline")
     fs.mkdirs(new Path(s"$root/$LogDir"))
-    val dest = manifestPath(root, v)
+    val dest = manifestPath(root, next.version)
     if (fs.exists(dest)) return false // fast path; the real CAS is below
     val tmp = new Path(s"$root/$LogDir/.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try {
-      val body = (Seq(Magic, v.toString) ++
+      val body = (Seq(Magic, next.version.toString) ++
         epoch.map(e => s"#epoch=$e").toSeq ++
-        meta.renames.map { case (p, l) => s"#rename=$p:$l" } ++
-        meta.dropped.map(d => s"#drop=$d") ++
-        meta.retired.map(r => s"#retired=$r") ++
-        files.map(f =>
+        next.renames.map { case (p, l) => s"#rename=$p:$l" } ++
+        next.dropped.map(d => s"#drop=$d") ++
+        next.retired.map(r => s"#retired=$r") ++
+        next.schema.map(st => s"#schema=${st.json}").toSeq ++
+        next.files.map(f =>
           s"${f.path}\t${f.rows}\t${f.minKey}\t${f.maxKey}" +
             f.part.map("\t" + _).getOrElse(""))).mkString("\n")
       out.write(body.getBytes("UTF-8"))
@@ -337,14 +377,17 @@ object TxLog {
     logStoreProvider(fs).commitExclusive(fs, tmp, dest)
   }
 
+  /** Commit the version after the latest, as `nextAt(latest)` (whose
+    * version field is set here), retrying from a fresh snapshot until
+    * no rival takes that version first. */
   @tailrec
   private def commitLoop(spark: SparkSession, root: String,
-                         filesAt: TxSnapshot => Seq[TxFile]): Long = {
+                         nextAt: TxSnapshot => TxSnapshot): Long = {
     val fs = hfs(spark, root)
     val snap = snapshot(spark, root)
     val v = snap.version + 1
-    if (tryCommit(fs, root, v, filesAt(snap), None, snap)) v
-    else commitLoop(spark, root, filesAt)
+    if (tryCommit(fs, root, nextAt(snap).copy(version = v), None)) v
+    else commitLoop(spark, root, nextAt)
   }
 
   /** Transactional append: new files + everything already committed.
@@ -359,25 +402,31 @@ object TxLog {
              keyCol: String): Long = {
     val snap0 = snapshot(spark, root)
     assertNoSchemaConflict(df.columns.toSeq, snap0)
-    val newFiles = writeData(spark, root, toPhysical(df, snap0),
-      physName(keyCol, snap0))
+    val phys = toPhysical(df, snap0)
+    // fail fast: a column-type conflict must not leave files in data/
+    widen(spark, root, snap0, phys.schema)
+    val newFiles = writeData(spark, root, phys, physName(keyCol, snap0))
     commitLoop(spark, root, { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
-      snap.files ++ newFiles
+      snap.copy(files = snap.files ++ newFiles,
+        schema = widen(spark, root, snap, phys.schema))
     })
   }
 
   /** Transactional full overwrite (the new version lists ONLY the new
-    * files; old versions stay readable until vacuum). */
+    * files; old versions stay readable until vacuum). The new version's
+    * schema is the new files' own, not widened: a column the new files
+    * drop leaves the table, and a column may change type. */
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
                 keyCol: String): Long = {
     val snap0 = snapshot(spark, root)
     assertNoSchemaConflict(df.columns.toSeq, snap0)
-    val newFiles = writeData(spark, root, toPhysical(df, snap0),
-      physName(keyCol, snap0))
+    val phys = toPhysical(df, snap0)
+    val newFiles = writeData(spark, root, phys, physName(keyCol, snap0))
     commitLoop(spark, root, { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
-      newFiles
+      snap.copy(files = newFiles,
+        schema = Some(GraftSqlBridge.asNullable(phys.schema)))
     })
   }
 
@@ -453,13 +502,13 @@ object TxLog {
           snap.files.partition(f => f.maxKey >= incMin && f.minKey <= incMax)
         val existing =
           if (touched.isEmpty) inc.limit(0)
-          else dropRetired(spark.read.option("mergeSchema", "true")
-            .parquet(touched.map(f => s"$root/${f.path}"): _*), snap)
+          else dropRetired(scan(spark, root, touched, snap), snap)
         val merged = Merge.upsert(align(existing, inc),
           align(inc, existing), Seq(physKey))
+        val schema = widen(spark, root, snap, merged.schema)
         val newFiles = writeData(spark, root, merged, physKey)
-        if (tryCommit(fs, root, snap.version + 1, untouched ++ newFiles,
-            epoch, snap)) {
+        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+            files = untouched ++ newFiles, schema = schema), epoch)) {
           snap.version + 1
         } else {
           newFiles.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
@@ -541,11 +590,11 @@ object TxLog {
             f.maxKey >= mn && f.minKey <= mx }))
         val existing =
           if (touched.isEmpty) inc.limit(0)
-          else dropRetired(spark.read.option("mergeSchema", "true")
-            .parquet(touched.map(f => s"$root/${f.path}"): _*), snap)
-        val merged = Merge.upsert(align(existing, inc),
+          else dropRetired(scan(spark, root, touched, snap), snap)
+        val upserted = Merge.upsert(align(existing, inc),
           align(inc, existing), Seq(physPart, physKey))
-          .persist()
+        val schema = widen(spark, root, snap, upserted.schema)
+        val merged = upserted.persist()
         // one write per touched partition so each data file carries a
         // single partition value — batches touch few partitions (the
         // point of partitioning), so this loop is micro-batch-sized
@@ -555,8 +604,8 @@ object TxLog {
                 merged.filter(col(physPart).cast("string") === p), physKey)
               .map(_.copy(part = Some(p)))
           } finally merged.unpersist()
-        if (tryCommit(fs, root, snap.version + 1,
-            untouched ++ newFiles, epoch, snap)) {
+        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+            files = untouched ++ newFiles, schema = schema), epoch)) {
           snap.version + 1
         } else {
           newFiles.foreach(f =>
@@ -593,8 +642,7 @@ object TxLog {
       require(schemaFrom.isDefined,
         s"no files for partitions $parts at v${s.version} and no schemaFrom")
       schemaFrom.get.limit(0)
-    } else toLogical(spark.read.option("mergeSchema", "true")
-      .parquet(hit.map(f => s"$root/${f.path}"): _*), s)
+    } else toLogical(scan(spark, root, hit, s), s)
   }
 
   /** Transactional predicate DELETE, completing the DML triad
@@ -615,8 +663,7 @@ object TxLog {
       val snap = snapshot(spark, root)
       if (snap.files.isEmpty) return snap.version
       // predicate references LOGICAL names → evaluate on the logical view
-      val withFile = toLogical(spark.read.option("mergeSchema", "true")
-        .parquet(snap.files.map(f => s"$root/${f.path}"): _*), snap)
+      val withFile = toLogical(scan(spark, root, snap.files, snap), snap)
         .withColumn("__f", input_file_name())
       // absolute URI → the manifest's root-relative path
       val hitUris = withFile.filter(predicate)
@@ -635,14 +682,14 @@ object TxLog {
       // dropped columns fall away in toLogical, so the rewrite purges
       // them from the touched files.
       val survivors = toPhysical(
-        toLogical(spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(f => s"$root/${f.path}"): _*), snap)
+        toLogical(scan(spark, root, touched, snap), snap)
           .filter(!coalesce(predicate, lit(false))), snap)
+      val schema = widen(spark, root, snap, survivors.schema)
       val newFiles =
         if (survivors.isEmpty) Seq.empty
         else writeData(spark, root, survivors, physName(keyCol, snap))
-      if (tryCommit(fs, root, snap.version + 1, untouched ++ newFiles,
-          None, snap)) {
+      if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+          files = untouched ++ newFiles, schema = schema), None)) {
         snap.version + 1
       } else {
         newFiles.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
@@ -674,19 +721,17 @@ object TxLog {
       else {
         val totalRows = small.map(_.rows).sum
         val nParts = math.max(1L, (totalRows + targetRows - 1) / targetRows)
-        // mergeSchema like read/merge/delete: the small-file set may span
-        // a schema-evolution boundary, and without union-schema reading
-        // Spark would pick one file's schema and the rewrite would drop
-        // the other files' later-added columns — data loss in an
-        // operation documented as content-preserving.
+        // the union-schema scan matters here: the small-file set may span
+        // a schema-evolution boundary, and reading it with one file's
+        // schema would drop the other files' later-added columns — data
+        // loss in an operation documented as content-preserving.
         val physKey = physName(keyCol, snap)
-        val repacked = dropRetired(
-          spark.read.option("mergeSchema", "true")
-            .parquet(small.map(f => s"$root/${f.path}"): _*), snap)
+        val repacked = dropRetired(scan(spark, root, small, snap), snap)
           .repartitionByRange(nParts.toInt, col(physKey))
+        val schema = widen(spark, root, snap, repacked.schema)
         val newFiles = writeData(spark, root, repacked, physKey)
-        if (tryCommit(fs, root, snap.version + 1, big ++ newFiles,
-            None, snap)) {
+        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+            files = big ++ newFiles, schema = schema), None)) {
           snap.version + 1
         } else {
           newFiles.foreach(f =>
@@ -736,8 +781,8 @@ object TxLog {
         else snap.renames :+ ((from, to))
       val newRetired =
         (snap.retired.filterNot(_ == to) :+ from).distinct
-      if (tryCommit(fs, root, snap.version + 1, snap.files, None,
-          snap.copy(renames = newRenames, retired = newRetired)))
+      if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+          renames = newRenames, retired = newRetired), None))
         snap.version + 1
       else loop()
     }
@@ -759,13 +804,13 @@ object TxLog {
         require(read(spark, root, Some(snap.version)).columns.contains(name),
           s"no column '$name' at $root v${snap.version}")
       val phys = snap.renames.find(_._2 == name).map(_._1).getOrElse(name)
-      val meta = snap.copy(
+      val next = snap.copy(version = snap.version + 1,
         renames = snap.renames.filterNot(_._2 == name),
         dropped = (snap.dropped :+ phys).distinct,
         retired =
           if (phys != name) (snap.retired :+ name).distinct
           else snap.retired)
-      if (tryCommit(fs, root, snap.version + 1, snap.files, None, meta))
+      if (tryCommit(fs, root, next, None))
         snap.version + 1
       else loop()
     }

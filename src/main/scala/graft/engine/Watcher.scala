@@ -111,7 +111,12 @@ object Watcher {
     *   all files on the first poll) are processed per batch instead of
     *   the reference's reprocess-all T3 semantics — the natural partner
     *   of the partitioned sink: a one-file change touches one file's
-    *   partition.
+    *   partition. KEY CONTRACT: `process` then sees only the batch's
+    *   files, so it must emit `keys` that are stable across batches,
+    *   such as the document's source id `ID_DOC_SOURCE`. A per-batch
+    *   numbering is not: [[Documents.toDwhDocument]] numbers
+    *   `DOCUMENT_NUM` from 1 in every batch, so keying on it would
+    *   overwrite earlier batches' documents.
     * @param useTxLog when true, the warehouse table is a [[TxLog]]
     *   transactional table and each poll's batch lands via
     *   [[TxLog.mergeEpoch]] with the uploadId as the epoch — EXACTLY

@@ -139,9 +139,14 @@ private[graft] object Caches {
     * extra actions instead of a separate scan-or-join job per round
     * (r15: connectedComponents paid one join+isEmpty action per
     * iteration on top of the two checkpoints). Lifecycle and
-    * PlanAudit capture are [[small]]'s. */
+    * PlanAudit capture are [[small]]'s. A row whose `pred` is NULL
+    * counts as false (SQL WHERE semantics). `df` must not already
+    * carry a `__graft_flag` column: it would be overwritten and then
+    * dropped from the returned frame. */
   def smallCountedTrue(df: DataFrame, pred: org.apache.spark.sql.Column)
       : (DataFrame, Long) = {
+    require(!df.columns.contains("__graft_flag"),
+      "smallCountedTrue: input already has a __graft_flag column")
     val withFlag = df.withColumn("__graft_flag", pred)
     if (capturing) synchronized {
       val p = withFlag.queryExecution.executedPlan
@@ -174,9 +179,12 @@ private[graft] object Caches {
     * aggregation job per round on top of the round's checkpoint.
     * Nulls in `h` are skipped, matching bit_xor's null-ignoring
     * semantics (an all-null/empty frame signs as (n, 0), exactly what
-    * the old `sig()` returned after its null guard). */
+    * the old `sig()` returned after its null guard). `df` must not
+    * already carry a `__graft_h` column (see [[smallCountedTrue]]). */
   def smallCountedXor(df: DataFrame, h: org.apache.spark.sql.Column)
       : (DataFrame, Long, Long) = {
+    require(!df.columns.contains("__graft_h"),
+      "smallCountedXor: input already has a __graft_h column")
     val withH = df.withColumn("__graft_h", h)
     if (capturing) synchronized {
       val p = withH.queryExecution.executedPlan

@@ -567,35 +567,6 @@ object TextAnalysis {
           .as("pmi"))
   }
 
-  /** DSIR importance log-weights (Xie et al., NeurIPS 2023 — "Data
-    * Selection for Language Models via Importance Resampling"): score
-    * every document in a raw pool by how much its hashed-unigram
-    * distribution looks like a TARGET slice rather than the pool.
-    * Features are md5₄₈ buckets (the q85 feature-hash scheme, exact in
-    * any engine with md5); the per-bucket weight is the add-one-
-    * smoothed log-likelihood ratio
-    * λ_b = ln((t_b+1)/(T+B)) − ln((r_b+1)/(R+B)) between the target
-    * and raw bucket unigram models, and a document's importance is the
-    * MEAN λ over its hashed tokens. Returns one row per document:
-    * (id, is_target, n_tokens, dsir_weight rounded 4 dp). Feed the
-    * raw-pool weights to a weighted/Gumbel sampler (q295/q221) for the
-    * resampling step.
-    *
-    * Scale (100 TB): the bucket model is ONE pass — a B-row keyed agg
-    * (B = `buckets`, fixed) broadcast back onto the token stream — and
-    * scoring is a broadcast equi-join plus one per-doc aggregation.
-    * Nothing grows with the corpus except the scans. Deterministic
-    * cross-engine: buckets are exact md5 integer arithmetic; the
-    * per-doc mean is the same two-level sorted fold as
-    * [[hashedLinearScore]] (level 1 within 4096 token-hash buckets,
-    * level 2 over sorted bucket subtotals), so IEEE addition order is
-    * a pure function of the token multiset; ln parity matches what the
-    * surprisal queries already pin.
-    *
-    * PRECONDITION (since r14): `buckets` must divide 4096 — the
-    * count-grain rewrite recovers a token's bucket as subbucket mod B,
-    * which is exact iff B | 4096. Values like 100, valid before r14,
-    * now throw up front; all engine callers use the default 256. */
   /** TRAIN a hashed-feature logistic-regression quality classifier
     * in-engine — the missing half of [[hashedLinearScore]] (which
     * scores with a fixed weight table): full-batch gradient descent on
@@ -1055,6 +1026,36 @@ object TextAnalysis {
     deciles.unionByName(brow).unionByName(krow).unionByName(prow)
   }
 
+  /** DSIR importance log-weights (Xie et al., NeurIPS 2023 — "Data
+    * Selection for Language Models via Importance Resampling"): score
+    * every document in a raw pool by how much its hashed-unigram
+    * distribution looks like a TARGET slice rather than the pool.
+    * Features are md5₄₈ buckets (the q85 feature-hash scheme, exact in
+    * any engine with md5); the per-bucket weight is the add-one-
+    * smoothed log-likelihood ratio
+    * λ_b = ln((t_b+1)/(T+B)) − ln((r_b+1)/(R+B)) between the target
+    * and raw bucket unigram models, and a document's importance is the
+    * MEAN λ over its hashed tokens. Returns one row per document:
+    * (id, is_target, n_tokens, dsir_weight rounded 4 dp). Feed the
+    * raw-pool weights to a weighted/Gumbel sampler (q295/q221) for the
+    * resampling step.
+    *
+    * Scale (100 TB): the bucket model is ONE pass — a B-row keyed agg
+    * (B = `buckets`, fixed) broadcast back onto the token stream — and
+    * scoring is a broadcast equi-join plus one per-doc aggregation.
+    * Nothing grows with the corpus except the scans. Deterministic
+    * cross-engine: buckets are exact md5 integer arithmetic; the
+    * per-doc mean is the same two-level sorted fold as
+    * [[hashedLinearScore]] (level 1 within 4096 token-hash buckets,
+    * level 2 over sorted bucket subtotals), so IEEE addition order is
+    * a pure function of the token multiset; ln parity matches what the
+    * surprisal queries already pin.
+    *
+    * PRECONDITION: `buckets` must divide 4096 — the count-grain
+    * rewrite recovers a token's bucket as subbucket mod B, which is
+    * exact iff B | 4096 (enforced by the `require` below). Other values
+    * such as 100 throw up front; all engine callers use the default
+    * 256. */
   def dsirLogWeights(docs: DataFrame, id: String, text: String,
                      isTarget: Column, buckets: Int = 256): DataFrame = {
     val B = buckets.toLong

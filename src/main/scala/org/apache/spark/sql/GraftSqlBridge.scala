@@ -22,6 +22,20 @@ object GraftSqlBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Spark's own `private[sql]` schema union — the merge parquet's
+    * `mergeSchema` inference applies to file footers: fields of `a` in
+    * order, then `b`'s new ones; nested structs merged recursively; an
+    * incompatible type throws. Both sides are made nullable, as every
+    * parquet read sees them. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+                   b: org.apache.spark.sql.types.StructType,
+                   caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.asNullable.merge(b.asNullable, caseSensitive)
+
+  /** `s` with every field nullable, as a parquet read of it sees it. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** The analyzed logical plan backing a DataFrame. */
   def analyzed(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -6,6 +6,24 @@ import graft.ops.Graph
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
+  test("Caches counted checkpoints: a NULL predicate counts as false, " +
+    "and an input already carrying the helper's column is rejected") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.ops.Caches
+    val df = spark.range(0, 6).toDF("id")
+    // ids 4, 5 TRUE; 2, 3 FALSE; 0, 1 NULL
+    val (cp, n) = Caches.smallCountedTrue(df,
+      when(col("id") >= 4, lit(true)).when(col("id") >= 2, lit(false)))
+    assert(n === 2L)
+    assert(cp.columns.toSeq === Seq("id") && cp.count() === 6L)
+    intercept[IllegalArgumentException] {
+      Caches.smallCountedTrue(df.withColumn("__graft_flag", lit(1)), lit(true))
+    }
+    intercept[IllegalArgumentException] {
+      Caches.smallCountedXor(df.withColumn("__graft_h", lit(1L)), col("id"))
+    }
+  }
+
   test("pageRank: hand-computed star graph (a->c, b->c) reaches its " +
     "fixpoint values") {
     val edges = Seq(("a", "c"), ("b", "c")).toDF("src", "dst")

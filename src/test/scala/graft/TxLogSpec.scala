@@ -1,7 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.TxLog
@@ -16,6 +22,60 @@ class TxLogSpec extends SparkSpec {
 
   private def rows(ids: Range, tag: String) =
     ids.map(i => (i.toLong, tag)).toDF("id", "v")
+
+  private def scored(ids: Range) =
+    ids.map(i => (i.toLong, s"new$i", i * 1.5)).toDF("id", "v", "score")
+
+  private val Marker = "txlogspec-drain"
+
+  /** The jobs `body` launches, each as true iff it ran outside any SQL
+    * execution. Every TxLog action is a Dataset action and runs inside
+    * one; the job parquet schema inference launches to read footers
+    * does not. A marker job before and after `body` brackets the
+    * asynchronous (but ordered) listener bus: jobs between the two
+    * markers' starts are exactly `body`'s. */
+  private def jobsDuring(body: => Any): Seq[Boolean] = {
+    val sc = spark.sparkContext
+    val markers = new AtomicInteger(0)
+    val seen = new ConcurrentLinkedQueue[Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("spark.job.description") == Marker))
+          markers.incrementAndGet()
+        else if (markers.get == 1)
+          seen.add(props.forall(_.getProperty("spark.sql.execution.id") == null))
+      }
+    }
+    def marker(n: Int): Unit = {
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (markers.get < n && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(markers.get == n, "listener bus not drained")
+    }
+    sc.addSparkListener(listener)
+    try { marker(1); body; marker(2) }
+    finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  /** What `TxLog.read` returned before manifests carried the schema:
+    * `mergeSchema` footer inference over the version's files, then the
+    * column mapping. */
+  private def inferredRead(root: String, v: Option[Long]): DataFrame = {
+    val s = TxLog.snapshot(spark, root, v)
+    val df = spark.read.option("mergeSchema", "true")
+      .parquet(s.files.map(f => s"$root/${f.path}"): _*)
+    s.renames.foldLeft(df.drop(s.dropped: _*)) { case (d, (p, l)) =>
+      d.withColumnRenamed(p, l) }
+  }
+
+  private def assertSchemaAsInferred(root: String): Unit =
+    (1L to TxLog.currentVersion(spark, root)).foreach { v =>
+      assert(TxLog.read(spark, root, Some(v)).schema
+        === inferredRead(root, Some(v)).schema, s"$root v$v")
+    }
 
   test("append + read: versions accumulate, time travel reproduces " +
     "every committed snapshot") {
@@ -620,5 +680,142 @@ class TxLogSpec extends SparkSpec {
     // key-only appends still work
     TxLog.append(spark, root, Seq(Tuple1(500L)).toDF("id"), "id")
     assert(TxLog.read(spark, root).count() === 51)
+  }
+
+  test("the manifest carries the schema: building a read launches no " +
+    "job, and merge and compact launch no footer-reading job") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 50, "a"), "id")
+    TxLog.append(spark, root, scored(100 until 150), "id")
+    val snap = TxLog.snapshot(spark, root)
+    assert(snap.files.size >= 2)
+    assert(snap.schema.map(_.fieldNames.toSeq)
+      === Some(Seq("id", "v", "score")))
+    assert(jobsDuring(TxLog.read(spark, root)).isEmpty)
+    val mergeJobs = jobsDuring(
+      TxLog.merge(spark, root, rows(40 until 120, "m"), "id"))
+    assert(mergeJobs.nonEmpty && !mergeJobs.contains(true), mergeJobs)
+    val compactJobs = jobsDuring(TxLog.compact(spark, root, "id",
+      smallRows = 1000L, targetRows = 1000L))
+    assert(compactJobs.nonEmpty && !compactJobs.contains(true), compactJobs)
+    assert(TxLog.read(spark, root).count() === 150)
+    // control: the footer-merging read this replaces IS seen as one
+    val files = TxLog.snapshot(spark, root, Some(2L)).files
+    assert(jobsDuring(spark.read.option("mergeSchema", "true")
+      .parquet(files.map(f => s"$root/${f.path}"): _*)).contains(true))
+  }
+
+  test("the recorded schema equals the footer-merged read's, in names " +
+    "and order: additive evolution, compaction across it, rename/drop, " +
+    "time travel, and a nested struct gaining a field") {
+    val evolving = freshRoot()
+    TxLog.append(spark, evolving, rows(0 until 100, "a"), "id")
+    TxLog.merge(spark, evolving, scored(40 until 110), "id")
+    TxLog.merge(spark, evolving, rows(200 until 205, "late"), "id")
+    assertSchemaAsInferred(evolving)
+
+    val compacted = freshRoot()
+    TxLog.append(spark, compacted, rows(0 until 20, "old"), "id")
+    TxLog.append(spark, compacted, scored(100 until 120), "id")
+    TxLog.compact(spark, compacted, "id", smallRows = 1000L,
+      targetRows = 40L)
+    assertSchemaAsInferred(compacted)
+
+    val mapped = freshRoot()
+    TxLog.append(spark, mapped, (0 until 50).map(i =>
+      (i.toLong, s"v$i", i * 2)).toDF("id", "v", "extra"), "id")
+    TxLog.renameColumn(spark, mapped, "v", "tag")
+    TxLog.merge(spark, mapped,
+      Seq((5L, "x", 7)).toDF("id", "tag", "extra"), "id")
+    TxLog.dropColumn(spark, mapped, "extra")
+    TxLog.merge(spark, mapped, Seq((6L, "y")).toDF("id", "tag"), "id")
+    TxLog.append(spark, mapped, Seq((90L, "z")).toDF("id", "tag"), "id")
+    assert(TxLog.read(spark, mapped).columns.toSeq === Seq("id", "tag"))
+    assertSchemaAsInferred(mapped)
+
+    val nested = freshRoot()
+    TxLog.append(spark, nested, spark.range(0, 10).select(col("id"),
+      struct(col("id").cast("int").as("a")).as("s")), "id")
+    TxLog.append(spark, nested, spark.range(10, 20).select(col("id"),
+      struct(col("id").cast("int").as("a"), lit("b").as("b")).as("s")),
+      "id")
+    assertSchemaAsInferred(nested)
+    val t = TxLog.read(spark, nested)
+    assert(t.filter(col("id") === 3L).select("s.a", "s.b")
+      .as[(Int, Option[String])].head() === ((3, None)))
+    assert(t.filter(col("id") === 15L).select("s.b").as[String].head()
+      === "b")
+  }
+
+  test("an incompatible column type fails the write at commit, and the " +
+    "table stays at its last version") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 10, "a"), "id")
+    def dataFiles = Files.list(Paths.get(root, "data")).count()
+    val filesBefore = dataFiles
+    val e = intercept[org.apache.spark.SparkException] {
+      TxLog.append(spark, root, Seq((20L, 5)).toDF("id", "v"), "id")
+    }
+    assert(e.getMessage.contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"))
+    assert(TxLog.currentVersion(spark, root) === 1L)
+    assert(TxLog.read(spark, root).count() === 10)
+    assert(dataFiles === filesBefore, "the rejected append left files")
+  }
+
+  test("overwrite records its own files' schema: a dropped column leaves " +
+    "the table and a column may change type, as footer inference saw it") {
+    val root = freshRoot()
+    TxLog.append(spark, root, scored(0 until 10), "id")
+    TxLog.overwrite(spark, root, rows(0 until 5, "b"), "id")
+    assert(TxLog.read(spark, root).columns.toSeq === Seq("id", "v"))
+    TxLog.overwrite(spark, root,
+      (0 until 3).map(i => (i.toLong, i)).toDF("id", "v"), "id")
+    val t = TxLog.read(spark, root)
+    assert(t.schema("v").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(t.select("v").as[Int].collect().sorted.toSeq === Seq(0, 1, 2))
+    assertSchemaAsInferred(root)
+    // the next write widens from the overwritten schema as before
+    TxLog.merge(spark, root, (5 until 7).map(i =>
+      (i.toLong, i, s"n$i")).toDF("id", "v", "note"), "id")
+    assert(TxLog.read(spark, root).columns.toSeq === Seq("id", "v", "note"))
+    assertSchemaAsInferred(root)
+  }
+
+  test("a table whose manifests predate the schema line reads as before " +
+    "through footer inference, and its next commit records the schema") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 50, "a"), "id")
+    TxLog.append(spark, root, scored(100 until 150), "id")
+    def contents(df: DataFrame) =
+      df.select("id", "v", "score")
+        .as[(Long, String, Option[Double])].collect().toSet
+    val cols = TxLog.read(spark, root).columns.toSeq
+    val before = contents(TxLog.read(spark, root))
+    // rewrite every manifest as an older writer left it
+    Files.list(Paths.get(root, "_txlog")).iterator().asScala
+      .filter(_.toString.endsWith(".manifest")).foreach { p =>
+        val kept = Files.readAllLines(p).asScala
+          .filterNot(_.startsWith("#schema="))
+        Files.write(p, kept.mkString("\n").getBytes("UTF-8"))
+      }
+    assert(TxLog.snapshot(spark, root).schema === None)
+    assert(TxLog.read(spark, root).columns.toSeq === cols)
+    assert(contents(TxLog.read(spark, root)) === before)
+    assert(jobsDuring(TxLog.read(spark, root)).contains(true))
+    // the next merge touches only the low file, yet records the union
+    // of ALL files, the untouched high file's `score` included
+    TxLog.merge(spark, root, rows(10 until 20, "m"), "id")
+    val snap = TxLog.snapshot(spark, root)
+    assert(snap.version === 3L)
+    assert(snap.schema.map(_.fieldNames.toSeq)
+      === Some(Seq("id", "v", "score")))
+    assert(Files.readAllLines(Paths.get(root, "_txlog",
+      f"${3L}%020d.manifest")).asScala.exists(_.startsWith("#schema=")))
+    assertSchemaAsInferred(root)
+    assert(contents(TxLog.read(spark, root)) === before.map {
+      case (id, _, sc) if id >= 10 && id < 20 => (id, "m", sc)
+      case r => r
+    })
+    assert(jobsDuring(TxLog.read(spark, root)).isEmpty)
   }
 }

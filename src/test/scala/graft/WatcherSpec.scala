@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{TxLog, Watcher}
+import graft.engine.{Documents, TxLog, Watcher}
 
 /** T1–T6 incremental-loop semantics (reference `script.py`), driven by
   * direct polls over a temp directory. */
@@ -436,6 +436,34 @@ class WatcherSpec extends SparkSpec {
     assert(restarted.pollOnce() === Some(5L))
     assert(TxLog.commitEpoch(spark, wh, 6L) === Some(5L))
     assert(restarted.currentTable().get.count() === 5)
+  }
+
+  test("incremental TxLog sink keyed on ID_DOC_SOURCE keeps every " +
+    "document: DOCUMENT_NUM restarts at 1 in each batch, so it is not " +
+    "a key across batches") {
+    val src = Files.createTempDirectory("graft_src_doc").toString
+    val wh = Files.createTempDirectory("graft_wh_doc").toString + "/docs"
+    val ipphist = Seq((101L, "00000001"), (102L, "00000002"))
+      .toDF("PATIENT_NUM", "HOSPITAL_PATIENT_ID")
+    val loader = new Watcher.IncrementalLoader(
+      spark, src, wh, keys = Seq("ID_DOC_SOURCE"),
+      process = (files, uploadId) => Documents.pipeline(
+        files.select(col("path"), col("content").cast("string").as("text")),
+        ipphist, uploadId),
+      incremental = true, useTxLog = true)
+    writeDoc(src, "00000001_501.pdf", "consultation du 29/10/2018")
+    writeDoc(src, "00000002_502.pdf", "consultation du 30/10/2018")
+    assert(loader.pollOnce() === Some(1L))
+    Thread.sleep(1100) // mtime resolution
+    writeDoc(src, "00000001_503.docx", "compte rendu du 02/11/2018")
+    assert(loader.pollOnce() === Some(2L))
+    val t = loader.currentTable().get
+    assert(t.select("ID_DOC_SOURCE").as[String].collect().sorted.toSeq
+      === Seq("501", "502", "503"))
+    // the second batch numbered its one document 1 again: keyed on
+    // DOCUMENT_NUM, it would have replaced document 501
+    assert(t.select("DOCUMENT_NUM").as[Long].collect().sorted.toSeq
+      === Seq(1L, 1L, 2L))
   }
 
   test("T2 unit: snapshot diff classifies added/deleted/modified") {

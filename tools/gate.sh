@@ -27,6 +27,14 @@
 #                                    after the sweep: bounds the session
 #                                    GC/JIT drift the committed baseline
 #                                    can ever absorb; same JSON fail check
+# 7. sf1 scaling spot-check        — four iterative-family
+#                                    representatives at 32 vs 8 cores;
+#                                    FAILS on a crashed bench run, a
+#                                    missing or zero timing, or an
+#                                    8c/32c ratio under 0.7
+#
+# Step 0 (baseline freshness) and step 3b (Verify under adverse planner
+# settings) run before steps 1 and 4 respectively.
 set -u
 cd "$(dirname "$0")/.."
 ROUND=${1:?usage: tools/gate.sh rNN}
@@ -48,7 +56,7 @@ if bad:
 EOF
 }
 
-echo "== [0/6] baseline freshness"
+echo "== [0/7] baseline freshness"
 # The >2x guardrail is meaningless when the committed baseline predates
 # the plans it judges (the round-6 q265 lesson): fail unless
 # BENCH_BASELINE.json's last commit is at least as new as the last
@@ -64,16 +72,16 @@ if [ -z "$BASE_T" ] || [ "$BASE_T" -lt "$SRC_T" ]; then
 fi
 echo "baseline commit >= source commit: OK"
 
-echo "== [1/6] sbt test"
+echo "== [1/7] sbt test"
 sbt -batch test >/tmp/gate_test.log 2>&1
 grep -E "Tests:|All tests passed|TESTS FAILED" /tmp/gate_test.log | tail -3
 grep -q "All tests passed" /tmp/gate_test.log || { echo "FAIL: sbt test"; exit 1; }
 
-echo "== [2/6] Smoke sf0.001"
+echo "== [2/7] Smoke sf0.001"
 sbt -batch "runMain graft.Smoke" 2>/dev/null | grep '\[smoke\]' >/tmp/gate_smoke.log
 wc -l </tmp/gate_smoke.log
 
-echo "== [3/6] Verify sf0.01 + DuckDB oracle"
+echo "== [3/7] Verify sf0.01 + DuckDB oracle"
 rm -rf /tmp/graft_verify
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify" >/dev/null 2>&1
 if ! python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify \
@@ -85,7 +93,7 @@ tail -2 /tmp/gate_oracle.log
 tail -1 /tmp/gate_oracle.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: oracle (partial pass)"; exit 1; }
 
-echo "== [3b] Verify sf0.01 under ADVERSE physical-planner settings"
+echo "== [3b/7] Verify sf0.01 under ADVERSE physical-planner settings"
 # Plan-shape-independence soak (the r13 numberRows lesson: a correctness
 # bug hid behind ReuseExchange + lucky AQE coalescing): identical
 # results required under reuse off, no auto-broadcast, 7 shuffle
@@ -102,7 +110,7 @@ tail -1 /tmp/gate_adverse.log
 tail -1 /tmp/gate_adverse.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: adverse-plan oracle (partial pass)"; exit 1; }
 
-echo "== [4/6] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
+echo "== [4/7] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
 if ! SPARK_GRAFT_PLANS_JSON="PLANS_${ROUND}.json" \
     sbt -batch "runMain graft.PlanAudit" \
     >/tmp/gate_plan_out.log 2>/tmp/gate_plan_err.log; then
@@ -128,14 +136,14 @@ if n != 0 or errs:
 print(f"plan sidecar: {len(d['queries'])} queries, undocumented_total=0")
 EOF
 
-echo "== [5/6] Bench sf0.1 (full sweep, auto re-measured flags)"
+echo "== [5/7] Bench sf0.1 (full sweep, auto re-measured flags)"
 rm -f BENCH_QUERIES.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   sbt -batch "runMain graft.Bench" 2>/tmp/gate_bench_err.log | grep '"metric"' | tail -1
 check_bench_json BENCH_QUERIES.json \
   || { echo "FAIL: bench sweep (failed or >2x-flagged queries)"; exit 1; }
 
-echo "== [6/6] Top-15-by-baseline isolated re-bench (fresh JVM)"
+echo "== [6/7] Top-15-by-baseline isolated re-bench (fresh JVM)"
 TOP15=$(python3 -c "
 import json
 b = json.load(open('BENCH_BASELINE.json'))
@@ -159,6 +167,10 @@ echo "== [7/7] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
 # round-14 driver measured at 0.35-0.46 — many tiny stages paying 32-way
 # scheduling for nothing). Floor 0.7 = the measured noise band's lower
 # edge minus margin; recorded ratios land in SCALING_<round>.json.
+# EXEMPT: the SQLite single-file family has no representative here on
+# purpose. Its scans are filesystem-bound, so extra cores cannot help,
+# and its sf0.1 ratios already sit under the floor (q331 0.57, q347
+# 0.62, q339 0.68: BENCH_r15_c8.json over BENCH_r15.json).
 SF1_DIR=${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}
 if [ ! -d "$SF1_DIR" ]; then
   echo "generating $SF1_DIR (ScaleUp 10x of sf0.1)"
@@ -170,14 +182,22 @@ for c in 32 8; do
   rm -f "/tmp/gate_scaling_c${c}.json"
   SPARK_GRAFT_SF_DIR=$SF1_DIR SPARK_GRAFT_CPUS=$c SPARK_GRAFT_QUERIES=$REPS \
     SPARK_GRAFT_BENCH_OUT="/tmp/gate_scaling_c${c}.json" \
-    sbt -batch "runMain graft.Bench" >/dev/null 2>&1
+    sbt -batch "runMain graft.Bench" >/dev/null 2>&1 \
+    || { echo "FAIL: scaling bench (c${c})"; exit 1; }
 done
-python3 - "$ROUND" <<'EOF' || { echo "FAIL: scaling spot-check"; exit 1; }
+python3 - "$ROUND" "$REPS" <<'EOF' || { echo "FAIL: scaling spot-check"; exit 1; }
 import json, sys
 c32 = json.load(open("/tmp/gate_scaling_c32.json"))["queries"]
 c8  = json.load(open("/tmp/gate_scaling_c8.json"))["queries"]
+# every representative must have a positive timing on BOTH sides: a
+# missing or zero entry is a failed measurement, not a pass
+reps = sys.argv[2].split(",")
+bad_t = [q for q in reps
+         if not (c32.get(q, 0) > 0 and c8.get(q, 0) > 0)]
+if bad_t:
+    print(f"missing or zero timings: {bad_t}"); sys.exit(1)
 out = {q: {"sec_32c": c32[q], "sec_8c": c8[q],
-           "ratio_8c_over_32c": round(c8[q] / c32[q], 3)} for q in c32}
+           "ratio_8c_over_32c": round(c8[q] / c32[q], 3)} for q in reps}
 json.dump(out, open(f"SCALING_{sys.argv[1]}.json", "w"), indent=1)
 bad = {q: v for q, v in out.items() if v["ratio_8c_over_32c"] < 0.7}
 for q, v in sorted(out.items()):
