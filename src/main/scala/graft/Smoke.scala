@@ -24,8 +24,6 @@ object Smoke {
       catch { case e: Throwable =>
         println(s"[smoke] $name FAIL ${e.getMessage.linesIterator.next()}") }
     }
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    if (missing.nonEmpty) println(s"[smoke] oracle without query: $missing")
     spark.stop()
   }
 }

@@ -1,30 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Dedup, Merge, Partitioning, Patients, TxLog, TextFunctions => TF}
-import graft.functions.SortedSumD.{sortedSum => ssum}
-import graft.ops.{AsOf, Behavior, Caches, DedupOps, JoinOps, Multimodal, Sampling, Similarity, Sketches, TextAnalysis => TA}
+import graft.engine.{Merge, Patients, TextFunctions => TF}
+import graft.queries._
+import graft.queries.Shared.t
 
 /** Driver contract — one named query per implemented operator from
   * SURVEY.md §2 plus the training-data-pipeline operators, each paired
-  * with a DuckDB-equivalent oracle in [[SparkEntry.oracleSql]].
-  *
-  * Conventions shared by every query/oracle pair (driver hash-compares
-  * after sorting columns by name):
-  *  - identical column aliases on both sides;
-  *  - deterministic result sets: every window/limit has a total tiebreak
-  *    order, double outputs are rounded, temporal outputs are formatted
-  *    to strings (removes timestamp-encoding ambiguity between engines);
-  *  - cross-engine hashing uses the first 12 hex digits of md5 (exact in
-  *    48 bits — reproducible bit-for-bit in DuckDB).
-  */
+  * with a DuckDB-equivalent oracle. Each query is one [[QueryDef]]
+  * record in its family file under `graft.queries`; this object
+  * registers the families and derives the driver's three views. */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Flagship: the reference's patient-ingest pipeline (SURVEY.md §7.3) —
     * stage → keep-first dedup on identity keys with pre-dedup surrogate
@@ -56,19270 +44,28 @@ object SparkEntry {
       .join(ipphist.select("PATIENT_NUM", "HOSPITAL_PATIENT_ID"), Seq("PATIENT_NUM"))
   }
 
-  // ---- shared fragments ------------------------------------------------
-
-  /** Normalized document text (F1) used by the text/dedup family. */
-  private def normText: Column = TF.normalizeText(col("text"))
-
-  /** `events` with `ts` normalized to a session-TZ TIMESTAMP, whatever
-    * the parquet encodes — generations of the testdata have shipped
-    * TIMESTAMP(NANOS) (read as a ns-since-epoch long under
-    * `spark.sql.legacy.parquet.nanosAsLong`) and TIMESTAMP_NTZ
-    * (timestamp[us] with no zone). The session runs UTC, so the
-    * NTZ→LTZ cast is wall-clock identity, and every query (incl. the
-    * `unix_micros` frame arithmetic in q45/q124) sees one type. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
-    e.schema("ts").dataType.typeName match {
-      // integer DIV, not `/`: ns-since-epoch exceeds 2^53, so double
-      // division is off by up to a microsecond
-      case "long" => e.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case "timestamp_ntz" => e.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => e
-    }
+  /** The driver's views of `defs`: builders and oracles by name, and
+    * the names of the eager sinks. Throws on a name defined twice or an
+    * empty oracle. */
+  private[graft] def derive(defs: Seq[QueryDef]): (
+      Map[String, (SparkSession, String) => DataFrame],
+      Map[String, String], Set[String]) = {
+    val twice = defs.groupBy(_.name).collect {
+      case (n, ds) if ds.size > 1 => n }
+    require(twice.isEmpty,
+      s"query names defined twice: ${twice.toSeq.sorted.mkString(", ")}")
+    val noOracle = defs.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    require(noOracle.isEmpty,
+      s"queries without an oracle: ${noOracle.mkString(", ")}")
+    (defs.map(d => d.name -> d.build).toMap,
+      defs.map(d => d.name -> d.oracleSql).toMap,
+      defs.filter(_.eagerSink).map(_.name).toSet)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §2.4-style aggregation surface (TPC-H Q1 shape): filter pushdown +
-    // partial (map-side) aggregation; one shuffle on the two group keys.
-    "q01_pricing_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("2001-06-30").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          // money sums ride EXACT integer cents (price is 2-decimal, so
-          // cents = round(x·100) is lossless): a raw double sum's low
-          // bits depend on partition/merge order, and the round-14
-          // adverse-plan soak caught the q54 sibling of this pattern
-          // landing ON a 2-decimal rounding boundary under a different
-          // partition geometry. cents/100.0 is exact — no round, no tie.
-          sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-            .as("__bp_cents"),
-          // revenue = Σ price·(1−disc) in exact 10⁻⁴-dollar units
-          // (cents × integer discount percent)
-          sum(round(col("l_extendedprice") * 100, 0).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100, 0).cast("long")))
-            .as("__rev_c4"),
-          sum(round(col("l_discount") * 100, 0).cast("long")).as("__dpct"),
-          count(lit(1)).as("count_order"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
-          (col("__bp_cents").cast("double") / 100.0).as("sum_base_price"),
-          // half-up at display via integer div (both engines floor
-          // positive integer division)
-          (expr("(__rev_c4 + 50) div 100").cast("double") / 100.0)
-            .as("sum_disc_price"),
-          // avg(discount) to 4 decimals, half-up in integers:
-          // round(100·Σpct/n)/10⁴ = ((200·Σpct + n) div 2n)/10⁴
-          (expr("(200 * __dpct + count_order) div (2 * count_order)")
-            .cast("double") / 10000.0).as("avg_disc"),
-          col("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // J1+P5 — keep-first dedup on a key subset under explicit order
-    // (reference drop_duplicates, exo_1.py:32-34): one window shuffle on
-    // the dedup keys, no global sort.
-    "q02_dedup_keepfirst" -> ((s, dir) => {
-      Dedup.keepFirst(t(s, dir, "customer"),
-          Seq("c_nationkey", "c_mktsegment"), col("c_custkey"))
-        .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
-        .orderBy("c_custkey")
-    }),
-
-    // J2 — anti-join new-rows detection (exo_1.py:199-204). AQE turns
-    // this into a broadcast anti join when the distinct-key side is small.
-    "q03_antijoin_new_rows" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val recent = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))
-        .select(col("o_custkey").as("c_custkey"))
-      Merge.newRows(c, recent, Seq("c_custkey"))
-        .select("c_custkey", "c_name", "c_acctbal")
-        .orderBy("c_custkey")
-    }),
-
-    // J3/J4 — dimension resolution joins, explicitly broadcast
-    // (exo_2.py:255's N+1 lookup done as one set-at-a-time join).
-    "q04_join_resolve" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-      val n = t(s, dir, "nation").select("n_nationkey", "n_name")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .select(col("o_orderkey"), col("c_name"), col("n_name"))
-        .orderBy("o_orderkey")
-    }),
-
-    // P5/A2 — ranking window partitioned by key (no global sort). The
-    // order is a total tiebreak over all output columns so the result is
-    // a deterministic multiset even with duplicate (orderkey, linenumber).
-    "q05_window_rownum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_orderkey"))
-        .orderBy(col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
-          col("l_quantity"))
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"), col("l_quantity"),
-          row_number().over(w).as("rn"))
-        .orderBy(col("l_orderkey"), col("rn"))
-    }),
-
-    // F2/F6 — the reference's document-date rule (first dd/MM/yyyy with
-    // year>=2001, exo_2.py:181-189) over text synthesized from
-    // o_orderdate, so the <2001 branch is actually exercised.
-    "q06_regex_date_extract" -> ((s, dir) => {
-      val txt = concat(lit("ne le 01/01/1940 vu le "),
-        date_format(col("o_orderdate"), "dd/MM/yyyy"),
-        lit(" rdv 15/06/2001 fin"))
-      t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          TF.extractDocumentDate(txt).cast("string").as("doc_date"))
-        .orderBy("o_orderkey")
-    }),
-
-    // F1/F3/F4 — author rule: last `dr <one-or-two lowercase words>` match
-    // on normalized text wins, then title-cased (exo_2.py:166-201).
-    "q07_regex_author_extract" -> ((s, dir) => {
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region").select("r_regionkey", "r_name")
-      val txt = concat(lit("avis du dr "), lower(col("n_name")),
-        lit(" transmis au dr "), lower(col("r_name")), lit(" service"))
-      n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(col("n_nationkey"), TF.extractAuthor(txt).as("author"))
-        .orderBy("n_nationkey")
-    }),
-
-    // S7/S8/J2 — keyed MERGE as antijoin-union (exo_1.py:134-170):
-    // incoming batch (2001+ orders, re-priced) upserted into orders.
-    "q08_merge_upsert" -> ((s, dir) => {
-      val existing = t(s, dir, "orders")
-      val incoming = existing
-        .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .withColumn("o_orderstatus", lit("U"))
-      Merge.upsert(existing, incoming, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("total"))
-        .orderBy("o_orderkey")
-    }),
-
-    // S9/F5/F7 — the provenance export join: date re-format + the Oracle
-    // zero-pad-of-id*5124 quirk (export_patient.xlsx sheet "SQL").
-    "q09_provenance_export" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer").select("c_custkey", "c_name")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .select(col("o_orderkey"),
-          TF.zeroPadId(col("o_custkey")).as("hospital_patient_id"),
-          date_format(col("o_orderdate"), "dd/MM/yyyy").as("order_date_fr"),
-          col("c_name"))
-        .orderBy("o_orderkey")
-    }),
-
-    // P1-P4/F9 — schema-mapping projection with constants, typed NULLs,
-    // conditional "0"/"1" encodes and the Python-truthiness guard.
-    "q10_schema_projection" -> ((s, dir) => {
-      t(s, dir, "customer").select(
-        col("c_custkey").as("patient_num"),
-        col("c_name").as("lastname"),
-        lit(null).cast("string").as("maiden_name"),
-        TF.boolFlag(col("c_acctbal") < 0).as("death_code"),
-        TF.boolFlag(TF.truthy(col("c_mktsegment"))).as("master_patient_id"),
-        lit("SIH").as("origin_patient_id"),
-        lit(7L).as("upload_id"))
-        .orderBy("patient_num")
-    }),
-
-    // P7/F8 — IPP_IDDOC.ext filename parsing via one anchored regex
-    // (exo_2.py:238-239) over paths synthesized from `documents`.
-    "q11_filename_parse" -> ((s, dir) => {
-      val path = concat(col("source"), lit("/"), col("doc_id"), lit("_"),
-        col("n_chars"),
-        when(col("doc_id") % 2 === 0, ".pdf").otherwise(".docx"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), path.as("path"))
-        .select(col("doc_id"),
-          TF.filenamePart(col("path"), 1).as("ipp"),
-          TF.filenamePart(col("path"), 2).as("id_doc"),
-          TF.filenamePart(col("path"), 3).as("doc_type"))
-        .orderBy("doc_id")
-    }),
-
-    // JSON scalar extraction over events.props (engine free-function
-    // surface; SURVEY.md §2.5 note).
-    "q12_json_extract" -> ((s, dir) => {
-      events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // T7-adjacent batch shape — event-time bucketing + aggregation
-    // (the streaming variant with watermarks lives in engine.Watcher).
-    "q13_time_window_agg" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
-        .agg(count(lit(1)).as("n"), (sum(round(col("value") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("sum_value"))
-        .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("hour", "event_type")
-    }),
-
-    // ---- training-data pipeline operators (SURVEY.md north-star) ----
-
-    // Text quality scoring: length/punctuation/stopword heuristics —
-    // pure map-side column math, no shuffle.
-    "q14_text_quality" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("len"),
-        round(TA.punctRatio(col("text")), 4).as("punct_ratio"),
-        round(TA.stopwordRatio(col("text")), 4).as("stopword_ratio"),
-        TA.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // Token counting: whitespace + BPE-ish regex tokenization.
-    "q15_token_count" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TA.tokenCountWs(col("text")).cast("long").as("ws_tokens"),
-        TA.tokenCountBpeIsh(col("text")).cast("long").as("bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // Language-ID by stopword-marker scoring with fixed priority.
-    "q16_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"), TA.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-
-    // Document fingerprinting: md5 of normalized text + compact 48-bit form.
-    "q17_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TA.fingerprint(col("text")).as("fp"),
-        TA.fingerprint48(col("text")).as("fp48"))
-        .orderBy("doc_id")
-    }),
-
-    // Exact dedup: hash-groupBy on the fingerprint, canonical keeper.
-    "q18_dedup_exact" -> ((s, dir) => {
-      DedupOps.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("fp")
-    }),
-
-    // 2-gram Jaccard near-dup pairs, computed the scalable way: MinHash-
-    // LSH candidates first, exact Jaccard verified only on candidates
-    // (sub-quadratic; exact shingle-join baseline = DedupOps.jaccardPairs).
-    "q19_dedup_ngram_jaccard" -> ((s, dir) => {
-      DedupOps.jaccardVerifiedPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 2, threshold = 0.5, numHashes = 16, rowsPerBand = 2,
-          maxBucket = 10)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // MinHash(16)+LSH(8 bands × 2 rows, bucket cap 10) candidate pairs —
-    // the scalable near-dup path: signatures map-side, candidates by
-    // band-key join, skewed buckets dropped before pairing.
-    "q20_dedup_minhash_lsh" -> ((s, dir) => {
-      DedupOps.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
-          numHashes = 16, rowsPerBand = 2, n = 2, maxBucket = 10)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // 32-bit SimHash signatures over tokens (md5-derived bit votes).
-    "q21_dedup_simhash" -> ((s, dir) => {
-      DedupOps.simhash(t(s, dir, "documents"), "doc_id", "text", bits = 32)
-        .orderBy("doc_id")
-    }),
-
-    // SimHash banding: near-dup candidate pairs from shared signature
-    // bands (Hamming-distance analogue of MinHash banding).
-    "q40_simhash_candidates" -> ((s, dir) => {
-      val sigs = DedupOps.simhash(t(s, dir, "documents"), "doc_id", "text")
-      DedupOps.simhashCandidates(sigs, "doc_id", bits = 32, bands = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Brute-force cosine top-k against the vec_id=0 query vector — the
-    // ANN baseline: broadcast query, map-side score, TakeOrdered.
-    "q22_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val query = Caches.small(emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q")))
-      Similarity.cosineTopK(emb, "vec_id", "embedding", query, k = 10)
-        .orderBy(col("cos").desc, col("vec_id"))
-    }),
-
-    // Embedding-cosine near-duplicate pairs above a threshold — the
-    // SCALE path: multi-table sign-LSH blocking (8 tables × 4 planes,
-    // key-equality join on the bucket — no cross join, no corpus
-    // broadcast), exact cosine verified on candidates only. The O(n²)
-    // brute-force form stays a spec-level recall oracle (OpsSpec).
-    "q23_embedding_neardup" -> ((s, dir) => {
-      // planesPerTable omitted → derived as log₂(corpus/targetBucket)
-      // (Similarity.resolvePlanes): 4 at the gate SFs — bit-identical
-      // to the oracle's pinned range(0,4) — and 8+ at 10×+ corpora,
-      // where fixed geometry was measured pair-quadratic (SCALE.md §6g)
-      Similarity.cosineNearDupPairsBucketed(t(s, dir, "embeddings"),
-          "vec_id", "embedding", threshold = 0.4, tables = 8, dims = 64)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // IVF ANN: deterministic centroids (vec_id<8), assign-by-max-cosine,
-    // probe only the query's cluster — the partition-pruned scale path.
-    "q24_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centroids = Caches.small(emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-      val query = Caches.small(emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q")))
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        centroids, "cid", "cv")
-      Similarity.ivfTopK(assigned, "vec_id", "embedding",
-          centroids, "cid", "cv", query, k = 5, nprobe = 1)
-        .orderBy(col("cos").desc, col("vec_id"))
-    }),
-
-    // Multimodal with a REAL image decode: a deterministic BMP is built
-    // per doc (dims derived from doc_id), pushed through the
-    // mapPartitions decode stage, and javax.imageio reads the genuine
-    // width/height back. The oracle predicts the dims and the exact BMP
-    // byte size (54 + ceil(3w/4)*4*h) in closed form — a broken encoder
-    // OR decoder fails the hash.
-    "q25_multimodal_binary" -> ((s, dir) => {
-      Multimodal.imagePipeline(t(s, dir, "documents"), "doc_id")
-        .select(col("media_id").as("doc_id"), col("n_bytes"),
-          col("width"), col("height"))
-        .orderBy("doc_id")
-    }),
-
-    // REAL video decode: deterministic uncompressed-DIB AVIs (one per
-    // doc), container walked chunk-by-chunk, EVERY frame decoded through
-    // the same javax.imageio path as q25's stills (wrapped as BMP). The
-    // oracle predicts the closed-form container size and the header
-    // metadata; n_frames gates that every frame actually decoded (the
-    // count is of successful per-frame decodes, not the header field).
-    // mapPartitions batch stage, no shuffle — the binaryFile→decode→
-    // featurize shape at any scale.
-    "q127_multimodal_video" -> ((s, dir) => {
-      Multimodal.videoPipeline(t(s, dir, "documents"), "doc_id")
-        .select(col("media_id").as("doc_id"), col("n_bytes"),
-          col("width"), col("height"), col("n_frames"))
-        .orderBy("doc_id")
-    }),
-
-    // Product quantization ANN: deterministic codebooks (subvectors of
-    // vec_id<16), per-subspace argmin encode, asymmetric-distance (ADC)
-    // top-k — the compressed-index scale path (m bytes per vector at
-    // query time, no full vectors touched).
-    "q49_ann_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebooks(emb, "vec_id", "embedding",
-        m = 4, k = 16, dims = 64)
-      val codes = Similarity.pqEncode(emb, "vec_id", "embedding",
-        cb, m = 4, dims = 64)
-      val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q"))
-      Similarity.pqTopK(codes, "vec_id", cb, query, m = 4, dims = 64, k = 10)
-        .orderBy(col("adc"), col("vec_id"))
-    }),
-
-    // KMV bottom-k distinct-count sketch over normalized doc text, with
-    // the exact count alongside so the oracle row itself exhibits the
-    // estimator's accuracy. Deterministic md5 hashing → the whole sketch
-    // is hash-verifiable cross-engine (unlike opaque HLL registers).
-    "q50_kmv_sketch" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val est = graft.ops.Sketches.kmvDistinct(docs,
-        TF.normalizeText(col("text")), k = 64)
-      val exact = docs
-        .agg(countDistinct(TF.normalizeText(col("text")))
-          .as("exact_distinct"))
-      est.crossJoin(broadcast(exact))
-    }),
-
-    // A2 at scale — GLOBAL dense numbering via the two-phase range-
-    // partitioned implementation (no single-partition window, no driver
-    // collect), checked against a true global row_number oracle.
-    "q26_global_rownum" -> ((s, dir) => {
-      Dedup.numberRows(t(s, dir, "orders").select("o_orderkey"),
-          col("o_orderkey"), "rn")
-        .orderBy("o_orderkey")
-    }),
-
-    // UDTF/generator shape — regexp_extract_all + explode (the one
-    // one-row-to-many shape in the reference, SURVEY.md §2.7) + re-agg.
-    "q27_explode_dates" -> ((s, dir) => {
-      val txt = concat(lit("vu "), date_format(col("o_orderdate"), "dd/MM/yyyy"),
-        lit(" revu "), date_format(date_add(col("o_orderdate"), 45), "dd/MM/yyyy"))
-      t(s, dir, "orders")
-        .select(explode(regexp_extract_all(txt, lit(TF.DatePattern), lit(0)))
-          .as("d"))
-        .groupBy("d").agg(count(lit(1)).as("n"))
-        .orderBy("d")
-    }),
-
-    // Set operators (free Spark SQL surface noted in SURVEY.md §2.3):
-    // customers active in both 2000 and 2001 vs only-2000.
-    "q28_setops" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      def active(y: Int) = o
-        .filter(year(col("o_orderdate")) === y)
-        .select(col("o_custkey")).distinct()
-      val both = active(2000).intersect(active(2001))
-        .withColumn("which", lit("both"))
-      val only2000 = active(2000).except(active(2001))
-        .withColumn("which", lit("only2000"))
-      both.unionByName(only2000).orderBy("o_custkey", "which")
-    }),
-
-    // ROLLUP aggregation (hierarchical totals) with labeled subtotals.
-    "q29_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("sum_qty"), col("n"))
-        .orderBy("flag", "status")
-    }),
-
-    // GROUPING SETS with explicit grouping ids — the generalized form of
-    // q29's rollup (one shuffle; Spark expands the sets in a single
-    // Expand node, no per-set re-scan).
-    "q41_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupingSets(
-          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-            Seq(col("l_returnflag")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          count(lit(1)).as("n"),
-          (grouping(col("l_returnflag")) * 2 +
-            grouping(col("l_linestatus"))).cast("long").as("gid"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("sum_qty"), col("n"), col("gid"))
-        .orderBy("gid", "flag", "status")
-    }),
-
-    // Exact median + deterministic mode per group (mode ties broken by
-    // lowest value — replayed by the oracle's count-desc/value-asc rank,
-    // because sf0.001's N group has a genuine tie).
-    "q42_median_mode" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(median(col("l_quantity")), 4).as("med_qty"),
-          // round to 3 (odd) decimals: even-count medians are midpoints
-          // of 2-decimal prices, i.e. exact 3-decimal values — rounding
-          // to 2 would sit ON the half-way boundary where the engines'
-          // interpolation ulps ((a+b)/2 vs a+(b-a)/2) disagree
-          round(median(col("l_extendedprice")), 3).as("med_price"),
-          mode(col("l_quantity"), deterministic = true).as("mode_qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Map-typed column machinery: per-user event-type→count maps built
-    // with map_from_entries, then consumed via size/try_element_at/
-    // map_values+aggregate — proves the map surface round-trips (the
-    // oracle recomputes the scalars relationally).
-    "q43_map_funcs" -> ((s, dir) => {
-      val counts = events(s, dir)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      counts.groupBy(col("user_id"))
-        .agg(map_from_entries(
-          array_sort(collect_list(struct(col("event_type"), col("n")))))
-          .as("m"))
-        .select(col("user_id"),
-          size(col("m")).as("n_types"),
-          coalesce(try_element_at(col("m"), lit("click")), lit(0L))
-            .as("clicks"),
-          aggregate(map_values(col("m")), lit(0L), (a, x) => a + x)
-            .as("total"))
-        .orderBy("user_id")
-    }),
-
-    // CUBE — all four grouping combinations with explicit grouping ids
-    // (completes the rollup q29 / grouping-sets q41 family).
-    "q44_cube" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          (sum(round(col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("total"),
-          (grouping(col("o_orderpriority")) * 2 +
-            grouping(col("o_orderstatus"))).cast("long").as("gid"))
-        .select(coalesce(col("o_orderpriority"), lit("ALL")).as("prio"),
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          col("n"), col("total"), col("gid"))
-        .orderBy("gid", "prio", "status")
-    }),
-
-    // RANGE-framed window: per-user sliding 1-hour event-value sum keyed
-    // on event time (not row count) — the time-decayed-feature shape.
-    // Frame bounds are in MICROSECONDS (unix_micros) so frame membership
-    // is exact on both engines.
-    "q45_range_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(unix_micros(col("ts")))
-        .rangeBetween(-3600L * 1000000L, 0L)
-      events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          round(sum(col("value")).over(w), 2).as("hour_sum"))
-        .orderBy("event_id")
-    }),
-
-    // Blocked fuzzy matching: edit-distance pairs WITHIN nation blocks —
-    // the key-equality-join blocking pattern that keeps fuzzy dedup
-    // sub-quadratic at scale (pairs only form inside a block, never
-    // across the corpus).
-    "q46_fuzzy_pairs" -> ((s, dir) => {
-      // blocked similarity join: the (nation, segment) block key bounds
-      // the pair space (pairs only form inside a block — the block key
-      // IS the recall scope of the op), and the THRESHOLDED levenshtein
-      // is a banded O(k·len) DP, not the full O(len²) matrix. Measured
-      // 4× faster than nation-only blocking with unbounded levenshtein;
-      // a digit-count L1 pre-filter was tried and measured net-negative
-      // at this block size.
-      DedupOps.fuzzyPairs(t(s, dir, "customer"), "c_custkey", "c_name",
-          blockCols = Seq("c_nationkey", "c_mktsegment"), maxDist = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Gopher-style repetition quality signals per document: top-word
-    // fraction, repeated-word fraction, top-bigram fraction. Relational
-    // shape (explode → two keyed counts) so the cost scales with corpus
-    // vocabulary, not pairwise anything.
-    "q47_repetition_stats" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val wordsArr = split(TF.normalizeText(col("text")), " ")
-      val words = docs
-        .select(col("doc_id"), explode_outer(wordsArr).as("w"))
-        .filter(col("w").isNotNull)
-      val wstats = words.groupBy("doc_id", "w")
-        .agg(count(lit(1)).as("n"))
-        .groupBy("doc_id")
-        .agg(sum("n").as("tw"), max("n").as("topw"),
-          sum(when(col("n") >= 2, col("n")).otherwise(lit(0L))).as("repw"))
-      val bigrams = docs
-        .select(col("doc_id"), wordsArr.as("ws"))
-        .select(col("doc_id"), explode_outer(
-          when(size(col("ws")) >= 2,
-            transform(sequence(lit(1), size(col("ws")) - 1), i =>
-              concat_ws(" ", element_at(col("ws"), i),
-                element_at(col("ws"), i + 1))))
-            .otherwise(array().cast("array<string>"))).as("g"))
-        .filter(col("g").isNotNull)
-      val gstats = bigrams.groupBy("doc_id", "g")
-        .agg(count(lit(1)).as("n"))
-        .groupBy("doc_id")
-        .agg(sum("n").as("tg"), max("n").as("topg"))
-      wstats.join(gstats, Seq("doc_id"))
-        .select(col("doc_id"), col("tw").cast("long").as("n_words"),
-          round(col("topw").cast("double") / col("tw"), 4)
-            .as("top_word_frac"),
-          round(col("repw").cast("double") / col("tw"), 4)
-            .as("repeated_word_frac"),
-          round(col("topg").cast("double") / col("tg"), 4)
-            .as("top_bigram_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // PII/URL scrubbing — the standard pretraining-data masking pass
-    // (emails → <EMAIL>, urls → <URL>, phone runs → <PHONE>), with match
-    // counts. Run over text synthesized to actually CONTAIN each PII
-    // shape so the regex parity is exercised, not vacuous.
-    "q48_pii_scrub" -> ((s, dir) => {
-      val base = concat(substring(col("text"), 1, 40),
-        lit(" mail user"), col("doc_id"), lit("@ex-ample.org or visit "),
-        lit("https://ex.org/p/"), col("doc_id"),
-        lit("?q=1 call +33 6 12 34 56 78 done"))
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val url = "https?://[^\\s]+"
-      val phone = "\\+?[0-9][0-9 ]{7,}[0-9]"
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(regexp_extract_all(base, lit(email), lit(0)))
-            .cast("long").as("n_emails"),
-          size(regexp_extract_all(base, lit(url), lit(0)))
-            .cast("long").as("n_urls"),
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(base, email, "<EMAIL>"),
-              url, "<URL>"),
-            phone, "<PHONE>").as("scrubbed"))
-        .orderBy("doc_id")
-    }),
-
-    // Analytic window breadth: lag/lead/ntile/percent_rank over the
-    // per-user event timeline (one keyed window shuffle serves all four;
-    // total tiebreak (ts, event_id) makes every value deterministic).
-    "q51_window_analytics" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          lag(col("event_type"), 1).over(w).as("prev_type"),
-          lead(col("event_type"), 1).over(w).as("next_type"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 4).as("pct_rank"))
-        .orderBy("event_id")
-    }),
-
-    // Gap-based sessionization via session_window (batch form of the
-    // streaming Sessionize semantics): sessions close after a 30-minute
-    // event gap; window end = last event + gap. Boundary contract
-    // (verified by execution in OpsSpec): Spark MERGES an event arriving
-    // exactly `gap` after the previous one into the same session —
-    // sessions merge while newStart <= sessionEnd — so the oracle's
-    // new-session predicate is strictly `>`, matching. The oracle
-    // replays it with gaps-and-islands SQL (lag + running sum), so the
-    // session semantics themselves are hash-gated, not just spec-tested.
-    "q52_session_window" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          (sum(round(col("value") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("sum_value"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("session_start"),
-          date_format(col("sw.end"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("session_end"),
-          col("n_events"), col("sum_value"))
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Unigram-LM surprisal scoring — the relational form of the
-    // perplexity quality filter: corpus word frequencies (one
-    // vocabulary-scaled aggregation) joined back to each document's
-    // words; score = mean −ln P(w). Deterministic cross-engine because
-    // the per-doc reduction is an ORDERED fold over the sorted word
-    // multiset, not an unordered float sum.
-    "q53_unigram_surprisal" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val words = docs
-        .select(col("doc_id"),
-          explode_outer(split(TF.normalizeText(col("text")), " ")).as("w"))
-        .filter(col("w").isNotNull)
-      val vocab = words.groupBy("w").agg(count(lit(1)).as("wc"))
-      val total = vocab.agg(sum(col("wc")).as("tot"))
-      val scored = words.join(vocab, Seq("w")).crossJoin(broadcast(total))
-        .select(col("doc_id"),
-          (-log(col("wc").cast("double") / col("tot"))).as("nll"))
-      scored.groupBy("doc_id")
-        .agg(round(
-          ssum(collect_list(col("nll")))
-            / count(lit(1)), 4).as("mean_surprisal"),
-          count(lit(1)).cast("long").as("n_words"))
-        .orderBy("doc_id")
-    }),
-
-    // Top-k per group: rank window + filter (WindowGroupLimit pushes the
-    // top-k below the shuffle — no full sort of the group).
-    "q30_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_orderpriority"), col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("total"),
-          row_number().over(w).as("rk"))
-        .filter(col("rk") <= 3)
-        .orderBy("o_orderpriority", "rk")
-    }),
-
-    // Sign-LSH bucketing over embeddings — the map-side blocking step of
-    // bucketed ANN (deterministic md5-derived hyperplanes).
-    "q31_embedding_lsh" -> ((s, dir) => {
-      Similarity.lshBuckets(t(s, dir, "embeddings"), "vec_id", "embedding",
-          planes = 4, dims = 64)
-        .orderBy("vec_id")
-    }),
-
-    // As-of join (point-in-time): for each purchase, the user's latest
-    // click at-or-before it — composed as union + one keyed window (one
-    // shuffle, no join, no row explosion; see ops.AsOf).
-    "q33_asof_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = e.filter(col("event_type") === "click")
-        .select("user_id", "ts")
-      AsOf.join(purchases, clicks, "user_id", "ts", "ts", valueCols = Nil)
-        .select(col("event_id"),
-          date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("asof_ts"))
-        .orderBy("event_id")
-    }),
-
-    // The SAME as-of semantics through the NATIVE custom operator
-    // (logical node → strategy → sort-merge exec, graft.plans) — the
-    // custom-plan path under the same oracle as q33.
-    "q37_asof_native" -> ((s, dir) => {
-      val e = events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = e.filter(col("event_type") === "click")
-        .select("user_id", "ts")
-      graft.plans.AsOfJoinPlan.asofJoin(purchases, clicks, "user_id", "ts", "ts")
-        .select(col("event_id"),
-          date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("asof_ts"))
-        .orderBy("event_id")
-    }),
-
-    // Pivot: daily event-type matrix (missing cells zero-filled to match
-    // the FILTER-count oracle semantics).
-    "q34_pivot" -> ((s, dir) => {
-      val types = Seq("click", "view", "purchase", "signup", "error")
-      events(s, dir)
-        .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd")
-          .as("day"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0, types)
-        .orderBy("day")
-    }),
-
-    // Reproducible hash-based sampling + train/val/test splits — pure
-    // functions of the record key (no RNG): re-runs, backfills and other
-    // engines all agree on membership. Map-side only.
-    "q35_hash_split" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          Sampling.hashBucket(col("doc_id"), 100, "exp1").as("bucket"),
-          Sampling.split(col("doc_id"), 80, 10, "exp1").as("split"))
-        .orderBy("doc_id")
-    }),
-
-    "q36_stratified_counts" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("lang"), Sampling.split(col("doc_id"), 80, 10, "exp1")
-          .as("split"))
-        .groupBy("lang", "split").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "split")
-    }),
-
-    // Exact interpolated percentiles per group (Spark `percentile` ==
-    // DuckDB `quantile_cont` semantics).
-    "q38_percentiles" -> ((s, dir) => {
-      // Measured rejection (r15, verdict item 6): moving the
-      // near-unique l_extendedprice p90 to
-      // Selection.exactQuantilesContGrouped (bit-parity pinned by
-      // SelectionSpec) ran 1.41 -> 1.74 s isolated at sf0.1 — the two
-      // extra selection passes + join cost more than the built-in's
-      // per-group value map while the maps stay memory-resident. The
-      // grouped selection remains the documented scale path for when
-      // a group's distinct-value domain stops fitting an aggregation
-      // buffer; at the bench SFs the built-in is the right shape.
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(expr("percentile(l_quantity, 0.5)"), 4).as("p50_qty"),
-          round(expr("percentile(l_extendedprice, 0.9)"), 2).as("p90_price"),
-          round(expr("percentile(l_discount, array(0.25, 0.75))[0]"), 4)
-            .as("p25_disc"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Array-column analytics over the embeddings (size, min/max/mean) —
-    // the array-function surface with exact cross-engine folds.
-    "q39_array_stats" -> ((s, dir) => {
-      val emb = col("embedding").cast("array<double>")
-      t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          size(col("embedding")).cast("long").as("dims"),
-          (round(array_min(emb), 4) + 0.0).as("vmin"),
-          (round(array_max(emb), 4) + 0.0).as("vmax"),
-          // + 0.0 normalizes IEEE negative zero (round(-1e-9, 4) = -0.0,
-          // which string/hash compares differently from 0.0)
-          (round(aggregate(emb, lit(0.0), (a, x) => a + x)
-             / size(col("embedding")), 4) + 0.0).as("vmean"))
-        .orderBy("vec_id")
-    }),
-
-    // A1 as an AGGREGATION (keep-first-per-key ≡ min_by under input
-    // order, SURVEY.md §2.4) — the agg-shaped alternative to the window
-    // form in q02: one shuffle, map-side partial min_by, no sort at all.
-    "q32_agg_firstby" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(min(col("c_custkey")).as("first_key"),
-          min_by(col("c_name"), col("c_custkey")).as("first_name"),
-          min_by(col("c_acctbal"), col("c_custkey")).as("first_bal"))
-        .orderBy("c_nationkey", "c_mktsegment")
-    }),
-
-    // Bloom-pruned fact⋈dim join (graft.ops.JoinOps): the selective
-    // dimension's key set rides the plan as a bloom filter probed by a
-    // codegen'd native expression inside the fact SCAN stage, so only
-    // might-match rows are hashed/shuffled. Exactness: blooms have no
-    // false negatives and the real join drops false positives, so the
-    // result ≡ the plain join — which IS the oracle.
-    "q54_bloom_join" -> ((s, dir) => {
-      val dim = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_totalprice") > 200000)
-        .select("o_orderkey", "o_orderdate")
-      JoinOps.bloomPrunedJoin(t(s, dir, "lineitem"), "l_orderkey",
-          dim, "o_orderkey")
-        .groupBy(date_format(date_trunc("month", col("o_orderdate")),
-          "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n_items"),
-          // exact 10⁻⁴-dollar revenue units, half-up at display — the
-          // raw double sum here was the round-14 adverse-plan soak's
-          // one catch: a different partition geometry reordered the
-          // additions and flipped a 2-decimal rounding boundary
-          sum(round(col("l_extendedprice") * 100, 0).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100, 0).cast("long")))
-            .as("__rev_c4"))
-        .select(col("month"), col("n_items"),
-          (expr("(__rev_c4 + 50) div 100").cast("double") / 100.0)
-            .as("revenue"))
-        .orderBy("month")
-    }),
-
-    // Skew-safe salted join (engine.Partitioning.saltedJoin): each big-
-    // side row gets a deterministic-width salt fanout so a hot customer
-    // spreads over saltFactor tasks; the small side replicates per salt.
-    // Semantics-preserving — hash-gated against the unsalted join.
-    "q55_salted_join" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-        .withColumnRenamed("o_custkey", "c_custkey")
-      val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-      Partitioning.saltedJoin(orders, cust, "c_custkey", saltFactor = 8)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_orders"),
-          (sum(round(col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("total"))
-        .orderBy("c_nationkey")
-    }),
-
-    // C4-style duplicate-span removal (DedupOps.chunkDedup): fixed-width
-    // word chunks, keep the first corpus-wide occurrence of each chunk
-    // text, reassemble the survivors per document. Pure key-equality
-    // dedup — no pair joins (see chunkDedup scaladoc for the 100 TB
-    // argument).
-    "q56_chunk_dedup" -> ((s, dir) => {
-      DedupOps.chunkDedup(t(s, dir, "documents"), "doc_id", "text",
-          width = 5)
-        .orderBy("doc_id")
-    }),
-
-    // Dynamic-gap sessionization: session_window with a PER-EVENT gap
-    // expression (purchases hold the session open 60 min, everything
-    // else 30). Merge rule (same as q52's pinned boundary contract):
-    // each event spans [ts, ts+gap]; windows merge while the next start
-    // <= the running session end, so the oracle's new-session predicate
-    // is strictly `ts > max(prev ts+gap)`. Session end = max(ts+gap).
-    "q57_session_dynamic_gap" -> ((s, dir) => {
-      val gap = when(col("event_type") === "purchase", lit("60 minutes"))
-        .otherwise(lit("30 minutes"))
-      events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          (sum(round(col("value") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("sum_value"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("session_start"),
-          date_format(col("sw.end"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("session_end"),
-          col("n_events"), col("sum_value"))
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Bucketed range join (ops.RangeJoin): point-in-interval matching as
-    // a day-bucket EQUI-join + exact containment filter — the rewrite
-    // that keeps a non-equi time join off Spark's nested-loop/cartesian
-    // path. Shipments landing inside 3-day windows around sampled
-    // orders' dates, aggregated per interval. Oracle = the naive theta
-    // join DuckDB can afford at this scale.
-    "q58_range_join" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey"), col("o_orderdate").as("start_ts"),
-          (col("o_orderdate") + expr("interval 3 days")).as("end_ts"))
-      graft.ops.RangeJoin.pointInInterval(
-          t(s, dir, "lineitem").select("l_shipdate", "l_quantity"),
-          "l_shipdate", iv, "start_ts", "end_ts")
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_pts"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Top-k per group through a typed Aggregator UDAF
-    // (functions.TopKByScore): map-side partial aggregation bounds the
-    // shuffle at k pairs per (partition, group) — the agg-shaped
-    // alternative to q30's window rank, which shuffles every row.
-    "q59_topk_udaf" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopKByScore(3))
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top_keys"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // EXACTLY-n-per-stratum deterministic sample (Sampling
-    // .stratifiedTake): salted-hash rank inside each stratum, fixed
-    // SIZE per group (vs q35/q36's fixed rate) — replayable by any
-    // engine with md5.
-    "q60_stratified_sample" -> ((s, dir) => {
-      Sampling.stratifiedTake(
-          t(s, dir, "documents").select("doc_id", "lang"),
-          strata = Seq("lang"), key = "doc_id", n = 5, salt = "exp1")
-        .orderBy("lang", "doc_id")
-    }),
-
-    // REAL audio decode (Multimodal.audioPipeline): deterministic PCM16
-    // WAVs synthesized per doc, decoded back through the JDK's
-    // AudioSystem inside one mapPartitions batch. The Nyquist square
-    // wave makes every output a closed form the oracle predicts: size =
-    // 44 + 2·frames, RMS = amp exactly (even frame count).
-    "q61_multimodal_audio" -> ((s, dir) => {
-      Multimodal.audioPipeline(t(s, dir, "documents").select("doc_id"),
-          "doc_id")
-        .select(col("media_id").as("doc_id"), col("n_bytes"),
-          col("sample_rate"), col("channels"), col("n_frames"),
-          round(col("rms"), 4).as("rms"))
-        .orderBy("doc_id")
-    }),
-
-    // The SQL entry point end-to-end: a correlated NOT EXISTS with a
-    // filtering subquery predicate, planned by Catalyst as a
-    // broadcast/shuffle ANTI join (never a per-row subquery) — same
-    // oracle gate as the DataFrame queries. Non-vacuous at every SF
-    // (~6% of customers qualify).
-    "q62_sql_exists" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      t(s, dir, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT c_custkey, c_name FROM customer c
-               WHERE NOT EXISTS (
-                 SELECT 1 FROM orders o
-                 WHERE o.o_custkey = c.c_custkey
-                   AND o.o_orderpriority = '1-URGENT'
-                   AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-               ORDER BY c_custkey""")
-    }),
-
-    // IGNORE NULLS window navigation — carry-forward of the last
-    // purchase amount per user (last_value) and the previous one (lag),
-    // both skipping the non-purchase rows' nulls. One keyed window
-    // shuffle serves both.
-    "q63_ignore_nulls" -> ((s, dir) => {
-      val pv = when(col("event_type") === "purchase", col("value"))
-      val ordered = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val running = ordered
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          round(last(pv, ignoreNulls = true).over(running), 2)
-            .as("last_purchase"),
-          round(lag(pv, 1, null, ignoreNulls = true).over(ordered), 2)
-            .as("prev_purchase"))
-        .orderBy("event_id")
-    }),
-
-    // The SAME range-join semantics as q58, but written as a plain
-    // theta join and rescued by the RangeJoinRewrite OPTIMIZER RULE
-    // (plans.RangeJoinRewrite, injectable via GraftExtensions): Catalyst
-    // rewrites the nested-loop shape into the bucketed equi join
-    // automatically. Same oracle as q58 — the rule must be invisible in
-    // results and visible only in the plan.
-    "q65_range_join_rule" -> ((s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(graft.plans.RangeJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey"), col("o_orderdate").as("start_ts"),
-          (col("o_orderdate") + expr("interval 3 days")).as("end_ts"))
-      t(s, dir, "lineitem").select("l_shipdate", "l_quantity")
-        .join(iv, col("l_shipdate") >= col("start_ts") &&
-          col("l_shipdate") < col("end_ts"))
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_pts"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .orderBy("o_orderkey")
-    }),
-
-    // CONNECTED COMPONENTS (DedupOps.connectedComponents): pair list →
-    // dedup groups by iterative min-label propagation. The edge list is
-    // deterministic chains (doc_id → doc_id+1 within each decade), so
-    // the oracle is the closed form component = floor(doc_id/10)*10 —
-    // and chains are label propagation's WORST case (9 hops), proving
-    // convergence, not just star graphs.
-    "q70_connected_components" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val edges = ids.filter(col("doc_id") % 10 =!= 9)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-        .join(ids.select(col("doc_id").as("id_b")), Seq("id_b"))
-      DedupOps.connectedComponents(edges)
-        .select(col("node").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
-
-    // The SAME chain graph through the ALTERNATING STAR algorithm
-    // (Graph.connectedComponentsStar, Kiveris et al.): edge-rewriting
-    // CC for high-diameter adversarial graphs, vs q70's pointer
-    // jumping — two algorithms, one oracle-checked contract.
-    "q96_cc_star" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val edges = ids.filter(col("doc_id") % 10 =!= 9)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-        .join(ids.select(col("doc_id").as("id_b")), Seq("id_b"))
-      graft.ops.Graph.connectedComponentsStar(edges)
-        .select(col("node").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
-
-    // Edit-distance near-dup: prefix-block equi-join candidates (hot
-    // blocks capped, like MinHash buckets) verified with the BANDED
-    // levenshtein(l, r, threshold) — O(k·n) per pair, not O(n²).
-    "q97_edit_distance" -> ((s, dir) => {
-      DedupOps.editDistancePairs(t(s, dir, "documents"), "doc_id", "text",
-          prefixLen = 16, lenBand = 20, maxDist = 20, maxBlock = 64)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Bigram LM surprisal with add-k smoothing (k=0.5, binary-exact) —
-    // the 2-gram upgrade of q53's perplexity quality filter; per-doc
-    // mean is an ordered fold over the sorted nll multiset.
-    "q98_bigram_lm" -> ((s, dir) => {
-      TA.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          k = 0.5)
-        .orderBy("doc_id")
-    }),
-
-    // SLIDING (overlapping) windows — window(ts, 10 min, slide 5 min):
-    // each event lands in exactly two windows; Spark expands the
-    // window set map-side (explode of the window array), then one
-    // shuffle on window start. Complements q13's tumbling hour.
-    "q99_sliding_window" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"))
-        .agg(count(lit(1)).as("n"), (sum(round(col("value") * 100, 0).cast("long"))
-            .cast("double") / 100.0).as("sum_value"))
-        .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("wstart"),
-          date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("wend"),
-          col("n"), col("sum_value"))
-        .orderBy("wstart")
-    }),
-
-    // Symmetric int8 embedding quantization — per-vector max-abs scale,
-    // codes = round(127·x/scale): the 4× shrink before ANN serving.
-    // Map-side transform() over built-ins, no shuffle. The codes ARRAY is
-    // serialized to CSV on both sides so the driver gate sorts/hashes
-    // scalars (pandas can't sort ndarray cells).
-    "q100_quantize_int8" -> ((s, dir) => {
-      Similarity.quantizeInt8(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"),
-          array_join(col("codes").cast("array<string>"), ",").as("codes_csv"),
-          col("scale"))
-        .orderBy("vec_id")
-    }),
-
-    // LATERAL correlated subquery in FROM — per-nation top-2 customers
-    // by balance. Catalyst decorrelates this into a ranked window +
-    // join (DomainJoin rewrite), NOT a per-row subquery loop — the
-    // set-at-a-time plan survives any row count.
-    "q101_lateral_topk" -> ((s, dir) => {
-      t(s, dir, "nation").createOrReplaceTempView("nation")
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      s.sql("""SELECT n.n_name, t.c_custkey, t.bal
-               FROM nation n,
-               LATERAL (
-                 SELECT c_custkey, round(c_acctbal, 2) AS bal
-                 FROM customer c
-                 WHERE c.c_nationkey = n.n_nationkey
-                 ORDER BY c_acctbal DESC, c_custkey
-                 LIMIT 2
-               ) t
-               ORDER BY n.n_name, t.bal DESC, t.c_custkey""")
-    }),
-
-    // Fuzzy record linkage with the NATIVE jaro_winkler Expression
-    // (functions.StringExpressions — codegen'd static call; Spark has
-    // no built-in JW). Brand-blocked candidate pairs, binary-exact
-    // 0.875 threshold. Score is emitted as integer MICRO-units
-    // (round(jw·1e6) AS BIGINT): both engines compute identical doubles
-    // on these pairs, and integers hash identically everywhere —
-    // decimal/float textual representation cannot diverge the gate.
-    "q102_jaro_winkler" -> ((s, dir) => {
-      // collapse-then-pair blocking (DedupOps.scoredBlockPairs): the
-      // Jaro–Winkler DP runs once per DISTINCT name pair inside a
-      // brand block; identical-name rows expand with the constant
-      // jw(x,x)=1.0 — duplication-heavy growth (the dominant crawl
-      // growth mode, and the ScaleUp replica corpus) stays ~linear
-      // where the raw brand self-join was quadratic
-      DedupOps.scoredBlockPairs(
-          t(s, dir, "part").select(col("p_brand"), col("p_partkey"),
-            col("p_name")),
-          "p_partkey", "p_name", blockCols = Seq("p_brand"),
-          score = (na, nb) =>
-            graft.functions.StringExpressions.jaroWinkler(na, nb),
-          crossKeep = _ > 0.875, selfScore = lit(1.0d), out = "jw0")
-        .select(col("id_a").as("key_a"), col("id_b").as("key_b"),
-          round(col("jw0") * 1e6, 0).cast("bigint").as("jw_micro"))
-        .orderBy("key_a", "key_b")
-    }),
-
-    // Duplicate-SPAN detection (suffix-array dedup, relational form):
-    // 8-gram posting counts → duplicated positions → per-doc interval
-    // merge. Two key-equality shuffles + one per-doc window.
-    "q103_dup_spans" -> ((s, dir) => {
-      DedupOps.dupSpans(t(s, dir, "documents"), "doc_id", "text",
-          k = 8, minCount = 2L)
-        .orderBy("doc_id")
-    }),
-
-    // Snapshot CDC diff (engine.Merge.snapshotDiff): two versions of
-    // the orders table derived deterministically (drops, inserts, and
-    // a price bump on key%5), classified insert/delete/update by one
-    // full-outer key join with null-safe column compare.
-    "q104_snapshot_diff" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val v1 = orders.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("o_totalprice"))
-      val v2 = orders.filter(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(when(col("o_orderkey") % 5 === 0, col("o_totalprice") * 2)
-            .otherwise(col("o_totalprice")), 2).as("o_totalprice"))
-      Merge.snapshotDiff(v1, v2, Seq("o_orderkey"),
-          Seq("o_orderstatus", "o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Hashed-linear quality classifier — fastText-shaped inference:
-    // md5-derived token weights, mean logit (sorted fold), sigmoid
-    // score. Scan-speed model scoring, no model server.
-    "q105_quality_classifier" -> ((s, dir) => {
-      TA.hashedLinearScore(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // First-order Markov transition matrix over per-user event
-    // sequences: one keyed window (lead) + one groupBy; row-normalized
-    // probabilities via a partition-sum window over the COUNTS table
-    // (event-type² rows, not the event stream).
-    "q106_markov_transitions" -> ((s, dir) => {
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val counts = events(s, dir)
-        .select(col("event_type").as("src"),
-          lead(col("event_type"), 1).over(byUser).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-      counts.select(col("src"), col("dst"), col("n"),
-          round(col("n").cast("double") /
-            sum(col("n")).over(Window.partitionBy(col("src"))), 4).as("p"))
-        .orderBy("src", "dst")
-    }),
-
-    // Equal-frequency (decile) binning the SCALE-SAFE way: exact
-    // percentile boundaries from one aggregation, broadcast back,
-    // map-side assignment — no global ntile sort anywhere (the
-    // single-partition window hazard q26 documents for rankings).
-    "q107_decile_binning" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val bounds = orders.agg(expr(
-        "percentile(o_totalprice, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("bs"))
-      orders.crossJoin(broadcast(bounds))
-        .select(col("o_totalprice"),
-          (lit(1) + size(filter(col("bs"), b => col("o_totalprice") > b)))
-            .as("decile"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n"),
-          round(min(col("o_totalprice")), 2).as("lo"),
-          round(max(col("o_totalprice")), 2).as("hi"))
-        .orderBy("decile")
-    }),
-
-    // Entity resolution END-TO-END: brand-blocked Jaro-Winkler match
-    // graph (native expression, 0.9375 = 15/16 binary-exact threshold)
-    // → pointer-jumping connected components → golden record = the
-    // min-key member, every part labeled with its entity and canonical
-    // name. The production ER pipeline shape in one plan.
-    "q108_entity_resolution" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      // collapse-then-pair blocking (q102 discipline): the JW DP runs
-      // once per DISTINCT name pair per brand and identical-name rows
-      // expand with jw(x,x)=1.0 > threshold — the CC edge set is
-      // unchanged, but duplication-heavy growth stays ~linear where
-      // the raw brand self-join was measured 33× at 10× data
-      val pairs = DedupOps.scoredBlockPairs(
-          p.select(col("p_brand"), col("p_partkey"), col("p_name")),
-          "p_partkey", "p_name", blockCols = Seq("p_brand"),
-          score = (na, nb) =>
-            graft.functions.StringExpressions.jaroWinkler(na, nb),
-          crossKeep = _ > 0.9375, selfScore = lit(1.0d), out = "jw0")
-        .select("id_a", "id_b")
-      val cc = DedupOps.connectedComponents(pairs)
-      p.select(col("p_partkey"))
-        .join(cc.select(col("node").as("p_partkey"), col("component")),
-          Seq("p_partkey"), "left")
-        .select(col("p_partkey"),
-          coalesce(col("component"), col("p_partkey")).as("entity_id"))
-        .join(p.select(col("p_partkey").as("entity_id"),
-          col("p_name").as("canonical_name")), Seq("entity_id"))
-        .select(col("p_partkey"), col("entity_id"), col("canonical_name"),
-          (col("p_partkey") === col("entity_id")).cast("long")
-            .as("is_canonical"))
-        .orderBy("p_partkey")
-    }),
-
-    // INCREMENTAL VIEW MAINTENANCE: the grouped aggregate of snapshot
-    // v2 is produced WITHOUT re-aggregating v2 — old aggregate ± the
-    // CDC delta from Merge.snapshotDiff (deletes/updates retract from
-    // the OLD group, inserts/updates add to the NEW group — group
-    // moves handled). The oracle recomputes v2 directly, so the gate
-    // proves maintained ≡ recomputed. All-integer arithmetic (price
-    // cents), so retraction is exact. At 100 TB this is the difference
-    // between touching the delta and re-scanning the warehouse.
-    "q109_incremental_agg" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      def cents(c: Column) = round(c * 100, 0).cast("long")
-      val v1 = orders.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          cents(col("o_totalprice")).as("cents"))
-      val v2 = orders.filter(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          cents(when(col("o_orderkey") % 5 === 0, col("o_totalprice") * 2)
-            .otherwise(col("o_totalprice"))).as("cents"))
-      val oldAgg = v1.groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-      val d = Merge.snapshotDiff(v1, v2, Seq("o_orderkey"),
-        Seq("o_orderpriority", "cents"))
-      val retract = d.filter(col("change_type").isin("delete", "update"))
-        .groupBy(col("old_o_orderpriority").as("o_orderpriority"))
-        .agg((-count(lit(1))).as("n"), (-sum(col("old_cents"))).as("sum_cents"))
-      val add = d.filter(col("change_type").isin("insert", "update"))
-        .groupBy(col("new_o_orderpriority").as("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), sum(col("new_cents")).as("sum_cents"))
-      oldAgg.unionByName(retract).unionByName(add)
-        .groupBy("o_orderpriority")
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("sum_cents")).cast("long").as("sum_cents"))
-        .filter(col("n") > 0)
-        .orderBy("o_orderpriority")
-    }),
-
-    // BPE ENCODE — the apply side of q90's merge training: top-10
-    // ranked pairs folded into 10 literal replaces over the boundary-
-    // delimited vocabulary, joined back to the token stream. The
-    // DuckDB oracle replays the SAME merges through a recursive CTE
-    // stepping rank by rank.
-    "q110_bpe_encode" -> ((s, dir) => {
-      TA.bpeEncode(t(s, dir, "documents"), "doc_id", "text", numMerges = 10)
-        .orderBy("doc_id")
-    }),
-
-    // Declarative data-quality audit (ops.Audit): five orders-table
-    // rules in ONE aggregation pass + a referential anti-join check
-    // against customer — a Deequ-shaped constraint report as rows.
-    "q111_dq_audit" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val rules = graft.ops.Audit.singlePass(orders,
-        metrics = Seq(
-          "row_count" -> count(lit(1)),
-          "orderkey_nulls" -> sum(col("o_orderkey").isNull.cast("long")),
-          "orderkey_dupes" ->
-            (count(col("o_orderkey")) - count_distinct(col("o_orderkey"))),
-          "negative_totalprice" ->
-            sum((col("o_totalprice") < 0).cast("long")),
-          "bad_status" ->
-            sum((!col("o_orderstatus").isin("F", "O", "P")).cast("long"))),
-        rules = Map(
-          "row_count" -> (v => v > 0),
-          "orderkey_nulls" -> (v => v === 0),
-          "orderkey_dupes" -> (v => v === 0),
-          "negative_totalprice" -> (v => v === 0),
-          "bad_status" -> (v => v === 0)))
-      rules.unionByName(graft.ops.Audit.referential(
-          "orphan_custkeys", orders, "o_custkey",
-          t(s, dir, "customer"), "c_custkey"))
-        .orderBy("check")
-    }),
-
-    // Full window-function ranking surface over a unique ordering:
-    // percent_rank, cume_dist, ntile — one keyed window shuffle.
-    "q112_rank_functions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_orderpriority"),
-          round(percent_rank().over(w), 6).as("pr"),
-          round(cume_dist().over(w), 6).as("cd"),
-          ntile(7).over(w).as("bucket7"))
-        .orderBy("o_orderkey")
-    }),
-
-    // HLL SKETCH ALGEBRA: per-source registers (Sketches.hllRegistersBy)
-    // merged by max-per-bucket into the global sketch — the lossless
-    // roll-up that lets a warehouse sketch per partition and aggregate
-    // register rows instead of rescanning. Per-source estimates and the
-    // merged estimate in one report.
-    "q113_hll_merge" -> ((s, dir) => {
-      val regs = Sketches.hllRegistersBy(events(s, dir),
-        col("event_type"), col("user_id").cast("string"), p = 6)
-      val per = Sketches.hllEstimateFromRegisters(regs, Seq("grp"), 6)
-        .select(col("grp").as("source"), col("est_distinct"),
-          col("nonzero_buckets"))
-      val merged = Sketches.hllEstimateFromRegisters(
-          regs.groupBy("bucket").agg(max(col("mx")).as("mx")), Seq.empty, 6)
-        .select(lit("__MERGED__").as("source"), col("est_distinct"),
-          col("nonzero_buckets"))
-      per.unionByName(merged).orderBy("source")
-    }),
-
-    // TPC-H Q3 shape: segment-filtered customer ⋈ date-filtered orders
-    // ⋈ lineitem, top-10 orders by revenue. Dimension side broadcasts;
-    // filters reach the scans; revenue is a sorted fold per order so
-    // the double sum is engine-independent.
-    "q114_shipping_priority" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") < lit("1998-06-01").cast("date"))
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate").cast("date") > lit("1998-06-01").cast("date"))
-        .select(col("l_orderkey"),
-          (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))
-        .agg(round(ssum(collect_list(col("rev"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape: the full dimension chain region→nation→customer
-    // joined against orders+lineitem+supplier with the co-nation
-    // condition; per-nation revenue. Every dimension broadcasts; the
-    // one big shuffle is lineitem⋈orders on orderkey.
-    "q115_local_supplier_volume" -> ((s, dir) => {
-      val nations = t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region")
-          .filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val cust = t(s, dir, "customer")
-        .join(broadcast(nations), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("c_nationkey"))
-      val supp = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("1997-01-01").cast("date") &&
-          col("o_orderdate").cast("date") < lit("1999-01-01").cast("date"))
-        .select("o_orderkey", "o_custkey")
-      // EXACT decimal revenue (q89's pattern): prices/discounts are 2dp
-      // values, so the decimal product at scale 4 is exact and sum() is
-      // associative/commutative with a fixed-size buffer — engine- and
-      // order-independent at any scale, unlike a float sum (or the
-      // collect_list sorted fold this replaces, whose buffer held the
-      // whole group).
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"),
-          (col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(3,2)") - col("l_discount").cast("decimal(3,2)")))
-            .as("rev"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-        .join(broadcast(nations), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("rev")).as("rev_sum"))
-        .select(col("n_name"),
-          col("rev_sum").cast("decimal(38,4)").cast("string").as("revenue"))
-        .orderBy("n_name")
-    }),
-
-    // ITERATIVE BPE training (TextAnalysis.bpeTrain): pair counts are
-    // RECOMPUTED after each merge, so later ranks can pair merged
-    // tokens — true BPE, vs q90's static first-iteration table. The
-    // oracle unrolls the 8 iterations statically (the q78 PageRank
-    // trick, generated by bpeTrainOracle), recounting from the
-    // replaced vocabulary each step — deep enough that merged tokens
-    // win later ranks and the recount path is exercised repeatedly.
-    "q116_bpe_train" -> ((s, dir) => {
-      TA.bpeTrain(t(s, dir, "documents"), "text", numMerges = 8)
-        .orderBy("rank")
-    }),
-
-    // KMV set-similarity: Jaccard of clicker vs purchaser user sets
-    // estimated from two bottom-64 sketches (the sets never meet in a
-    // join — only the k-row artifacts do); exact values ride along.
-    "q117_kmv_jaccard" -> ((s, dir) => {
-      val ev = events(s, dir)
-      Sketches.kmvJaccard(
-        ev.filter(col("event_type") === "click" && col("value") > 80)
-          .select("user_id"),
-        ev.filter(col("event_type") === "purchase" && col("value") > 80)
-          .select("user_id"),
-        "user_id", k = 64)
-    }),
-
-    // Suffix-stripping stemmer (Porter step-1a/-1b-lite) as a pure
-    // regex cascade — runs at scan speed; grouped stem frequencies.
-    "q118_stemming" -> ((s, dir) => {
-      val w = col("w")
-      val stem =
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(w, "sses$", "ss"),
-              "ies$", "i"),
-            "([a-z]{2,})ing$", "$1"),
-          "([a-z]{2,}[^s])s$", "$1")
-      t(s, dir, "documents")
-        .select(explode_outer(TA.tokens(col("text"))).as("w"))
-        .filter(col("w").isNotNull && col("w") =!= "")
-        .select(stem.as("stem"))
-        .groupBy("stem").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("stem")).limit(50)
-    }),
-
-    // Statistical anomaly detection: per-type mean/std from SORTED-FOLD
-    // moment sums (deterministic cross-engine, unlike builtin stddev's
-    // partition-order sums), z-score flags via a broadcast join back.
-    // TWO-LEVEL fold (q82's pattern): event_type is a handful of coarse
-    // groups over the whole fact table, so a single-level fold's buffer
-    // would hold the entire table — bucketing by event_id%4096 bounds
-    // every buffer while keeping the summation order a pure function of
-    // the value multiset (bit-identical on any engine / partitioning).
-    "q119_anomaly_zscore" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val sortedSum = (c: Column) => ssum(collect_list(c))
-      val l1 = ev.groupBy(col("event_type"),
-          pmod(col("event_id"), lit(4096)).as("b"))
-        .agg(count(lit(1)).as("n1"),
-          sortedSum(col("value")).as("sx1"),
-          sortedSum(col("value") * col("value")).as("sx21"))
-      val stats = l1.groupBy("event_type")
-        .agg(sum(col("n1")).cast("long").as("n"),
-          sortedSum(col("sx1")).as("sx"),
-          sortedSum(col("sx21")).as("sx2"))
-        .select(col("event_type"), col("n"),
-          (col("sx") / col("n")).as("mean"),
-          sqrt((col("sx2") - col("sx") * col("sx") / col("n")) /
-            (col("n") - 1)).as("std"))
-      ev.join(broadcast(stats), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(max(col("n")).as("n"),
-          round(max(col("mean")), 4).as("mean"),
-          round(max(col("std")), 4).as("std"),
-          sum((abs(col("value") - col("mean")) > lit(2.0) * col("std"))
-            .cast("long")).as("n_outliers"))
-        .orderBy("event_type")
-    }),
-
-    // Group-mean imputation: deterministically nulled values (id%7)
-    // refilled from the two-level sorted-fold group mean (bounded
-    // buffers — see q119) — the data-prep imputation primitive,
-    // broadcast join + coalesce.
-    "q120_imputation" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("event_id"), col("event_type"),
-          when(col("event_id") % 7 === 0, lit(null).cast("double"))
-            .otherwise(col("value")).as("v"))
-      val sfold = (c: Column) => ssum(collect_list(c))
-      val means = ev.filter(col("v").isNotNull)
-        .groupBy(col("event_type"), pmod(col("event_id"), lit(4096)).as("b"))
-        .agg(sfold(col("v")).as("s1"), count(lit(1)).as("n1"))
-        .groupBy("event_type")
-        .agg((sfold(col("s1")) / sum(col("n1"))).as("gmean"))
-      ev.join(broadcast(means), Seq("event_type"))
-        .select(col("event_id"), col("event_type"),
-          (col("v").isNull).cast("long").as("was_imputed"),
-          round(coalesce(col("v"), col("gmean")), 2).as("value_filled"))
-        .orderBy("event_id")
-    }),
-
-    // RAG-ingestion chunking: overlapping 64-token windows (stride 48,
-    // 16-token overlap) per document — map-side sequence+explode+slice,
-    // no shuffle until the final sort. Trailing chunks may run short.
-    "q121_rag_chunking" -> ((s, dir) => {
-      val ws = TA.tokens(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), ws.as("__ws"))
-        .select(col("doc_id"), col("__ws"),
-          explode(sequence(lit(0),
-            floor((size(col("__ws")) - 1) / 48).cast("int"))).as("k"))
-        .select(col("doc_id"), col("k").cast("long").as("chunk_idx"),
-          (col("k") * 48 + 1).cast("long").as("start_token"),
-          slice(col("__ws"), col("k") * 48 + 1, lit(64)).as("__c"))
-        .select(col("doc_id"), col("chunk_idx"), col("start_token"),
-          size(col("__c")).cast("long").as("chunk_tokens"),
-          array_join(col("__c"), " ").as("chunk_text"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // Deterministic pseudonymization: salted-md5 surrogate ids — stable
-    // across tables and runs (referential consistency survives
-    // anonymization: grouping by the surrogate equals grouping by the
-    // raw key), no lookup table to store or leak. Map-side transform.
-    "q122_pseudonymize" -> ((s, dir) => {
-      val surrogate = concat(lit("u_"), substring(
-        md5(concat(lit("salt1:"), col("user_id").cast("string"))), 1, 16))
-      events(s, dir)
-        .select(surrogate.as("user_pseudo"), col("event_type"), col("value"))
-        .groupBy("user_pseudo")
-        .agg(count(lit(1)).as("n_events"),
-          count_distinct(col("event_type")).as("n_types"),
-          round(min(col("value")), 2).as("min_value"))
-        .orderBy("user_pseudo")
-    }),
-
-    // Multi-model marketing attribution: per purchase, candidate
-    // clicks in the prior 30 min (user-keyed equi join + time filter —
-    // never a theta-only join), first/last touch via lexicographic
-    // struct min/max, linear share as a per-row division. No big
-    // float sums anywhere.
-    "q123_attribution" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts").as("cts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("pts"), col("value"))
-      purchases.join(clicks, Seq("user_id"))
-        .filter(col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
-          col("cts") < col("pts"))
-        .groupBy("purchase_id")
-        .agg(max(col("user_id")).as("user_id"),
-          count(lit(1)).as("n_clicks"),
-          min(struct(col("cts").as("t"), col("click_id").as("c")))
-            .getField("c").as("first_click_id"),
-          max(struct(col("cts").as("t"), col("click_id").as("c")))
-            .getField("c").as("last_click_id"),
-          round(max(col("value")) / count(lit(1)), 4).as("linear_share"))
-        .orderBy("purchase_id")
-    }),
-
-    // Time-weighted average (TWAP) over IRREGULAR event times: each
-    // observation weighted by its holding interval to the next event
-    // (microsecond-exact integer Δt via unix_micros; the weighted sum
-    // is a sorted fold). One keyed window + one groupBy.
-    "q124_twap" -> ((s, dir) => {
-      val byUserDay = Window
-        .partitionBy(col("user_id"), col("day"))
-        .orderBy(col("us"), col("event_id"))
-      events(s, dir)
-        .select(col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"),
-          col("event_id"), col("value"), unix_micros(col("ts")).as("us"))
-        .withColumn("nxt", lead(col("us"), 1).over(byUserDay))
-        .filter(col("nxt").isNotNull)
-        .withColumn("dt", col("nxt") - col("us"))
-        .groupBy("user_id", "day")
-        .agg(count(lit(1)).as("n_intervals"),
-          sum(col("dt")).cast("long").as("total_us"),
-          round(ssum(collect_list(col("value") * col("dt"))) /
-            sum(col("dt")).cast("double"), 4).as("twap"))
-        .orderBy("user_id", "day")
-    }),
-
-    // MDM field-level SURVIVORSHIP: three deterministic source variants
-    // of the customer record (with per-source gaps) merged to a golden
-    // record field by field in priority order, with per-field
-    // provenance. One full-outer key join chain; coalesce is codegen'd.
-    "q125_survivorship" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val s1 = c.filter(col("c_custkey") % 3 =!= 0).select(
-        col("c_custkey"),
-        col("c_name").as("n1"),
-        when(col("c_custkey") % 5 === 0, lit(null).cast("double"))
-          .otherwise(round(col("c_acctbal"), 2)).as("b1"),
-        when(col("c_custkey") % 2 === 0, lit(null).cast("string"))
-          .otherwise(col("c_mktsegment")).as("m1"))
-      val s2 = c.filter(col("c_custkey") % 4 =!= 0).select(
-        col("c_custkey"),
-        when(col("c_custkey") % 7 === 0, lit(null).cast("string"))
-          .otherwise(col("c_name")).as("n2"),
-        round(col("c_acctbal"), 2).as("b2"),
-        concat(lit("OLD_"), col("c_mktsegment")).as("m2"))
-      val s3 = c.select(col("c_custkey"), col("c_name").as("n3"),
-        round(col("c_acctbal"), 2).as("b3"), col("c_mktsegment").as("m3"))
-      s1.join(s2, Seq("c_custkey"), "full_outer")
-        .join(s3, Seq("c_custkey"), "full_outer")
-        .select(col("c_custkey"),
-          coalesce(col("n1"), col("n2"), col("n3")).as("name"),
-          coalesce(col("b1"), col("b2"), col("b3")).as("acctbal"),
-          coalesce(col("m1"), col("m2"), col("m3")).as("mktsegment"),
-          when(col("m1").isNotNull, 1).when(col("m2").isNotNull, 2)
-            .otherwise(3).as("segment_source"))
-        .orderBy("c_custkey")
-    }),
-
-    // Pareto / contribution analysis: per-nation revenue summed as an
-    // EXACT decimal (associative, fixed-size buffer — replaces a sorted
-    // fold that collected the whole fact table per nation), converted
-    // to double only at the 25-row aggregate (numerator < 2^53, so the
-    // conversion is exact on both engines); share and cumulative share
-    // run in explicitly ordered window frames over nation-count rows.
-    "q126_pareto" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-      val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          (col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(3,2)") - col("l_discount").cast("decimal(3,2)")))
-            .as("rev"))
-      // Caches.small: the 25-row nation grain becomes a checkpointed
-      // scan the gate PROVES bounded under the global windows below
-      val byNation = Caches.small(li
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(sum(col("rev")).cast("double").as("rev")))
-      val ordered = Window.orderBy(col("rev").desc, col("n_name"))
-      val cum = ordered.rowsBetween(Window.unboundedPreceding, 0)
-      val all = ordered.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      byNation.select(col("n_name"), round(col("rev"), 2).as("revenue"),
-          round(col("rev") / sum(col("rev")).over(all), 4).as("share"),
-          round(sum(col("rev")).over(cum) / sum(col("rev")).over(all), 4)
-            .as("cum_share"))
-        .withColumn("pareto80", (col("cum_share") <= 0.8).cast("long"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // Sequence PACKING (ops.Packing): documents fill fixed 512-token
-    // sequences greedily per shard; output is each doc's (seq_id,
-    // offset) from one windowed running sum — no concatenated text
-    // materialized.
-    "q71_sequence_packing" -> ((s, dir) => {
-      val norm = TF.normalizeText(col("text"))
-      graft.ops.Packing.packSequences(
-          t(s, dir, "documents"),
-          orderCol = "doc_id",
-          shard = pmod(col("doc_id"), lit(8)),
-          tokens = size(split(norm, " ")).cast("long"),
-          seqLen = 512)
-        .orderBy("doc_id")
-    }),
-
-    // Train/eval DECONTAMINATION (DedupOps.contaminatedDocs): training
-    // docs sharing any word trigram with the pseudo-benchmark slice
-    // (doc_id % 97 = 0) are flagged with their shared-shingle count.
-    // The eval shingle set is broadcast — the training corpus is
-    // checked map-side, no shuffle of the big side.
-    "q68_decontamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      DedupOps.contaminatedDocs(
-          train = docs.filter(col("doc_id") % 97 =!= 0),
-          eval_ = docs.filter(col("doc_id") % 97 === 0),
-          "doc_id", "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // DOMAIN-MIX sampling (Sampling.domainMix): per-source keep rates
-    // (up/down-weighting pretraining sources), hash-membership
-    // replayable by the oracle's md5 arithmetic.
-    "q69_domain_mix" -> ((s, dir) => {
-      Sampling.domainMix(t(s, dir, "documents").select("doc_id", "source"),
-          key = "doc_id", domainCol = "source",
-          pctByDomain = Map("src0" -> 10, "src1" -> 25, "src2" -> 50),
-          defaultPct = 80, salt = "mix1")
-        .orderBy("doc_id")
-    }),
-
-    // The stream-stream interval join's BATCH semantics, oracle-gated:
-    // each click pairs with the same user's purchases in [click,
-    // click+30min] (EventStreams.intervalJoin — watermarks are no-ops
-    // on batch frames, so this is the same code path streaming runs).
-    "q67_interval_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("l_uid"), col("ts").as("l_ts"),
-          col("event_id").as("click_id"))
-      val buys = e.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_uid"), col("ts").as("r_ts"),
-          col("event_id").as("buy_id"))
-      graft.streaming.EventStreams.intervalJoin(clicks, buys,
-          "l_uid", "r_uid", "l_ts", "r_ts",
-          before = "0 minutes", after = "30 minutes")
-        .select(col("click_id"), col("buy_id"))
-        .orderBy("click_id", "buy_id")
-    }),
-
-    // Z-order (Morton) codes for multi-dimensional layout
-    // (ops.Layout.zValue2): pure codegen'd bit interleaving, replayed
-    // bit-for-bit by the oracle's shift/and arithmetic. The write-side
-    // companion (zorderWrite: range partition on z + in-file sort) is
-    // plan/file-asserted in LayoutSpec.
-    "q66_zorder" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(col("c_custkey"),
-          graft.ops.Layout.zValue2(col("c_nationkey"),
-            pmod(col("c_custkey"), lit(32)), bits = 8).as("z"))
-        .orderBy("c_custkey")
-    }),
-
-    // Ordered string aggregation through the SQL surface: listagg
-    // WITHIN GROUP — deterministic ordered concat per group (the
-    // map-side-combining agg form; DuckDB replays with ordered
-    // string_agg).
-    "q64_listagg" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      s.sql("""SELECT c_nationkey,
-                 listagg(c_name, ',') WITHIN GROUP (ORDER BY c_custkey)
-                   AS names,
-                 count(*) AS n
-               FROM customer WHERE c_acctbal < -700
-               GROUP BY c_nationkey ORDER BY c_nationkey""")
-    }),
-
-    // EXACT heavy hitters with sketch-pruned counting (ops.Sketches):
-    // Misra–Gries candidates per partition (capacity 1000 ≫ the
-    // guaranteed-complete bound for the n/1000 threshold), exact
-    // recount of candidates only — the corpus bigram stream never
-    // shuffles its full key universe. Oracle is the plain GROUP BY
-    // HAVING (sound because the final counts are exact).
-    "q72_heavy_hitters" -> ((s, dir) => {
-      val ws = split(TF.normalizeText(col("text")), " ")
-      val bigrams = t(s, dir, "documents")
-        .select(ws.as("__ws"))
-        .select(explode(expr(
-          "transform(slice(__ws, 1, size(__ws) - 1)," +
-            " (w, i) -> concat(w, ' ', element_at(__ws, i + 2)))")).as("g"))
-      val total = bigrams.agg(count(lit(1)).cast("double").as("__tot"))
-      Sketches.heavyHitters(bigrams, "g", capacity = 1000)
-        .crossJoin(broadcast(total))
-        .filter(col("cnt") >= col("__tot") / lit(1000.0))
-        .select(col("g"), col("cnt"))
-        .orderBy("g")
-    }),
-
-    // Deterministic WEIGHTED sample (Sampling.weightedSample): A-ES
-    // priorities from the md5 hash, weight = n_chars (longer docs drawn
-    // proportionally more often); top-25, hash-replayable by the oracle.
-    "q73_weighted_sample" -> ((s, dir) => {
-      Sampling.weightedSample(
-          t(s, dir, "documents").select("doc_id", "n_chars"),
-          key = "doc_id", weight = col("n_chars"), k = 25, salt = "w1")
-        .orderBy("doc_id")
-    }),
-
-    // BM25 retrieval scores (TextAnalysis.bm25) for a fixed term set —
-    // 'dup' is the planted-duplicate marker (rare → high idf), the
-    // other two are mid-frequency. Doubles summed in sorted order and
-    // rounded 4dp on both sides.
-    "q74_bm25" -> ((s, dir) => {
-      TA.bm25(t(s, dir, "documents"), "doc_id", "text",
-          terms = Seq("dup", "vector", "stream"))
-        .orderBy("doc_id")
-    }),
-
-    // End-to-end FUZZY DEDUP: exact trigram-Jaccard pairs >= 0.6 →
-    // connected components (near-dup clusters are transitive-closed) →
-    // canonical keep = min doc_id per cluster. The full production
-    // pipeline shape: pair graph, cluster, survivor list in one plan.
-    "q75_fuzzy_dedup_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // LSH+verify pair source (DedupOps.jaccardVerifiedPairs): banded
-      // MinHash candidates (equi-join, maxBucket skew cap) with exact
-      // shingle-set verification on the candidate slice only — the
-      // corpus-linear scale path. The former raw shingle self-join's
-      // posting lists grow with duplication (10× replicas → 100× pair
-      // work, measured 48× wall at 10×); banding keeps pair work
-      // proportional to true near-dup density.
-      val pairs = DedupOps.jaccardVerifiedPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.6, numHashes = 16, rowsPerBand = 2,
-        maxBucket = 64)
-      val cc = DedupOps.connectedComponents(
-        pairs.select("id_a", "id_b"))
-      docs.select(col("doc_id"))
-        .join(cc.select(col("node").as("doc_id"), col("component")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("component"))
-        .withColumn("keep",
-          (col("doc_id") === col("component")).cast("long"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-group KMV distinct sketch (Sketches.kmvDistinctGrouped):
-    // distinct users per event type, one bottom-32 sketch per group in
-    // a single pass — exact below k (sf0.001: 15 users), estimated
-    // above (sf0.1: 1500), so BOTH estimator paths are oracle-gated.
-    "q84_kmv_grouped" -> ((s, dir) => {
-      Sketches.kmvDistinctGrouped(events(s, dir), Seq("event_type"),
-          col("user_id").cast("string"), k = 32)
-        .orderBy("event_type")
-    }),
-
-    // FEATURE HASHING (TextAnalysis.featureHash): vocabulary-free
-    // fixed-width featurization — md5 bucket + independent ±1 sign so
-    // collisions cancel; long-form (doc, bucket, value), pure integer
-    // arithmetic.
-    "q85_feature_hash" -> ((s, dir) => {
-      TA.featureHash(t(s, dir, "documents"), "doc_id", "text",
-          buckets = 32)
-        .orderBy("doc_id", "bucket")
-    }),
-
-    // COUNT-MIN sketch (Sketches.countMin/countMinLookup): 4×256 exact
-    // counter grid over the corpus token stream — fixed-size mergeable
-    // state (the shuffle carries ≤ partitions·4·256 partial cells no
-    // matter the corpus), then point lookups for a probe term set. The
-    // exact count rides along so the CM one-sided guarantee
-    // (est >= exact, always) is itself oracle-gated.
-    "q86_count_min" -> ((s, dir) => {
-      import s.implicits._
-      val words = t(s, dir, "documents")
-        .select(explode(split(normText, " ")).as("w"))
-      val sketch = Sketches.countMin(words, col("w"), depth = 4, width = 256)
-      val probes = Seq("dup", "vector", "stream").toDF("w")
-      val exact = words.groupBy("w").agg(count(lit(1)).as("exact"))
-      Sketches.countMinLookup(sketch, probes, "w", depth = 4, width = 256)
-        .join(exact, Seq("w"), "left")
-        .select(col("w"), col("est"),
-          coalesce(col("exact"), lit(0L)).as("exact"))
-        .orderBy("w")
-    }),
-
-    // Grouped embedding CENTROIDS (Similarity.groupCentroids): per-label
-    // mean vector in long (label, pos, centroid) form — one shuffle
-    // keyed on (label, dim) after a map-side posexplode; the class-
-    // prototype op every embedding pipeline runs. TWO-LEVEL sorted-fold
-    // means bucketed by vec_id%4096 (q82 discipline): bit-exact across
-    // engines AND no buffer ever holds a whole label's rows — one label
-    // over a 100 TB corpus would OOM a single-level fold.
-    "q87_group_centroid" -> ((s, dir) => {
-      Similarity.groupCentroids(t(s, dir, "embeddings"), "label",
-          "embedding", bucket = Some(col("vec_id")))
-        .select(col("label"), col("pos"),
-          round(col("centroid"), 6).as("centroid"))
-        .orderBy("label", "pos")
-    }),
-
-    // HLL cardinality sketch (Sketches.hllEstimate): 64 registers over
-    // distinct users — linear-counting regime at sf<=0.01 (few users,
-    // empty registers), raw-estimator regime at sf0.1, so both branches
-    // of the standard estimator are oracle-gated. Exact distinct rides
-    // along for the error contrast.
-    "q88_hll" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val exact = ev.agg(countDistinct(col("user_id")).as("exact_distinct"))
-      Sketches.hllEstimate(ev, col("user_id").cast("string"), p = 6)
-        .crossJoin(broadcast(exact))
-    }),
-
-    // SemDeDup-style SEMANTIC dedup (Similarity.semanticDedup):
-    // cluster against the q24 seeded centroids, exemplar per cluster
-    // (max cosine, id tie-break), drop members with cosine >= 0.4 to
-    // their exemplar. Linear member⋈exemplar comparison — the scale-
-    // bounded special case of intra-cluster pairwise pruning.
-    "q92_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centroids = Caches.small(emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-      Similarity.semanticDedup(emb, "vec_id", "embedding",
-          centroids, "cid", "cv", threshold = 0.4)
-        .orderBy("vec_id")
-    }),
-
-    // Embedding-dimension COVARIANCE (Similarity.dimCovariance): the
-    // d(d+1)/2-cell Gram/covariance profile (first 8 dims here), one
-    // (i,j)-keyed aggregation after map-side pair expansion; sorted-fold
-    // sums → bit-exact.
-    "q93_dim_covariance" -> ((s, dir) => {
-      Similarity.dimCovariance(t(s, dir, "embeddings"), "embedding",
-          dims = 8, bucket = Some(col("vec_id")))
-        .orderBy("i", "j")
-    }),
-
-    // Ordered FUNNEL (Behavior.funnel): view → click → purchase,
-    // strictly ordered AND converting within 2 hours of the previous
-    // stage — real drop-off at every SF. Stage chain = user-keyed
-    // min-aggs + co-keyed joins, no global ordering anywhere.
-    "q94_funnel" -> ((s, dir) => {
-      Behavior.funnel(events(s, dir), "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"), windowSeconds = Some(7200L))
-        .orderBy("stage_idx")
-    }),
-
-    // COHORT retention triangle (Behavior.cohortRetention): first-
-    // activity week cohorts × week offset, distinct-user counts; week
-    // index is pure integer date arithmetic (no engine week-of-year
-    // convention).
-    "q95_cohort" -> ((s, dir) => {
-      Behavior.cohortRetention(events(s, dir), "user_id", "ts")
-        .orderBy("cohort_week", "week_offset")
-    }),
-
-    // BPE merge-candidate counting (TextAnalysis.bpePairCounts): the
-    // first byte-pair-encoding training step — adjacent char-pair
-    // counts weighted by word frequency, generated from the DISTINCT
-    // vocabulary (Zipf pre-aggregation), top-30 merges with a total
-    // tie-break order.
-    "q90_bpe_pairs" -> ((s, dir) => {
-      TA.bpePairCounts(t(s, dir, "documents"), "text", topK = 30)
-    }),
-
-    // Batch k-NN JOIN (Similarity.knnJoin): every embedding's top-3
-    // neighbors via the q23 multi-table sign-LSH blocking (key-equality
-    // band joins only), directed candidate mirror, per-query window
-    // top-k. The all-queries ANN workload — graph construction /
-    // retrieval labeling — with the oracle replaying hyperplanes,
-    // blocking, and ranking end-to-end.
-    "q91_knn_join" -> ((s, dir) => {
-      // auto blocking geometry (q23 discipline): derived planes = the
-      // pinned 4 at gate SFs, log₂-scaled beyond
-      Similarity.knnJoin(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 3, tables = 8, dims = 64)
-        .orderBy("qid", "rank")
-    }),
-
-    // Salted two-phase aggregation (Partitioning.saltedSumCount): hot
-    // keys split across 8 reducers in phase 1, partials combined in
-    // phase 2 — EXACT (decimal sums), so the oracle is the plain
-    // GROUP BY. The skew pattern for per-key-large aggregation state.
-    "q89_salted_agg" -> ((s, dir) => {
-      Partitioning.saltedSumCount(
-          t(s, dir, "lineitem").select(col("l_returnflag"),
-            col("l_extendedprice").cast("decimal(18,2)").as("price")),
-          Seq("l_returnflag"), col("price"), saltFactor = 8)
-        .select(col("l_returnflag"),
-          col("sum_val").cast("decimal(38,2)").cast("string").as("sum_price"),
-          col("cnt"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Grouped Pearson CORRELATION with deterministic float math: the
-    // five sufficient statistics run through a TWO-LEVEL sorted fold
-    // (the builtin corr sums in partition order — unreplayable). Level 1
-    // folds within 4096 l_orderkey buckets, level 2 folds the sorted
-    // bucket subtotals — every aggregation buffer is O(group/4096) or
-    // O(4096), never the whole group (the single-level sorted fold this
-    // replaces collected all of lineitem into 3 buffers — an OOM at
-    // 100×). Both levels sort before folding, so the summation order is
-    // a pure function of the multiset of values: bit-identical on any
-    // engine, any partitioning, any scale.
-    "q82_corr" -> ((s, dir) => {
-      def sfold(c: Column) = ssum(collect_list(c))
-      val x = col("l_quantity"); val y = col("l_extendedprice")
-      val l1 = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), pmod(col("l_orderkey"), lit(4096)).as("b"))
-        .agg(count(lit(1)).as("n1"),
-          sfold(x).as("sx1"), sfold(y).as("sy1"),
-          sfold(x * y).as("sxy1"),
-          sfold(x * x).as("sxx1"), sfold(y * y).as("syy1"))
-      l1.groupBy(col("l_returnflag"))
-        .agg(sum(col("n1")).cast("double").as("n"),
-          sfold(col("sx1")).as("sx"), sfold(col("sy1")).as("sy"),
-          sfold(col("sxy1")).as("sxy"),
-          sfold(col("sxx1")).as("sxx"), sfold(col("syy1")).as("syy"))
-        .select(col("l_returnflag"),
-          round((col("n") * col("sxy") - col("sx") * col("sy"))
-            / (sqrt(col("n") * col("sxx") - col("sx") * col("sx"))
-              * sqrt(col("n") * col("syy") - col("sy") * col("sy"))), 6)
-            .as("corr"),
-          col("n").cast("long").as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Token ENTROPY + type-token ratio per document — the
-    // vocabulary-diversity quality signals (low entropy = repetitive/
-    // templated text). One explode + three keyed aggregations; the
-    // p·ln p reduction is a TWO-LEVEL sorted fold (4096 word-hash
-    // buckets, then the sorted bucket subtotals) so no aggregation
-    // buffer holds a whole document's vocabulary while the IEEE
-    // addition order stays a pure function of the word multiset.
-    "q83_token_entropy" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(TF.normalizeText(col("text")), " ")).as("w"))
-      val counts = words.groupBy("doc_id", "w")
-        .agg(count(lit(1)).cast("double").as("c"))
-      val n = words.groupBy("doc_id")
-        .agg(count(lit(1)).cast("double").as("n"))
-      counts.join(n, "doc_id")
-        .select(col("doc_id"), col("n"),
-          pmod(TF.md5Hash48(col("w")), lit(4096L)).as("__b"),
-          (-(col("c") / col("n")) * log(col("c") / col("n"))).as("__e"))
-        .groupBy("doc_id", "__b")
-        .agg(count(lit(1)).as("__n1"), first(col("n")).as("n"),
-          ssum(collect_list(col("__e"))).as("__sb"))
-        .groupBy("doc_id")
-        .agg(
-          round(ssum(collect_list(col("__sb"))), 4).as("entropy"),
-          round(sum(col("__n1")) / first(col("n")), 4).as("ttr"),
-          first(col("n")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // UNPIVOT/melt (Dataset.unpivot — wide metric columns to long
-    // (id, metric, value) form, the inverse of q34's pivot). Raw rows,
-    // no aggregation: the metric values are doubles and stay untouched
-    // on both engines.
-    "q79_unpivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 997 === 0)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_tax"))
-        .unpivot(
-          ids = Array(col("l_orderkey"), col("l_linenumber")),
-          values = Array(col("l_quantity"), col("l_extendedprice"),
-            col("l_discount"), col("l_tax")),
-          variableColumnName = "metric",
-          valueColumnName = "value")
-        .orderBy("l_orderkey", "l_linenumber", "metric")
-    }),
-
-    // TIME-SERIES GAP FILL: per-user daily scaffold (sequence+explode
-    // between first and last event day) left-joined with the day's
-    // closing value, forward-filled by an IGNORE NULLS window — the
-    // resample/ffill primitive for event telemetry. Values pass
-    // through untouched (no float re-aggregation).
-    "q80_gap_fill" -> ((s, dir) => {
-      val e = events(s, dir)
-      val daily = e.groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(max(struct(col("ts"), col("event_id"), col("value")))
-          .getField("value").as("day_value"))
-      val scaffold = e.groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("d0"),
-          max(to_date(col("ts"))).as("d1"))
-        .select(col("user_id"),
-          explode(sequence(col("d0"), col("d1"),
-            expr("INTERVAL 1 DAY"))).as("day"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      scaffold.join(daily, Seq("user_id", "day"), "left")
-        .select(col("user_id"),
-          date_format(col("day"), "yyyy-MM-dd").as("day"),
-          last(col("day_value"), ignoreNulls = true).over(w).as("value"),
-          col("day_value").isNotNull.cast("long").as("observed"))
-        .orderBy("user_id", "day")
-    }),
-
-    // HISTOGRAM profiling: explicit floor bucketing (identical double
-    // expression on both engines — width_bucket builtins differ in
-    // operation order at bucket edges) + count/sum-free occupancy.
-    "q81_histogram" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(least(floor(col("o_totalprice") / lit(50000.0)), lit(9L))
-          .cast("long").as("bucket"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    }),
-
-    // GOPHER quality rules (TextAnalysis.gopherQuality): word-count,
-    // mean-word-length, and stopword-evidence bounds with per-rule
-    // metrics — word bounds tightened to [50, 90] so the synthetic
-    // corpus actually splits on them. Map-side array ops, no explode.
-    "q76_gopher_rules" -> ((s, dir) => {
-      TA.gopherQuality(t(s, dir, "documents"), "doc_id", "text",
-          minWords = 50, maxWords = 90)
-        .orderBy("doc_id")
-    }),
-
-    // PAGERANK (ops.Graph.pageRank): 3 damped iterations over a
-    // two-family link graph (doc → doc+1, doc → doc+3) — corpus
-    // link-analysis for source weighting. Damping 0.75 on purpose:
-    // exactly representable in binary AND decimal, so both engines fold
-    // the same constants. Sorted-fold contribution sums.
-    "q78_pagerank" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt1 = ids.select(col("doc_id").as("dst"))
-      val e1 = ids.filter(col("doc_id") % 10 =!= 9)
-        .select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst"))
-        .join(tgt1, Seq("dst"))
-      val e2 = ids.filter(col("doc_id") % 10 < 7)
-        .select(col("doc_id").as("src"), (col("doc_id") + 3).as("dst"))
-        .join(tgt1, Seq("dst"))
-      graft.ops.Graph.pageRank(e1.unionByName(e2), iters = 3,
-          damping = 0.75)
-        .select(col("node").as("doc_id"), round(col("pr"), 6).as("pr"))
-        .orderBy("doc_id")
-    }),
-
-    // FORWARD as-of with tolerance (AsOf.join direction="forward"):
-    // each click resolves to the user's FIRST purchase in [click,
-    // click+30min] — the 1:1 first-match complement of q67's
-    // all-matches interval join. Same single-shuffle union+window plan
-    // as the backward form, scanned in the opposite direction.
-    "q77_asof_forward" -> ((s, dir) => {
-      val e = events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val buys = e.filter(col("event_type") === "purchase")
-        .select("user_id", "ts")
-      AsOf.join(clicks, buys, "user_id", "ts", "ts", valueCols = Nil,
-          direction = "forward",
-          tolerance = Some(expr("INTERVAL 30 MINUTES")))
-        .select(col("event_id"),
-          date_format(col("asof_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("asof_ts"))
-        .orderBy("event_id")
-    }),
-
-    // TRIANGLE COUNTING (Graph.triangleCount): per-node triangle
-    // participation over a three-family doc link graph — the
-    // clustering-coefficient numerator. Degree-ordered edge orientation
-    // caps wedge fan-out at O(√E) per node (Suri & Vassilvitskii), so
-    // no "last reducer" even on celebrity nodes; three key-equality
-    // shuffle joins, each triangle found exactly once.
-    "q128_triangle_count" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"))
-          .join(tgt, Seq("dst"))
-      val edges = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      graft.ops.Graph.triangleCount(edges)
-        .select(col("node").as("doc_id"), col("triangles"))
-        .orderBy("doc_id")
-    }),
-
-    // SCD TYPE 2 dimension build (Merge.scd2): collapse each customer's
-    // order-priority history into effective-dated version rows — ONE
-    // shuffle on the key, both windows share its partitioning. The
-    // (orderdate, orderkey) order is total per customer, so version
-    // boundaries are a pure function of the data.
-    "q129_scd2" -> ((s, dir) => {
-      val hist = t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
-        col("o_orderpriority"))
-      Merge.scd2(hist, keys = Seq("o_custkey"),
-          orderBy = Seq("o_orderdate", "o_orderkey"),
-          tracked = Seq("o_orderpriority"))
-        .select(col("o_custkey"), col("o_orderpriority"),
-          date_format(col("effective_from"), "yyyy-MM-dd HH:mm:ss")
-            .as("eff_from"),
-          date_format(col("effective_to"), "yyyy-MM-dd HH:mm:ss")
-            .as("eff_to"),
-          col("is_current").cast("long").as("is_current"))
-        .orderBy("o_custkey", "eff_from", "o_orderpriority")
-    }),
-
-    // MARKET-BASKET association rules (Associations.rules): brand
-    // co-occurrence across orders — support/confidence/lift per directed
-    // pair. Candidate generation is a basket-keyed self-join with
-    // per-basket-quadratic (order-sized, bounded) fan-out; marginals are
-    // vocabulary-sized key-equality joins. No driver-side lattice.
-    "q130_association_rules" -> ((s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("basket"), col("l_partkey"))
-        .join(t(s, dir, "part")
-          .select(col("p_partkey").as("l_partkey"),
-            col("p_brand").as("item")), Seq("l_partkey"))
-        .select("basket", "item")
-      graft.ops.Associations.rules(baskets, "basket", "item",
-          minPairCount = 5L)
-        .select(col("item_a"), col("item_b"), col("pair_n"),
-          col("a_n"), col("b_n"),
-          round(col("support"), 6).as("support"),
-          round(col("confidence"), 6).as("confidence"),
-          round(col("lift"), 6).as("lift"))
-        .orderBy("item_a", "item_b")
-    }),
-
-    // TF-IDF top-k keywords per document (TextAnalysis.tfidfTopK):
-    // sparse-retrieval term weighting; rank window partitioned by doc so
-    // WindowGroupLimit prunes below the shuffle. Ranked on the raw
-    // double (identical ln/× sequence both engines), term tiebreak.
-    "q131_tfidf_keywords" -> ((s, dir) => {
-      TA.tfidfTopK(t(s, dir, "documents"), "doc_id", "text", k = 3)
-        .select(col("doc_id"), col("rk"), col("term"), col("tf"),
-          col("df"), round(col("score"), 6).as("score"))
-        .orderBy("doc_id", "rk")
-    }),
-
-    // PMI collocations (TextAnalysis.pmiCollocations): adjacent-bigram
-    // pointwise mutual information over the corpus — phrase mining ahead
-    // of tokenizer training. Count models are Zipf-small; minCount cuts
-    // the hapax tail before the marginal joins.
-    "q132_pmi_collocations" -> ((s, dir) => {
-      TA.pmiCollocations(t(s, dir, "documents"), "text", minCount = 3L)
-        .select(col("w1"), col("w2"), col("nab"), col("na"), col("nb"),
-          round(col("pmi"), 6).as("pmi"))
-        .orderBy("w1", "w2")
-    }),
-
-    // RFM SEGMENTATION: recency/frequency/monetary per customer, each
-    // quintile-scored the scale-safe way (q107's pattern — exact
-    // percentile boundaries from one agg, broadcast back, map-side
-    // assignment; no global ntile sort). Money in integer cents so the
-    // per-customer sums are exact and engine-identical.
-    "q133_rfm" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val ref = o.agg(max(to_date(col("o_orderdate"))).as("__ref"))
-      val base = o.groupBy("o_custkey").agg(
-        max(to_date(col("o_orderdate"))).as("__last"),
-        count(lit(1)).as("frequency"),
-        sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("monetary_cents"))
-      val rfm = base.crossJoin(broadcast(ref))
-        .select(col("o_custkey"),
-          datediff(col("__ref"), col("__last")).as("recency"),
-          col("frequency"), col("monetary_cents"))
-      val bounds = rfm.agg(
-        expr("percentile(recency, array(0.2,0.4,0.6,0.8))").as("rb"),
-        expr("percentile(frequency, array(0.2,0.4,0.6,0.8))").as("fb"),
-        expr("percentile(monetary_cents, array(0.2,0.4,0.6,0.8))")
-          .as("mb"))
-      rfm.crossJoin(broadcast(bounds))
-        .select(col("o_custkey"), col("recency"), col("frequency"),
-          col("monetary_cents"),
-          (lit(1) + size(filter(col("rb"), b => col("recency") > b)))
-            .as("r_bin"),
-          (lit(1) + size(filter(col("fb"), b => col("frequency") > b)))
-            .as("f_bin"),
-          (lit(1) + size(filter(col("mb"),
-            b => col("monetary_cents") > b))).as("m_bin"))
-        .withColumn("segment",
-          concat(col("r_bin").cast("string"), col("f_bin").cast("string"),
-            col("m_bin").cast("string")))
-        .orderBy("o_custkey")
-    }),
-
-    // MULTI-SOURCE BFS (Graph.bfsHops): minimum hop distance from a
-    // sparse seed set over the q128 link graph — one key-equality join +
-    // one integer-min groupBy per round, lineage truncated; integer min
-    // is order-independent, so deterministic on any partitioning.
-    "q134_bfs_hops" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"))
-          .join(tgt, Seq("dst"))
-      val edges = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      val sources = ids.filter(col("doc_id") % 97 === 0)
-      graft.ops.Graph.bfsHops(edges, sources, maxHops = 5)
-        .select(col("node").as("doc_id"), col("hops").cast("long")
-          .as("hops"))
-        .orderBy("doc_id")
-    }),
-
-    // LINEAR INTERPOLATION gap fill — the interpolating sibling of
-    // q80's LOCF: per-user daily series, missing days filled by
-    // time-weighted linear blend of the bracketing observations. Two
-    // windows over ONE user-keyed shuffle (forward scan + backward
-    // scan), map-side arithmetic; exact integer day weights.
-    "q135_linear_interp" -> ((s, dir) => {
-      val e = events(s, dir)
-      val daily = e.groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(max(struct(col("ts"), col("event_id"), col("value")))
-          .getField("value").as("v"))
-      val scaffold = e.groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("d0"),
-          max(to_date(col("ts"))).as("d1"))
-        .select(col("user_id"),
-          explode(sequence(col("d0"), col("d1"),
-            expr("INTERVAL 1 DAY"))).as("day"))
-      val grid = scaffold.join(daily, Seq("user_id", "day"), "left")
-      val back = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val fwd = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(0, Window.unboundedFollowing)
-      grid
-        .withColumn("pv", last(col("v"), ignoreNulls = true).over(back))
-        .withColumn("pd", last(when(col("v").isNotNull, col("day")),
-          ignoreNulls = true).over(back))
-        .withColumn("nv", first(col("v"), ignoreNulls = true).over(fwd))
-        .withColumn("nd", first(when(col("v").isNotNull, col("day")),
-          ignoreNulls = true).over(fwd))
-        .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd")
-            .as("day"),
-          round(when(col("v").isNotNull, col("v"))
-            .otherwise(col("pv") + (col("nv") - col("pv")) *
-              (datediff(col("day"), col("pd")).cast("double") /
-                datediff(col("nd"), col("pd")).cast("double"))), 4)
-            .as("v"))
-        .orderBy("user_id", "day")
-    }),
-
-    // INVERTED INDEX build, SHARDED: term → sorted doc:position posting
-    // list per doc-range shard — the index-construction shape of a
-    // sparse retrieval stack. Sharding by doc range bounds every
-    // collect_list group at O(shard × tf) regardless of term frequency
-    // (the unbounded-group hazard q82's rewrite documents — a corpus
-    // stopword would otherwise collect its whole posting list into one
-    // buffer); the full list is the shard-ordered concatenation, which
-    // is exactly how segment-per-range index files are laid out anyway.
-    "q136_inverted_index" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("w"))
-        .filter(col("w") =!= "")
-      val df = words.groupBy("w")
-        .agg(countDistinct(col("doc_id")).as("df"))
-        .filter(col("df") >= 2)
-      words.join(df, Seq("w"))
-        .withColumn("shard", (col("doc_id") / 100).cast("long"))
-        .groupBy("w", "df", "shard")
-        .agg(array_join(sort_array(collect_list(
-          concat(col("doc_id"), lit(":"), col("p")))), ",")
-          .as("postings"))
-        .select(col("w").as("term"), col("shard"), col("df"),
-          col("postings"))
-        .orderBy("term", "shard")
-    }),
-
-    // MERKLE TABLE DIFF (Integrity.merkleDiff): anti-entropy between
-    // two order snapshots at key-range-bucket granularity — one
-    // checksum row per 1000-key range crosses the wire instead of the
-    // tables; only `differ` buckets would proceed to the row-level
-    // snapshotDiff (q104). Checksums are order-independent bit_xor
-    // folds of 48-bit row hashes, bit-reproducible in any engine.
-    "q137_merkle_diff" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      // simulated replica drift: keys %97 deleted, priorities %13 rewritten
-      val vNew = o.filter(col("o_orderkey") % 97 =!= 0)
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 13 === 0, lit("9-CHANGED"))
-            .otherwise(col("o_orderpriority")))
-      val rowRepr = concat_ws("|", col("o_orderkey"),
-        col("o_orderpriority"), round(col("o_totalprice") * 100, 0)
-          .cast("long"))
-      graft.ops.Integrity.merkleDiff(o, vNew, col("o_orderkey"),
-          rowRepr, bucketWidth = 1000L)
-        .orderBy("bucket")
-    }),
-
-    // DEGREE DISTRIBUTION of the q128 link graph: the 30-second skew
-    // diagnostic every graph job should run before choosing its join
-    // strategy (celebrity nodes ⇒ orientation/salting). Two shuffles:
-    // per-node degree, then degree histogram.
-    "q138_degree_stats" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"))
-          .join(tgt, Seq("dst"))
-      val raw = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      val und = raw.filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-      val deg = und.select(col("a").as("node"))
-        .unionByName(und.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("degree"))
-      deg.groupBy("degree")
-        .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("example"))
-        .orderBy("degree")
-    }),
-
-    // WEIGHTED SHORTEST PATHS (Graph.sssp): 4 Bellman-Ford rounds over
-    // the link graph with edge weight = id offset (1/2/3) — after round
-    // k the cost is the exact minimum over ≤k-edge paths, which is what
-    // the bounded recursive-CTE oracle replays. Integer min state.
-    "q139_weighted_sssp" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"),
-            (col("doc_id") + off).as("dst"), lit(off.toLong).as("w"))
-          .join(tgt, Seq("dst"))
-      val edges = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      val sources = ids.filter(col("doc_id") % 97 === 0)
-      graft.ops.Graph.sssp(edges, sources, maxIter = 4)
-        .select(col("node").as("doc_id"), col("cost"))
-        .orderBy("doc_id")
-    }),
-
-    // CUMULATIVE DISTINCT USERS per day (new vs returning): first-seen
-    // day per user (one shuffle over users), new-user counts per day,
-    // then a running sum over DAY-GRAIN rows only — the global window
-    // is bounded by calendar cardinality, never by the event stream.
-    "q140_cumulative_users" -> ((s, dir) => {
-      val firstSeen = events(s, dir).groupBy("user_id")
-        .agg(min(to_date(col("ts"))).as("day"))
-      val perDay = firstSeen.groupBy("day")
-        .agg(count(lit(1)).as("new_users"))
-      val w = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      perDay
-        .withColumn("cum_users", sum(col("new_users")).over(w))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("new_users"), col("cum_users"))
-        .orderBy("day")
-    }),
-
-    // SEQUENCE MINING: top-10 event-type TRIGRAMS across per-user
-    // ordered streams (q106's Markov pairs, one order deeper) — two
-    // leads over one user-keyed window, then an (event-type)³-bounded
-    // count table; top-k via TakeOrdered with a total tiebreak.
-    "q141_trigram_paths" -> ((s, dir) => {
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .select(col("event_type").as("e1"),
-          lead(col("event_type"), 1).over(byUser).as("e2"),
-          lead(col("event_type"), 2).over(byUser).as("e3"))
-        .filter(col("e2").isNotNull && col("e3").isNotNull)
-        .groupBy("e1", "e2", "e3").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
-        .limit(10)
-    }),
-
-    // TIME-OF-WEEK ACTIVITY PROFILE: (day-of-week, hour) heatmap of
-    // event counts + exact cent sums. Day-of-week via day-diff from a
-    // fixed Monday epoch (engine-agnostic arithmetic — both engines'
-    // native dayofweek() disagree on numbering); 168 cells, map-side.
-    "q142_time_profile" -> ((s, dir) => {
-      events(s, dir)
-        .select(
-          (datediff(to_date(col("ts")), lit("1970-01-05").cast("date"))
-            % 7).as("dow"),
-          hour(col("ts")).as("hr"),
-          round(col("value") * 100, 0).cast("long").as("cents"))
-        .groupBy("dow", "hr")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        .orderBy("dow", "hr")
-    }),
-
-    // DATA PROFILING (Deequ-style summarize, the survey companion of
-    // q111's rule audit): per-column null count / distinct count /
-    // min / max as ONE aggregation pass over the table, unpivoted to
-    // (column, metric…) report rows — never N passes for N columns.
-    "q143_column_profile" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      def prof(cc: String) = struct(
-        sum(when(col(cc).isNull, 1L).otherwise(0L)).as("n_null"),
-        countDistinct(col(cc)).as("n_distinct"),
-        min(col(cc)).cast("string").as("min_s"),
-        max(col(cc)).cast("string").as("max_s"))
-      // doubles go through a 2dp DECIMAL so the string form is
-      // engine-independent (raw double→string formatting is not)
-      def profNum(cc: String) = struct(
-        sum(when(col(cc).isNull, 1L).otherwise(0L)).as("n_null"),
-        countDistinct(col(cc)).as("n_distinct"),
-        round(min(col(cc)), 2).cast("decimal(18,2)").cast("string")
-          .as("min_s"),
-        round(max(col(cc)), 2).cast("decimal(18,2)").cast("string")
-          .as("max_s"))
-      c.agg(prof("c_name").as("p1"), prof("c_mktsegment").as("p2"),
-          profNum("c_acctbal").as("p3"), prof("c_nationkey").as("p4"))
-        .select(explode(array(
-          struct(lit("c_name").as("column"), col("p1.*")),
-          struct(lit("c_mktsegment").as("column"), col("p2.*")),
-          struct(lit("c_acctbal").as("column"), col("p3.*")),
-          struct(lit("c_nationkey").as("column"), col("p4.*"))))
-          .as("r"))
-        .select(col("r.*"))
-        .orderBy("column")
-    }),
-
-    // SESSION PATH ANALYSIS: the first 5 event types of each 30-minute
-    // session, as a '>'-joined journey string, counted across sessions.
-    // The per-session collect is BOUNDED BEFORE aggregation (rn ≤ 5
-    // filter), so no buffer scales with session length — the q82 rule
-    // applied to journey mining.
-    "q144_session_paths" -> ((s, dir) => {
-      val e = events(s, dir)
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val gapped = e.select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"),
-          // exact timestamp arithmetic (micros), same shape as q52's
-          // oracle — no epoch-second truncation at the gap boundary
-          when(col("ts") > lag(col("ts"), 1).over(byUser) +
-              expr("INTERVAL 30 MINUTES")
-              || lag(col("ts"), 1).over(byUser).isNull, 1L)
-            .otherwise(0L).as("new_s"))
-        .withColumn("sid", sum(col("new_s")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      val bySession = Window.partitionBy(col("user_id"), col("sid"))
-        .orderBy(col("ts"), col("event_id"))
-      val firstN = gapped
-        .withColumn("rn", row_number().over(bySession))
-        .filter(col("rn") <= 5)
-      firstN.groupBy("user_id", "sid")
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("rn"), col("event_type")))),
-          x => x.getField("event_type")), ">").as("path"))
-        .groupBy("path").agg(count(lit(1)).as("n_sessions"))
-        .orderBy("path")
-    }),
-
-    // BITEMPORAL READ over the q129 SCD2 dimension: segment mix AS OF a
-    // past date — version rows whose [from, to) interval covers the
-    // as-of instant, one filter + one count. The query every
-    // effective-dated warehouse dimension exists to answer.
-    "q145_asof_dimension" -> ((s, dir) => {
-      val hist = t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
-        col("o_orderpriority"))
-      val dim = Merge.scd2(hist, keys = Seq("o_custkey"),
-        orderBy = Seq("o_orderdate", "o_orderkey"),
-        tracked = Seq("o_orderpriority"))
-      val asOf = lit("1998-07-01").cast("timestamp")
-      dim.filter(col("effective_from") <= asOf &&
-          (col("effective_to").isNull || col("effective_to") > asOf))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // CDC LOG COMPACTION (Kafka-compaction semantics): a keyed change
-    // log collapses to latest-change-wins state, delete tombstones
-    // dropping their key. ONE max-of-struct aggregation per key — the
-    // (date, orderkey) sequence is total, so "latest" is a pure
-    // function of the log; no windows, no sorts, map-side partials.
-    "q146_cdc_compaction" -> ((s, dir) => {
-      val log = t(s, dir, "orders").select(
-        col("o_custkey"),
-        col("o_orderdate"), col("o_orderkey"),
-        when(col("o_orderkey") % 19 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      log.groupBy("o_custkey")
-        .agg(max(struct(col("o_orderdate"), col("o_orderkey"), col("op"),
-          col("cents"))).as("last"))
-        .filter(col("last.op") =!= "D")
-        .select(col("o_custkey"),
-          date_format(col("last.o_orderdate"), "yyyy-MM-dd").as("last_day"),
-          col("last.cents").as("cents"))
-        .orderBy("o_custkey")
-    }),
-
-    // HIERARCHICAL percent-of-parent rollup (region → nation): revenue
-    // tree with each level's share of its parent. Fact aggregates to
-    // nation grain FIRST (one shuffle); the parent-share windows range
-    // over the 25-row nation table, never the fact stream. Dimension
-    // chain broadcast. Integer-cent revenue, shares rounded at output.
-    "q147_hierarchy_rollup" -> ((s, dir) => {
-      val rev = Caches.small(t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")
-          .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))),
-          Seq("o_custkey"))
-        .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey").as("c_nationkey"), col("n_name"),
-            col("n_regionkey"))), Seq("c_nationkey"))
-        .join(broadcast(t(s, dir, "region")
-          .select(col("r_regionkey").as("n_regionkey"), col("r_name"))),
-          Seq("n_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("nation_cents")))
-      val byRegion = Window.partitionBy(col("r_name"))
-      val all = Window.partitionBy()
-      rev.select(col("r_name"), col("n_name"), col("nation_cents"),
-          sum(col("nation_cents")).over(byRegion).as("region_cents"),
-          round(col("nation_cents").cast("double") /
-            sum(col("nation_cents")).over(byRegion), 6).as("pct_of_region"),
-          round(sum(col("nation_cents")).over(byRegion).cast("double") /
-            sum(col("nation_cents")).over(all), 6).as("region_pct_of_total"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // ROLLING DISTINCT USERS (DAU/WAU): daily actives + 7-day rolling
-    // distinct actives. A distinct-over-sliding-window is computed by
-    // EXPLODING each (user, active-day) into the 7 window-end days it
-    // supports, then one countDistinct per day — a 7× fan-out of the
-    // (user, day)-distinct frame (calendar-bounded), never a window
-    // over the raw stream.
-    "q148_rolling_wau" -> ((s, dir) => {
-      val ud = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val dau = ud.groupBy("day").agg(countDistinct(col("user_id"))
-        .as("dau"))
-      val wau = ud
-        .select(col("user_id"), explode(sequence(col("day"),
-          date_add(col("day"), 6), expr("INTERVAL 1 DAY"))).as("day"))
-        .groupBy("day").agg(countDistinct(col("user_id")).as("wau"))
-      dau.join(wau, Seq("day"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("dau"), col("wau"))
-        .orderBy("day")
-    }),
-
-    // FUNCTIONAL-DEPENDENCY DISCOVERY (schema profiling, the q143
-    // family one level up): does det → dep hold? One countDistinct
-    // aggregation per candidate pair — each a single shuffle on the
-    // determinant, violation counts summarized to one report row; the
-    // pair list is metadata-sized, the scans are column-pruned.
-    "q149_fd_discovery" -> ((s, dir) => {
-      def fd(df: DataFrame, det: String, dep: String): DataFrame =
-        df.groupBy(col(det))
-          .agg(countDistinct(col(dep)).as("nd"))
-          .agg(count(lit(1)).as("n_groups"),
-            sum(when(col("nd") > 1, 1L).otherwise(0L)).as("n_violating"))
-          .select(lit(det).as("determinant"), lit(dep).as("dependent"),
-            col("n_groups"), col("n_violating"),
-            (col("n_violating") === 0).cast("long").as("holds"))
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      fd(c, "c_custkey", "c_mktsegment")
-        .unionByName(fd(c, "c_nationkey", "c_mktsegment"))
-        .unionByName(fd(o, "o_orderkey", "o_orderpriority"))
-        .unionByName(fd(o, "o_custkey", "o_orderstatus"))
-        .orderBy("determinant", "dependent")
-    }),
-
-    // FEATURE-STORE BUILD: the per-user wide feature vector a training
-    // pipeline materializes — event-type counts (conditional sums, no
-    // pivot shuffle), exact cent totals, activity span — ONE groupBy
-    // over the stream, map-side partials for every column.
-    "q150_user_features" -> ((s, dir) => {
-      val e = events(s, dir)
-      def n(tpe: String) =
-        sum(when(col("event_type") === tpe, 1L).otherwise(0L))
-          .as(s"n_$tpe")
-      e.groupBy("user_id")
-        .agg(n("click"), n("view"), n("purchase"), n("signup"),
-          n("error"),
-          sum(round(col("value") * 100, 0).cast("long")).as("total_cents"),
-          countDistinct(to_date(col("ts"))).as("active_days"),
-          date_format(min(col("ts")), "yyyy-MM-dd").as("first_day"),
-          date_format(max(col("ts")), "yyyy-MM-dd").as("last_day"))
-        .orderBy("user_id")
-    }),
-
-    // KLL quantile sketch (functions.QuantileSketchAgg) under its
-    // rank-error CONTRACT: the sketch estimate's true rank must lie
-    // within eps*n of the target rank ceil(p*n). The estimate itself is
-    // partition-order-dependent (like every mergeable sketch), so the
-    // oracle row carries only deterministic columns: the probe, the
-    // EXACT quantile (percentile(array(...)) ≡ DuckDB quantile_cont,
-    // the parity q38/q107 already gate — ONE buffer for all probes),
-    // and the boolean bound check. If the sketch ever violates its
-    // eps=0.05 contract (worst-case analytic bound at k=512 is ~1% of n
-    // here), within_eps flips false and the row hash-mismatches — a
-    // driver-visible gate on the approximation, not just on plumbing.
-    "q151_kll_quantile_bound" -> ((s, dir) => {
-      val probes = Seq(1, 5, 25, 50, 75, 90, 99)
-      val eps = 0.05
-      // native TypedImperativeAggregate (KllQuantiles) — same sketch
-      // kernel as the typed Aggregator, minus the per-row encoder round
-      // trip that dominated this query (see KllQuantiles scaladoc)
-      val sk = (c: Column) => graft.functions.KllQuantiles
-        .kllQuantiles(c, 512, probes.map(_ / 100.0))
-      val vals = t(s, dir, "lineitem")
-        .select(col("l_extendedprice").cast("double").as("v"))
-      // exact ground-truth quantiles by bracketed selection
-      // (Selection.exactQuantilesCont, bit-parity with Spark's
-      // percentile): the built-in exact Percentile aggregate hashes
-      // every distinct double (boxed) and sorts the whole domain —
-      // measured 2.7 s of this query at sf0.1 and the wrong shape for
-      // an exact ground truth at corpus scale
-      val exacts = graft.ops.Selection.exactQuantilesCont(
-        vals, col("v"), probes.map(_ / 100.0))
-      val ests = vals.agg(sk(col("v")).as("ests"))
-      // true rank of each estimate: ONE groupless scan carrying the
-      // 7-entry estimate array (broadcast scalar frame) and emitting 7
-      // conditional sums — all map-side codegen. The r13 form exploded
-      // the estimates to 7 rows and crossJoined them back onto the
-      // corpus (7× the rows through a mixed-key hash aggregate,
-      // measured ~2.5 s of the query at sf0.1); the rank counts never
-      // needed a groupBy at all.
-      val counted = vals.crossJoin(broadcast(ests))
-        .agg(array(probes.indices.map(i =>
-            sum(when(col("v") <= element_at(col("ests"), i + 1), 1L)
-              .otherwise(0L))): _*).as("rks"))
-      counted.select(col("rks"), posexplode(lit(probes.toArray)))
-        .join(broadcast(exacts), Seq("pos"))
-        .select(col("col").as("probe_pct"),
-          round(col("exact"), 2).as("exact_q"),
-          (abs(element_at(col("rks"), col("pos") + 1) -
-            ceil(col("col") / lit(100.0) * col("n")))
-            <= lit(eps) * col("n")).as("within_eps"))
-        .orderBy("probe_pct")
-    }),
-
-    // TOKENIZER VOCAB COVERAGE / OOV RATE: the pre-training diagnostic
-    // that decides whether a tokenizer's vocabulary fits a corpus —
-    // top-256 tokens by corpus frequency (total order: count desc,
-    // token asc) become the vocab; per-doc out-of-vocabulary fraction
-    // against it. The vocab is model-sized and BROADCAST; the token
-    // stream joins it map-side, so the only shuffles are the vocab
-    // count and the per-doc groupBy.
-    "q152_vocab_oov" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"), explode_outer(split(normText, " ")).as("w"))
-        .filter(col("w").isNotNull)
-      val vocab = words.groupBy("w").agg(count(lit(1)).as("wc"))
-        .orderBy(col("wc").desc, col("w")).limit(256)
-        .select(col("w"), lit(1).as("in_vocab"))
-      words.join(broadcast(vocab), Seq("w"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
-        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-          round(col("n_oov").cast("double") / col("n_tokens"), 6)
-            .as("oov_rate"))
-        .orderBy("doc_id")
-    }),
-
-    // K-ANONYMITY AUDIT (privacy QA before a dataset release): group by
-    // the quasi-identifier tuple (nation, segment, coarse balance
-    // bucket) and report every group smaller than k=10 — the rows a
-    // release would have to suppress or generalize. Bucket arithmetic
-    // is INTEGER on offset cents (no float floor, no negative-division
-    // ambiguity: both engines truncate toward zero on non-negatives).
-    // One aggregation on the QI tuple; scans pruned to 3 columns.
-    "q153_k_anonymity" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(col("c_nationkey"), col("c_mktsegment"),
-          expr("(cast(round(c_acctbal * 100, 0) as bigint) + 100000)" +
-            " div 100000").as("bal_bucket"))
-        .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
-        .agg(count(lit(1)).as("group_n"))
-        .filter(col("group_n") < 10)
-        .orderBy("c_nationkey", "c_mktsegment", "bal_bucket")
-    }),
-
-    // BENFORD FIRST-DIGIT ANALYSIS (fraud/data-quality screening):
-    // observed first-significant-digit counts of order totals vs the
-    // Benford expectation log10(1+1/d), with the chi-square
-    // contribution per digit. The digit comes from the INTEGER cents
-    // string (no float log10 on data); the nine expected probabilities
-    // are fixed 12-dp literals, so both engines run identical double
-    // arithmetic. One 9-group aggregation; column-pruned scan.
-    "q154_benford" -> ((s, dir) => {
-      val expP = Map(1 -> 0.301029995664, 2 -> 0.176091259056,
-        3 -> 0.124938736608, 4 -> 0.096910013008, 5 -> 0.079181246048,
-        6 -> 0.066946789631, 7 -> 0.057991946978, 8 -> 0.051152522447,
-        9 -> 0.045757490561)
-      val counts = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 0)
-        .select(substring(round(col("o_totalprice") * 100, 0)
-          .cast("long").cast("string"), 1, 1).cast("int").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("obs"))
-      val tot = counts.agg(sum(col("obs")).as("n"))
-      val p = expP.foldLeft(lit(0.0)) { case (acc, (d, v)) =>
-        when(col("digit") === d, lit(v)).otherwise(acc) }
-      counts.crossJoin(broadcast(tot))
-        .select(col("digit"), col("obs"), round(p, 6).as("expected_p"),
-          round((col("obs").cast("double") - col("n").cast("double") * p) *
-            (col("obs").cast("double") - col("n").cast("double") * p) /
-            (col("n").cast("double") * p), 4).as("chi2_term"))
-        .orderBy("digit")
-    }),
-
-    // HHI MARKET CONCENTRATION per segment: Herfindahl–Hirschman index
-    // of customer revenue shares. The share-square sum is computed as
-    // Σc² / (Σc)² over EXACT integer cents (per-customer squares summed
-    // in decimal(38,0) ≡ DuckDB's HUGEINT — order-independent, no
-    // float-addition drift), converted to double only for the final
-    // division. Two aggregations: per-customer cents, then per-segment.
-    "q155_hhi" -> ((s, dir) => {
-      val rev = t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("cents"))
-      val seg = t(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-      rev.join(seg, Seq("o_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("cents")).as("seg_cents"),
-          sum((col("cents") * col("cents")).cast("decimal(38,0)"))
-            .as("sumsq"))
-        .select(col("c_mktsegment"), col("n_customers"), col("seg_cents"),
-          round(col("sumsq").cast("double") /
-            (col("seg_cents").cast("double") *
-              col("seg_cents").cast("double")) * 10000, 4).as("hhi_x10k"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // GAPS-AND-ISLANDS activity streaks: per user, maximal runs of
-    // consecutive active days via the classic day − row_number()
-    // grouping constant — ONE window shuffle on user, two integer
-    // aggregations; no self-join, no calendar explosion. Reports streak
-    // count, longest streak, and the (earliest) start of a longest
-    // streak — ties broken by min date so the row is deterministic.
-    "q156_activity_streaks" -> ((s, dir) => {
-      val ud = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val w = Window.partitionBy("user_id").orderBy("day")
-      val isl = ud
-        .withColumn("grp", date_sub(col("day"), row_number().over(w)))
-        .groupBy("user_id", "grp")
-        .agg(count(lit(1)).as("len"), min(col("day")).as("start"))
-      isl.withColumn("mx", max(col("len")).over(
-          Window.partitionBy("user_id")))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_streaks"),
-          max(col("len")).as("longest"),
-          date_format(min(when(col("len") === col("mx"), col("start"))),
-            "yyyy-MM-dd").as("longest_start"))
-        .orderBy("user_id")
-    }),
-
-    // GROUPED LINEAR REGRESSION, closed form on exact sums: slope /
-    // intercept / R² of price-cents on quantity per return flag. The
-    // five moment sums (Σx, Σy, Σxy, Σx², Σy²) are EXACT integers
-    // (cents; Σy² in decimal(38,0) ≡ HUGEINT), aggregated with map-side
-    // partials in ONE pass — the determinism-safe alternative to
-    // builtin regr_slope's order-dependent double accumulation. The
-    // normal-equation arithmetic then runs on doubles cast from the
-    // same exact integers in the same order on both engines.
-    "q157_grouped_regression" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val sums = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          round(col("l_quantity"), 0).cast("long").as("x"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("y"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum((col("y") * col("y")).cast("decimal(38,0)")).as("syy"))
-      sums
-        .withColumn("num", d(col("n")) * d(col("sxy")) -
-          d(col("sx")) * d(col("sy")))
-        .withColumn("den", d(col("n")) * d(col("sxx")) -
-          d(col("sx")) * d(col("sx")))
-        .withColumn("deny", d(col("n")) * d(col("syy")) -
-          d(col("sy")) * d(col("sy")))
-        .withColumn("slope", col("num") / col("den"))
-        .select(col("l_returnflag"), col("n"),
-          round(col("slope"), 6).as("slope_cents"),
-          round((d(col("sy")) - col("slope") * d(col("sx"))) / d(col("n")),
-            2).as("intercept_cents"),
-          round(col("num") * col("num") / (col("den") * col("deny")), 6)
-            .as("r2"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ROBUST OUTLIER DETECTION via MAD (median absolute deviation):
-    // per event type, med = percentile_disc(0.5), MAD = median of
-    // |v − med|, outliers = |v − med| > 3·MAD. percentile_disc RETURNS
-    // AN ELEMENT (deterministic, unlike interpolating estimators), so
-    // the whole chain is exact; the two medians broadcast back as
-    // model-sized frames — three aggregations, no window over the raw
-    // stream, no sort of the full data.
-    "q158_mad_outliers" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type"), col("value"))
-      val med = ev.groupBy("event_type")
-        .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)")
-          .as("med"))
-      val dev = ev.join(broadcast(med), Seq("event_type"))
-        .withColumn("adev", abs(col("value") - col("med")))
-      val mad = dev.groupBy("event_type")
-        .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY adev)")
-          .as("mad"))
-      dev.join(broadcast(mad), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(max(col("med")), 4).as("med"),
-          round(max(col("mad")), 4).as("mad"),
-          sum((col("adev") > lit(3.0) * col("mad")).cast("long"))
-            .as("n_outliers"))
-        .orderBy("event_type")
-    }),
-
-    // BITMAP-WORD DISTINCT AGGREGATION (roaring-bitmap idea in pure
-    // SQL): distinct users per event type via 63-bit words — bit_or of
-    // (1 << id mod 63) grouped by (type, id div 63), then Σ bit_count.
-    // The bitmap form's shuffle rows are CAPPED at |id-space|/63 per
-    // group regardless of event volume (countDistinct shuffles every
-    // distinct id), and words merge associatively — the same reason
-    // warehouse engines keep bitmap indexes. 63-bit words sidestep
-    // signed-shift overflow on bit 63. Gated against exact
-    // countDistinct in the same row.
-    "q159_bitmap_distinct" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val words = ev.select(col("event_type"),
-          expr("user_id div 63").as("word"),
-          expr("shiftleft(1L, cast(user_id % 63 as int))").as("bitv"))
-        .groupBy("event_type", "word")
-        .agg(expr("bit_or(bitv)").as("bits"))
-      val viaBitmap = words.groupBy("event_type")
-        .agg(expr("sum(bit_count(bits))").as("n_bitmap"),
-          count(lit(1)).as("n_words"))
-      val exact = ev.groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      viaBitmap.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_exact"), col("n_bitmap"),
-          col("n_words"), (col("n_exact") === col("n_bitmap")).as("agree"))
-        .orderBy("event_type")
-    }),
-
-    // ADAMIC–ADAR LINK PREDICTION over the synthetic doc graph (q128's
-    // edge family): common-neighbor scores with hub downweighting —
-    // the graph-ML feature for "which docs should be linked". Degree
-    // cap 64 bounds wedge fan-out (documented recall trade, the
-    // MinHash-maxBucket contract); scores fold in sorted order so the
-    // oracle replays them bit-for-bit.
-    "q160_adamic_adar" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"))
-          .join(tgt, Seq("dst"))
-      val edges = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      graft.ops.Graph.adamicAdar(edges, maxDeg = 64)
-        .orderBy("u", "w")
-    }),
-
-    // K-CORE PEEL (3 rounds, k=3) over the same doc graph: iteratively
-    // drop nodes with degree < k in the surviving subgraph — the
-    // standard dense-subgraph / spam-farm filter. A FIXED round count
-    // makes the operator a pure function of the edge set (the q78/q116
-    // static-unroll gate idiom); convergence to the true k-core is
-    // property-tested in GraphSpec.
-    "q161_kcore" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val tgt = ids.select(col("doc_id").as("dst"))
-      def fam(off: Int, keep: Column): DataFrame =
-        ids.filter(keep)
-          .select(col("doc_id").as("src"), (col("doc_id") + off).as("dst"))
-          .join(tgt, Seq("dst"))
-      val edges = fam(1, col("doc_id") % 10 =!= 9)
-        .unionByName(fam(2, col("doc_id") % 10 < 8))
-        .unionByName(fam(3, col("doc_id") % 10 < 7))
-      graft.ops.Graph.kCorePeel(edges, k = 3, rounds = 3)
-        .orderBy("node")
-    }),
-
-    // WINDOWED DEDUPLICATION (the batch analog of Structured
-    // Streaming's dropDuplicatesWithinWatermark): keep the FIRST event
-    // per (user, type) within each 10-minute tumbling window — the
-    // at-least-once-to-effectively-once compaction every event
-    // pipeline runs. Window id is exact integer microsecond division
-    // (`unix_micros div`); keep-first is one row_number window over
-    // the (user, type, win) shuffle; the report aggregates kept vs
-    // dropped per type.
-    "q162_windowed_dedup" -> ((s, dir) => {
-      val e = events(s, dir)
-        .withColumn("win", expr("unix_micros(ts) div 600000000"))
-      val w = Window.partitionBy("user_id", "event_type", "win")
-        .orderBy(col("ts"), col("event_id"))
-      val kept = e.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      val tot = e.groupBy("event_type").agg(count(lit(1)).as("n_total"))
-      kept.groupBy("event_type")
-        .agg(count(lit(1)).as("n_kept"),
-          countDistinct(col("user_id")).as("n_users"))
-        .join(tot, Seq("event_type"))
-        .select(col("event_type"), col("n_total"), col("n_kept"),
-          (col("n_total") - col("n_kept")).as("n_dropped"),
-          col("n_users"))
-        .orderBy("event_type")
-    }),
-
-    // GROUPED KLL quantile contract (q151 per group): one mergeable
-    // sketch per event type in a single pass — the shape a 100 TB
-    // profiling job actually runs (per-partition/day sketches that
-    // merge upward). Same rank-error gate, exact quantiles from one
-    // percentile(array(...)) buffer per group.
-    "q163_kll_grouped" -> ((s, dir) => {
-      val probes = Seq(25, 50, 75, 90)
-      val eps = 0.05
-      // native form — see q151's note / KllQuantiles scaladoc
-      val sk = (c: Column) => graft.functions.KllQuantiles
-        .kllQuantiles(c, 512, probes.map(_ / 100.0))
-      val vals = events(s, dir)
-        .select(col("event_type"), col("value").cast("double").as("v"))
-      // Measured rejection (r15, verdict item 6): swapping the exact
-      // ground truth to Selection.exactQuantilesContGrouped
-      // (bit-parity pinned by SelectionSpec's grouped differential
-      // test) ran 1.21 -> 2.05 s isolated at sf0.1 — three selection
-      // passes + joins vs ONE grouped agg computing KLL + percentile
-      // + count together, while the per-type value maps stay
-      // memory-resident at every bench SF. The grouped selection
-      // remains the scale path for corpus-sized per-group domains.
-      val est = vals.groupBy("event_type").agg(
-        sk(col("v")).as("ests"),
-        expr(s"percentile(v, array(${probes.map(_ / 100.0).mkString(",")}))")
-          .as("exacts"),
-        count(lit(1)).as("n"))
-      val probed = est.select(col("event_type"), col("ests"),
-          col("exacts"), col("n"), posexplode(lit(probes.toArray)))
-        .select(col("event_type"), col("col").as("probe_pct"),
-          element_at(col("ests"), col("pos") + 1).as("est"),
-          element_at(col("exacts"), col("pos") + 1).as("exact_q"),
-          col("n"))
-      vals.join(broadcast(probed), Seq("event_type"))
-        .groupBy("event_type", "probe_pct", "exact_q", "n")
-        .agg(sum(when(col("v") <= col("est"), 1L).otherwise(0L)).as("rk"))
-        .select(col("event_type"), col("probe_pct"),
-          round(col("exact_q"), 4).as("exact_q"),
-          (abs(col("rk") - ceil(col("probe_pct") / lit(100.0) * col("n")))
-            <= lit(eps) * col("n")).as("within_eps"))
-        .orderBy("event_type", "probe_pct")
-    }),
-
-    // A/B EXPERIMENT READOUT: two-proportion z-test on per-user
-    // conversion (any purchase), cohorts split by user-id parity — the
-    // experiment-analysis primitive. Conversion flags and cohort
-    // counts are EXACT integers from one user-grain aggregation; the
-    // z statistic is a fixed sequence of double ops over those
-    // integers (sqrt is IEEE-exact), so both engines produce the same
-    // bits. No per-event state survives the first groupBy.
-    "q164_ab_test" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      // conversion = heavy purchaser (> 13 purchases, the corpus
-      // median) — a per-user flag with genuine variance in both
-      // cohorts; any-purchase converts at 100% here and degenerates
-      // the pooled variance to zero
-      val perUser = events(s, dir).groupBy("user_id")
-        .agg((sum(when(col("event_type") === "purchase", 1L)
-          .otherwise(0L)) > 13L).cast("long").as("conv"))
-        .withColumn("grp", pmod(col("user_id"), lit(2)))
-      val r = perUser.groupBy("grp")
-        .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
-        .agg(sum(when(col("grp") === 0, col("n"))).as("n_a"),
-          sum(when(col("grp") === 0, col("c"))).as("c_a"),
-          sum(when(col("grp") === 1, col("n"))).as("n_b"),
-          sum(when(col("grp") === 1, col("c"))).as("c_b"))
-      r.withColumn("p_a", d(col("c_a")) / d(col("n_a")))
-        .withColumn("p_b", d(col("c_b")) / d(col("n_b")))
-        .withColumn("p_pool",
-          (d(col("c_a")) + d(col("c_b"))) / (d(col("n_a")) + d(col("n_b"))))
-        .select(col("n_a"), col("c_a"), col("n_b"), col("c_b"),
-          round(col("p_a"), 6).as("p_a"),
-          round(col("p_b"), 6).as("p_b"),
-          round((col("p_a") - col("p_b")) /
-            sqrt(col("p_pool") * (lit(1.0) - col("p_pool")) *
-              (lit(1.0) / d(col("n_a")) + lit(1.0) / d(col("n_b")))), 4)
-            .as("z"))
-    }),
-
-    // WINSORIZATION (robust feature preprocessing): clip each event
-    // value at its type's exact [p1, p99], report clip counts and the
-    // clipped total. Bounds come from ONE percentile(array(...)) agg
-    // per type (model-sized, broadcast back — the q107 idiom); the
-    // clipped totals are EXACT integer cents of identical doubles, so
-    // no float-sum drift. Two aggregations + a map-side clamp.
-    "q165_winsorize" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("event_type"), col("value").cast("double").as("v"))
-      val bounds = ev.groupBy("event_type")
-        .agg(expr("percentile(v, array(0.01, 0.99))").as("bs"))
-        .select(col("event_type"), element_at(col("bs"), 1).as("lo"),
-          element_at(col("bs"), 2).as("hi"))
-      ev.join(broadcast(bounds), Seq("event_type"))
-        .withColumn("cv", least(greatest(col("v"), col("lo")), col("hi")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum((col("v") < col("lo")).cast("long")).as("n_clipped_lo"),
-          sum((col("v") > col("hi")).cast("long")).as("n_clipped_hi"),
-          round(max(col("lo")), 4).as("p01"),
-          round(max(col("hi")), 4).as("p99"),
-          sum(round(col("cv") * 100, 0).cast("long")).as("clipped_cents"))
-        .orderBy("event_type")
-    }),
-
-    // JOIN-FANOUT ESTIMATOR (the pre-flight skew diagnostic a 100 TB
-    // join needs BEFORE running): per-key multiplicities on both sides
-    // of orders ⋈ lineitem, estimated output = Σ cnt_l·cnt_r computed
-    // from the two count tables (metadata-sized vs the join itself),
-    // plus the top-10 blowup keys. Two count aggs + one key-equality
-    // join of count tables + a rank window — never the data join.
-    "q166_join_fanout" -> ((s, dir) => {
-      val lo = t(s, dir, "orders").groupBy(col("o_orderkey").as("k"))
-        .agg(count(lit(1)).as("cl"))
-      val rl = t(s, dir, "lineitem").groupBy(col("l_orderkey").as("k"))
-        .agg(count(lit(1)).as("cr"))
-      val prod = lo.join(rl, Seq("k"))
-        .select(col("k"), col("cl"), col("cr"),
-          (col("cl") * col("cr")).as("pairs"))
-      val tot = prod.agg(sum(col("pairs")).as("total_pairs"),
-        count(lit(1)).as("n_keys"))
-      prod.crossJoin(broadcast(tot))
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("pairs").desc, col("k"))))
-        .filter(col("rn") <= 10)
-        .select(col("rn"), col("k"), col("cl"), col("cr"), col("pairs"),
-          col("total_pairs"),
-          round(col("pairs").cast("double") * col("n_keys") /
-            col("total_pairs"), 4).as("x_avg"))
-        .orderBy("rn")
-    }),
-
-    // DATA-CONTRACT QUARANTINE ROUTING (row-level DQ, q111's audit one
-    // level down): each row is checked against the policy rules, failing
-    // rows are routed to quarantine with a deterministic reason string,
-    // and the report counts each distinct failure combination. One scan,
-    // map-side rule evaluation (the reasons array is a filter over a
-    // literal array), one count aggregation on the reason string.
-    "q167_dq_quarantine" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val checks = Seq(
-        ("min_value", col("o_totalprice") >= 5000.0),
-        ("known_priority", col("o_orderpriority")
-          .isin("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
-            "5-LOW")),
-        ("stale_open", !(col("o_orderstatus") === "O" &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))))
-      val reasons = array(checks.map { case (name, ok) =>
-        when(!ok, lit(name)).otherwise(lit(null).cast("string"))
-      }: _*)
-      o.withColumn("reasons",
-          concat_ws(",", filter(reasons, r => r.isNotNull)))
-        .filter(col("reasons") =!= "")
-        .groupBy("reasons")
-        .agg(count(lit(1)).as("n_quarantined"),
-          min(col("o_orderkey")).as("first_key"))
-        .orderBy("reasons")
-    }),
-
-    // POPULATION STABILITY INDEX (feature-drift monitoring between the
-    // first and second half of the time span): expected bins = period-A
-    // deciles (exact percentile boundaries, broadcast — the q107
-    // idiom); PSI = Σ (p_B − p_A)·ln(p_B/p_A) with +0.5 count smoothing
-    // so empty bins stay finite. The time split is exact integer
-    // microseconds; bin counts are exact integers; doubles enter only
-    // in the final fixed op sequence (ln parity is gated since q53).
-    // One bounds agg + one (type, half, bin) count — two shuffles.
-    "q168_psi_drift" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val ev = events(s, dir).select(col("event_type"),
-        col("value").cast("double").as("v"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-        .select(expr("(mn + mx) div 2").as("mid"))
-      val halved = ev.crossJoin(broadcast(span))
-        .withColumn("is_a", col("us") < col("mid"))
-      val binsA = halved.filter(col("is_a")).groupBy("event_type")
-        .agg(expr("percentile(v, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-          .as("bs"))
-      val binned = halved.join(broadcast(binsA), Seq("event_type"))
-        .select(col("event_type"), col("is_a"),
-          (lit(1) + size(filter(col("bs"), b => col("v") > b))).as("bin"))
-        .groupBy("event_type", "bin")
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
-          sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
-      val tot = binned.groupBy("event_type")
-        .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      binned.join(broadcast(tot), Seq("event_type"))
-        .withColumn("pa", (d(col("ca")) + lit(0.5)) / (d(col("na")) + lit(5.0)))
-        .withColumn("pb", (d(col("cb")) + lit(0.5)) / (d(col("nb")) + lit(5.0)))
-        .withColumn("term", (col("pb") - col("pa")) * log(col("pb") / col("pa")))
-        .groupBy("event_type")
-        .agg(max(col("na")).as("n_a"), max(col("nb")).as("n_b"),
-          round(ssum(collect_list(col("term"))), 6).as("psi"))
-        .orderBy("event_type")
-    }),
-
-    // CONSISTENT-HASH SHARD ASSIGNMENT + REBALANCE DIFF (the
-    // partitioning-design primitive behind every distributed KV /
-    // shuffle service): a 16-vnode md5 ring per shard, keys map to
-    // their ring successor. The gate PROVES the minimal-movement
-    // property in data: growing 8→9 shards, every moved key lands on
-    // the NEW shard (n_moved_elsewhere = 0 in every row) and ~1/9 of
-    // keys move. Rings are 128/144-entry broadcast arrays; assignment
-    // is one map-side array probe per key — no shuffle beyond the
-    // report aggregation.
-    "q169_consistent_hash" -> ((s, dir) => {
-      def ring(n: Int): DataFrame = {
-        val vn = (0 until n).flatMap(sh => (0 until 16).map(r => (sh, r)))
-        val s0 = s
-        import s0.implicits._
-        vn.toDF("sh", "r")
-          .select((TF.md5Hash48(concat(col("sh").cast("string"), lit("/"),
-            col("r").cast("string"))) * 64 + col("sh")).as("c"))
-          .agg(sort_array(collect_list(col("c"))).as("ring"))
-      }
-      def succ(ringCol: Column, k: Column): Column =
-        pmod(coalesce(array_min(filter(ringCol, x => x > k)),
-          array_min(ringCol)), lit(64))
-      val keys = t(s, dir, "customer")
-        .select(col("c_custkey").as("key"),
-          (TF.md5Hash48(col("c_custkey").cast("string")) * 64 + 63)
-            .as("k64"))
-      keys
-        .crossJoin(broadcast(ring(8).withColumnRenamed("ring", "r8")))
-        .crossJoin(broadcast(ring(9).withColumnRenamed("ring", "r9")))
-        .select(col("key"), succ(col("r8"), col("k64")).as("s8"),
-          succ(col("r9"), col("k64")).as("s9"))
-        .groupBy(col("s8").as("shard"))
-        .agg(count(lit(1)).as("n_keys"),
-          sum((col("s9") =!= col("s8")).cast("long")).as("n_moved"),
-          sum((col("s9") =!= col("s8") && col("s9") =!= 8)
-            .cast("long")).as("n_moved_elsewhere"))
-        .withColumn("frac_moved",
-          round(col("n_moved").cast("double") / col("n_keys"), 4))
-        .orderBy("shard")
-    }),
-
-    // DAY-OF-WEEK SEASONALITY INDEX + residual spike counts (the
-    // decomposition-lite drift/seasonality profile): per (type, dow)
-    // mean vs overall mean from EXACT integer cents, residual spikes
-    // detected with pure integer cross-multiplication
-    // (cents·n_dow > 2·cents_dow ⇔ value > 2·dow-mean — no division,
-    // no float compare). Engine-neutral dow via days-since-a-known-
-    // Monday mod 7 (the q142 gotcha). Two aggregations + one broadcast
-    // join back.
-    "q170_seasonality" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val ev = events(s, dir).select(col("event_type"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        expr("(datediff(to_date(ts), date'1970-01-05') % 7 + 7) % 7")
-          .as("dow"))
-      val byDow = ev.groupBy("event_type", "dow")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cd"))
-      val tot = ev.groupBy("event_type")
-        .agg(count(lit(1)).as("nt"), sum(col("cents")).as("ct"))
-      val spikes = ev.join(broadcast(byDow), Seq("event_type", "dow"))
-        .filter(col("cents") * col("n") > lit(2) * col("cd"))
-        .groupBy("event_type", "dow")
-        .agg(count(lit(1)).as("n_spikes"))
-      byDow.join(broadcast(tot), Seq("event_type"))
-        .join(spikes, Seq("event_type", "dow"), "left")
-        .select(col("event_type"), col("dow"), col("n"),
-          round(d(col("cd")) / d(col("n")) / 100.0, 4).as("mean_val"),
-          round((d(col("cd")) / d(col("n"))) /
-            (d(col("ct")) / d(col("nt"))), 4).as("seasonal_index"),
-          coalesce(col("n_spikes"), lit(0L)).as("n_spikes"))
-        .orderBy("event_type", "dow")
-    }),
-
-    // GINI CONCENTRATION INDEX per market segment (inequality profiling
-    // — the "is this key space skewed?" diagnostic at portfolio level):
-    // G = (2·Σ rᵢxᵢ − (n+1)·Σx) / (n·Σx) over ascending-ranked exact
-    // cents. One per-segment rank window (distributed sort, bounded by
-    // segment size) + one aggregation; every sum is DECIMAL(38,0) so
-    // Σ r·x cannot overflow at any scale — doubles enter only in the
-    // single final division (same exact integer→double rounding in both
-    // engines).
-    "q171_gini" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 0)
-        .select(col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100, 0).cast("decimal(19,0)").as("cents"),
-          col("c_custkey"))
-      val ranked = c.withColumn("rk", row_number().over(
-        Window.partitionBy("seg").orderBy(col("cents"), col("c_custkey")))
-        .cast("decimal(19,0)"))
-      ranked.groupBy("seg")
-        .agg(count(lit(1)).as("n"),
-          sum(col("cents")).as("tot"),
-          sum(col("rk") * col("cents")).as("rx"))
-        .select(col("seg"), col("n"),
-          round(col("tot").cast("double") / 100.0, 2).as("total_bal"),
-          round((lit(2) * col("rx") - (col("n") + lit(1)) * col("tot"))
-            .cast("double") /
-            (col("n") * col("tot")).cast("double"), 6).as("gini"))
-        .orderBy("seg")
-    }),
-
-    // PARETO-FRONTIER (skyline) of parts — minimize retail price,
-    // maximize size — computed scale-first: phase 1 prunes map-side
-    // against a broadcast per-price-decile running-max-size table (a
-    // row below an earlier bucket's max is strictly dominated; survivors
-    // ≈ frontier + bucket-local noise), phase 2 runs the exact
-    // keep-first skyline window on the pruned sliver only, so the
-    // global ORDER BY window never sees the full table.
-    "q172_skyline" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
-      val bounds = p.agg(expr(
-        "percentile(p_retailprice, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("bs"))
-      val bucketed = p.crossJoin(broadcast(bounds))
-        .withColumn("bk",
-          lit(1) + size(filter(col("bs"), b => col("p_retailprice") > b)))
-        .drop("bs")
-      val bmax = bucketed.groupBy("bk")
-        .agg(max(col("p_size")).as("bmx"))
-        .withColumn("prevmx", max(col("bmx")).over(
-          Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)))
-        .select("bk", "prevmx")
-      val pruned = bucketed.join(broadcast(bmax), Seq("bk"))
-        .filter(col("prevmx").isNull || col("p_size") >= col("prevmx"))
-      val w = Window.orderBy(col("p_retailprice"), col("p_size").desc,
-        col("p_partkey")).rowsBetween(Window.unboundedPreceding, -1)
-      pruned.withColumn("mx", max(col("p_size")).over(w))
-        .filter(col("mx").isNull || col("p_size") > col("mx"))
-        .select(col("p_partkey"), round(col("p_retailprice"), 2)
-          .as("price"), col("p_size"))
-        .orderBy("p_partkey")
-    }),
-
-    // GAPS-AND-ISLANDS interval merge (coverage analysis over shipment
-    // windows): per supplier, each lineitem covers
-    // [shipdate, shipdate + (qty%7+1) days]; overlapping/touching
-    // intervals merge into islands (new island ⟺ start > running max
-    // end over the per-supplier date order). One window shuffle
-    // partitioned by supplier + one aggregation — no self-join, no
-    // interval cross product.
-    "q173_islands" -> ((s, dir) => {
-      val iv = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("supp"),
-          to_date(col("l_shipdate")).as("st"),
-          date_add(to_date(col("l_shipdate")),
-            pmod(col("l_quantity").cast("int"), lit(7)) + lit(1)).as("en"),
-          col("l_orderkey"), col("l_linenumber"))
-      val ord = Window.partitionBy("supp")
-        .orderBy(col("st"), col("en"), col("l_orderkey"), col("l_linenumber"))
-      val flagged = iv
-        .withColumn("pmax", max(col("en")).over(
-          ord.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("brk",
-          when(col("pmax").isNull || col("st") > col("pmax"), 1L)
-            .otherwise(0L))
-        .withColumn("isl", sum(col("brk")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-      val islands = flagged.groupBy(col("supp"), col("isl"))
-        .agg(min(col("st")).as("ist"), max(col("en")).as("ien"),
-          count(lit(1)).as("nv"))
-      val gapped = islands.withColumn("pend", lag(col("ien"), 1).over(
-        Window.partitionBy("supp").orderBy("isl")))
-      gapped.groupBy("supp")
-        .agg(count(lit(1)).as("n_islands"),
-          sum(datediff(col("ien"), col("ist"))).as("covered_days"),
-          max(datediff(col("ien"), col("ist"))).cast("long")
-            .as("longest_island"),
-          coalesce(max(datediff(col("ist"), col("pend"))), lit(0))
-            .cast("long").as("max_gap"),
-          max(col("nv")).as("busiest_island"))
-        .orderBy("supp")
-    }),
-
-    // LARGEST-REMAINDER PRORATION (exact integer allocation — the
-    // budget/quota split every billing warehouse needs): a fixed
-    // 10,000,000-cent budget per nation is distributed across its
-    // positive-balance customers proportional to balance, floor-divided,
-    // then the leftover cents go to the largest remainders (tie → lowest
-    // custkey). The gate PROVES Σ alloc == budget in every nation row.
-    // All arithmetic is integer (div/mod); one agg + one broadcast join
-    // + one per-nation rank window.
-    "q174_proration" -> ((s, dir) => {
-      val budget = 10000000L
-      val w = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 0)
-        .select(col("c_nationkey").as("nat"), col("c_custkey"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("wt"))
-      val tot = w.groupBy("nat").agg(sum(col("wt")).as("wtot"))
-      val based = w.join(broadcast(tot), Seq("nat"))
-        .withColumn("base", expr(s"($budget * wt) div wtot"))
-        .withColumn("rem", expr(s"($budget * wt) % wtot"))
-      val extra = based.groupBy("nat")
-        .agg(sum(col("base")).as("bsum"))
-        .select(col("nat"), (lit(budget) - col("bsum")).as("n_extra"))
-      based.join(broadcast(extra), Seq("nat"))
-        .withColumn("rk", row_number().over(Window.partitionBy("nat")
-          .orderBy(col("rem").desc, col("c_custkey"))))
-        .withColumn("alloc",
-          col("base") + when(col("rk") <= col("n_extra"), 1L).otherwise(0L))
-        .groupBy("nat")
-        .agg(count(lit(1)).as("n_recipients"),
-          sum(col("alloc")).as("total_alloc"),
-          max(col("n_extra")).as("n_bumped"),
-          max(col("alloc")).as("max_alloc"),
-          min(col("alloc")).as("min_alloc"))
-        .orderBy("nat")
-    }),
-
-    // AUTOCORRELATION FUNCTION of the daily-revenue series at lags 1–7
-    // (the seasonality/persistence diagnostic behind forecast features):
-    // the full-size table collapses to one row per calendar day FIRST
-    // (bounded by the date span, not the data), so the lag windows and
-    // Pearson terms run on a metadata-sized series. Moment sums are
-    // DECIMAL(38,0)-exact; doubles appear only in the final fixed
-    // formula.
-    "q175_acf" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val daily = t(s, dir, "lineitem")
-        .groupBy(to_date(col("l_shipdate")).as("day"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents"))
-      val wd = Window.orderBy("day")
-      val lagged = daily.select(
-        Seq(col("day"), col("cents")) ++
-          (1 to 7).map(l => lag(col("cents"), l).over(wd).as(s"x$l")): _*)
-      val pairs = lagged.selectExpr("cents",
-        "stack(7, 1L,x1, 2L,x2, 3L,x3, 4L,x4, 5L,x5, 6L,x6, 7L,x7)" +
-          " as (lg, x)")
-        .filter(col("x").isNotNull)
-        .select(col("lg"), col("cents").cast("decimal(19,0)").as("y"),
-          col("x").cast("decimal(19,0)").as("x"))
-      pairs.groupBy("lg")
-        .agg(count(lit(1)).cast("decimal(19,0)").as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .select(col("lg"), col("n").cast("long").as("n_pairs"),
-          (round((d(col("n") * col("sxy") - col("sx") * col("sy"))) /
-            sqrt(d(col("n") * col("sxx") - col("sx") * col("sx")) *
-              d(col("n") * col("syy") - col("sy") * col("sy"))), 4)
-            + 0.0).as("acf"))
-        .orderBy("lg")
-    }),
-
-    // KMV θ-SKETCH SET ALGEBRA (pairwise audience overlap without a
-    // pairwise distinct-count): per event-type the K=64 smallest
-    // distinct user-hashes form the sketch; for each type pair the
-    // union sketch's θ estimates |A∪B| and the common-hash fraction
-    // scales it to |A∩B| (Beyer et al., SIGMOD'07). The gate carries
-    // BOTH the estimate and the exact intersection — the estimate is
-    // deterministic (md5 48-bit), so it hash-matches, and `ok` PROVES
-    // the error bound holds in-data. Sketch build is one rank window
-    // over distinct hashes; pair stage touches K-sized sketches only.
-    "q176_kmv_intersection" -> ((s, dir) => {
-      val K = 64
-      val dh = events(s, dir)
-        .select(col("event_type").as("ty"),
-          TF.md5Hash48(col("user_id").cast("string")).as("h"))
-        .distinct()
-      val types = dh.select("ty").distinct()
-      // broadcast the pair build: a plain non-equi self-join would plan
-      // as a CartesianProduct (both sides shuffled) — ContractSpec gate
-      val tagged = Caches.small(types.join(
-          broadcast(Caches.small(types.select(col("ty").as("ty2")))),
-          col("ty") < col("ty2"))
-        .select(col("ty").as("ta"), col("ty2").as("tb")))
-      val memb = dh.join(broadcast(tagged),
-          col("ty") === col("ta") || col("ty") === col("tb"))
-        .groupBy("ta", "tb", "h")
-        .agg(max(when(col("ty") === col("ta"), 1).otherwise(0)).as("ina"),
-          max(when(col("ty") === col("tb"), 1).otherwise(0)).as("inb"))
-      val unionTop = memb.withColumn("rn", row_number().over(
-          Window.partitionBy("ta", "tb").orderBy("h")))
-        .filter(col("rn") <= K)
-      val sk = unionTop.groupBy("ta", "tb")
-        .agg(max(col("h")).as("theta"), count(lit(1)).as("k"),
-          sum(col("ina") * col("inb")).as("common"))
-        .withColumn("est_union",
-          when(col("k") < K, col("k").cast("double"))
-            .otherwise(lit((K - 1).toDouble) * lit(math.pow(2, 48)) /
-              col("theta").cast("double")))
-        .withColumn("est_inter", col("common").cast("double") / col("k")
-          * col("est_union"))
-      val exact = memb.filter(col("ina") === 1 && col("inb") === 1)
-        .groupBy("ta", "tb").agg(count(lit(1)).as("exact_inter"))
-      sk.join(exact, Seq("ta", "tb"), "left")
-        .select(col("ta"), col("tb"),
-          coalesce(col("exact_inter"), lit(0L)).as("exact_inter"),
-          col("common"), round(col("est_inter"), 1).as("est_inter"),
-          (abs(col("est_inter") -
-            coalesce(col("exact_inter"), lit(0L)).cast("double")) <=
-            lit(0.25) * coalesce(col("exact_inter"), lit(0L)) + lit(50.0))
-            .as("ok"))
-        .orderBy("ta", "tb")
-    }),
-
-    // TRUNCATED EWMA SMOOTHING of the per-type daily series (the
-    // forecast-feature primitive): the event stream collapses to one
-    // row per (type, day) FIRST — the series is bounded by the
-    // calendar, not the data — then a 30-step exponential window
-    // (α=0.25) runs as an index-range self-join on the tiny series.
-    // Weights are fixed powers; both engines fold the weighted terms in
-    // ascending sorted order (sorted_sum_d ≡ list_sum∘list_sort), so
-    // the double summation is order-deterministic.
-    "q177_ewma" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-        .withColumn("t", row_number().over(
-          Window.partitionBy("ty").orderBy("day")).cast("long"))
-      val a = daily.select(col("ty"), col("day"), col("t"))
-      val b = daily.select(col("ty").as("ty2"), col("t").as("j"),
-        col("cents"))
-      a.join(b, col("ty") === col("ty2") &&
-          col("j").between(col("t") - 29, col("t")))
-        .withColumn("w", pow(lit(0.75), (col("t") - col("j")).cast("double")))
-        .groupBy(col("ty"), col("day"))
-        .agg(count(lit(1)).as("n_window"),
-          (round(ssum(collect_list(col("cents").cast("double") * col("w")))
-            / ssum(collect_list(col("w"))) / 100.0, 4) + 0.0).as("ewma"))
-        .select(col("ty"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n_window"), col("ewma"))
-        .orderBy("ty", "day")
-    }),
-
-    // MAXIMUM DRAWDOWN per user over a signed running P&L (risk
-    // analytics on event streams): deltas are exact cents signed by
-    // event-id parity; running sum, running peak, and drawdown are
-    // three frames over ONE per-user window sort; the report row is
-    // the argmax-drawdown row picked by a deterministic rank — one
-    // shuffle total, no self-join, all arithmetic integer until the
-    // final /100 display division.
-    "q178_drawdown" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("ts"),
-        col("event_id"),
-        (when(col("event_id") % 2 === 0, 1L).otherwise(-1L) *
-          round(col("value") * 100, 0).cast("long")).as("delta"))
-      val ord = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-      val run = ord.rowsBetween(Window.unboundedPreceding, 0)
-      val full = Window.partitionBy("user_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      ev.withColumn("cum", sum(col("delta")).over(run))
-        .withColumn("peak", max(col("cum")).over(run))
-        .withColumn("dd", col("peak") - col("cum"))
-        .withColumn("final_cents", sum(col("delta")).over(full))
-        .withColumn("n_events", count(lit(1)).over(full))
-        .withColumn("rn", row_number().over(Window.partitionBy("user_id")
-          .orderBy(col("dd").desc, col("ts"), col("event_id"))))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("n_events"),
-          round(col("final_cents").cast("double") / 100.0, 2).as("final_pnl"),
-          round(col("dd").cast("double") / 100.0, 2).as("max_drawdown"),
-          date_format(col("ts"), "yyyy-MM-dd").as("trough_day"))
-        .orderBy("user_id")
-    }),
-
-    // MODE PER GROUP with deterministic tie-break (the categorical
-    // imputation/profiling primitive): value-level count, then a
-    // keep-first rank (count desc, value asc) — two key-equality
-    // shuffles, the second over group×distinct-value cardinality only.
-    "q179_mode" -> ((s, dir) => {
-      val vc = t(s, dir, "documents")
-        .groupBy(col("lang"), col("source"), col("n_chars"))
-        .agg(count(lit(1)).as("cnt"))
-      vc.withColumn("n_distinct_vals", count(lit(1)).over(
-          Window.partitionBy("lang", "source")
-            .rowsBetween(Window.unboundedPreceding,
-              Window.unboundedFollowing)))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("lang", "source")
-            .orderBy(col("cnt").desc, col("n_chars"))))
-        .filter(col("rn") === 1)
-        .select(col("lang"), col("source"), col("n_chars").as("mode_chars"),
-          col("cnt").as("mode_cnt"), col("n_distinct_vals"))
-        .orderBy("lang", "source")
-    }),
-
-    // CHI-SQUARE TEST OF INDEPENDENCE (event-type × day-of-week — the
-    // categorical drift test beside q164's z-test and q168's PSI): the
-    // full contingency grid is materialized (margin × margin cross of
-    // two metadata-sized frames, zero-filled), expected counts come
-    // from exact integer margins, and the global statistic is a
-    // sorted-order fold so the double sum is engine-deterministic.
-    "q180_chisq" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val ev = events(s, dir).select(col("event_type").as("ty"),
-        expr("(datediff(to_date(ts), date'1970-01-05') % 7 + 7) % 7")
-          .as("dow"))
-      val obs = ev.groupBy("ty", "dow").agg(count(lit(1)).as("o"))
-      val rowt = obs.groupBy("ty").agg(sum(col("o")).as("rt"))
-      val colt = Caches.small(obs.groupBy("dow").agg(sum(col("o")).as("ct")))
-      val tot = obs.agg(sum(col("o")).as("n"), count(lit(1)).as("ncells"),
-        countDistinct(col("ty")).as("nr"), countDistinct(col("dow")).as("nc"))
-      val grid = rowt.crossJoin(broadcast(colt))
-        .join(obs, Seq("ty", "dow"), "left")
-        .withColumn("o", coalesce(col("o"), lit(0L)))
-        .crossJoin(broadcast(tot))
-        .withColumn("e", d(col("rt")) * d(col("ct")) / d(col("n")))
-        .withColumn("contrib",
-          (d(col("o")) - col("e")) * (d(col("o")) - col("e")) / col("e"))
-      val chi2 = grid.agg(
-        ssum(collect_list(col("contrib"))).as("stat"),
-        max((col("nr") - 1) * (col("nc") - 1)).as("dof"))
-      grid.crossJoin(broadcast(chi2))
-        .select(col("ty"), col("dow"), col("o"),
-          round(col("e"), 4).as("expected"),
-          round(col("contrib"), 6).as("contrib"),
-          round(col("stat"), 6).as("chi2_total"), col("dof"))
-        .orderBy("ty", "dow")
-    }),
-
-    // LEAVE-ONE-OUT TARGET ENCODING (the leakage-safe categorical
-    // encoder for ML feature prep): encode mktsegment by the mean
-    // balance of the OTHER members — (Σseg − xᵢ)/(nseg − 1) from exact
-    // integer cents, group sums broadcast back, all per-row math
-    // map-side. Singleton groups fall back to the global LOO mean.
-    "q181_target_encoding" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      val segs = c.groupBy("seg")
-        .agg(sum(col("cents")).as("ssum"), count(lit(1)).as("sn"))
-      val glob = c.agg(sum(col("cents")).as("gsum"),
-        count(lit(1)).as("gn"))
-      c.join(broadcast(segs), Seq("seg")).crossJoin(broadcast(glob))
-        .select(col("c_custkey"), col("seg"),
-          round(when(col("sn") > 1,
-            (col("ssum") - col("cents")).cast("double") /
-              (col("sn") - 1).cast("double"))
-            .otherwise((col("gsum") - col("cents")).cast("double") /
-              (col("gn") - 1).cast("double")) / 100.0, 4).as("loo_mean"))
-        .orderBy("c_custkey")
-    }),
-
-    // LORENZ CURVE DECILES (the curve under q171's Gini): per-segment
-    // ascending rank → exact integer decile id ⌈10·rk/n⌉ → decile
-    // balance shares and the cumulative share curve. One distributed
-    // per-segment sort, one decile aggregation, one 10-row window.
-    "q182_lorenz" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 0)
-        .select(col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("cents"),
-          col("c_custkey"))
-      val ranked = c
-        .withColumn("rk", row_number().over(Window.partitionBy("seg")
-          .orderBy(col("cents"), col("c_custkey"))))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("seg")
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-        .withColumn("dec", expr("(10 * rk + n - 1) div n"))
-      val byDec = ranked.groupBy("seg", "dec")
-        .agg(count(lit(1)).as("n_members"), sum(col("cents")).as("dc"))
-      val tot = byDec.groupBy("seg").agg(sum(col("dc")).as("tc"))
-      byDec.join(broadcast(tot), Seq("seg"))
-        .withColumn("cum", sum(col("dc")).over(Window.partitionBy("seg")
-          .orderBy("dec").rowsBetween(Window.unboundedPreceding, 0)))
-        .select(col("seg"), col("dec"), col("n_members"),
-          round(col("dc").cast("double") / col("tc").cast("double"), 6)
-            .as("share"),
-          round(col("cum").cast("double") / col("tc").cast("double"), 6)
-            .as("cum_share"))
-        .orderBy("seg", "dec")
-    }),
-
-    // GOOD–TURING FREQUENCY SMOOTHING + Chao1 vocabulary estimate (the
-    // "how much vocabulary haven't we seen?" diagnostic for corpus
-    // coverage): exact token frequencies → frequency-of-frequencies →
-    // c* = (c+1)·N_{c+1}/N_c for c ≤ 10 via one lead window over the
-    // ≤10-row fof table; the Chao1 richness estimate D + N₁²/(2N₂) and
-    // the unseen-mass estimate N₁/N ride on every row. Two exact-count
-    // aggregations; doubles only in the final display divisions.
-    "q183_good_turing" -> ((s, dir) => {
-      // Trigram shingles WITH multiplicity (no array_distinct — GT
-      // smooths occurrence counts); unigrams are useless here (the
-      // synthetic vocabulary has no hapaxes) but 3-grams are Zipfian.
-      val toks = t(s, dir, "documents")
-        .select(split(TF.normalizeText(col("text")), " ").as("ts"))
-      val words = toks.select(explode(transform(
-        when(size(col("ts")) >= 3, sequence(lit(1), size(col("ts")) - 2))
-          .otherwise(array().cast("array<int>")),
-        i => concat_ws(" ", element_at(col("ts"), i),
-          element_at(col("ts"), i + 1), element_at(col("ts"), i + 2))))
-        .as("w"))
-      val freq = words.groupBy("w").agg(count(lit(1)).as("c"))
-      val fof = freq.groupBy("c").agg(count(lit(1)).as("nc"))
-      val stats = fof.agg(sum(col("nc")).as("d_obs"),
-        sum(col("c") * col("nc")).as("n_tokens"),
-        max(when(col("c") === 1, col("nc"))).as("n1"),
-        max(when(col("c") === 2, col("nc"))).as("n2"))
-      // fof is a VALUE grain (distinct counts — grows with the corpus
-      // under Zipf): rank it with the two-phase numberRows instead of a
-      // single-partition global window, then recover lead(nc) for the
-      // kept c ≤ 10 rows by a rank-shift self-join of the 11-row head
-      // (row rn's successor is row rn+1 — c is distinct, so the
-      // two-phase rank equals the global row_number exactly).
-      val ranked = Dedup.numberRows(fof, col("c"), "rn")
-      val head11 = ranked.filter(col("rn") <= 11)
-      val lead1 = head11.select((col("rn") - 1).as("rn"),
-        col("nc").as("nc1"))
-      head11.filter(col("rn") <= 10)
-        .join(broadcast(lead1), Seq("rn"), "left")
-        .crossJoin(broadcast(stats))
-        .select(col("c"), col("nc"),
-          round((col("c") + 1).cast("double") * col("nc1") / col("nc"), 4)
-            .as("c_star"),
-          col("d_obs"), col("n_tokens"),
-          round(col("n1").cast("double") / col("n_tokens"), 6)
-            .as("p_unseen"),
-          round(col("d_obs") + col("n1").cast("double") *
-            col("n1") / (lit(2.0) * col("n2")), 2).as("chao1"))
-        .orderBy("c")
-    }),
-
-    // HASH-BASED POISSON BOOTSTRAP (the single-pass confidence-interval
-    // technique for datasets too big to resample): replicate r weights
-    // each order by md5(key:r) mod 3 ∈ {0,1,2} (E=1, deterministic —
-    // no RNG), so all 64 replicate means come out of ONE scan with
-    // map-side partial aggregation to 64 groups. Integer-cent sums;
-    // the rank column reads the CI straight off the sorted replicates.
-    "q184_bootstrap" -> ((s, dir) => {
-      // 48 replicates from TWO md5 calls per row: base-3 digits (trits)
-      // of each 48-bit hash give 24 near-uniform mod-3 weights apiece
-      // (bias of trit r is ~3^r/2^48 ≤ 4e-8 for r < 24) — 24× fewer
-      // hash evaluations than one md5 per (row, replicate)
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
-          TF.md5Hash48(concat(lit("b1:"), col("o_orderkey"))).as("h1"),
-          TF.md5Hash48(concat(lit("b2:"), col("o_orderkey"))).as("h2"))
-      val reps = o.select(col("o_orderkey"), col("cents"),
-          col("h1"), col("h2"),
-          explode(sequence(lit(0), lit(47))).as("rep"))
-        .withColumn("w", expr(
-          "pmod((if(rep < 24, h1, h2) div " +
-            "cast(pow(3, rep % 24) as long)) , 3)"))
-      Caches.small(reps.groupBy("rep")
-          .agg(sum(col("w")).as("n_eff"),
-            sum(col("w") * col("cents")).as("wsum"))
-          .withColumn("mean_price", round(col("wsum").cast("double") /
-            col("n_eff").cast("double") / 100.0, 4)))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("mean_price"), col("rep"))))
-        .select(col("rk"), col("rep"), col("n_eff"), col("mean_price"))
-        .orderBy("rk")
-    }),
-
-    // NEAREST-HUB GEO ASSIGNMENT + haversine distance (the geospatial
-    // partitioning primitive): deterministic synthetic coordinates
-    // (exact modular decimals — identical doubles in both engines),
-    // nearest of 25 broadcast hubs chosen by EXACT squared-degree
-    // arithmetic (argmin never depends on libm), haversine computed
-    // once per row for the chosen hub only, rounded for display. One
-    // broadcast join, map-side math, one aggregation for the report.
-    "q185_geo_hubs" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") * 37547 % 17000) / 100.0 - 85.0).as("lat"),
-        ((col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).as("lon"))
-      val hubs = Caches.small(
-        t(s, dir, "nation").select(col("n_nationkey").as("hub"),
-          ((col("n_nationkey") * 6151 % 17000) / 100.0 - 85.0).as("hlat"),
-          ((col("n_nationkey") * 2741 % 36000) / 100.0 - 180.0).as("hlon")))
-      val rad = (c: Column) => c * math.Pi / 180.0
-      val assigned = cust.crossJoin(broadcast(hubs))
-        .withColumn("d2",
-          (col("lat") - col("hlat")) * (col("lat") - col("hlat")) +
-            (col("lon") - col("hlon")) * (col("lon") - col("hlon")))
-        .withColumn("rn", row_number().over(Window
-          .partitionBy("c_custkey").orderBy(col("d2"), col("hub"))))
-        .filter(col("rn") === 1)
-      val hv = assigned.withColumn("km",
-        lit(2 * 6371.0) * asin(sqrt(
-          pow(sin(rad(col("hlat") - col("lat")) / 2), 2) +
-            cos(rad(col("lat"))) * cos(rad(col("hlat"))) *
-              pow(sin(rad(col("hlon") - col("lon")) / 2), 2))))
-      hv.groupBy("hub")
-        .agg(count(lit(1)).as("n_assigned"),
-          round(min(col("km")), 2).as("min_km"),
-          round(max(col("km")), 2).as("max_km"),
-          round(ssum(collect_list(col("km"))) / count(lit(1)), 2)
-            .as("mean_km"))
-        .orderBy("hub")
-    }),
-
-    // INTERVAL CONCURRENCY SWEEP (max overlap depth — the
-    // resource-contention / room-booking primitive): each q173-style
-    // shipment interval emits +1 at start and −1 past its end; netting
-    // deltas PER DAY first makes the running depth independent of
-    // same-day event order, so the sweep is one per-supplier window
-    // over a day-grain frame. The peak day is picked by deterministic
-    // rank. No pairwise overlap join — O(n) events, not O(n²) pairs.
-    "q186_overlap_depth" -> ((s, dir) => {
-      val iv = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("supp"),
-          to_date(col("l_shipdate")).as("st"),
-          date_add(to_date(col("l_shipdate")),
-            pmod(col("l_quantity").cast("int"), lit(7)) + lit(2)).as("en"))
-      val deltas = iv.select(col("supp"), col("st").as("day"),
-          lit(1L).as("d"))
-        .unionAll(iv.select(col("supp"), col("en").as("day"),
-          lit(-1L).as("d")))
-      val byDay = deltas.groupBy("supp", "day")
-        .agg(sum(col("d")).as("net"), sum(when(col("d") > 0, 1L)
-          .otherwise(0L)).as("n_starts"))
-      val depth = byDay.withColumn("depth", sum(col("net")).over(
-        Window.partitionBy("supp").orderBy("day")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      depth
-        .withColumn("n_intervals", sum(col("n_starts")).over(
-          Window.partitionBy("supp").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("rn", row_number().over(Window.partitionBy("supp")
-          .orderBy(col("depth").desc, col("day"))))
-        .filter(col("rn") === 1)
-        .select(col("supp"), col("n_intervals"),
-          col("depth").as("max_concurrent"),
-          date_format(col("day"), "yyyy-MM-dd").as("peak_day"))
-        .orderBy("supp")
-    }),
-
-    // NDCG@10 RANKING QUALITY (the search/recsys eval metric): per
-    // customer, the "model" ranking (totalprice desc) is scored against
-    // priority-derived relevance grades; DCG and ideal-DCG are
-    // sorted-fold double sums over the top-10 window rows only
-    // (WindowGroupLimit prunes below the shuffle), so the metric runs
-    // at grouped-agg cost — no per-query reranking loop.
-    "q187_ndcg" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_totalprice"),
-          (lit(6) - substring(col("o_orderpriority"), 1, 1).cast("int"))
-            .cast("double").as("rel"))
-      val byPred = o.withColumn("pos", row_number().over(
-          Window.partitionBy("o_custkey")
-            .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
-        .filter(col("pos") <= 10)
-        // ln-form of rel/log2(pos+1): pins both engines to plain ln —
-        // a native log2 could differ from ln(x)/ln(2) in the last ulp
-        .withColumn("g", col("rel") * log(lit(2.0)) / log(col("pos") + 1))
-      val byIdeal = o.withColumn("ipos", row_number().over(
-          Window.partitionBy("o_custkey")
-            .orderBy(col("rel").desc, col("o_orderkey"))))
-        .filter(col("ipos") <= 10)
-        .withColumn("ig",
-          col("rel") * log(lit(2.0)) / log(col("ipos") + 1))
-      val dcg = byPred.groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_ranked"),
-          ssum(collect_list(col("g"))).as("dcg"))
-      val idcg = byIdeal.groupBy("o_custkey")
-        .agg(ssum(collect_list(col("ig"))).as("idcg"))
-      dcg.join(idcg, Seq("o_custkey"))
-        .select(col("o_custkey"), col("n_ranked"),
-          round(col("dcg"), 6).as("dcg"),
-          round(col("dcg") / col("idcg"), 6).as("ndcg"))
-        .orderBy("o_custkey")
-    }),
-
-    // DATE-SPINE DENSIFICATION (zero-filled weekly series — the gap
-    // every BI tool trips on): integer ISO-ish week ids (days since a
-    // known Monday div 7 — engine-neutral), a generated flag × week
-    // spine (metadata-sized cross of two tiny frames), left join +
-    // zero-fill, and week-over-week deltas that are CORRECT across
-    // gaps because the spine has no holes.
-    "q188_date_spine" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          expr("datediff(to_date(l_shipdate), date'1970-01-05') div 7")
-            .as("wk"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-      val weekly = li.groupBy("flag", "wk")
-        .agg(sum(col("cents")).as("cents"))
-      val span = weekly.agg(min(col("wk")).as("w0"), max(col("wk")).as("w1"))
-      val spine = weekly.select("flag").distinct()
-        .crossJoin(broadcast(span))
-        .select(col("flag"), explode(sequence(col("w0"), col("w1")))
-          .as("wk"))
-      spine.join(weekly, Seq("flag", "wk"), "left")
-        .withColumn("cents", coalesce(col("cents"), lit(0L)))
-        .withColumn("prev", lag(col("cents"), 1).over(
-          Window.partitionBy("flag").orderBy("wk")))
-        .select(col("flag"), col("wk"),
-          round(col("cents").cast("double") / 100.0, 2).as("revenue"),
-          (col("cents") === 0).as("is_gap"),
-          round((col("cents") - coalesce(col("prev"), lit(0L)))
-            .cast("double") / 100.0, 2).as("wow_delta"))
-        .orderBy("flag", "wk")
-    }),
-
-    // ZIPF LAW FIT over the trigram vocabulary (the corpus-health
-    // diagnostic next to q183): log-log OLS of frequency vs rank on
-    // the top-50k head (fixed cap — the fit window is bounded however
-    // large the corpus; the tail is Good–Turing's job). Rank is one
-    // distributed sort of the vocab (corpus-sublinear); the four
-    // moment sums are sorted folds, so the slope is bit-deterministic.
-    "q189_zipf_fit" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(split(TF.normalizeText(col("text")), " ").as("ts"))
-      val words = toks.select(explode(transform(
-        when(size(col("ts")) >= 3, sequence(lit(1), size(col("ts")) - 2))
-          .otherwise(array().cast("array<int>")),
-        i => concat_ws(" ", element_at(col("ts"), i),
-          element_at(col("ts"), i + 1), element_at(col("ts"), i + 2))))
-        .as("w"))
-      val freq = words.groupBy("w").agg(count(lit(1)).as("c"))
-      val ranked = freq.withColumn("r", row_number().over(
-          Window.orderBy(col("c").desc, col("w"))))
-        .filter(col("r") <= 50000)
-        .select(log(col("r").cast("double")).as("x"),
-          log(col("c").cast("double")).as("y"))
-      ranked.agg(count(lit(1)).as("n"),
-          ssum(collect_list(col("x"))).as("sx"),
-          ssum(collect_list(col("y"))).as("sy"),
-          ssum(collect_list(col("x") * col("y"))).as("sxy"),
-          ssum(collect_list(col("x") * col("x"))).as("sxx"))
-        .select(col("n").as("n_terms"),
-          round((col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")), 4)
-            .as("slope"),
-          round((col("sy") - (col("n") * col("sxy") - col("sx") *
-            col("sy")) / (col("n") * col("sxx") - col("sx") * col("sx"))
-            * col("sx")) / col("n"), 4).as("intercept"))
-    }),
-
-    // DEGREE DISTRIBUTION with log2 binning (graph profiling beside
-    // q128/q160 — the first thing to check before any graph algorithm
-    // at 100 TB): exact distinct-edge degrees, bins via binary-string
-    // length (⌊log2⌋+1 — pure integer, no float log), per-bin counts
-    // and degree range. Two key-equality aggregations.
-    "q190_degree_histogram" -> ((s, dir) => {
-      val deg = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-        .groupBy("l_partkey").agg(count(lit(1)).as("deg"))
-      deg.withColumn("bin", length(bin(col("deg"))).cast("long"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_nodes"), min(col("deg")).as("min_deg"),
-          max(col("deg")).as("max_deg"), sum(col("deg")).as("n_edges"))
-        .orderBy("bin")
-    }),
-
-    // WEIGHTED PERCENTILES (quantity-weighted price quartiles — the
-    // inventory-weighted stat a plain percentile gets wrong): one
-    // per-group sort with a cumulative-weight frame; the pN is the
-    // smallest value whose cumulative weight clears N% of total,
-    // selected by integer cross-multiplication (4·cumw ≥ N·W — no
-    // division, no float compare). One window shuffle + one agg.
-    "q191_weighted_percentile" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          col("l_quantity").cast("long").as("w"),
-          col("l_orderkey"), col("l_linenumber"))
-      val ord = Window.partitionBy("flag")
-        .orderBy(col("cents"), col("l_orderkey"), col("l_linenumber"))
-      val full = Window.partitionBy("flag")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      li.withColumn("cumw", sum(col("w")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("tw", sum(col("w")).over(full))
-        .groupBy("flag")
-        .agg(max(col("tw")).as("total_weight"),
-          round(min(when(col("cumw") * 4 >= col("tw"), col("cents")))
-            .cast("double") / 100.0, 2).as("w_p25"),
-          round(min(when(col("cumw") * 2 >= col("tw"), col("cents")))
-            .cast("double") / 100.0, 2).as("w_median"),
-          round(min(when(col("cumw") * 4 >= col("tw") * 3, col("cents")))
-            .cast("double") / 100.0, 2).as("w_p75"))
-        .orderBy("flag")
-    }),
-
-    // LINEAR-INTERPOLATION GAP FILL (time-series imputation): a
-    // simulated sensor dropout (every 5th day nulled) is repaired with
-    // LOCF / NOCB carries and distance-weighted linear interpolation —
-    // four IGNORE-NULLS window carries over ONE per-type day-grain
-    // sort; edge gaps fall back to the nearest observation. The
-    // interpolated value is exact rational arithmetic over integer
-    // cents and day indices (divisions happen once, at display).
-    "q192_interpolate" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("c0"))
-        .withColumn("t",
-          expr("datediff(day, date'1970-01-05')").cast("long"))
-        .withColumn("v", when(col("t") % 5 === 0,
-          lit(null).cast("long")).otherwise(col("c0")))
-      val ord = Window.partitionBy("ty").orderBy("t")
-      val back = ord.rowsBetween(Window.unboundedPreceding, 0)
-      val fwd = ord.rowsBetween(0, Window.unboundedFollowing)
-      daily
-        .withColumn("pv", last(col("v"), ignoreNulls = true).over(back))
-        .withColumn("pt", last(when(col("v").isNotNull, col("t")),
-          ignoreNulls = true).over(back))
-        .withColumn("nv", first(col("v"), ignoreNulls = true).over(fwd))
-        .withColumn("nt", first(when(col("v").isNotNull, col("t")),
-          ignoreNulls = true).over(fwd))
-        .withColumn("fill",
-          when(col("v").isNotNull, col("v").cast("double"))
-            .when(col("pv").isNull, col("nv").cast("double"))
-            .when(col("nv").isNull, col("pv").cast("double"))
-            .otherwise(col("pv") + (col("nv") - col("pv")).cast("double")
-              * (col("t") - col("pt")) / (col("nt") - col("pt"))))
-        .select(col("ty"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("v").isNull.as("was_gap"),
-          round(col("fill") / 100.0, 4).as("value"))
-        .orderBy("ty", "day")
-    }),
-
-    // HEAVY-HITTER RANK SHIFT (top-k churn between time halves — the
-    // trending/leaderboard-drift monitor): per half, top-20 parts by
-    // exact line count (rank windows with WindowGroupLimit); a full
-    // outer join classifies new / dropped / up / down / flat with rank
-    // deltas. Count tables only — the fact table is scanned once.
-    "q193_rank_shift" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"),
-          expr("unix_micros(cast(l_shipdate as timestamp))").as("us"))
-      val span = li.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val cnt = li.crossJoin(broadcast(span))
-        .groupBy(col("l_partkey"),
-          (col("us") < col("mid")).as("is_a"))
-        .agg(count(lit(1)).as("n"))
-      val ranked = cnt.withColumn("rk", row_number().over(
-        Window.partitionBy("is_a")
-          .orderBy(col("n").desc, col("l_partkey"))))
-        .filter(col("rk") <= 20)
-      val a = ranked.filter(col("is_a"))
-        .select(col("l_partkey"), col("n").as("cnt_a"), col("rk").as("rank_a"))
-      val b = ranked.filter(!col("is_a"))
-        .select(col("l_partkey"), col("n").as("cnt_b"), col("rk").as("rank_b"))
-      a.join(b, Seq("l_partkey"), "full_outer")
-        .withColumn("status",
-          when(col("rank_a").isNull, lit("new"))
-            .when(col("rank_b").isNull, lit("dropped"))
-            .when(col("rank_b") < col("rank_a"), lit("up"))
-            .when(col("rank_b") > col("rank_a"), lit("down"))
-            .otherwise(lit("flat")))
-        .select(col("l_partkey"), col("rank_a"), col("rank_b"),
-          col("cnt_a"), col("cnt_b"), col("status"))
-        .orderBy(coalesce(col("rank_b"), lit(999)),
-          coalesce(col("rank_a"), lit(999)), col("l_partkey"))
-        .select(col("l_partkey"), col("rank_a"), col("rank_b"),
-          col("cnt_a"), col("cnt_b"), col("status"))
-    }),
-
-    // PERSONALIZED PAGERANK in EXACT INTEGER MASS (topic-sensitive
-    // ranking, Haveliwala WWW'02, floor-division arithmetic): masses
-    // are 10¹² micro-units, spread = (m·85)÷100÷deg with deterministic
-    // truncation, so every round is a plain integer sum — no float
-    // fold, no ordering sensitivity, and the oracle replays it
-    // bit-exactly with `//`. 3 unrolled rounds over the symmetric
-    // supplier↔part graph (suppliers even ids, parts odd); one
-    // edge-join + one sum-groupBy per round — the q78 plan shape.
-    // CHECKPOINTED-GRAIN iteration (the graph-family idiom,
-    // ops/Graph.scala): edges/deg materialize ONCE and every round's
-    // node-grain mass is checkpointed, so round N+1's plan starts from
-    // an RDD scan instead of re-expanding N rounds of lineage — the
-    // same change that cut q220's 84 scans to 2 (r09); the 100 TB form
-    // is the Pregel contract (edge relation persisted across
-    // supersteps, vertex state materialized per superstep).
-    "q194_ppr" -> ((s, dir) => {
-      val e0 = t(s, dir, "lineitem")
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst")).distinct()
-      val edges = Caches.small(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))))
-      val deg = Caches.small(
-        edges.groupBy("src").agg(count(lit(1)).as("deg")))
-      val seeds = Caches.small(t(s, dir, "supplier")
-        .filter(col("s_suppkey") % 10 === 0)
-        .select((col("s_suppkey") * 2).as("node")))
-      val restart = seeds.select(col("node"),
-        lit(150000000000L).as("r"))
-      var mass = seeds.select(col("node"), lit(1000000000000L).as("m"))
-      // LAZY round frames (r15): each round's mass has exactly ONE
-      // consumer — the next round's spread join (or the final top-20)
-      // — so the per-round localCheckpoint was three blocking jobs of
-      // pure tax; the 3-round plan is a linear DAG over the
-      // checkpointed edges/deg/seeds and evaluates in one job. (The
-      // checkpointed-grain idiom stays right for loops whose round
-      // frame is consumed 2-3× — the suffix family's r14 A/B.)
-      for (_ <- 1 to 3) {
-        val spread = mass.join(edges, col("node") === col("src"))
-          .join(deg, Seq("src"))
-          .select(col("dst").as("node"),
-            expr("(m * 85) div 100 div deg").as("c"))
-        mass = spread.unionByName(restart.select(col("node"),
-            col("r").as("c")))
-          .groupBy("node").agg(sum(col("c")).as("m"))
-      }
-      mass.withColumn("rk", row_number().over(
-          Window.orderBy(col("m").desc, col("node"))))
-        .filter(col("rk") <= 20)
-        .select(col("rk"), col("node"), col("m").as("mass_micro"))
-        .orderBy("rk")
-    }),
-
-    // KOLMOGOROV–SMIRNOV TWO-SAMPLE TEST (exact, between time halves —
-    // the distribution-shift test beside PSI/chi²): per type, value-
-    // level counts for each half, cumulative counts over ONE sorted
-    // window, and the KS statistic found by integer cross-
-    // multiplication max |cumA·nB − cumB·nA| — float enters once, in
-    // the final display division. Cost: one (type,value) agg + one
-    // per-type sort over distinct values only.
-    "q195_ks_test" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type").as("ty"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val g = ev.crossJoin(broadcast(span))
-        .groupBy("ty", "cents")
-        .agg(sum(when(col("us") < col("mid"), 1L).otherwise(0L)).as("ca"),
-          sum(when(col("us") >= col("mid"), 1L).otherwise(0L)).as("cb"))
-      val ord = Window.partitionBy("ty").orderBy("cents")
-      val full = Window.partitionBy("ty")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      g.withColumn("cuma", sum(col("ca")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("cumb", sum(col("cb")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("na", sum(col("ca")).over(full))
-        .withColumn("nb", sum(col("cb")).over(full))
-        .withColumn("diff", abs(col("cuma") * col("nb") -
-          col("cumb") * col("na")))
-        .withColumn("rn", row_number().over(Window.partitionBy("ty")
-          .orderBy(col("diff").desc, col("cents"))))
-        .filter(col("rn") === 1)
-        .select(col("ty"), col("na"), col("nb"),
-          round(col("diff").cast("double") /
-            (col("na") * col("nb")).cast("double"), 6).as("ks_stat"),
-          round(col("cents").cast("double") / 100.0, 2).as("at_value"))
-        .orderBy("ty")
-    }),
-
-    // THE MEAN ZOO (arithmetic / geometric / harmonic / quadratic —
-    // rates, ratios and RMS each need a different one): log-space and
-    // reciprocal sums are TWO-LEVEL bucketed sorted folds (4096
-    // l_orderkey buckets, then bucket subtotals — the q82 rule: no
-    // fold buffer scales with group size); arithmetic and quadratic
-    // ride on exact integer/decimal sums.
-    "q196_mean_zoo" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          pmod(col("l_orderkey"), lit(4096)).as("bk"))
-        .withColumn("x", col("cents").cast("double") / 100.0)
-      val lvl1 = li.groupBy("flag", "bk")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
-          sum(col("cents").cast("decimal(19,0)") * col("cents"))
-            .as("sq"),
-          ssum(collect_list(log(col("x")))).as("sln"),
-          ssum(collect_list(lit(1.0) / col("x"))).as("srec"))
-      lvl1.groupBy("flag")
-        .agg(sum(col("n")).as("n"), sum(col("sc")).as("sc"),
-          sum(col("sq")).as("sq"),
-          ssum(collect_list(col("sln"))).as("sln"),
-          ssum(collect_list(col("srec"))).as("srec"))
-        .select(col("flag"), col("n"),
-          round(col("sc").cast("double") / col("n") / 100.0, 4)
-            .as("mean_arith"),
-          round(exp(col("sln") / col("n")), 4).as("mean_geom"),
-          round(col("n") / col("srec"), 4).as("mean_harm"),
-          round(sqrt(col("sq").cast("double") / col("n")) / 100.0, 4)
-            .as("mean_quad"))
-        .orderBy("flag")
-    }),
-
-    // COHEN'S KAPPA inter-rater agreement (the annotation-QA metric
-    // every labeling pipeline needs): two deterministic document
-    // "raters" (length rule vs letter-density rule), per-source
-    // confusion cells as conditional sums in ONE aggregation, kappa
-    // from exact integer cells — (p_o − p_e)/(1 − p_e) with integer
-    // cross-multiplied numerators, one division at display.
-    "q197_cohens_kappa" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val docs = t(s, dir, "documents")
-        .select(col("source"),
-          (col("n_chars") >= 500).as("r1"),
-          ((length(col("text")) - length(regexp_replace(col("text"),
-            "e", ""))) * 8 >= length(col("text"))).as("r2"))
-      // p_e's numerator reused in kappa: integer marginal products,
-      // cast once
-      val peNum = d((col("yy") + col("yn")) * (col("yy") + col("ny"))) +
-        d((col("ny") + col("nn")) * (col("yn") + col("nn")))
-      docs.groupBy("source")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("r1") && col("r2"), 1L).otherwise(0L)).as("yy"),
-          sum(when(col("r1") && !col("r2"), 1L).otherwise(0L)).as("yn"),
-          sum(when(!col("r1") && col("r2"), 1L).otherwise(0L)).as("ny"),
-          sum(when(!col("r1") && !col("r2"), 1L).otherwise(0L)).as("nn"))
-        .select(col("source"), col("n"), col("yy"), col("yn"),
-          col("ny"), col("nn"),
-          round(d(col("yy") + col("nn")) / col("n"), 6).as("p_o"),
-          round(peNum / d(col("n") * col("n")), 6).as("p_e"),
-          // degenerate raters (p_e = 1) ⇒ kappa defined as 0
-          round(when(d(col("n") * col("n")) === peNum, lit(0.0))
-            .otherwise((d(col("n") * (col("yy") + col("nn"))) - peNum) /
-              (d(col("n") * col("n")) - peNum)), 6).as("kappa"))
-        .orderBy("source")
-    }),
-
-    // CALIBRATION CURVE + ECE (reliability of a score against
-    // outcomes — the model-monitoring metric beside q187's NDCG):
-    // integer fixed-width score bins (no float binning boundaries), a
-    // logistic "model score" whose mean per bin is a sorted fold, exact
-    // outcome rates, and expected calibration error assembled from the
-    // 10-row bin table. One aggregation over the fact table.
-    "q198_calibration" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val o = t(s, dir, "orders")
-        .select(round(col("o_totalprice") * 100, 0).cast("long")
-          .as("cents"),
-          (col("o_orderpriority").isin("1-URGENT", "2-HIGH")).as("y"))
-        .withColumn("bin", least(lit(9L), expr("cents div 5000000")))
-        .withColumn("score", lit(1.0) /
-          (lit(1.0) + exp(-(d(col("cents")) / 100.0 - 25000.0) / 10000.0)))
-      val bins = o.groupBy("bin")
-        .agg(count(lit(1)).as("n_bin"),
-          sum(when(col("y"), 1L).otherwise(0L)).as("n_pos"),
-          ssum(collect_list(col("score"))).as("ssc"))
-        .withColumn("conf", col("ssc") / col("n_bin"))
-        .withColumn("acc", d(col("n_pos")) / col("n_bin"))
-      val tot = bins.agg(sum(col("n_bin")).as("nn"))
-      val ece = bins.crossJoin(broadcast(tot))
-        .select((d(col("n_bin")) / col("nn") *
-          abs(col("acc") - col("conf"))).as("term"))
-        .agg(ssum(collect_list(col("term"))).as("ece"))
-      bins.crossJoin(broadcast(ece))
-        .select(col("bin"), col("n_bin"), col("n_pos"),
-          round(col("conf"), 6).as("mean_score"),
-          round(col("acc"), 6).as("pos_rate"),
-          round(col("ece"), 6).as("ece"))
-        .orderBy("bin")
-    }),
-
-    // EXACT ROC-AUC via the Mann–Whitney rank statistic with tie
-    // correction (no threshold sweep, no sampling): value-level
-    // positive/negative counts, one sort over DISTINCT scores, and
-    // U×2 = Σ np_v·(2·cumneg_below + nn_v) keeps everything integer
-    // until the final division. The statistically-exact companion to
-    // threshold-based eval.
-    "q199_auc" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(round(col("o_totalprice") * 100, 0).cast("long")
-          .as("cents"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("y"))
-      val g = o.groupBy("cents")
-        .agg(sum(when(col("y"), 1L).otherwise(0L)).as("np"),
-          sum(when(!col("y"), 1L).otherwise(0L)).as("nn"))
-      // exclusive cumneg over the distinct-score order, two-phase
-      // (value-level grain still grows with data — no global sort)
-      val u = Dedup.numberAndRunningSum(g, col("cents"), "rk",
-          Seq("cumnn_incl" -> col("nn")))
-        .withColumn("cumnn", col("cumnn_incl") - col("nn"))
-        .agg(sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
-          sum(col("np").cast("decimal(19,0)") *
-            (lit(2) * col("cumnn") + col("nn"))).as("u2"))
-      u.select(col("n_pos"), col("n_neg"),
-        round(col("u2").cast("double") /
-          (lit(2.0) * col("n_pos") * col("n_neg")), 6).as("auc"))
-    }),
-
-    // OUT-OF-FOLD TARGET ENCODING (q181's leakage-safe encoder, CV
-    // form): md5-hash folds (deterministic, no RNG), each (fold,
-    // segment) cell encoded from the OTHER folds' exact sums —
-    // (Σseg − Σfold,seg)/(nseg − nfold,seg). Two metadata-sized aggs
-    // + a broadcast join; the fact table is scanned once.
-    "q200_oof_encoding" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("cents"),
-          pmod(TF.md5Hash48(col("c_custkey").cast("string")), lit(5L))
-            .as("fold"))
-      val cell = c.groupBy("fold", "seg")
-        .agg(count(lit(1)).as("nf"), sum(col("cents")).as("sf"))
-      val segt = cell.groupBy("seg")
-        .agg(sum(col("nf")).as("ns"), sum(col("sf")).as("ss"))
-      cell.join(broadcast(segt), Seq("seg"))
-        .select(col("fold"), col("seg"), col("nf").as("n_rows"),
-          round((col("ss") - col("sf")).cast("double") /
-            (col("ns") - col("nf")).cast("double") / 100.0, 4)
-            .as("oof_mean"))
-        .orderBy("fold", "seg")
-    }),
-
-    // NUCLEUS (top-p) SELECTION MASK (the LLM-serving sampling
-    // primitive, Holtzman ICLR'20, as a set-at-a-time query): per-user
-    // event-type frequencies → temperature-0.5 softmax → smallest
-    // prefix of the (prob desc, type asc) order covering p≥0.9. The
-    // candidate set is the 5-type vocabulary, so every window frame is
-    // model-sized; exp parity is the q105 contract. The keep/cut
-    // decision replays identically in the oracle.
-    "q201_nucleus_topp" -> ((s, dir) => {
-      val cnt = events(s, dir).groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("n", sum(col("c")).over(Window.partitionBy("user_id")
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-        .withColumn("e",
-          exp(col("c").cast("double") / col("n") / lit(0.5)))
-      val sm = cnt.withColumn("z", ssum(collect_list(col("e")).over(
-          Window.partitionBy("user_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))))
-        .withColumn("p", col("e") / col("z"))
-      val ord = Window.partitionBy("user_id")
-        .orderBy(col("p").desc, col("event_type"))
-      sm.withColumn("rk", row_number().over(ord))
-        .withColumn("cum", sum(col("p")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("prevcum", coalesce(sum(col("p")).over(
-          ord.rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-        .filter(col("prevcum") < 0.9)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("k_nucleus"),
-          max(when(col("rk") === 1, col("event_type"))).as("top_type"),
-          round(max(col("cum")), 6).as("nucleus_mass"))
-        .orderBy("user_id")
-    }),
-
-    // CROSS-SOURCE CONTAMINATION MATRIX (directional shingle
-    // containment |A∩B|/|A| — "how much of source A also appears in
-    // B"): distinct (shingle, source) pairs, then a self-join keyed on
-    // the shingle whose fan-out is bounded by source count (≤20), never
-    // by corpus size — the corpus-level complement of q68's doc-level
-    // decontamination. Exact integer counts throughout.
-    "q202_contamination" -> ((s, dir) => {
-      // two-step shingle build behind an exchange barrier (the
-      // withShingles lesson): an inline explode(shingles(text)) lets
-      // Catalyst re-substitute the whole normalize+split lambda into
-      // the generate — measured ~30× the explode's own cost
-      val par = s.sparkContext.defaultParallelism
-      val sh = t(s, dir, "documents")
-        .select(col("source"),
-          split(TF.normalizeText(col("text")), " ").as("__w"))
-        .repartition(par)
-        .select(col("source"),
-          explode_outer(DedupOps.shinglesFromWords(col("__w"), 3))
-            .as("g"))
-        .filter(col("g").isNotNull)
-        .distinct()
-      val sizes = sh.groupBy("source").agg(count(lit(1)).as("na"))
-      // group-to-set then emit pairs (≤ nsources² per shingle, bounded
-      // by source count) — ONE groupBy instead of a corpus-sized
-      // self-join on the shingle key; the per-shingle set is capped by
-      // the source dimension, never corpus size
-      val pairs = sh.groupBy("g")
-        .agg(collect_set(col("source")).as("ss"))
-        .filter(size(col("ss")) >= 2)
-        .select(explode(col("ss")).as("src_a"), col("ss"))
-        .select(col("src_a"), explode(col("ss")).as("src_b"))
-        .filter(col("src_a") =!= col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(count(lit(1)).as("n_common"))
-      pairs.join(broadcast(sizes.withColumnRenamed("source", "src_a")),
-          Seq("src_a"))
-        .filter(col("n_common") * 20 >= col("na"))
-        .select(col("src_a"), col("src_b"), col("n_common"), col("na"),
-          round(col("n_common").cast("double") / col("na"), 4)
-            .as("containment"))
-        .orderBy("src_a", "src_b")
-    }),
-
-    // SCHEMA-DRIFT UNION (unionByName with missing-column
-    // reconciliation — the ingestion primitive when v1 and v2 exports
-    // coexist): an old extract (no priority column) and a new extract
-    // (extra column) union by NAME, absent columns null-filled —
-    // position-based UNION would silently mis-align. Aggregated per
-    // status × presence so the null-fill behavior is the gate.
-    "q203_schema_drift_union" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val v1 = o.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      val v2 = o.filter(col("o_orderkey") % 2 === 1)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
-          col("o_orderpriority"))
-      v1.unionByName(v2, allowMissingColumns = true)
-        .groupBy(col("o_orderstatus"),
-          col("o_orderpriority").isNull.as("from_v1"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
-          min(col("o_orderkey")).as("first_key"))
-        .orderBy("o_orderstatus", "from_v1")
-    }),
-
-    // MULTISET SET OPERATIONS (INTERSECT ALL / EXCEPT ALL — bag
-    // semantics the DISTINCT forms get wrong): the multiset of
-    // customers' open-order keys vs filled-order keys; intersectAll
-    // keeps min(multiplicity), exceptAll subtracts it. Spark plans
-    // both as a single aggregate+generate (no pairwise join); gated by
-    // replaying the same bag algebra in the oracle.
-    "q204_multiset_ops" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val a = o.filter(col("o_orderstatus") === "O").select("o_custkey")
-      val b = o.filter(col("o_orderstatus") === "F").select("o_custkey")
-      val inter = a.intersectAll(b).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_inter"))
-      val diff = a.exceptAll(b).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_except"))
-      inter.join(diff, Seq("o_custkey"), "full_outer")
-        .select(col("o_custkey"),
-          coalesce(col("n_inter"), lit(0L)).as("n_inter"),
-          coalesce(col("n_except"), lit(0L)).as("n_except"))
-        .orderBy("o_custkey")
-    }),
-
-    // KAPLAN–MEIER SURVIVAL CURVE (time-to-event with right
-    // censoring — retention/churn's statistically-correct form): per
-    // customer, entry = first order, event = first 300k+ order,
-    // censored at the observation horizon; S(t) = Π(1 − dᵢ/nᵢ) as
-    // exp of a cumulative ln-sum over the day-grain event grid (a
-    // frame bounded by the calendar). Risk sets are exact integer
-    // cumulative counts from ONE sort of the per-customer time table.
-    "q205_kaplan_meier" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"),
-          (col("o_totalprice") >= 300000.0).as("big"))
-      val per = o.groupBy("o_custkey")
-        .agg(min(col("d")).as("entry"),
-          min(when(col("big"), col("d"))).as("eventd"))
-      val horizon = o.agg(max(col("d")).as("hz"))
-      val times = per.crossJoin(broadcast(horizon))
-        .select(col("o_custkey"),
-          when(col("eventd").isNotNull,
-            datediff(col("eventd"), col("entry")))
-            .otherwise(datediff(col("hz"), col("entry"))).as("t"),
-          col("eventd").isNotNull.as("ev"))
-      val tot = times.agg(count(lit(1)).as("nn"))
-      val byT = times.groupBy("t")
-        .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d_t"),
-          count(lit(1)).as("leave"))
-      val ord = Window.orderBy("t")
-      val km = byT.crossJoin(broadcast(tot))
-        .withColumn("n_risk", col("nn") -
-          coalesce(sum(col("leave")).over(
-            ord.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .filter(col("d_t") > 0)
-        .withColumn("lnterm", log(lit(1.0) -
-          col("d_t").cast("double") / col("n_risk").cast("double")))
-        // sorted-fold the ln prefix (not a running float sum) so the
-        // cumulative product is association-identical in both engines
-        .withColumn("s", exp(ssum(collect_list(col("lnterm")).over(
-          Window.orderBy("t").rowsBetween(
-            Window.unboundedPreceding, 0)))))
-      km.select(col("t").cast("long").as("t"), col("n_risk"),
-          col("d_t"), round(col("s"), 6).as("survival"))
-        .orderBy("t")
-    }),
-
-    // ROLLING EXACT MEDIAN (centered 31-day window — the robust
-    // smoother a rolling mean can't be): the stream collapses to the
-    // calendar-bounded day grain FIRST, then each frame's values are
-    // collected IN FRAME ORDER, sorted, and indexed — exact integer
-    // cents, no sketch, frame size capped at 31. One window shuffle
-    // over the day-grain series.
-    "q206_rolling_median" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-      val frame = Window.partitionBy("ty").orderBy("day")
-        .rowsBetween(-15, 15)
-      daily.withColumn("arr", array_sort(collect_list(col("cents"))
-          .over(frame)))
-        .select(col("ty"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-          size(col("arr")).cast("long").as("n_window"),
-          round(element_at(col("arr"),
-            ((size(col("arr")) + lit(1)) / lit(2)).cast("int"))
-            .cast("double") / 100.0, 2).as("rolling_median"))
-        .orderBy("ty", "day")
-    }),
-
-    // HAAR MULTI-RESOLUTION PYRAMID (approximation + detail at 2/4/8/
-    // 16-day scales — the downsampling layer of a time-series store):
-    // absolute-day buckets t÷2ᴸ, approximation = bucket mean, detail =
-    // half-means difference via conditional integer sums — the whole
-    // pyramid is one 4× explode of the day-grain series + one
-    // aggregation; every coefficient is exact until display division.
-    "q207_haar_pyramid" -> ((s, dir) => {
-      val daily = t(s, dir, "lineitem")
-        .groupBy(expr("datediff(to_date(l_shipdate), date'1970-01-05')")
-          .cast("long").as("t"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents"))
-      val lv = daily.select(col("t"), col("cents"),
-        explode(sequence(lit(1), lit(4))).as("lvl"))
-        .withColumn("bucket", expr("t div shiftleft(1, lvl)"))
-        .withColumn("half", expr("(t div shiftleft(1, lvl - 1)) % 2"))
-      lv.groupBy("lvl", "bucket")
-        .agg(count(lit(1)).as("n_days"),
-          sum(col("cents")).as("sc"),
-          sum(when(col("half") === 0, col("cents"))).as("s0"),
-          sum(when(col("half") === 0, 1L).otherwise(0L)).as("n0"),
-          sum(when(col("half") === 1, col("cents"))).as("s1"),
-          sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1"))
-        // integer-cent outputs via floor(x+0.5): bucket sizes are
-        // powers of two, so the means land EXACTLY on .xx5 constantly
-        // and round()'s tie-breaking differs between engines; floor of
-        // an identically-computed double is bit-deterministic
-        .select(col("lvl"), col("bucket"), col("n_days"),
-          floor(col("sc").cast("double") / col("n_days") + 0.5)
-            .cast("long").as("approx_cents"),
-          floor(when(col("n0") > 0,
-            col("s0").cast("double") / col("n0")).otherwise(lit(0.0))
-            - when(col("n1") > 0,
-              col("s1").cast("double") / col("n1")).otherwise(lit(0.0))
-            + 0.5).cast("long").as("detail_cents"))
-        .orderBy("lvl", "bucket")
-    }),
-
-    // TIME-TO-CONVERT PERCENTILES (signup → first purchase — the
-    // product-funnel latency metric): per-user firsts from one
-    // min-aggregation, exact integer-microsecond gaps, and p50/p90
-    // picked by the q191 cumulative-count cross-multiplication — no
-    // percentile sketch, no full collect. Two aggs + one sort over the
-    // converted-user table.
-    "q208_time_to_convert" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("us"))
-      val su = ev.groupBy("user_id")
-        .agg(min(when(col("event_type") === "signup", col("us")))
-          .as("su"))
-        .filter(col("su").isNotNull)
-      // first purchase AT/after signup via filter-then-min (no per-user
-      // buffer — the purchase list never materializes)
-      val pu = ev.filter(col("event_type") === "purchase")
-        .join(su, Seq("user_id"))
-        .filter(col("us") >= col("su"))
-        .groupBy("user_id").agg(min(col("us")).as("pu"))
-      val conv = su.join(pu, Seq("user_id"))
-        .withColumn("gap", col("pu") - col("su"))
-      val n = conv.agg(count(lit(1)).as("n"))
-      // two-phase global rank — the converted-user frame grows with the
-      // user dimension, so no single-partition sort
-      Dedup.numberRows(conv, struct(col("gap"), col("user_id")), "rk")
-        .crossJoin(broadcast(n))
-        .groupBy()
-        .agg(max(col("n")).as("n_converted"),
-          round(min(when(col("rk") * 2 >= col("n"), col("gap")))
-            .cast("double") / 86400e6, 4).as("p50_days"),
-          round(min(when(col("rk") * 10 >= col("n") * 9, col("gap")))
-            .cast("double") / 86400e6, 4).as("p90_days"))
-    }),
-
-    // LANGUAGE-ID CONFUSION MATRIX → per-class precision/recall/F1
-    // (the eval loop for q16's classifier against the gold labels):
-    // one (gold, pred) count aggregation, margins joined back, all
-    // three metrics from exact integer cells with zero-denominator
-    // guards. The eval costs two metadata-sized aggs on top of the
-    // classifier scan.
-    "q209_langid_prf" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val scored = t(s, dir, "documents")
-        .select(col("lang").as("gold"), TA.langId(col("text")).as("pred"))
-      val cells = scored.groupBy("gold", "pred")
-        .agg(count(lit(1)).as("n"))
-      val tp = cells.filter(col("gold") === col("pred"))
-        .select(col("gold").as("l"), col("n").as("tp"))
-      val goldTot = cells.groupBy(col("gold").as("l"))
-        .agg(sum(col("n")).as("ng"))
-      val predTot = cells.groupBy(col("pred").as("l"))
-        .agg(sum(col("n")).as("np"))
-      goldTot.join(predTot, Seq("l"), "full_outer")
-        .join(tp, Seq("l"), "left")
-        .select(col("l").as("lang"),
-          coalesce(col("ng"), lit(0L)).as("n_gold"),
-          coalesce(col("np"), lit(0L)).as("n_pred"),
-          coalesce(col("tp"), lit(0L)).as("tp"))
-        .withColumn("prec", when(col("n_pred") === 0, lit(0.0))
-          .otherwise(round(d(col("tp")) / col("n_pred"), 6)))
-        .withColumn("rec", when(col("n_gold") === 0, lit(0.0))
-          .otherwise(round(d(col("tp")) / col("n_gold"), 6)))
-        .withColumn("f1",
-          when(col("n_pred") + col("n_gold") === 0 ||
-            col("tp") === 0, lit(0.0))
-            .otherwise(round(lit(2.0) * d(col("tp")) /
-              (col("n_pred") + col("n_gold")), 6)))
-        .orderBy("lang")
-    }),
-
-    // FIFO COST ALLOCATION (cumulative-range matching — the inventory
-    // accounting op): per part, "buys" (odd linenumbers) and "sells"
-    // (even) each get exact cumulative-quantity ranges from one
-    // window; FIFO matches are the RANGE OVERLAPS of the two
-    // cumulative axes — an equi-join on part with a range filter whose
-    // fan-out is bounded by per-part line counts, never the table.
-    // Matched quantity is pure integer interval arithmetic.
-    "q210_fifo_allocation" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey").as("pk"), col("l_orderkey"),
-          col("l_linenumber"),
-          col("l_quantity").cast("long").as("q"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          col("l_shipdate"))
-      def ranged(side: DataFrame) = {
-        val w = Window.partitionBy("pk")
-          .orderBy(col("l_shipdate"), col("l_orderkey"),
-            col("l_linenumber"))
-        side.withColumn("hi", sum(col("q")).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-          .withColumn("lo", col("hi") - col("q"))
-      }
-      val buys = ranged(li.filter(col("l_linenumber") % 2 === 1))
-        .select(col("pk"), col("lo").as("blo"), col("hi").as("bhi"),
-          col("q").as("bq"), col("cents").as("bcents"))
-      val sells = ranged(li.filter(col("l_linenumber") % 2 === 0))
-        .select(col("pk"), col("lo").as("slo"), col("hi").as("shi"))
-      buys.join(sells, Seq("pk"))
-        .filter(col("blo") < col("shi") && col("slo") < col("bhi"))
-        .withColumn("matched", least(col("bhi"), col("shi")) -
-          greatest(col("blo"), col("slo")))
-        .groupBy("pk")
-        .agg(count(lit(1)).as("n_matches"),
-          sum(col("matched")).as("matched_qty"),
-          floor(ssum(collect_list(col("matched").cast("double") *
-            col("bcents") / col("bq"))) + 0.5).cast("long")
-            .as("fifo_cost_cents"))
-        .orderBy("pk")
-    }),
-
-    // THEIL–SEN ROBUST SLOPE (median of pairwise slopes — the trend
-    // estimator outliers can't drag): the table collapses to the
-    // calendar-bounded daily series FIRST, so the pairwise stage is
-    // a BROADCAST day×day pair build (day grain is metadata-sized at
-    // any SF — never the fact table). The median slope is picked by
-    // deterministic rank; the OLS slope from exact moments rides along
-    // for contrast.
-    "q211_theil_sen" -> ((s, dir) => {
-      // day-grain frame checkpointed: it feeds the pair build (twice),
-      // the pair count, and the OLS moments — without it the full
-      // lineitem aggregation re-runs ~5x (measured 4.3 s -> the fix)
-      val daily = graft.ops.Caches.small(t(s, dir, "lineitem")
-        .groupBy(expr("datediff(to_date(l_shipdate), date'1970-01-05')")
-          .cast("long").as("tt"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents")))
-      val pairs = daily.join(broadcast(daily
-          .select(col("tt").as("t2"), col("cents").as("c2"))),
-          col("t2") > col("tt"))
-        .select(((col("c2") - col("cents")).cast("double") /
-          (col("t2") - col("tt")).cast("double")).as("slope"))
-      // exact median SLOPE by bracketed selection (Selection.kthValue):
-      // the r13 form ranked the full pair frame with one global window —
-      // justified then as calendar-bounded, but still a single-task sort
-      // of days²/2 rows (3.1M at sf0.1, measured ~2.5 s of the query).
-      // Only the median VALUE is needed (row_number's (tt,t2) tiebreak
-      // picked a row, but tied rows share the slope the output rounds),
-      // so selection replaces the sort with two map-side passes over the
-      // broadcast-generated pairs — no shuffle of the pair frame at all.
-      val sel = graft.ops.Selection.medianValue(pairs, col("slope"))
-      val ols = daily.agg(count(lit(1)).cast("decimal(19,0)").as("n"),
-          sum(col("tt").cast("decimal(19,0)")).as("sx"),
-          sum(col("cents").cast("decimal(19,0)")).as("sy"),
-          sum(col("tt").cast("decimal(19,0)") * col("cents")).as("sxy"),
-          sum(col("tt").cast("decimal(19,0)") * col("tt")).as("sxx"))
-        .select(round((col("n") * col("sxy") - col("sx") * col("sy"))
-          .cast("double") /
-          (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"),
-          6).as("ols_slope"))
-      sel.crossJoin(broadcast(ols))
-        .select(col("n").as("n_pairs"),
-          round(col("kth"), 6).as("theil_sen_slope"),
-          col("ols_slope"))
-    }),
-
-    // RANK-BIASED OVERLAP (Webber et al. TOIS'10 — comparing two
-    // top-k rankings when NDCG's relevance grades don't exist): parts
-    // ranked by revenue vs by quantity, truncated RBO at depth 50 with
-    // p=0.9. Each common part contributes the closed-form tail sum
-    // T(max(ra,rb)) — a 50-row generated weight table joined on the
-    // worse rank; the final fold is over ≤50 doubles. Rankings are
-    // top-k windows with WindowGroupLimit.
-    "q212_rbo" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val byRev = li.groupBy("l_partkey")
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("v"))
-        .withColumn("ra", row_number().over(
-          Window.orderBy(col("v").desc, col("l_partkey"))))
-        .filter(col("ra") <= 50).select("l_partkey", "ra")
-      val byQty = li.groupBy("l_partkey")
-        .agg(sum(col("l_quantity").cast("long")).as("q"))
-        .withColumn("rb", row_number().over(
-          Window.orderBy(col("q").desc, col("l_partkey"))))
-        .filter(col("rb") <= 50).select("l_partkey", "rb")
-      val s0 = s
-      import s0.implicits._
-      val tails = (1 to 50).map { m =>
-        (m.toLong, (m to 50).map(dd => math.pow(0.9, dd - 1) / dd).sorted.sum)
-      }.toDF("m", "tail")
-      val common = byRev.join(byQty, Seq("l_partkey"))
-        .withColumn("m", greatest(col("ra"), col("rb")))
-        .join(broadcast(tails), Seq("m"))
-      common.agg(count(lit(1)).as("n_common"),
-          sum(when(col("m") <= 10, 1L).otherwise(0L)).as("overlap_at_10"),
-          round(lit(0.1) * ssum(collect_list(col("tail"))), 6).as("rbo"))
-    }),
-
-    // SEASONAL-NAIVE BACKTEST (forecast f(t)=y(t−7), scored with
-    // MAPE/sMAPE/bias over the final 28 days — the baseline every
-    // forecasting pipeline must beat): the forecast is an equi-join of
-    // the day-grain series against itself shifted 7 calendar days —
-    // no window over the fact table, exact integer actuals, error
-    // folds sorted. One groupBy + one self-join on the tiny series.
-    "q213_backtest_mape" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-      val horizon = daily.agg(date_sub(max(col("day")), 27).as("h0"))
-      val f = daily.select(col("ty"), date_add(col("day"), 7).as("day"),
-        col("cents").as("fc"))
-      daily.join(f, Seq("ty", "day"))
-        .crossJoin(broadcast(horizon))
-        .filter(col("day") >= col("h0"))
-        .groupBy("ty")
-        .agg(count(lit(1)).as("n_eval"),
-          round(ssum(collect_list(
-            abs(col("cents") - col("fc")).cast("double") / col("cents")))
-            / count(lit(1)), 6).as("mape"),
-          round(ssum(collect_list(
-            lit(2.0) * abs(col("cents") - col("fc")).cast("double") /
-              (col("cents") + col("fc")))) / count(lit(1)), 6)
-            .as("smape"),
-          sum(col("fc") - col("cents")).as("bias_cents"))
-        .orderBy("ty")
-    }),
-
-    // GREEDY KNAPSACK SELECTION (budget-constrained pick by value
-    // density — campaign/capacity allocation): per supplier, lineitems
-    // ranked by density (cents/qty desc, deterministic tie), taken
-    // while cumulative weight fits the capacity. One per-key rank
-    // window + one cumulative frame — the greedy loop IS the window.
-    "q214_greedy_knapsack" -> ((s, dir) => {
-      val cap = 100L
-      val it = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("supp"), col("l_orderkey"),
-          col("l_linenumber"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("v"),
-          col("l_quantity").cast("long").as("w"))
-        .withColumn("density",
-          col("v").cast("double") / col("w").cast("double"))
-      val ord = Window.partitionBy("supp")
-        .orderBy(col("density").desc, col("l_orderkey"),
-          col("l_linenumber"))
-      it.withColumn("cumw", sum(col("w")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .filter(col("cumw") <= cap)
-        .groupBy("supp")
-        .agg(count(lit(1)).as("n_taken"),
-          sum(col("v")).as("value_cents"),
-          max(col("cumw")).as("weight_used"))
-        .withColumn("utilization",
-          round(col("weight_used").cast("double") / cap, 4))
-        .orderBy("supp")
-    }),
-
-    // LEAD-LAG CROSS-CORRELATION (which series moves first — the
-    // click→purchase latency discovery): zero-filled daily click and
-    // purchase counts on a shared spine, CCF at lags −7..+7 via
-    // calendar-shifted equi-joins, Pearson terms from exact integer
-    // moments. The whole computation runs on the metadata-sized day
-    // grain; the best lag is a deterministic rank pick.
-    "q215_lead_lag" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val byDay = (tpe: String, name: String) => ev
-        .filter(col("event_type") === tpe)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as(name))
-      val span = ev.agg(to_date(min(col("ts"))).as("d0"),
-        to_date(max(col("ts"))).as("d1"))
-      val spine = span.select(explode(expr(
-        "sequence(d0, d1, interval 1 day)")).as("day"))
-      val base = spine
-        .join(byDay("click", "x"), Seq("day"), "left")
-        .join(byDay("purchase", "y"), Seq("day"), "left")
-        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-          coalesce(col("y"), lit(0L)).as("y"))
-      val lags = base.select(col("day"), col("x"),
-        explode(sequence(lit(-7), lit(7))).as("lg"))
-      val joined = lags.join(base.select(
-          col("day").as("dy"), col("y")),
-          col("dy") === expr("date_add(day, lg)"))
-        .select(col("lg").cast("long").as("lg"),
-          col("x").cast("decimal(19,0)").as("x"),
-          col("y").cast("decimal(19,0)").as("y"))
-      val m = joined.groupBy("lg")
-        .agg(count(lit(1)).cast("decimal(19,0)").as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .select(col("lg"), col("n").cast("long").as("n_days"),
-          (round((col("n") * col("sxy") - col("sx") * col("sy"))
-            .cast("double") /
-            sqrt((col("n") * col("sxx") - col("sx") * col("sx"))
-              .cast("double") *
-              (col("n") * col("syy") - col("sy") * col("sy"))
-                .cast("double")), 4) + 0.0).as("ccf"))
-      m.withColumn("best", row_number().over(
-          Window.orderBy(col("ccf").desc, col("lg"))) === 1)
-        .orderBy("lg")
-    }),
-
-    // PRICE/VOLUME INDEX DECOMPOSITION (Laspeyres / Paasche / Fisher —
-    // "did revenue move because of price or because of volume?"): the
-    // two time halves' per-part price (value/qty) and quantity enter
-    // four exact cross-basket integer sums (Σp₀q₀, Σp₁q₀, Σp₀q₁,
-    // Σp₁q₁ — in cents×qty micro-units via cross-multiplication, no
-    // per-part division); the three indices are ratios of those sums.
-    // One (part, half) agg + one self-join on part.
-    "q216_price_volume" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey").as("pk"), col("l_returnflag").as("flag"),
-          expr("unix_micros(cast(l_shipdate as timestamp))").as("us"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          col("l_quantity").cast("long").as("q"))
-      val span = li.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val half = li.crossJoin(broadcast(span))
-        .groupBy(col("flag"), col("pk"), (col("us") < col("mid")).as("a"))
-        .agg(sum(col("cents")).cast("decimal(19,0)").as("v"),
-          sum(col("q")).cast("decimal(19,0)").as("qq"))
-      val h0 = half.filter(col("a"))
-        .select(col("flag"), col("pk"), col("v").as("v0"),
-          col("qq").as("q0"))
-      val h1 = half.filter(!col("a"))
-        .select(col("flag"), col("pk"), col("v").as("v1"),
-          col("qq").as("q1"))
-      // price p = v/q; cross sums via cross-multiplication:
-      // Σ p1·q0 over parts = Σ v1·q0/q1 — keep the exact numerators
-      // and denominators per part, fold the rational terms sorted
-      // two-level bucketed folds (q82 rule): the rational cross terms
-      // fold within pk%4096 buckets first, then over bucket subtotals
-      val lvl1 = h0.join(h1, Seq("flag", "pk"))
-        .withColumn("bk", pmod(col("pk"), lit(4096)))
-        .groupBy("flag", "bk")
-        .agg(count(lit(1)).as("np"),
-          sum(col("v0")).as("s00"), sum(col("v1")).as("s11"),
-          ssum(collect_list(d(col("v1") * col("q0")) / d(col("q1"))))
-            .as("s10"),
-          ssum(collect_list(d(col("v0") * col("q1")) / d(col("q0"))))
-            .as("s01"))
-      lvl1.groupBy("flag")
-        .agg(sum(col("np")).as("n_parts"),
-          sum(col("s00")).as("s00"), sum(col("s11")).as("s11"),
-          ssum(collect_list(col("s10"))).as("s10"),
-          ssum(collect_list(col("s01"))).as("s01"))
-        .select(col("flag"), col("n_parts"),
-          round(col("s10") / d(col("s00")), 6).as("laspeyres_price"),
-          round(d(col("s11")) / col("s01"), 6).as("paasche_price"),
-          round(sqrt(col("s10") / d(col("s00")) *
-            (d(col("s11")) / col("s01"))), 6).as("fisher_price"),
-          round(d(col("s11")) / d(col("s00")), 6).as("value_index"))
-        .orderBy("flag")
-    }),
-
-    // 1-D EARTH-MOVER DISTANCE, exact (the integral twin of q195's
-    // KS sup-statistic — total distribution shift, not just the worst
-    // point): Σ |cumA·nB − cumB·nA| · Δvalue over one sorted pass of
-    // distinct values, all integer until the final normalization.
-    "q217_emd" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type").as("ty"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val g = ev.crossJoin(broadcast(span))
-        .groupBy("ty", "cents")
-        .agg(sum(when(col("us") < col("mid"), 1L).otherwise(0L)).as("ca"),
-          sum(when(col("us") >= col("mid"), 1L).otherwise(0L)).as("cb"))
-      val ord = Window.partitionBy("ty").orderBy("cents")
-      val full = Window.partitionBy("ty")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      g.withColumn("cuma", sum(col("ca")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("cumb", sum(col("cb")).over(
-          ord.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("na", sum(col("ca")).over(full))
-        .withColumn("nb", sum(col("cb")).over(full))
-        .withColumn("gap", lead(col("cents"), 1).over(ord) - col("cents"))
-        .filter(col("gap").isNotNull)
-        .withColumn("term",
-          abs(col("cuma") * col("nb") - col("cumb") * col("na")) *
-            col("gap"))
-        .groupBy("ty")
-        .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-          sum(col("term").cast("decimal(38,0)")).as("w"))
-        .select(col("ty"), col("na"), col("nb"),
-          round(col("w").cast("double") /
-            (col("na") * col("nb")).cast("double") / 100.0, 6)
-            .as("emd"))
-        .orderBy("ty")
-    }),
-
-    // SPLIT-CONFORMAL PREDICTION INTERVALS (distribution-free coverage
-    // — Vovk/Shafer, the calibration layer any point forecaster can
-    // wear): calibration half fits per-type means (exact cents) and
-    // takes q̂ = ⌈(n+1)·0.9⌉-th smallest |residual| by ONE rank
-    // window; the gate then PROVES empirical coverage ≈ 90% on the
-    // disjoint test half. Exact integer residual ranks — no quantile
-    // sketch anywhere.
-    "q218_conformal" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type").as("ty"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val halved = ev.crossJoin(broadcast(span))
-        .withColumn("cal", col("us") < col("mid"))
-      val fit = halved.filter(col("cal")).groupBy("ty")
-        .agg(sum(col("cents")).as("sc"), count(lit(1)).as("n"))
-        .select(col("ty"), expr("sc div n").as("pred"), col("n"))
-      val resid = halved.filter(col("cal"))
-        .join(broadcast(fit), Seq("ty"))
-        .withColumn("r", abs(col("cents") - col("pred")))
-        .withColumn("rk", row_number().over(Window.partitionBy("ty")
-          .orderBy(col("r"), col("cents"), col("us"))))
-        // q̂ = the k-th smallest with k = ⌈(n+1)·0.9⌉ (integer ceil)
-        .filter(col("rk") === expr("(9 * (n + 1) + 9) div 10"))
-        .select(col("ty"), col("r").as("qhat"))
-      halved.filter(!col("cal"))
-        .join(broadcast(fit.select("ty", "pred")), Seq("ty"))
-        .join(broadcast(resid), Seq("ty"))
-        .groupBy(col("ty"))
-        .agg(count(lit(1)).as("n_test"), max(col("qhat")).as("qhat"),
-          sum(when(abs(col("cents") - col("pred")) <= col("qhat"), 1L)
-            .otherwise(0L)).as("n_covered"))
-        .withColumn("coverage", round(col("n_covered").cast("double") /
-          col("n_test"), 4))
-        .withColumn("ok", col("coverage") >= 0.85)
-        .orderBy("ty")
-    }),
-
-    // CAPTURE–RECAPTURE POPULATION ESTIMATE (Chapman's Lincoln–
-    // Petersen — estimating corpus size from two overlapping hash
-    // samples, the ecology trick that audits "how many distinct users
-    // are there REALLY" without a full distinct): two deterministic
-    // md5 subsamples, overlap counted exactly, N̂ = (n₁+1)(n₂+1)/(m+1)
-    // − 1 gated against the true distinct count it estimates.
-    "q219_capture_recapture" -> ((s, dir) => {
-      val users = events(s, dir).select(col("user_id")).distinct()
-        .withColumn("h1",
-          pmod(TF.md5Hash48(concat(lit("s1:"), col("user_id"))), lit(5L)))
-        .withColumn("h2",
-          pmod(TF.md5Hash48(concat(lit("s2:"), col("user_id"))), lit(5L)))
-      users.agg(count(lit(1)).as("n_true"),
-          sum(when(col("h1") === 0, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("h2") === 0, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("h1") === 0 && col("h2") === 0, 1L).otherwise(0L))
-            .as("m"))
-        .select(col("n_true"), col("n1"), col("n2"), col("m"),
-          round((col("n1") + 1).cast("double") * (col("n2") + 1) /
-            (col("m") + 1) - 1.0, 2).as("n_hat"),
-          ((abs((col("n1") + 1).cast("double") * (col("n2") + 1) /
-            (col("m") + 1) - 1.0 - col("n_true"))) <=
-            lit(0.5) * col("n_true") + 100.0).as("ok"))
-    }),
-
-    // BRADLEY–TERRY PREFERENCE STRENGTHS (the pairwise-comparison
-    // model behind RLHF preference data, 2 fixed MM iterations —
-    // Hunter '04): within each order, the pricier lineitem "beats"
-    // the cheaper per part-pair (basket-bounded pair fan-out, the
-    // q130 contract); each MM round is one join + one sorted-fold
-    // aggregation over pair terms. Fixed iteration count ⇒ statically
-    // replayable oracle.
-    "q220_bradley_terry" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_partkey") % 100 < 4)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          col("l_linenumber"))
-      val pairs = li.as("x").join(li.as("y"), Seq("ok"))
-        .filter(col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("a"), col("y.pk").as("b"),
-          when(col("x.cents") > col("y.cents"), 1L)
-            .when(col("x.cents") < col("y.cents"), 0L)
-            .when(col("x.l_linenumber") < col("y.l_linenumber"), 1L)
-            .otherwise(0L).as("a_wins"))
-      // Caches.small: the comparison-graph grain (distinct co-ordered
-      // part pairs under the %100<4 cut) is computed ONCE and
-      // checkpointed — wins/sym and BOTH MM rounds re-read it, and
-      // without the checkpoint the unrolled lineage re-ran the
-      // lineitem scan + pair self-join per reference (84 scans in
-      // PLANS_r08; judge r08 "Next round" #3)
-      val nab = Caches.small(pairs.groupBy("a", "b")
-        .agg(count(lit(1)).as("n"), sum(col("a_wins")).as("wa")))
-      val wins = nab.select(col("a").as("pk"), col("wa").as("w"))
-        .unionByName(nab.select(col("b").as("pk"),
-          (col("n") - col("wa")).as("w")))
-        .groupBy("pk").agg(sum(col("w")).as("wins"))
-      val sym = nab.select(col("a").as("pk"), col("b").as("opp"), col("n"))
-        .unionByName(nab.select(col("b").as("pk"), col("a").as("opp"),
-          col("n")))
-      var pi = wins.select(col("pk"), lit(1.0).as("p"))
-      for (_ <- 1 to 2) {
-        val po = pi.select(col("pk").as("opp"), col("p").as("po"))
-        val denom = sym.join(pi, Seq("pk")).join(po, Seq("opp"))
-          .select(col("pk"),
-            (col("n").cast("double") / (col("p") + col("po"))).as("term"))
-          .groupBy("pk").agg(ssum(collect_list(col("term"))).as("den"))
-        // +0.5 win smoothing keeps every strength positive — a pair of
-        // zero-win items would otherwise divide by p+po = 0
-        pi = wins.join(denom, Seq("pk"))
-          .select(col("pk"),
-            ((col("wins").cast("double") + 0.5) / col("den")).as("p"))
-      }
-      val z = pi.agg(ssum(collect_list(col("p"))).as("z"))
-      pi.crossJoin(broadcast(z))
-        .join(wins, Seq("pk"))
-        .select(col("pk"), col("wins"),
-          round(col("p") / col("z"), 6).as("strength"))
-        .orderBy("pk")
-    }),
-
-    // PRIORITY SAMPLING without replacement (Efraimidis–Spirakis
-    // '06 — the weighted sample that composes across partitions): each
-    // row's priority key −ln(u)/w comes from a DETERMINISTIC md5
-    // uniform (no RNG, replayable); the per-stratum top-5 is one rank
-    // window with WindowGroupLimit. The scale story: keys are map-side,
-    // the sample is mergeable by just keeping the k smallest anywhere.
-    "q221_priority_sampling" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 0)
-        .select(col("c_mktsegment").as("seg"), col("c_custkey"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("w"))
-        .withColumn("u",
-          (TF.md5Hash48(col("c_custkey").cast("string"))
-            .cast("double") + 0.5) / lit(math.pow(2, 48)))
-        .withColumn("key", -log(col("u")) / col("w").cast("double"))
-      c.withColumn("rk", row_number().over(Window.partitionBy("seg")
-          .orderBy(col("key"), col("c_custkey"))))
-        .filter(col("rk") <= 5)
-        .select(col("seg"), col("rk"), col("c_custkey"), col("w"),
-          round(col("key") * 1e9, 6).as("priority_x1e9"))
-        .orderBy("seg", "rk")
-    }),
-
-    // MARKOV CONDITIONAL ENTROPY per user (how predictable is each
-    // user's event sequence — the behavioral-segmentation feature):
-    // bigram transition counts from ONE lead window over the per-user
-    // time order, H(next|cur) = −Σ p(cur,next)·ln p(next|cur) from
-    // exact integer counts; the per-user fold is bounded by the 25
-    // possible type-pairs, never by activity volume.
-    "q222_markov_entropy" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_type"),
-        col("ts"), col("event_id"))
-      val trans = ev.withColumn("nxt", lead(col("event_type"), 1).over(
-          Window.partitionBy("user_id")
-            .orderBy(col("ts"), col("event_id"))))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("user_id"), col("event_type").as("cur"), col("nxt"))
-        .agg(count(lit(1)).as("nij"))
-      val curTot = trans.groupBy("user_id", "cur")
-        .agg(sum(col("nij")).as("ni"))
-      val userTot = trans.groupBy("user_id")
-        .agg(sum(col("nij")).as("n"))
-      trans.join(curTot, Seq("user_id", "cur"))
-        .join(userTot, Seq("user_id"))
-        .withColumn("term",
-          -(col("nij").cast("double") / col("n")) *
-            log(col("nij").cast("double") / col("ni")))
-        .groupBy("user_id")
-        .agg(max(col("n")).as("n_transitions"),
-          count(lit(1)).as("n_distinct_pairs"),
-          round(ssum(collect_list(col("term"))), 6).as("cond_entropy"))
-        .orderBy("user_id")
-    }),
-
-    // DIRECTLY STANDARDIZED RATE (the "adjust for mix shift before
-    // comparing" epidemiology/ops primitive): period-A per-type
-    // purchase rates applied to period-B's activity mix give the
-    // EXPECTED purchases; SMR = actual/expected separates real change
-    // from composition change. Exact integer strata counts; one
-    // division per stratum at the end, folded sorted.
-    "q223_standardized_rate" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      // stratum = user's activity band (by event count, log2 bins)
-      val strat = ev.groupBy("user_id").agg(count(lit(1)).as("na"))
-        .select(col("user_id"),
-          length(bin(col("na"))).cast("long").as("stratum"))
-      val h = ev.crossJoin(broadcast(span))
-        .join(strat, Seq("user_id"))
-        .withColumn("is_a", col("us") < col("mid"))
-      val rates = h.filter(col("is_a")).groupBy("stratum")
-        .agg(count(lit(1)).as("na"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("pa"))
-      val mix = h.filter(!col("is_a")).groupBy("stratum")
-        .agg(count(lit(1)).as("nb"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("pb"))
-      rates.join(mix, Seq("stratum"))
-        .withColumn("expected",
-          col("nb").cast("double") * col("pa") / col("na"))
-        .groupBy()
-        .agg(sum(col("pb")).as("actual"),
-          round(ssum(collect_list(col("expected"))), 4).as("expected"),
-          round(sum(col("pb")).cast("double") /
-            ssum(collect_list(col("expected"))), 6).as("smr"),
-          count(lit(1)).as("n_strata"))
-    }),
-
-    // BENJAMINI–HOCHBERG FDR over per-segment A/B z-tests (q164 one
-    // level up — the multiple-testing correction every experimentation
-    // platform needs): exact cohort counts → z per segment → normal
-    // p-value via the Abramowitz–Stegun Φ polynomial (identical fixed
-    // op sequence in both engines — no erf built-in required) → BH
-    // step-up by rank. One agg + one tiny rank window over segments.
-    "q224_ab_fdr" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val c = t(s, dir, "customer")
-        .select(col("c_mktsegment").as("seg"), col("c_custkey"),
-          (pmod(TF.md5Hash48(col("c_custkey").cast("string")), lit(2L))
-            === 0).as("arm_a"),
-          (col("c_acctbal") > 4500.0).as("conv"))
-      val cell = c.groupBy("seg")
-        .agg(sum(when(col("arm_a"), 1L).otherwise(0L)).as("na"),
-          sum(when(col("arm_a") && col("conv"), 1L).otherwise(0L))
-            .as("xa"),
-          sum(when(!col("arm_a"), 1L).otherwise(0L)).as("nb"),
-          sum(when(!col("arm_a") && col("conv"), 1L).otherwise(0L))
-            .as("xb"))
-      val zed = cell
-        .withColumn("p1", d(col("xa")) / col("na"))
-        .withColumn("p2", d(col("xb")) / col("nb"))
-        .withColumn("pp", d(col("xa") + col("xb")) /
-          d(col("na") + col("nb")))
-        // degenerate segment (pp ∈ {0,1} ⇒ zero pooled variance) would
-        // give NaN z / NaN p and corrupt the BH rank order — same guard
-        // as q252_aa_calibration, mirrored in the oracle
-        .withColumn("z",
-          when(col("pp") === 0.0 || col("pp") === 1.0, lit(0.0))
-            .otherwise((col("p1") - col("p2")) /
-              sqrt(col("pp") * (lit(1.0) - col("pp")) *
-                (lit(1.0) / col("na") + lit(1.0) / col("nb")))))
-        // Φ(|z|) via Abramowitz–Stegun 7.1.26 (max err 7.5e-8): fixed
-        // polynomial in t = 1/(1 + 0.2316419|z|) times the normal pdf
-        .withColumn("az", abs(col("z")))
-        .withColumn("tt", lit(1.0) / (lit(1.0) + lit(0.2316419) * col("az")))
-        .withColumn("phi_tail",
-          exp(col("az") * col("az") * -0.5) * lit(0.3989422804014327) *
-            (((((lit(1.330274429) * col("tt") - lit(1.821255978)) *
-              col("tt") + lit(1.781477937)) * col("tt") -
-              lit(0.356563782)) * col("tt") + lit(0.319381530)) *
-              col("tt")))
-        .withColumn("p", lit(2.0) * col("phi_tail"))
-      // 5-segment grain, checkpointed: the BH-rank global windows below
-      // are gate-PROVEN bounded
-      val zedCk = Caches.small(zed)
-      val m = zedCk.agg(count(lit(1)).as("m"))
-      zedCk.crossJoin(broadcast(m))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("p"), col("seg"))))
-        .withColumn("bh_thresh",
-          col("rk").cast("double") / col("m") * 0.10)
-        .withColumn("max_rej", max(when(col("p") <= col("bh_thresh"),
-          col("rk"))).over(Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("seg"), col("na"), col("nb"),
-          round(col("z"), 4).as("z"),
-          round(col("p"), 6).as("p_value"), col("rk"),
-          round(col("bh_thresh"), 6).as("bh_thresh"),
-          (col("rk") <= coalesce(col("max_rej"), lit(0L))).as("rejected"))
-        .orderBy("rk")
-    }),
-
-    // MANN–KENDALL TREND TEST (the non-parametric "is there a trend at
-    // all" companion to q211's Theil–Sen slope): S = Σ sign(y_j − y_i)
-    // over day pairs — an EXACT integer statistic on the calendar-
-    // bounded series (broadcast pair build); variance with tie
-    // correction, z with the ±1 continuity adjustment. Doubles appear
-    // only in the final z.
-    "q225_mann_kendall" -> ((s, dir) => {
-      // day-grain frame checkpointed — referenced 4x downstream (pair
-      // build twice, tie table, day count); see q211/q226
-      val daily = graft.ops.Caches.small(t(s, dir, "lineitem")
-        .groupBy(expr("datediff(to_date(l_shipdate), date'1970-01-05')")
-          .cast("long").as("tt"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents")))
-      val pairs = daily.join(broadcast(daily
-          .select(col("tt").as("t2"), col("cents").as("c2"))),
-          col("t2") > col("tt"))
-        .select(signum(col("c2") - col("cents")).cast("long").as("sgn"))
-      val sstat = pairs.agg(sum(col("sgn")).as("s_stat"),
-        count(lit(1)).as("n_pairs"))
-      val ties = daily.groupBy("cents").agg(count(lit(1)).as("tj"))
-        .agg(sum(expr("tj * (tj - 1) * (2 * tj + 5)")).as("tie_corr"))
-      val n = daily.agg(count(lit(1)).as("n"))
-      sstat.crossJoin(broadcast(n)).crossJoin(broadcast(ties))
-        .withColumn("vars",
-          (expr("n * (n - 1) * (2 * n + 5)") - col("tie_corr"))
-            .cast("double") / 18.0)
-        .withColumn("z",
-          when(col("s_stat") > 0,
-            (col("s_stat") - 1).cast("double") / sqrt(col("vars")))
-            .when(col("s_stat") < 0,
-              (col("s_stat") + 1).cast("double") / sqrt(col("vars")))
-            .otherwise(lit(0.0)))
-        .select(col("n").as("n_days"), col("n_pairs"), col("s_stat"),
-          round(col("vars"), 2).as("var_s"), round(col("z"), 4).as("z"),
-          (abs(col("z")) > 1.96).as("significant"))
-    }),
-
-    // HODGES–LEHMANN LOCATION (median of pairwise means — the robust
-    // center that keeps ~95% efficiency under normality, unlike the
-    // median's 64%): pairwise (i ≤ j) means over the calendar-bounded
-    // daily series via the q211 broadcast pair build; the estimate is
-    // an exact half-cent integer picked by deterministic rank, shown
-    // beside the plain mean and median it robustifies.
-    "q226_hodges_lehmann" -> ((s, dir) => {
-      // day-grain frame checkpointed: referenced ~7x downstream (pair
-      // build twice, pair count twice, median rank + count, mean) —
-      // each reference otherwise re-runs the full lineitem aggregation
-      val daily = graft.ops.Caches.small(t(s, dir, "lineitem")
-        .groupBy(expr("datediff(to_date(l_shipdate), date'1970-01-05')")
-          .cast("long").as("tt"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents")))
-      val pairs = daily.join(broadcast(daily
-          .select(col("tt").as("t2"), col("cents").as("c2"))),
-          col("t2") >= col("tt"))
-        .select((col("cents") + col("c2")).as("half2"))
-      // exact median Walsh sum by bracketed selection — same shape as
-      // q211: only the median VALUE is needed, so Selection.kthValue's
-      // two map-side passes replace the r13 single-task sort of the
-      // days²/2-row pair frame (see Selection.scala scaladoc)
-      val sel = graft.ops.Selection.medianValue(pairs, col("half2"))
-      val med = daily.withColumn("rk", row_number().over(
-          Window.orderBy(col("cents"), col("tt"))))
-        .crossJoin(broadcast(daily.agg(count(lit(1)).as("nd"))))
-        .filter(col("rk") === expr("(nd + 1) div 2"))
-        .select(col("cents").as("med_cents"), col("nd"))
-      val mean = daily.agg(
-        (sum(col("cents")) / count(lit(1))).as("mean_cents"))
-      sel.crossJoin(broadcast(med)).crossJoin(broadcast(mean))
-        .select(col("n").as("n_pairs"), col("nd").as("n_days"),
-          // 3 decimals: half2/200 is an exact multiple of 0.005, so a
-          // 2-decimal round would sit ON the tie boundary every odd sum
-          round(col("kth").cast("double") / 200.0, 3).as("hl_location"),
-          round(col("med_cents").cast("double") / 100.0, 2).as("median"),
-          round(col("mean_cents").cast("double") / 100.0, 2).as("mean"))
-    }),
-
-    // VALUE-AT-RISK + EXPECTED SHORTFALL (the tail-risk pair — CVaR is
-    // coherent, VaR alone is not): per-type signed daily P&L (q178's
-    // parity deltas at day grain), the k = ⌈0.05n⌉ worst days picked by
-    // ONE rank window; VaR95 is the k-th worst exactly, CVaR95 the
-    // exact integer mean of the tail. No percentile sketch; doubles
-    // only at display.
-    "q227_var_cvar" -> ((s, dir) => {
-      val pnl = events(s, dir)
-        .select(col("event_type").as("ty"), to_date(col("ts")).as("day"),
-          (when(col("event_id") % 2 === 0, 1L).otherwise(-1L) *
-            round(col("value") * 100, 0).cast("long")).as("delta"))
-        .groupBy("ty", "day").agg(sum(col("delta")).as("d"))
-      val full = Window.partitionBy("ty")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      pnl.withColumn("n", count(lit(1)).over(full))
-        .withColumn("rk", row_number().over(Window.partitionBy("ty")
-          .orderBy(col("d"), col("day"))))
-        .withColumn("k", expr("(n + 19) div 20"))
-        .filter(col("rk") <= col("k"))
-        .groupBy("ty")
-        .agg(max(col("n")).as("n_days"), max(col("k")).as("k_tail"),
-          (-max(col("d"))).as("var95_cents"),
-          // integer cents via floor(x+0.5): mean of k integers lands
-          // exactly on .5 whenever k=2 — round()'s tie zone
-          floor(-(sum(col("d")).cast("double") / count(lit(1))) + 0.5)
-            .cast("long").as("cvar95_cents"),
-          date_format(min(struct(col("d"), col("day")))("day"),
-            "yyyy-MM-dd").as("worst_day"))
-        .orderBy("ty")
-    }),
-
-    // Q-Q DECILE TABLE (distribution-vs-distribution at matching
-    // quantiles — where a KS scalar says "different", the Q-Q table
-    // says WHERE): exact decile values of two segments' balances by
-    // rank cross-multiplication (rk·10 ≥ d·n picks ⌈d·n/10⌉-th), one
-    // rank window per segment, joined on decile.
-    "q228_qq_table" -> ((s, dir) => {
-      def dec(seg: String, out: String) = {
-        val c = t(s, dir, "customer")
-          .filter(col("c_mktsegment") === seg && col("c_acctbal") > 0)
-          .select(round(col("c_acctbal") * 100, 0).cast("long")
-            .as("cents"), col("c_custkey"))
-        val n = c.agg(count(lit(1)).as("n"))
-        // two-phase global rank over the segment's customers (dimension-
-        // sized frame — no single-partition sort)
-        Dedup.numberRows(c, struct(col("cents"), col("c_custkey")), "rk")
-          .crossJoin(broadcast(n))
-          .select(col("cents"), col("rk"), col("n"),
-            explode(sequence(lit(1), lit(9))).as("dec"))
-          .filter(col("rk") * 10 >= col("dec") * col("n") &&
-            (col("rk") - 1) * 10 < col("dec") * col("n"))
-          .groupBy("dec")
-          .agg(min(col("cents")).as(out))
-      }
-      dec("AUTOMOBILE", "q_auto").join(dec("BUILDING", "q_build"),
-          Seq("dec"))
-        .select(col("dec"),
-          round(col("q_auto").cast("double") / 100.0, 2).as("q_auto"),
-          round(col("q_build").cast("double") / 100.0, 2).as("q_build"),
-          round(col("q_auto").cast("double") / col("q_build"), 4)
-            .as("ratio"))
-        .orderBy("dec")
-    }),
-
-    // MUTUAL INFORMATION between event type and value decile (the
-    // information-theoretic dependence measure beside q180's chi² —
-    // detects NONLINEAR association a correlation misses): global
-    // decile bounds broadcast (q107 idiom), exact joint/margin counts,
-    // MI = Σ p·ln(p·N²/(r·c)) folded sorted; normalized by the smaller
-    // marginal entropy.
-    "q229_mutual_information" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val ev = events(s, dir).select(col("event_type").as("ty"),
-        col("value").cast("double").as("v"))
-      val bounds = ev.agg(expr(
-        "percentile(v, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("bs"))
-      val binned = ev.crossJoin(broadcast(bounds))
-        .select(col("ty"),
-          (lit(1) + size(filter(col("bs"), b => col("v") > b))).as("bin"))
-      val joint = binned.groupBy("ty", "bin").agg(count(lit(1)).as("nij"))
-      val rows = joint.groupBy("ty").agg(sum(col("nij")).as("ri"))
-      val cols_ = joint.groupBy("bin").agg(sum(col("nij")).as("cj"))
-      val tot = joint.agg(sum(col("nij")).as("nn"))
-      val mi = joint.join(broadcast(rows), Seq("ty"))
-        .join(broadcast(cols_), Seq("bin"))
-        .crossJoin(broadcast(tot))
-        .withColumn("term", d(col("nij")) / col("nn") *
-          log(d(col("nij")) * col("nn") / (d(col("ri")) * col("cj"))))
-        .agg(ssum(collect_list(col("term"))).as("mi"))
-      val hr = rows.crossJoin(broadcast(tot))
-        .withColumn("t", -(d(col("ri")) / col("nn")) *
-          log(d(col("ri")) / col("nn")))
-        .agg(ssum(collect_list(col("t"))).as("h_ty"))
-      val hc = cols_.crossJoin(broadcast(tot))
-        .withColumn("t", -(d(col("cj")) / col("nn")) *
-          log(d(col("cj")) / col("nn")))
-        .agg(ssum(collect_list(col("t"))).as("h_bin"))
-      mi.crossJoin(broadcast(hr)).crossJoin(broadcast(hc))
-        .select(round(col("mi"), 6).as("mi"),
-          round(col("h_ty"), 6).as("h_ty"),
-          round(col("h_bin"), 6).as("h_bin"),
-          round(col("mi") / least(col("h_ty"), col("h_bin")), 6)
-            .as("nmi"))
-    }),
-
-    // ROBUST LOCATION ZOO (mean vs 10%-trimmed vs winsorized vs
-    // median, per group — how much do the tails move your center?):
-    // ONE per-group rank window feeds all four: exact rank cuts for
-    // the trim, rank-clamped values for the winsorization, the
-    // cross-multiplied middle for the median. Integer cents until
-    // display.
-    "q230_robust_location" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
-          col("l_orderkey"), col("l_linenumber"))
-      val full = Window.partitionBy("flag")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val r = li.withColumn("n", count(lit(1)).over(full))
-        .withColumn("rk", row_number().over(Window.partitionBy("flag")
-          .orderBy(col("cents"), col("l_orderkey"), col("l_linenumber"))))
-        .withColumn("lo", expr("(n + 9) div 10"))
-        .withColumn("hi", expr("n - (n + 9) div 10"))
-      val lov = r.filter(col("rk") === col("lo") + 1)
-        .select(col("flag"), col("cents").as("lov"))
-      val hiv = r.filter(col("rk") === col("hi"))
-        .select(col("flag"), col("cents").as("hiv"))
-      r.join(broadcast(lov), Seq("flag")).join(broadcast(hiv), Seq("flag"))
-        .groupBy("flag")
-        .agg(max(col("n")).as("n"),
-          round(sum(col("cents")).cast("double") / max(col("n")) / 100.0,
-            2).as("mean"),
-          round(sum(when(col("rk") > col("lo") && col("rk") <= col("hi"),
-            col("cents"))).cast("double") /
-            sum(when(col("rk") > col("lo") && col("rk") <= col("hi"), 1L)
-              .otherwise(0L)) / 100.0, 2).as("trimmed10"),
-          round(sum(least(greatest(col("cents"), col("lov")), col("hiv")))
-            .cast("double") / max(col("n")) / 100.0, 2).as("winsorized10"),
-          round(min(when(col("rk") * 2 >= col("n"), col("cents")))
-            .cast("double") / 100.0, 2).as("median"))
-        .orderBy("flag")
-    }),
-
-    // EMBEDDING ISOTROPY DIAGNOSTICS (mean-vector norm vs mean squared
-    // norm — anisotropic embeddings break cosine retrieval, Ethayarajh
-    // EMNLP'19): per-dimension means through the q93 TWO-LEVEL bucketed
-    // folds (no per-dim buffer scales with corpus), per-row norms
-    // folded within the 64-dim row then two-level across rows.
-    "q231_embedding_isotropy" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
-        .withColumn("bk", pmod(col("vec_id"), lit(4096)))
-      val cells = emb.select(col("bk"), posexplode(col("v")))
-        .groupBy(col("pos"), col("bk"))
-        .agg(ssum(collect_list(col("col"))).as("s1"),
-          count(lit(1)).as("n1"))
-      val mu = cells.groupBy("pos")
-        .agg((ssum(collect_list(col("s1"))) / sum(col("n1"))).as("mu"))
-      val mu2 = mu.agg(ssum(collect_list(col("mu") * col("mu")))
-        .as("mu_norm2"), count(lit(1)).as("dims"))
-      val norms = emb.select(col("bk"),
-          aggregate(expr("transform(v, x -> x * x)"), lit(0.0),
-            (a, x) => a + x).as("n2"))
-        .groupBy("bk")
-        .agg(ssum(collect_list(sqrt(col("n2")))).as("sn"),
-          ssum(collect_list(col("n2"))).as("sn2"),
-          count(lit(1)).as("nb"))
-      val agg2 = norms.agg(ssum(collect_list(col("sn"))).as("sn"),
-        ssum(collect_list(col("sn2"))).as("sn2"),
-        sum(col("nb")).as("n"))
-      agg2.crossJoin(broadcast(mu2))
-        .select(col("n"), col("dims").cast("long").as("dims"),
-          round(col("sn") / col("n"), 6).as("mean_norm"),
-          round(col("mu_norm2") / (col("sn2") / col("n")), 6)
-            .as("isotropy"))
-    }),
-
-    // ANN RECALL@10 EVALUATION (the metric that justifies an
-    // approximate index): IVF(nprobe=1) hits vs brute-force truth for
-    // a deterministic query panel, recall per query + the panel mean.
-    // Truth and approx both rank by round-6 cosine with id tie-break
-    // (the q24 determinism contract); candidate scoring touches only
-    // the probed cluster.
-    "q232_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      // Caches.small: the panel build side becomes a checkpointed scan
-      // the plan gate PROVES bounded (no allowlist entry needed)
-      val queries = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("q")))
-      val exact = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-      val centroids = Caches.small(emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        centroids, "cid", "cv")
-      val qcl = queries.crossJoin(broadcast(centroids))
-        .select(col("qid"), col("q"), col("cid"),
-          round(Similarity.cosine(col("q"), col("cv")), 6).as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("qid"), col("q"), col("cid").as("cluster"))
-      val approx = assigned.join(broadcast(qcl), Seq("cluster"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-      exact.join(approx.select(col("qid"), col("vec_id"), lit(1).as("hit")),
-          Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("n_truth"), 4))
-        .orderBy("qid")
-    }),
-
-    // TEMPERATURE-SCALED SOURCE SAMPLING (the multilingual/domain
-    // mixing rule, α=0.5 — upweights small sources without drowning
-    // big ones; the data-mix table every pretraining run publishes):
-    // p_s ∝ n_s^α from exact counts, oversampling factor = p_s·N/n_s.
-    // One count agg + one 20-element sorted fold.
-    "q233_sampling_temperature" -> ((s, dir) => {
-      val cnt = t(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("n_chars"))
-      val z = cnt.agg(
-        ssum(collect_list(sqrt(col("n_docs").cast("double")))).as("z"),
-        sum(col("n_docs")).as("nn"))
-      cnt.crossJoin(broadcast(z))
-        .withColumn("p", sqrt(col("n_docs").cast("double")) / col("z"))
-        .select(col("source"), col("n_docs"), col("n_chars"),
-          round(col("p"), 6).as("p_sample"),
-          round(col("p") * col("nn") / col("n_docs"), 4)
-            .as("oversample_x"))
-        .orderBy("source")
-    }),
-
-    // SEQUENCE-LENGTH BUCKETING + PADDING WASTE (the batch-shape
-    // economics behind q71's packing): power-of-two length buckets via
-    // binary-string length (pure integer), padding waste = what a
-    // pad-to-bucket-cap batcher burns vs the exact token count. One
-    // map-side length computation + one bucket agg.
-    "q234_padding_waste" -> ((s, dir) => {
-      val lens = t(s, dir, "documents")
-        .select(size(split(TF.normalizeText(col("text")), " "))
-          .cast("long").as("len"))
-        .filter(col("len") >= 1)
-        .withColumn("k", length(bin(greatest(col("len") - 1, lit(1))))
-          .cast("int"))
-        .withColumn("cap", when(col("len") === 1, 1L)
-          .otherwise(expr("cast(shiftleft(1L, k) as bigint)")))
-      lens.groupBy("cap")
-        .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("n_tokens"),
-          sum(col("cap") - col("len")).as("n_pad"))
-        .withColumn("padding_frac", round(col("n_pad").cast("double") /
-          (col("n_tokens") + col("n_pad")), 6))
-        .orderBy("cap")
-    }),
-
-    // JOIN CARDINALITY MODEL vs ACTUAL (the q-error audit of the
-    // textbook estimator |L|·|R|/max(d_L,d_R) — the planner diagnostic
-    // behind every join-order decision): three FK joins, estimates
-    // from count/distinct-count tables only, actuals from the real
-    // join counts, q-error = max(est/act, act/est).
-    "q235_cardinality_model" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      def probe(name: String, l: DataFrame, lk: String,
-                r: DataFrame, rk: String): DataFrame = {
-        val stats = l.agg(count(lit(1)).as("n_left"),
-            countDistinct(col(lk)).as("d_left"))
-          .crossJoin(broadcast(r.agg(count(lit(1)).as("n_right"),
-            countDistinct(col(rk)).as("d_right"))))
-        val actual = l.join(r, col(lk) === col(rk))
-          .agg(count(lit(1)).as("actual"))
-        stats.crossJoin(broadcast(actual))
-          .select(lit(name).as("join_name"), col("n_left"),
-            col("d_left"), col("n_right"), col("d_right"),
-            floor(d(col("n_left")) * col("n_right") /
-              greatest(col("d_left"), col("d_right")) + 0.5).cast("long")
-              .as("est"),
-            col("actual"))
-      }
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      val li = t(s, dir, "lineitem"); val p = t(s, dir, "part")
-      val su = t(s, dir, "supplier")
-      probe("orders_customer", o, "o_custkey", c, "c_custkey")
-        .unionByName(probe("lineitem_part", li, "l_partkey", p,
-          "p_partkey"))
-        .unionByName(probe("lineitem_supplier", li, "l_suppkey", su,
-          "s_suppkey"))
-        .withColumn("q_error", round(greatest(
-          d(col("est")) / col("actual"),
-          d(col("actual")) / col("est")), 4))
-        .orderBy("join_name")
-    }),
-
-    // RECIPROCAL RANK FUSION (Cormack SIGIR'09 — combining rankings
-    // without score calibration, the default hybrid-retrieval merge):
-    // the revenue and quantity part rankings fuse by Σ 1/(60+rank);
-    // items missing from one list contribute only the other's term
-    // (full outer). Two top-50 rank windows + one join — no score
-    // normalization stage at all.
-    "q236_rrf_fusion" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val byRev = li.groupBy("l_partkey")
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("v"))
-        .withColumn("ra", row_number().over(
-          Window.orderBy(col("v").desc, col("l_partkey"))))
-        .filter(col("ra") <= 50).select("l_partkey", "ra")
-      val byQty = li.groupBy("l_partkey")
-        .agg(sum(col("l_quantity").cast("long")).as("q"))
-        .withColumn("rb", row_number().over(
-          Window.orderBy(col("q").desc, col("l_partkey"))))
-        .filter(col("rb") <= 50).select("l_partkey", "rb")
-      byRev.join(byQty, Seq("l_partkey"), "full_outer")
-        .withColumn("rrf",
-          coalesce(lit(1.0) / (col("ra") + 60), lit(0.0)) +
-            coalesce(lit(1.0) / (col("rb") + 60), lit(0.0)))
-        .withColumn("fused_rank", row_number().over(
-          Window.orderBy(col("rrf").desc, col("l_partkey"))))
-        .filter(col("fused_rank") <= 20)
-        .select(col("fused_rank"), col("l_partkey"), col("ra"),
-          col("rb"), round(col("rrf"), 6).as("rrf"))
-        .orderBy("fused_rank")
-    }),
-
-    // POPULARITY-BASELINE HIT-RATE BACKTEST (the recommender floor
-    // every model must beat): the first half's top-10 parts by
-    // purchase count become the static recommendation; hit-rate is
-    // the fraction of SECOND-half lineitems touching them. One count
-    // agg + one top-k window + one broadcast semi-join — the
-    // train/test split is exact integer microseconds.
-    "q237_popularity_hitrate" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"),
-          expr("unix_micros(cast(l_shipdate as timestamp))").as("us"))
-      val span = li.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val halved = li.crossJoin(broadcast(span))
-      val top10 = halved.filter(col("us") < col("mid"))
-        .groupBy("l_partkey").agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("n").desc, col("l_partkey"))))
-        .filter(col("rk") <= 10)
-        .select(col("l_partkey"), lit(1).as("rec"))
-      halved.filter(col("us") >= col("mid"))
-        .join(broadcast(top10), Seq("l_partkey"), "left")
-        .agg(count(lit(1)).as("n_test"),
-          sum(coalesce(col("rec"), lit(0))).cast("long").as("n_hits"))
-        .select(col("n_test"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("n_test"), 6)
-            .as("hit_rate"))
-    }),
-
-    // ABC INVENTORY CLASSIFICATION (the 80/15/5 Pareto cut every
-    // supply chain runs): parts ranked by exact revenue, cumulative
-    // share by integer cross-multiplication (cum·100 vs thresh·total —
-    // no float compare decides a class), per-class counts and shares.
-    // The cumulative ranking runs TWO-PHASE (Dedup.numberAndRunningSum:
-    // range-partition + local cumsum + broadcast partition offsets), so
-    // no single partition ever sorts the whole part dimension.
-    "q238_abc_classification" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem").groupBy("l_partkey")
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("v"))
-      val tot = rev.agg(sum(col("v")).as("tv"))
-      val ranked = Dedup.numberAndRunningSum(rev,
-          struct((-col("v")).as("nv"), col("l_partkey")), "rk",
-          Seq("cum" -> col("v")))
-        .crossJoin(broadcast(tot))
-        .withColumn("cls",
-          when(col("cum") * 100 <= col("tv") * 80, "A")
-            .when(col("cum") * 100 <= col("tv") * 95, "B")
-            .otherwise(lit("C")))
-      ranked.groupBy("cls")
-        .agg(count(lit(1)).as("n_parts"), sum(col("v")).as("rev_cents"),
-          round(sum(col("v")).cast("double") / max(col("tv")), 6)
-            .as("rev_share"))
-        .orderBy("cls")
-    }),
-
-    // DUPLICATE-PAYMENT DETECTION (same payer, same $5,000
-    // amount-BUCKET, within 90 days — the fin-ops control, bucketed so
-    // near-identical amounts are comparable): ONE lag window over
-    // (custkey, bucket, date) order finds adjacent same-bucket orders;
-    // no self-join, no pair explosion — the sort makes candidate pairs
-    // ADJACENT. Flags grouped per customer with exact day gaps.
-    "q239_duplicate_payments" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_custkey"),
-          expr("cast(round(o_totalprice * 100) as bigint) div 500000")
-            .as("bucket"),
-          to_date(col("o_orderdate")).as("day"), col("o_orderkey"))
-      val w = Window.partitionBy("o_custkey", "bucket")
-        .orderBy(col("day"), col("o_orderkey"))
-      o.withColumn("pday", lag(col("day"), 1).over(w))
-        .withColumn("pkey", lag(col("o_orderkey"), 1).over(w))
-        .filter(col("pday").isNotNull &&
-          datediff(col("day"), col("pday")) <= 90)
-        .select(col("o_custkey"), col("pkey").as("first_key"),
-          col("o_orderkey").as("dup_key"),
-          col("bucket").as("amount_bucket"),
-          datediff(col("day"), col("pday")).cast("long").as("gap_days"))
-        .orderBy("o_custkey", "dup_key")
-    }),
-
-    // SLA ERROR-BUDGET BURN-DOWN (SRE's 30-day rolling error rate vs a
-    // 1% budget): day-grain error/total counts, a 30-row rolling frame
-    // over the calendar-bounded series, burn = errors/(budget·total)
-    // by integer cross-multiplication until the display division; the
-    // breach flag never touches a float.
-    "q240_error_budget" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
-            .as("e"))
-      val w = Window.orderBy("day").rowsBetween(-29, 0)
-      daily.withColumn("n30", sum(col("n")).over(w))
-        .withColumn("e30", sum(col("e")).over(w))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n30"), col("e30"),
-          round(col("e30").cast("double") * 100.0 / col("n30"), 4)
-            .as("err_pct"),
-          (col("e30") * 100 > col("n30")).as("over_budget"))
-        .orderBy("day")
-    }),
-
-    // RECURSIVE CTE hierarchy rollup (Spark 4's WITH RECURSIVE — the
-    // SQL-surface form of the iterative closure the engine otherwise
-    // does with driver loops): parts form a 10-ary containment tree
-    // (parent = pk div 10); the recursion walks every part to its
-    // root, then revenue rolls up to (root, depth) cells. Both engines
-    // run the IDENTICAL recursive SQL — the oracle is literally the
-    // same text.
-    "q241_recursive_rollup" -> ((s, dir) => {
-      t(s, dir, "part").createOrReplaceTempView("part")
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        """WITH RECURSIVE anc AS (
-             SELECT p_partkey AS pk, p_partkey AS node, 0 AS depth
-             FROM part
-             UNION ALL
-             SELECT pk, node div 10 AS node, depth + 1
-             FROM anc WHERE node >= 10)
-           , rooted AS (
-             SELECT pk, node AS root, depth
-             FROM anc WHERE node < 10)
-           , rev AS (
-             SELECT l_partkey AS pk,
-               sum(cast(round(l_extendedprice * 100) as bigint)) AS v
-             FROM lineitem GROUP BY 1)
-           SELECT root, cast(max(depth) as bigint) AS max_depth,
-             count(*) AS n_parts,
-             cast(sum(coalesce(v, 0)) as bigint) AS rev_cents
-           FROM rooted LEFT JOIN rev USING (pk)
-           GROUP BY root ORDER BY root""")
-    }),
-
-    // CORPUS NOVELTY DECAY (what fraction of each week's trigrams has
-    // never been seen before — the "is new data still new?" curve
-    // that decides when to stop crawling a source): first-occurrence
-    // week per distinct shingle (one min-agg), then per-week new vs
-    // total distinct. Weeks are integer day-div-7; shingles go through
-    // the barrier-materialized build (q202 lesson).
-    "q242_novelty_decay" -> ((s, dir) => {
-      val par = s.sparkContext.defaultParallelism
-      // synthetic crawl week: doc_id order stands in for crawl time
-      val sh = t(s, dir, "documents")
-        .select((col("doc_id") % 8).as("wk"),
-          split(TF.normalizeText(col("text")), " ").as("__w"))
-        .repartition(par)
-        .select(col("wk"),
-          explode_outer(DedupOps.shinglesFromWords(col("__w"), 3))
-            .as("g"))
-        .filter(col("g").isNotNull)
-        .distinct()
-      val first = sh.groupBy("g").agg(min(col("wk")).as("fw"))
-      val perWeek = sh.groupBy("wk").agg(count(lit(1)).as("n_distinct"))
-      val novel = first.groupBy(col("fw").as("wk"))
-        .agg(count(lit(1)).as("n_new"))
-      perWeek.join(novel, Seq("wk"), "left")
-        .select(col("wk"), col("n_distinct"),
-          coalesce(col("n_new"), lit(0L)).as("n_new"),
-          round(coalesce(col("n_new"), lit(0L)).cast("double") /
-            col("n_distinct"), 6).as("novelty_rate"))
-        .orderBy("wk")
-    }),
-
-    // WATER-FILLING TOKEN-BUDGET ALLOCATION (cap-aware fair split of a
-    // training budget across sources): sources sorted ASC by size; at
-    // each rank the candidate level ℓ = (B − cum_smaller)/(remaining
-    // sources) is feasible iff ℓ ≥ this source's size — the LAST
-    // feasible rank fixes ℓ, smaller sources keep everything, larger
-    // ones are clipped to ℓ (floor-div + remainder bumps keep the
-    // total EXACTLY B). One sort over the source dimension.
-    "q243_water_filling" -> ((s, dir) => {
-      // budget = half the corpus tokens, so clipping engages at every
-      // SF and the Σ alloc == budget gate is non-vacuous
-      val cnt = t(s, dir, "documents").groupBy("source")
-        .agg(sum(size(split(TF.normalizeText(col("text")), " ")))
-          .cast("long").as("n_tok"))
-      // the source dimension is a VALUE grain (grows with the corpus),
-      // so the global rank + running sum run in the two-phase
-      // numberAndRunningSum form (range-partition → local rank/cumsum →
-      // broadcast partition offsets) — no single-partition sort. The
-      // order key is packed into one struct ((n_tok, source) asc; both
-      // components ascending, source breaks ties → globally monotone).
-      val ranked = Dedup.numberAndRunningSum(cnt,
-          struct(col("n_tok"), col("source")), "rk",
-          Seq("cum" -> col("n_tok")))
-        .crossJoin(broadcast(cnt.agg(count(lit(1)).as("m"),
-          expr("sum(n_tok) div 2").as("b"))))
-      // last rank where the remaining-average level covers this size
-      val lvl = ranked
-        .filter((col("cum") - col("n_tok")) +
-          col("n_tok") * (col("m") - col("rk") + 1) <= col("b"))
-        .agg(max(col("rk")).as("kfull"))
-      val withLvl = ranked.crossJoin(broadcast(lvl))
-        .withColumn("kfull", coalesce(col("kfull"), lit(0L)))
-      // cum at the waterline rank — a one-row aggregate crossJoined
-      // back (replaces the former partition-less whole-frame max window)
-      val cumk = withLvl.filter(col("rk") <= col("kfull"))
-        .agg(coalesce(max(col("cum")), lit(0L)).as("cumk"))
-      withLvl.crossJoin(broadcast(cumk))
-        .withColumn("alloc",
-          when(col("rk") <= col("kfull"), col("n_tok"))
-            .otherwise(expr("(b - cumk) div (m - kfull)") +
-              when(col("rk") - col("kfull") <=
-                expr("(b - cumk) % (m - kfull)"), 1L)
-                .otherwise(0L)))
-        .select(col("source"), col("n_tok"), col("alloc"),
-          (col("alloc") < col("n_tok")).as("clipped"))
-        .orderBy("source")
-    }),
-
-    // HARD-NEGATIVE MINING (the contrastive-training data op: for each
-    // anchor, the most similar vector with a DIFFERENT label): a
-    // deterministic anchor panel broadcast against the corpus, top
-    // cross-label cosine by the q24 round-6 rank contract. At corpus
-    // scale the panel loop is the same broadcast shape — candidates
-    // would come from the LSH buckets instead of a full scan.
-    "q244_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val anchors = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("aid"), col("embedding").as("av"),
-          col("label").as("albl")))
-      emb.crossJoin(broadcast(anchors))
-        .filter(col("label") =!= col("albl"))
-        .select(col("aid"), col("albl"), col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("av")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("aid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") === 1)
-        .select(col("aid"), col("albl"), col("vec_id").as("hard_neg"),
-          col("label").as("neg_label"), col("cs").as("cosine"))
-        .orderBy("aid")
-    }),
-
-    // CLASS-BALANCED WEIGHTS via effective number of samples (Cui
-    // CVPR'19 — reweighting that saturates instead of exploding on
-    // rare classes): w_c ∝ (1−β)/(1−β^{n_c}), β=0.999, normalized to
-    // sum to the class count. Exact label counts; pow/division in a
-    // fixed op sequence; one tiny sorted fold for the normalizer.
-    "q245_class_weights" -> ((s, dir) => {
-      val cnt = t(s, dir, "embeddings").groupBy("label")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("raw", (lit(1.0) - lit(0.999)) /
-          (lit(1.0) - pow(lit(0.999), col("n").cast("double"))))
-      val z = cnt.agg(ssum(collect_list(col("raw"))).as("z"),
-        count(lit(1)).as("k"))
-      cnt.crossJoin(broadcast(z))
-        .select(col("label"), col("n"),
-          round(col("raw") * col("k") / col("z"), 6).as("weight"))
-        .orderBy("label")
-    }),
-
-    // kNN LABEL PURITY (label-noise screening: if a vector's neighbors
-    // disagree with its label, the label is suspect): for the anchor
-    // panel, the 5 nearest neighbors' label agreement per anchor and
-    // the per-label mean purity. Same broadcast-panel shape as q244;
-    // purity from exact integer votes.
-    "q246_knn_label_purity" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val anchors = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("aid"), col("embedding").as("av"),
-          col("label").as("albl")))
-      val nn = emb.crossJoin(broadcast(anchors))
-        .filter(col("vec_id") =!= col("aid"))
-        .select(col("aid"), col("albl"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("av")), 6)
-            .as("cs"), col("vec_id"))
-        .withColumn("rn", row_number().over(Window.partitionBy("aid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 5)
-      nn.groupBy("aid", "albl")
-        .agg(sum(when(col("label") === col("albl"), 1L).otherwise(0L))
-          .as("agree"))
-        .groupBy(col("albl").as("label"))
-        .agg(count(lit(1)).as("n_anchors"),
-          sum(col("agree")).as("n_agree"),
-          round(sum(col("agree")).cast("double") /
-            (count(lit(1)) * 5), 4).as("mean_purity"))
-        .orderBy("label")
-    }),
-
-    // DEDUPLICATION IMPACT REPORT (what exact-dup removal actually
-    // saves, per source — the before/after table a curation run
-    // publishes): md5 fingerprint groups (q18 machinery), per source:
-    // docs/tokens before vs after keep-first, dup factor. Two
-    // aggregations, no pairwise anything.
-    "q247_dedup_impact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          TA.fingerprint(col("text")).as("fp"),
-          size(split(TF.normalizeText(col("text")), " ")).cast("long")
-            .as("tok"))
-      val keep = d.withColumn("rn", row_number().over(
-          Window.partitionBy("fp").orderBy(col("doc_id"))))
-        .withColumn("kept", col("rn") === 1)
-      keep.groupBy("source")
-        .agg(count(lit(1)).as("docs_before"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("docs_after"),
-          sum(col("tok")).as("tokens_before"),
-          sum(when(col("kept"), col("tok")).otherwise(0L))
-            .as("tokens_after"))
-        .withColumn("dup_factor", round(col("tokens_before")
-          .cast("double") / col("tokens_after"), 4))
-        .orderBy("source")
-    }),
-      // GEOHASH ENCODING (base-32 Morton interleave — the geospatial
-    // bucketing primitive behind spatial joins and map tiles): the
-    // q185 synthetic coordinates quantize to 13+12 bit cells; the
-    // 25-bit interleave is an explode over bit positions + ONE integer
-    // sum (no loops, no UDF), then five substring lookups into the
-    // base-32 alphabet. Every step is integer arithmetic both engines
-    // replay exactly.
-    "q248_geohash" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") * 37547 % 17000) / 100.0 - 85.0).as("lat"),
-        ((col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).as("lon"))
-      val quant = cust
-        .withColumn("lonb", floor((col("lon") + 180.0) / 360.0 * 8192)
-          .cast("long"))
-        .withColumn("latb", floor((col("lat") + 90.0) / 180.0 * 4096)
-          .cast("long"))
-      // morton: even output bits (from MSB) take lon bits, odd take lat
-      val bits = quant.select(col("c_custkey"), col("lonb"), col("latb"),
-          explode(sequence(lit(0), lit(24))).as("i"))
-        .withColumn("bit",
-          when(col("i") % 2 === 0,
-            expr("(lonb div cast(pow(2, 12 - i div 2) as long)) % 2"))
-            .otherwise(
-              expr("(latb div cast(pow(2, 11 - i div 2) as long)) % 2")))
-        .withColumn("contrib",
-          expr("bit * cast(pow(2, 24 - i) as long)"))
-      val morton = bits.groupBy("c_custkey", "lonb", "latb")
-        .agg(sum(col("contrib")).as("m"))
-      val alpha = "0123456789bcdefghjkmnpqrstuvwxyz"
-      val hash = morton.withColumn("gh", concat(
-        (0 until 5).map(c => expr(
-          s"substring('$alpha', cast((m div cast(pow(2, ${20 - 5 * c})" +
-            " as long)) % 32 + 1 as int), 1)")): _*))
-      hash.select(col("c_custkey"), col("gh")).orderBy("c_custkey")
-    }),
-
-    // MARKOV NEXT-EVENT BACKTEST (does yesterday's transition matrix
-    // predict tomorrow? — the sequence-model baseline eval): the
-    // transition matrix fits on the time-first half (exact bigram
-    // counts, argmax next-type per current-type with deterministic
-    // tie), accuracy measures on the second half's transitions. The
-    // model is a 25-cell broadcast.
-    "q249_markov_backtest" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_type"),
-        col("ts"), col("event_id"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val seq0 = ev.crossJoin(broadcast(span))
-        .withColumn("nxt", lead(col("event_type"), 1).over(
-          Window.partitionBy("user_id")
-            .orderBy(col("ts"), col("event_id"))))
-        .withColumn("nxt_us", lead(col("us"), 1).over(
-          Window.partitionBy("user_id")
-            .orderBy(col("ts"), col("event_id"))))
-        .filter(col("nxt").isNotNull)
-      val model = seq0.filter(col("nxt_us") < col("mid"))
-        .groupBy(col("event_type").as("cur"), col("nxt"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("rn", row_number().over(Window.partitionBy("cur")
-          .orderBy(col("n").desc, col("nxt"))))
-        .filter(col("rn") === 1)
-        .select(col("cur"), col("nxt").as("pred"))
-      seq0.filter(col("us") >= col("mid"))
-        .join(broadcast(model), col("event_type") === col("cur"), "left")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("nxt") === col("pred"), 1L).otherwise(0L))
-            .as("n_correct"),
-          max(col("pred")).as("predicted_next"))
-        .withColumn("accuracy", round(col("n_correct").cast("double") /
-          col("n_test"), 4))
-        .orderBy("event_type")
-    }),
-
-    // CUPED VARIANCE REDUCTION (Deng WSDM'13 — the pre-experiment
-    // covariate adjustment every A/B platform runs): X = first-half
-    // user spend, Y = second-half; θ = cov(X,Y)/var(X) from
-    // DECIMAL-exact moments; the report gates the variance-reduction
-    // ratio 1 − (1 − ρ²). All sums exact integers until the fixed
-    // final op sequence.
-    "q250_cuped" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val ev = events(s, dir).select(col("user_id"),
-        round(col("value") * 100, 0).cast("long").as("cents"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(span))
-        .groupBy("user_id")
-        .agg(sum(when(col("us") < col("mid"), col("cents"))
-          .otherwise(0L)).cast("decimal(19,0)").as("x"),
-          sum(when(col("us") >= col("mid"), col("cents"))
-            .otherwise(0L)).cast("decimal(19,0)").as("y"))
-      per.agg(count(lit(1)).cast("decimal(19,0)").as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .select(col("n").cast("long").as("n_users"),
-          round(d(col("n") * col("sxy") - col("sx") * col("sy")) /
-            d(col("n") * col("sxx") - col("sx") * col("sx")), 6)
-            .as("theta"),
-          round(
-            (d(col("n") * col("sxy") - col("sx") * col("sy")) *
-              d(col("n") * col("sxy") - col("sx") * col("sy"))) /
-            (d(col("n") * col("sxx") - col("sx") * col("sx")) *
-              d(col("n") * col("syy") - col("sy") * col("sy"))), 6)
-            .as("rho2"),
-          round(lit(1.0) -
-            (d(col("n") * col("sxy") - col("sx") * col("sy")) *
-              d(col("n") * col("sxy") - col("sx") * col("sy"))) /
-            (d(col("n") * col("sxx") - col("sx") * col("sx")) *
-              d(col("n") * col("syy") - col("sy") * col("sy"))), 6)
-            .as("var_ratio"))
-    }),
-
-    // ADDITIVE DECOMPOSITION (trend + day-of-week seasonal + residual
-    // — STL-lite with deterministic components): trend = centered
-    // 7-day moving average over the day grain; seasonal = mean
-    // detrended value per dow (sorted folds); residual closes the sum
-    // exactly. The gate carries per-component variance shares so a
-    // wrong component shifts hashed numbers, not just shape.
-    "q251_decomposition" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-        .withColumn("dow",
-          expr("(datediff(day, date'1970-01-05') % 7 + 7) % 7"))
-      val wtr = Window.orderBy("day").rowsBetween(-3, 3)
-      // trend BEFORE the edge filter — filtering first would shift the
-      // ±3 frame of rows adjacent to the removed edges
-      val trended = daily
-        .withColumn("nw", count(lit(1)).over(wtr))
-        .withColumn("trend", sum(col("cents")).over(wtr)
-          .cast("double") / 7.0)
-        .filter(col("nw") === 7)
-        .withColumn("detr", col("cents") - col("trend"))
-      val seas = trended.groupBy("dow")
-        .agg((ssum(collect_list(col("detr"))) / count(lit(1)))
-          .as("seasonal"))
-      val dec = trended.join(broadcast(seas), Seq("dow"))
-        .withColumn("resid", col("detr") - col("seasonal"))
-      dec.groupBy("dow")
-        .agg(count(lit(1)).as("n_days"),
-          round(max(col("seasonal")) / 100.0, 4).as("seasonal"),
-          round(ssum(collect_list(col("resid") * col("resid")))
-            / count(lit(1)) / 10000.0, 2).as("resid_var"),
-          round(ssum(collect_list(abs(col("resid"))))
-            / count(lit(1)) / 100.0, 4).as("resid_mad"))
-        .orderBy("dow")
-    }),
-
-    // A/A CALIBRATION SWEEP (the experimentation-platform sanity
-    // check: 20 null-effect hash splits should reject ~5% at α=.05):
-    // each split is a different md5 seed over users, ALL splits
-    // evaluate in ONE pass (explode over seeds, exact cohort counts),
-    // z per split via the q164 machinery. The gate carries every
-    // split's z — a biased splitter moves hashed values immediately.
-    "q252_aa_calibration" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val per = events(s, dir).groupBy("user_id")
-        .agg(sum(when(col("event_type") === "purchase", 1L)
-          .otherwise(0L)).as("conv"), count(lit(1)).as("n"))
-        .withColumn("y", (col("conv") > 0).cast("long"))
-      val splits = per.select(col("user_id"), col("y"),
-          explode(sequence(lit(0), lit(19))).as("seed"))
-        .withColumn("arm_a", pmod(TF.md5Hash48(
-          concat(col("seed").cast("string"), lit(":"),
-            col("user_id").cast("string"))), lit(2L)) === 0)
-      val cells = splits.groupBy("seed")
-        .agg(sum(when(col("arm_a"), 1L).otherwise(0L)).as("na"),
-          sum(when(col("arm_a"), col("y")).otherwise(0L)).as("xa"),
-          sum(when(!col("arm_a"), 1L).otherwise(0L)).as("nb"),
-          sum(when(!col("arm_a"), col("y")).otherwise(0L)).as("xb"))
-      cells
-        .withColumn("pp", d(col("xa") + col("xb")) /
-          d(col("na") + col("nb")))
-        .withColumn("z", when(col("pp") === 0 || col("pp") === 1, 0.0)
-          .otherwise((d(col("xa")) / col("na") - d(col("xb")) / col("nb"))
-            / sqrt(col("pp") * (lit(1.0) - col("pp")) *
-              (lit(1.0) / col("na") + lit(1.0) / col("nb")))))
-        .select(col("seed"), col("na"), col("nb"),
-          round(col("z"), 4).as("z"),
-          (abs(col("z")) > 1.96).as("rejected"))
-        .orderBy("seed")
-    }),
-
-    // RANK-GAUSS FEATURE TRANSFORM (percent-rank → inverse normal CDF
-    // — the tabular-NN normalization that makes any distribution
-    // standard-normal): exact integer mid-ranks per type, Φ⁻¹ via the
-    // Beasley–Springer–Moro rational polynomial (fixed op sequence —
-    // no erfinv builtin needed in either engine). Output gated on a
-    // deterministic row panel; per-type moments of the transformed
-    // column PROVE ≈ N(0,1) in-data.
-    "q253_rank_gauss" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"),
-        col("event_type").as("ty"),
-        round(col("value") * 100, 0).cast("long").as("cents"))
-      val full = Window.partitionBy("ty")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val ranked = ev
-        .withColumn("rk", row_number().over(Window.partitionBy("ty")
-          .orderBy(col("cents"), col("event_id"))))
-        .withColumn("n", count(lit(1)).over(full))
-        // mid-rank u in (0,1): (rk − 0.5)/n — never exactly 0 or 1
-        .withColumn("u", (col("rk").cast("double") - 0.5) / col("n"))
-      // Beasley–Springer–Moro: rational approx on |u−.5| ≤ .42, Moro's
-      // ln-ln Chebyshev fit in the tails — identical fixed arithmetic
-      // in both engines, max abs error ~3e-9
-      val tf = ranked
-        .withColumn("r", col("u") - 0.5)
-        .withColumn("r2", col("r") * col("r"))
-        .withColumn("w",
-          when(col("u") < 0.5, col("u")).otherwise(lit(1.0) - col("u")))
-        .withColumn("kk", log(-log(col("w"))))
-        .withColumn("central", col("r") *
-          (((lit(-25.44106049637) * col("r2") + 41.39119773534) *
-            col("r2") - 18.61500062529) * col("r2") + 2.50662823884) /
-          ((((lit(3.13082909833) * col("r2") - 21.06224101826) *
-            col("r2") + 23.08336743743) * col("r2") - 8.47351093090) *
-            col("r2") + 1.0))
-        .withColumn("tail",
-          ((((((((lit(0.0000003960315187) * col("kk")
-            + 0.0000002888167364) * col("kk")
-            + 0.0000321767881768) * col("kk")
-            + 0.0003951896511919) * col("kk")
-            + 0.0038405729373609) * col("kk")
-            + 0.0276438810333863) * col("kk")
-            + 0.1607979714918209) * col("kk")
-            + 0.9761690190917186) * col("kk") + 0.3374754822726147))
-        .withColumn("rg", when(abs(col("r")) <= 0.42, col("central"))
-          .otherwise(when(col("u") < 0.5, -col("tail"))
-            .otherwise(col("tail"))))
-      val moments = tf.groupBy("ty")
-        .agg(count(lit(1)).as("n_rows"),
-          (round(ssum(collect_list(col("rg"))) / count(lit(1)), 4)
-            + 0.0).as("mean_rg"),
-          round(sqrt(ssum(collect_list(col("rg") * col("rg")))
-            / count(lit(1))), 4).as("std_rg"))
-      tf.filter(col("event_id") % 997 === 0)
-        .join(moments, Seq("ty"))
-        .select(col("ty"), col("event_id"),
-          round(col("u"), 6).as("u"), round(col("rg"), 4).as("rank_gauss"),
-          col("n_rows"), col("mean_rg"), col("std_rg"))
-        .orderBy("ty", "event_id")
-    }),
-
-    // BLOOM-FILTER FALSE-POSITIVE AUDIT (the membership sketch's
-    // error contract proven in-data): a 2048-bit / k=3 bloom over the
-    // first-half user set, built as 33 bit_or'd 63-bit words (the q159 encoding
-    // — bit 63 would overflow DuckDB's checked shift) (associative —
-    // partial aggregation does real work map-side), broadcast, probed
-    // by the second-half NEW users; measured FPR lands beside the
-    // (1−e^{−kn/m})^k theory value. All hashing md5, all bit ops
-    // integer.
-    "q254_bloom_fpr" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"),
-        expr("unix_micros(ts)").as("us"))
-      val span = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val h = ev.crossJoin(broadcast(span))
-        .groupBy("user_id", "mid")
-        .agg(min(col("us")).as("first_us"))
-        .withColumn("in_a", col("first_us") < col("mid"))
-      def hashes(c: Column) = (0 until 3).map(k =>
-        pmod(TF.md5Hash48(concat(lit(s"bl$k:"), c)), lit(2048L)))
-      val words = h.filter(col("in_a"))
-        .select(explode(array(hashes(col("user_id")): _*)).as("hb"))
-        .select(expr("hb div 63").as("w"),
-          expr("cast(shiftleft(1L, cast(hb % 63 as int)) as long)")
-            .as("b"))
-        .groupBy("w").agg(expr("bit_or(b)").as("word"))
-      val probes = h.filter(!col("in_a"))
-      val tested = probes.select(Seq(col("user_id")) ++
-        hashes(col("user_id")).zipWithIndex.map { case (hc, i) =>
-          hc.as(s"h$i")
-        }: _*)
-      def bitSet(i: Int) =
-        col(s"word$i").isNotNull &&
-          expr(s"(word$i & shiftleft(1L, cast(h$i % 63 as int))) != 0")
-      // join each hash bit's word (3 broadcast joins of the 32-row table)
-      val w0 = words.select(expr("w").as("w0"), col("word").as("word0"))
-      val w1 = words.select(expr("w").as("w1"), col("word").as("word1"))
-      val w2 = words.select(expr("w").as("w2"), col("word").as("word2"))
-      val withWords = tested
-        .join(broadcast(w0), expr("h0 div 63") === col("w0"), "left")
-        .join(broadcast(w1), expr("h1 div 63") === col("w1"), "left")
-        .join(broadcast(w2), expr("h2 div 63") === col("w2"), "left")
-      val nA = h.filter(col("in_a")).agg(count(lit(1)).as("n_a"))
-      withWords
-        .withColumn("hit", bitSet(0) && bitSet(1) && bitSet(2))
-        .agg(count(lit(1)).as("n_probes"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("n_fp"))
-        .crossJoin(broadcast(nA))
-        .select(col("n_a"), col("n_probes"), col("n_fp"),
-          round(col("n_fp").cast("double") / col("n_probes"), 4)
-            .as("fpr_measured"),
-          round(pow(lit(1.0) - exp(lit(-3.0) * col("n_a") / 2048.0),
-            3.0), 4).as("fpr_theory"))
-    }),
-
-    // STRICT SEQUENTIAL FUNNEL with per-step deadlines (signup →
-    // click ≤ 7d → purchase ≤ 7d — q94's funnel with the time
-    // constraints real product analytics needs): two filter-then-min
-    // hops (the q208 no-buffer pattern), exact integer-microsecond
-    // deadlines, per-step survivor counts and conversion rates.
-    "q255_strict_funnel" -> ((s, dir) => {
-      val week = 7L * 86400L * 1000000L
-      val ev = events(s, dir).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("us"))
-      val su = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(col("us")).as("t0"))
-      val cl = ev.filter(col("event_type") === "click")
-        .join(su, Seq("user_id"))
-        .filter(col("us") >= col("t0") && col("us") <= col("t0") + week)
-        .groupBy("user_id").agg(min(col("us")).as("t1"))
-      val pu = ev.filter(col("event_type") === "purchase")
-        .join(cl, Seq("user_id"))
-        .filter(col("us") >= col("t1") && col("us") <= col("t1") + week)
-        .groupBy("user_id").agg(min(col("us")).as("t2"))
-      val n0 = su.agg(count(lit(1)).as("n_signup"))
-      val n1 = cl.agg(count(lit(1)).as("n_click_7d"))
-      val n2 = pu.agg(count(lit(1)).as("n_purchase_7d"))
-      n0.crossJoin(broadcast(n1)).crossJoin(broadcast(n2))
-        .select(col("n_signup"), col("n_click_7d"), col("n_purchase_7d"),
-          round(col("n_click_7d").cast("double") / col("n_signup"), 4)
-            .as("step1_rate"),
-          round(col("n_purchase_7d").cast("double") /
-            col("n_click_7d"), 4).as("step2_rate"),
-          round(col("n_purchase_7d").cast("double") /
-            col("n_signup"), 4).as("overall_rate"))
-    }),
-
-    // SALT-FACTOR PLANNER (how much to salt each skewed join key —
-    // q166's diagnostic turned into a prescription): per join key the
-    // max per-key row count vs a 10k-rows-per-task target gives the
-    // recommended salt fan-out ⌈max/target⌉; keys needing salt > 1
-    // are listed with their skew ratios. Count tables only.
-    "q256_salt_planner" -> ((s, dir) => {
-      val target = 1000L
-      def keyStats(name: String, df: DataFrame, k: String) = {
-        val cnt = df.groupBy(col(k).as("key")).agg(count(lit(1)).as("n"))
-        cnt.agg(lit(name).as("join_key"),
-          count(lit(1)).as("n_keys"), sum(col("n")).as("n_rows"),
-          max(col("n")).as("max_key_rows"))
-      }
-      keyStats("lineitem.l_orderkey", t(s, dir, "lineitem"), "l_orderkey")
-        .unionByName(keyStats("lineitem.l_partkey",
-          t(s, dir, "lineitem"), "l_partkey"))
-        .unionByName(keyStats("lineitem.l_suppkey",
-          t(s, dir, "lineitem"), "l_suppkey"))
-        .unionByName(keyStats("orders.o_custkey",
-          t(s, dir, "orders"), "o_custkey"))
-        .withColumn("avg_x1000",
-          expr("(n_rows * 1000) div n_keys"))
-        .withColumn("skew_x1000",
-          expr("(max_key_rows * 1000 * n_keys) div n_rows"))
-        .withColumn("salt", expr(s"(max_key_rows + $target - 1)" +
-          s" div $target"))
-        .withColumn("needs_salt", col("salt") > 1)
-        .orderBy("join_key")
-    }),
-
-    // CHURN LABEL GENERATION with censoring (the labeling pipeline
-    // that feeds every churn model — and the leakage trap it must
-    // avoid): label window = last 30 days; users first seen INSIDE
-    // the window are CENSORED (too new to label), not negative. The
-    // gate carries label/censor counts per activity band and PROVES
-    // labeled + censored == total in every row.
-    "q257_churn_labels" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"),
-        expr("unix_micros(ts)").as("us"))
-      val hz = ev.agg(max(col("us")).as("tmax"))
-      val win = 30L * 86400L * 1000000L
-      val per = ev.groupBy("user_id")
-        .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us"),
-          count(lit(1)).as("n_events"))
-        .crossJoin(broadcast(hz))
-        .withColumn("censored", col("first_us") > col("tmax") - win)
-        .withColumn("churned",
-          !col("censored") && col("last_us") < col("tmax") - win)
-        .withColumn("band", length(bin(col("n_events"))).cast("long"))
-      per.groupBy("band")
-        .agg(count(lit(1)).as("n_users"),
-          sum(when(col("churned"), 1L).otherwise(0L)).as("n_churned"),
-          sum(when(col("censored"), 1L).otherwise(0L)).as("n_censored"),
-          sum(when(!col("churned") && !col("censored"), 1L)
-            .otherwise(0L)).as("n_retained"))
-        .withColumn("balanced",
-          col("n_churned") + col("n_censored") + col("n_retained")
-            === col("n_users"))
-        .orderBy("band")
-    }),
-      // WEIGHT-OF-EVIDENCE ENCODING (the credit-scoring categorical
-    // transform: ln(P(x|good)/P(x|bad)) per bin, with the information
-    // value that ranks features): balance deciles × "good" =
-    // has-open-order label; 0.5-count smoothing keeps empty cells
-    // finite; IV = Σ (pg−pb)·WOE folded sorted. Exact counts, decile
-    // bounds broadcast.
-    "q258_woe_encoding" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val lbl = t(s, dir, "orders")
-        .filter(col("o_orderstatus") === "O")
-        .select(col("o_custkey")).distinct()
-        .withColumn("good", lit(1L))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"))
-        .join(lbl, col("c_custkey") === col("o_custkey"), "left")
-        .select(col("c_custkey"), col("c_acctbal"),
-          coalesce(col("good"), lit(0L)).as("good"))
-      val bounds = c.agg(expr(
-        "percentile(c_acctbal, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("bs"))
-      val binned = c.crossJoin(broadcast(bounds))
-        .select((lit(1) + size(filter(col("bs"),
-          b => col("c_acctbal") > b))).as("bin"), col("good"))
-      val cells = binned.groupBy("bin")
-        .agg(sum(col("good")).as("ng"),
-          sum(lit(1L) - col("good")).as("nb"))
-      val tot = cells.agg(sum(col("ng")).as("tg"), sum(col("nb")).as("tb"))
-      val woe = cells.crossJoin(broadcast(tot))
-        .withColumn("pg", (d(col("ng")) + 0.5) / (d(col("tg")) + 5.0))
-        .withColumn("pb", (d(col("nb")) + 0.5) / (d(col("tb")) + 5.0))
-        .withColumn("woe", log(col("pg") / col("pb")))
-        .withColumn("ivterm", (col("pg") - col("pb")) * col("woe"))
-      val iv = woe.agg(ssum(collect_list(col("ivterm"))).as("iv"))
-      woe.crossJoin(broadcast(iv))
-        .select(col("bin"), col("ng"), col("nb"),
-          round(col("woe"), 6).as("woe"),
-          round(col("iv"), 6).as("information_value"))
-        .orderBy("bin")
-    }),
-
-    // DIFFERENCE-IN-DIFFERENCES (the quasi-experimental estimator when
-    // you can't randomize: treated vs control, before vs after):
-    // treatment = md5 half of customers, periods = exact time halves,
-    // DiD = (T2−T1)−(C2−C1) on per-(group,period) mean order value
-    // from exact integer cents. Four cells, one agg.
-    "q259_diff_in_diff" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val o = t(s, dir, "orders")
-        .select(col("o_custkey"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
-          expr("unix_micros(cast(o_orderdate as timestamp))").as("us"))
-      val span = o.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val cells = o.crossJoin(broadcast(span))
-        .withColumn("treated",
-          pmod(TF.md5Hash48(col("o_custkey").cast("string")), lit(2L))
-            === 0)
-        .withColumn("after", col("us") >= col("mid"))
-        .groupBy("treated", "after")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"))
-        .withColumn("mean_cents", d(col("sc")) / col("n"))
-      val wide = cells.groupBy()
-        .agg(max(when(col("treated") && !col("after"),
-          col("mean_cents"))).as("t1"),
-          max(when(col("treated") && col("after"),
-            col("mean_cents"))).as("t2"),
-          max(when(!col("treated") && !col("after"),
-            col("mean_cents"))).as("c1"),
-          max(when(!col("treated") && col("after"),
-            col("mean_cents"))).as("c2"),
-          sum(col("n")).as("n_orders"))
-      wide.select(col("n_orders"),
-        round(col("t1") / 100.0, 2).as("treated_before"),
-        round(col("t2") / 100.0, 2).as("treated_after"),
-        round(col("c1") / 100.0, 2).as("control_before"),
-        round(col("c2") / 100.0, 2).as("control_after"),
-        round(((col("t2") - col("t1")) - (col("c2") - col("c1")))
-          / 100.0, 4).as("did_estimate"))
-    }),
-
-    // BOILERPLATE N-GRAM DETECTION (the repeated-span scrub every web
-    // corpus needs — headers, footers, templates): per source, a
-    // trigram that appears in ≥ 10% of the source's docs is
-    // boilerplate; the report carries the worst offender and its doc
-    // coverage. Barrier-materialized shingles (q202 lesson), exact
-    // doc-presence counts; dilution note: at larger corpora the 10%
-    // bar naturally empties — that IS the signal.
-    "q260_boilerplate" -> ((s, dir) => {
-      val par = s.sparkContext.defaultParallelism
-      val docs = t(s, dir, "documents")
-      val nd = docs.groupBy("source").agg(countDistinct(col("doc_id"))
-        .as("n_docs"))
-      val sh = docs
-        .select(col("source"), col("doc_id"),
-          split(TF.normalizeText(col("text")), " ").as("__w"))
-        .repartition(par)
-        .select(col("source"), col("doc_id"),
-          explode_outer(DedupOps.shinglesFromWords(col("__w"), 3))
-            .as("g"))
-        .filter(col("g").isNotNull)
-        .distinct()
-      val freq = sh.groupBy("source", "g")
-        .agg(count(lit(1)).as("n_in"))
-      val flagged = freq.join(broadcast(nd), Seq("source"))
-        .filter(col("n_in") * 10 >= col("n_docs"))
-      flagged
-        .withColumn("rn", row_number().over(Window.partitionBy("source")
-          .orderBy(col("n_in").desc, col("g"))))
-        .groupBy("source")
-        .agg(max(col("n_docs")).as("n_docs"),
-          count(lit(1)).as("n_boiler_ngrams"),
-          max(col("n_in")).as("max_repeat"),
-          max(when(col("rn") === 1, col("g"))).as("top_boiler_ngram"))
-        .orderBy("source")
-    }),
-
-    // QUOTA ALLOCATION WITH SPILLOVER (exactly-k coupon assignment:
-    // each segment gets 20 slots; unfilled quota spills to a global
-    // pool awarded by rank — and Σ assigned == min(k·segments, pool)
-    // is PROVED in the result): two rank windows (per-segment, then
-    // global over the leftovers), all integer.
-    "q261_quota_spillover" -> ((s, dir) => {
-      val quota = 20L
-      // scarcity on purpose (acctbal > 9000): small SFs leave segment
-      // quotas unfilled so the spillover path actually exercises
-      val c = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 9000)
-        .select(col("c_mktsegment").as("seg"), col("c_custkey"),
-          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      val ranked = c.withColumn("srk", row_number().over(
-        Window.partitionBy("seg")
-          .orderBy(col("cents").desc, col("c_custkey"))))
-      val segWinners = ranked.filter(col("srk") <= quota)
-      // budget / spill derived LAZILY as one-row aggregate frames and
-      // broadcast in (the q243 water-filling pattern) — no driver-side
-      // .count() in the builder, so merely constructing the plan stays
-      // free and the filtered customer table is scanned once per stage
-      val budget = c.agg((countDistinct(col("seg")) * quota).as("budget"))
-      val nWon = segWinners.agg(count(lit(1)).as("n_won"))
-      // survivor bound BEFORE the global rank window: a leftover with
-      // per-segment rank beyond quota+budget can never win a spill slot
-      // (at most `budget` spill awards exist), so the global ORDER BY
-      // window sees ≤ nseg·budget rows — metadata-sized at any SF
-      val leftovers = ranked.filter(col("srk") > quota)
-        .crossJoin(broadcast(budget))
-        .filter(col("srk") <= lit(quota) + col("budget"))
-        .withColumn("grk", row_number().over(
-          Window.orderBy(col("cents").desc, col("c_custkey"))))
-        .crossJoin(broadcast(nWon))
-        .filter(col("grk") <= col("budget") - col("n_won"))
-        .drop("budget", "n_won")
-      segWinners.select(col("seg"), col("c_custkey"), col("cents"),
-          lit("segment").as("via"))
-        .unionByName(leftovers.select(col("seg"), col("c_custkey"),
-          col("cents"), lit("spill").as("via")))
-        .groupBy("seg", "via")
-        .agg(count(lit(1)).as("n_awarded"),
-          min(col("cents")).as("min_cents"),
-          max(col("cents")).as("max_cents"))
-        .orderBy("seg", "via")
-    }),
-
-    // KENDALL TAU-B between the revenue and quantity part rankings
-    // (the exact-statistic companion to q212's RBO): concordant/
-    // discordant pairs over the common top-50 — all integer counts
-    // from a broadcast pair build over ≤50 items; tie-corrected
-    // denominator. Where RBO weights the head, tau treats all pairs
-    // equally — reporting both is the standard practice.
-    "q262_kendall_tau" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val byRev = li.groupBy("l_partkey")
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("v"))
-        .withColumn("ra", row_number().over(
-          Window.orderBy(col("v").desc, col("l_partkey"))))
-        .filter(col("ra") <= 50).select("l_partkey", "ra")
-      val byQty = li.groupBy("l_partkey")
-        .agg(sum(col("l_quantity").cast("long")).as("q"))
-        .withColumn("rb", row_number().over(
-          Window.orderBy(col("q").desc, col("l_partkey"))))
-        .filter(col("rb") <= 50).select("l_partkey", "rb")
-      val common = byRev.join(byQty, Seq("l_partkey"))
-      val pairs = common.select(col("ra").as("ra1"), col("rb").as("rb1"),
-          col("l_partkey").as("k1"))
-        .join(broadcast(common.select(col("ra").as("ra2"),
-          col("rb").as("rb2"), col("l_partkey").as("k2"))),
-          col("k1") < col("k2"))
-        .withColumn("s", signum((col("ra1") - col("ra2")) *
-          (col("rb1") - col("rb2"))).cast("long"))
-      pairs.agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("s") === 1, 1L).otherwise(0L)).as("concordant"),
-          sum(when(col("s") === -1, 1L).otherwise(0L)).as("discordant"))
-        .select(col("n_pairs"), col("concordant"), col("discordant"),
-          round((col("concordant") - col("discordant")).cast("double") /
-            col("n_pairs"), 6).as("tau"))
-    }),
-
-    // PERCENTILE-OF-LATEST (the "is today normal?" monitor: where the
-    // most recent daily value ranks against its own 90-day history):
-    // exact integer comparisons on the day-grain series — latest value
-    // per type picked by rank, percentile = count(history ≤ latest)/n.
-    // No percentile sketch, no sort beyond the day grain.
-    "q263_percentile_of_latest" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("cents"))
-      val latest = daily.withColumn("rn", row_number().over(
-          Window.partitionBy("ty").orderBy(col("day").desc)))
-        .filter(col("rn") === 1)
-        .select(col("ty"), col("day").as("lday"),
-          col("cents").as("lcents"))
-      val hist = daily.join(latest, Seq("ty"))
-        .filter(col("day") < col("lday") &&
-          col("day") >= date_sub(col("lday"), 90))
-      hist.groupBy("ty")
-        .agg(count(lit(1)).as("n_hist"),
-          max(col("lcents")).as("latest_cents"),
-          sum(when(col("cents") <= col("lcents"), 1L).otherwise(0L))
-            .as("n_below"))
-        .withColumn("pctile", round(col("n_below").cast("double") /
-          col("n_hist"), 4))
-        .withColumn("alert", col("n_below") * 20 >= col("n_hist") * 19
-          || col("n_below") * 20 <= col("n_hist"))
-        .orderBy("ty")
-    }),
-
-    // WILSON SCORE INTERVALS for per-segment conversion (the CI that
-    // behaves at small n and extreme p, unlike Wald): exact counts,
-    // the closed-form Wilson bounds at z=1.96 in a fixed op sequence.
-    // Pure map-side math on the cells table.
-    "q264_wilson_interval" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val cells = t(s, dir, "customer")
-        .groupBy(col("c_mktsegment").as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("c_acctbal") > 4500.0, 1L).otherwise(0L))
-            .as("x"))
-      val z2 = 1.96 * 1.96
-      cells
-        .withColumn("p", d(col("x")) / col("n"))
-        .withColumn("den", lit(1.0) + lit(z2) / col("n"))
-        .withColumn("ctr", (col("p") + lit(z2) / (col("n") * 2))
-          / col("den"))
-        .withColumn("hw", lit(1.96) * sqrt(col("p") * (lit(1.0) -
-          col("p")) / col("n") + lit(z2) / (d(col("n")) * col("n") * 4))
-          / col("den"))
-        .select(col("seg"), col("n"), col("x"),
-          round(col("p"), 6).as("p_hat"),
-          round(col("ctr") - col("hw"), 6).as("wilson_lo"),
-          round(col("ctr") + col("hw"), 6).as("wilson_hi"))
-        .orderBy("seg")
-    }),
-
-    // PARETO LAYERS (non-dominated sorting, NSGA-style, first two
-    // fronts): front 1 = the q172 skyline; front 2 = the skyline of
-    // what remains after removing front 1 — multi-objective shortlist
-    // construction. Each front runs the q172 TWO-PHASE pruning: phase 1
-    // drops rows strictly dominated by an earlier price-decile's max
-    // size via a broadcast per-decile running-max table (map-side), so
-    // the exact keep-first skyline window in phase 2 only ever sees the
-    // pruned sliver (≈ frontier + bucket-local noise), never the full
-    // part table — the global ORDER BY window stays metadata-sized.
-    // The decile BOUNDS are computed once from the full table and
-    // checkpointed (one-row model frame): both fronts reuse the same
-    // bucket geometry — prune validity needs only SOME monotone price
-    // bucketing, while the per-bucket running max MUST be recomputed
-    // per front from the rows still in play (a dropped row's dominator
-    // is provably a front-1 member, so after removing front 1 the old
-    // maxima would over-prune legitimate front-2 rows).
-    "q265_pareto_layers" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
-      val bounds = graft.ops.Caches.small(p.agg(expr(
-        "percentile(p_retailprice, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
-        .as("bs")))
-      val bucketed = p.crossJoin(broadcast(bounds))
-        .withColumn("bk",
-          lit(1) + size(filter(col("bs"), b => col("p_retailprice") > b)))
-        .drop("bs")
-      def front(df: DataFrame): DataFrame = {
-        val bmax = df.groupBy("bk")
-          .agg(max(col("p_size")).as("bmx"))
-          .withColumn("prevmx", max(col("bmx")).over(
-            Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)))
-          .select("bk", "prevmx")
-        val pruned = df.join(broadcast(bmax), Seq("bk"))
-          .filter(col("prevmx").isNull || col("p_size") >= col("prevmx"))
-        val w = Window.orderBy(col("p_retailprice"), col("p_size").desc,
-          col("p_partkey")).rowsBetween(Window.unboundedPreceding, -1)
-        pruned.withColumn("mx", max(col("p_size")).over(w))
-          .filter(col("mx").isNull || col("p_size") > col("mx"))
-          .drop("mx", "bk", "prevmx")
-      }
-      // frontier-sized: checkpoint so the anti-join AND the output
-      // union don't each re-run front 1's prune+skyline pipeline
-      val f1 = graft.ops.Caches.small(front(bucketed))
-        .withColumn("front", lit(1L))
-      val rest = bucketed.join(f1.select("p_partkey"), Seq("p_partkey"),
-        "left_anti")
-      val f2 = front(rest).withColumn("front", lit(2L))
-      f1.unionByName(f2)
-        .select(col("front"), col("p_partkey"),
-          round(col("p_retailprice"), 2).as("price"), col("p_size"))
-        .orderBy("front", "p_partkey")
-    }),
-
-    // GROWTH ACCOUNTING (new / retained / resurrected / churned per
-    // week — the Social-Capital user-growth decomposition): one
-    // distinct (user, week) frame, first-week per user, last-active
-    // flags via a lag window — every class from exact set algebra,
-    // and new+retained+resurrected == WAU is PROVED per row.
-    "q266_growth_accounting" -> ((s, dir) => {
-      val uw = events(s, dir)
-        .select(col("user_id"),
-          expr("datediff(to_date(ts), date'1970-01-05') div 7")
-            .as("wk"))
-        .distinct()
-      val firstW = uw.groupBy("user_id").agg(min(col("wk")).as("fw"))
-      val flagged = uw.join(firstW, Seq("user_id"))
-        .withColumn("prev_wk", lag(col("wk"), 1).over(
-          Window.partitionBy("user_id").orderBy("wk")))
-        .withColumn("cls",
-          when(col("wk") === col("fw"), "new")
-            .when(col("prev_wk") === col("wk") - 1, "retained")
-            .otherwise(lit("resurrected")))
-      val act = flagged.groupBy("wk")
-        .agg(count(lit(1)).as("wau"),
-          sum(when(col("cls") === "new", 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("cls") === "retained", 1L).otherwise(0L))
-            .as("n_retained"),
-          sum(when(col("cls") === "resurrected", 1L).otherwise(0L))
-            .as("n_resurrected"))
-      // churned(w) = active in w-1 but not w: anti-semantics via join
-      // of consecutive week activity counts
-      val churn = flagged.select(col("user_id"),
-          (col("wk") + 1).as("wk"))
-        .except(uw.select(col("user_id"), col("wk")))
-        .groupBy("wk").agg(count(lit(1)).as("n_churned"))
-      act.join(churn, Seq("wk"), "left")
-        .select(col("wk"), col("wau"), col("n_new"), col("n_retained"),
-          col("n_resurrected"),
-          coalesce(col("n_churned"), lit(0L)).as("n_churned"),
-          (col("n_new") + col("n_retained") + col("n_resurrected")
-            === col("wau")).as("balanced"))
-        .orderBy("wk")
-    }),
-
-    // GROSS & NET REVENUE RETENTION by month (the SaaS board metrics):
-    // per (customer, month) exact cents; month-over-month pairs by an
-    // equi-join on month+1; GRR caps each customer's contribution at
-    // last month's level (no expansion), NRR lets expansion count.
-    // Integer cents throughout; one join on the (customer, month)
-    // grain.
-    "q267_revenue_retention" -> ((s, dir) => {
-      val cm = t(s, dir, "orders")
-        .groupBy(col("o_custkey"),
-          expr("(year(o_orderdate) - 1990) * 12 + month(o_orderdate)")
-            .cast("long").as("mo"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("cents"))
-      val prev = cm.select(col("o_custkey"), (col("mo") + 1).as("mo"),
-        col("cents").as("prev_cents"))
-      val paired = prev.join(cm, Seq("o_custkey", "mo"), "left")
-        .withColumn("cur", coalesce(col("cents"), lit(0L)))
-      paired.groupBy("mo")
-        .agg(count(lit(1)).as("n_prev_customers"),
-          sum(col("prev_cents")).as("base_cents"),
-          sum(least(col("cur"), col("prev_cents"))).as("grr_cents"),
-          sum(col("cur")).as("nrr_cents"))
-        .select(col("mo"), col("n_prev_customers"),
-          round(col("grr_cents").cast("double") /
-            col("base_cents"), 6).as("grr"),
-          round(col("nrr_cents").cast("double") /
-            col("base_cents"), 6).as("nrr"))
-        .orderBy("mo")
-    }),
-
-    // UCB1 EXPLORATION PRIORITY (Auer '02 — which source to crawl/
-    // sample next, balancing observed quality against uncertainty):
-    // score = mean_quality + √(2·ln N / n) per source from exact
-    // counts (quality = mean doc length as the stand-in signal). The
-    // priority table is the bandit's whole state — metadata-sized,
-    // rebuilt in one aggregation pass.
-    "q268_ucb_priority" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val cnt = t(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sc"))
-      val tot = cnt.agg(sum(col("n")).as("nn"))
-      val scored = cnt.crossJoin(broadcast(tot))
-        .withColumn("mean_q", d(col("sc")) / col("n") / 1000.0)
-        .withColumn("explore", sqrt(lit(2.0) * log(d(col("nn"))) /
-          col("n")))
-        .withColumn("ucb", col("mean_q") + col("explore"))
-      // source is a VALUE grain (grows with the corpus): the global
-      // priority rank runs two-phase (Dedup.numberRows) — negating ucb
-      // packs (ucb DESC, source ASC) into one ascending struct key
-      // (ucb > 0 always: mean_q > 0 and the explore bonus is a sqrt)
-      Dedup.numberRows(scored,
-          struct((col("ucb") * -1).as("negucb"), col("source")), "rk")
-        .select(col("rk"), col("source"), col("n"),
-          round(col("mean_q"), 6).as("mean_q"),
-          round(col("explore"), 6).as("explore_bonus"),
-          round(col("ucb"), 6).as("ucb_score"))
-        .orderBy("rk")
-    }),
-
-    // INFORMATION GAIN per candidate feature (the split criterion /
-    // feature-ranking primitive): IG = H(label) − H(label|feature)
-    // for three derived features against the high-priority label —
-    // exact joint counts per feature (one agg each over unioned long
-    // form), entropies via sorted folds; features ranked by gain.
-    "q269_info_gain" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val o = t(s, dir, "orders")
-        .select(col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-          .as("y"),
-          expr("cast(round(o_totalprice * 100) as bigint)" +
-            " div 10000000").as("f_price_band"),
-          expr("(datediff(to_date(o_orderdate), date'1970-01-05')" +
-            " % 7 + 7) % 7").as("f_dow"),
-          (col("o_orderstatus") === "O").cast("long").as("f_open"))
-      val long0 = o.select(col("y"), lit("price_band").as("feat"),
-          col("f_price_band").cast("long").as("v"))
-        .unionByName(o.select(col("y"), lit("dow").as("feat"),
-          col("f_dow").cast("long").as("v")))
-        .unionByName(o.select(col("y"), lit("open").as("feat"),
-          col("f_open").as("v")))
-      val joint = long0.groupBy("feat", "v")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("y"), 1L).otherwise(0L)).as("np"))
-      val tot = joint.groupBy("feat")
-        .agg(sum(col("n")).as("nn"), sum(col("np")).as("tp"))
-      def hTerm(p: Column) = when(p > 0 && p < 1,
-        -(p * log(p) + (lit(1.0) - p) * log(lit(1.0) - p)))
-        .otherwise(lit(0.0))
-      val cond = joint.join(broadcast(tot), Seq("feat"))
-        .withColumn("hv", hTerm(d(col("np")) / col("n")))
-        .withColumn("wterm", d(col("n")) / col("nn") * col("hv"))
-        .groupBy("feat")
-        .agg(max(d(col("tp")) / col("nn")).as("p0"),
-          ssum(collect_list(col("wterm"))).as("h_cond"),
-          count(lit(1)).as("n_values"))
-        .withColumn("h_label", hTerm(col("p0")))
-        .withColumn("info_gain", col("h_label") - col("h_cond"))
-      Caches.small(cond).withColumn("rk", row_number().over(
-          Window.orderBy(col("info_gain").desc, col("feat"))))
-        .select(col("rk"), col("feat"), col("n_values"),
-          round(col("h_label"), 6).as("h_label"),
-          round(col("h_cond"), 6).as("h_cond"),
-          round(col("info_gain"), 6).as("info_gain"))
-        .orderBy("rk")
-    }),
-
-    // BUSY-HOUR CONCENTRATION (peak-to-mean and top-3-hour share —
-    // the load-shaping numbers capacity planning runs on): exact
-    // hourly counts per type, peak share and top-3 concentration by
-    // integer sums, peak-to-mean via cross-multiplication display.
-    "q270_busy_hours" -> ((s, dir) => {
-      val hr = events(s, dir)
-        .groupBy(col("event_type").as("ty"), hour(col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-      val ranked = hr.withColumn("rk", row_number().over(
-        Window.partitionBy("ty").orderBy(col("n").desc, col("h"))))
-      ranked.groupBy("ty")
-        .agg(sum(col("n")).as("total"),
-          count(lit(1)).as("n_hours"),
-          max(when(col("rk") === 1, col("h"))).as("peak_hour"),
-          max(when(col("rk") === 1, col("n"))).as("peak_n"),
-          sum(when(col("rk") <= 3, col("n")).otherwise(0L)).as("top3_n"))
-        .select(col("ty"), col("total"), col("peak_hour"),
-          round(col("peak_n").cast("double") * col("n_hours") /
-            col("total"), 4).as("peak_to_mean"),
-          round(col("top3_n").cast("double") / col("total"), 4)
-            .as("top3_share"))
-        .orderBy("ty")
-    }),
-
-    // PRICE ELASTICITY by brand (log-log OLS of quantity on unit
-    // price at the part grain — the pricing-analytics regression):
-    // part-level exact sums first (unit price = value/qty as one
-    // division), then per-brand ln-moment sums as sorted folds; the
-    // slope IS the elasticity. One part-grain agg + one brand agg.
-    "q271_price_elasticity" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val pp = t(s, dir, "lineitem").groupBy("l_partkey")
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
-          .as("cents"), sum(col("l_quantity").cast("long")).as("qty"))
-        .join(t(s, dir, "part").select(col("p_partkey"),
-          col("p_brand")), col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand").as("brand"),
-          log(d(col("cents")) / col("qty") / 100.0).as("x"),
-          log(d(col("qty"))).as("y"))
-      pp.groupBy("brand")
-        .agg(count(lit(1)).as("n_parts"),
-          ssum(collect_list(col("x"))).as("sx"),
-          ssum(collect_list(col("y"))).as("sy"),
-          ssum(collect_list(col("x") * col("y"))).as("sxy"),
-          ssum(collect_list(col("x") * col("x"))).as("sxx"))
-        .select(col("brand"), col("n_parts"),
-          round((col("n_parts") * col("sxy") - col("sx") * col("sy")) /
-            (col("n_parts") * col("sxx") - col("sx") * col("sx")), 4)
-            .as("elasticity"))
-        .orderBy("brand")
-    }),
-
-    // THRESHOLD-CROSSING FORECAST (when does the trend line hit the
-    // ceiling — the capacity-planning "days of headroom" number):
-    // q211's exact-moment OLS over the day grain, crossing day =
-    // (threshold − intercept)/slope in closed form, gated alongside
-    // the fitted line's endpoints. Metadata-sized all the way.
-    "q272_threshold_crossing" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val daily = events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(expr("datediff(day, date'1970-01-05')").cast("long")
-          .as("tt"), col("n"))
-      val m = daily.agg(count(lit(1)).cast("decimal(19,0)").as("k"),
-        sum(col("tt").cast("decimal(19,0)")).as("sx"),
-        sum(col("n").cast("decimal(19,0)")).as("sy"),
-        sum(col("tt").cast("decimal(19,0)") * col("n")).as("sxy"),
-        sum(col("tt").cast("decimal(19,0)") * col("tt")).as("sxx"),
-        max(col("tt")).as("tmax"))
-      m.withColumn("slope", d(col("k") * col("sxy") -
-          col("sx") * col("sy")) /
-          d(col("k") * col("sxx") - col("sx") * col("sx")))
-        .withColumn("intercept",
-          (d(col("sy")) - col("slope") * d(col("sx"))) / d(col("k")))
-        .withColumn("threshold", d(col("sy")) / d(col("k")) * 1.5)
-        .withColumn("cross_t",
-          (col("threshold") - col("intercept")) / col("slope"))
-        .select(col("k").cast("long").as("n_days"),
-          round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 4).as("intercept"),
-          round(col("threshold"), 4).as("threshold"),
-          round(col("cross_t") - col("tmax"), 2)
-            .as("days_to_threshold"),
-          (col("slope") > 0).as("growing"))
-    }),
-
-    // TRANSACTIONAL MERGE + EXACTLY-ONCE LINEAGE, oracle-gated end to
-    // end (the reference's S8/T5 semantics made driver-visible): three
-    // deterministic micro-batches from `orders` slices run through the
-    // REAL TxLog — epoch-tagged MERGE, a restart REPLAY of epoch 2
-    // (must no-op, or the gate's counts shift), a predicate DELETE,
-    // then a final merge — and the committed table's per-upload rollup
-    // must match DuckDB replaying the same latest-wins/delete algebra
-    // in pure SQL. Construction is EAGER by design: the query's subject
-    // is the transactional sink itself, so building it IS running the
-    // micro-batch sequence (batches are %-sliced — hundreds of rows at
-    // gate SFs; the commit path is O(batch), not O(table)). Listed in
-    // [[eagerSinks]] so plan-only consumers (PlanAudit, ContractSpec's
-    // all-query gates) skip it — building a PLAN must never write. The
-    // work dir is deterministic per SF and wiped before each build, so
-    // repeated invocations (Verify + Bench in one session) reuse one
-    // directory instead of leaking a fresh temp dir per call.
-    "q273_txlog_exactly_once" -> ((s, dir) => {
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q273_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        if (java.nio.file.Files.exists(p)) {
-          val st = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally st.close()
-        }
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      def batch(m: Int, bump: Long, e: Long) = t(s, dir, "orders")
-        .filter(col("o_orderkey") % m === 0)
-        .select(col("o_orderkey").as("k"),
-          (round(col("o_totalprice") * 100, 0).cast("long") + bump)
-            .as("v"),
-          lit(e).as("upload_id"))
-      TxLog.mergeEpoch(s, root, batch(7, 0, 1), "k", epochId = 1L)
-      TxLog.mergeEpoch(s, root, batch(5, 1, 2), "k", epochId = 2L)
-      // streaming-restart replay of the last epoch: exactly-once means
-      // this commit is SKIPPED — a double-apply cannot change v (merge
-      // is idempotent on identical rows) but WOULD burn a version and
-      // break the epoch monotonicity contract the oracle ignores; the
-      // real gate bite: if replay were mis-keyed as epoch 3, batch 3's
-      // merge below would be skipped and n_rows(upload 3) would differ
-      TxLog.mergeEpoch(s, root, batch(5, 1, 2), "k", epochId = 2L)
-      TxLog.delete(s, root, "k", col("k") % 3 === 0)
-      TxLog.mergeEpoch(s, root, batch(11, 2, 3), "k", epochId = 3L)
-      TxLog.read(s, root)
-        .groupBy("upload_id")
-        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_cents"),
-          min(col("k")).as("min_key"), max(col("k")).as("max_key"))
-        .orderBy("upload_id")
-    }),
-
-    // BENFORD FIRST-DIGIT AUDIT (the classic fabricated-data screen —
-    // Newcomb 1881 / Benford 1938): leading-digit distribution of
-    // order value in cents vs log10(1+1/d), with per-digit chi-square
-    // contributions and the total statistic riding on every row. Exact
-    // integer counts; doubles only in the display divisions; the
-    // chi-square total folds via the sorted-sum aggregator (bit-exact
-    // across partitionings).
-    "q274_benford" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val digits = t(s, dir, "orders")
-        .select(substring(round(col("o_totalprice") * 100, 0)
-          .cast("long").cast("string"), 1, 1).cast("int").as("dg"))
-        .groupBy("dg").agg(count(lit(1)).as("n"))
-      val tot = digits.agg(sum(col("n")).as("nn"))
-      val terms = digits.crossJoin(broadcast(tot))
-        .withColumn("p_exp", log10(lit(1.0) + lit(1.0) / col("dg")))
-        .withColumn("n_exp", col("p_exp") * col("nn"))
-        .withColumn("chi_term", (d(col("n")) - col("n_exp")) *
-          (d(col("n")) - col("n_exp")) / col("n_exp"))
-      val chi = terms.agg(ssum(collect_list(col("chi_term"))).as("chi2"))
-      terms.crossJoin(broadcast(chi))
-        .select(col("dg"), col("n"),
-          round(d(col("n")) / col("nn"), 6).as("obs_share"),
-          round(col("p_exp"), 6).as("exp_share"),
-          round(col("chi_term"), 4).as("chi_term"),
-          round(col("chi2"), 4).as("chi2"))
-        .orderBy("dg")
-    }),
-
-    // GINI / LORENZ CONCENTRATION of order value ("what share of spend
-    // do the top deciles carry" — the corpus-composition inequality
-    // metric): exact integer cents; the global value ranking runs
-    // TWO-PHASE (Dedup.numberAndRunningSum — range-partition, local
-    // rank+cumsum, broadcast offsets; no single-partition sort), the
-    // Σ rank·value term sums in decimal(38) so it cannot overflow at
-    // warehouse row counts, and G = (2·Σrk·x − (n+1)·Σx)/(n·Σx) comes
-    // out of one pass. Output: 10 Lorenz deciles with cumulative
-    // share, Gini on every row.
-    "q275_gini_lorenz" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      val ranked = Dedup.numberAndRunningSum(o,
-        struct(col("cents"), col("o_orderkey")), "rk",
-        Seq("cum" -> col("cents")))
-      val g = ranked.agg(count(lit(1)).as("n"),
-          sum(col("cents")).as("sx"),
-          sum((col("rk").cast("decimal(38,0)") * col("cents")))
-            .as("srx"))
-        .select(col("n"), col("sx"),
-          round((lit(2.0) * col("srx").cast("double")
-            - d(col("n") + 1) * d(col("sx")))
-            / (d(col("n")) * d(col("sx"))), 6).as("gini"))
-      ranked.crossJoin(broadcast(g))
-        .withColumn("decile", expr("((rk - 1) * 10) div n + 1"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_orders"), max(col("cum")).as("cum_cents"),
-          max(col("sx")).as("sx"), max(col("gini")).as("gini"))
-        .select(col("decile"), col("n_orders"), col("cum_cents"),
-          round(d(col("cum_cents")) / col("sx"), 6).as("cum_share"),
-          col("gini"))
-        .orderBy("decile")
-    }),
-
-    // DISTRIBUTION-DRIFT MONITOR: per-day KL divergence of the
-    // event-type mix against the corpus-wide mix — the composition-
-    // drift alarm a training-data pipeline runs on every ingest day
-    // ("this day's traffic mix changed"). Exact counts at the
-    // (day, type) grain; the per-day KL folds via the sorted-sum
-    // aggregator over the observed support (absent types contribute
-    // no term). Day grain stays metadata-sized at any corpus scale.
-    "q276_daily_kl_drift" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val dt = events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"),
-          col("event_type").as("ty"))
-        .agg(count(lit(1)).as("n"))
-      val byTy = dt.groupBy("ty").agg(sum(col("n")).as("nt"))
-      val tot = byTy.agg(sum(col("nt")).as("nn"))
-      dt.join(broadcast(byTy), Seq("ty"))
-        .crossJoin(broadcast(tot))
-        .withColumn("nd", sum(col("n")).over(Window.partitionBy("day")))
-        .withColumn("term", d(col("n")) / col("nd") *
-          log((d(col("n")) / col("nd")) / (d(col("nt")) / col("nn"))))
-        .groupBy("day")
-        .agg(max(col("nd")).as("n_events"),
-          count(lit(1)).as("n_types"),
-          ssum(collect_list(col("term"))).as("kl"))
-        .select(col("day").cast("string").as("day"), col("n_events"),
-          col("n_types"), round(col("kl"), 6).as("kl"))
-        .orderBy("day")
-    }),
-
-    // QUOTE / EXCERPT DETECTION via shingle CONTAINMENT (the dedup
-    // metric Jaccard can't express: a short doc verbatim-embedded in a
-    // long one): same MinHash-LSH candidate pipeline as q19/q20 (16
-    // hashes, 8×2 bands, bucket cap 10), then exact |A∩B|/min(|A|,|B|)
-    // on the candidate slice only — sub-quadratic end to end. A pair
-    // is a QUOTE when containment is high but Jaccard low (one side
-    // contains the other without the sizes matching).
-    "q277_containment_quotes" -> ((s, dir) => {
-      DedupOps.containmentVerifiedPairs(t(s, dir, "documents"),
-          "doc_id", "text", n = 2, threshold = 0.5,
-          numHashes = 16, rowsPerBand = 2, maxBucket = 10)
-        .withColumn("is_quote",
-          col("containment") >= 0.8 && col("jaccard") < 0.5)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // POSITION-BASED (U-SHAPED) MULTI-TOUCH ATTRIBUTION: each purchase
-    // distributes its value over the user's view/click touches in a
-    // 7-day lookback — first and last touch 40% each, middles split
-    // the remaining 20% — in EXACT integer basis points (Σ = 10000
-    // per purchase by construction, remainder bumped onto the earliest
-    // middles, the q243 integer-split idiom), so channel totals are
-    // bit-exact integer sums at any scale. The user-equi join bounds
-    // the pair space by per-user activity; windows partition by
-    // purchase.
-    "q278_attribution" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val e = events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id"),
-          col("ts").as("pts"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-      val touches = e.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("event_id").as("tid"),
-          col("ts").as("tts"), col("event_type").as("channel"))
-      val joined = purchases.join(touches, Seq("user_id"))
-        .filter(col("tts") <= col("pts") &&
-          col("tts") > expr("pts - interval 7 day"))
-      val ranked = joined
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("pid").orderBy(col("tts"), col("tid"))))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("pid")))
-      val attributed = ranked.withColumn("bp",
-          when(col("n") === 1, lit(10000L))
-            .when(col("n") === 2, lit(5000L))
-            .when(col("rn") === 1 || col("rn") === col("n"), lit(4000L))
-            .otherwise(expr("2000 div (n - 2)") +
-              when(col("rn") - 1 <= expr("2000 % (n - 2)"), 1L)
-                .otherwise(0L)))
-        .groupBy("channel")
-        .agg(count(lit(1)).as("n_touches"),
-          sum(col("cents") * col("bp")).as("cents_bp"))
-      val tot = attributed.agg(sum(col("cents_bp")).as("tot"))
-      attributed.crossJoin(broadcast(tot))
-        .select(col("channel"), col("n_touches"),
-          round(d(col("cents_bp")) / 1000000.0, 4).as("attributed_usd"),
-          round(d(col("cents_bp")) / col("tot"), 6).as("share"))
-        .orderBy("channel")
-    }),
-
-    // PSI (population stability index) — the model-monitoring drift
-    // score, computed for order value between a reference period
-    // (pre-1998) and the current one: 10 buckets from the REFERENCE
-    // decile bounds (floored to integer cents, so bucket membership is
-    // integer-exact cross-engine), Laplace-smoothed shares
-    // ((n+1)/(N+10) — keeps empty buckets defined, deterministically),
-    // PSI = Σ (p−q)·ln(p/q) via the sorted fold. Complements q276: KL
-    // watches composition, PSI watches a numeric distribution.
-    "q279_psi" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val o = t(s, dir, "orders")
-        .select(expr("cast(round(o_totalprice * 100) as bigint)")
-          .as("cents"),
-          (col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
-            .as("cur"))
-      val bounds = o.filter(!col("cur")).agg(expr(
-        "transform(percentile(cents, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)), b -> cast(floor(b) as bigint))")
-        .as("bs"))
-      val bucketed = o.crossJoin(broadcast(bounds))
-        .withColumn("bk",
-          lit(1) + size(filter(col("bs"), b => col("cents") > b)))
-        .groupBy("bk")
-        .agg(sum(when(col("cur"), 0L).otherwise(1L)).as("n_ref"),
-          sum(when(col("cur"), 1L).otherwise(0L)).as("n_cur"))
-      val totals = bucketed.agg(sum(col("n_ref")).as("m"),
-        sum(col("n_cur")).as("nn"))
-      val terms = bucketed.crossJoin(broadcast(totals))
-        .withColumn("q", (d(col("n_ref")) + 1.0) / (col("m") + 10))
-        .withColumn("p", (d(col("n_cur")) + 1.0) / (col("nn") + 10))
-        .withColumn("term", (col("p") - col("q")) * log(col("p") / col("q")))
-      val psi = terms.agg(ssum(collect_list(col("term"))).as("psi"))
-      terms.crossJoin(broadcast(psi))
-        .select(col("bk"), col("n_ref"), col("n_cur"),
-          round(col("term"), 6).as("term"),
-          round(col("psi"), 6).as("psi"))
-        .orderBy("bk")
-    }),
-
-    // EWMA ERROR-RATE ANOMALY (the ops-alerting smoother): per day,
-    // the normalized exponentially-weighted moving average of daily
-    // error counts (α=0.3 → weights 0.7^k, normalized so no init
-    // convention is needed) and today's ratio against it — spike =
-    // ratio > 1.5. The weighted sums run over the calendar-day PAIR
-    // grain (days² is metadata-sized — the q211/q226 pattern) and
-    // fold via the sorted-sum aggregator for bit-exactness.
-    "q280_ewma_anomaly" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val daily = events(s, dir).filter(col("event_type") === "error")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.select(col("day").as("d1"), col("n").as("n1"))
-      val b = Caches.small(
-        daily.select(col("day").as("d2"), col("n").as("n2")))
-      val pairs = a.join(broadcast(b), col("d2") <= col("d1"))
-        .withColumn("w", pow(lit(0.7), datediff(col("d1"), col("d2"))))
-      pairs.groupBy("d1")
-        .agg(max(col("n1")).as("n_err"),
-          ssum(collect_list(col("w") * col("n2"))).as("wx"),
-          ssum(collect_list(col("w"))).as("ws"))
-        .withColumn("ewma", col("wx") / col("ws"))
-        .withColumn("ratio", round(d(col("n_err")) / col("ewma"), 4))
-        .select(col("d1").cast("string").as("day"), col("n_err"),
-          round(col("ewma"), 4).as("ewma"), col("ratio"),
-          (col("ratio") > 1.5).as("spike"))
-        .orderBy("day")
-    }),
-
-    // SIGNUP → FIRST-PURCHASE CONVERSION LAG: conversion rate and the
-    // exact median / p90 time-to-convert. Per-user firsts are keyed
-    // aggregations; the quantiles interpolate over integer MICROS and
-    // are floored before display, so the cross-engine compare stays on
-    // exact integers (micros < 2^52 — the interpolated midpoint is
-    // exact in a double).
-    "q281_conversion_lag" -> ((s, dir) => {
-      val e = events(s, dir)
-      val su = e.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(col("ts")).as("s0"))
-      val converted = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("pt"))
-        .join(su, Seq("user_id"))
-        .filter(col("pt") >= col("s0"))
-        .groupBy("user_id")
-        .agg((unix_micros(min(col("pt"))) - unix_micros(min(col("s0"))))
-          .as("lag_us"))
-      val nSign = su.agg(count(lit(1)).as("n_signup"))
-      converted
-        .agg(count(lit(1)).as("n_converted"),
-          floor(expr("percentile(lag_us, 0.5)")).as("med_us"),
-          floor(expr("percentile(lag_us, 0.9)")).as("p90_us"))
-        .crossJoin(broadcast(nSign))
-        .select(col("n_signup"), col("n_converted"),
-          round(col("n_converted").cast("double") / col("n_signup"), 6)
-            .as("conv_rate"),
-          round(col("med_us").cast("double") / 3.6e9, 2)
-            .as("median_hours"),
-          round(col("p90_us").cast("double") / 3.6e9, 2).as("p90_hours"))
-    }),
-
-    // GAPS-AND-ISLANDS: consecutive-active-day streaks per user via
-    // the rank-difference island key (day − row_number is constant
-    // within a run), aggregated to a streak-length histogram — the
-    // engagement-depth profile. Everything is keyed windows + exact
-    // counts; no global sort anywhere.
-    "q282_streak_histogram" -> ((s, dir) => {
-      val ud = events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day"))
-        .distinct()
-      val grp = ud.withColumn("rn", row_number().over(
-          Window.partitionBy("user_id").orderBy("day")))
-        .withColumn("island", expr("date_sub(day, rn)"))
-      val streaks = grp.groupBy("user_id", "island")
-        .agg(count(lit(1)).as("len"))
-      streaks.groupBy("len")
-        .agg(count(lit(1)).as("n_streaks"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy("len")
-    }),
-
-    // SESSION BOUNCE / ENTRY-CHANNEL ANALYSIS: 30-minute-gap
-    // sessionization via the lag+cumulative-flag island idiom (all
-    // windows user-partitioned — no global sort), then per-session
-    // entry/exit events by rank and a per-entry-channel rollup:
-    // sessions, bounce rate (single-event sessions), mean session
-    // depth from exact integer sums. Gap test runs on integer micros.
-    "q283_session_bounce" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val uw = Window.partitionBy("user_id")
-        .orderBy(col("us"), col("event_id"))
-      val e = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(uw))
-        .withColumn("is_new",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-        .withColumn("sid", sum(col("is_new")).over(
-          uw.rowsBetween(Window.unboundedPreceding, 0)))
-      val sw = Window.partitionBy("user_id", "sid")
-        .orderBy(col("us"), col("event_id"))
-      val sessions = e
-        .withColumn("rn", row_number().over(sw))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("user_id", "sid")))
-        .filter(col("rn") === 1) // the rank-1 row IS the entry event
-      sessions.groupBy(col("event_type").as("entry_channel"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(when(col("n") === 1, 1L).otherwise(0L)).as("n_bounces"),
-          sum(col("n")).as("total_events"))
-        .select(col("entry_channel"), col("n_sessions"),
-          col("n_bounces"),
-          round(d(col("n_bounces")) / col("n_sessions"), 6)
-            .as("bounce_rate"),
-          round(d(col("total_events")) / col("n_sessions"), 4)
-            .as("mean_depth"))
-        .orderBy("entry_channel")
-    }),
-
-    // RFM SEGMENTATION (recency / frequency / monetary quintiles —
-    // the classic CRM partitioning): per-customer last order day,
-    // order count, and exact cents; each dimension ranked GLOBALLY by
-    // the two-phase Dedup.numberRows (value grains grow with the
-    // customer base — never a single-partition sort) and cut into
-    // quintiles by integer rank arithmetic (the q275 decile idiom).
-    // Output: one row per populated RFM cell.
-    "q284_rfm_segments" -> ((s, dir) => {
-      // Caches.small on the customer grain AND between quintile passes:
-      // numberRows references its input twice (rows + offsets census)
-      // and each quintile crossJoins its ranking with its own count, so
-      // the un-checkpointed triple-nested chain re-ran the orders scan
-      // per reference (64 scans / 282 exchanges in PLANS_r08; judge r08
-      // "Next round" #3). Checkpointed, each pass reads the previous
-      // pass's materialized customer-grain frame exactly once.
-      val base = Caches.small(t(s, dir, "orders")
-        .groupBy(col("o_custkey").as("ck"))
-        .agg(max(to_date(col("o_orderdate"))).as("last_day"),
-          count(lit(1)).as("freq"),
-          sum(expr("cast(round(o_totalprice * 100) as bigint)"))
-            .as("cents")))
-      def quintile(df: DataFrame, order: Column, as: String): DataFrame = {
-        val ranked = Caches.small(Dedup.numberRows(df, order, "__rk"))
-        ranked.crossJoin(broadcast(ranked.agg(count(lit(1)).as("__n"))))
-          .withColumn(as, expr("((__rk - 1) * 5) div __n + 1"))
-          .drop("__rk", "__n")
-      }
-      val scored = quintile(quintile(quintile(base,
-          struct(col("last_day"), col("ck")), "r_q"),
-          struct(col("freq"), col("ck")), "f_q"),
-          struct(col("cents"), col("ck")), "m_q")
-      scored.groupBy("r_q", "f_q", "m_q")
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("cents")).as("sum_cents"))
-        .orderBy("r_q", "f_q", "m_q")
-    }),
-
-    // BURST DETECTION (bot screening): each user's maximum event count
-    // inside any sliding 60-second window, via a RANGE frame over
-    // integer micros (user-partitioned — no pair join, no global
-    // sort), rolled up to a burst-score histogram.
-    "q285_burst_histogram" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("us"))
-        .rangeBetween(-59999999L, 0L)
-      val bursts = events(s, dir)
-        .select(col("user_id"), unix_micros(col("ts")).as("us"))
-        .withColumn("c60", count(lit(1)).over(w))
-        .groupBy("user_id")
-        .agg(max(col("c60")).as("burst"))
-      bursts.groupBy("burst")
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("burst")
-    }),
-
-    // CROSS-LANGUAGE CONTAMINATION SCREEN: near-dup pairs (the q19
-    // LSH-candidates → exact-Jaccard pipeline at a looser 0.3
-    // threshold) joined back to each side's language and rolled up per
-    // unordered language pair — cross-language cells flag probable
-    // machine-translated/copied content between corpus slices that a
-    // per-language dedup would never compare. Rollup stats are
-    // order-independent exacts (count/min/max of the rounded metric).
-    "q286_crosslang_contamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = DedupOps.jaccardVerifiedPairs(docs, "doc_id", "text",
-        n = 2, threshold = 0.3, numHashes = 16, rowsPerBand = 2,
-        maxBucket = 10)
-      val langs = docs.select(col("doc_id"), col("lang"))
-      pairs
-        .join(langs.toDF("id_a", "lang_a"), Seq("id_a"))
-        .join(langs.toDF("id_b", "lang_b"), Seq("id_b"))
-        .withColumn("pair_lo", least(col("lang_a"), col("lang_b")))
-        .withColumn("pair_hi", greatest(col("lang_a"), col("lang_b")))
-        .groupBy("pair_lo", "pair_hi")
-        .agg(count(lit(1)).as("n_pairs"),
-          min(col("jaccard")).as("min_j"),
-          max(col("jaccard")).as("max_j"))
-        .withColumn("cross_lang", col("pair_lo") =!= col("pair_hi"))
-        .orderBy("pair_lo", "pair_hi")
-    }),
-
-    // LABEL-CENTROID SIMILARITY MATRIX (the label-noise / class-overlap
-    // diagnostic): per-label mean embedding at the (label, dim) grain
-    // with sorted-fold sums (bit-exact under any partitioning), then
-    // pairwise centroid cosine via a dim-keyed self-join — label² pairs
-    // of 64-term folds, all metadata-sized. Classes whose centroids
-    // cosine ≈ 1 are candidates for merged or mislabeled data.
-    "q287_label_centroids" -> ((s, dir) => {
-      val cells = t(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")))
-        .select(col("label"), (col("pos") + 1).as("dim"),
-          col("col").cast("double").as("v"))
-      val cent = cells.groupBy("label", "dim")
-        .agg((ssum(collect_list(col("v"))) / count(lit(1))).as("m"))
-      cent.select(col("label").as("la"), col("dim"), col("m").as("ma"))
-        .join(cent.select(col("label").as("lb"), col("dim"),
-          col("m").as("mb")), Seq("dim"))
-        .filter(col("la") < col("lb"))
-        .groupBy("la", "lb")
-        .agg(ssum(collect_list(col("ma") * col("mb"))).as("dot"),
-          ssum(collect_list(col("ma") * col("ma"))).as("na"),
-          ssum(collect_list(col("mb") * col("mb"))).as("nb"))
-        .select(col("la").as("label_a"), col("lb").as("label_b"),
-          round(col("dot") / sqrt(col("na") * col("nb")), 6)
-            .as("cosine"))
-        .orderBy("label_a", "label_b")
-    }),
-
-    // SCD2 INTERVAL RECONSTRUCTION (the slowly-changing-dimension
-    // warehouse op): each user's event stream becomes validity
-    // intervals [ts, next_ts) via lead() over the user partition —
-    // the current state is open-ended and excluded from duration
-    // stats. Output per state (event_type): closed intervals, exact
-    // total/mean duration from integer-micros sums.
-    "q288_scd2_intervals" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("us"), col("event_id"))
-      val iv = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("next_us", lead(col("us"), 1).over(w))
-        .filter(col("next_us").isNotNull)
-        .withColumn("dur_us", col("next_us") - col("us"))
-      iv.groupBy(col("event_type").as("state"))
-        .agg(count(lit(1)).as("n_intervals"),
-          sum(col("dur_us")).as("total_us"))
-        .select(col("state"), col("n_intervals"),
-          round(d(col("total_us")) / 3600000000.0, 2).as("total_hours"),
-          round(d(col("total_us")) / col("n_intervals") / 3600000000.0,
-            4).as("mean_hours"))
-        .orderBy("state")
-    }),
-
-    // EXACT PERCENTILE BANDS PER GROUP (the p50/p90/p99 ops
-    // dashboard): per event type, the k-th smallest value in cents
-    // picked BY RANK (k = ceil(q·n) — the classic exact definition, no
-    // interpolation, no sketch): one partitioned rank window + one
-    // count per type, three conditional min-picks. Integer-exact
-    // end to end.
-    "q289_percentile_bands" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val e = events(s, dir)
-        .select(col("event_type").as("ty"), col("event_id"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-      val w = Window.partitionBy("ty").orderBy(col("cents"),
-        col("event_id"))
-      val ranked = e
-        .withColumn("rk", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("ty")))
-      def pick(q: Double, as: String) =
-        max(when(col("rk") === expr(s"cast(ceil($q * n) as bigint)"),
-          col("cents"))).as(as)
-      ranked.groupBy("ty")
-        .agg(max(col("n")).as("n_events"),
-          pick(0.50, "p50_cents"), pick(0.90, "p90_cents"),
-          pick(0.99, "p99_cents"))
-        .select(col("ty"), col("n_events"),
-          round(d(col("p50_cents")) / 100.0, 2).as("p50"),
-          round(d(col("p90_cents")) / 100.0, 2).as("p90"),
-          round(d(col("p99_cents")) / 100.0, 2).as("p99"))
-        .orderBy("ty")
-    }),
-
-    // CROSS-SOURCE DUPLICATE FLOW MATRIX (where does shared content
-    // come from): documents hash-grouped on an 8-word normalized
-    // PREFIX fingerprint (the "same title/lead" screen — whole-text
-    // hashing catches only byte-identical copies), groups of >1
-    // self-joined on the group key (pair space bounded by dup-group
-    // size), pairs rolled up per unordered source pair — the matrix
-    // that tells a curation pipeline which source pairs share content
-    // (mirrors vs independent duplication).
-    "q290_cross_source_dupes" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          md5(concat_ws(" ",
-            slice(split(TF.normalizeText(col("text")), " "), 1, 8)))
-            .as("h"))
-      val sized = docs
-        .withColumn("gs", count(lit(1)).over(Window.partitionBy("h")))
-        .filter(col("gs") > 1)
-      val a = sized.select(col("h"), col("doc_id").as("id_a"),
-        col("source").as("src_a"))
-      val b = sized.select(col("h"), col("doc_id").as("id_b"),
-        col("source").as("src_b"))
-      a.join(b, Seq("h")).filter(col("id_a") < col("id_b"))
-        .select(least(col("src_a"), col("src_b")).as("source_lo"),
-          greatest(col("src_a"), col("src_b")).as("source_hi"))
-        .groupBy("source_lo", "source_hi")
-        .agg(count(lit(1)).as("n_dup_pairs"))
-        .withColumn("cross_source", col("source_lo") =!= col("source_hi"))
-        .orderBy("source_lo", "source_hi")
-    }),
-
-    // TRAIN/VAL/TEST SPLIT BALANCE AUDIT: deterministic md5-hash
-    // 80/10/10 split of the embedding corpus, per-split label counts,
-    // and the chi-square statistic of label-mix independence across
-    // splits (expected = row·col/N over the split×label table; the
-    // 30-cell fold runs sorted for bit-exactness). The audit a
-    // training pipeline runs before trusting a split.
-    "q291_split_balance" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val e = t(s, dir, "embeddings")
-        .select(col("label"),
-          (TF.md5Hash48(col("vec_id").cast("string")) % 10).as("b"))
-        .withColumn("split", when(col("b") < 8, "train")
-          .when(col("b") === 8, "val").otherwise("test"))
-      val cell = e.groupBy("split", "label").agg(count(lit(1)).as("o"))
-      val bySplit = cell.groupBy("split").agg(sum(col("o")).as("ns"))
-      val byLabel = cell.groupBy("label").agg(sum(col("o")).as("nl"))
-      val tot = cell.agg(sum(col("o")).as("nn"))
-      val terms = cell
-        .join(broadcast(bySplit), Seq("split"))
-        .join(broadcast(byLabel), Seq("label"))
-        .crossJoin(broadcast(tot))
-        .withColumn("exp", d(col("ns")) * col("nl") / col("nn"))
-        .withColumn("term", (d(col("o")) - col("exp")) *
-          (d(col("o")) - col("exp")) / col("exp"))
-      val chi = terms.agg(ssum(collect_list(col("term"))).as("chi2"),
-        countDistinct(col("split")).as("nsplits"),
-        countDistinct(col("label")).as("nlabels"))
-      bySplit.crossJoin(broadcast(tot)).crossJoin(broadcast(chi))
-        .select(col("split"), col("ns").as("n_vectors"),
-          round(d(col("ns")) / col("nn"), 6).as("share"),
-          round(col("chi2"), 4).as("chi2"),
-          ((col("nsplits") - 1) * (col("nlabels") - 1)).as("dof"))
-        .orderBy("split")
-    }),
-
-    // QUANTILE MAPPING TABLE (quantile normalization across sources —
-    // the feature-alignment op: map each source's doc-length
-    // distribution onto the global one): per source, the d/10-quantile
-    // value picked by EXACT integer rank (kd = ceil(d·n/10) via
-    // (d·n+9) div 10) from a source-partitioned window; the GLOBAL
-    // side ranks raw rows, so it runs two-phase (Dedup.numberRows).
-    // Output: (source, decile, source quantile, global quantile).
-    "q292_quantile_mapping" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val sw = Window.partitionBy("source")
-        .orderBy(col("n_chars"), col("doc_id"))
-      val srcQ = docs
-        .withColumn("rk", row_number().over(sw))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("source")))
-        .withColumn("d", explode(sequence(lit(1), lit(10))))
-        .filter(expr("(d * n + 9) div 10") === col("rk"))
-        .select(col("source"), col("d"), col("n_chars").as("src_q"))
-      val globalQ = Dedup.numberRows(docs,
-          struct(col("n_chars"), col("doc_id")), "grk")
-        .crossJoin(broadcast(docs.agg(count(lit(1)).as("gn"))))
-        .withColumn("d", explode(sequence(lit(1), lit(10))))
-        .filter(expr("(d * gn + 9) div 10") === col("grk"))
-        .select(col("d"), col("n_chars").as("global_q"))
-      srcQ.join(broadcast(globalQ), Seq("d"))
-        .select(col("source"), col("d").as("decile"), col("src_q"),
-          col("global_q"))
-        .orderBy("source", "decile")
-    }),
-
-    // RETRIEVAL MRR@10 (the ranking-eval companion to q232's
-    // recall@10): per probe, the brute-force TOP-1 neighbor is the
-    // relevant item; the IVF system list (q24 path) is scored by the
-    // reciprocal of the rank at which it surfaces (0 beyond depth 10).
-    // Per-probe reciprocal ranks plus the corpus MRR (sorted fold over
-    // the probe grain) on every row.
-    "q293_retrieval_mrr" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      // Caches.small: the panel build side becomes a checkpointed scan
-      // the plan gate PROVES bounded (no allowlist entry needed)
-      val queries = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("q")))
-      val truth = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") === 1)
-        .select(col("qid"), col("vec_id").as("truth_id"))
-      val centroids = Caches.small(emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        centroids, "cid", "cv")
-      val qcl = queries.crossJoin(broadcast(centroids))
-        .select(col("qid"), col("q"), col("cid"),
-          round(Similarity.cosine(col("q"), col("cv")), 6).as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("qid"), col("q"), col("cid").as("cluster"))
-      val approx = assigned.join(broadcast(qcl), Seq("cluster"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-      val scored = truth
-        .join(approx.select(col("qid"), col("vec_id").as("truth_id"),
-          col("rn").as("sys_rank")), Seq("qid", "truth_id"), "left")
-        .withColumn("rr", when(col("sys_rank").isNotNull,
-          lit(1.0) / col("sys_rank")).otherwise(lit(0.0)))
-      val mrr = scored.agg(
-        round(ssum(collect_list(col("rr"))) / count(lit(1)), 6)
-          .as("mrr"))
-      scored.crossJoin(broadcast(mrr))
-        .select(col("qid"), col("truth_id"),
-          coalesce(col("sys_rank"), lit(0)).as("sys_rank"),
-          round(col("rr"), 6).as("rr"), col("mrr"))
-        .orderBy("qid")
-    }),
-
-    // FINANCIAL RECONCILIATION AUDIT (header-vs-detail consistency —
-    // the warehouse data-quality staple): o_totalprice against the
-    // recomputed Σ extendedprice·(1−disc)·(1+tax) per order, bucketed
-    // by relative mismatch band, plus the orders with NO detail rows.
-    // All diffs in exact integer cents; the ratio only picks a band.
-    "q294_reconciliation_audit" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val calc = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("o_orderkey"))
-        .agg(sum(expr(
-          "cast(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) as bigint)"))
-          .as("calc_cents"))
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          expr("cast(round(o_totalprice * 100) as bigint)")
-            .as("hdr_cents"))
-      o.join(calc, Seq("o_orderkey"), "left")
-        .withColumn("band",
-          when(col("calc_cents").isNull, "no_lineitems")
-            .when(col("hdr_cents") === col("calc_cents"), "exact")
-            .when(abs(d(col("hdr_cents") - col("calc_cents")))
-              / col("hdr_cents") < 0.01, "lt_1pct")
-            .when(abs(d(col("hdr_cents") - col("calc_cents")))
-              / col("hdr_cents") < 0.1, "lt_10pct")
-            .when(abs(d(col("hdr_cents") - col("calc_cents")))
-              / col("hdr_cents") < 0.5, "lt_50pct")
-            .otherwise("ge_50pct"))
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(abs(col("hdr_cents")
-            - coalesce(col("calc_cents"), lit(0L)))).as("abs_diff_cents"))
-        .orderBy("band")
-    }),
-
-    // WEIGHTED SAMPLING WITHOUT REPLACEMENT (Efraimidis–Spirakis
-    // A-ES): per-source top-3 by key u^(1/w), u a deterministic
-    // md5-uniform in (0,1], w = doc length — the quality-weighted
-    // document picker every data-mix pipeline needs, fully replayable
-    // (no RNG). One partitioned rank window (WindowGroupLimit-capped).
-    "q295_weighted_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("u",
-          (TF.md5Hash48(col("doc_id").cast("string")) + 1)
-            / lit(281474976710656.0))
-        .withColumn("key", pow(col("u"), lit(1.0) / col("n_chars")))
-      docs.withColumn("rk", row_number().over(
-          Window.partitionBy("source")
-            .orderBy(col("key").desc, col("doc_id"))))
-        .filter(col("rk") <= 3)
-        .select(col("source"), col("rk"), col("doc_id"), col("n_chars"),
-          round(col("key"), 6).as("key"))
-        .orderBy("source", "rk")
-    }),
-
-    // FREEDMAN–DIACONIS HISTOGRAM (the bin-width rule that adapts to
-    // spread and n): width = ceil(2·IQR/∛n) in integer cents — IQR
-    // from floored percentile bounds (the q279 integer-exact trick) —
-    // then an integer-division binning, so bucket membership is exact
-    // cross-engine. The histogram every distribution dashboard draws.
-    "q296_fd_histogram" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(expr("cast(round(o_totalprice * 100) as bigint)")
-          .as("cents"))
-      val stats = o.agg(count(lit(1)).as("n"),
-          floor(expr("percentile(cents, 0.25)")).as("q1"),
-          floor(expr("percentile(cents, 0.75)")).as("q3"))
-        .withColumn("width", greatest(ceil(
-          lit(2.0) * (col("q3") - col("q1")) / cbrt(col("n").cast("double")))
-          .cast("long"), lit(1L)))
-        .select("n", "width")
-      o.crossJoin(broadcast(stats))
-        .withColumn("bin", expr("cents div width"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_orders"), max(col("width")).as("width"))
-        .select(col("bin"), (col("bin") * col("width")).as("lo_cents"),
-          col("n_orders"), col("width"))
-        .orderBy("bin")
-    }),
-
-    // EMBEDDING-GEOMETRY DIAGNOSTIC: cosine-distance histogram from a
-    // fixed probe panel against the corpus (0.05-wide buckets of
-    // 1−cos) — concentration of the distance distribution is the
-    // high-dimensional pathology check run before trusting any ANN
-    // index. Probe-set broadcast, integer bucketing of the rounded
-    // cosine (exact cross-engine).
-    "q297_distance_histogram" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val probes = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("q")))
-      emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(floor((lit(1.0) -
-          round(Similarity.cosine(col("embedding"), col("q")), 6))
-          / 0.05).cast("long").as("bucket"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("dist_lo", round(col("bucket") * 0.05, 2))
-        .orderBy("bucket")
-    }),
-
-    // HUBNESS (the other high-dim pathology: a few points appearing in
-    // EVERYONE's top-k): in-degree of the k-NN graph from the q91
-    // LSH-bucketed kNN join, rolled to an in-degree histogram. A heavy
-    // hub tail says the metric space needs re-scaling (e.g. q253
-    // rank-gauss) before nearest-neighbor labels can be trusted.
-    "q298_hubness" -> ((s, dir) => {
-      val knn = Similarity.knnJoin(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 3, tables = 8, dims = 64)
-      val indeg = knn.groupBy(col("nid")).agg(count(lit(1)).as("indeg"))
-      indeg.groupBy("indeg")
-        .agg(count(lit(1)).as("n_vectors"))
-        .orderBy("indeg")
-    }),
-
-    // SEASONAL-NAIVE FORECAST BACKTEST (the baseline every forecaster
-    // must beat): predict each day's per-type event count with the
-    // value 7 days earlier (day-grain self-join — no window state),
-    // score MAPE and sMAPE per type from exact integer counts with
-    // sorted folds over the day grain.
-    "q299_seasonal_backtest" -> ((s, dir) => {
-      val d = (c: Column) => c.cast("double")
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"),
-          expr("datediff(to_date(ts), date'1970-01-05')").as("dd"))
-        .agg(count(lit(1)).as("n"))
-      val pred = daily.select(col("ty"), (col("dd") + 7).as("dd"),
-        col("n").as("pred"))
-      val scored = daily.join(pred, Seq("ty", "dd"))
-        .withColumn("ape", abs(d(col("n") - col("pred"))) / col("n"))
-        .withColumn("sape", abs(d(col("n") - col("pred"))) * 2.0
-          / (col("n") + col("pred")))
-      scored.groupBy("ty")
-        .agg(count(lit(1)).as("n_days"),
-          round(ssum(collect_list(col("ape"))) / count(lit(1)) * 100, 4)
-            .as("mape_pct"),
-          round(ssum(collect_list(col("sape"))) / count(lit(1)) * 100, 4)
-            .as("smape_pct"))
-        .orderBy("ty")
-    }),
-
-    // BATCHED BPE training (TextAnalysis.bpeTrainBatched): 8 rounds ×
-    // batch 8 — up to 64 merges in 8 driver round trips where q116's
-    // per-merge loop would take 64. Per round: ONE pair recount, top-8
-    // candidates, conflict-filtered acceptance (tokens disjoint from
-    // every higher-ranked candidate of the round), accepted merges
-    // applied in rank order. The oracle unrolls the same 8 rounds and
-    // folds each round's accepted list with list_reduce.
-    "q300_bpe_batched" -> ((s, dir) => {
-      TA.bpeTrainBatched(t(s, dir, "documents"), "text", rounds = 8,
-          batch = 8)
-        .orderBy("rank")
-    }),
-
-    // FELLEGI–SUNTER record-linkage weights (the probabilistic model
-    // behind the reference's intended-scope recordlinkage library,
-    // requirements.txt:25): two sources (customer + a deterministically
-    // perturbed copy), candidate pairs from SORTED-NEIGHBORHOOD
-    // blocking (DedupOps.sortedNeighborhoodPairs — n·window pairs,
-    // linear by construction where equality blocks go density-
-    // quadratic), per-field agreement rates m = P(agree|match) /
-    // u = P(agree|non-match) with Laplace smoothing, and the FS
-    // log₂-likelihood agree/disagree weights. Truth = shared key
-    // (the perturbation generator's ground truth).
-    "q301_fellegi_sunter" -> ((s, dir) => {
-      val base = t(s, dir, "customer").select(
-        col("c_custkey").as("key"), col("c_name").as("nm"),
-        col("c_nationkey").cast("long").as("nat"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("balc"),
-        col("c_mktsegment").as("seg"))
-      val a = base.withColumn("src", lit("a"))
-      val b = base.select(col("key"),
-        when(col("key") % 7 === 0, concat(col("nm"), lit("x")))
-          .otherwise(col("nm")).as("nm"),
-        when(col("key") % 5 === 0, (col("nat") + 1) % 25)
-          .otherwise(col("nat")).as("nat"),
-        when(col("key") % 3 === 0, col("balc") + 10000)
-          .otherwise(col("balc")).as("balc"),
-        when(col("key") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("seg")).as("seg"))
-        .withColumn("src", lit("b"))
-      // sort key is unique (names unique per source), so the SNM rank
-      // is deterministic; the oracle replays the same concat ordering
-      val pairs = DedupOps.sortedNeighborhoodPairs(a.unionByName(b),
-          concat(col("nm"), lit("|"), col("src")), window = 2)
-        .filter(col("a.src") =!= col("b.src"))
-        .select(
-          (col("a.key") === col("b.key")).as("mt"),
-          (col("a.nm") === col("b.nm")).as("ag_nm"),
-          (col("a.nat") === col("b.nat")).as("ag_nat"),
-          (abs(col("a.balc") - col("b.balc")) <= 5000).as("ag_bal"),
-          (col("a.seg") === col("b.seg")).as("ag_seg"))
-      def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
-      val agg = pairs.agg(count(lit(1)).as("np"), cnt(col("mt")).as("nmt"),
-        cnt(col("mt") && col("ag_nm")).as("am_nm"),
-        cnt(!col("mt") && col("ag_nm")).as("au_nm"),
-        cnt(col("mt") && col("ag_nat")).as("am_nat"),
-        cnt(!col("mt") && col("ag_nat")).as("au_nat"),
-        cnt(col("mt") && col("ag_bal")).as("am_bal"),
-        cnt(!col("mt") && col("ag_bal")).as("au_bal"),
-        cnt(col("mt") && col("ag_seg")).as("am_seg"),
-        cnt(!col("mt") && col("ag_seg")).as("au_seg"))
-      def fs(name: String) = struct(lit(name).as("field"),
-        col(s"am_$name").as("am"), col(s"au_$name").as("au"))
-      val d = (c: Column) => c.cast("double")
-      agg.select(col("np"), col("nmt"),
-          explode(array(fs("bal"), fs("nm"), fs("nat"), fs("seg")))
-            .as("f"))
-        .select(col("f.field").as("field"),
-          ((d(col("f.am")) + 0.5) / (d(col("nmt")) + 1.0)).as("m"),
-          ((d(col("f.au")) + 0.5) / (d(col("np") - col("nmt")) + 1.0))
-            .as("u"))
-        .select(col("field"),
-          round(col("m") * 1e6, 0).cast("long").as("m_micro"),
-          round(col("u") * 1e6, 0).cast("long").as("u_micro"),
-          round(log(col("m") / col("u")) / log(lit(2.0)) * 1e6, 0)
-            .cast("long").as("w_agree_micro"),
-          round(log((lit(1.0) - col("m")) / (lit(1.0) - col("u")))
-            / log(lit(2.0)) * 1e6, 0).cast("long").as("w_disagree_micro"))
-        .orderBy("field")
-    }),
-
-    // MULTI-PROBE sign-LSH (Lv et al., VLDB '07): instead of more hash
-    // tables, probe the buckets that differ from the query's bucket in
-    // ONE plane bit — 9 probes from a single 8-plane table. Recall of
-    // the true top-10 under exact-bucket vs 1-bit-probe candidate
-    // sets, measured per query against the brute-force truth. Bucket
-    // membership IS hamming distance on the bucket codes, so the
-    // probe test is bit_count(xor) ≤ 1 — no candidate join at all.
-    // The panel crossJoin rides the q232 fixed-probe-set pattern.
-    "q302_multiprobe_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      // Caches.small: the panel build side becomes a checkpointed scan
-      // the plan gate PROVES bounded (no allowlist entry needed)
-      val queries = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("q")))
-      val truth = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-        .select("qid", "vec_id")
-      val buckets = Similarity.lshBuckets(emb, "vec_id", "embedding",
-        planes = 8, dims = 64)
-      val qb = buckets.select(col("vec_id").as("qid"),
-        col("bucket").as("qbkt"))
-      val nb = buckets.select(col("vec_id"), col("bucket").as("nbkt"))
-      truth.join(qb, Seq("qid")).join(nb, Seq("vec_id"))
-        .withColumn("hd", expr("bit_count(qbkt ^ nbkt)"))
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("hd") === 0, 1L).otherwise(0L)).as("hit_exact"),
-          sum(when(col("hd") <= 1, 1L).otherwise(0L)).as("hit_probe1"))
-        .withColumn("recall_exact",
-          round(col("hit_exact").cast("double") / col("n_truth"), 4))
-        .withColumn("recall_probe1",
-          round(col("hit_probe1").cast("double") / col("n_truth"), 4))
-        .orderBy("qid")
-    }),
-
-    // HOLT LINEAR-TREND BACKTEST (double exponential smoothing,
-    // α = β = 0.5): one-step-ahead forecasts over each type's daily
-    // count series, MAPE from observation 3 on. The dyadic smoothing
-    // constants keep every level/trend update EXACT binary arithmetic
-    // on integer counts, so the sequential fold replays bit-for-bit in
-    // the oracle's list_reduce. One shuffle to the (type, day) grain,
-    // then a per-type sorted fold — no window state, no driver loop.
-    "q303_holt_backtest" -> ((s, dir) => {
-      val daily = events(s, dir)
-        .groupBy(col("event_type").as("ty"),
-          expr("datediff(to_date(ts), date'1970-01-05')").as("dd"))
-        .agg(count(lit(1)).as("n"))
-      val obs = sort_array(collect_list(array(col("dd").cast("double"),
-        col("n").cast("double"))))
-      val folded = aggregate(obs,
-        typedlit(Array(0.0, 0.0, 0.0, 0.0, 0.0)),
-        (acc, x) => {
-          val idx = element_at(acc, 1)
-          val l = element_at(acc, 2)
-          val tr = element_at(acc, 3)
-          val y = element_at(x, 2)
-          val l2 = (y + l + tr) * 0.5
-          when(idx === 0.0,
-              array(lit(1.0), y, lit(0.0), lit(0.0), lit(0.0)))
-            .when(idx === 1.0,
-              array(lit(2.0), y, y - l, lit(0.0), lit(0.0)))
-            .otherwise(array(idx + 1.0, l2,
-              (l2 - l) * 0.5 + tr * 0.5,
-              element_at(acc, 4) + abs(y - (l + tr)) / y,
-              element_at(acc, 5) + 1.0))
-        })
-      daily.groupBy("ty").agg(folded.as("st"))
-        .select(col("ty"),
-          element_at(col("st"), 5).cast("long").as("n_scored"),
-          round(element_at(col("st"), 4) / element_at(col("st"), 5)
-            * 100, 4).as("holt_mape_pct"))
-        .orderBy("ty")
-    }),
-
-    // SMALL-FILE COMPACTION PLANNING (the warehouse-maintenance pass
-    // every table format schedules): a synthetic per-partition file
-    // listing (month × orderkey-shard with byte sizes), target output
-    // size derived from the GLOBAL mean file size (one-row aggregate,
-    // broadcast), and next-fit bin assignment via an integer running
-    // sum inside each partition — (cum + target − 1) div target. The
-    // only window is partitioned by month (bounded); the plan is
-    // file-listing-sized, never row-sized.
-    "q304_compaction_plan" -> ((s, dir) => {
-      val files = t(s, dir, "orders")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("part"),
-          (col("o_orderkey") % 8).as("fid"))
-        .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("bytes"))
-      val stats = files
-        .agg(sum(col("bytes")).as("tot"), count(lit(1)).as("nf"))
-        .select(expr("tot div nf").as("avg_bytes"))
-      val w = Window.partitionBy("part")
-        .orderBy(col("bytes").desc, col("fid"))
-      files.crossJoin(broadcast(stats))
-        .withColumn("target", col("avg_bytes") * 4L)
-        .filter(col("bytes") < col("target"))
-        .withColumn("cum", sum(col("bytes")).over(w))
-        .withColumn("bin",
-          expr("(cum + target - 1) div target").cast("long"))
-        .groupBy("part", "bin")
-        .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("bin_bytes"))
-        .orderBy("part", "bin")
-    }),
-
-    // UNSUPERVISED Fellegi–Sunter via EM (Winkler's classic estimation
-    // — no labels, unlike q301's supervised m/u): the SNM candidate
-    // pairs collapse to their 4-bit agreement PATTERN counts (≤16 rows
-    // — EM runs on the pattern grain, never the pair grain, so the
-    // iteration cost is O(16) whatever the corpus), then 3 statically-
-    // unrolled EM rounds re-estimate match prior p and per-field
-    // m/u from pattern posteriors. No pow(): m^a·(1−m)^(1−a) is a
-    // CASE on the agreement bit; every cross-pattern sum is a sorted
-    // fold (ssum ↔ list_sum(list_sort(list))) so the oracle replays
-    // the doubles bit-for-bit.
-    "q306_linkage_em" -> ((s, dir) => {
-      val base = t(s, dir, "customer").select(
-        col("c_custkey").as("key"), col("c_name").as("nm"),
-        col("c_nationkey").cast("long").as("nat"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("balc"),
-        col("c_mktsegment").as("seg"))
-      val a = base.withColumn("src", lit("a"))
-      val b = base.select(col("key"),
-        when(col("key") % 7 === 0, concat(col("nm"), lit("x")))
-          .otherwise(col("nm")).as("nm"),
-        when(col("key") % 5 === 0, (col("nat") + 1) % 25)
-          .otherwise(col("nat")).as("nat"),
-        when(col("key") % 3 === 0, col("balc") + 10000)
-          .otherwise(col("balc")).as("balc"),
-        when(col("key") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("seg")).as("seg"))
-        .withColumn("src", lit("b"))
-      val pat = DedupOps.sortedNeighborhoodPairs(a.unionByName(b),
-          concat(col("nm"), lit("|"), col("src")), window = 2)
-        .filter(col("a.src") =!= col("b.src"))
-        .select(
-          when(col("a.nm") === col("b.nm"), 1.0).otherwise(0.0).as("g1"),
-          when(col("a.nat") === col("b.nat"), 1.0).otherwise(0.0).as("g2"),
-          when(abs(col("a.balc") - col("b.balc")) <= 5000, 1.0)
-            .otherwise(0.0).as("g3"),
-          when(col("a.seg") === col("b.seg"), 1.0).otherwise(0.0).as("g4"))
-        .groupBy("g1", "g2", "g3", "g4")
-        .agg(count(lit(1)).cast("double").as("cnt"))
-        // Caches.small: the ≤16-row pattern grain is the EM input; all
-        // 3 unrolled rounds crossJoin it, and without the checkpoint
-        // each round replayed the whole SNM candidate pipeline (24
-        // scans in PLANS_r08; judge r08 "Next round" #3)
-        .transform(Caches.small)
-      // one EM round: from (p, m1..m4, u1..u4) scalars riding on every
-      // pattern row, produce the re-estimated one-row params frame
-      def emRound(pp: DataFrame): DataFrame = {
-        val withG = pat.crossJoin(broadcast(pp))
-          .withColumn("pm",
-            (col("g1") * col("m1") + (lit(1.0) - col("g1")) * (lit(1.0) - col("m1"))) *
-            (col("g2") * col("m2") + (lit(1.0) - col("g2")) * (lit(1.0) - col("m2"))) *
-            (col("g3") * col("m3") + (lit(1.0) - col("g3")) * (lit(1.0) - col("m3"))) *
-            (col("g4") * col("m4") + (lit(1.0) - col("g4")) * (lit(1.0) - col("m4"))))
-          .withColumn("pu",
-            (col("g1") * col("u1") + (lit(1.0) - col("g1")) * (lit(1.0) - col("u1"))) *
-            (col("g2") * col("u2") + (lit(1.0) - col("g2")) * (lit(1.0) - col("u2"))) *
-            (col("g3") * col("u3") + (lit(1.0) - col("g3")) * (lit(1.0) - col("u3"))) *
-            (col("g4") * col("u4") + (lit(1.0) - col("g4")) * (lit(1.0) - col("u4"))))
-          .withColumn("g", col("p") * col("pm")
-            / (col("p") * col("pm") + (lit(1.0) - col("p")) * col("pu")))
-        def sfold(c: Column) = ssum(collect_list(c))
-        withG.agg(
-          (sfold(col("g") * col("cnt")) / sfold(col("cnt"))).as("p"),
-          (sfold(col("g") * col("cnt") * col("g1"))
-            / sfold(col("g") * col("cnt"))).as("m1"),
-          (sfold(col("g") * col("cnt") * col("g2"))
-            / sfold(col("g") * col("cnt"))).as("m2"),
-          (sfold(col("g") * col("cnt") * col("g3"))
-            / sfold(col("g") * col("cnt"))).as("m3"),
-          (sfold(col("g") * col("cnt") * col("g4"))
-            / sfold(col("g") * col("cnt"))).as("m4"),
-          (sfold((lit(1.0) - col("g")) * col("cnt") * col("g1"))
-            / sfold((lit(1.0) - col("g")) * col("cnt"))).as("u1"),
-          (sfold((lit(1.0) - col("g")) * col("cnt") * col("g2"))
-            / sfold((lit(1.0) - col("g")) * col("cnt"))).as("u2"),
-          (sfold((lit(1.0) - col("g")) * col("cnt") * col("g3"))
-            / sfold((lit(1.0) - col("g")) * col("cnt"))).as("u3"),
-          (sfold((lit(1.0) - col("g")) * col("cnt") * col("g4"))
-            / sfold((lit(1.0) - col("g")) * col("cnt"))).as("u4"))
-      }
-      val init = s.range(1).select(lit(0.1).as("p"),
-        lit(0.9).as("m1"), lit(0.9).as("m2"), lit(0.9).as("m3"),
-        lit(0.9).as("m4"),
-        lit(0.1).as("u1"), lit(0.1).as("u2"), lit(0.1).as("u3"),
-        lit(0.1).as("u4"))
-      val fin = emRound(emRound(emRound(init)))
-      def f(i: Int, name: String) = struct(lit(name).as("field"),
-        col(s"m$i").as("m"), col(s"u$i").as("u"))
-      fin.select(round(col("p") * 1e6, 0).cast("long").as("prior_micro"),
-          explode(array(f(3, "bal"), f(1, "nm"), f(2, "nat"),
-            f(4, "seg"))).as("fx"))
-        .select(col("fx.field").as("field"),
-          round(col("fx.m") * 1e6, 0).cast("long").as("m_micro"),
-          round(col("fx.u") * 1e6, 0).cast("long").as("u_micro"),
-          col("prior_micro"))
-        .orderBy("field")
-    }),
-
-    // IVF nprobe RECALL CURVE (the accuracy/cost lever every IVF
-    // deployment tunes): recall@10 of the brute-force truth when the
-    // query probes its 1 nearest centroid vs its 2 nearest — same
-    // trained-free IVF as q232 (16 seed centroids), same fixed query
-    // panel. nprobe multiplies the scanned candidate volume by
-    // nprobe/nlist of the corpus — the measured recall gain is what
-    // justifies (or not) that scan cost at 100 TB.
-    "q307_ivf_nprobe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      // Caches.small: the panel build side becomes a checkpointed scan
-      // the plan gate PROVES bounded (no allowlist entry needed)
-      val queries = Caches.small(emb.filter(col("vec_id") % 101 === 0)
-        .select(col("vec_id").as("qid"), col("embedding").as("q")))
-      val exact = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-        .select("qid", "vec_id")
-      val centroids = Caches.small(emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-      val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-        centroids, "cid", "cv")
-      val qcl = queries.crossJoin(broadcast(centroids))
-        .select(col("qid"), col("q"), col("cid"),
-          round(Similarity.cosine(col("q"), col("cv")), 6).as("cs"))
-        .withColumn("np", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("cid"))))
-        .filter(col("np") <= 2)
-        .select(col("qid"), col("q"), col("cid").as("cluster"), col("np"))
-      val scored = assigned.join(broadcast(qcl), Seq("cluster"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), col("np"),
-          round(Similarity.cosine(col("embedding"), col("q")), 6)
-            .as("cs"))
-      def topHits(cand: DataFrame, as: String) = cand
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("cs").desc, col("vec_id"))))
-        .filter(col("rn") <= 10)
-        .select(col("qid"), col("vec_id"), lit(1L).as(as))
-      exact
-        .join(topHits(scored.filter(col("np") === 1), "h1"),
-          Seq("qid", "vec_id"), "left")
-        .join(topHits(scored, "h2"), Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("h1"), lit(0L))).as("hit_np1"),
-          sum(coalesce(col("h2"), lit(0L))).as("hit_np2"))
-        .withColumn("recall_np1",
-          round(col("hit_np1").cast("double") / col("n_truth"), 4))
-        .withColumn("recall_np2",
-          round(col("hit_np2").cast("double") / col("n_truth"), 4))
-        .orderBy("qid")
-    }),
-
-    // FS PAIR CLASSIFICATION (the decision rule the q301 weights
-    // exist for): every SNM candidate pair scores Σ_f (agreeᶠ ?
-    // w_agreeᶠ : w_disagreeᶠ) log₂-likelihood bits and lands in the
-    // Fellegi–Sunter three-way decision — match (≥ +3 bits),
-    // non-match (≤ −3), possible (clerical review) — with per-band
-    // precision against the generator's ground truth. Weights are the
-    // q301 supervised m/u (1-row frame broadcast onto the pair
-    // stream); banding is per-pair map-side.
-    "q308_fs_classify" -> ((s, dir) => {
-      val base = t(s, dir, "customer").select(
-        col("c_custkey").as("key"), col("c_name").as("nm"),
-        col("c_nationkey").cast("long").as("nat"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("balc"),
-        col("c_mktsegment").as("seg"))
-      val a = base.withColumn("src", lit("a"))
-      val b = base.select(col("key"),
-        when(col("key") % 7 === 0, concat(col("nm"), lit("x")))
-          .otherwise(col("nm")).as("nm"),
-        when(col("key") % 5 === 0, (col("nat") + 1) % 25)
-          .otherwise(col("nat")).as("nat"),
-        when(col("key") % 3 === 0, col("balc") + 10000)
-          .otherwise(col("balc")).as("balc"),
-        when(col("key") % 11 === 0, lit("UNKNOWN"))
-          .otherwise(col("seg")).as("seg"))
-        .withColumn("src", lit("b"))
-      val pairs = DedupOps.sortedNeighborhoodPairs(a.unionByName(b),
-          concat(col("nm"), lit("|"), col("src")), window = 2)
-        .filter(col("a.src") =!= col("b.src"))
-        .select(
-          (col("a.key") === col("b.key")).as("mt"),
-          (col("a.nm") === col("b.nm")).as("ag_nm"),
-          (col("a.nat") === col("b.nat")).as("ag_nat"),
-          (abs(col("a.balc") - col("b.balc")) <= 5000).as("ag_bal"),
-          (col("a.seg") === col("b.seg")).as("ag_seg"))
-      def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
-      val agg = pairs.agg(count(lit(1)).as("np"), cnt(col("mt")).as("nmt"),
-        cnt(col("mt") && col("ag_nm")).as("am_nm"),
-        cnt(!col("mt") && col("ag_nm")).as("au_nm"),
-        cnt(col("mt") && col("ag_nat")).as("am_nat"),
-        cnt(!col("mt") && col("ag_nat")).as("au_nat"),
-        cnt(col("mt") && col("ag_bal")).as("am_bal"),
-        cnt(!col("mt") && col("ag_bal")).as("au_bal"),
-        cnt(col("mt") && col("ag_seg")).as("am_seg"),
-        cnt(!col("mt") && col("ag_seg")).as("au_seg"))
-      val d = (c: Column) => c.cast("double")
-      def m(f: String) = ((d(col(s"am_$f")) + 0.5)
-        / (d(col("nmt")) + 1.0)).as(s"m_$f")
-      def u(f: String) = ((d(col(s"au_$f")) + 0.5)
-        / (d(col("np") - col("nmt")) + 1.0)).as(s"u_$f")
-      val mu = agg.select(m("nm"), u("nm"), m("nat"), u("nat"),
-        m("bal"), u("bal"), m("seg"), u("seg"))
-      def w(ag: String, f: String) =
-        when(col(ag), log(col(s"m_$f") / col(s"u_$f")) / log(lit(2.0)))
-          .otherwise(log((lit(1.0) - col(s"m_$f"))
-            / (lit(1.0) - col(s"u_$f"))) / log(lit(2.0)))
-      pairs.crossJoin(broadcast(mu))
-        .withColumn("score", w("ag_nm", "nm") + w("ag_nat", "nat")
-          + w("ag_bal", "bal") + w("ag_seg", "seg"))
-        .withColumn("band",
-          when(col("score") >= 3.0, "match")
-            .when(col("score") <= -3.0, "nonmatch")
-            .otherwise("possible"))
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("mt"), 1L).otherwise(0L)).as("n_true"))
-        .withColumn("true_rate",
-          round(col("n_true").cast("double") / col("n_pairs"), 4))
-        .orderBy("band")
-    }),
-
-    // BPE FERTILITY BY SOURCE (the tokenizer-efficiency table every
-    // multilingual/multi-domain corpus report carries): subword tokens
-    // per word under the trained 10-merge table, per source — a high-
-    // fertility source pays more sequence length per word of content.
-    // The encoder runs over the DISTINCT vocabulary and joins back
-    // (q110 machinery), so cost scales with vocab, not corpus.
-    "q309_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TA.bpeEncode(docs, "doc_id", "text", numMerges = 10)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_words"),
-          sum(col("n_bpe_tokens")).as("n_bpe_tokens"))
-        .withColumn("fertility", round(
-          col("n_bpe_tokens").cast("double") / col("n_words"), 4))
-        .orderBy("source")
-    }),
-
-    // PERPLEXITY-BUCKET SPLIT (the CCNet curation move: rank documents
-    // by LM surprisal within each source, split head/middle/tail):
-    // per-doc mean unigram surprisal (q53 machinery, sorted-fold
-    // exact), ntile(3) inside each source, per-bucket doc counts and
-    // surprisal ranges. The only window is partitioned by source; the
-    // sort key (msur, doc_id) is bit-identical across engines so the
-    // tile boundaries replay exactly.
-    "q310_perplexity_buckets" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          explode_outer(split(TF.normalizeText(col("text")), " ")).as("w"))
-        .filter(col("w").isNotNull)
-      val vocab = words.groupBy("w").agg(count(lit(1)).as("wc"))
-      val total = vocab.agg(sum(col("wc")).as("tot"))
-      val perDoc = words.join(vocab, Seq("w")).crossJoin(broadcast(total))
-        .select(col("doc_id"), col("source"),
-          (-log(col("wc").cast("double") / col("tot"))).as("nll"))
-        .groupBy("doc_id", "source")
-        .agg((ssum(collect_list(col("nll"))) / count(lit(1))).as("msur"))
-      perDoc
-        .withColumn("bucket", ntile(3).over(Window.partitionBy("source")
-          .orderBy(col("msur"), col("doc_id"))).cast("long"))
-        .groupBy("source", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          round(min(col("msur")), 4).as("min_surprisal"),
-          round(max(col("msur")), 4).as("max_surprisal"))
-        .orderBy("source", "bucket")
-    }),
-
-    // JOIN-SIZE ESTIMATION via Count-Min inner product (the AMS
-    // estimator every CBO wants and no per-key histogram can afford at
-    // 100 TB): |A ⋈_k B| = Σ_k f_A(k)·f_B(k), estimated by the
-    // depth-wise MINIMUM of Σ_buckets cmA·cmB — two 4×256 sketches,
-    // each one groupBy, joined on (d, bucket). Exact answer from the
-    // key-frequency join for the error report. Estimate ≥ exact always
-    // (CM collisions only inflate).
-    "q311_join_size_cm" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      // ONE corpus scan + ONE key-grain shuffle feed BOTH sketches AND
-      // the exact inner product (r15; §6 read amplification): the old
-      // shape scanned lineitem four times (each sketch's cell explode,
-      // each side of the exact key-frequency join). CM cells are plain
-      // sums, so building them from per-key counts via
-      // countMinWeighted is integer-identical to counting raw rows
-      // (SketchSampleSpec pins the equivalence); the b-side keys are
-      // exactly those with cb > 0. Checkpointed (key-cardinality
-      // grain, registered corpus-scale) for its three consumers.
-      val kc = Caches.corpusScale(li
-        .select(col("l_partkey").cast("string").as("k"),
-          when(col("l_shipdate") > lit("2000-01-01").cast("timestamp"),
-            lit(1L)).otherwise(lit(0L)).as("__inb"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("ca"), sum(col("__inb")).as("cb")))
-      val skA = Sketches.countMinWeighted(kc, col("k"), col("ca"),
-        depth = 4, width = 256)
-      val skB = Sketches.countMinWeighted(kc.filter(col("cb") > 0),
-          col("k"), col("cb"), depth = 4, width = 256)
-        .withColumnRenamed("cnt", "cntb")
-      val est = skA.join(skB, Seq("d", "bucket"))
-        .groupBy("d").agg(sum(col("cnt") * col("cntb")).as("ip"))
-        .agg(min(col("ip")).as("est_pairs"))
-      val exact = kc.filter(col("cb") > 0)
-        .agg(sum(col("ca") * col("cb")).as("exact_pairs"))
-      // broadcast hint is load-bearing: both sides are one-row aggs,
-      // but without it the planner may pick a shuffled CartesianProduct
-      // when a sibling suite's session conf disables auto-broadcast
-      est.crossJoin(broadcast(exact))
-        .withColumn("inflation", round(
-          col("est_pairs").cast("double") / col("exact_pairs"), 4))
-    }),
-
-    // RANGE-SELECTIVITY ESTIMATION from a fixed-width histogram (the
-    // CBO primitive zone maps feed): 50k-cent buckets (map-side div —
-    // no global sort, unlike an equi-depth build), uniform-within-
-    // bucket interpolation for 5 deliberately bucket-misaligned
-    // predicates, estimate vs exact row count. The per-predicate error
-    // is the number a cost model's plan choice actually consumes.
-    "q312_selectivity_histogram" -> ((s, dir) => {
-      val W = 5000000L
-      val cents = round(col("o_totalprice") * 100, 0).cast("long")
-      val o = t(s, dir, "orders").select(cents.as("c"))
-      val hist = o.groupBy(expr("c div 5000000").as("b"))
-        .agg(count(lit(1)).as("cnt"))
-      val preds = Seq(
-        (0L, 1234567L, 8888888L), (1L, 7500000L, 20000000L),
-        (2L, 12345678L, 13000000L), (3L, 30000000L, 47500000L),
-        (4L, 2500000L, 52345678L))
-      val pr = preds.map { case (p, lo, hi) =>
-        struct(lit(p).as("pred"), lit(lo).as("lo"), lit(hi).as("hi")) }
-      val d = (c: Column) => c.cast("double")
-      val est = hist
-        .withColumn("pp", explode(array(pr: _*)))
-        .select(col("b"), col("cnt"), col("pp.pred").as("pred"),
-          col("pp.lo").as("lo"), col("pp.hi").as("hi"))
-        .withColumn("blo", col("b") * W)
-        .withColumn("bhi", (col("b") + 1L) * W)
-        .withColumn("frac",
-          greatest(lit(0.0), (d(least(col("hi"), col("bhi")))
-            - d(greatest(col("lo"), col("blo")))) / d(lit(W))))
-        .groupBy("pred")
-        .agg(round(ssum(collect_list(d(col("cnt")) * col("frac"))), 2)
-          .as("est_rows"))
-      val exact = o
-        .withColumn("pp", explode(array(pr: _*)))
-        .filter(col("c") >= col("pp.lo") && col("c") < col("pp.hi"))
-        .groupBy(col("pp.pred").as("pred"))
-        .agg(count(lit(1)).as("exact_rows"))
-      est.join(exact, Seq("pred"), "left")
-        .select(col("pred"), col("est_rows"),
-          coalesce(col("exact_rows"), lit(0L)).as("exact_rows"))
-        .orderBy("pred")
-    }),
-
-    // BLOCK vs ROW SAMPLING BIAS (the scan-design lesson behind
-    // TABLESAMPLE SYSTEM vs BERNOULLI): estimating mean line revenue
-    // from a ~10% sample drawn by ROWS (md5 on the line identity) vs
-    // by BLOCKS (md5 on l_orderkey — whole orders in or out, the way
-    // block sampling admits whole files). Lines within an order are
-    // correlated, so the block design pays a design effect the row
-    // design doesn't; both estimators and the truth are exact-cents
-    // sums with deterministic membership — the bias is measured, not
-    // argued.
-    "q313_sampling_design" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-        round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-      val tagged = li
-        .withColumn("row_in", pmod(TF.md5Hash48(concat(
-          col("ok").cast("string"), lit("_"), col("ln").cast("string"))),
-          lit(10L)) === 0)
-        .withColumn("blk_in", pmod(TF.md5Hash48(col("ok").cast("string")),
-          lit(10L)) === 0)
-      def est(flag: String, name: String) = tagged
-        .filter(col(flag))
-        .agg(lit(name).as("design"), count(lit(1)).as("n_rows"),
-          round(sum(col("cents")).cast("double") / count(lit(1)) / 100.0,
-            4).as("mean_price"))
-      val truth = tagged.agg(lit("full").as("design"),
-        count(lit(1)).as("n_rows"),
-        round(sum(col("cents")).cast("double") / count(lit(1)) / 100.0, 4)
-          .as("mean_price"))
-      est("blk_in", "block10").unionByName(est("row_in", "row10"))
-        .unionByName(truth)
-        .orderBy("design")
-    }),
-
-    // WATERMARK PLANNING TABLE (what T7's withWatermark delay should
-    // BE): deterministic per-event network lateness (md5 mod 10 min),
-    // then for each candidate watermark delay the fraction of events
-    // that would arrive later than their own event time + delay — the
-    // dropped-data/completeness trade a streaming deployment reads off
-    // before picking the delay. Map-side explode over 5 candidates;
-    // one (type, delay)-grain aggregation.
-    "q314_watermark_planning" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_id"),
-        col("event_type").as("ty"),
-        (pmod(TF.md5Hash48(col("event_id").cast("string")), lit(600L)))
-          .as("late_s"))
-      e.withColumn("delay_s",
-          explode(array(Seq(0L, 60L, 120L, 300L, 600L).map(lit): _*)))
-        .groupBy("ty", "delay_s")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("late_s") > col("delay_s"), 1L).otherwise(0L))
-            .as("n_dropped"))
-        .withColumn("dropped_pct", round(
-          col("n_dropped").cast("double") / col("n_events") * 100, 4))
-        .orderBy("ty", "delay_s")
-    }),
-
-    // CURATION FUNNEL (the FineWeb-style stage-count table every
-    // dataset card publishes): raw → exact dedup (fingerprint
-    // keep-first) → Gopher quality gate → English-marker gate, with
-    // per-stage survivor counts and % of raw. Each stage is the
-    // already-gated operator (q18/q76 machinery) composed end-to-end —
-    // the funnel is what the pipeline DOES to the corpus, in one row
-    // per stage.
-    "q315_curation_funnel" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val d1 = docs.withColumn("fp", TA.fingerprint(col("text")))
-      val keep2 = d1.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-      val s2 = d1.join(keep2, Seq("fp", "doc_id"))
-        .select(col("doc_id"), col("text"))
-      val g = TA.gopherQuality(s2, "doc_id", "text",
-        minWords = 50, maxWords = 90)
-      val s3 = s2.join(g.filter(col("keep") === 1L).select("doc_id"),
-        Seq("doc_id"))
-      val ws = split(TF.normalizeText(col("text")), " ")
-      val en = size(filter(ws, w =>
-        w === "the" || w === "a" || w === "of" || w === "and"))
-      val s4 = s3.filter(en >= 2)
-      def stage(df: DataFrame, name: String) =
-        df.agg(lit(name).as("stage"), count(lit(1)).as("n_docs"))
-      val raw = docs.agg(count(lit(1)).as("nr"))
-      stage(docs, "1_raw").unionByName(stage(s2, "2_exact_dedup"))
-        .unionByName(stage(s3, "3_quality"))
-        .unionByName(stage(s4, "4_english"))
-        .crossJoin(broadcast(raw))
-        .withColumn("pct_of_raw",
-          round(col("n_docs").cast("double") / col("nr") * 100, 4))
-        .select("stage", "n_docs", "pct_of_raw")
-        .orderBy("stage")
-    }),
-
-    // MinHash S-CURVE, measured against itself (does the deployed LSH
-    // geometry deliver its textbook collision probability?): exact
-    // df-cut Jaccard pairs binned at 0.05 grain; per bin, the OBSERVED
-    // co-bucket rate of the production candidate generator (16 hashes,
-    // 8 bands × 2 rows, bucket cap 10) next to the THEORETICAL
-    // 1 − (1 − j²)⁸ — computed by squaring alone (no pow), so the
-    // curve replays bit-exactly. The gap between columns is the
-    // recall the bucket cap + hash family actually cost.
-    "q316_minhash_scurve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // ONE shingle pass feeds BOTH pipelines (r15; verdict r14 item
-      // 3): the exact-Jaccard side and the LSH side use the identical
-      // 2-gram shingle frame, and normalize+split+shingle is the
-      // dominant map work of each — before, the two pipelines each ran
-      // their own full pass. Persisted for the two eager consumers
-      // (the em checkpoint inside jaccardPairsOnShingles, the pair
-      // checkpoint inside the LSH blocking tail), released before the
-      // plan is returned — the returned frame reads only checkpoints.
-      val sh = DedupOps.shingleFrame(docs, "doc_id", "text", n = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = DedupOps.jaccardPairsOnShingles(sh,
-        threshold = 0.05, maxDf = 20)
-      val cand = DedupOps.minhashCandidatesOnShingles(sh,
-          numHashes = 16, rowsPerBand = 2, maxBucket = 10)
-        .withColumn("hit", lit(1L))
-      sh.unpersist()
-      val scored = pairs.join(cand, Seq("id_a", "id_b"), "left")
-        .withColumn("bin",
-          expr("cast(round(jaccard * 10000) as bigint) div 500"))
-        .withColumn("x", lit(1.0) - col("jaccard") * col("jaccard"))
-        .withColumn("x2", col("x") * col("x"))
-        .withColumn("x4", col("x2") * col("x2"))
-        .withColumn("p", lit(1.0) - col("x4") * col("x4"))
-      scored.groupBy("bin")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_collided"),
-          round(ssum(collect_list(col("p"))) / count(lit(1)), 4)
-            .as("theo_rate"))
-        .withColumn("obs_rate",
-          round(col("n_collided").cast("double") / col("n_pairs"), 4))
-        .select(col("bin"), col("n_pairs"), col("n_collided"),
-          col("obs_rate"), col("theo_rate"))
-        .orderBy("bin")
-    }),
-
-    // IVF LIST-BALANCE PROFILE (the hot-partition diagnostic for the
-    // q24/q232/q307 family): occupancy of every inverted list under
-    // 8 vs 16 seed centroids — max/mean imbalance is the factor by
-    // which the hottest list's scan cost exceeds the nprobe cost
-    // model's assumption. A 100 TB IVF with imbalance 5 reads 5× the
-    // budget on the unlucky probes; this table is what says whether
-    // the centroid count (or a re-train) is needed.
-    "q317_ivf_list_balance" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      def occ(k: Int) = {
-        val cents = Caches.small(emb.filter(col("vec_id") < k)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-        Similarity.ivfAssign(emb, "vec_id", "embedding", cents,
-            "cid", "cv")
-          .groupBy("cluster").agg(count(lit(1)).as("occ"))
-          .agg(lit(k.toLong).as("nlists"),
-            count(lit(1)).as("lists_used"),
-            min(col("occ")).as("min_occ"),
-            max(col("occ")).as("max_occ"),
-            sum(col("occ")).as("n_vectors"))
-      }
-      occ(8).unionByName(occ(16))
-        .withColumn("imbalance", round(
-          col("max_occ").cast("double") * col("nlists") / col("n_vectors"),
-          4))
-        .orderBy("nlists")
-    }),
-
-    // SHINGLE DOCUMENT-FREQUENCY PROFILE (the data behind the df-cut
-    // knob the q19/q75 pair sources rely on): 2-gram shingles banded
-    // by document frequency, with each band's share of the POSTING
-    // MASS — the Σ df² pair work a shingle self-join would pay lives
-    // in the top bands, which is exactly what maxDf = 20 removes.
-    // This is the table that justifies (or re-tunes) the cut at any
-    // corpus.
-    "q318_shingle_df_profile" -> ((s, dir) => {
-      // two-step shingling (the withShingles discipline): the words
-      // array crosses an exchange so the lambda binds an attribute —
-      // the one-expression form recomputes normalize+split per lambda
-      // element and pinned q318 to one parquet split (7.7 s → 1.3 s)
-      val sh = t(s, dir, "documents")
-        .select(col("doc_id"),
-          split(TF.normalizeText(col("text")), " ").as("__ws"))
-        .repartition(32)
-        .select(col("doc_id"),
-          explode(DedupOps.shinglesFromWords(col("__ws"), 2)).as("sh"))
-      val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-      val banded = df.withColumn("band",
-        when(col("df") === 1, "1_unique")
-          .when(col("df") === 2, "2_pair")
-          .when(col("df") <= 5, "3_to_5")
-          .when(col("df") <= 20, "6_to_20")
-          .otherwise("9_over_cut"))
-      val tot = banded.agg(sum(col("df")).as("tot_postings"),
-        sum(col("df") * col("df")).as("tot_pairwork"))
-      banded.groupBy("band")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(col("df")).as("postings"),
-          sum(col("df") * col("df")).as("pairwork"))
-        .crossJoin(broadcast(tot))
-        .select(col("band"), col("n_shingles"), col("postings"),
-          round(col("postings").cast("double") / col("tot_postings")
-            * 100, 4).as("posting_pct"),
-          round(col("pairwork").cast("double") / col("tot_pairwork")
-            * 100, 4).as("pairwork_pct"))
-        .orderBy("band")
-    }),
-
-    // DEDUP THRESHOLD SWEEP (the governance table behind "dedup at
-    // 0.8"): one verified near-dup pair computation, then for every
-    // candidate threshold the surviving pair count and the number of
-    // DOCUMENTS touched — what moving the knob actually deletes. The
-    // sweep explodes map-side over 5 thresholds; the expensive pair
-    // source runs once.
-    "q319_dedup_threshold_sweep" -> ((s, dir) => {
-      val pairs = DedupOps.jaccardPairs(t(s, dir, "documents"),
-        "doc_id", "text", n = 2, threshold = 0.5, maxDf = 20)
-      val swept = pairs.withColumn("thr_pct",
-          explode(array(Seq(50L, 60L, 70L, 80L, 90L).map(lit): _*)))
-        .filter(col("jaccard") >= col("thr_pct").cast("double") / 100.0)
-      val np = swept.groupBy("thr_pct").agg(count(lit(1)).as("n_pairs"))
-      val nd = swept
-        .select(col("thr_pct"),
-          explode(array(col("id_a"), col("id_b"))).as("d"))
-        .groupBy("thr_pct")
-        .agg(countDistinct(col("d")).as("n_docs"))
-      np.join(nd, Seq("thr_pct")).orderBy("thr_pct")
-    }),
-
-    // MinHash ESTIMATOR ACCURACY vs signature width (how many hashes
-    // does the sketch actually need?): for each df-cut exact pair,
-    // the slot-agreement estimate from the first k of 16 signature
-    // slots vs the true Jaccard, rolled to mean absolute error and
-    // bias per k ∈ {4, 8, 16}. One signature computation; the k sweep
-    // reads prefixes. The k where MAE flattens is the memory the
-    // production sketch should pay — no more.
-    "q320_minhash_estimator" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = DedupOps.jaccardPairs(docs, "doc_id", "text",
-        n = 2, threshold = 0.05, maxDf = 20)
-      val sigs = DedupOps.minhashSignatures(docs, "doc_id", "text",
-        numHashes = 16)
-      val sa = sigs.select(col("doc_id").as("id_a"), col("sig").as("sa"))
-      val sb = sigs.select(col("doc_id").as("id_b"), col("sig").as("sb"))
-      val d = (c: Column) => c.cast("double")
-      pairs.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-        .withColumn("k", explode(array(Seq(4L, 8L, 16L).map(lit): _*)))
-        .withColumn("agree", expr(
-          "aggregate(sequence(1L, k), 0L, (a, i) -> a + " +
-            "IF(element_at(sa, cast(i as int)) = " +
-            "element_at(sb, cast(i as int)), 1L, 0L))"))
-        .withColumn("err", d(col("agree")) / col("k") - col("jaccard"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n_pairs"),
-          round(ssum(collect_list(abs(col("err")))) / count(lit(1)), 6)
-            .as("mae"),
-          round(ssum(collect_list(col("err"))) / count(lit(1)), 6)
-            .as("bias"))
-        .orderBy("k")
-    }),
-
-    // ZONE-MAP FILE-SKIPPING EFFECTIVENESS — the data-layout lesson
-    // behind every min/max-pruned scan: the SAME rows grouped into
-    // files by hash (orderkey shard) vs by price-clustered ntile give
-    // wildly different skip rates for the SAME range predicates,
-    // because clustering tightens per-file min/max zones. 20 fixed
-    // price bands × 2 layouts, skip test max < lo OR min ≥ hi —
-    // integer-exact end to end; the predicate grid explodes map-side
-    // (no join).
-    "q305_zonemap_skipping" -> ((s, dir) => {
-      val base = t(s, dir, "orders").select(
-        date_format(col("o_orderdate"), "yyyy-MM").as("part"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("c"),
-        col("o_orderkey").as("k"))
-      val hashF = base.withColumn("fid", col("k") % 8)
-        .withColumn("layout", lit("hash"))
-      val clustF = base.withColumn("fid",
-          ntile(8).over(Window.partitionBy("part")
-            .orderBy(col("c"), col("k"))).cast("long"))
-        .withColumn("layout", lit("clustered"))
-      hashF.unionByName(clustF)
-        .groupBy("layout", "part", "fid")
-        .agg(min(col("c")).as("zmin"), max(col("c")).as("zmax"))
-        .withColumn("pred", explode(sequence(lit(0L), lit(19L))))
-        .withColumn("lo", col("pred") * 2500000L)
-        .withColumn("hi", (col("pred") + 1L) * 2500000L)
-        .groupBy("layout", "pred")
-        .agg(count(lit(1)).as("n_files"),
-          sum(when(col("zmax") < col("lo") || col("zmin") >= col("hi"),
-            1L).otherwise(0L)).as("n_skipped"))
-        .withColumn("skip_pct",
-          round(col("n_skipped").cast("double") / col("n_files") * 100, 2))
-        .orderBy("layout", "pred")
-    }),
-
-    // NATIVE SQLITE SCAN (sources.SqliteDataSourceV2): the reference's
-    // actual warehouse format (`script.py:125` opens drwh.db) read by
-    // the hand-rolled B-tree parser — no JDBC — with subtree
-    // partitioning and pruned record decode. Input: the committed
-    // fixture (tools/make_sqlite_fixture.py; multi-level B-tree,
-    // overflow chains, rowid-alias ids, every serial type). The oracle
-    // is ENGINE-INDEPENDENT: sqlite3 itself computed the expected
-    // per-category aggregates at fixture-generation time; DuckDB just
-    // replays the VALUES. sum(score) stays exact (dyadic k/8 values).
-    "q321_sqlite_scan" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("flag")).as("n_flagged"),
-          round(sum(col("score")) * 8, 0).cast("long").as("sum_score_x8"),
-          max(col("id")).as("max_id"),
-          sum(length(col("body"))).as("body_chars"))
-        .orderBy("cat")
-    }),
-
-    // BENFORD'S LAW SCREEN (the forensic first-digit test for synthetic
-    // or tampered monetary data — a data-quality gate for ingested
-    // training corpora): observed first-significant-digit counts of
-    // order totals vs the Benford expectation, with per-digit χ²
-    // contributions. The nine log₁₀(1+1/d) constants are IDENTICAL
-    // literals in query and oracle (no cross-engine libm), so every
-    // double op replays bit-for-bit. Map-side digit extraction, one
-    // 9-row aggregate — nothing scales beyond the scan.
-    "q322_benford_screen" -> ((s, dir) => {
-      val benford = typedlit(Array(0.3010299956639812, 0.17609125905568124,
-        0.12493873660829992, 0.09691001300805642, 0.07918124604762482,
-        0.06694678963061322, 0.05799194697768673, 0.05115252244738129,
-        0.04575749056067514))
-      val obs = t(s, dir, "orders")
-        .select(substring(expr("cast(round(o_totalprice * 100) as bigint)")
-          .cast("string"), 1, 1).cast("long").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("n_obs"))
-      val tot = obs.agg(sum(col("n_obs")).cast("double").as("__n"))
-      obs.crossJoin(broadcast(tot))
-        .withColumn("__e", col("__n") *
-          element_at(benford, col("digit").cast("int")))
-        .select(col("digit"), col("n_obs"),
-          round(element_at(benford, col("digit").cast("int")), 6)
-            .as("p_benford"),
-          round(col("__e"), 4).as("expected"),
-          round((col("n_obs") - col("__e")) * (col("n_obs") - col("__e"))
-            / col("__e"), 6).as("chi2_term"))
-        .orderBy("digit")
-    }),
-
-    // GROUP-WISE WINSORIZATION (the standard outlier clamp before
-    // feature scaling / reward-model stats): per market segment, clip
-    // account balances at that segment's exact type-7 p10/p90
-    // (Spark `percentile` ≡ DuckDB quantile_cont, proven bridge) and
-    // report the clip counts and the winsorized sum (sorted fold —
-    // bit-exact). Percentiles are per-group aggregates (no global
-    // sort); the clip is map-side.
-    "q323_winsorize_groups" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(
-        col("c_mktsegment").as("seg"),
-        expr("cast(round(c_acctbal * 100) as bigint)").as("cents"))
-      val cuts = c.groupBy("seg").agg(
-        expr("percentile(cents, 0.1D)").as("lo"),
-        expr("percentile(cents, 0.9D)").as("hi"))
-      c.join(broadcast(cuts), Seq("seg"))
-        .withColumn("w",
-          greatest(least(col("cents").cast("double"), col("hi")), col("lo")))
-        .groupBy("seg")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("cents").cast("double") < col("lo"), 1L)
-            .otherwise(0L)).as("n_clip_lo"),
-          sum(when(col("cents").cast("double") > col("hi"), 1L)
-            .otherwise(0L)).as("n_clip_hi"),
-          round(min(col("lo")), 4).as("p10"),
-          round(min(col("hi")), 4).as("p90"),
-          round(ssum(collect_list(col("w"))), 4).as("sum_winsorized"))
-        .orderBy("seg")
-    }),
-
-    // GOOD–TURING FREQUENCY SMOOTHING (Gale & Sampson '95 — the
-    // vocabulary-mass estimate behind unseen-token probability and
-    // corpus-coverage planning): frequency-of-frequencies N_r over the
-    // word counts, discounted count r* = (r+1)·N_{r+1}/N_r for the
-    // small-r head, and each r's share of the token mass. The loop
-    // state is the N_r grain (≤ max word count rows); the corpus is
-    // scanned once.
-    "q324_good_turing" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(explode(TA.tokens(col("text"))).as("w"))
-      val wc = words.groupBy("w").agg(count(lit(1)).as("r"))
-      val nr = wc.groupBy("r").agg(count(lit(1)).as("n_r"))
-      val nxt = nr.select((col("r") - 1).as("r"), col("n_r").as("__n1"))
-      val tot = words.agg(count(lit(1)).cast("double").as("__N"))
-      // the 10 LOWEST occupied frequencies (not r<=10: a boilerplate-
-      // heavy corpus can have its entire rare head above any fixed
-      // cut, and the gate must exercise real rows at every SF)
-      nr.join(nxt, Seq("r"), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("r"), col("n_r"),
-          round((col("r") + 1).cast("double") * col("__n1") / col("n_r"), 6)
-            .as("r_star"),
-          round(col("r").cast("double") * col("n_r") / col("__N"), 6)
-            .as("mass_share"))
-        .orderBy("r").limit(10)
-    }),
-
-    // TOKEN-BUDGET SHARDING (the curriculum/packing step that cuts a
-    // corpus into fixed-token-budget shards in a stable document
-    // order): exclusive running token count via the two-phase
-    // numberAndRunningSum (range-partitioned — no single-partition
-    // sort), shard = exclusive-prefix div budget, so a document lands
-    // in the shard where its first token falls. Per-shard row counts,
-    // token sums and id spans — the shard manifest a trainer consumes.
-    "q325_token_budget_shards" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(TA.tokens(col("text"))).cast("long").as("tok"))
-      Dedup.numberAndRunningSum(docs, col("doc_id"), "__rk",
-          Seq(("cum", col("tok"))))
-        .withColumn("shard", expr("(cum - tok) div 5000"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("sum_tokens"),
-          min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"))
-        .orderBy("shard")
-    }),
-
-    // LEAKAGE-SAFE GROUPED K-FOLD ASSIGNMENT (the split rule for
-    // behavioral data: every event of a user lands in the SAME fold,
-    // so user-level signal never leaks across train/validation): fold
-    // = deterministic md5 of the user id mod 5, rolled up to fold
-    // sizes and per-type composition. Map-side hash, one aggregate.
-    "q326_grouped_folds" -> ((s, dir) => {
-      events(s, dir)
-        .select(col("user_id"), col("event_type"))
-        .withColumn("fold",
-          pmod(TF.md5Hash48(concat(lit("fold"), col("user_id"))), lit(5L)))
-        .groupBy("fold")
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("n_purchases"))
-        .orderBy("fold")
-    }),
-
-    // MINHASH-LSH PARAMETER PLANNER (the tuning table behind every
-    // banded-signature dedup in this repo): for each signature budget
-    // K and band split b·r = K, the candidate probability
-    // P = 1 − (1 − s^r)^b at fixed similarity points — computed with
-    // REPEATED-MULTIPLY folds (aggregate ↔ list_reduce), never libm
-    // pow, so both engines replay the same IEEE product chain. Static
-    // grid (no scan): the planner is the rule, the oracle replays it.
-    "q328_lsh_planner" -> ((s, dir) => {
-      import s.implicits._
-      val grid = for {
-        k <- Seq(16, 32, 64)
-        b <- (1 to k).filter(k % _ == 0)
-      } yield (k, b, k / b)
-      val svals = array(Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
-        .map(lit): _*)
-      grid.toDF("k", "b", "r")
-        .withColumn("s", explode(svals))
-        .withColumn("__sr", expr(
-          "aggregate(sequence(1, r), CAST(1.0 AS DOUBLE), (a, i) -> a * s)"))
-        .withColumn("p_candidate", round(lit(1.0) - expr(
-          "aggregate(sequence(1, b), CAST(1.0 AS DOUBLE)," +
-            " (a, i) -> a * (1.0 - __sr))"), 6))
-        .select(col("k"), col("b"), col("r"), col("s"), col("p_candidate"))
-        .orderBy("k", "b", "s")
-    }),
-
-    // REFERENCE WAREHOUSE CATALOG (graft-sqlite against the reference's
-    // OWN drwh.db, read natively): every table with its DDL column
-    // count, rowid-alias key, and row count through the B-tree scan —
-    // the "switch your warehouse to this engine" smoke over the real
-    // file (`script.py:125`). Catalog-sized by definition (3 rows);
-    // the oracle pins the shipped snapshot's shape (22/5/19 cols,
-    // empty tables, alias on both INTEGER PKs).
-    "q327_sqlite_warehouse_catalog" -> ((s, _) => {
-      import s.implicits._
-      val db = "/root/reference/drwh.db"
-      val conf = new org.apache.hadoop.conf.Configuration()
-      graft.sources.SqliteDataSourceV2.listTables(db, conf).map { t =>
-        val rows = s.read.format("graft-sqlite")
-          .option("table", t.name).load(db).count()
-        (t.name, t.columns.size.toLong,
-          t.columns.find(_.rowidAlias).map(_.name).getOrElse(""),
-          rows)
-      }.toDF("table_name", "n_cols", "rowid_alias", "n_rows")
-        .orderBy("table_name")
-    }),
-
-    // DEDUP AUDIT LOG (the provenance record a curation pipeline must
-    // keep: WHAT was dropped, and where the duplicates live): per
-    // duplicate group under the BOILERPLATE-PREFIX fingerprint (md5 of
-    // the first 5 normalized words — the shared-opening screen; whole-
-    // text dedup is q18's job and this corpus has no full dupes), the
-    // kept id, the dropped count, and the dropped-id span
-    // (2nd-smallest..largest via one sorted id list per group —
-    // group-sized, bounded by the dup cluster). Groups of 1 are
-    // silent; the audit is duplicate-sized, not corpus-sized.
-    "q329_dedup_audit" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          md5(concat_ws(" ", slice(TA.tokens(col("text")), 1, 5))).as("fp"))
-        .groupBy("fp")
-        .agg(count(lit(1)).as("n"),
-          array_sort(collect_list(col("doc_id"))).as("__ids"))
-        .filter(col("n") >= 2)
-        .select(col("fp"), element_at(col("__ids"), 1).as("keeper"),
-          (col("n") - 1).as("n_dropped"),
-          element_at(col("__ids"), 2).as("dropped_lo"),
-          element_at(col("__ids"), -1).as("dropped_hi"))
-        .orderBy("fp")
-    }),
-
-    // SQLITE MULTI-TABLE JOIN (graft-sqlite reading TWO B-trees of the
-    // same .db in one plan — docs joined to the kv lookup on a derived
-    // key, per-category rollup): proves the connector composes like
-    // any other table (two scans, broadcast join, pruned columns).
-    // Oracle literals computed by sqlite3 at fixture-generation time.
-    "q330_sqlite_kv_join" -> ((s, _) => {
-      val db = graft.sources.SqliteDataSourceV2.fixturePath
-      def rd(tb: String) = s.read.format("graft-sqlite")
-        .option("table", tb).load(db)
-      val docs = rd("docs").select(col("id"), col("cat"))
-        .withColumn("k",
-          format_string("key-%03d", expr("(id div 3) % 200").cast("int")))
-      docs.join(broadcast(rd("kv")), Seq("k"))
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("v")).as("sum_v"))
-        .orderBy("cat")
-    }),
-
-    // SQLITE ROWID-WINDOW SCAN (the pushdown path, oracle-gated): a
-    // BETWEEN on the rowid-alias id reaches the B-tree as a [lo,hi]
-    // window — root children pruned at planning, interior children
-    // pruned unread, out-of-range leaf rows skipped undecoded
-    // (SqliteSourceSpec proves <=4 pages for a point lookup; this
-    // gates the VALUES the pruned read returns). Oracle computed by
-    // sqlite3 at fixture-generation time.
-    "q331_sqlite_rowid_window" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .filter(col("id").between(900, 2400))
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("id")).as("sum_id"),
-          sum(length(col("body"))).as("body_chars"))
-        .orderBy("cat")
-    }),
-
-    // INCREMENTAL DEDUP ADMISSION (the nightly-crawl decision: a new
-    // batch deduped against the CORPUS FINGERPRINT STORE without
-    // touching historical text): batch docs labeled kept /
-    // dup_vs_history (fp anti-join against the store — history ships
-    // only 16-byte fingerprints, never text) / dup_in_batch
-    // (keep-first within the batch), rolled to an admission summary
-    // per source. At 100 TB the store is the only history state — the
-    // same scan-free shape as the q273 TxLog epoch check.
-    "q332_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          md5(concat_ws(" ",
-            slice(TA.tokens(col("text")), 1, 5))).as("fp"))
-      val history = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-      val histFps = history.select(col("fp")).distinct()
-      val firstInBatch = batch.groupBy("fp")
-        .agg(min(col("doc_id")).as("__keep"))
-      batch.join(histFps.withColumn("__inHist", lit(1)), Seq("fp"), "left")
-        .join(firstInBatch, Seq("fp"))
-        .withColumn("decision",
-          when(col("__inHist").isNotNull, "dup_vs_history")
-            .when(col("doc_id") =!= col("__keep"), "dup_in_batch")
-            .otherwise("kept"))
-        .groupBy("source", "decision")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("source", "decision")
-    }),
-
-    // LEGACY-WAREHOUSE MIGRATION round trip (the end-to-end "switch
-    // your warehouse" story): the SQLite fixture is scanned through
-    // graft-sqlite, landed into a TxLog transactional table with an
-    // exactly-once epoch merge, a REPLAYED epoch is proven skipped,
-    // and the aggregate reads back from the TxLog — sqlite B-tree →
-    // parquet+manifest in one plan family. At 100 TB this is the
-    // intended shape for legacy .db files: one parallel migration
-    // scan, then query the columnar table. Eager sink (see
-    // [[eagerSinks]]): building the frame runs the migration.
-    "q336_sqlite_migration" -> ((s, dir) => {
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q336_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        if (java.nio.file.Files.exists(p)) {
-          val st = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally st.close()
-        }
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      val legacy = s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .select(col("id"), col("cat"), col("flag"), length(col("body"))
-          .as("body_chars"))
-      TxLog.mergeEpoch(s, root, legacy.withColumn("upload_id", lit(1L)),
-        "id", epochId = 1L)
-      // restart replay: the same epoch must be SKIPPED, not re-applied
-      TxLog.mergeEpoch(s, root, legacy.withColumn("upload_id", lit(1L)),
-        "id", epochId = 1L)
-      TxLog.read(s, root)
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("flag")).as("n_flagged"),
-          sum(col("body_chars")).as("body_chars"))
-        .orderBy("cat")
-    }),
-
-    // NATIVE SQLITE EXPORT round trip (the WRITE half of warehouse
-    // parity: the reference WRITES drwh.db, so must we): a parquet
-    // projection exports through SqliteWriter (hand-rolled B-tree
-    // builder, python-sqlite3-validated in tools/
-    // check_sqlite_roundtrip.py), reads back through graft-sqlite, and
-    // aggregates — the oracle computes the SAME aggregate from parquet
-    // directly, so any write/read corruption hash-mismatches. Eager
-    // sink (the export runs at build). Export-sized by contract, like
-    // the reference's own single-connection sqlite sink.
-    "q337_sqlite_export_roundtrip" -> ((s, dir) => {
-      val db = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_q337_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + ".db")
-      java.nio.file.Files.deleteIfExists(db)
-      graft.sources.SqliteWriter.export(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_mktsegment").as("seg"),
-          expr("cast(round(c_acctbal * 100) as bigint)").as("cents")),
-        db.toString, "cust_export", rowidCol = Some("c_custkey"))
-      s.read.format("graft-sqlite").option("table", "cust_export")
-        .load(db.toString)
-        .groupBy("seg")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("c_custkey")).as("min_key"),
-          max(col("c_custkey")).as("max_key"))
-        .orderBy("seg")
-    }),
-
-    // WITHOUT ROWID TABLE SCAN (the index-B-tree storage class: rows
-    // ARE the key records, PK columns stored first, entries in
-    // interior pages too): per-group aggregate over the composite-PK
-    // fixture table, proving the stored→declared un-permutation and
-    // the index-overflow reassembly under the oracle gate. sum(val)
-    // stays exact (dyadic k/4 values). Oracle computed by sqlite3 at
-    // fixture-generation time.
-    "q335_sqlite_without_rowid" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "wr_metrics")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .groupBy("grp")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("val")) * 4, 0).cast("long").as("sum_val_x4"),
-          max(col("id")).as("max_id"),
-          sum(length(col("note"))).as("note_chars"))
-        .orderBy("grp")
-    }),
-
-    // RENDEZVOUS (highest-random-weight) SHARDING — the stable shard
-    // assignment for growing a cluster: each key goes to the shard
-    // with the max deterministic hash(key, shard), so growing N=8 to
-    // N=9 moves only the keys whose NEW shard wins (~1/9 in
-    // expectation), vs mod-hashing's ~8/9 reshuffle. Map-side hashes,
-    // two keyed aggregations; md5 arithmetic replays in the oracle.
-    // Output: per old shard, the measured movement to the new ring.
-    "q333_rendezvous_sharding" -> ((s, dir) => {
-      val keys = t(s, dir, "customer").select(col("c_custkey").as("k"))
-      def assign(n: Int, as: String) = keys
-        .withColumn("s", explode(sequence(lit(0), lit(n - 1))))
-        .withColumn("h",
-          TF.md5Hash48(concat(col("k"), lit(":"), col("s"))))
-        .groupBy("k").agg(expr("max_by(s, h)").cast("long").as(as))
-      assign(8, "shard").join(assign(9, "shard9"), Seq("k"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_keys"),
-          sum(when(col("shard9") =!= col("shard"), 1L).otherwise(0L))
-            .as("n_moved"))
-        .withColumn("pct_moved",
-          round(col("n_moved").cast("double") / col("n_keys") * 100, 4))
-        .orderBy("shard")
-    }),
-
-    // CONTENT-DEFINED CHUNKING dedup (the rolling-boundary chunker —
-    // FastCDC/rsync's trick at word grain): a chunk boundary opens at
-    // every word whose hash lands in 1/8 of the space, so boundaries
-    // are CONTENT-anchored and survive insertions/deletions that shift
-    // absolute positions — the failure mode of q56's fixed-span
-    // chunks. Per-doc chunking is one partitioned prefix-sum window;
-    // cross-doc dedup is one fingerprint aggregation. Output: the
-    // corpus-wide chunk-duplication histogram.
-    "q334_cdc_chunking" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-        .withColumn("flag",
-          when(pmod(TF.md5Hash48(col("w")), lit(8L)) === 0, 1L)
-            .otherwise(0L))
-      val chunked = words.withColumn("chunk",
-        sum(col("flag")).over(Window.partitionBy("doc_id").orderBy("p")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      val chunks = chunked.groupBy("doc_id", "chunk")
-        .agg(count(lit(1)).as("n_words"),
-          md5(concat_ws(" ",
-            expr("transform(array_sort(collect_list(struct(p, w))), x -> x.w)")))
-            .as("fp"))
-      chunks.groupBy("fp")
-        .agg(count(lit(1)).as("occ"), min(col("n_words")).as("n_words"))
-        .groupBy("occ")
-        .agg(count(lit(1)).as("n_chunks"), sum(col("n_words")).as("sum_words"))
-        .orderBy("occ")
-    }),
-
-    // WAL-MODE NATIVE SQLITE SCAN (sources.SqliteWal overlaying
-    // SqliteDataSourceV2): a LIVE warehouse — the reference keeps one
-    // long-lived connection open (`script.py:123-126`), so its .db is
-    // typically journal_mode=WAL with committed transactions sitting
-    // un-checkpointed in the -wal sidecar. The fixture's main file is
-    // frozen at the WAL switch (800 rows, no alerts); the committed
-    // truth (updates, growth to 1200 ids, deletes) exists ONLY as WAL
-    // frames, so this query returns the oracle's numbers IFF the
-    // salt/checksum-verified newest-committed-frame overlay works.
-    // Oracle: ENGINE-INDEPENDENT — sqlite3 computed the VALUES over
-    // the same pair at fixture time (tools/make_sqlite_wal_fixture.py).
-    // temp values are dyadic (k/4, k/8, +100) → sum*8 is exact.
-    "q338_sqlite_wal_scan" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "readings")
-        .load(graft.sources.SqliteDataSourceV2.fixtureWalPath)
-        .groupBy("sensor")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("temp")) * 8, 0).cast("long").as("sum_temp_x8"),
-          sum(when(col("status").startsWith("alert"), 1L).otherwise(0L))
-            .as("n_alert"),
-          max(col("id")).as("max_id"))
-        .orderBy("sensor")
-    }),
-
-    // SECONDARY-INDEX EQ LOOKUP (SqliteFile.searchIndexEq via the DSv2
-    // filter pushdown): the reference's hot path is `WHERE
-    // HOSPITAL_PATIENT_ID = ?` on a TEXT column (`exo_2.py:204-217`) —
-    // a real legacy warehouse indexes such keys. The IN list routes
-    // through idx_docs_cat: an O(depth+matches) index descent resolves
-    // the rowid set, partitions carry coalesced rowid ranges, and the
-    // table B-tree is point-descended — pages touched scale with
-    // matches, not table size (spec-measured: SqliteSourceSpec's
-    // CountingReader probe). Oracle: sqlite3-computed VALUES; sqlite3
-    // itself routes the same predicate through the same index.
-    "q339_sqlite_index_lookup" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .filter(col("cat").isin("delta", "zeta"))
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("id")).as("sum_id"),
-          sum(length(col("body"))).as("body_chars"))
-        .orderBy("cat")
-    }),
-
-    // MULTI-WORD PHRASE TAGGING (the dictionary-tagging pass every
-    // curation pipeline runs — blocklists, topic tags, PII terms; the
-    // set-at-a-time form of FlashText/Aho-Corasick for a bounded
-    // phrase dictionary): one lead() pass per doc materializes the 2-
-    // and 3-gram at each position, then ONE broadcast equi-join against
-    // the dictionary — no per-phrase scans, no OR-join (an OR of gram
-    // columns would plan a nested loop; the unpivot keeps it hash).
-    "q340_phrase_tagging" -> ((s, dir) => {
-      val phrases = Seq("table scan", "hash join", "key agg",
-        "window table", "slow filter value", "fast merge batch")
-      val dict = broadcast(s.createDataFrame(
-        phrases.map(Tuple1(_))).toDF("phrase"))
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val byDoc = Window.partitionBy("doc_id").orderBy("p")
-      val grams = toks
-        .withColumn("w1", lead(col("w"), 1).over(byDoc))
-        .withColumn("w2", lead(col("w"), 2).over(byDoc))
-        .select(col("doc_id"), col("source"), explode(array(
-          when(col("w1").isNotNull,
-            concat_ws(" ", col("w"), col("w1"))),
-          when(col("w2").isNotNull,
-            concat_ws(" ", col("w"), col("w1"), col("w2")))))
-          .as("gram"))
-        .filter(col("gram").isNotNull)
-      grams.join(dict, col("gram") === col("phrase"))
-        .groupBy("phrase")
-        .agg(count(lit(1)).as("n_hits"),
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy("phrase")
-    }),
-
-    // ISOTONIC CALIBRATION (PAVA fit — the standard monotone
-    // recalibration of a quality/reward score against labels; q198's
-    // ECE table DIAGNOSES miscalibration, this FITS the correction).
-    // Exact minimax form on a fixed score-bucket grain: fit(i) =
-    // max_{j<=i} min_{k>=i} avg(pos, j..k), with every average in
-    // fixed-point 1e9 integer floor-division so both engines replay
-    // bit-for-bit. The corpus contributes ONE bucket aggregation; the
-    // minimax runs on the <=100-bucket grain (pairs, two windows) —
-    // model-sized however big the corpus.
-    "q341_isotonic_pava" -> ((s, dir) => {
-      val buckets = t(s, dir, "orders")
-        .select((round(col("o_totalprice") * 100, 0).cast("long"))
-          .as("cents"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("y"))
-        .select(least(lit(99L), expr("cents div 600000")).as("b"),
-          col("y"))
-        .groupBy("b")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("y"), 1L).otherwise(0L)).as("pos"))
-      val g = Caches.small(buckets) // fixed <=100-bucket grain
-      val cum = g.withColumn("cn",
-          sum(col("n")).over(Window.orderBy("b")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("cp", sum(col("pos")).over(Window.orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      val c = Caches.small(cum.select(col("b"), col("n"), col("pos"),
-        col("cn"), col("cp")))
-      // the <=100-row grain side broadcasts EXPLICITLY: a non-equi
-      // join on two stat-less RDD scans would otherwise plan a
-      // shuffled CartesianProduct (both sides are the same
-      // checkpointed grain — the broadcast BNLJ build is proof-bounded)
-      val jk = c.select(col("b").as("j"), (col("cn") - col("n")).as("cnj"),
-          (col("cp") - col("pos")).as("cpj"))
-        .join(broadcast(c.select(col("b").as("k"), col("cn").as("cnk"),
-          col("cp").as("cpk"))), col("j") <= col("k"))
-        .select(col("j"), col("k"),
-          expr("(1000000000 * (cpk - cpj)) div (cnk - cnj)").as("avg_e9"))
-      // m(j,i) = min over k>=i of avg(j,k): reverse running min per j
-      val m = jk.withColumn("m", min(col("avg_e9")).over(
-          Window.partitionBy("j").orderBy(col("k").desc)
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .select(col("j"), col("k").as("i"), col("m"))
-        .filter(col("j") <= col("i"))
-      // fit(i) = max over j<=i of m(j,i): running max per i, row j==i
-      val fit = m.withColumn("f", max(col("m")).over(
-          Window.partitionBy("i").orderBy("j")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .filter(col("j") === col("i"))
-        .select(col("i").as("b"), col("f").as("fit_e9"))
-      c.join(fit, Seq("b"))
-        .select(col("b"), col("n"), col("pos"),
-          expr("(1000000000 * pos) div n").as("rate_e9"), col("fit_e9"))
-        .orderBy("b")
-    }),
-
-    // WEIGHTED-FAIR-QUEUING DATA-MIXING SCHEDULE (deterministic
-    // interleaving of domains at token-share weights — the "data
-    // ordering" step between mixing weights (q69/q233/q243) and the
-    // training loader): source s's k-th document gets virtual finish
-    // time k·10⁹ div w_s (w_s = the source's token count), and the
-    // global order is (finish, source, doc) — integer WFQ, no floats.
-    // Per-source ranks are partitioned windows; only the 40 emitted
-    // slots rank globally, on a checkpointed 40-row frame.
-    "q342_wfq_schedule" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          size(TA.tokens(col("text"))).as("ntok"))
-      val w = docs.groupBy("source").agg(sum(col("ntok")).as("wtok"))
-      val ranked = docs.join(broadcast(w), Seq("source"))
-        .withColumn("k", row_number().over(
-          Window.partitionBy("source").orderBy("doc_id")))
-        .withColumn("finish", expr("(k * 1000000000L) div wtok"))
-      val top = Caches.small(ranked
-        .orderBy(col("finish"), col("source"), col("doc_id")).limit(40))
-      top.withColumn("slot", row_number().over(
-          Window.orderBy(col("finish"), col("source"), col("doc_id"))))
-        .select(col("slot"), col("source"), col("doc_id"), col("k"),
-          col("finish"))
-        .orderBy("slot")
-    }),
-
-    // WINNOWING FINGERPRINTS (Schleimer, Wilkerson & Aiken, SIGMOD'03
-    // — the MOSS local fingerprinting scheme: hash every k-gram, keep
-    // the MINIMUM hash of each w-window of consecutive grams; any
-    // shared run of >= w+k-1 tokens between two documents is
-    // GUARANTEED to share a fingerprint, at ~2/(w+1) storage). k=3
-    // tokens, w=4. One lead() pass + one windowed min per doc, then
-    // keyed aggs — per-doc work is linear, the cross-doc signal is a
-    // fingerprint-key join, never a pair scan.
-    "q343_winnowing" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val byDoc = Window.partitionBy("doc_id").orderBy("p")
-      val grams = toks
-        .withColumn("w1", lead(col("w"), 1).over(byDoc))
-        .withColumn("w2", lead(col("w"), 2).over(byDoc))
-        .filter(col("w2").isNotNull)
-        .select(col("doc_id"), col("source"), col("p"),
-          TF.md5Hash48(concat_ws(" ", col("w"), col("w1"), col("w2")))
-            .as("h"))
-      val win = Window.partitionBy("doc_id").orderBy("p")
-        .rowsBetween(Window.currentRow, 3)
-      val fps = grams
-        .withColumn("mh", min(col("h")).over(win))
-        .withColumn("wlen", count(lit(1)).over(win))
-        .filter(col("wlen") === 4) // full windows only (strict winnowing)
-        .select(col("doc_id"), col("source"), col("mh")).distinct()
-      val global = fps.groupBy("mh")
-        .agg(countDistinct(col("doc_id")).as("nd"))
-      fps.join(global, Seq("mh"))
-        .groupBy("source")
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_fps"),
-          countDistinct(col("mh")).as("n_distinct_fps"),
-          countDistinct(when(col("nd") >= 2, col("mh"))).as("n_shared_fps"))
-        .orderBy("source")
-    }),
-
-    // SQLITE AGGREGATE PUSHDOWN (SupportsPushDownAggregates): the
-    // catalog questions a migration runs first — how many rows, what
-    // key range — answer INSIDE the source: count(*) walks leaf-page
-    // headers without decoding one record (25x over the decode scan,
-    // SCALE.md §6k) and min/max of the rowid alias are O(depth)
-    // leftmost/rightmost descents. Oracle: sqlite3-computed VALUES
-    // (sqlite answers the same count from its own B-tree the same
-    // way). The WITHOUT ROWID count proves interior index entries are
-    // counted as rows.
-    "q344_sqlite_agg_pushdown" -> ((s, _) => {
-      val fx = graft.sources.SqliteDataSourceV2.fixturePath
-      val docs = s.read.format("graft-sqlite").option("table", "docs")
-        .load(fx).agg(count(lit(1)).as("docs_n"),
-          min(col("id")).as("docs_min_id"),
-          max(col("id")).as("docs_max_id"))
-      val wr = s.read.format("graft-sqlite").option("table", "wr_metrics")
-        .load(fx).agg(count(lit(1)).as("wr_n"))
-      val kv = s.read.format("graft-sqlite").option("table", "kv")
-        .load(fx).agg(count(lit(1)).as("kv_n"))
-      docs.crossJoin(broadcast(wr)).crossJoin(broadcast(kv))
-    }),
-
-    // SOURCE-OVERLAP CONTAINMENT MATRIX ("which sources copy from
-    // which" — the corpus-level reading of winnowing fingerprints):
-    // per source the distinct fingerprint set, then directed
-    // containment C(a→b) = |fp(a) ∩ fp(b)| / |fp(a)| in 1e6 fixed
-    // point. The intersection is a fingerprint-KEY self-join: pair
-    // volume per fingerprint is (#sources sharing it)² ≤ 20² here —
-    // at open-web scale the same df-cut that bounds q19 applies (drop
-    // fingerprints shared by more sources than the cut). Top-20 most
-    // contained pairs, deterministic order.
-    "q345_source_overlap" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val byDoc = Window.partitionBy("doc_id").orderBy("p")
-      val grams = toks
-        .withColumn("w1", lead(col("w"), 1).over(byDoc))
-        .withColumn("w2", lead(col("w"), 2).over(byDoc))
-        .filter(col("w2").isNotNull)
-        .select(col("doc_id"), col("source"), col("p"),
-          TF.md5Hash48(concat_ws(" ", col("w"), col("w1"), col("w2")))
-            .as("h"))
-      val win = Window.partitionBy("doc_id").orderBy("p")
-        .rowsBetween(Window.currentRow, 3)
-      val srcFps = grams
-        .withColumn("mh", min(col("h")).over(win))
-        .withColumn("wlen", count(lit(1)).over(win))
-        .filter(col("wlen") === 4)
-        .select(col("source"), col("mh")).distinct()
-      val sizes = srcFps.groupBy("source")
-        .agg(count(lit(1)).as("n_fp"))
-      val inter = srcFps.join(
-          srcFps.select(col("source").as("src_b"), col("mh")), Seq("mh"))
-        .filter(col("source") =!= col("src_b"))
-        .groupBy(col("source").as("src_a"), col("src_b"))
-        .agg(count(lit(1)).as("inter"))
-      val scored = inter
-        .join(broadcast(sizes).withColumnRenamed("source", "src_a"),
-          Seq("src_a"))
-        .select(col("src_a"), col("src_b"), col("inter"), col("n_fp"),
-          expr("(1000000 * inter) div n_fp").as("containment_e6"))
-      val top = Caches.small(scored.orderBy(col("containment_e6").desc,
-        col("src_a"), col("src_b")).limit(20))
-      top.withColumn("rk", row_number().over(
-          Window.orderBy(col("containment_e6").desc, col("src_a"),
-            col("src_b"))))
-        .select(col("rk"), col("src_a"), col("src_b"), col("inter"),
-          col("n_fp"), col("containment_e6"))
-        .orderBy("rk")
-    }),
-
-    // KNESER-NEY SMOOTHED BIGRAM LM (the KenLM-style model behind
-    // CCNet/CC-Net-family perplexity filtering — q98's MLE bigram LM
-    // with the absolute-discount + continuation-probability correction
-    // that makes it usable on held-out text): d = 0.75 (dyadic, exact
-    // in doubles), P(w2|w1) = max(c12−d,0)/c1 + d·N1+(w1·)/c1 ·
-    // Pcont(w2), Pcont(w2) = N1+(·w2)/N1+(··). Every per-bigram term
-    // is a fixed-order IEEE expression (bit-identical across engines);
-    // the per-w1 mass sum crosses engines through the sorted-fold
-    // bridge. Output: the 20 most frequent contexts, each with its
-    // smoothed probability mass over OBSERVED continuations (the
-    // 1−mass remainder is what KN reserves for unseen words — the
-    // whole point of the smoothing).
-    "q346_kneser_ney" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val byDoc = Window.partitionBy("doc_id").orderBy("p")
-      val bi = toks
-        .withColumn("w2", lead(col("w"), 1).over(byDoc))
-        .filter(col("w2").isNotNull)
-        .groupBy(col("w").as("w1"), col("w2"))
-        .agg(count(lit(1)).as("c12"))
-      val big = Caches.small(bi) // vocab² grain: model-sized
-      val byW1 = big.groupBy("w1")
-        .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n_follow"))
-      val byW2 = big.groupBy("w2")
-        .agg(count(lit(1)).as("n_precede"))
-      val totBi = big.agg(count(lit(1)).as("n_bigrams"))
-      val terms = big
-        .join(broadcast(byW1), Seq("w1"))
-        .join(broadcast(byW2), Seq("w2"))
-        .crossJoin(broadcast(totBi))
-        .withColumn("pkn",
-          greatest(col("c12").cast("double") - lit(0.75), lit(0.0))
-            / col("c1").cast("double")
-          + lit(0.75) * col("n_follow").cast("double")
-            / col("c1").cast("double")
-            * (col("n_precede").cast("double")
-              / col("n_bigrams").cast("double")))
-      val mass = terms.groupBy("w1")
-        .agg(ssum(collect_list(col("pkn"))).as("m"))
-      val out = byW1.join(mass, Seq("w1"))
-        .select(col("w1"), col("c1"), col("n_follow"),
-          round(col("m") * 1e9, 0).cast("long").as("mass_e9"))
-      Caches.small(out.orderBy(col("c1").desc, col("w1")).limit(20))
-        .orderBy(col("c1").desc, col("w1"))
-    }),
-
-    // SECONDARY-INDEX RANGE PUSHDOWN (SqliteFile.searchIndexRowids via
-    // the DSv2 comparison-filter pushdown): `score >= ? AND score < ?`
-    // walks idx_docs_score as a B-tree range — O(depth + matches)
-    // pages — instead of scanning the table; the resolved rowids then
-    // point-descend the table tree (coalesced ranges). The range pull
-    // is the second-most-common legacy-warehouse predicate (the
-    // reference's own watcher gate `script.py:74-95` is an mtime `>=`
-    // pull — this is its storage-side form). Oracle: sqlite3-computed
-    // VALUES; sqlite3 routes the same predicate through the same
-    // index (EXPLAIN QUERY PLAN verified at generation time).
-    "q347_sqlite_index_range" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .filter(col("score") >= 100.0 && col("score") < 110.0)
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("id")).as("sum_id"),
-          round(sum(col("score")) * 8, 0).cast("long").as("sum_score_x8"))
-        .orderBy("cat")
-    }),
-
-    // COMPOSITE-PREFIX INDEX PUSHDOWN: eq on the leading column of
-    // idx_docs_flag_score (flag) plus a range on the next key column
-    // (score) — one descent bounded by the full compound key, the
-    // classic `(tenant, updated_at)` incremental-pull shape. Oracle:
-    // sqlite3-computed VALUES over the same fixture + index.
-    "q348_sqlite_index_prefix" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .filter(col("flag") === 0 && col("score") > 20.0 &&
-          col("score") <= 30.0)
-        .groupBy("cat")
-        .agg(count(lit(1)).as("n_docs"), sum(col("id")).as("sum_id"),
-          round(sum(col("score")) * 8, 0).cast("long").as("sum_score_x8"))
-        .orderBy("cat")
-    }),
-
-    // PARTIAL-INDEX USE UNDER PREDICATE IMPLICATION: idx_docs_partial
-    // is `ON docs (title) WHERE flag = 1` — normally never probed
-    // (it omits flag<>1 rows), but when the query itself pushes the
-    // SAME `flag = 1` conjunct the index provably covers every
-    // qualifying row and the title probe descends it. Anything not
-    // trivially implied stays on the scan path. Oracle:
-    // sqlite3-computed VALUES.
-    "q349_sqlite_partial_index" -> ((s, _) => {
-      s.read.format("graft-sqlite").option("table", "docs")
-        .load(graft.sources.SqliteDataSourceV2.fixturePath)
-        .filter(col("flag") === 1 &&
-          col("title").isin("doc 00123", "doc 00457", "doc 00999"))
-        .select(col("id"), col("cat"), col("title"),
-          round(col("score") * 8, 0).cast("long").as("score_x8"))
-        .orderBy("id")
-    }),
-
-    // WAL-TAIL CDC (SqliteCdc): from a cursor pinned at the fixture's
-    // FIRST commit boundary, the newly committed -wal frames name the
-    // changed pages and a per-page cell diff between the two pinned
-    // snapshots yields the EXACT inserted/updated/deleted rowids —
-    // the storage-level form of the reference watcher's "modified"
-    // detection (`script.py:35-57` diffs mtimes then reprocesses
-    // everything; this reads only the WAL-bounded change set). Driver-
-    // side by design: the change feed is bounded by checkpoint
-    // cadence (~MBs), not db size — the distributed path is the scan.
-    // Oracle: VALUES computed by replaying the fixture with sqlite3
-    // at both cursors (truncated-WAL view vs head view) — engine-
-    // independent and regenerable (tools/make_wal_cdc_oracle.py).
-    "q350_sqlite_wal_cdc" -> ((s, _) => {
-      import graft.sources.SqliteCdc
-      val path = graft.sources.SqliteDataSourceV2.fixtureWalPath
-      val conf = s.sparkContext.hadoopConfiguration
-      val head = SqliteCdc.currentCursor(path, conf)
-      val cur = head.copy(
-        frames = SqliteCdc.commitBoundaries(path, conf).head)
-      val rows = SqliteCdc.changesSince(path, conf, "readings", cur) match {
-        case SqliteCdc.Changes(_, ins, upd, del) =>
-          Seq(("delete", del), ("insert", ins), ("update", upd))
-        case SqliteCdc.ResyncRequired(r) =>
-          sys.error(s"unexpected resync on a static fixture: $r")
-      }
-      s.createDataFrame(rows.map { case (op, ks) =>
-        (op, ks.length.toLong, ks.sum, ks.headOption.getOrElse(0L))
-      }).toDF("op", "n", "sum_rowid", "min_rowid").orderBy("op")
-    }),
-
-    // EXACT SUBSTRING DEDUP (the deterministic counterpart of q343's
-    // winnowing): every duplicated token run of length >= 8 across the
-    // corpus, found EXACTLY — a substring of length >= L is duplicated
-    // iff each of its L-grams is, so the stride-1 L-gram key group
-    // (one corpus-wide groupBy, never pairs) marks the duplicated
-    // positions and a per-doc interval merge recovers maximal spans
-    // (the map-side form of Lee et al. 2021's suffix-array dedup).
-    // Scale: shuffle is O(corpus tokens) gram keys — linear, like any
-    // tokenize+groupBy; at open-web scale substitute a 128-bit gram
-    // hash for the string key (collision odds ~2^-128 per pair), the
-    // string form here keeps the oracle exact.
-    "q351_exact_substring_dedup" -> ((s, dir) => {
-      val W = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val grams = DedupOps.posGrams(toks, "doc_id", "p", "w", W)
-      val dup = grams.groupBy("gram")
-        .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-        .select("gram")
-      val hits = grams.join(dup, "gram").select("doc_id", "p")
-      DedupOps.mergeSpans(hits, "doc_id", "p", W)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"),
-          sum(col("en") - col("st")).as("dup_tokens"),
-          max(col("en") - col("st")).as("max_span"))
-        .orderBy("doc_id")
-    }),
-
-    // DUPLICATED-SPAN REMOVAL (the curation ACTION on q351's report —
-    // the standard one-copy-survives policy of suffix-array dedup):
-    // every duplicated L-gram keeps its GLOBAL first occurrence (min
-    // (doc_id, position) — deterministic, order-free) and every other
-    // occurrence's token span is removed; per doc, overlapping removal
-    // intervals merge and the query reports kept/removed token counts.
-    // Scale: the keeper election is a per-gram window (key = the gram,
-    // grain bounded by occurrence counts the df-cut controls), never
-    // pairs; everything else is q351's per-doc-linear machinery.
-    "q353_dup_span_removal" -> ((s, dir) => {
-      val W = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val nTokens = toks.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"))
-      val grams = DedupOps.posGrams(toks, "doc_id", "p", "w", W)
-      val dup = grams.groupBy("gram")
-        .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-        .select("gram")
-      val hits = grams.join(dup, "gram")
-      // keeper = the gram's global first occurrence; everyone else
-      // is a removal site
-      val byGram = Window.partitionBy("gram").orderBy("doc_id", "p")
-      val rm = hits
-        .withColumn("rn", row_number().over(byGram))
-        .filter(col("rn") > 1)
-        .select("doc_id", "p")
-      val removed = DedupOps.mergeSpans(rm, "doc_id", "p", W)
-        .groupBy("doc_id")
-        .agg(sum(col("en") - col("st")).as("removed_tokens"))
-      nTokens.join(removed, "doc_id")
-        .filter(col("removed_tokens") > 0)
-        .select(col("doc_id"), col("n_tokens"), col("removed_tokens"),
-          (col("n_tokens") - col("removed_tokens")).as("kept_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // CDC-DRIVEN INCREMENTAL WAREHOUSE SYNC (composition of q336's
-    // migration, the pinned-snapshot read, and SqliteCdc): migrate the
-    // table AS OF a cursor into a TxLog table (epoch 1), pull the
-    // exact changed rowids from the newly committed WAL frames, apply
-    // them — upserts re-read DISTRIBUTED through the rowid-window
-    // pushdown (epoch 2), deletes through TxLog.delete — and the
-    // synced table must reproduce the full head view BIT-EXACTLY: the
-    // oracle is q338's sqlite3-computed VALUES, verbatim. This is the
-    // reference watcher's reprocess-all (`script.py:60-117`) replaced
-    // by a change-bounded pull: cost scales with the -wal (checkpoint
-    // cadence), not the warehouse.
-    "q352_sqlite_cdc_sync" -> ((s, dir) => {
-      import graft.sources.SqliteCdc
-      val path = graft.sources.SqliteDataSourceV2.fixtureWalPath
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q352_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        if (java.nio.file.Files.exists(p)) {
-          val st = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally st.close()
-        }
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      val head = SqliteCdc.currentCursor(path, conf)
-      val c0 = head.copy(
-        frames = SqliteCdc.commitBoundaries(path, conf).head)
-      // 1) initial migration: the table AS OF the cursor, read through
-      // the pinned-snapshot options (generation-verified)
-      val base = s.read.format("graft-sqlite").option("table", "readings")
-        .option("walFrames", c0.frames.toString)
-        .option("walSalt1", c0.salt1.toString)
-        .option("walSalt2", c0.salt2.toString)
-        .load(path)
-      TxLog.mergeEpoch(s, root, base.withColumn("upload_id", lit(1L)),
-        "id", epochId = 1L)
-      // 2) the change-bounded pull
-      val (ins, upd, del) =
-        SqliteCdc.changesSince(path, conf, "readings", c0) match {
-          case SqliteCdc.Changes(_, i, u, d) => (i, u, d)
-          case SqliteCdc.ResyncRequired(r) =>
-            sys.error(s"unexpected resync on a static fixture: $r")
-        }
-      // 3) apply: changed rows re-read from the head (rowid-window
-      // pushdown bounds the scan to the touched span), then upsert
-      val upserts = s.read.format("graft-sqlite")
-        .option("table", "readings").load(path)
-        .filter(col("id").isin((ins ++ upd).map(Long.box): _*))
-        .withColumn("upload_id", lit(2L))
-      TxLog.mergeEpoch(s, root, upserts, "id", epochId = 2L)
-      if (del.nonEmpty)
-        TxLog.delete(s, root, "id", col("id").isin(del.map(Long.box): _*))
-      // 4) the synced table must equal the full head view (q338 agg)
-      TxLog.read(s, root)
-        .groupBy("sensor")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("temp")) * 8, 0).cast("long").as("sum_temp_x8"),
-          sum(when(col("status").startsWith("alert"), 1L).otherwise(0L))
-            .as("n_alert"),
-          max(col("id")).as("max_id"))
-        .orderBy("sensor")
-    }),
-
-    // SUFFIX-ARRAY SUBSTRING DEDUP (prefix doubling): the SAME
-    // duplicated-span report as q351, computed by the distributed
-    // suffix-array rank construction (DedupOps.prefixDoublingDupStarts
-    // — Lee et al. 2021's actual data structure) instead of the
-    // stride-1 L-gram group: log2(L) rounds of (long,long) pair
-    // ranking replace the one shuffle of L-token STRING keys, the
-    // shape that stays affordable when the span floor is long (L=64
-    // gram keys run ~400 bytes; rank pairs stay 16 at any L). The
-    // oracle is the gram algebra verbatim — two independent
-    // algorithms, one answer.
-    "q354_suffix_array_dedup" -> ((s, dir) => {
-      val W = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val hits = DedupOps.prefixDoublingDupStarts(
-        toks, "doc_id", "p", "w", L = W)
-      DedupOps.mergeSpans(hits, "doc_id", "p", W)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"),
-          sum(col("en") - col("st")).as("dup_tokens"),
-          max(col("en") - col("st")).as("max_span"))
-        .orderBy("doc_id")
-    }),
-
-    // DSIR importance weights (Xie et al. 2023): score every document
-    // by the add-one-smoothed log-likelihood ratio between a TARGET
-    // slice's hashed-unigram model (here lang='en') and the raw
-    // pool's — the data-selection signal behind importance resampling.
-    // One B-row bucket model broadcast back onto the token stream;
-    // nothing but the scans grows with the corpus
-    // (TextAnalysis.dsirLogWeights).
-    "q355_dsir_weights" -> ((s, dir) => {
-      TA.dsirLogWeights(t(s, dir, "documents"), "doc_id", "text",
-          isTarget = col("lang") === "en", buckets = 256)
-        .orderBy("doc_id")
-    }),
-
-    // IN-ENGINE QUALITY-CLASSIFIER TRAINING (q105's missing half —
-    // q105 scores with a fixed weight table; this TRAINS one): two
-    // full-batch logistic-regression GD steps on hashed binary unigram
-    // features, label = lang='en' — the fastText-style quality filter
-    // trained at corpus scale with nothing but scans, B-row model
-    // frames, and a constant iteration count
-    // (TextAnalysis.trainHashedLogReg). The oracle unrolls both
-    // iterations as CTEs and replays the sorted folds and per-step
-    // 9-dp weight rounding exactly.
-    "q356_train_quality_lr" -> ((s, dir) => {
-      TA.trainHashedLogReg(t(s, dir, "documents"), "doc_id", "text",
-          labelPos = col("lang") === "en", buckets = 64, iters = 2)
-        .orderBy("bucket")
-    }),
-
-    // SUFFIX-RANK ORDER PROOF: q354's machinery claims its ranks are
-    // the corpus suffix array truncated at depth 8 — dense 1..K ranks
-    // in LEXICOGRAPHIC run order, not just equality classes. This
-    // query exposes the rank table joined back to the literal grams:
-    // the oracle recomputes the rank as a DuckDB dense_rank() over the
-    // gram sort, so any order inconsistency (or rank collision /
-    // split) in the doubling rounds hash-mismatches. Both engines
-    // compare strings by raw UTF-8 bytes.
-    "q357_suffix_rank_order" -> ((s, dir) => {
-      val W = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val ranks = DedupOps.suffixRanks(toks, "doc_id", "p", "w", depth = W)
-      val grams = DedupOps.posGrams(toks, "doc_id", "p", "w", W)
-      ranks.join(grams, Seq("doc_id", "p"))
-        .groupBy(col("__r"), col("gram"))
-        .agg(count(lit(1)).as("n_occurrences"))
-        .select(col("__r").as("rank"), col("gram"), col("n_occurrences"))
-        .orderBy("rank")
-    }),
-
-    // DSIR RESAMPLING (the paper's step 2 — q355 computes the
-    // importance weights, this DRAWS the sample): Gumbel top-k over
-    // the raw pool with key = total log-importance + Gumbel(u), u
-    // from the md5 uniform — sampling without replacement with
-    // probability ∝ exp(log importance), deterministic in any engine
-    // with md5 + ln. Scale: the top-k is orderBy+limit
-    // (TakeOrderedAndProject — per-partition heaps, no global sort);
-    // the rank window runs on the 25-row sliver the limit proves
-    // bounded.
-    "q358_dsir_resample" -> ((s, dir) => {
-      val w = TA.dsirLogWeights(t(s, dir, "documents"), "doc_id", "text",
-          isTarget = col("lang") === "en", buckets = 256)
-        .filter(!col("is_target"))
-      val keyed = w
-        .withColumn("u",
-          (TF.md5Hash48(col("doc_id").cast("string")).cast("double") + 0.5)
-            / lit(math.pow(2, 48)))
-        .withColumn("key",
-          col("dsir_weight") * col("n_tokens") - log(-log(col("u"))))
-      val top = keyed.orderBy(col("key").desc, col("doc_id")).limit(25)
-      top
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("key").desc, col("doc_id"))))
-        .select(col("rank"), col("doc_id"), col("n_tokens"),
-          // + 0.0 normalizes IEEE negative zero (a top-k key in
-          // (-5e-5, 0) rounds to -0.0, which the driver hash compare
-          // distinguishes from 0.0) — the q355 dsir_weight idiom
-          (round(col("key"), 4) + 0.0).as("gumbel_key"))
-        .orderBy("rank")
-    }),
-
-    // GRAM-HASH SUBSTRING DEDUP — the STATED 100 TB shape of q351,
-    // now gated (judge r11 item 1): identical duplicated-span report,
-    // but every shuffle key is the (h1, h2) pair of independent 48-bit
-    // md5 gram hashes (16 bytes) instead of the L-token string
-    // (~6·L bytes) — the gram string exists only map-side inside
-    // codegen. The oracle is q351's string-key gram algebra VERBATIM:
-    // a passing hash proves hash-form ≡ string-form spans end to end
-    // (false-collision odds ~2^-96 per pair; zero here by the oracle).
-    "q359_gram_hash_dedup" -> ((s, dir) => {
-      val W = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      val keys = DedupOps.posGramHashes(toks, "doc_id", "p", "w", W)
-      val dup = keys.groupBy("h1", "h2")
-        .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-        .select("h1", "h2")
-      val hits = keys.join(dup, Seq("h1", "h2")).select("doc_id", "p")
-      DedupOps.mergeSpans(hits, "doc_id", "p", W)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_spans"),
-          sum(col("en") - col("st")).as("dup_tokens"),
-          max(col("en") - col("st")).as("max_span"))
-        .orderBy("doc_id")
-    }),
-
-    // LONGEST-DUPLICATE-EXTENSION (judge r11 item 2 — the consumer
-    // that needs the suffix-rank ORDER, not just its equality
-    // classes): adjacent pairs in depth-8 suffix order get their
-    // exact common-prefix LENGTH from the prefix-doubling sparse
-    // table alone — greedy rank comparisons at k = 4, 2, 1, never a
-    // token re-read (DedupOps.suffixLcpPairs; Lee et al. 2021's
-    // maximal-duplicated-span report). The DuckDB oracle recomputes
-    // every lcp from the literal gram sort, so ANY order
-    // inconsistency in any doubling round — mis-adjacency from the
-    // depth-8 sort or a wrong rank at ANY level of the walk —
-    // changes the answer. Per doc: pair count, max and total lcp
-    // over pairs whose LEFT suffix lives in the doc.
-    "q360_suffix_lcp" -> ((s, dir) => {
-      val D = 8
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(TA.tokens(col("text"))))
-        .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
-      DedupOps.suffixLcpPairs(toks, "doc_id", "p", "w", depth = D)
-        .groupBy(col("idL"))
-        .agg(count(lit(1)).as("n_pairs"),
-          max(col("lcp")).as("max_lcp"),
-          sum(col("lcp")).as("sum_lcp"))
-        .select(col("idL").as("doc_id"), col("n_pairs"),
-          col("max_lcp"), col("sum_lcp"))
-        .orderBy("doc_id")
-    }),
-
-    // END-TO-END CURATION PIPELINE as ONE PLAN (judge r11 item 3 —
-    // the q315 funnel with REAL stages): TRAIN a quality classifier
-    // in-engine (q356's GD, label = long-doc proxy) → SCORE every doc
-    // with the trained weight table (q105's broadcast-join shape) →
-    // THRESHOLD to the top half by score (rank-based budget, no float
-    // interpolation) → DSIR-weight the surviving non-target pool and
-    // Gumbel-draw 15 (q355+q358) → DEDUP ADMISSION among the draw
-    // (q332's first-5-token fingerprint, keep-first). Stages connect
-    // purely as DataFrames — no driver glue anywhere between them
-    // (the only driver scalars are inside the documented constant-
-    // round GD loop). The oracle replays the WHOLE chain as one CTE
-    // pipeline.
-    "q361_curation_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // stage 1 — TRAIN. The hashed feature stream is built ONCE and
-      // shared with stage 2 (r14): scoring's distinct (doc, bucket)
-      // pairs are exactly this frame minus the label column (the
-      // label is a function of the doc), so the second
-      // tokenize+explode+distinct pass the old shape paid is gone.
-      val fx0 = Caches.iteration(TA.hashedLabeledFeatures(docs,
-        "doc_id", "text", labelPos = col("n_chars") >= 250,
-        buckets = 64))
-      val model = Caches.small(TA.trainHashedLogRegOnFeatures(fx0,
-        buckets = 64, iters = 2))
-      val wts = model.filter(col("bucket") >= 0)
-        .select(col("bucket").as("__b"), col("weight").as("__w"))
-      val bias = model.filter(col("bucket") === -1)
-        .select(col("weight").as("__bias"))
-      // stage 2 — SCORE with the trained table (same tokenization +
-      // hash as training; docs fold <= 64 weights, one sorted level).
-      // The defensive distinct (advisor r14) pins the (doc, bucket)
-      // grain the old distinct-frame shape guaranteed: fx0 is distinct
-      // on (__id, __y, __b), and __y is row-derived, so this is a
-      // no-op on any corpus with unique doc_ids — but a duplicated
-      // doc_id straddling the label boundary would otherwise
-      // double-count its bucket weights in the score fold.
-      val fx = fx0.select(col("__id").as("doc_id"), col("__b")).distinct()
-      val scored = fx.join(broadcast(wts), Seq("__b"))
-        .groupBy("doc_id")
-        .agg(ssum(collect_list(col("__w"))).as("__s"))
-        .crossJoin(broadcast(bias))
-        .select(col("doc_id"),
-          (round(lit(1.0) / (lit(1.0) + exp(-(col("__bias") + col("__s")))),
-            4) + 0.0).as("quality_score"))
-      // stage 3 — THRESHOLD: keep the top half by (score desc, doc_id)
-      // — two-phase global rank, qr <= ceil(n/2). The census reads the
-      // RANKED frame (r14): numberRows has already checkpointed the
-      // scored rows, so counting those reuses the materialization
-      // where counting `scored` would re-run the whole scoring subtree
-      val ranked = Dedup.numberRows(scored,
-        struct((-col("quality_score")).as("__negs"), col("doc_id")),
-        "__qr")
-      // fx0 is corpus-scale and owed an explicit release (the
-      // iteration contract, advisor r14): numberRows has just
-      // materialized `ranked` and the model is Caches.small — nothing
-      // downstream reads fx0 again
-      Caches.release(fx0)
-      val n = ranked.agg(count(lit(1)).as("__n"))
-      val surv = ranked.crossJoin(broadcast(n))
-        .filter(col("__qr") * 2 <= col("__n") + 1)
-        .select(col("doc_id"), col("quality_score"))
-      // stage 4 — DSIR weights + Gumbel top-15 over surviving pool
-      val dw = TA.dsirLogWeights(docs, "doc_id", "text",
-        isTarget = col("lang") === "en", buckets = 256)
-      val keyed = dw.filter(!col("is_target"))
-        .join(surv, Seq("doc_id"))
-        .withColumn("u",
-          (TF.md5Hash48(col("doc_id").cast("string")).cast("double") + 0.5)
-            / lit(math.pow(2, 48)))
-        .withColumn("key",
-          col("dsir_weight") * col("n_tokens") - log(-log(col("u"))))
-      val top = keyed.orderBy(col("key").desc, col("doc_id")).limit(15)
-      // stage 5 — DEDUP ADMISSION among the draw
-      val fp = docs.select(col("doc_id"),
-        md5(concat_ws(" ", slice(TA.tokens(col("text")), 1, 5)))
-          .as("__fp"))
-      val drawn = Caches.small(top.join(fp, Seq("doc_id")))
-      val keep = drawn.groupBy("__fp").agg(min(col("doc_id")).as("__keep"))
-      drawn.join(keep, Seq("__fp"))
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("key").desc, col("doc_id"))))
-        .select(col("rank"), col("doc_id"), col("n_tokens"),
-          col("quality_score"),
-          (round(col("key"), 4) + 0.0).as("gumbel_key"),
-          when(col("doc_id") === col("__keep"), "kept").otherwise("dup")
-            .as("decision"))
-        .orderBy("rank")
-    }),
-
-    // UNIGRAM-LM TOKENIZER TRAINING (Kudo 2018 / SentencePiece — the
-    // production tokenizer next to BPE, judge r11 item 7): two full
-    // SOFT-EM rounds over each word type's segmentation lattice
-    // (pieces of 1–2 chars, words truncated at 8), forward/backward
-    // lattice DP run map-side via higher-order `aggregate` — no UDF,
-    // no driver state beyond the constant EM loop
-    // (TextAnalysis.unigramLmTrain). The oracle statically unrolls
-    // both EM iterations as CTE blocks and replays the lattice DP
-    // with a list_reduce over positions — identical recurrence,
-    // identical IEEE order.
-    "q362_unigram_lm_train" -> ((s, dir) => {
-      TA.unigramLmTrain(t(s, dir, "documents"), "text",
-          iters = 2, maxWordLen = 8)
-        .orderBy("piece")
-    }),
-
-    // INCREMENTAL SQLITE EXPORT — WAL APPEND (judge r11 item 4, the
-    // write-side twin of the WAL reader): a base image takes two
-    // committed transactions as salted+checksummed WAL FRAMES
-    // (SqliteWalWriter — rightmost-spine B-tree append, root-stays-put
-    // deepening, page-1 size/counter frame), never rewriting the main
-    // file; the read-back goes through the repo's own WAL-overlay
-    // reader and must equal the full table (q337's oracle verbatim).
-    // python-sqlite3 cross-validation incl. integrity_check after a
-    // real checkpoint runs in tools/check_wal_roundtrip.py. Eager
-    // sink (see [[eagerSinks]]): building the frame runs the export.
-    "q363_sqlite_wal_append" -> ((s, dir) => {
-      import graft.sources.SqliteFile.{VInt, VNull, VText}
-      val db = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_q363_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + ".db")
-      Seq("", "-wal", "-shm").foreach(e => java.nio.file.Files
-        .deleteIfExists(java.nio.file.Paths.get(db.toString + e)))
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        col("c_mktsegment").as("seg"),
-        expr("cast(round(c_acctbal * 100) as bigint)").as("cents"))
-      val mx = cust.agg(max(col("c_custkey"))).head().getLong(0)
-      val (m1, m2) = (mx * 2 / 3, mx * 5 / 6)
-      graft.sources.SqliteWriter.export(
-        cust.filter(col("c_custkey") <= m1), db.toString, "cust_export",
-        rowidCol = Some("c_custkey"))
-      def batch(lo: Long, hi: Long) = cust
-        .filter(col("c_custkey") > lo && col("c_custkey") <= hi)
-        .orderBy("c_custkey").collect().toSeq
-        .map(r => (r.getLong(0),
-          Seq(VNull, VText(r.getString(1)), VInt(r.getLong(2)))))
-      graft.sources.SqliteWalWriter.appendCommit(db.toString,
-        "cust_export", batch(m1, m2))
-      graft.sources.SqliteWalWriter.appendCommit(db.toString,
-        "cust_export", batch(m2, Long.MaxValue))
-      s.read.format("graft-sqlite").option("table", "cust_export")
-        .load(db.toString)
-        .groupBy("seg")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("c_custkey")).as("min_key"),
-          max(col("c_custkey")).as("max_key"))
-        .orderBy("seg")
-    }),
-
-    // UNIGRAM-LM VITERBI ENCODE (q362's inference half — together
-    // they mirror the BPE train/encode pair): every word type
-    // segments into the max-log-prob 1-2 char piece sequence under
-    // the PUBLISHED 7-dp model, ties toward the longer piece; the
-    // lattice DP and the backtrace run map-side via higher-order
-    // aggregate folds (TextAnalysis.unigramLmEncode). The oracle
-    // retrains the model (q362's CTEs verbatim), replays the Viterbi
-    // scores with a list_reduce, and walks the backtrace as a
-    // RECURSIVE CTE (plain column refs — DuckDB 1.0 misaligns
-    // captured outer STRING columns inside list_reduce lambdas).
-    "q364_unigram_encode" -> ((s, dir) => {
-      TA.unigramLmEncode(t(s, dir, "documents"), "text",
-          iters = 2, maxWordLen = 8)
-        .orderBy("word")
-    }),
-
-    // WRITE-SIDE CDC ROUND TRIP (q363's writer driving q350's
-    // reader): export a base image, take a CDC cursor, WAL-APPEND a
-    // second committed transaction with our own writer, and pull the
-    // exact changed rowids back with SqliteCdc — our frames must
-    // drive our own tail (commit boundaries, salts, changed-rowid
-    // extraction) precisely. The query re-reads the CDC-detected
-    // batch from the head (rowid pushdown bounds the scan) and
-    // aggregates it; the oracle recomputes the same batch as the
-    // top-sixth key slice of `customer` — any over/under-detection
-    // by the CDC pull changes the row set and hash-mismatches.
-    // Eager sink (see [[eagerSinks]]).
-    "q365_walwrite_cdc_roundtrip" -> ((s, dir) => {
-      import graft.sources.{SqliteCdc, SqliteWalWriter, SqliteWriter}
-      import graft.sources.SqliteFile.{VInt, VNull, VText}
-      val db = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_q365_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + ".db")
-      Seq("", "-wal", "-shm").foreach(e => java.nio.file.Files
-        .deleteIfExists(java.nio.file.Paths.get(db.toString + e)))
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        col("c_mktsegment").as("seg"),
-        expr("cast(round(c_acctbal * 100) as bigint)").as("cents"))
-      val mx = cust.agg(max(col("c_custkey"))).head().getLong(0)
-      val (m1, m2) = (mx * 2 / 3, mx * 5 / 6)
-      def batch(lo: Long, hi: Long) = cust
-        .filter(col("c_custkey") > lo && col("c_custkey") <= hi)
-        .orderBy("c_custkey").collect().toSeq
-        .map(r => (r.getLong(0),
-          Seq(VNull, VText(r.getString(1)), VInt(r.getLong(2)))))
-      SqliteWriter.export(cust.filter(col("c_custkey") <= m1),
-        db.toString, "cust_export", rowidCol = Some("c_custkey"))
-      // first transaction, then the cursor the tail would store
-      SqliteWalWriter.appendCommit(db.toString, "cust_export",
-        batch(m1, m2))
-      val conf = s.sparkContext.hadoopConfiguration
-      val c0 = SqliteCdc.currentCursor(db.toString, conf)
-      // second transaction lands AFTER the cursor
-      SqliteWalWriter.appendCommit(db.toString, "cust_export",
-        batch(m2, Long.MaxValue))
-      val ins = SqliteCdc.changesSince(db.toString, conf,
-        "cust_export", c0) match {
-        case SqliteCdc.Changes(_, i, u, d) =>
-          require(u.isEmpty && d.isEmpty,
-            s"append-only transaction misread as updates=$u deletes=$d")
-          i
-        case SqliteCdc.ResyncRequired(r) =>
-          sys.error(s"unexpected resync on our own WAL append: $r")
-      }
-      s.read.format("graft-sqlite").option("table", "cust_export")
-        .load(db.toString)
-        .filter(col("c_custkey").isin(ins.map(Long.box): _*))
-        .groupBy("seg")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("c_custkey")).as("min_key"),
-          max(col("c_custkey")).as("max_key"))
-        .orderBy("seg")
-    }),
-    // TOP PRINCIPAL COMPONENT by DISTRIBUTED POWER ITERATION — the
-    // eigensolver that never FORMS the d x d Gram (the OPQ path
-    // tree-aggregates a Gram and eigendecomposes driver-side, fine
-    // while d^2 is model-sized; power iteration is the big-d shape:
-    // two matvec scans per round, 1-/d-row frames between). Three
-    // statically-unrolled rounds from the uniform 1/sqrt(d) start,
-    // per-round renormalize + 9-dp rounding; the oracle replays every
-    // fold. dim = -1 carries lambda/n, the top covariance eigenvalue.
-    "q366_power_iteration" -> ((s, dir) => {
-      Similarity.powerIterationTop(t(s, dir, "embeddings"), "vec_id",
-          "embedding", dims = 64, iters = 3)
-        .orderBy("dim")
-    }),
-    // JOHNSON-LINDENSTRAUSS projection + distortion audit (Achlioptas
-    // +-1/sqrt(k) signs, md5-derived — the matrix is a FORMULA, never
-    // sampled or stored): project 64 -> 16, then measure what that
-    // did to a deterministic 1-1 pair sample (vector i vs i + n/2;
-    // equi-joins, never all pairs) — squared-distance ratio binned at
-    // 0.25 grain with per-bin means. The capacity-planning table for
-    // picking k before ANN indexing (Similarity.jlDistortionAudit).
-    "q367_jl_distortion" -> ((s, dir) => {
-      Similarity.jlDistortionAudit(t(s, dir, "embeddings"), "vec_id",
-          "embedding", dims = 64, k = 16)
-        .orderBy("bin")
-    }),
-    // HEAPS'-LAW FIT over the dedup-key universe: distinct 8-gram
-    // growth at ten nested doc-id deciles (first-occurrence doc per
-    // gram -> every prefix vocabulary is ONE conditional count, no
-    // rescans), closed-form OLS on ln V vs ln T, and the 100x
-    // extrapolation — the capacity answer to "how big is the
-    // q351/q359 shuffle key space at the next scale-up"
-    // (TextAnalysis.heapsLawGramFit).
-    "q368_heaps_law" -> ((s, dir) => {
-      TA.heapsLawGramFit(t(s, dir, "documents"), "doc_id", "text",
-          L = 8)
-        .orderBy("stat")
-    }),
-
-    // S8's PRODUCTION form — q08's MERGE routed through the
-    // transactional path (Merge.upsertTransactional → TxLog.merge →
-    // atomic manifest CAS): seed a TxLog table from orders in two
-    // key-range appends, MERGE the same incoming batch q08 builds, and
-    // read the committed version back. Same projection, same oracle as
-    // q08 — proving the transactional sink preserves plain-MERGE
-    // semantics exactly while rewriting only key-range-touched files
-    // (TxLogSpec proves the untouched files survive byte-identical).
-    "q369_txn_merge_upsert" -> ((s, dir) => {
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q369_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        if (java.nio.file.Files.exists(p)) {
-          val st = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally st.close()
-        }
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      val orders = t(s, dir, "orders")
-      val mid = orders.agg((max(col("o_orderkey")) / 2).cast("long"))
-        .head().getLong(0)
-      TxLog.append(s, root, orders.filter(col("o_orderkey") <= mid),
-        "o_orderkey")
-      TxLog.append(s, root, orders.filter(col("o_orderkey") > mid),
-        "o_orderkey")
-      val incoming = orders
-        .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .withColumn("o_orderstatus", lit("U"))
-      Merge.upsertTransactional(s, root, incoming, "o_orderkey")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("total"))
-        .orderBy("o_orderkey")
-    }),
-
-    // INTERCHANGE-FORMAT ROUND TRIP: JSONL and CSV are the two formats
-    // a training-data pipeline actually trades in (JSONL for corpora,
-    // CSV for metadata exports). Write the documents table to BOTH via
-    // Spark's native writers, read each back under the parquet schema,
-    // and aggregate per source with an order-independent 48-bit
-    // content-hash sum over (doc_id, lang, text) — equality of every
-    // _json/_csv column pair against the parquet-derived oracle proves
-    // the round trips are LOSSLESS (quoting, escaping, type round-trip),
-    // not just row-count-preserving. Eager sink: building the frame
-    // writes real files to a per-SF temp dir, wiped per build.
-    "q370_jsonl_csv_roundtrip" -> ((s, dir) => {
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q370_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        if (java.nio.file.Files.exists(p)) {
-          val st = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally st.close()
-        }
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      val docs = t(s, dir, "documents")
-      docs.write.mode("overwrite").json(s"$root/docs_jsonl")
-      // ignore*WhiteSpace=false: the univocity WRITER trims unquoted
-      // leading/trailing whitespace by default — silently lossy
-      // (InterchangeSpec pins the hostile-string cases: quotes,
-      // newlines-with-multiLine-read, backslashes, unicode, padding)
-      docs.write.mode("overwrite")
-        .option("header", "true").option("escape", "\"")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(s"$root/docs_csv")
-      val j = s.read.schema(docs.schema).json(s"$root/docs_jsonl")
-      // multiLine=true is part of the lossless contract (InterchangeSpec):
-      // the writer quotes embedded newlines, so a corpus containing \n
-      // would otherwise be silently mis-parsed into extra rows
-      val c = s.read.schema(docs.schema)
-        .option("header", "true").option("escape", "\"")
-        .option("multiLine", "true")
-        .csv(s"$root/docs_csv")
-      def summ(df: DataFrame, p: String) = df.groupBy("source").agg(
-        count(lit(1)).as(s"n_$p"),
-        sum(col("n_chars")).as(s"chars_$p"),
-        sum(TF.md5Hash48(concat_ws("|", col("doc_id"), col("lang"),
-          col("text")))).as(s"hash_$p"))
-      summ(j, "json").join(summ(c, "csv"), Seq("source"))
-        .orderBy("source")
-    }),
-
-    // HTML → TEXT extraction (TextAnalysis.htmlToText, the r14
-    // parser-grade state machine — graft.functions.HtmlTextExtract):
-    // synthesize a deterministic HOSTILE web page per document —
-    // title/heading, a comment CONTAINING markup, a script block with
-    // '<p>' inside a JS string, an anchor whose quoted attribute value
-    // contains '>', decimal + hex numeric character references, a
-    // CDATA section, '&amp;lt;' (single-pass decode must leave the
-    // literal '&lt;'), an unknown entity, and a bare '1 < 2' — strip
-    // it back to text, and report per-doc extraction stats. The oracle
-    // is CONSTRUCTIVE: DuckDB builds the EXPECTED extraction directly
-    // from the same document columns (the corpus text is
-    // whitespace-clean and markup-free, so the expected output is a
-    // deterministic concatenation), which gates the state machine
-    // against an independent derivation instead of replaying its own
-    // regexes back at it.
-    "q371_html_extract" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title><style>p { color: #333; }</style>"),
-        lit("<script>if (1 < 2) { var s = \"<p>not text</p>\"; }" +
-          "</script></head><body><h1>Heading "), col("doc_id"),
-        lit("</h1><!-- boilerplate <p>never</p> --><p class=\"main\">"),
-        col("text"),
-        lit("</p><a title=\"a>b\" href=\"#\">link "), col("doc_id"),
-        lit("</a><p>entities: &amp; &lt;tag&gt; &quot;q&quot; " +
-          "&#39;s&#39; x&nbsp;y caf&#233; na&#xEF;ve &amp;lt; " +
-          "&bogus; 1 < 2</p><![CDATA[raw <b> & text]]></body></html>"))
-      val extracted = TA.htmlToText(html)
-      docs.select(col("doc_id"), extracted.as("__x"))
-        .select(col("doc_id"),
-          length(col("__x")).as("n_chars_text"),
-          TF.md5Hash48(col("__x")).as("fp48"),
-          size(split(col("__x"), " ")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // XLSX write → read ROUND TRIP (XlsxWriter + XlsxSource — the
-    // write half of S1, judge r13 missing #2): export the documents
-    // table to a real OOXML workbook (shared strings, one sheet),
-    // re-read it with the native reader, and prove the round trip
-    // LOSSLESS by content hash against the parquet-derived oracle —
-    // the q370 pattern on the xlsx surface. Eager sink: building the
-    // frame writes the workbook to a per-SF temp dir.
-    "q372_xlsx_roundtrip" -> ((s, dir) => {
-      val root = {
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_q372_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-        java.nio.file.Files.createDirectories(p).toString
-      }
-      val docs = t(s, dir, "documents")
-      graft.sources.XlsxWriter.write(
-        docs.orderBy("doc_id"), s"$root/documents.xlsx")
-      val back = graft.sources.XlsxSource.read(s, s"$root/documents.xlsx")
-      back.groupBy("source").agg(
-          count(lit(1)).as("n"),
-          sum(col("n_chars").cast("long")).as("chars"),
-          sum(TF.md5Hash48(concat_ws("|", col("doc_id"), col("lang"),
-            col("text")))).as("hash"))
-        .orderBy("source")
-    }),
-  )
-
-  /** Queries whose BUILDER executes side effects — the sink IS the
-    * query's subject, so constructing the DataFrame runs real DML
-    * (TxLog merges/deletes) before returning the lazy read-back plan.
-    * Runtime consumers (Verify, Bench) pay that by design; PLAN-ONLY
-    * consumers (PlanAudit, ContractSpec's all-query plan gates) must
-    * consult this set and skip, so that "build every plan" is
-    * side-effect-free. The skipped queries' scale shape is audited by
-    * their own specs (TxLogSpec races the commit path; the read-back
-    * plan is a plain parquet scan + keyed agg). */
-  val eagerSinks: Set[String] = Set("q273_txlog_exactly_once",
-    "q336_sqlite_migration", "q337_sqlite_export_roundtrip",
-    "q352_sqlite_cdc_sync", "q363_sqlite_wal_append",
-    "q365_walwrite_cdc_roundtrip", "q369_txn_merge_upsert",
-    "q370_jsonl_csv_roundtrip", "q372_xlsx_roundtrip")
-
-  /** Generates the q116 oracle: `n` statically-unrolled BPE training
-    * iterations as a DuckDB CTE chain (v0 = delimited vocab; then per
-    * rank r: p_r = pair recount over v_{r-1}, m_r = argmax (cnt desc,
-    * pair asc), v_r = literal-replace of the winner). Mirrors
-    * TextAnalysis.bpeTrain exactly, at any unroll depth. */
-  private def bpeTrainOracle(n: Int): String = {
-    def pairs(r: Int) =
-      s"""p$r AS (
-           SELECT pair, sum(freq) AS cnt FROM (
-             SELECT freq, unnest(list_transform(range(1, len(t)),
-               j -> t[j] || ' ' || t[j+1])) AS pair
-             FROM (SELECT string_split(trim(s, chr(31)),
-               chr(31) || chr(31)) AS t, freq FROM v${r - 1}))
-           GROUP BY 1)"""
-    def best(r: Int) =
-      s"""m$r AS (SELECT pair, string_split(pair, ' ')[1] AS a,
-                  string_split(pair, ' ')[2] AS b
-                FROM p$r ORDER BY cnt DESC, pair LIMIT 1)"""
-    def merged(r: Int) =
-      s"""v$r AS (SELECT replace(v.s, chr(31) || m.a || chr(31) || chr(31)
-                  || m.b || chr(31), chr(31) || m.a || m.b || chr(31)) AS s,
-                  v.freq
-                FROM v${r - 1} v, m$r m)"""
-    val v0 =
-      """v0 AS (
-           SELECT regexp_replace(w, '(.)', chr(31) || '\1' || chr(31), 'g')
-               AS s, freq
-           FROM (
-             SELECT w, count(*) AS freq FROM (
-               SELECT unnest(string_split(
-                 lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-               FROM documents)
-             WHERE length(w) >= 2 GROUP BY 1))"""
-    val iters = (1 to n).flatMap { r =>
-      Seq(pairs(r), best(r)) ++ (if (r < n) Seq(merged(r)) else Nil)
-    }
-    val ranks = (1 to n).map {
-      case 1 => "SELECT 1::BIGINT AS rank, pair FROM m1"
-      case r => s"UNION ALL SELECT $r::BIGINT, pair FROM m$r"
-    }.mkString("\n           ")
-    s"""WITH ${(v0 +: iters).mkString(",\n         ")}
-         SELECT * FROM (
-           $ranks)
-         ORDER BY rank"""
-  }
-
-  /** Generates the q306 oracle: `rounds` statically-unrolled EM
-    * iterations on the 4-bit agreement-pattern grain, mirroring
-    * q306_linkage_em — per round r: e_r joins the pattern counts to the
-    * previous params row, computes P(pattern|M), P(pattern|U) (CASE
-    * products, no pow) and the posterior g in the SAME operation order
-    * as the Spark columns; i_r re-estimates (p, m1..4, u1..4) with
-    * sorted folds (list_sum ∘ list_sort ∘ list — the ssum bridge). */
-  private def linkageEmOracle(rounds: Int): String = {
-    def term(g: String, q: String) =
-      s"(pat.$g*i.$q + (1.0-pat.$g)*(1.0-i.$q))"
-    def eStep(r: Int) =
-      s"""e$r AS (
-           SELECT cnt, g1, g2, g3, g4,
-             p * pm / (p * pm + (1.0 - p) * pu) AS g
-           FROM (
-             SELECT pat.cnt, pat.g1, pat.g2, pat.g3, pat.g4, i.p,
-               ${term("g1", "m1")}
-               * ${term("g2", "m2")}
-               * ${term("g3", "m3")}
-               * ${term("g4", "m4")} AS pm,
-               ${term("g1", "u1")}
-               * ${term("g2", "u2")}
-               * ${term("g3", "u3")}
-               * ${term("g4", "u4")} AS pu
-             FROM pat CROSS JOIN i${r - 1} i))"""
-    def sf(expr: String) = s"list_sum(list_sort(list($expr)))"
-    def mStep(r: Int) = {
-      val ms = (1 to 4).map(k =>
-        s"${sf(s"g * cnt * g$k")} / ${sf("g * cnt")} AS m$k").mkString(", ")
-      val us = (1 to 4).map(k =>
-        s"${sf(s"(1.0 - g) * cnt * g$k")} / ${sf("(1.0 - g) * cnt")} AS u$k")
-        .mkString(", ")
-      s"""i$r AS (
-           SELECT ${sf("g * cnt")} / ${sf("cnt")} AS p, $ms, $us
-           FROM e$r)"""
-    }
-    val prelude =
-      """base AS (
-           SELECT c_custkey AS key, c_name AS nm,
-             c_nationkey::BIGINT AS nat,
-             round(c_acctbal * 100)::BIGINT AS balc,
-             c_mktsegment AS seg
-           FROM customer),
-         u AS (
-           SELECT key, nm, nat, balc, seg, 'a' AS src FROM base
-           UNION ALL
-           SELECT key,
-             CASE WHEN key % 7 = 0 THEN nm || 'x' ELSE nm END,
-             CASE WHEN key % 5 = 0 THEN (nat + 1) % 25 ELSE nat END,
-             CASE WHEN key % 3 = 0 THEN balc + 10000 ELSE balc END,
-             CASE WHEN key % 11 = 0 THEN 'UNKNOWN' ELSE seg END,
-             'b'
-           FROM base),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY nm || '|' || src) AS rk
-           FROM u),
-         pat AS (
-           SELECT g1, g2, g3, g4, count(*)::DOUBLE AS cnt FROM (
-             SELECT
-               (CASE WHEN a.nm = b.nm THEN 1 ELSE 0 END)::DOUBLE AS g1,
-               (CASE WHEN a.nat = b.nat THEN 1 ELSE 0 END)::DOUBLE AS g2,
-               (CASE WHEN abs(a.balc - b.balc) <= 5000 THEN 1 ELSE 0 END)
-                 ::DOUBLE AS g3,
-               (CASE WHEN a.seg = b.seg THEN 1 ELSE 0 END)::DOUBLE AS g4
-             FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
-             WHERE a.src <> b.src)
-           GROUP BY 1, 2, 3, 4),
-         i0 AS (
-           SELECT 0.1::DOUBLE AS p,
-             0.9::DOUBLE AS m1, 0.9::DOUBLE AS m2, 0.9::DOUBLE AS m3,
-             0.9::DOUBLE AS m4,
-             0.1::DOUBLE AS u1, 0.1::DOUBLE AS u2, 0.1::DOUBLE AS u3,
-             0.1::DOUBLE AS u4)"""
-    val iters = (1 to rounds).flatMap(r => Seq(eStep(r), mStep(r)))
-    val fields = Seq(("bal", 3), ("nm", 1), ("nat", 2), ("seg", 4))
-      .map { case (n, k) =>
-        s"SELECT '$n' AS field, m$k AS m, u$k AS u, p FROM i$rounds" }
-      .mkString("\n           UNION ALL ")
-    s"""WITH ${(prelude +: iters).mkString(",\n         ")}
-         SELECT field,
-           round(m * 1e6)::BIGINT AS m_micro,
-           round(u * 1e6)::BIGINT AS u_micro,
-           round(p * 1e6)::BIGINT AS prior_micro
-         FROM (
-           $fields)
-         ORDER BY field"""
-  }
-
-  /** Generates the q300 oracle: `rounds` statically-unrolled BATCHED
-    * BPE rounds mirroring TextAnalysis.bpeTrainBatched — per round r:
-    * p_r = pair recount, c_r = top-`batch` candidates ranked
-    * (cnt desc, pair), a_r = conflict-filtered acceptance (NOT EXISTS
-    * a higher-ranked candidate sharing a token), l_r = the accepted
-    * pairs as an ordered list, v_r = ONE list_reduce fold applying the
-    * round's merges in rank order. Final ranks number acceptances
-    * across rounds. */
-  private def bpeTrainBatchedOracle(rounds: Int, batch: Int): String = {
-    def pairs(r: Int) =
-      s"""p$r AS MATERIALIZED (
-           SELECT pair, sum(freq) AS cnt FROM (
-             SELECT freq, unnest(list_transform(range(1, len(t)),
-               j -> t[j] || ' ' || t[j+1])) AS pair
-             FROM (SELECT string_split(trim(s, chr(31)),
-               chr(31) || chr(31)) AS t, freq FROM v${r - 1}))
-           GROUP BY 1)"""
-    def cands(r: Int) =
-      s"""c$r AS MATERIALIZED (
-           SELECT pair, string_split(pair, ' ')[1] AS a,
-             string_split(pair, ' ')[2] AS b,
-             row_number() OVER (ORDER BY cnt DESC, pair) AS rn
-           FROM (SELECT pair, cnt FROM p$r
-                 ORDER BY cnt DESC, pair LIMIT $batch))"""
-    def accepted(r: Int) =
-      s"""a$r AS MATERIALIZED (
-           SELECT k.pair, k.rn FROM c$r k
-           WHERE NOT EXISTS (
-             SELECT 1 FROM c$r j WHERE j.rn < k.rn
-               AND (j.a = k.a OR j.a = k.b OR j.b = k.a OR j.b = k.b)))"""
-    def mergeList(r: Int) =
-      s"""l$r AS MATERIALIZED (SELECT coalesce(list(pair ORDER BY rn),
-                    []::VARCHAR[]) AS ms FROM a$r)"""
-    def merged(r: Int) =
-      s"""v$r AS MATERIALIZED (
-           SELECT list_reduce(list_prepend(v.s, l.ms), (acc, m) ->
-               replace(acc,
-                 chr(31) || string_split(m, ' ')[1] || chr(31) || chr(31)
-                   || string_split(m, ' ')[2] || chr(31),
-                 chr(31) || string_split(m, ' ')[1]
-                   || string_split(m, ' ')[2] || chr(31))) AS s,
-             v.freq
-           FROM v${r - 1} v CROSS JOIN l$r l)"""
-    val v0 =
-      """v0 AS MATERIALIZED (
-           SELECT regexp_replace(w, '(.)', chr(31) || '\1' || chr(31), 'g')
-               AS s, freq
-           FROM (
-             SELECT w, count(*) AS freq FROM (
-               SELECT unnest(string_split(
-                 lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-               FROM documents)
-             WHERE length(w) >= 2 GROUP BY 1))"""
-    val iters = (1 to rounds).flatMap { r =>
-      Seq(pairs(r), cands(r), accepted(r)) ++
-        (if (r < rounds) Seq(mergeList(r), merged(r)) else Nil)
-    }
-    val unioned = (1 to rounds).map {
-      case 1 => "SELECT 1 AS rnd, rn, pair FROM a1"
-      case r => s"UNION ALL SELECT $r, rn, pair FROM a$r"
-    }.mkString("\n           ")
-    s"""WITH ${(v0 +: iters).mkString(",\n         ")}
-         SELECT row_number() OVER (ORDER BY rnd, rn) AS rank, pair
-         FROM (
-           $unioned)
-         ORDER BY rank"""
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity),2) AS sum_qty,
-         (sum(cast(round(l_extendedprice*100) as bigint))::BIGINT)::DOUBLE
-           / 100.0 AS sum_base_price,
-         (((sum(cast(round(l_extendedprice*100) as bigint) *
-              (100 - cast(round(l_discount*100) as bigint)))::BIGINT + 50)
-            // 100))::DOUBLE / 100.0 AS sum_disc_price,
-         ((200 * sum(cast(round(l_discount*100) as bigint))::BIGINT
-            + count(*)) // (2 * count(*)))::DOUBLE / 10000.0 AS avg_disc,
-         count(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-06-30'
-         GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q02_dedup_keepfirst" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_mktsegment FROM (
-           SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-                  row_number() OVER (PARTITION BY c_nationkey, c_mktsegment
-                                     ORDER BY c_custkey) AS rn
-           FROM customer) WHERE rn = 1 ORDER BY c_custkey""",
-
-    "q03_antijoin_new_rows" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-         WHERE c_custkey NOT IN (
-           SELECT o_custkey FROM orders
-           WHERE o_orderdate >= TIMESTAMP '2001-01-01')
-         ORDER BY c_custkey""",
-
-    "q04_join_resolve" ->
-      """SELECT o_orderkey, c_name, n_name
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         ORDER BY o_orderkey""",
-
-    "q05_window_rownum" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity,
-         row_number() OVER (PARTITION BY l_orderkey
-           ORDER BY l_linenumber, l_partkey, l_suppkey, l_quantity) AS rn
-         FROM lineitem ORDER BY l_orderkey, rn""",
-
-    "q06_regex_date_extract" ->
-      """SELECT o_orderkey, CAST(CAST(try_strptime(
-           list_filter(
-             regexp_extract_all(
-               'ne le 01/01/1940 vu le ' || strftime(o_orderdate, '%d/%m/%Y')
-                 || ' rdv 15/06/2001 fin',
-               '\d{2}/\d{2}/\d{4}'),
-             d -> year(try_strptime(d, '%d/%m/%Y')) >= 2001)[1],
-           '%d/%m/%Y') AS DATE) AS VARCHAR) AS doc_date
-         FROM orders ORDER BY o_orderkey""",
-
-    "q07_regex_author_extract" ->
-      """WITH base AS (
-           SELECT n_nationkey,
-             'avis du dr ' || lower(n_name) || ' transmis au dr '
-               || lower(r_name) || ' service' AS txt
-           FROM nation JOIN region ON n_regionkey = r_regionkey),
-         m AS (
-           SELECT n_nationkey,
-             regexp_extract_all(txt, '\bdr\s+([a-z]+(?:\s+[a-z]+)?)\b', 1)[-1]
-               AS last_name
-           FROM base),
-         tr AS (
-           SELECT n_nationkey, last_name,
-             trim(string_split(last_name, 'dr')[1]) AS cut
-           FROM m)
-         SELECT n_nationkey,
-           CASE WHEN last_name IS NOT NULL AND length(last_name) > 0
-             THEN 'Dr ' || list_aggregate(
-               list_transform(string_split(cut, ' '),
-                 w -> upper(w[1]) || w[2:]),
-               'string_agg', ' ')
-             ELSE NULL END AS author
-         FROM tr ORDER BY n_nationkey""",
-
-    "q08_merge_upsert" ->
-      """SELECT * FROM (
-           SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS total
-           FROM orders
-           WHERE o_orderkey NOT IN (
-             SELECT o_orderkey FROM orders
-             WHERE o_orderdate >= TIMESTAMP '2001-01-01')
-           UNION ALL
-           SELECT o_orderkey, 'U' AS o_orderstatus,
-                  round(o_totalprice*2,2) AS total
-           FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01')
-         ORDER BY o_orderkey""",
-
-    "q09_provenance_export" ->
-      """SELECT o_orderkey,
-           lpad(CAST(o_custkey*5124 AS VARCHAR), 8, '0') AS hospital_patient_id,
-           strftime(o_orderdate, '%d/%m/%Y') AS order_date_fr,
-           c_name
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         ORDER BY o_orderkey""",
-
-    "q10_schema_projection" ->
-      """SELECT c_custkey AS patient_num, c_name AS lastname,
-           CAST(NULL AS VARCHAR) AS maiden_name,
-           CASE WHEN c_acctbal < 0 THEN '1' ELSE '0' END AS death_code,
-           CASE WHEN length(coalesce(c_mktsegment,'')) > 0 THEN '1' ELSE '0'
-             END AS master_patient_id,
-           'SIH' AS origin_patient_id,
-           CAST(7 AS BIGINT) AS upload_id
-         FROM customer ORDER BY 1""",
-
-    "q11_filename_parse" ->
-      """WITH p AS (
-           SELECT doc_id,
-             source || '/' || CAST(doc_id AS VARCHAR) || '_'
-               || CAST(n_chars AS VARCHAR)
-               || CASE WHEN doc_id % 2 = 0 THEN '.pdf' ELSE '.docx' END AS path
-           FROM documents)
-         SELECT doc_id,
-           regexp_extract(path, '([^/_]+)_([^/_]+)\.(pdf|docx)$', 1) AS ipp,
-           regexp_extract(path, '([^/_]+)_([^/_]+)\.(pdf|docx)$', 2) AS id_doc,
-           regexp_extract(path, '([^/_]+)_([^/_]+)\.(pdf|docx)$', 3) AS doc_type
-         FROM p ORDER BY doc_id""",
-
-    "q12_json_extract" ->
-      """SELECT event_type,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-             AS BIGINT) AS sum_k,
-           count(*) AS n
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q13_time_window_agg" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-           event_type, count(*) AS n, (sum(cast(round(value*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS sum_value
-         FROM events GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q14_text_quality" ->
-      """WITH b AS (
-           SELECT doc_id, text,
-             CAST(length(text) AS BIGINT) AS len,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         r AS (
-           SELECT doc_id, len,
-             CAST(length(regexp_replace(lower(text),'[a-z0-9\s]','','g'))
-                  AS DOUBLE) / greatest(length(text),1) AS pr,
-             CAST(len(list_filter(ws, t -> t IN
-                  ('the','a','of','and','to','in'))) AS DOUBLE)
-               / greatest(len(ws),1) AS sr
-           FROM b)
-         SELECT doc_id, len, round(pr,4) AS punct_ratio,
-           round(sr,4) AS stopword_ratio,
-           round((least(CAST(len AS DOUBLE)/500.0, 1.0)
-                  + least(sr*5, 1.0)
-                  + greatest(1.0 - pr*5, 0.0)) / 3, 4) AS quality
-         FROM r ORDER BY doc_id""",
-
-    "q15_token_count" ->
-      """SELECT doc_id,
-           CAST(len(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))
-             AS BIGINT) AS ws_tokens,
-           CAST(len(regexp_extract_all(lower(text),
-             '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT) AS bpe_tokens
-         FROM documents ORDER BY doc_id""",
-
-    "q16_lang_id" ->
-      """WITH b AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         s AS (
-           SELECT doc_id,
-             len(list_filter(ws, t -> t IN ('the','a','of','and'))) AS en,
-             len(list_filter(ws, t -> t IN ('le','la','et','un'))) AS fr,
-             len(list_filter(ws, t -> t IN ('der','die','und','ein'))) AS de,
-             len(list_filter(ws, t -> t IN ('el','los','y','una'))) AS es,
-             CAST(length(regexp_replace(d.text, '[^\x{4e00}-\x{9fff}]', '', 'g'))
-               AS DOUBLE) / greatest(length(d.text), 1) AS cjk
-           FROM b JOIN documents d USING (doc_id))
-         SELECT doc_id,
-           CASE WHEN cjk > 0.1 THEN 'zh'
-                WHEN greatest(en,fr,de,es) = 0 THEN 'und'
-                WHEN en = greatest(en,fr,de,es) THEN 'en'
-                WHEN fr = greatest(en,fr,de,es) THEN 'fr'
-                WHEN de = greatest(en,fr,de,es) THEN 'de'
-                ELSE 'es' END AS lang_pred
-         FROM s ORDER BY doc_id""",
-
-    "q17_fingerprint" ->
-      """SELECT doc_id, md5(nt) AS fp,
-           ('0x' || substring(md5('0:' || nt), 1, 12))::BIGINT AS fp48
-         FROM (SELECT doc_id,
-                 lower(trim(regexp_replace(text,'\s+',' ','g'))) AS nt
-               FROM documents)
-         ORDER BY doc_id""",
-
-    "q18_dedup_exact" ->
-      """SELECT md5(lower(trim(regexp_replace(text,'\s+',' ','g')))) AS fp,
-           count(*) AS n, min(doc_id) AS keeper
-         FROM documents GROUP BY 1 ORDER BY fp""",
-
-    "q19_dedup_ngram_jaccard" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM sh),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 10),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         v AS (
-           SELECT id_a, id_b,
-             len(list_filter(sa.shs, x -> list_contains(sb.shs, x))) AS inter,
-             len(sa.shs) AS m_a, len(sb.shs) AS m_b
-           FROM cand
-           JOIN sh sa ON cand.id_a = sa.doc_id
-           JOIN sh sb ON cand.id_b = sb.doc_id)
-         SELECT id_a, id_b,
-           round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4) AS jaccard
-         FROM v
-         WHERE round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4) >= 0.5
-         ORDER BY id_a, id_b""",
-
-    "q20_dedup_minhash_lsh" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM sh),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 10)
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM banded a JOIN banded b
-           ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-         ORDER BY id_a, id_b""",
-
-    "q21_dedup_simhash" ->
-      """WITH w AS (
-           SELECT doc_id,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS t
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || t),1,12))::BIGINT AS h
-           FROM w),
-         bits AS (
-           SELECT doc_id, j,
-             CASE WHEN sum(((h >> j) & 1)*2 - 1) > 0 THEN 1 ELSE 0 END AS bit
-           FROM h CROSS JOIN (SELECT unnest(range(0,32)) AS j)
-           GROUP BY doc_id, j)
-         SELECT doc_id,
-           CAST(sum(bit * (1::BIGINT << j)) AS BIGINT) AS simhash
-         FROM bits GROUP BY doc_id ORDER BY doc_id""",
-
-    "q40_simhash_candidates" ->
-      """WITH w AS (
-           SELECT doc_id,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS t
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || t),1,12))::BIGINT AS h
-           FROM w),
-         bits AS (
-           SELECT doc_id, j,
-             CASE WHEN sum(((h >> j) & 1)*2 - 1) > 0 THEN 1 ELSE 0 END AS bit
-           FROM h CROSS JOIN (SELECT unnest(range(0,32)) AS j)
-           GROUP BY doc_id, j),
-         sig AS (
-           SELECT doc_id,
-             CAST(sum(bit * (1::BIGINT << j)) AS BIGINT) AS simhash
-           FROM bits GROUP BY doc_id),
-         banded AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,2), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST((simhash >> (b*16)) & 65535 AS VARCHAR))) AS band_key
-           FROM sig)
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM banded a JOIN banded b
-           ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-         ORDER BY id_a, id_b""",
-
-    "q22_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         s AS (
-           SELECT vec_id, round(
-             list_sum(list_transform(range(1, len(embedding)+1),
-               i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, len(embedding)+1),
-                 i -> CAST(embedding[i] AS DOUBLE)*CAST(embedding[i] AS DOUBLE))))
-               * sqrt(list_sum(list_transform(range(1, len(qv)+1),
-                 i -> CAST(qv[i] AS DOUBLE)*CAST(qv[i] AS DOUBLE))))), 4)
-             AS cos
-           FROM embeddings, q)
-         SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""",
-
-    "q23_embedding_neardup" ->
-      """WITH banded AS (
-           SELECT vec_id,
-             unnest(list_transform(range(0,8), t ->
-               CAST(t AS VARCHAR) || ':' ||
-               CAST(CAST(list_sum(list_transform(range(0,4), p ->
-                 CASE WHEN list_sum(list_transform(range(1,65), i ->
-                   CAST(embedding[i] AS DOUBLE) *
-                   ((((('0x' || substring(md5(CAST(t*4+p AS VARCHAR) || '_'
-                         || CAST(i-1 AS VARCHAR)),1,12))::BIGINT) % 1000)
-                     / 500.0) - 1.0))) >= 0
-                 THEN (1::BIGINT << p) ELSE 0 END)) AS BIGINT) AS VARCHAR)))
-               AS band_key
-           FROM embeddings),
-         cand AS (
-           SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-         v AS (SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(range(1, len(embedding)+1),
-               i -> CAST(embedding[i] AS DOUBLE)*CAST(embedding[i] AS DOUBLE))))
-               AS nrm
-           FROM embeddings),
-         p AS (
-           SELECT id_a, id_b, round(
-             list_sum(list_transform(range(1, len(a.embedding)+1),
-               i -> CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE)))
-             / (a.nrm * b.nrm), 4) AS cos
-           FROM cand JOIN v a ON cand.id_a = a.vec_id
-                     JOIN v b ON cand.id_b = b.vec_id)
-         SELECT id_a, id_b, cos FROM p WHERE cos >= 0.4
-         ORDER BY id_a, id_b""",
-
-    "q24_ann_ivf" ->
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-                       FROM embeddings WHERE vec_id < 8),
-         q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         scored AS (
-           SELECT e.vec_id, e.embedding, c.cid, round(
-             list_sum(list_transform(range(1, len(e.embedding)+1),
-               i -> CAST(e.embedding[i] AS DOUBLE)*CAST(c.cv[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-                 i -> CAST(e.embedding[i] AS DOUBLE)*CAST(e.embedding[i] AS DOUBLE))))
-               * sqrt(list_sum(list_transform(range(1, len(c.cv)+1),
-                 i -> CAST(c.cv[i] AS DOUBLE)*CAST(c.cv[i] AS DOUBLE))))), 6)
-             AS cs
-           FROM embeddings e CROSS JOIN cent c),
-         assigned AS (
-           SELECT vec_id, embedding, cid AS cluster FROM (
-             SELECT *, row_number() OVER (PARTITION BY vec_id
-               ORDER BY cs DESC, cid) AS rn FROM scored)
-           WHERE rn = 1),
-         qcl AS (
-           SELECT cid AS cluster FROM (
-             SELECT c.cid, round(
-               list_sum(list_transform(range(1, len(c.cv)+1),
-                 i -> CAST(c.cv[i] AS DOUBLE)*CAST(q.qv[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(1, len(c.cv)+1),
-                   i -> CAST(c.cv[i] AS DOUBLE)*CAST(c.cv[i] AS DOUBLE))))
-                 * sqrt(list_sum(list_transform(range(1, len(q.qv)+1),
-                   i -> CAST(q.qv[i] AS DOUBLE)*CAST(q.qv[i] AS DOUBLE))))), 6)
-               AS cs
-             FROM cent c CROSS JOIN q)
-           ORDER BY cs DESC, cid LIMIT 1),
-         hits AS (
-           SELECT a.vec_id, round(
-             list_sum(list_transform(range(1, len(a.embedding)+1),
-               i -> CAST(a.embedding[i] AS DOUBLE)*CAST(q.qv[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, len(a.embedding)+1),
-                 i -> CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))))
-               * sqrt(list_sum(list_transform(range(1, len(q.qv)+1),
-                 i -> CAST(q.qv[i] AS DOUBLE)*CAST(q.qv[i] AS DOUBLE))))), 4)
-             AS cos
-           FROM assigned a JOIN qcl ON a.cluster = qcl.cluster CROSS JOIN q)
-         SELECT vec_id, cos FROM hits ORDER BY cos DESC, vec_id LIMIT 5""",
-
-    "q25_multimodal_binary" ->
-      """SELECT doc_id,
-           CAST(54 + ((3*(1 + doc_id % 64) + 3) // 4 * 4)
-                  * (1 + doc_id % 48) AS BIGINT) AS n_bytes,
-           CAST(1 + doc_id % 64 AS INTEGER) AS width,
-           CAST(1 + doc_id % 48 AS INTEGER) AS height
-         FROM documents ORDER BY doc_id""",
-
-    // AVI container size is closed-form: 224 header/list bytes plus one
-    // 8-byte chunk header + padded 24bpp frame per frame (see encodeAvi).
-    "q127_multimodal_video" ->
-      """SELECT doc_id,
-           CAST(224 + (2 + doc_id % 6)
-                  * (8 + ((3*(1 + doc_id % 32) + 3) // 4 * 4)
-                       * (1 + doc_id % 24)) AS BIGINT) AS n_bytes,
-           CAST(1 + doc_id % 32 AS INTEGER) AS width,
-           CAST(1 + doc_id % 24 AS INTEGER) AS height,
-           CAST(2 + doc_id % 6 AS BIGINT) AS n_frames
-         FROM documents ORDER BY doc_id""",
-
-    "q50_kmv_sketch" ->
-      """WITH h AS (
-           SELECT DISTINCT ('0x' || substring(md5('0:' ||
-             lower(trim(regexp_replace(text,'\s+',' ','g')))),1,12))::BIGINT
-             AS h
-           FROM documents),
-         k AS (SELECT h FROM h ORDER BY h LIMIT 64),
-         s AS (SELECT count(*) AS n, max(h) AS hk FROM k),
-         e AS (SELECT count(DISTINCT
-             lower(trim(regexp_replace(text,'\s+',' ','g')))) AS ex
-           FROM documents)
-         SELECT CASE WHEN n < 64 THEN CAST(n AS DOUBLE)
-                ELSE round(CAST(63 AS DOUBLE) * CAST(281474976710656 AS DOUBLE)
-                           / hk, 4) END
-             AS est_distinct,
-           CAST(n AS BIGINT) AS k_used,
-           CAST(ex AS BIGINT) AS exact_distinct
-         FROM s CROSS JOIN e""",
-
-    "q49_ann_pq" ->
-      """WITH js AS (SELECT unnest(range(0,4)) AS j),
-         cb AS (
-           SELECT j, vec_id AS c,
-             list_transform(range(1,17),
-               i -> CAST(embedding[j*16+i] AS DOUBLE)) AS cv
-           FROM embeddings CROSS JOIN js WHERE vec_id < 16),
-         sub AS (
-           SELECT vec_id, j,
-             list_transform(range(1,17),
-               i -> CAST(embedding[j*16+i] AS DOUBLE)) AS sv
-           FROM embeddings CROSS JOIN js),
-         scored AS (
-           SELECT vec_id, sub.j, c, round(
-             list_sum(list_transform(range(1,17), i -> sv[i]*sv[i]))
-             - 2.0 * list_sum(list_transform(range(1,17), i -> sv[i]*cv[i]))
-             + list_sum(list_transform(range(1,17), i -> cv[i]*cv[i])), 6)
-             AS d
-           FROM sub JOIN cb ON sub.j = cb.j),
-         codes AS (
-           SELECT vec_id, j, c AS code FROM (
-             SELECT *, row_number() OVER (PARTITION BY vec_id, j
-               ORDER BY d, c) AS rn FROM scored)
-           WHERE rn = 1),
-         q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         qsub AS (
-           SELECT j, list_transform(range(1,17),
-             i -> CAST(qe[j*16+i] AS DOUBLE)) AS qs
-           FROM q CROSS JOIN js),
-         tbl AS (
-           SELECT qsub.j, c AS code, round(
-             list_sum(list_transform(range(1,17), i -> qs[i]*qs[i]))
-             - 2.0 * list_sum(list_transform(range(1,17), i -> qs[i]*cv[i]))
-             + list_sum(list_transform(range(1,17), i -> cv[i]*cv[i])), 6)
-             AS d
-           FROM cb JOIN qsub ON cb.j = qsub.j),
-         adc AS (
-           SELECT vec_id,
-             round(list_sum(list(d ORDER BY codes.j)), 4) AS adc
-           FROM codes JOIN tbl ON codes.j = tbl.j AND codes.code = tbl.code
-           GROUP BY vec_id)
-         SELECT vec_id, adc FROM adc ORDER BY adc, vec_id LIMIT 10""",
-
-    "q26_global_rownum" ->
-      """SELECT o_orderkey,
-           CAST(row_number() OVER (ORDER BY o_orderkey) AS BIGINT) AS rn
-         FROM orders ORDER BY o_orderkey""",
-
-    "q27_explode_dates" ->
-      """WITH e AS (
-           SELECT unnest(regexp_extract_all(
-             'vu ' || strftime(o_orderdate, '%d/%m/%Y') || ' revu '
-               || strftime(o_orderdate + INTERVAL 45 DAY, '%d/%m/%Y'),
-             '\d{2}/\d{2}/\d{4}')) AS d
-           FROM orders)
-         SELECT d, count(*) AS n FROM e GROUP BY d ORDER BY d""",
-
-    "q28_setops" ->
-      """SELECT * FROM (
-           SELECT o_custkey, 'both' AS which FROM (
-             SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate)=2000
-             INTERSECT
-             SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate)=2001)
-           UNION ALL
-           SELECT o_custkey, 'only2000' AS which FROM (
-             SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate)=2000
-             EXCEPT
-             SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate)=2001))
-         ORDER BY o_custkey, which""",
-
-    "q29_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-           coalesce(l_linestatus, 'ALL') AS status,
-           round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY flag, status""",
-
-    "q53_unigram_surprisal" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         v AS (SELECT w, count(*) AS wc FROM w GROUP BY 1),
-         tot AS (SELECT sum(wc) AS tot FROM v),
-         nll AS (
-           SELECT doc_id, -ln(CAST(wc AS DOUBLE) / tot) AS nll
-           FROM w JOIN v USING (w) CROSS JOIN tot)
-         SELECT doc_id,
-           round(list_sum(list_sort(list(nll))) / count(*), 4)
-             AS mean_surprisal,
-           count(*) AS n_words
-         FROM nll GROUP BY doc_id ORDER BY doc_id""",
-
-    "q52_session_window" ->
-      """WITH o AS (
-           SELECT user_id, ts, value,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                    > INTERVAL 30 MINUTE OR
-                  lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS new_s
-           FROM events),
-         s AS (
-           SELECT user_id, ts, value,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS UNBOUNDED PRECEDING) AS sid
-           FROM o)
-         SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-           strftime(max(ts) + INTERVAL 30 MINUTE,
-             '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-           count(*) AS n_events, (sum(cast(round(value*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS sum_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-
-    "q51_window_analytics" ->
-      """SELECT event_id, user_id,
-           lag(event_type, 1) OVER w AS prev_type,
-           lead(event_type, 1) OVER w AS next_type,
-           CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-           round(percent_rank() OVER w, 4) AS pct_rank
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ORDER BY event_id""",
-
-    "q46_fuzzy_pairs" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-           CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-         FROM customer a JOIN customer b
-           ON a.c_nationkey = b.c_nationkey
-          AND a.c_mktsegment = b.c_mktsegment
-          AND a.c_custkey < b.c_custkey
-         WHERE levenshtein(a.c_name, b.c_name) <= 2
-         ORDER BY 1, 2""",
-
-    "q47_repetition_stats" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         wc AS (SELECT doc_id, w, count(*) AS n FROM w GROUP BY 1,2),
-         ws AS (
-           SELECT doc_id, sum(n) AS tw, max(n) AS topw,
-             sum(CASE WHEN n >= 2 THEN n ELSE 0 END) AS repw
-           FROM wc GROUP BY 1),
-         b AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-             i -> ws[i] || ' ' || ws[i+1])) AS g
-           FROM (SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-             FROM documents)),
-         gc AS (SELECT doc_id, g, count(*) AS n FROM b GROUP BY 1,2),
-         gs AS (SELECT doc_id, sum(n) AS tg, max(n) AS topg
-                FROM gc GROUP BY 1)
-         SELECT ws.doc_id, CAST(tw AS BIGINT) AS n_words,
-           round(CAST(topw AS DOUBLE)/tw, 4) AS top_word_frac,
-           round(CAST(repw AS DOUBLE)/tw, 4) AS repeated_word_frac,
-           round(CAST(topg AS DOUBLE)/tg, 4) AS top_bigram_frac
-         FROM ws JOIN gs ON ws.doc_id = gs.doc_id
-         ORDER BY ws.doc_id""",
-
-    "q48_pii_scrub" ->
-      """WITH base AS (
-           SELECT doc_id,
-             substring(text, 1, 40) || ' mail user' || CAST(doc_id AS VARCHAR)
-               || '@ex-ample.org or visit https://ex.org/p/'
-               || CAST(doc_id AS VARCHAR)
-               || '?q=1 call +33 6 12 34 56 78 done' AS t
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(t,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-             AS n_emails,
-           CAST(len(regexp_extract_all(t, 'https?://[^\s]+')) AS BIGINT)
-             AS n_urls,
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(t,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                 '<EMAIL>', 'g'),
-               'https?://[^\s]+', '<URL>', 'g'),
-             '\+?[0-9][0-9 ]{7,}[0-9]', '<PHONE>', 'g') AS scrubbed
-         FROM base ORDER BY doc_id""",
-
-    "q43_map_funcs" ->
-      """WITH c AS (
-           SELECT user_id, event_type, count(*) AS n
-           FROM events GROUP BY 1,2)
-         SELECT user_id,
-           CAST(count(*) AS INTEGER) AS n_types,
-           CAST(coalesce(sum(n) FILTER (event_type = 'click'), 0) AS BIGINT)
-             AS clicks,
-           CAST(sum(n) AS BIGINT) AS total
-         FROM c GROUP BY 1 ORDER BY user_id""",
-
-    "q44_cube" ->
-      """SELECT coalesce(o_orderpriority, 'ALL') AS prio,
-           coalesce(o_orderstatus, 'ALL') AS status,
-           count(*) AS n, (sum(cast(round(o_totalprice*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS total,
-           CAST(GROUPING(o_orderpriority)*2 + GROUPING(o_orderstatus)
-             AS BIGINT) AS gid
-         FROM orders
-         GROUP BY CUBE (o_orderpriority, o_orderstatus)
-         ORDER BY gid, prio, status""",
-
-    "q45_range_window" ->
-      """SELECT event_id, user_id,
-           round(sum(value) OVER (PARTITION BY user_id
-             ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 2)
-             AS hour_sum
-         FROM events ORDER BY event_id""",
-
-    "q41_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-           coalesce(l_linestatus, 'ALL') AS status,
-           round(sum(l_quantity), 2) AS sum_qty, count(*) AS n,
-           CAST(GROUPING(l_returnflag)*2 + GROUPING(l_linestatus) AS BIGINT)
-             AS gid
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                 (l_returnflag), ())
-         ORDER BY gid, flag, status""",
-
-    "q42_median_mode" ->
-      """WITH md AS (
-           SELECT l_returnflag, round(median(l_quantity),4) AS med_qty,
-                  round(median(l_extendedprice),3) AS med_price
-           FROM lineitem GROUP BY 1),
-         c AS (
-           SELECT l_returnflag, l_quantity AS v, count(*) AS c
-           FROM lineitem GROUP BY 1,2),
-         r AS (
-           SELECT l_returnflag, v,
-             row_number() OVER (PARTITION BY l_returnflag
-               ORDER BY c DESC, v ASC) AS rn
-           FROM c)
-         SELECT md.l_returnflag, md.med_qty, md.med_price, r.v AS mode_qty
-         FROM md JOIN r ON md.l_returnflag = r.l_returnflag AND r.rn = 1
-         ORDER BY 1""",
-
-    "q30_topk_per_group" ->
-      """SELECT o_orderpriority, o_orderkey, round(o_totalprice,2) AS total,
-           CAST(rk AS BIGINT) AS rk
-         FROM (
-           SELECT o_orderpriority, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey) AS rk
-           FROM orders)
-         WHERE rk <= 3 ORDER BY o_orderpriority, rk""",
-
-    "q31_embedding_lsh" ->
-      """SELECT vec_id,
-           CAST(list_sum(list_transform(range(0,4), p ->
-             CASE WHEN list_sum(list_transform(range(1,65), i ->
-               CAST(embedding[i] AS DOUBLE) *
-               ((((('0x' || substring(md5(CAST(p AS VARCHAR) || '_'
-                     || CAST(i-1 AS VARCHAR)),1,12))::BIGINT) % 1000)
-                 / 500.0) - 1.0))) >= 0
-             THEN (1::BIGINT << p) ELSE 0 END)) AS INTEGER) AS bucket
-         FROM embeddings ORDER BY vec_id""",
-
-    "q33_asof_join" ->
-      """SELECT p.event_id,
-           strftime((SELECT max(c.ts) FROM events c
-                     WHERE c.user_id = p.user_id
-                       AND c.event_type = 'click' AND c.ts <= p.ts),
-                    '%Y-%m-%d %H:%M:%S.%f') AS asof_ts
-         FROM events p WHERE p.event_type = 'purchase'
-         ORDER BY p.event_id""",
-
-    "q37_asof_native" ->
-      """SELECT p.event_id,
-           strftime((SELECT max(c.ts) FROM events c
-                     WHERE c.user_id = p.user_id
-                       AND c.event_type = 'click' AND c.ts <= p.ts),
-                    '%Y-%m-%d %H:%M:%S.%f') AS asof_ts
-         FROM events p WHERE p.event_type = 'purchase'
-         ORDER BY p.event_id""",
-
-    "q34_pivot" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-           count(*) FILTER (event_type = 'click') AS click,
-           count(*) FILTER (event_type = 'view') AS view,
-           count(*) FILTER (event_type = 'purchase') AS purchase,
-           count(*) FILTER (event_type = 'signup') AS signup,
-           count(*) FILTER (event_type = 'error') AS error
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q35_hash_split" ->
-      """WITH b AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || CAST(doc_id AS VARCHAR)
-               || 'exp1'), 1, 12))::BIGINT % 100 AS bucket
-           FROM documents)
-         SELECT doc_id, bucket,
-           CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'val'
-                ELSE 'test' END AS split
-         FROM b ORDER BY doc_id""",
-
-    "q36_stratified_counts" ->
-      """WITH b AS (
-           SELECT lang,
-             ('0x' || substring(md5('0:' || CAST(doc_id AS VARCHAR)
-               || 'exp1'), 1, 12))::BIGINT % 100 AS bucket
-           FROM documents)
-         SELECT lang,
-           CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           count(*) AS n
-         FROM b GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q38_percentiles" ->
-      """SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.5), 4) AS p50_qty,
-           round(quantile_cont(l_extendedprice, 0.9), 2) AS p90_price,
-           round(quantile_cont(l_discount, 0.25), 4) AS p25_disc
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    "q39_array_stats" ->
-      """SELECT vec_id,
-           CAST(len(embedding) AS BIGINT) AS dims,
-           round(list_min(list_transform(embedding, x -> CAST(x AS DOUBLE))), 4)
-             + 0.0 AS vmin,
-           round(list_max(list_transform(embedding, x -> CAST(x AS DOUBLE))), 4)
-             + 0.0 AS vmax,
-           round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-             / len(embedding), 4) + 0.0 AS vmean
-         FROM embeddings ORDER BY vec_id""",
-
-    "q32_agg_firstby" ->
-      """SELECT c_nationkey, c_mktsegment,
-           min(c_custkey) AS first_key,
-           arg_min(c_name, c_custkey) AS first_name,
-           arg_min(c_acctbal, c_custkey) AS first_bal
-         FROM customer GROUP BY 1,2 ORDER BY 1,2""",
-
-    // The bloom filter is exact-in-result (no false negatives), so the
-    // oracle is the PLAIN join — any pruning bug shows as a hash miss.
-    "q54_bloom_join" ->
-      """SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-           count(*) AS n_items,
-           (((sum(cast(round(l_extendedprice*100) as bigint) *
-              (100 - cast(round(l_discount*100) as bigint)))::BIGINT + 50)
-            // 100))::DOUBLE / 100.0 AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 200000
-         GROUP BY 1 ORDER BY 1""",
-
-    "q55_salted_join" ->
-      """SELECT c_nationkey, count(*) AS n_orders,
-           (sum(cast(round(o_totalprice*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS total
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1 ORDER BY 1""",
-
-    "q56_chunk_dedup" ->
-      """WITH w AS (
-           SELECT doc_id,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w,
-             generate_subscripts(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' '), 1) - 1
-               AS pos
-           FROM documents),
-         ch AS (
-           SELECT doc_id, pos // 5 AS chunk_id,
-             string_agg(w, ' ' ORDER BY pos) AS chunk
-           FROM w GROUP BY 1, 2),
-         r AS (
-           SELECT *, row_number() OVER (PARTITION BY chunk
-             ORDER BY doc_id, chunk_id) AS rn
-           FROM ch)
-         SELECT doc_id, count(*) AS n_chunks,
-           CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           coalesce(string_agg(CASE WHEN rn = 1 THEN chunk END, ' '
-             ORDER BY chunk_id), '') AS clean_text
-         FROM r GROUP BY doc_id ORDER BY doc_id""",
-
-    "q57_session_dynamic_gap" ->
-      """WITH g AS (
-           SELECT user_id, ts, value,
-             CASE WHEN event_type = 'purchase' THEN INTERVAL 60 MINUTE
-                  ELSE INTERVAL 30 MINUTE END AS gap
-           FROM events),
-         o AS (
-           SELECT user_id, ts, value, ts + gap AS we,
-             max(ts + gap) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-           FROM g),
-         s AS (
-           SELECT *, CASE WHEN pme IS NULL OR ts > pme THEN 1 ELSE 0 END
-             AS new_s
-           FROM o),
-         i AS (
-           SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             ROWS UNBOUNDED PRECEDING) AS sid
-           FROM s)
-         SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-           strftime(max(we), '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-           count(*) AS n_events, (sum(cast(round(value*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS sum_value
-         FROM i GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-
-    // the naive theta join — affordable for DuckDB at oracle scale; the
-    // engine side must produce the identical result via bucketing
-    "q58_range_join" ->
-      """SELECT o_orderkey, count(*) AS n_pts,
-           round(sum(l_quantity), 2) AS sum_qty
-         FROM orders o JOIN lineitem l
-           ON l.l_shipdate >= o.o_orderdate
-          AND l.l_shipdate < o.o_orderdate + INTERVAL 3 DAY
-         WHERE o.o_orderkey % 100 = 0
-         GROUP BY 1 ORDER BY 1""",
-
-    "q59_topk_udaf" ->
-      """SELECT o_orderpriority,
-           array_to_string(list_transform(list_slice(
-             list_sort(list({'s': -o_totalprice, 'k': o_orderkey})), 1, 3),
-             x -> x.k), ',') AS top_keys
-         FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "q60_stratified_sample" ->
-      """WITH h AS (
-           SELECT doc_id, lang,
-             ('0x' || substring(md5('0:exp1:' || CAST(doc_id AS VARCHAR)),
-               1, 12))::BIGINT AS hk
-           FROM documents),
-         r AS (
-           SELECT doc_id, lang,
-             row_number() OVER (PARTITION BY lang ORDER BY hk, doc_id) AS rk
-           FROM h)
-         SELECT doc_id, lang FROM r WHERE rk <= 5
-         ORDER BY lang, doc_id""",
-
-    // closed forms of the synthesized square-wave WAV (see audioPipeline)
-    "q61_multimodal_audio" ->
-      """SELECT doc_id,
-           CAST(44 + 2 * (100 + (doc_id % 50) * 2) AS BIGINT) AS n_bytes,
-           CAST(8000 + (doc_id % 4) * 4000 AS INTEGER) AS sample_rate,
-           CAST(1 AS INTEGER) AS channels,
-           CAST(100 + (doc_id % 50) * 2 AS BIGINT) AS n_frames,
-           round(CAST(500 + doc_id % 1000 AS DOUBLE), 4) AS rms
-         FROM documents ORDER BY doc_id""",
-
-    "q62_sql_exists" ->
-      """SELECT c_custkey, c_name FROM customer c
-         WHERE NOT EXISTS (
-           SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey
-             AND o.o_orderpriority = '1-URGENT'
-             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-         ORDER BY c_custkey""",
-
-    "q63_ignore_nulls" ->
-      """SELECT event_id, user_id,
-           round(last_value(CASE WHEN event_type = 'purchase' THEN value END
-             IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-             AS last_purchase,
-           round(lag(CASE WHEN event_type = 'purchase' THEN value END
-             IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-             2) AS prev_purchase
-         FROM events ORDER BY event_id""",
-
-    "q64_listagg" ->
-      """SELECT c_nationkey,
-           string_agg(c_name, ',' ORDER BY c_custkey) AS names,
-           count(*) AS n
-         FROM customer WHERE c_acctbal < -700
-         GROUP BY c_nationkey ORDER BY c_nationkey""",
-
-    "q65_range_join_rule" ->
-      """SELECT o_orderkey, count(*) AS n_pts,
-           round(sum(l_quantity), 2) AS sum_qty
-         FROM orders o JOIN lineitem l
-           ON l.l_shipdate >= o.o_orderdate
-          AND l.l_shipdate < o.o_orderdate + INTERVAL 3 DAY
-         WHERE o.o_orderkey % 100 = 0
-         GROUP BY 1 ORDER BY 1""",
-
-    "q66_zorder" ->
-      """SELECT c_custkey,
-           CAST(list_sum(list_transform(range(0, 8), i ->
-             (((c_nationkey >> i) & 1) << (2*i)) +
-             ((((c_custkey % 32) >> i) & 1) << (2*i + 1)))) AS BIGINT) AS z
-         FROM customer ORDER BY c_custkey""",
-
-    "q67_interval_join" ->
-      """SELECT c.event_id AS click_id, p.event_id AS buy_id
-         FROM events c JOIN events p
-           ON c.user_id = p.user_id
-          AND c.event_type = 'click' AND p.event_type = 'purchase'
-          AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-         ORDER BY 1, 2""",
-
-    "q68_decontamination" ->
-      """WITH norm AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             range(1, greatest(len(ws) - 1, 1)),
-             i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS s
-           FROM norm WHERE len(ws) >= 3),
-         ev AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0),
-         tr AS (SELECT * FROM sh WHERE doc_id % 97 <> 0)
-         SELECT tr.doc_id, count(*) AS n_shared
-         FROM tr JOIN ev USING (s)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q69_domain_mix" ->
-      """SELECT doc_id, source FROM documents
-         WHERE ('0x' || substring(md5('0:' || CAST(doc_id AS VARCHAR)
-             || 'mix1'), 1, 12))::BIGINT % 100 <
-           CASE source WHEN 'src0' THEN 10 WHEN 'src1' THEN 25
-                       WHEN 'src2' THEN 50 ELSE 80 END
-         ORDER BY doc_id""",
-
-    // closed form: chains within each decade of doc ids, so the
-    // component representative is the decade floor (nodes that appear
-    // in any edge = all docs, since every decade chains 0..9)
-    "q70_connected_components" ->
-      """SELECT doc_id, (doc_id // 10) * 10 AS component
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q96_cc_star" ->
-      """SELECT doc_id, (doc_id // 10) * 10 AS component
-         FROM documents
-         ORDER BY doc_id""",
-
-    // Replays the prefix blocking, the maxBlock=64 hot-block cap, the
-    // ±20 length band, and the ≤20 distance cut with DuckDB's own
-    // levenshtein (integer result — engine-independent).
-    "q97_edit_distance" ->
-      """WITH base AS (
-           SELECT doc_id, text, substr(text, 1, 16) AS blk,
-                  length(text) AS len
-           FROM documents),
-         kept AS (
-           SELECT blk FROM base GROUP BY blk HAVING count(*) <= 64),
-         blocked AS (SELECT base.* FROM base JOIN kept USING (blk))
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                levenshtein(a.text, b.text) AS edit_dist
-         FROM blocked a JOIN blocked b USING (blk)
-         WHERE a.doc_id < b.doc_id AND abs(a.len - b.len) <= 20
-           AND levenshtein(a.text, b.text) <= 20
-         ORDER BY id_a, id_b""",
-
-    // Same count model, same smoothing arithmetic (every float op cast
-    // to DOUBLE so DuckDB cannot fold the 0.5 literal in DECIMAL), same
-    // sorted-fold per-doc mean as the Spark side.
-    "q98_bigram_lm" ->
-      """WITH ws AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         bg AS (
-           SELECT doc_id, i, ws[i] AS w1, ws[i+1] AS w2
-           FROM ws, unnest(range(1, len(ws))) AS t(i)),
-         uni AS (
-           SELECT w1, count(*) AS uc
-           FROM (SELECT unnest(ws) AS w1 FROM ws) GROUP BY 1),
-         bc AS (SELECT w1, w2, count(*) AS bc FROM bg GROUP BY 1, 2),
-         v AS (SELECT count(*) AS v FROM uni),
-         nll AS (
-           SELECT doc_id, i % 4096 AS b,
-             -ln((bc::DOUBLE + 0.5::DOUBLE) /
-                 (uc::DOUBLE + 0.5::DOUBLE * v::DOUBLE)) AS nll
-           FROM bg JOIN bc USING (w1, w2) JOIN uni USING (w1) CROSS JOIN v),
-         l1 AS (
-           SELECT doc_id, b, count(*) AS n1,
-             list_sum(list_sort(list(nll))) AS sb
-           FROM nll GROUP BY 1, 2)
-         SELECT doc_id,
-           round(list_sum(list_sort(list(sb))) / sum(n1), 4)
-             AS mean_bigram_nll,
-           sum(n1)::BIGINT AS n_bigrams
-         FROM l1 GROUP BY doc_id ORDER BY doc_id""",
-
-    // Epoch-aligned 5-minute grid replayed with integer second
-    // arithmetic (floor BEFORE the bigint cast — a .999999 fraction
-    // must truncate, not round, or boundary events jump buckets);
-    // NTZ timestamp arithmetic so no session-timezone dependence.
-    "q99_sliding_window" ->
-      """WITH w AS (
-           SELECT TIMESTAMP '1970-01-01 00:00:00' +
-               ((floor(epoch(ts))::BIGINT // 300) * 300 - k * 300)
-                 * INTERVAL 1 SECOND AS ws,
-             value
-           FROM events, unnest([0, 1]) AS t(k))
-         SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS wstart,
-           strftime(ws + INTERVAL 10 MINUTE, '%Y-%m-%d %H:%M:%S') AS wend,
-           count(*) AS n, (sum(cast(round(value*100) as bigint))::BIGINT)::DOUBLE / 100.0 AS sum_value
-         FROM w GROUP BY 1, 2 ORDER BY 1""",
-
-    // Same double sequence: float→double is exact, 127 is exact, round
-    // is half-away-from-zero in both engines. Codes serialized to CSV so
-    // the gate hashes scalars (see the Spark side).
-    "q100_quantize_int8" ->
-      """WITH s AS (
-           SELECT vec_id, embedding,
-             list_max(list_transform(embedding,
-               x -> abs(x::DOUBLE))) AS scale
-           FROM embeddings)
-         SELECT vec_id,
-           array_to_string(
-             CASE WHEN scale = 0
-               THEN list_transform(embedding, x -> 0)
-               ELSE list_transform(embedding, x -> greatest(-127, least(127,
-                 CAST(round(x::DOUBLE * 127.0 / scale) AS INTEGER))))
-             END, ',') AS codes_csv,
-           scale
-         FROM s ORDER BY vec_id""",
-
-    "q101_lateral_topk" ->
-      """SELECT n.n_name, t.c_custkey, t.bal
-         FROM nation n,
-         LATERAL (
-           SELECT c_custkey, round(c_acctbal, 2) AS bal
-           FROM customer c
-           WHERE c.c_nationkey = n.n_nationkey
-           ORDER BY c_acctbal DESC, c_custkey
-           LIMIT 2
-         ) t
-         ORDER BY n.n_name, t.bal DESC, t.c_custkey""",
-
-    "q102_jaro_winkler" ->
-      """SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
-           CAST(round(jaro_winkler_similarity(a.p_name, b.p_name) * 1000000)
-             AS BIGINT) AS jw_micro
-         FROM part a JOIN part b
-           ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-         WHERE jaro_winkler_similarity(a.p_name, b.p_name) > 0.875
-         ORDER BY key_a, key_b""",
-
-    // 1-based starts here vs 0-based in Spark — positions never leave
-    // the interval arithmetic, which is translation-invariant.
-    "q103_dup_spans" ->
-      """WITH ws AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS pos,
-             array_to_string(list_slice(ws, i, i + 7), ' ') AS gram
-           FROM ws, unnest(range(1, len(ws) - 6)) AS t(i)),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         d AS (SELECT doc_id, pos FROM g JOIN dup USING (gram)),
-         w AS (
-           SELECT doc_id, pos,
-             CASE WHEN max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                  IS NULL
-               OR pos > max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               THEN 1 ELSE 0 END AS nw
-           FROM d),
-         isl AS (
-           SELECT doc_id, pos,
-             sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS UNBOUNDED PRECEDING) AS island
-           FROM w),
-         sp AS (
-           SELECT doc_id, island, min(pos) AS s, max(pos) + 8 AS e
-           FROM isl GROUP BY 1, 2),
-         agg AS (
-           SELECT doc_id, count(*) AS n_dup_spans, sum(e - s) AS dup_tokens
-           FROM sp GROUP BY 1)
-         SELECT ws.doc_id, len(ws) AS n_tokens,
-           coalesce(n_dup_spans, 0) AS n_dup_spans,
-           coalesce(dup_tokens, 0)::BIGINT AS dup_tokens,
-           round(coalesce(dup_tokens, 0)::DOUBLE / len(ws)::DOUBLE, 4)
-             AS dup_frac
-         FROM ws LEFT JOIN agg USING (doc_id) ORDER BY ws.doc_id""",
-
-    "q104_snapshot_diff" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_orderstatus,
-             round(o_totalprice, 2) AS o_totalprice
-           FROM orders WHERE o_orderkey % 3 <> 0),
-         v2 AS (
-           SELECT o_orderkey, o_orderstatus,
-             round(CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice * 2
-                        ELSE o_totalprice END, 2) AS o_totalprice
-           FROM orders WHERE o_orderkey % 4 <> 0),
-         d AS (
-           SELECT coalesce(v1.o_orderkey, v2.o_orderkey) AS o_orderkey,
-             CASE WHEN v1.o_orderkey IS NULL THEN 'insert'
-                  WHEN v2.o_orderkey IS NULL THEN 'delete'
-                  WHEN v1.o_orderstatus IS DISTINCT FROM v2.o_orderstatus
-                    OR v1.o_totalprice IS DISTINCT FROM v2.o_totalprice
-                    THEN 'update'
-                  ELSE 'unchanged' END AS change_type,
-             v1.o_orderstatus AS old_o_orderstatus,
-             v2.o_orderstatus AS new_o_orderstatus,
-             v1.o_totalprice AS old_o_totalprice,
-             v2.o_totalprice AS new_o_totalprice
-           FROM v1 FULL JOIN v2 ON v1.o_orderkey = v2.o_orderkey)
-         SELECT * FROM d WHERE change_type <> 'unchanged'
-         ORDER BY o_orderkey""",
-
-    "q105_quality_classifier" ->
-      """WITH tok AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || unnest(string_split(
-                 lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))),
-               1, 12))::BIGINT AS h
-           FROM documents),
-         w AS (
-           SELECT doc_id, ((h % 2001 - 1000)::DOUBLE / 1000.0) AS w,
-             h % 4096 AS b
-           FROM tok),
-         l1 AS (
-           SELECT doc_id, b, count(*) AS n1,
-             list_sum(list_sort(list(w))) AS sb
-           FROM w GROUP BY 1, 2),
-         l AS (
-           SELECT doc_id, sum(n1)::BIGINT AS n_tokens,
-             list_sum(list_sort(list(sb))) / sum(n1) AS logit
-           FROM l1 GROUP BY doc_id)
-         SELECT doc_id, n_tokens,
-           round(1.0::DOUBLE / (1.0::DOUBLE + exp(-logit)), 4) AS score,
-           CASE WHEN logit > 0.0 THEN 'keep' ELSE 'drop' END AS label
-         FROM l ORDER BY doc_id""",
-
-    "q106_markov_transitions" ->
-      """WITH tr AS (
-           SELECT event_type AS src,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS dst
-           FROM events),
-         c AS (
-           SELECT src, dst, count(*) AS n
-           FROM tr WHERE dst IS NOT NULL GROUP BY 1, 2)
-         SELECT src, dst, n,
-           round(n::DOUBLE / (sum(n) OVER (PARTITION BY src))::DOUBLE, 4)
-             AS p
-         FROM c ORDER BY src, dst""",
-
-    "q107_decile_binning" ->
-      """WITH b AS (
-           SELECT quantile_cont(o_totalprice,
-             [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-           FROM orders),
-         a AS (
-           SELECT o_totalprice,
-             1 + len(list_filter(bs, x -> o_totalprice > x)) AS decile
-           FROM orders, b)
-         SELECT decile, count(*) AS n,
-           round(min(o_totalprice), 2) AS lo,
-           round(max(o_totalprice), 2) AS hi
-         FROM a GROUP BY 1 ORDER BY 1""",
-
-    "q108_entity_resolution" ->
-      """WITH RECURSIVE j AS (
-           SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
-           FROM part a JOIN part b
-             ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-           WHERE jaro_winkler_similarity(a.p_name, b.p_name) > 0.9375),
-         e AS (SELECT id_a AS s, id_b AS d FROM j
-               UNION ALL SELECT id_b, id_a FROM j),
-         reach(node, r) AS (
-           SELECT p_partkey, p_partkey FROM part
-           UNION
-           SELECT e.d, reach.r FROM reach JOIN e ON e.s = reach.node),
-         ent AS (
-           SELECT node AS p_partkey, min(r) AS entity_id
-           FROM reach GROUP BY node)
-         SELECT ent.p_partkey, ent.entity_id,
-           c.p_name AS canonical_name,
-           CAST(ent.p_partkey = ent.entity_id AS BIGINT) AS is_canonical
-         FROM ent JOIN part c ON c.p_partkey = ent.entity_id
-         ORDER BY ent.p_partkey""",
-
-    // Direct recompute of the v2 aggregate — the maintained form must
-    // equal this exactly (integer cents, no float retraction drift).
-    "q109_incremental_agg" ->
-      """SELECT o_orderpriority, count(*) AS n,
-           sum(round(CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice * 2
-                          ELSE o_totalprice END * 100)::BIGINT)::BIGINT
-             AS sum_cents
-         FROM orders WHERE o_orderkey % 4 <> 0
-         GROUP BY 1 ORDER BY 1""",
-
-    // The merge table is re-derived exactly as q90's oracle derives it
-    // (count desc, pair asc, LIMIT 10, ranked), then applied rank by
-    // rank in a recursive CTE over the distinct vocabulary: chr(31)
-    // boundary markers make each merge one literal replace, identical
-    // to the Spark side's folded replaces.
-    "q110_bpe_encode" ->
-      """WITH RECURSIVE m AS (
-           SELECT string_split(pair, ' ')[1] AS a,
-                  string_split(pair, ' ')[2] AS b,
-                  row_number() OVER (ORDER BY cnt DESC, pair) AS r
-           FROM (
-             SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-               SELECT freq, unnest(list_transform(range(1, length(w)),
-                 i -> substring(w, i, 1) || ' ' || substring(w, i + 1, 1)))
-                 AS pair
-               FROM (
-                 SELECT w, count(*) AS freq FROM (
-                   SELECT unnest(string_split(
-                     lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))
-                     AS w
-                   FROM documents)
-                 WHERE length(w) >= 2 GROUP BY 1))
-             GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 10)),
-         wd AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         wdne AS (SELECT doc_id, w FROM wd WHERE w <> ''),
-         v0 AS (
-           SELECT DISTINCT w,
-             regexp_replace(w, '(.)', chr(31) || '\1' || chr(31), 'g') AS s
-           FROM wdne),
-         enc(w, s, r) AS (
-           SELECT w, s, 0 FROM v0
-           UNION ALL
-           SELECT enc.w,
-             replace(enc.s, chr(31) || m.a || chr(31) || chr(31) || m.b
-               || chr(31), chr(31) || m.a || m.b || chr(31)),
-             enc.r + 1
-           FROM enc JOIN m ON m.r = enc.r + 1),
-         fin AS (
-           SELECT w, (length(s) - length(replace(s, chr(31), ''))) // 2
-             AS nt
-           FROM enc WHERE r = 10)
-         SELECT doc_id, count(*) AS n_words,
-           sum(nt)::BIGINT AS n_bpe_tokens
-         FROM wdne JOIN fin USING (w)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q111_dq_audit" ->
-      """SELECT * FROM (
-           SELECT 'row_count' AS check, count(*)::BIGINT AS value,
-             (count(*) > 0)::BIGINT AS passed FROM orders
-           UNION ALL
-           SELECT 'orderkey_nulls',
-             sum((o_orderkey IS NULL)::BIGINT)::BIGINT,
-             (sum((o_orderkey IS NULL)::BIGINT) = 0)::BIGINT FROM orders
-           UNION ALL
-           SELECT 'orderkey_dupes',
-             (count(o_orderkey) - count(DISTINCT o_orderkey))::BIGINT,
-             (count(o_orderkey) = count(DISTINCT o_orderkey))::BIGINT
-           FROM orders
-           UNION ALL
-           SELECT 'negative_totalprice',
-             sum((o_totalprice < 0)::BIGINT)::BIGINT,
-             (sum((o_totalprice < 0)::BIGINT) = 0)::BIGINT FROM orders
-           UNION ALL
-           SELECT 'bad_status',
-             sum((o_orderstatus NOT IN ('F','O','P'))::BIGINT)::BIGINT,
-             (sum((o_orderstatus NOT IN ('F','O','P'))::BIGINT) = 0)::BIGINT
-           FROM orders
-           UNION ALL
-           SELECT 'orphan_custkeys', count(*)::BIGINT,
-             (count(*) = 0)::BIGINT
-           FROM orders o WHERE NOT EXISTS (
-             SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-         ORDER BY "check"""",
-
-    "q112_rank_functions" ->
-      """SELECT o_orderkey, o_orderpriority,
-           round(percent_rank() OVER w, 6) AS pr,
-           round(cume_dist() OVER w, 6) AS cd,
-           ntile(7) OVER w AS bucket7
-         FROM orders
-         WINDOW w AS (PARTITION BY o_orderpriority
-           ORDER BY o_totalprice, o_orderkey)
-         ORDER BY o_orderkey""",
-
-    "q113_hll_merge" ->
-      """WITH h AS (
-           SELECT event_type, ('0x' || substring(md5('0:'
-             || CAST(user_id AS VARCHAR)), 1, 12))::BIGINT AS h
-           FROM events),
-         rk AS (
-           SELECT event_type, h % 64 AS bucket,
-             CASE WHEN h // 64 = 0 THEN 43
-                  ELSE 43 - length(format('{:b}', h // 64)) END AS rank
-           FROM h),
-         reg AS (SELECT event_type AS source, bucket, max(rank) AS mx
-                 FROM rk GROUP BY 1, 2),
-         allreg AS (
-           SELECT source, bucket, mx FROM reg
-           UNION ALL
-           SELECT '__MERGED__', bucket, max(mx) FROM reg GROUP BY 2),
-         s AS (SELECT source, CAST(count(*) AS BIGINT) AS nz,
-                 list_sum(list_sort(list(
-                   power(CAST(2 AS DOUBLE), -mx)))) AS s
-               FROM allreg GROUP BY 1),
-         e AS (SELECT source, nz, s + (CAST(64 AS DOUBLE) - nz) AS st,
-                 64 - nz AS v FROM s),
-         raw AS (SELECT source, nz, v,
-                   CAST(0.709 AS DOUBLE) * CAST(64 AS DOUBLE)
-                     * CAST(64 AS DOUBLE) / st AS eraw
-                 FROM e)
-         SELECT source,
-           round(CASE WHEN eraw <= CAST(160 AS DOUBLE) AND v > 0
-             THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE) / v)
-             ELSE eraw END, 4) AS est_distinct,
-           nz AS nonzero_buckets
-         FROM raw ORDER BY source""",
-
-    "q114_shipping_priority" ->
-      """WITH r AS (
-           SELECT l.l_orderkey,
-             strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-             l.l_extendedprice * (1 - l.l_discount) AS rev
-           FROM lineitem l
-           JOIN orders o ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           WHERE c.c_mktsegment = 'BUILDING'
-             AND o.o_orderdate::DATE < DATE '1998-06-01'
-             AND l.l_shipdate::DATE > DATE '1998-06-01')
-         SELECT l_orderkey, orderdate,
-           round(list_sum(list_sort(list(rev))), 2) AS revenue
-         FROM r GROUP BY 1, 2
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-
-    // Exact decimal arithmetic end-to-end (scale-4 product of 2dp
-    // values, associative decimal sum, no rounding anywhere) — both
-    // engines print the identical scale-4 string.
-    "q115_local_supplier_volume" ->
-      """WITH r AS (
-           SELECT n.n_name,
-             l.l_extendedprice::DECIMAL(18,2)
-               * (1 - l.l_discount::DECIMAL(3,2)) AS rev
-           FROM lineitem l
-           JOIN orders o ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                          AND s.s_nationkey = c.c_nationkey
-           JOIN nation n ON s.s_nationkey = n.n_nationkey
-           JOIN region rg ON n.n_regionkey = rg.r_regionkey
-           WHERE rg.r_name = 'ASIA'
-             AND o.o_orderdate::DATE >= DATE '1997-01-01'
-             AND o.o_orderdate::DATE < DATE '1999-01-01')
-         SELECT n_name,
-           CAST(CAST(sum(rev) AS DECIMAL(38,4)) AS VARCHAR) AS revenue
-         FROM r GROUP BY 1 ORDER BY n_name""",
-
-    // Statically-unrolled train iterations (generated by
-    // bpeTrainOracle): count pairs over the delimited vocab, argmax
-    // (cnt desc, pair asc), literal-replace the winner, recount —
-    // merged tokens can win later ranks.
-    "q116_bpe_train" -> bpeTrainOracle(8),
-
-    "q117_kmv_jaccard" ->
-      """WITH a AS (
-           SELECT DISTINCT ('0x' || substring(md5('0:'
-             || CAST(user_id AS VARCHAR)), 1, 12))::BIGINT AS h
-           FROM events WHERE event_type = 'click' AND value > 80),
-         b AS (
-           SELECT DISTINCT ('0x' || substring(md5('0:'
-             || CAST(user_id AS VARCHAR)), 1, 12))::BIGINT AS h
-           FROM events WHERE event_type = 'purchase' AND value > 80),
-         ka AS (SELECT h FROM a ORDER BY h LIMIT 64),
-         kb AS (SELECT h FROM b ORDER BY h LIMIT 64),
-         u AS (SELECT DISTINCT h FROM
-                 (SELECT h FROM ka UNION ALL SELECT h FROM kb)
-               ORDER BY h LIMIT 64),
-         f AS (
-           SELECT count(*)::BIGINT AS usz,
-             sum((ka.h IS NOT NULL AND kb.h IS NOT NULL)::BIGINT)::BIGINT
-               AS inboth
-           FROM u LEFT JOIN ka ON u.h = ka.h LEFT JOIN kb ON u.h = kb.h),
-         ex AS (
-           SELECT
-             sum((A.x IS NOT NULL AND B.x IS NOT NULL)::BIGINT)::BIGINT
-               AS ei,
-             count(*)::BIGINT AS eu
-           FROM (SELECT DISTINCT CAST(user_id AS VARCHAR) AS x
-                 FROM events WHERE event_type = 'click' AND value > 80) A
-           FULL JOIN (SELECT DISTINCT CAST(user_id AS VARCHAR) AS x
-                 FROM events WHERE event_type = 'purchase' AND value > 80) B
-             ON A.x = B.x)
-         SELECT 64 AS sketch_k, usz AS union_sketch_size,
-           inboth AS in_both,
-           round(inboth::DOUBLE / usz::DOUBLE, 4) AS j_est,
-           ei AS exact_inter, eu AS exact_union,
-           round(ei::DOUBLE / eu::DOUBLE, 4) AS j_exact
-         FROM f, ex""",
-
-    "q118_stemming" ->
-      """SELECT stem, count(*)::BIGINT AS n FROM (
-           SELECT regexp_replace(
-                    regexp_replace(
-                      regexp_replace(
-                        regexp_replace(w, 'sses$', 'ss'),
-                        'ies$', 'i'),
-                      '([a-z]{2,})ing$', '\1'),
-                    '([a-z]{2,}[^s])s$', '\1') AS stem
-           FROM (SELECT unnest(string_split(
-                   lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))
-                   AS w
-                 FROM documents)
-           WHERE w <> '')
-         GROUP BY 1 ORDER BY n DESC, stem LIMIT 50""",
-
-    // Two-level fold mirroring Spark: per-(type, event_id%4096) sorted
-    // folds, then a sorted fold of the subtotals — bounded buffers,
-    // order a pure function of the value multiset.
-    "q119_anomaly_zscore" ->
-      """WITH l1 AS (
-           SELECT event_type, event_id % 4096 AS b, count(*) AS n1,
-             list_sum(list_sort(list(value))) AS sx1,
-             list_sum(list_sort(list(value * value))) AS sx21
-           FROM events GROUP BY 1, 2),
-         s AS (
-           SELECT event_type, CAST(sum(n1) AS BIGINT) AS n,
-             list_sum(list_sort(list(sx1))) AS sx,
-             list_sum(list_sort(list(sx21))) AS sx2
-           FROM l1 GROUP BY 1),
-         st AS (
-           SELECT event_type, n, sx / n AS mean,
-             sqrt((sx2 - sx * sx / n) / (n - 1)) AS std
-           FROM s)
-         SELECT e.event_type, max(st.n) AS n,
-           round(max(st.mean), 4) AS mean,
-           round(max(st.std), 4) AS std,
-           sum((abs(e.value - st.mean) > 2.0::DOUBLE * st.std)::BIGINT)
-             ::BIGINT AS n_outliers
-         FROM events e JOIN st ON e.event_type = st.event_type
-         GROUP BY 1 ORDER BY 1""",
-
-    "q120_imputation" ->
-      """WITH ev AS (
-           SELECT event_id, event_type,
-             CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-           FROM events),
-         l1 AS (
-           SELECT event_type, event_id % 4096 AS b,
-             list_sum(list_sort(list(v))) AS s1, count(*) AS n1
-           FROM ev WHERE v IS NOT NULL GROUP BY 1, 2),
-         m AS (
-           SELECT event_type,
-             list_sum(list_sort(list(s1))) / sum(n1) AS gmean
-           FROM l1 GROUP BY 1)
-         SELECT event_id, ev.event_type,
-           (v IS NULL)::BIGINT AS was_imputed,
-           round(coalesce(v, gmean), 2) AS value_filled
-         FROM ev JOIN m ON ev.event_type = m.event_type
-         ORDER BY event_id""",
-
-    "q121_rag_chunking" ->
-      """WITH ws AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         c AS (
-           SELECT doc_id, k AS chunk_idx, k * 48 + 1 AS start_token,
-             list_slice(ws, k * 48 + 1, k * 48 + 64) AS c
-           FROM ws, unnest(range(0, (len(ws) - 1) // 48 + 1)) AS t(k))
-         SELECT doc_id, chunk_idx::BIGINT AS chunk_idx,
-           start_token::BIGINT AS start_token,
-           len(c)::BIGINT AS chunk_tokens,
-           array_to_string(c, ' ') AS chunk_text
-         FROM c ORDER BY doc_id, chunk_idx""",
-
-    "q122_pseudonymize" ->
-      """SELECT 'u_' || substring(md5('salt1:'
-             || CAST(user_id AS VARCHAR)), 1, 16) AS user_pseudo,
-           count(*)::BIGINT AS n_events,
-           count(DISTINCT event_type)::BIGINT AS n_types,
-           round(min(value), 2) AS min_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q123_attribution" ->
-      """WITH c AS (
-           SELECT user_id, event_id AS click_id, ts AS cts
-           FROM events WHERE event_type = 'click'),
-         p AS (
-           SELECT user_id, event_id AS purchase_id, ts AS pts, value
-           FROM events WHERE event_type = 'purchase'),
-         j AS (
-           SELECT p.purchase_id, p.user_id, p.value, c.click_id, c.cts
-           FROM p JOIN c ON p.user_id = c.user_id
-             AND c.cts >= p.pts - INTERVAL 30 MINUTE
-             AND c.cts < p.pts),
-         r AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY purchase_id
-               ORDER BY cts, click_id) AS rn_a,
-             row_number() OVER (PARTITION BY purchase_id
-               ORDER BY cts DESC, click_id DESC) AS rn_d
-           FROM j)
-         SELECT purchase_id, max(user_id) AS user_id,
-           count(*)::BIGINT AS n_clicks,
-           max(CASE WHEN rn_a = 1 THEN click_id END) AS first_click_id,
-           max(CASE WHEN rn_d = 1 THEN click_id END) AS last_click_id,
-           round(max(value) / count(*), 4) AS linear_share
-         FROM r GROUP BY 1 ORDER BY 1""",
-
-    "q124_twap" ->
-      """WITH e AS (
-           SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
-             event_id, value, epoch_us(ts) AS us
-           FROM events),
-         n AS (
-           SELECT *, lead(us) OVER (PARTITION BY user_id, day
-             ORDER BY us, event_id) AS nxt
-           FROM e),
-         d AS (SELECT user_id, day, value, nxt - us AS dt
-               FROM n WHERE nxt IS NOT NULL)
-         SELECT user_id, day, count(*)::BIGINT AS n_intervals,
-           sum(dt)::BIGINT AS total_us,
-           round(list_sum(list_sort(list(value * dt))) /
-             sum(dt)::DOUBLE, 4) AS twap
-         FROM d GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q125_survivorship" ->
-      """WITH s1 AS (
-           SELECT c_custkey, c_name AS n1,
-             CASE WHEN c_custkey % 5 = 0 THEN NULL
-                  ELSE round(c_acctbal, 2) END AS b1,
-             CASE WHEN c_custkey % 2 = 0 THEN NULL
-                  ELSE c_mktsegment END AS m1
-           FROM customer WHERE c_custkey % 3 <> 0),
-         s2 AS (
-           SELECT c_custkey,
-             CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_name END AS n2,
-             round(c_acctbal, 2) AS b2,
-             'OLD_' || c_mktsegment AS m2
-           FROM customer WHERE c_custkey % 4 <> 0),
-         s3 AS (
-           SELECT c_custkey, c_name AS n3, round(c_acctbal, 2) AS b3,
-             c_mktsegment AS m3
-           FROM customer)
-         SELECT coalesce(s1.c_custkey, s2.c_custkey, s3.c_custkey)
-             AS c_custkey,
-           coalesce(n1, n2, n3) AS name,
-           coalesce(b1, b2, b3) AS acctbal,
-           coalesce(m1, m2, m3) AS mktsegment,
-           CASE WHEN m1 IS NOT NULL THEN 1
-                WHEN m2 IS NOT NULL THEN 2 ELSE 3 END AS segment_source
-         FROM s1
-         FULL JOIN s2 ON s1.c_custkey = s2.c_custkey
-         FULL JOIN s3 ON coalesce(s1.c_custkey, s2.c_custkey) = s3.c_custkey
-         ORDER BY c_custkey""",
-
-    // Exact decimal per-nation sum, converted to double at the 25-row
-    // aggregate (numerator < 2^53 → conversion exact on both engines).
-    "q126_pareto" ->
-      """WITH r AS (
-           SELECT n_name, CAST(sum(
-             l_extendedprice::DECIMAL(18,2)
-               * (1 - l_discount::DECIMAL(3,2))) AS DOUBLE) AS rev
-           FROM lineitem l
-           JOIN orders o ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           JOIN nation n ON c.c_nationkey = n.n_nationkey
-           GROUP BY 1)
-         SELECT n_name, round(rev, 2) AS revenue,
-           round(rev / sum(rev) OVER (ORDER BY rev DESC, n_name
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 4)
-             AS share,
-           round(sum(rev) OVER (ORDER BY rev DESC, n_name
-               ROWS UNBOUNDED PRECEDING)
-             / sum(rev) OVER (ORDER BY rev DESC, n_name
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
-             4) AS cum_share,
-           (round(sum(rev) OVER (ORDER BY rev DESC, n_name
-               ROWS UNBOUNDED PRECEDING)
-             / sum(rev) OVER (ORDER BY rev DESC, n_name
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
-             4) <= 0.8::DOUBLE)::BIGINT AS pareto80
-         FROM r ORDER BY revenue DESC, n_name""",
-
-    // Constants appear as the SAME double expressions Spark computes
-    // ((1.2 + 1.0), (1.0 - 0.75)) — not pre-folded literals — so both
-    // engines run the identical IEEE operation sequence.
-    "q74_bm25" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl
-                FROM w GROUP BY 1),
-         consts AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl
-                    FROM dl),
-         tf AS (SELECT doc_id, w, CAST(count(*) AS DOUBLE) AS tf
-                FROM w WHERE w IN ('dup','vector','stream') GROUP BY 1, 2),
-         dfreq AS (SELECT w, CAST(count(*) AS DOUBLE) AS df
-                   FROM tf GROUP BY 1),
-         contrib AS (
-           SELECT doc_id,
-             ln(1.0 + (n - df + 0.5) / (df + 0.5))
-               * (tf * (1.2 + 1.0))
-               / (tf + 1.2 * ((1.0 - 0.75) + 0.75 * (dl / avgdl))) AS c
-           FROM tf JOIN dfreq USING (w) JOIN dl USING (doc_id)
-           CROSS JOIN consts)
-         SELECT doc_id,
-           round(list_sum(list_sort(list(c))), 4) AS score,
-           count(*) AS n_terms
-         FROM contrib GROUP BY doc_id ORDER BY doc_id""",
-
-    "q72_heavy_hitters" ->
-      """WITH n AS (
-           SELECT string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         b AS (
-           SELECT unnest(list_transform(range(1, len(ws)),
-             i -> ws[i] || ' ' || ws[i+1])) AS g
-           FROM n),
-         c AS (SELECT g, count(*) AS cnt FROM b GROUP BY 1),
-         t AS (SELECT CAST(count(*) AS DOUBLE) AS tot FROM b)
-         SELECT g, cnt FROM c, t WHERE cnt >= tot / 1000.0 ORDER BY g""",
-
-    "q73_weighted_sample" ->
-      """WITH p AS (
-           SELECT doc_id, n_chars,
-             ln((('0x' || substring(md5('0:' || CAST(doc_id AS VARCHAR)
-                    || 'w1'), 1, 12))::BIGINT + 0.5) / 281474976710656.0)
-               / CAST(n_chars AS DOUBLE) AS pri
-           FROM documents)
-         SELECT doc_id, n_chars FROM p ORDER BY pri DESC, doc_id LIMIT 25""",
-
-    "q84_kmv_grouped" ->
-      """WITH h AS (
-           SELECT DISTINCT event_type,
-             ('0x' || substring(md5('0:' || CAST(user_id AS VARCHAR)),
-               1, 12))::BIGINT AS h
-           FROM events),
-         r AS (SELECT event_type, h,
-                 row_number() OVER (PARTITION BY event_type ORDER BY h)
-                   AS rn
-               FROM h),
-         s AS (SELECT event_type, count(*) AS n, max(h) AS hk
-               FROM r WHERE rn <= 32 GROUP BY 1)
-         SELECT event_type,
-           CASE WHEN n < 32 THEN CAST(n AS DOUBLE)
-                ELSE round(CAST(31 AS DOUBLE)
-                           * CAST(281474976710656 AS DOUBLE) / hk, 4) END
-             AS est_distinct,
-           n AS k_used
-         FROM s ORDER BY event_type""",
-
-    "q85_feature_hash" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         f AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 32
-               AS bucket,
-             1 - 2 * (('0x' || substring(md5('1:' || w), 1, 12))::BIGINT % 2)
-               AS s
-           FROM w)
-         SELECT doc_id, bucket, CAST(sum(s) AS BIGINT) AS value
-         FROM f GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q86_count_min" ->
-      """WITH w AS (
-           SELECT unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         cells AS (
-           SELECT d,
-             ('0x' || substring(md5(CAST(d AS VARCHAR) || ':' || w),
-               1, 12))::BIGINT % 256 AS bucket,
-             count(*) AS cnt
-           FROM w, unnest([0,1,2,3]) AS t(d)
-           GROUP BY 1, 2),
-         probes AS (SELECT unnest(['dup','vector','stream']) AS w),
-         pb AS (
-           SELECT p.w, d,
-             ('0x' || substring(md5(CAST(d AS VARCHAR) || ':' || p.w),
-               1, 12))::BIGINT % 256 AS bucket
-           FROM probes p, unnest([0,1,2,3]) AS t(d)),
-         est AS (
-           SELECT pb.w, min(coalesce(c.cnt, 0)) AS est
-           FROM pb LEFT JOIN cells c USING (d, bucket) GROUP BY 1),
-         ex AS (SELECT w, count(*) AS exact FROM w GROUP BY 1)
-         SELECT est.w, est.est, coalesce(ex.exact, 0) AS exact
-         FROM est LEFT JOIN ex USING (w) ORDER BY w""",
-
-    "q87_group_centroid" ->
-      """WITH x AS (
-           SELECT label, vec_id % 4096 AS b, i - 1 AS pos,
-             CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)),
-         l1 AS (
-           SELECT label, pos, b,
-             list_sum(list_sort(list(v))) AS s1, count(v) AS n1
-           FROM x GROUP BY 1, 2, 3)
-         SELECT label, pos,
-           round(list_sum(list_sort(list(s1))) / sum(n1), 6) AS centroid
-         FROM l1 GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q88_hll" ->
-      """WITH h AS (
-           SELECT ('0x' || substring(md5('0:' || CAST(user_id AS VARCHAR)),
-             1, 12))::BIGINT AS h
-           FROM events),
-         rk AS (
-           SELECT h % 64 AS bucket,
-             CASE WHEN h // 64 = 0 THEN 43
-                  ELSE 43 - length(format('{:b}', h // 64)) END AS rank
-           FROM h),
-         reg AS (SELECT bucket, max(rank) AS mx FROM rk GROUP BY 1),
-         s AS (SELECT CAST(count(*) AS BIGINT) AS nz,
-                 list_sum(list_sort(list(
-                   power(CAST(2 AS DOUBLE), -mx)))) AS s
-               FROM reg),
-         e AS (SELECT nz, s + (CAST(64 AS DOUBLE) - nz) AS st,
-                 64 - nz AS v FROM s),
-         raw AS (SELECT nz, v,
-                   CAST(0.709 AS DOUBLE) * CAST(64 AS DOUBLE)
-                     * CAST(64 AS DOUBLE) / st AS eraw
-                 FROM e),
-         fin AS (SELECT CASE WHEN eraw <= CAST(160 AS DOUBLE) AND v > 0
-                   THEN CAST(64 AS DOUBLE) * ln(CAST(64 AS DOUBLE) / v)
-                   ELSE eraw END AS est, nz FROM raw),
-         x AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT)
-                 AS exact_distinct FROM events)
-         SELECT round(est, 4) AS est_distinct, nz AS nonzero_buckets,
-           exact_distinct
-         FROM fin, x""",
-
-    "q92_semantic_dedup" ->
-      """WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-                       FROM embeddings WHERE vec_id < 8),
-         nv AS (SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(range(1, len(embedding)+1),
-               i -> CAST(embedding[i] AS DOUBLE)*CAST(embedding[i] AS DOUBLE))))
-               AS nrm
-           FROM embeddings),
-         nc AS (SELECT cid, cv,
-             sqrt(list_sum(list_transform(range(1, len(cv)+1),
-               i -> CAST(cv[i] AS DOUBLE)*CAST(cv[i] AS DOUBLE)))) AS nrm
-           FROM cent),
-         scored AS (
-           SELECT e.vec_id, e.embedding, e.nrm AS enrm, c.cid, round(
-             list_sum(list_transform(range(1, len(e.embedding)+1),
-               i -> CAST(e.embedding[i] AS DOUBLE)*CAST(c.cv[i] AS DOUBLE)))
-             / (e.nrm * c.nrm), 6) AS cs
-           FROM nv e CROSS JOIN nc c),
-         assigned AS (
-           SELECT vec_id, embedding, enrm, cid AS cluster, cs FROM (
-             SELECT *, row_number() OVER (PARTITION BY vec_id
-               ORDER BY cs DESC, cid) AS rn FROM scored)
-           WHERE rn = 1),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY cluster
-             ORDER BY cs DESC, vec_id) AS rn
-           FROM assigned),
-         ex AS (SELECT cluster, vec_id AS eid, embedding AS ev,
-                  enrm AS enrm_e
-                FROM ranked WHERE rn = 1),
-         sim AS (
-           SELECT r.vec_id, r.cluster, r.cs, x.eid, round(
-             list_sum(list_transform(range(1, len(r.embedding)+1),
-               i -> CAST(r.embedding[i] AS DOUBLE)*CAST(x.ev[i] AS DOUBLE)))
-             / (r.enrm * x.enrm_e), 4) AS cos_ex
-           FROM ranked r JOIN ex x USING (cluster))
-         SELECT vec_id, cluster, cs, cos_ex,
-           CAST(CASE WHEN vec_id = eid OR cos_ex < 0.4 THEN 1 ELSE 0 END
-             AS BIGINT) AS keep
-         FROM sim ORDER BY vec_id""",
-
-    "q93_dim_covariance" ->
-      """WITH p AS (
-           SELECT i, j, vec_id % 4096 AS b,
-                  CAST(embedding[i + 1] AS DOUBLE) AS xi,
-                  CAST(embedding[j + 1] AS DOUBLE) AS xj
-           FROM embeddings, unnest(range(0, 8)) AS t1(i),
-                unnest(range(0, 8)) AS t2(j)
-           WHERE j >= i),
-         l1 AS (
-           SELECT i, j, b,
-             list_sum(list_sort(list(xi * xj))) AS sxy1,
-             list_sum(list_sort(list(xi))) AS sx1,
-             list_sum(list_sort(list(xj))) AS sy1,
-             count(*) AS n1
-           FROM p GROUP BY 1, 2, 3),
-         st AS (
-           SELECT i, j,
-             list_sum(list_sort(list(sxy1))) AS sxy,
-             list_sum(list_sort(list(sx1))) AS sx,
-             list_sum(list_sort(list(sy1))) AS sy,
-             CAST(sum(n1) AS DOUBLE) AS n
-           FROM l1 GROUP BY 1, 2)
-         SELECT i, j, round((sxy - sx * sy / n) / n, 6) AS cov
-         FROM st ORDER BY 1, 2""",
-
-    "q94_funnel" ->
-      """WITH s0 AS (SELECT user_id, min(ts) AS t0 FROM events
-                     WHERE event_type = 'view' GROUP BY 1),
-         s1 AS (SELECT e.user_id, min(e.ts) AS t1 FROM events e
-                JOIN s0 USING (user_id)
-                WHERE e.event_type = 'click' AND e.ts > s0.t0
-                  AND e.ts <= s0.t0 + INTERVAL 7200 SECOND GROUP BY 1),
-         s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-                JOIN s1 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts > s1.t1
-                  AND e.ts <= s1.t1 + INTERVAL 7200 SECOND GROUP BY 1)
-         SELECT stage_idx, stage, users FROM (
-           VALUES (0, 'view', (SELECT count(*) FROM s0)),
-                  (1, 'click', (SELECT count(*) FROM s1)),
-                  (2, 'purchase', (SELECT count(*) FROM s2)))
-           AS v(stage_idx, stage, users)
-         ORDER BY stage_idx""",
-
-    "q95_cohort" ->
-      """WITH weekly AS (
-           SELECT DISTINCT user_id,
-             datediff('day', DATE '1970-01-05', CAST(ts AS DATE)) // 7 AS w
-           FROM events),
-         coh AS (SELECT user_id, min(w) AS cw FROM weekly GROUP BY 1)
-         SELECT cw AS cohort_week, w - cw AS week_offset,
-           count(*) AS users
-         FROM weekly JOIN coh USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q90_bpe_pairs" ->
-      """WITH w AS (
-           SELECT unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         v AS (SELECT w, count(*) AS freq FROM w
-               WHERE length(w) >= 2 GROUP BY 1),
-         p AS (
-           SELECT freq, unnest(list_transform(range(1, length(w)),
-             i -> substring(w, i, 1) || ' ' || substring(w, i + 1, 1)))
-             AS pair
-           FROM v)
-         SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt
-         FROM p GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 30""",
-
-    "q91_knn_join" ->
-      """WITH banded AS (
-           SELECT vec_id,
-             unnest(list_transform(range(0,8), t ->
-               CAST(t AS VARCHAR) || ':' ||
-               CAST(CAST(list_sum(list_transform(range(0,4), p ->
-                 CASE WHEN list_sum(list_transform(range(1,65), i ->
-                   CAST(embedding[i] AS DOUBLE) *
-                   ((((('0x' || substring(md5(CAST(t*4+p AS VARCHAR) || '_'
-                         || CAST(i-1 AS VARCHAR)),1,12))::BIGINT) % 1000)
-                     / 500.0) - 1.0))) >= 0
-                 THEN (1::BIGINT << p) ELSE 0 END)) AS BIGINT) AS VARCHAR)))
-               AS band_key
-           FROM embeddings),
-         cand AS (
-           SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.vec_id <> b.vec_id),
-         v AS (SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(range(1, len(embedding)+1),
-               i -> CAST(embedding[i] AS DOUBLE)*CAST(embedding[i] AS DOUBLE))))
-               AS nrm
-           FROM embeddings),
-         p AS (
-           SELECT qid, nid, round(
-             list_sum(list_transform(range(1, len(a.embedding)+1),
-               i -> CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE)))
-             / (a.nrm * b.nrm), 4) AS cos
-           FROM cand JOIN v a ON cand.qid = a.vec_id
-                     JOIN v b ON cand.nid = b.vec_id),
-         r AS (
-           SELECT qid, nid, cos, row_number() OVER (
-             PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-           FROM p)
-         SELECT qid, nid, cos, rank FROM r WHERE rank <= 3
-         ORDER BY qid, rank""",
-
-    "q89_salted_agg" ->
-      """SELECT l_returnflag,
-           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-             AS DECIMAL(38,2)) AS VARCHAR) AS sum_price,
-           count(*) AS cnt
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // Two-level sorted fold, mirroring the Spark side exactly: fold
-    // within l_orderkey%4096 buckets, then fold the sorted subtotals —
-    // the summation order is a pure function of the value multiset.
-    "q82_corr" ->
-      """WITH l1 AS (
-           SELECT l_returnflag, l_orderkey % 4096 AS b,
-             count(*) AS n1,
-             list_sum(list_sort(list(l_quantity))) AS sx1,
-             list_sum(list_sort(list(l_extendedprice))) AS sy1,
-             list_sum(list_sort(list(l_quantity * l_extendedprice))) AS sxy1,
-             list_sum(list_sort(list(l_quantity * l_quantity))) AS sxx1,
-             list_sum(list_sort(list(l_extendedprice * l_extendedprice)))
-               AS syy1
-           FROM lineitem GROUP BY 1, 2),
-         st AS (
-           SELECT l_returnflag,
-             CAST(sum(n1) AS DOUBLE) AS n,
-             list_sum(list_sort(list(sx1))) AS sx,
-             list_sum(list_sort(list(sy1))) AS sy,
-             list_sum(list_sort(list(sxy1))) AS sxy,
-             list_sum(list_sort(list(sxx1))) AS sxx,
-             list_sum(list_sort(list(syy1))) AS syy
-           FROM l1 GROUP BY 1)
-         SELECT l_returnflag,
-           round((n * sxy - sx * sy)
-             / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6)
-             AS corr,
-           CAST(n AS BIGINT) AS n
-         FROM st ORDER BY l_returnflag""",
-
-    "q83_token_entropy" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         c AS (SELECT doc_id, w, CAST(count(*) AS DOUBLE) AS c
-               FROM w GROUP BY 1, 2),
-         n AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS n
-               FROM w GROUP BY 1),
-         l1 AS (
-           SELECT doc_id,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096 AS b,
-             count(*) AS n1, any_value(n) AS n,
-             list_sum(list_sort(list(-(c / n) * ln(c / n)))) AS sb
-           FROM c JOIN n USING (doc_id)
-           GROUP BY 1, 2)
-         SELECT doc_id,
-           round(list_sum(list_sort(list(sb))), 4) AS entropy,
-           round(sum(n1) / any_value(n), 4) AS ttr,
-           CAST(any_value(n) AS BIGINT) AS n_tokens
-         FROM l1 GROUP BY doc_id ORDER BY doc_id""",
-
-    "q79_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, value
-         FROM (
-           SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
-                  l_quantity AS value FROM lineitem
-           UNION ALL
-           SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-           FROM lineitem
-           UNION ALL
-           SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-           FROM lineitem
-           UNION ALL
-           SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem)
-         WHERE l_orderkey % 997 = 0
-         ORDER BY l_orderkey, l_linenumber, metric""",
-
-    "q80_gap_fill" ->
-      """WITH daily AS (
-           SELECT user_id, day, day_value FROM (
-             SELECT user_id, CAST(ts AS DATE) AS day, value AS day_value,
-               row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                 ORDER BY ts DESC, event_id DESC) AS rn
-             FROM events) WHERE rn = 1),
-         bounds AS (
-           SELECT user_id, min(CAST(ts AS DATE)) AS d0,
-             max(CAST(ts AS DATE)) AS d1
-           FROM events GROUP BY 1),
-         scaffold AS (
-           SELECT user_id, CAST(unnest(generate_series(d0, d1,
-             INTERVAL 1 DAY)) AS DATE) AS day
-           FROM bounds)
-         SELECT s.user_id, strftime(s.day, '%Y-%m-%d') AS day,
-           last_value(d.day_value IGNORE NULLS) OVER (
-             PARTITION BY s.user_id ORDER BY s.day
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
-           CAST(d.day_value IS NOT NULL AS BIGINT) AS observed
-         FROM scaffold s LEFT JOIN daily d
-           ON d.user_id = s.user_id AND d.day = s.day
-         ORDER BY s.user_id, s.day""",
-
-    "q81_histogram" ->
-      """SELECT CAST(least(floor(o_totalprice / 50000.0), 9) AS BIGINT)
-             AS bucket,
-           count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "q76_gopher_rules" ->
-      """WITH w AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         m AS (
-           SELECT doc_id,
-             CAST(len(ws) AS BIGINT) AS n_words,
-             round(CAST(list_sum(list_transform(ws, x -> len(x)))
-                     AS DOUBLE) / len(ws), 4) AS mean_word_len,
-             CAST(len(list_filter(ws, x -> x = 'the' OR x = 'a'))
-               AS BIGINT) AS stop_count
-           FROM w)
-         SELECT doc_id, n_words, mean_word_len, stop_count,
-           CAST(n_words >= 50 AND n_words <= 90
-             AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-             AND stop_count >= 2 AS BIGINT) AS keep
-         FROM m ORDER BY doc_id""",
-
-    "q77_asof_forward" ->
-      """SELECT c.event_id,
-           strftime((SELECT min(p.ts) FROM events p
-                     WHERE p.user_id = c.user_id
-                       AND p.event_type = 'purchase'
-                       AND p.ts >= c.ts
-                       AND p.ts <= c.ts + INTERVAL 30 MINUTE),
-                    '%Y-%m-%d %H:%M:%S.%f') AS asof_ts
-         FROM events c WHERE c.event_type = 'click'
-         ORDER BY c.event_id""",
-
-    // Constants 0.25/0.75/1.0 are exact in decimal AND binary, so
-    // DuckDB's decimal literal folding and Spark's double folding agree
-    // (0.85 would NOT: decimal(1.0-0.85)::DOUBLE != double 1.0-0.85).
-    "q78_pagerank" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-         e AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         deg AS (SELECT u, CAST(count(*) AS DOUBLE) AS deg
-                 FROM e GROUP BY 1),
-         pr0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS pr FROM nodes),
-         s1 AS (SELECT e.v AS node,
-                  list_sum(list_sort(list(p.pr / d.deg))) AS s
-                FROM e JOIN deg d USING (u) JOIN pr0 p ON p.node = e.u
-                GROUP BY 1),
-         pr1 AS (SELECT n.node,
-                   0.25 + 0.75 * coalesce(s, CAST(0.0 AS DOUBLE)) AS pr
-                 FROM nodes n LEFT JOIN s1 USING (node)),
-         s2 AS (SELECT e.v AS node,
-                  list_sum(list_sort(list(p.pr / d.deg))) AS s
-                FROM e JOIN deg d USING (u) JOIN pr1 p ON p.node = e.u
-                GROUP BY 1),
-         pr2 AS (SELECT n.node,
-                   0.25 + 0.75 * coalesce(s, CAST(0.0 AS DOUBLE)) AS pr
-                 FROM nodes n LEFT JOIN s2 USING (node)),
-         s3 AS (SELECT e.v AS node,
-                  list_sum(list_sort(list(p.pr / d.deg))) AS s
-                FROM e JOIN deg d USING (u) JOIN pr2 p ON p.node = e.u
-                GROUP BY 1),
-         pr3 AS (SELECT n.node,
-                   0.25 + 0.75 * coalesce(s, CAST(0.0 AS DOUBLE)) AS pr
-                 FROM nodes n LEFT JOIN s3 USING (node))
-         SELECT node AS doc_id, round(pr, 6) AS pr
-         FROM pr3 ORDER BY doc_id""",
-
-    "q75_fuzzy_dedup_e2e" ->
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         shs AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3 THEN list_distinct(list_transform(
-               range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-             ELSE []::VARCHAR[] END AS shs
-           FROM w),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM shs),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 64),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         j AS (
-           SELECT id_a, id_b FROM (
-             SELECT cand.id_a, cand.id_b,
-               len(list_intersect(sa.shs, sb.shs)) AS inter,
-               len(sa.shs) AS na, len(sb.shs) AS nb
-             FROM cand
-             JOIN shs sa ON sa.doc_id = cand.id_a
-             JOIN shs sb ON sb.doc_id = cand.id_b)
-           WHERE round(CAST(inter AS DOUBLE)
-             / CAST(na + nb - inter AS DOUBLE), 4) >= 0.6),
-         e AS (SELECT id_a AS s, id_b AS d FROM j
-               UNION ALL SELECT id_b, id_a FROM j),
-         reach(node, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT e.d, reach.r FROM reach JOIN e ON e.s = reach.node)
-         SELECT node AS doc_id, min(r) AS component,
-           CAST(min(r) = node AS BIGINT) AS keep
-         FROM reach GROUP BY node ORDER BY doc_id""",
-
-    "q71_sequence_packing" ->
-      """WITH d AS (
-           SELECT doc_id, doc_id % 8 AS shard,
-             CAST(len(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))
-               AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, shard, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
-               ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-           FROM d)
-         SELECT doc_id, shard, n_tokens,
-           tok_before, tok_before // 512 AS seq_id,
-           tok_before % 512 AS seq_offset
-         FROM c ORDER BY doc_id""",
-
-    // Orientation-free enumeration: the triangle SET is independent of
-    // the degree ordering the engine uses, so the oracle counts over
-    // canonical (a<b) edges directly.
-    "q128_triangle_count" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         e AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-               FROM raw WHERE u <> v),
-         tri AS (
-           SELECT e1.a AS x, e1.b AS y, e2.b AS z
-           FROM e e1
-           JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-           JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-         n AS (SELECT x AS node FROM tri
-               UNION ALL SELECT y FROM tri
-               UNION ALL SELECT z FROM tri)
-         SELECT node AS doc_id, count(*) AS triangles
-         FROM n GROUP BY 1 ORDER BY 1""",
-
-    "q129_scd2" ->
-      """WITH h AS (
-           SELECT o_custkey, o_orderdate, o_orderpriority,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey) AS rn,
-             lag(o_orderpriority) OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey) AS prev
-           FROM orders),
-         s AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate AS eff_ts, rn
-           FROM h WHERE rn = 1 OR prev IS DISTINCT FROM o_orderpriority),
-         v AS (
-           SELECT o_custkey, o_orderpriority, eff_ts,
-             lead(eff_ts) OVER (PARTITION BY o_custkey ORDER BY rn)
-               AS eff_to_ts
-           FROM s)
-         SELECT o_custkey, o_orderpriority,
-           strftime(eff_ts, '%Y-%m-%d %H:%M:%S') AS eff_from,
-           strftime(eff_to_ts, '%Y-%m-%d %H:%M:%S') AS eff_to,
-           CAST(eff_to_ts IS NULL AS BIGINT) AS is_current
-         FROM v ORDER BY o_custkey, eff_from, o_orderpriority""",
-
-    "q130_association_rules" ->
-      """WITH m AS (
-           SELECT DISTINCT l_orderkey AS basket, p_brand AS item
-           FROM lineitem JOIN part ON l_partkey = p_partkey),
-         n AS (SELECT count(DISTINCT basket) AS n FROM m),
-         ic AS (SELECT item, count(*) AS c FROM m GROUP BY 1),
-         pr AS (
-           SELECT a.item AS item_a, b.item AS item_b,
-             count(*)::BIGINT AS pair_n
-           FROM m a JOIN m b
-             ON a.basket = b.basket AND a.item < b.item
-           GROUP BY 1, 2 HAVING count(*) >= 5),
-         d AS (SELECT item_a, item_b, pair_n FROM pr
-               UNION ALL SELECT item_b, item_a, pair_n FROM pr)
-         SELECT d.item_a, d.item_b, d.pair_n,
-           ia.c AS a_n, ib.c AS b_n,
-           round(CAST(d.pair_n AS DOUBLE) / n.n, 6) AS support,
-           round(CAST(d.pair_n AS DOUBLE) / ia.c, 6) AS confidence,
-           round(CAST(d.pair_n AS DOUBLE) * n.n / (ia.c * ib.c), 6)
-             AS lift
-         FROM d JOIN ic ia ON ia.item = d.item_a
-                JOIN ic ib ON ib.item = d.item_b
-                CROSS JOIN n
-         ORDER BY item_a, item_b""",
-
-    // Ranked on the RAW double (same tf·ln(N/df) sequence both
-    // engines), term tiebreak; rounding applies only to the output.
-    "q131_tfidf_keywords" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         w2 AS (SELECT * FROM w WHERE w <> ''),
-         tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf
-                FROM w2 GROUP BY 1, 2),
-         df AS (SELECT w, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-         n AS (SELECT count(*) AS n FROM documents),
-         sc AS (
-           SELECT doc_id, w, tf, df,
-             tf * ln(CAST(n AS DOUBLE) / df) AS score
-           FROM tf JOIN df USING (w) CROSS JOIN n),
-         r AS (
-           SELECT doc_id, w, tf, df, score,
-             row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, w) AS rk
-           FROM sc)
-         SELECT doc_id, rk, w AS term, tf, df, round(score, 6) AS score
-         FROM r WHERE rk <= 3 ORDER BY doc_id, rk""",
-
-    "q132_pmi_collocations" ->
-      """WITH w AS (
-           SELECT string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         b AS (
-           SELECT unnest(list_transform(range(1, len(ws)),
-             i -> ws[i] || chr(31) || ws[i+1])) AS bg
-           FROM w WHERE len(ws) >= 2),
-         bc AS (
-           SELECT string_split(bg, chr(31))[1] AS w1,
-                  string_split(bg, chr(31))[2] AS w2,
-                  count(*)::BIGINT AS nab
-           FROM b GROUP BY 1, 2 HAVING count(*) >= 3),
-         uc AS (SELECT unnest(ws) AS w FROM w),
-         ucg AS (SELECT w, count(*)::BIGINT AS nw FROM uc GROUP BY 1),
-         tot AS (
-           SELECT CAST(sum(len(ws)) AS DOUBLE) AS tu,
-                  CAST(sum(greatest(len(ws) - 1, 0)) AS DOUBLE) AS tb
-           FROM w)
-         SELECT bc.w1, bc.w2, bc.nab, a.nw AS na, b2.nw AS nb,
-           round(ln((bc.nab / tot.tb) /
-             ((a.nw / tot.tu) * (b2.nw / tot.tu))), 6) AS pmi
-         FROM bc JOIN ucg a ON a.w = bc.w1
-                 JOIN ucg b2 ON b2.w = bc.w2
-                 CROSS JOIN tot
-         ORDER BY w1, w2""",
-
-    "q133_rfm" ->
-      """WITH ref AS (
-           SELECT max(CAST(o_orderdate AS DATE)) AS refd FROM orders),
-         base AS (
-           SELECT o_custkey,
-             max(CAST(o_orderdate AS DATE)) AS lastd,
-             count(*) AS frequency,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT
-               AS monetary_cents
-           FROM orders GROUP BY 1),
-         r AS (
-           SELECT o_custkey,
-             date_diff('day', lastd, refd) AS recency,
-             frequency, monetary_cents
-           FROM base CROSS JOIN ref),
-         b AS (
-           SELECT quantile_cont(recency, [0.2, 0.4, 0.6, 0.8]) AS rb,
-                  quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]) AS fb,
-                  quantile_cont(monetary_cents, [0.2, 0.4, 0.6, 0.8])
-                    AS mb
-           FROM r),
-         sc AS (
-           SELECT o_custkey, recency, frequency, monetary_cents,
-             1 + len(list_filter(rb, x -> recency > x)) AS r_bin,
-             1 + len(list_filter(fb, x -> frequency > x)) AS f_bin,
-             1 + len(list_filter(mb, x -> monetary_cents > x)) AS m_bin
-           FROM r CROSS JOIN b)
-         SELECT o_custkey, recency, frequency, monetary_cents,
-           r_bin, f_bin, m_bin,
-           CAST(r_bin AS VARCHAR) || CAST(f_bin AS VARCHAR) ||
-             CAST(m_bin AS VARCHAR) AS segment
-         FROM sc ORDER BY o_custkey""",
-
-    // UNION (not UNION ALL) in the recursive arm keeps the state
-    // bounded at |V|·maxHops distinct (node, hops) rows.
-    "q134_bfs_hops" ->
-      """WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-                 FROM raw WHERE u <> v),
-         e AS (SELECT a AS u, b AS v FROM und
-               UNION ALL SELECT b, a FROM und),
-         walk(node, hops) AS (
-           SELECT doc_id, 0 FROM documents WHERE doc_id % 97 = 0
-           UNION
-           SELECT e.v, walk.hops + 1
-           FROM walk JOIN e ON e.u = walk.node
-           WHERE walk.hops < 5)
-         SELECT node AS doc_id, CAST(min(hops) AS BIGINT) AS hops
-         FROM walk GROUP BY 1 ORDER BY 1""",
-
-    "q135_linear_interp" ->
-      """WITH daily AS (
-           SELECT user_id, day, v FROM (
-             SELECT user_id, CAST(ts AS DATE) AS day, value AS v,
-               row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                 ORDER BY ts DESC, event_id DESC) AS rn
-             FROM events) WHERE rn = 1),
-         span AS (
-           SELECT user_id, min(CAST(ts AS DATE)) AS d0,
-             max(CAST(ts AS DATE)) AS d1
-           FROM events GROUP BY 1),
-         scaffold AS (
-           SELECT user_id, unnest(generate_series(d0, d1,
-             INTERVAL 1 DAY))::DATE AS day
-           FROM span),
-         grid AS (
-           SELECT s.user_id, s.day, d.v
-           FROM scaffold s LEFT JOIN daily d
-             ON d.user_id = s.user_id AND d.day = s.day),
-         f AS (
-           SELECT user_id, day, v,
-             last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-               ORDER BY day ROWS UNBOUNDED PRECEDING) AS pv,
-             last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) AS pd,
-             first_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-               ORDER BY day ROWS BETWEEN CURRENT ROW
-                 AND UNBOUNDED FOLLOWING) AS nv,
-             first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY day
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-           FROM grid)
-         SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-           round(CASE WHEN v IS NOT NULL THEN v
-             ELSE pv + (nv - pv) *
-               (CAST(date_diff('day', pd, day) AS DOUBLE) /
-                CAST(date_diff('day', pd, nd) AS DOUBLE)) END, 4) AS v
-         FROM f ORDER BY user_id, day""",
-
-    "q136_inverted_index" ->
-      """WITH w AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         pos AS (
-           SELECT doc_id,
-             unnest(list_transform(range(1, len(ws) + 1),
-               i -> struct_pack(p := i, w := ws[i]))) AS e
-           FROM w),
-         tok AS (
-           SELECT doc_id, e.p AS p, e.w AS w FROM pos WHERE e.w <> ''),
-         df AS (
-           SELECT w, count(DISTINCT doc_id)::BIGINT AS df
-           FROM tok GROUP BY 1
-           HAVING count(DISTINCT doc_id) >= 2)
-         SELECT tok.w AS term, doc_id // 100 AS shard, df.df,
-           array_to_string(list_sort(
-             list(CAST(doc_id AS VARCHAR) || ':' || CAST(p AS VARCHAR))),
-             ',') AS postings
-         FROM tok JOIN df USING (w)
-         GROUP BY 1, 2, 3 ORDER BY term, shard""",
-
-    // Same 48-bit md5 idiom as q17's fp48; bit_xor is order-independent
-    // so the checksum is partitioning-proof on both engines.
-    "q137_merkle_diff" ->
-      """WITH vold AS (
-           SELECT o_orderkey, o_orderpriority,
-             round(o_totalprice * 100)::BIGINT AS cents
-           FROM orders),
-         vnew AS (
-           SELECT o_orderkey,
-             CASE WHEN o_orderkey % 13 = 0 THEN '9-CHANGED'
-                  ELSE o_orderpriority END AS o_orderpriority,
-             round(o_totalprice * 100)::BIGINT AS cents
-           FROM orders WHERE o_orderkey % 97 <> 0),
-         ho AS (
-           SELECT o_orderkey // 1000 AS bucket,
-             count(*) AS old_cnt,
-             bit_xor(('0x' || substring(md5('0:' ||
-               (o_orderkey || '|' || o_orderpriority || '|' || cents)),
-               1, 12))::BIGINT) AS old_sum
-           FROM vold GROUP BY 1),
-         hn AS (
-           SELECT o_orderkey // 1000 AS bucket,
-             count(*) AS new_cnt,
-             bit_xor(('0x' || substring(md5('0:' ||
-               (o_orderkey || '|' || o_orderpriority || '|' || cents)),
-               1, 12))::BIGINT) AS new_sum
-           FROM vnew GROUP BY 1)
-         SELECT bucket, old_cnt, new_cnt,
-           CASE WHEN old_cnt IS NULL THEN 'new_only'
-                WHEN new_cnt IS NULL THEN 'old_only'
-                WHEN old_sum = new_sum AND old_cnt = new_cnt THEN 'match'
-                ELSE 'differ' END AS status
-         FROM ho FULL OUTER JOIN hn USING (bucket)
-         ORDER BY bucket""",
-
-    "q138_degree_stats" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-                 FROM raw WHERE u <> v),
-         deg AS (
-           SELECT node, count(*) AS degree FROM (
-             SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-           GROUP BY 1)
-         SELECT degree, count(*) AS n_nodes, min(node) AS example
-         FROM deg GROUP BY 1 ORDER BY 1""",
-
-    "q139_weighted_sssp" ->
-      """WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v, 1 AS w
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id, 2
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id, 3
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         und AS (
-           SELECT least(u, v) AS a, greatest(u, v) AS b,
-             min(w)::BIGINT AS w
-           FROM raw WHERE u <> v GROUP BY 1, 2),
-         e AS (SELECT a AS u, b AS v, w FROM und
-               UNION ALL SELECT b, a, w FROM und),
-         walk(node, cost, hops) AS (
-           SELECT doc_id, CAST(0 AS BIGINT), 0 FROM documents
-           WHERE doc_id % 97 = 0
-           UNION
-           SELECT e.v, walk.cost + e.w, walk.hops + 1
-           FROM walk JOIN e ON e.u = walk.node
-           WHERE walk.hops < 4)
-         SELECT node AS doc_id, min(cost) AS cost
-         FROM walk GROUP BY 1 ORDER BY 1""",
-
-    "q140_cumulative_users" ->
-      """WITH fs AS (
-           SELECT user_id, min(CAST(ts AS DATE)) AS day
-           FROM events GROUP BY 1),
-         pd AS (SELECT day, count(*) AS new_users FROM fs GROUP BY 1)
-         SELECT strftime(day, '%Y-%m-%d') AS day, new_users,
-           sum(new_users) OVER (ORDER BY day
-             ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_users
-         FROM pd ORDER BY day""",
-
-    "q141_trigram_paths" ->
-      """WITH t AS (
-           SELECT event_type AS e1,
-             lead(event_type, 1) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS e2,
-             lead(event_type, 2) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS e3
-           FROM events)
-         SELECT e1, e2, e3, count(*) AS n
-         FROM t WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-         GROUP BY 1, 2, 3
-         ORDER BY n DESC, e1, e2, e3 LIMIT 10""",
-
-    // dow from a fixed Monday epoch, not dayofweek(): Spark (1=Sun) and
-    // DuckDB (0=Sun) number weekdays differently, day-diff mod 7 is
-    // engine-neutral.
-    "q142_time_profile" ->
-      """SELECT date_diff('day', DATE '1970-01-05', CAST(ts AS DATE)) % 7
-             AS dow,
-           hour(ts) AS hr, count(*) AS n,
-           sum(round(value * 100)::BIGINT)::BIGINT AS sum_cents
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q143_column_profile" ->
-      """SELECT 'c_acctbal' AS "column",
-           sum(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_null,
-           count(DISTINCT c_acctbal)::BIGINT AS n_distinct,
-           round(min(c_acctbal), 2)::DECIMAL(18,2)::VARCHAR AS min_s,
-           round(max(c_acctbal), 2)::DECIMAL(18,2)::VARCHAR AS max_s
-         FROM customer
-         UNION ALL
-         SELECT 'c_mktsegment',
-           sum(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END)::BIGINT,
-           count(DISTINCT c_mktsegment)::BIGINT,
-           min(c_mktsegment), max(c_mktsegment)
-         FROM customer
-         UNION ALL
-         SELECT 'c_name',
-           sum(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END)::BIGINT,
-           count(DISTINCT c_name)::BIGINT,
-           min(c_name), max(c_name)
-         FROM customer
-         UNION ALL
-         SELECT 'c_nationkey',
-           sum(CASE WHEN c_nationkey IS NULL THEN 1 ELSE 0 END)::BIGINT,
-           count(DISTINCT c_nationkey)::BIGINT,
-           CAST(min(c_nationkey) AS VARCHAR),
-           CAST(max(c_nationkey) AS VARCHAR)
-         FROM customer
-         ORDER BY "column"""",
-
-    "q144_session_paths" ->
-      """WITH o AS (
-           SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (
-           SELECT user_id, ts, event_id, event_type,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS sid
-           FROM o),
-         r AS (
-           SELECT user_id, sid, event_type,
-             row_number() OVER (PARTITION BY user_id, sid
-               ORDER BY ts, event_id) AS rn
-           FROM s),
-         p AS (
-           SELECT user_id, sid,
-             string_agg(event_type, '>' ORDER BY rn) AS path
-           FROM r WHERE rn <= 5 GROUP BY 1, 2)
-         SELECT path, count(*) AS n_sessions
-         FROM p GROUP BY 1 ORDER BY path""",
-
-    "q145_asof_dimension" ->
-      """WITH h AS (
-           SELECT o_custkey, o_orderdate, o_orderpriority,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey) AS rn,
-             lag(o_orderpriority) OVER (PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey) AS prev
-           FROM orders),
-         s AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate AS eff_ts, rn
-           FROM h WHERE rn = 1 OR prev IS DISTINCT FROM o_orderpriority),
-         v AS (
-           SELECT o_custkey, o_orderpriority, eff_ts,
-             lead(eff_ts) OVER (PARTITION BY o_custkey ORDER BY rn)
-               AS eff_to_ts
-           FROM s)
-         SELECT o_orderpriority, count(*) AS n_customers
-         FROM v
-         WHERE eff_ts <= TIMESTAMP '1998-07-01'
-           AND (eff_to_ts IS NULL OR eff_to_ts > TIMESTAMP '1998-07-01')
-         GROUP BY 1 ORDER BY 1""",
-
-    "q146_cdc_compaction" ->
-      """WITH log AS (
-           SELECT o_custkey, o_orderdate, o_orderkey,
-             CASE WHEN o_orderkey % 19 = 0 THEN 'D' ELSE 'U' END AS op,
-             round(o_totalprice * 100)::BIGINT AS cents
-           FROM orders),
-         r AS (
-           SELECT *, row_number() OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-           FROM log)
-         SELECT o_custkey, strftime(o_orderdate, '%Y-%m-%d') AS last_day,
-           cents
-         FROM r WHERE rn = 1 AND op <> 'D' ORDER BY o_custkey""",
-
-    "q147_hierarchy_rollup" ->
-      """WITH rev AS (
-           SELECT r_name, n_name,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT
-               AS nation_cents
-           FROM orders
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-           GROUP BY 1, 2)
-         SELECT r_name, n_name, nation_cents,
-           sum(nation_cents) OVER (PARTITION BY r_name)::BIGINT
-             AS region_cents,
-           round(CAST(nation_cents AS DOUBLE) /
-             sum(nation_cents) OVER (PARTITION BY r_name), 6)
-             AS pct_of_region,
-           round(CAST(sum(nation_cents) OVER (PARTITION BY r_name)
-               AS DOUBLE) / sum(nation_cents) OVER (), 6)
-             AS region_pct_of_total
-         FROM rev ORDER BY r_name, n_name""",
-
-    "q148_rolling_wau" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-         dau AS (
-           SELECT day, count(DISTINCT user_id)::BIGINT AS dau
-           FROM ud GROUP BY 1),
-         w AS (
-           SELECT user_id, unnest(generate_series(day, day + 6,
-             INTERVAL 1 DAY))::DATE AS day
-           FROM ud),
-         wau AS (
-           SELECT day, count(DISTINCT user_id)::BIGINT AS wau
-           FROM w GROUP BY 1)
-         SELECT strftime(d.day, '%Y-%m-%d') AS day, d.dau, w2.wau
-         FROM dau d JOIN wau w2 USING (day) ORDER BY day""",
-
-    "q149_fd_discovery" ->
-      """WITH f1 AS (
-           SELECT 'c_custkey' AS determinant, 'c_mktsegment' AS dependent,
-             count(*)::BIGINT AS n_groups,
-             sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-               AS n_violating
-           FROM (SELECT c_custkey, count(DISTINCT c_mktsegment) AS nd
-                 FROM customer GROUP BY 1)),
-         f2 AS (
-           SELECT 'c_nationkey', 'c_mktsegment', count(*)::BIGINT,
-             sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-           FROM (SELECT c_nationkey, count(DISTINCT c_mktsegment) AS nd
-                 FROM customer GROUP BY 1)),
-         f3 AS (
-           SELECT 'o_orderkey', 'o_orderpriority', count(*)::BIGINT,
-             sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-           FROM (SELECT o_orderkey, count(DISTINCT o_orderpriority) AS nd
-                 FROM orders GROUP BY 1)),
-         f4 AS (
-           SELECT 'o_custkey', 'o_orderstatus', count(*)::BIGINT,
-             sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-           FROM (SELECT o_custkey, count(DISTINCT o_orderstatus) AS nd
-                 FROM orders GROUP BY 1)),
-         u AS (SELECT * FROM f1 UNION ALL SELECT * FROM f2
-               UNION ALL SELECT * FROM f3 UNION ALL SELECT * FROM f4)
-         SELECT determinant, dependent, n_groups, n_violating,
-           CAST(n_violating = 0 AS BIGINT) AS holds
-         FROM u ORDER BY determinant, dependent""",
-
-    "q150_user_features" ->
-      """SELECT user_id,
-           sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT
-             AS n_click,
-           sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)::BIGINT
-             AS n_view,
-           sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT
-             AS n_purchase,
-           sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)::BIGINT
-             AS n_signup,
-           sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT
-             AS n_error,
-           sum(round(value * 100)::BIGINT)::BIGINT AS total_cents,
-           count(DISTINCT CAST(ts AS DATE))::BIGINT AS active_days,
-           strftime(min(ts), '%Y-%m-%d') AS first_day,
-           strftime(max(ts), '%Y-%m-%d') AS last_day
-         FROM events GROUP BY 1 ORDER BY user_id""",
-
-    "q151_kll_quantile_bound" ->
-      """WITH q AS (SELECT
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.01), 2) AS q1,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.05), 2) AS q5,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.25), 2) AS q25,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.50), 2) AS q50,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.75), 2) AS q75,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.90), 2) AS q90,
-           round(quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.99), 2) AS q99
-         FROM lineitem)
-         SELECT 1 AS probe_pct, q1 AS exact_q, true AS within_eps FROM q
-         UNION ALL SELECT 5, q5, true FROM q
-         UNION ALL SELECT 25, q25, true FROM q
-         UNION ALL SELECT 50, q50, true FROM q
-         UNION ALL SELECT 75, q75, true FROM q
-         UNION ALL SELECT 90, q90, true FROM q
-         UNION ALL SELECT 99, q99, true FROM q
-         ORDER BY probe_pct""",
-
-    "q152_vocab_oov" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         v AS (SELECT w, count(*) AS wc FROM w GROUP BY 1),
-         top AS (SELECT w FROM v ORDER BY wc DESC, w LIMIT 256)
-         SELECT x.doc_id, count(*)::BIGINT AS n_tokens,
-           sum(CASE WHEN t.w IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-           round(sum(CASE WHEN t.w IS NULL THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 6) AS oov_rate
-         FROM w x LEFT JOIN top t ON x.w = t.w
-         GROUP BY 1 ORDER BY 1""",
-
-    "q153_k_anonymity" ->
-      """WITH g AS (
-           SELECT c_nationkey, c_mktsegment,
-             (round(c_acctbal * 100)::BIGINT + 100000) // 100000
-               AS bal_bucket
-           FROM customer),
-         a AS (
-           SELECT c_nationkey, c_mktsegment, bal_bucket,
-             count(*)::BIGINT AS group_n
-           FROM g GROUP BY 1, 2, 3)
-         SELECT * FROM a WHERE group_n < 10 ORDER BY 1, 2, 3""",
-
-    "q154_benford" ->
-      """WITH d AS (
-           SELECT CAST(substring(CAST(round(o_totalprice * 100)::BIGINT
-             AS VARCHAR), 1, 1) AS INTEGER) AS digit
-           FROM orders WHERE o_totalprice > 0),
-         c AS (SELECT digit, count(*)::BIGINT AS obs FROM d GROUP BY 1),
-         t AS (SELECT sum(obs)::BIGINT AS n FROM c),
-         p AS (SELECT c.digit, c.obs, t.n,
-           (CASE c.digit WHEN 1 THEN 0.301029995664 WHEN 2 THEN
-             0.176091259056 WHEN 3 THEN 0.124938736608 WHEN 4 THEN
-             0.096910013008 WHEN 5 THEN 0.079181246048 WHEN 6 THEN
-             0.066946789631 WHEN 7 THEN 0.057991946978 WHEN 8 THEN
-             0.051152522447 ELSE 0.045757490561 END)::DOUBLE AS p
-           FROM c CROSS JOIN t)
-         SELECT digit, obs, round(p, 6) AS expected_p,
-           round((obs::DOUBLE - n::DOUBLE * p) *
-             (obs::DOUBLE - n::DOUBLE * p) / (n::DOUBLE * p), 4)
-             AS chi2_term
-         FROM p ORDER BY digit""",
-
-    "q155_hhi" ->
-      """WITH rev AS (
-           SELECT o_custkey,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS cents
-           FROM orders GROUP BY 1),
-         j AS (
-           SELECT c.c_mktsegment, r.cents
-           FROM rev r JOIN customer c ON r.o_custkey = c.c_custkey)
-         SELECT c_mktsegment, count(*)::BIGINT AS n_customers,
-           sum(cents)::BIGINT AS seg_cents,
-           round(sum(cents * cents)::DOUBLE /
-             (sum(cents)::DOUBLE * sum(cents)::DOUBLE) * 10000, 4)
-             AS hhi_x10k
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "q156_activity_streaks" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-         i AS (
-           SELECT user_id, day,
-             day - CAST(row_number() OVER (PARTITION BY user_id
-               ORDER BY day) AS INTEGER) AS grp
-           FROM ud),
-         isl AS (
-           SELECT user_id, grp, count(*)::BIGINT AS len, min(day) AS start
-           FROM i GROUP BY 1, 2),
-         mx AS (SELECT user_id, max(len) AS mx FROM isl GROUP BY 1)
-         SELECT isl.user_id, count(*)::BIGINT AS n_streaks,
-           max(len)::BIGINT AS longest,
-           strftime(min(CASE WHEN len = mx THEN start END), '%Y-%m-%d')
-             AS longest_start
-         FROM isl JOIN mx ON isl.user_id = mx.user_id
-         GROUP BY 1 ORDER BY 1""",
-
-    "q157_grouped_regression" ->
-      """WITH b AS (
-           SELECT l_returnflag, round(l_quantity)::BIGINT AS x,
-             round(l_extendedprice * 100)::BIGINT AS y
-           FROM lineitem),
-         s AS (
-           SELECT l_returnflag, count(*)::BIGINT AS n,
-             sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-             sum(x * y)::BIGINT AS sxy, sum(x * x)::BIGINT AS sxx,
-             sum(y * y) AS syy
-           FROM b GROUP BY 1),
-         m AS (
-           SELECT l_returnflag, n, sx, sy,
-             n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE AS num,
-             n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE AS den,
-             n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE AS deny
-           FROM s),
-         m2 AS (SELECT *, num / den AS slope FROM m)
-         SELECT l_returnflag, n, round(slope, 6) AS slope_cents,
-           round((sy::DOUBLE - slope * sx::DOUBLE) / n::DOUBLE, 2)
-             AS intercept_cents,
-           round(num * num / (den * deny), 6) AS r2
-         FROM m2 ORDER BY l_returnflag""",
-
-    "q158_mad_outliers" ->
-      """WITH med AS (
-           SELECT event_type, quantile_disc(value, 0.5) AS med
-           FROM events GROUP BY 1),
-         dev AS (
-           SELECT e.event_type, abs(e.value - m.med) AS adev, m.med
-           FROM events e JOIN med m USING (event_type)),
-         mad AS (
-           SELECT event_type, quantile_disc(adev, 0.5) AS mad
-           FROM dev GROUP BY 1)
-         SELECT d.event_type, count(*)::BIGINT AS n,
-           round(max(d.med), 4) AS med, round(max(m.mad), 4) AS mad,
-           sum((d.adev > 3.0::DOUBLE * m.mad)::BIGINT)::BIGINT
-             AS n_outliers
-         FROM dev d JOIN mad m USING (event_type)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q159_bitmap_distinct" ->
-      """WITH w AS (
-           SELECT event_type, user_id // 63 AS word,
-             bit_or(1::BIGINT << (user_id % 63)::INT) AS bits
-           FROM events GROUP BY 1, 2),
-         b AS (
-           SELECT event_type, sum(bit_count(bits))::BIGINT AS n_bitmap,
-             count(*)::BIGINT AS n_words
-           FROM w GROUP BY 1),
-         x AS (
-           SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact
-           FROM events GROUP BY 1)
-         SELECT b.event_type, x.n_exact, b.n_bitmap, b.n_words,
-           (x.n_exact = b.n_bitmap) AS agree
-         FROM b JOIN x USING (event_type) ORDER BY event_type""",
-
-    "q160_adamic_adar" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         e AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-               FROM raw WHERE u <> v),
-         adj AS (SELECT a AS z, b AS x FROM e
-                 UNION ALL SELECT b, a FROM e),
-         deg AS (SELECT z, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
-         c AS (
-           SELECT adj.z, adj.x, deg.deg
-           FROM adj JOIN deg USING (z)
-           WHERE deg.deg BETWEEN 2 AND 64),
-         wg AS (
-           SELECT l.x AS u, r.x AS w, l.deg AS deg
-           FROM c l JOIN c r ON l.z = r.z AND l.x < r.x)
-         SELECT u, w, count(*)::BIGINT AS n_common,
-           round(list_sum(list_sort(list(1.0 / ln(deg)))), 6) AS aa_score
-         FROM wg GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q161_kcore" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-         raw AS (
-           SELECT a.doc_id AS u, b.doc_id AS v
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 1
-           WHERE a.doc_id % 10 <> 9
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 2
-           WHERE a.doc_id % 10 < 8
-           UNION ALL
-           SELECT a.doc_id, b.doc_id
-           FROM ids a JOIN ids b ON b.doc_id = a.doc_id + 3
-           WHERE a.doc_id % 10 < 7),
-         e AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-               FROM raw WHERE u <> v),
-         adj AS (SELECT a AS u, b AS v FROM e
-                 UNION ALL SELECT b, a FROM e),
-         d0 AS (SELECT u, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
-         s0 AS (SELECT u FROM d0 WHERE deg >= 3),
-         a1 AS (
-           SELECT adj.u, adj.v FROM adj
-           JOIN s0 ON adj.u = s0.u JOIN s0 t ON adj.v = t.u),
-         d1 AS (SELECT u, count(*)::BIGINT AS deg FROM a1 GROUP BY 1),
-         s1 AS (SELECT u FROM d1 WHERE deg >= 3),
-         a2 AS (
-           SELECT adj.u, adj.v FROM adj
-           JOIN s1 ON adj.u = s1.u JOIN s1 t ON adj.v = t.u),
-         d2 AS (SELECT u, count(*)::BIGINT AS deg FROM a2 GROUP BY 1)
-         SELECT u AS node, deg FROM d2 WHERE deg >= 3 ORDER BY node""",
-
-    "q162_windowed_dedup" ->
-      """WITH e AS (
-           SELECT *, epoch_us(ts) // 600000000 AS win FROM events),
-         k AS (
-           SELECT event_type FROM (
-             SELECT event_type, row_number() OVER (
-               PARTITION BY user_id, event_type, win
-               ORDER BY ts, event_id) AS rn
-             FROM e) WHERE rn = 1),
-         kc AS (
-           SELECT event_type, count(*)::BIGINT AS n_kept FROM k
-           GROUP BY 1),
-         ku AS (
-           SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_users
-           FROM (
-             SELECT event_type, user_id, row_number() OVER (
-               PARTITION BY user_id, event_type, win
-               ORDER BY ts, event_id) AS rn
-             FROM e) WHERE rn = 1 GROUP BY 1),
-         t AS (
-           SELECT event_type, count(*)::BIGINT AS n_total FROM e
-           GROUP BY 1)
-         SELECT t.event_type, t.n_total, kc.n_kept,
-           (t.n_total - kc.n_kept)::BIGINT AS n_dropped, ku.n_users
-         FROM t JOIN kc USING (event_type) JOIN ku USING (event_type)
-         ORDER BY event_type""",
-
-    "q163_kll_grouped" ->
-      """WITH q AS (
-           SELECT event_type,
-             quantile_cont(CAST(value AS DOUBLE), [0.25, 0.5, 0.75, 0.9])
-               AS qs
-           FROM events GROUP BY 1)
-         SELECT event_type, 25 AS probe_pct, round(qs[1], 4) AS exact_q,
-           true AS within_eps FROM q
-         UNION ALL SELECT event_type, 50, round(qs[2], 4), true FROM q
-         UNION ALL SELECT event_type, 75, round(qs[3], 4), true FROM q
-         UNION ALL SELECT event_type, 90, round(qs[4], 4), true FROM q
-         ORDER BY event_type, probe_pct""",
-
-    "q164_ab_test" ->
-      """WITH u AS (
-           SELECT user_id,
-             (sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               > 13)::BIGINT AS conv, user_id % 2 AS grp
-           FROM events GROUP BY 1),
-         g AS (
-           SELECT grp, count(*)::BIGINT AS n, sum(conv)::BIGINT AS c
-           FROM u GROUP BY 1),
-         s AS (
-           SELECT
-             sum(CASE WHEN grp = 0 THEN n END)::BIGINT AS n_a,
-             sum(CASE WHEN grp = 0 THEN c END)::BIGINT AS c_a,
-             sum(CASE WHEN grp = 1 THEN n END)::BIGINT AS n_b,
-             sum(CASE WHEN grp = 1 THEN c END)::BIGINT AS c_b
-           FROM g),
-         m AS (
-           SELECT *, c_a::DOUBLE / n_a::DOUBLE AS p_a,
-             c_b::DOUBLE / n_b::DOUBLE AS p_b,
-             (c_a::DOUBLE + c_b::DOUBLE) / (n_a::DOUBLE + n_b::DOUBLE)
-               AS p_pool
-           FROM s)
-         SELECT n_a, c_a, n_b, c_b, round(p_a, 6) AS p_a,
-           round(p_b, 6) AS p_b,
-           round((p_a - p_b) / sqrt(p_pool * (1.0::DOUBLE - p_pool) *
-             (1.0::DOUBLE / n_a::DOUBLE + 1.0::DOUBLE / n_b::DOUBLE)), 4)
-             AS z
-         FROM m""",
-
-    "q165_winsorize" ->
-      """WITH b AS (
-           SELECT event_type,
-             quantile_cont(CAST(value AS DOUBLE), [0.01, 0.99]) AS bs
-           FROM events GROUP BY 1),
-         j AS (
-           SELECT e.event_type, CAST(e.value AS DOUBLE) AS v,
-             bs[1] AS lo, bs[2] AS hi,
-             least(greatest(CAST(e.value AS DOUBLE), bs[1]), bs[2]) AS cv
-           FROM events e JOIN b USING (event_type))
-         SELECT event_type, count(*)::BIGINT AS n,
-           sum((v < lo)::BIGINT)::BIGINT AS n_clipped_lo,
-           sum((v > hi)::BIGINT)::BIGINT AS n_clipped_hi,
-           round(max(lo), 4) AS p01, round(max(hi), 4) AS p99,
-           sum(round(cv * 100)::BIGINT)::BIGINT AS clipped_cents
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "q166_join_fanout" ->
-      """WITH lo AS (
-           SELECT o_orderkey AS k, count(*)::BIGINT AS cl
-           FROM orders GROUP BY 1),
-         rl AS (
-           SELECT l_orderkey AS k, count(*)::BIGINT AS cr
-           FROM lineitem GROUP BY 1),
-         p AS (
-           SELECT lo.k, lo.cl, rl.cr, (lo.cl * rl.cr)::BIGINT AS pairs
-           FROM lo JOIN rl USING (k)),
-         t AS (
-           SELECT sum(pairs)::BIGINT AS total_pairs,
-             count(*)::BIGINT AS n_keys
-           FROM p),
-         r AS (
-           SELECT p.*, t.total_pairs, t.n_keys,
-             row_number() OVER (ORDER BY pairs DESC, k) AS rn
-           FROM p CROSS JOIN t)
-         SELECT rn::BIGINT AS rn, k, cl, cr, pairs, total_pairs,
-           round(pairs::DOUBLE * n_keys / total_pairs, 4) AS x_avg
-         FROM r WHERE rn <= 10 ORDER BY rn""",
-
-    "q167_dq_quarantine" ->
-      """WITH f AS (
-           SELECT o_orderkey,
-             concat_ws(',',
-               CASE WHEN NOT (o_totalprice >= 5000.0)
-                 THEN 'min_value' END,
-               CASE WHEN NOT (o_orderpriority IN ('1-URGENT', '2-HIGH',
-                 '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW'))
-                 THEN 'known_priority' END,
-               CASE WHEN (o_orderstatus = 'O' AND
-                 o_orderdate < TIMESTAMP '1997-01-01')
-                 THEN 'stale_open' END) AS reasons
-           FROM orders)
-         SELECT reasons, count(*)::BIGINT AS n_quarantined,
-           min(o_orderkey)::BIGINT AS first_key
-         FROM f WHERE reasons <> '' GROUP BY 1 ORDER BY 1""",
-
-    "q168_psi_drift" ->
-      """WITH ev AS (
-           SELECT event_type, CAST(value AS DOUBLE) AS v,
-             epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         h AS (SELECT ev.*, (us < mid) AS is_a FROM ev CROSS JOIN span),
-         ba AS (
-           SELECT event_type, quantile_cont(v,
-             [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-           FROM h WHERE is_a GROUP BY 1),
-         binned AS (
-           SELECT h.event_type,
-             1 + len(list_filter(bs, x -> h.v > x)) AS bin,
-             sum(CASE WHEN is_a THEN 1 ELSE 0 END)::BIGINT AS ca,
-             sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END)::BIGINT AS cb
-           FROM h JOIN ba USING (event_type) GROUP BY 1, 2),
-         tot AS (
-           SELECT event_type, sum(ca)::BIGINT AS na, sum(cb)::BIGINT AS nb
-           FROM binned GROUP BY 1),
-         terms AS (
-           SELECT b.event_type, t.na, t.nb,
-             ((cb::DOUBLE + 0.5) / (nb::DOUBLE + 5.0)
-               - (ca::DOUBLE + 0.5) / (na::DOUBLE + 5.0)) *
-             ln(((cb::DOUBLE + 0.5) / (nb::DOUBLE + 5.0))
-               / ((ca::DOUBLE + 0.5) / (na::DOUBLE + 5.0))) AS term
-           FROM binned b JOIN tot t USING (event_type))
-         SELECT event_type, max(na)::BIGINT AS n_a, max(nb)::BIGINT AS n_b,
-           round(list_sum(list_sort(list(term))), 6) AS psi
-         FROM terms GROUP BY 1 ORDER BY 1""",
-
-    "q169_consistent_hash" ->
-      """WITH v8 AS (SELECT t.range AS s, u.range AS r
-                     FROM range(8) t, range(16) u),
-         v9 AS (SELECT t.range AS s, u.range AS r
-                FROM range(9) t, range(16) u),
-         r8 AS (SELECT list_sort(list(
-             ('0x' || substring(md5('0:' || s || '/' || r), 1, 12))::BIGINT
-               * 64 + s)) AS ring FROM v8),
-         r9 AS (SELECT list_sort(list(
-             ('0x' || substring(md5('0:' || s || '/' || r), 1, 12))::BIGINT
-               * 64 + s)) AS ring FROM v9),
-         k AS (
-           SELECT c_custkey AS key,
-             ('0x' || substring(md5('0:' || c_custkey), 1, 12))::BIGINT
-               * 64 + 63 AS k64
-           FROM customer),
-         a AS (
-           SELECT key,
-             coalesce(list_min(list_filter(r8.ring, x -> x > k64)),
-               list_min(r8.ring)) % 64 AS s8,
-             coalesce(list_min(list_filter(r9.ring, x -> x > k64)),
-               list_min(r9.ring)) % 64 AS s9
-           FROM k, r8, r9)
-         SELECT s8 AS shard, count(*)::BIGINT AS n_keys,
-           sum((s9 <> s8)::BIGINT)::BIGINT AS n_moved,
-           sum((s9 <> s8 AND s9 <> 8)::BIGINT)::BIGINT
-             AS n_moved_elsewhere,
-           round(sum((s9 <> s8)::BIGINT)::DOUBLE / count(*), 4)
-             AS frac_moved
-         FROM a GROUP BY 1 ORDER BY 1""",
-
-    "q170_seasonality" ->
-      """WITH ev AS (
-           SELECT event_type, round(value * 100)::BIGINT AS cents,
-             ((CAST(ts AS DATE) - DATE '1970-01-05') % 7 + 7) % 7 AS dow
-           FROM events),
-         bd AS (
-           SELECT event_type, dow, count(*)::BIGINT AS n,
-             sum(cents)::BIGINT AS cd
-           FROM ev GROUP BY 1, 2),
-         tt AS (
-           SELECT event_type, count(*)::BIGINT AS nt,
-             sum(cents)::BIGINT AS ct
-           FROM ev GROUP BY 1),
-         sp AS (
-           SELECT ev.event_type, ev.dow, count(*)::BIGINT AS n_spikes
-           FROM ev JOIN bd ON ev.event_type = bd.event_type
-             AND ev.dow = bd.dow
-           WHERE ev.cents * bd.n > 2 * bd.cd
-           GROUP BY 1, 2)
-         SELECT bd.event_type, bd.dow::BIGINT AS dow, bd.n,
-           round(cd::DOUBLE / n::DOUBLE / 100.0, 4) AS mean_val,
-           round((cd::DOUBLE / n::DOUBLE) / (ct::DOUBLE / nt::DOUBLE), 4)
-             AS seasonal_index,
-           coalesce(sp.n_spikes, 0)::BIGINT AS n_spikes
-         FROM bd JOIN tt USING (event_type)
-         LEFT JOIN sp ON bd.event_type = sp.event_type
-           AND bd.dow = sp.dow
-         ORDER BY bd.event_type, dow""",
-
-    "q171_gini" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg,
-             round(c_acctbal * 100)::BIGINT AS cents, c_custkey
-           FROM customer WHERE c_acctbal > 0),
-         r AS (
-           SELECT seg, cents,
-             row_number() OVER (PARTITION BY seg
-               ORDER BY cents, c_custkey) AS rk
-           FROM c),
-         a AS (
-           SELECT seg, count(*)::BIGINT AS n, sum(cents) AS tot,
-             sum(rk * cents) AS rx
-           FROM r GROUP BY 1)
-         SELECT seg, n, round(tot::DOUBLE / 100.0, 2) AS total_bal,
-           round((2 * rx - (n + 1) * tot)::DOUBLE
-             / (n * tot)::DOUBLE, 6) AS gini
-         FROM a ORDER BY seg""",
-
-    "q172_skyline" ->
-      """WITH s AS (
-           SELECT p_partkey, p_retailprice, p_size,
-             max(p_size) OVER (ORDER BY p_retailprice, p_size DESC,
-               p_partkey ROWS BETWEEN UNBOUNDED PRECEDING AND
-               1 PRECEDING) AS mx
-           FROM part)
-         SELECT p_partkey, round(p_retailprice, 2) AS price, p_size
-         FROM s WHERE mx IS NULL OR p_size > mx
-         ORDER BY p_partkey""",
-
-    "q173_islands" ->
-      """WITH iv AS (
-           SELECT l_suppkey AS supp, CAST(l_shipdate AS DATE) AS st,
-             CAST(l_shipdate AS DATE)
-               + to_days((CAST(l_quantity AS INT) % 7 + 1)) AS en,
-             l_orderkey, l_linenumber
-           FROM lineitem),
-         f AS (
-           SELECT *, max(en) OVER (PARTITION BY supp
-               ORDER BY st, en, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-           FROM iv),
-         g AS (
-           SELECT *, CASE WHEN pmax IS NULL OR st > pmax
-               THEN 1 ELSE 0 END AS brk
-           FROM f),
-         h AS (
-           SELECT *, sum(brk) OVER (PARTITION BY supp
-               ORDER BY st, en, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-           FROM g),
-         isld AS (
-           SELECT supp, isl, min(st) AS ist, max(en) AS ien,
-             count(*)::BIGINT AS nv
-           FROM h GROUP BY 1, 2),
-         gp AS (
-           SELECT *, lag(ien) OVER (PARTITION BY supp ORDER BY isl)
-             AS pend
-           FROM isld)
-         SELECT supp, count(*)::BIGINT AS n_islands,
-           sum(date_diff('day', ist, ien))::BIGINT AS covered_days,
-           max(date_diff('day', ist, ien))::BIGINT AS longest_island,
-           coalesce(max(date_diff('day', pend, ist)), 0)::BIGINT
-             AS max_gap,
-           max(nv)::BIGINT AS busiest_island
-         FROM gp GROUP BY 1 ORDER BY 1""",
-
-    "q174_proration" ->
-      """WITH w AS (
-           SELECT c_nationkey AS nat, c_custkey,
-             round(c_acctbal * 100)::BIGINT AS wt
-           FROM customer WHERE c_acctbal > 0),
-         t AS (SELECT nat, sum(wt)::BIGINT AS wtot FROM w GROUP BY 1),
-         b AS (
-           SELECT w.nat, w.c_custkey,
-             (10000000 * wt) // wtot AS base,
-             (10000000 * wt) % wtot AS rem
-           FROM w JOIN t USING (nat)),
-         e AS (
-           SELECT nat, (10000000 - sum(base))::BIGINT AS n_extra
-           FROM b GROUP BY 1),
-         al AS (
-           SELECT b.nat, base
-             + CASE WHEN row_number() OVER (PARTITION BY b.nat
-                 ORDER BY rem DESC, c_custkey) <= n_extra
-               THEN 1 ELSE 0 END AS alloc,
-             n_extra
-           FROM b JOIN e USING (nat))
-         SELECT nat, count(*)::BIGINT AS n_recipients,
-           sum(alloc)::BIGINT AS total_alloc,
-           max(n_extra)::BIGINT AS n_bumped,
-           max(alloc)::BIGINT AS max_alloc,
-           min(alloc)::BIGINT AS min_alloc
-         FROM al GROUP BY 1 ORDER BY 1""",
-
-    "q175_acf" ->
-      """WITH daily AS (
-           SELECT CAST(l_shipdate AS DATE) AS day,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-           FROM lineitem GROUP BY 1),
-         idx AS (
-           SELECT cents, row_number() OVER (ORDER BY day) AS rn
-           FROM daily),
-         lagged AS (
-           SELECT l.lg, a.cents AS x, b.cents AS y
-           FROM (SELECT unnest(range(1, 8)) AS lg) l
-           JOIN idx b ON true
-           JOIN idx a ON a.rn = b.rn - l.lg),
-         m AS (
-           SELECT lg, count(*)::BIGINT AS n,
-             sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-             sum(x * x) AS sxx, sum(y * y) AS syy
-           FROM lagged GROUP BY 1)
-         SELECT lg, n AS n_pairs,
-           round((n * sxy - sx * sy)::DOUBLE /
-             sqrt((n * sxx - sx * sx)::DOUBLE *
-                  (n * syy - sy * sy)::DOUBLE), 4) + 0.0 AS acf
-         FROM m ORDER BY lg""",
-
-    "q176_kmv_intersection" ->
-      """WITH dh AS (
-           SELECT DISTINCT event_type AS ty,
-             ('0x' || substring(md5('0:' || user_id), 1, 12))::BIGINT AS h
-           FROM events),
-         ty AS (SELECT DISTINCT ty FROM dh),
-         pairs AS (
-           SELECT a.ty AS ta, b.ty AS tb
-           FROM ty a JOIN ty b ON a.ty < b.ty),
-         memb AS (
-           SELECT ta, tb, h,
-             max(CASE WHEN dh.ty = ta THEN 1 ELSE 0 END) AS ina,
-             max(CASE WHEN dh.ty = tb THEN 1 ELSE 0 END) AS inb
-           FROM dh JOIN pairs ON dh.ty = ta OR dh.ty = tb
-           GROUP BY 1, 2, 3),
-         ut AS (
-           SELECT *, row_number() OVER (PARTITION BY ta, tb ORDER BY h)
-             AS rn
-           FROM memb),
-         sk AS (
-           SELECT ta, tb, max(h) AS theta, count(*)::BIGINT AS k,
-             sum(ina * inb)::BIGINT AS common
-           FROM ut WHERE rn <= 64 GROUP BY 1, 2),
-         est AS (
-           SELECT ta, tb, k, common,
-             CASE WHEN k < 64 THEN k::DOUBLE
-               ELSE 63::DOUBLE * 281474976710656::DOUBLE
-                 / theta::DOUBLE END AS est_union
-           FROM sk),
-         ex AS (
-           SELECT ta, tb, count(*)::BIGINT AS exact_inter
-           FROM memb WHERE ina = 1 AND inb = 1 GROUP BY 1, 2)
-         SELECT e.ta, e.tb,
-           coalesce(x.exact_inter, 0)::BIGINT AS exact_inter, e.common,
-           round(e.common::DOUBLE / e.k * e.est_union, 1) AS est_inter,
-           (abs(e.common::DOUBLE / e.k * e.est_union
-              - coalesce(x.exact_inter, 0)::DOUBLE)
-            <= 0.25 * coalesce(x.exact_inter, 0) + 50.0) AS ok
-         FROM est e LEFT JOIN ex x ON e.ta = x.ta AND e.tb = x.tb
-         ORDER BY e.ta, e.tb""",
-
-    "q177_ewma" ->
-      """WITH daily AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS cents,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY CAST(ts AS DATE)) AS t
-           FROM events GROUP BY 1, 2),
-         j AS (
-           SELECT a.ty, a.day, b.cents,
-             power(0.75, (a.t - b.t)::DOUBLE) AS w
-           FROM daily a JOIN daily b ON a.ty = b.ty
-             AND b.t BETWEEN a.t - 29 AND a.t)
-         SELECT ty, day::VARCHAR AS day, count(*)::BIGINT AS n_window,
-           round(list_sum(list_sort(list(cents::DOUBLE * w)))
-             / list_sum(list_sort(list(w))) / 100.0, 4) + 0.0 AS ewma
-         FROM j GROUP BY ty, day ORDER BY ty, day""",
-
-    "q178_drawdown" ->
-      """WITH ev AS (
-           SELECT user_id, ts, event_id,
-             (CASE WHEN event_id % 2 = 0 THEN 1 ELSE -1 END)
-               * round(value * 100)::BIGINT AS delta
-           FROM events),
-         r AS (
-           SELECT *,
-             sum(delta) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM ev),
-         p AS (
-           SELECT *,
-             max(cum) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak,
-             sum(delta) OVER (PARTITION BY user_id) AS final_cents,
-             count(*) OVER (PARTITION BY user_id) AS n_events
-           FROM r),
-         dd AS (
-           SELECT *, (peak - cum) AS dd,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY (peak - cum) DESC, ts, event_id) AS rn
-           FROM p)
-         SELECT user_id, n_events::BIGINT AS n_events,
-           round(final_cents::DOUBLE / 100.0, 2) AS final_pnl,
-           round(dd::DOUBLE / 100.0, 2) AS max_drawdown,
-           strftime(ts, '%Y-%m-%d') AS trough_day
-         FROM dd WHERE rn = 1 ORDER BY user_id""",
-
-    "q179_mode" ->
-      """WITH vc AS (
-           SELECT lang, source, n_chars, count(*)::BIGINT AS cnt
-           FROM documents GROUP BY 1, 2, 3),
-         rk AS (
-           SELECT *,
-             count(*) OVER (PARTITION BY lang, source)
-               AS n_distinct_vals,
-             row_number() OVER (PARTITION BY lang, source
-               ORDER BY cnt DESC, n_chars) AS rn
-           FROM vc)
-         SELECT lang, source, n_chars AS mode_chars, cnt AS mode_cnt,
-           n_distinct_vals::BIGINT AS n_distinct_vals
-         FROM rk WHERE rn = 1 ORDER BY lang, source""",
-
-    "q180_chisq" ->
-      """WITH ev AS (
-           SELECT event_type AS ty,
-             ((CAST(ts AS DATE) - DATE '1970-01-05') % 7 + 7) % 7 AS dow
-           FROM events),
-         obs AS (
-           SELECT ty, dow, count(*)::BIGINT AS o FROM ev GROUP BY 1, 2),
-         rowt AS (SELECT ty, sum(o)::BIGINT AS rt FROM obs GROUP BY 1),
-         colt AS (SELECT dow, sum(o)::BIGINT AS ct FROM obs GROUP BY 1),
-         tot AS (
-           SELECT sum(o)::BIGINT AS n,
-             count(DISTINCT ty)::BIGINT AS nr,
-             count(DISTINCT dow)::BIGINT AS nc
-           FROM obs),
-         grid AS (
-           SELECT rowt.ty, colt.dow, coalesce(obs.o, 0)::BIGINT AS o,
-             rt, ct, n, nr, nc,
-             rt::DOUBLE * ct::DOUBLE / n::DOUBLE AS e
-           FROM rowt CROSS JOIN colt
-           LEFT JOIN obs ON obs.ty = rowt.ty AND obs.dow = colt.dow
-           CROSS JOIN tot),
-         c AS (
-           SELECT *, (o::DOUBLE - e) * (o::DOUBLE - e) / e AS contrib
-           FROM grid),
-         s AS (
-           SELECT list_sum(list_sort(list(contrib))) AS stat,
-             max((nr - 1) * (nc - 1)) AS dof
-           FROM c)
-         SELECT ty, dow, o, round(e, 4) AS expected,
-           round(contrib, 6) AS contrib,
-           round(stat, 6) AS chi2_total, dof::BIGINT AS dof
-         FROM c CROSS JOIN s ORDER BY ty, dow""",
-
-    "q181_target_encoding" ->
-      """WITH c AS (
-           SELECT c_custkey, c_mktsegment AS seg,
-             round(c_acctbal * 100)::BIGINT AS cents
-           FROM customer),
-         s AS (
-           SELECT seg, sum(cents)::BIGINT AS ssum,
-             count(*)::BIGINT AS sn
-           FROM c GROUP BY 1),
-         g AS (
-           SELECT sum(cents)::BIGINT AS gsum, count(*)::BIGINT AS gn
-           FROM c)
-         SELECT c_custkey, seg,
-           round(CASE WHEN sn > 1
-               THEN (ssum - cents)::DOUBLE / (sn - 1)::DOUBLE
-               ELSE (gsum - cents)::DOUBLE / (gn - 1)::DOUBLE
-             END / 100.0, 4) AS loo_mean
-         FROM c JOIN s USING (seg) CROSS JOIN g
-         ORDER BY c_custkey""",
-
-    "q182_lorenz" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg,
-             round(c_acctbal * 100)::BIGINT AS cents, c_custkey
-           FROM customer WHERE c_acctbal > 0),
-         r AS (
-           SELECT seg, cents,
-             row_number() OVER (PARTITION BY seg
-               ORDER BY cents, c_custkey) AS rk,
-             count(*) OVER (PARTITION BY seg) AS n
-           FROM c),
-         d AS (
-           SELECT seg, (10 * rk + n - 1) // n AS dec,
-             count(*)::BIGINT AS n_members, sum(cents)::BIGINT AS dc
-           FROM r GROUP BY 1, 2),
-         t AS (SELECT seg, sum(dc)::BIGINT AS tc FROM d GROUP BY 1),
-         cm AS (
-           SELECT d.*, tc,
-             sum(dc) OVER (PARTITION BY d.seg ORDER BY dec
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM d JOIN t USING (seg))
-         SELECT seg, dec::BIGINT AS dec, n_members,
-           round(dc::DOUBLE / tc::DOUBLE, 6) AS share,
-           round(cum::DOUBLE / tc::DOUBLE, 6) AS cum_share
-         FROM cm ORDER BY seg, dec""",
-
-    "q183_good_turing" ->
-      """WITH tk AS (
-           SELECT string_split(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
-             AS ts
-           FROM documents),
-         w AS (
-           SELECT unnest(list_transform(range(1, len(ts) - 1),
-             j -> ts[j] || ' ' || ts[j+1] || ' ' || ts[j+2])) AS w
-           FROM tk),
-         f AS (SELECT w, count(*)::BIGINT AS c FROM w GROUP BY 1),
-         fof AS (SELECT c, count(*)::BIGINT AS nc FROM f GROUP BY 1),
-         st AS (
-           SELECT sum(nc)::BIGINT AS d_obs,
-             sum(c * nc)::BIGINT AS n_tokens,
-             max(CASE WHEN c = 1 THEN nc END)::BIGINT AS n1,
-             max(CASE WHEN c = 2 THEN nc END)::BIGINT AS n2
-           FROM fof),
-         led AS (
-           SELECT c, nc, lead(nc) OVER (ORDER BY c) AS nc1,
-             row_number() OVER (ORDER BY c) AS rn
-           FROM fof QUALIFY rn <= 10)
-         SELECT c, nc,
-           round((c + 1)::DOUBLE * nc1 / nc, 4) AS c_star,
-           d_obs, n_tokens,
-           round(n1::DOUBLE / n_tokens, 6) AS p_unseen,
-           round(d_obs + n1::DOUBLE * n1 / (2.0 * n2), 2) AS chao1
-         FROM led CROSS JOIN st ORDER BY c""",
-
-    "q184_bootstrap" ->
-      """WITH o AS (
-           SELECT o_orderkey, round(o_totalprice * 100)::BIGINT AS cents,
-             ('0x' || substring(md5('0:b1:' || o_orderkey), 1, 12))
-               ::BIGINT AS h1,
-             ('0x' || substring(md5('0:b2:' || o_orderkey), 1, 12))
-               ::BIGINT AS h2
-           FROM orders),
-         reps AS (
-           SELECT o_orderkey, cents, r.range AS rep,
-             ((CASE WHEN r.range < 24 THEN h1 ELSE h2 END)
-               // CAST(pow(3, r.range % 24) AS BIGINT)) % 3 AS w
-           FROM o CROSS JOIN range(48) r),
-         m AS (
-           SELECT rep, sum(w)::BIGINT AS n_eff,
-             sum(w * cents)::BIGINT AS wsum
-           FROM reps GROUP BY 1),
-         rk AS (
-           SELECT rep, n_eff,
-             round(wsum::DOUBLE / n_eff::DOUBLE / 100.0, 4)
-               AS mean_price
-           FROM m)
-         SELECT row_number() OVER (ORDER BY mean_price, rep) AS rk,
-           rep::BIGINT AS rep, n_eff, mean_price
-         FROM rk ORDER BY rk""",
-
-    "q185_geo_hubs" ->
-      """WITH cust AS (
-           SELECT c_custkey,
-             (c_custkey * 37547 % 17000) / 100.0 - 85.0 AS lat,
-             (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
-           FROM customer),
-         hubs AS (
-           SELECT n_nationkey AS hub,
-             (n_nationkey * 6151 % 17000) / 100.0 - 85.0 AS hlat,
-             (n_nationkey * 2741 % 36000) / 100.0 - 180.0 AS hlon
-           FROM nation),
-         x AS (
-           SELECT c.*, h.*,
-             (lat - hlat) * (lat - hlat) + (lon - hlon) * (lon - hlon)
-               AS d2,
-             row_number() OVER (PARTITION BY c_custkey
-               ORDER BY (lat - hlat) * (lat - hlat)
-                 + (lon - hlon) * (lon - hlon), hub) AS rn
-           FROM cust c CROSS JOIN hubs h),
-         a AS (
-           SELECT *, 2 * 6371.0 * asin(sqrt(
-               pow(sin((hlat - lat) * pi() / 180.0 / 2), 2)
-               + cos(lat * pi() / 180.0) * cos(hlat * pi() / 180.0)
-                 * pow(sin((hlon - lon) * pi() / 180.0 / 2), 2))) AS km
-           FROM x WHERE rn = 1)
-         SELECT hub, count(*)::BIGINT AS n_assigned,
-           round(min(km), 2) AS min_km, round(max(km), 2) AS max_km,
-           round(list_sum(list_sort(list(km))) / count(*), 2) AS mean_km
-         FROM a GROUP BY 1 ORDER BY 1""",
-
-    "q186_overlap_depth" ->
-      """WITH iv AS (
-           SELECT l_suppkey AS supp, CAST(l_shipdate AS DATE) AS st,
-             CAST(l_shipdate AS DATE)
-               + to_days((CAST(l_quantity AS INT) % 7 + 2)) AS en
-           FROM lineitem),
-         ev AS (
-           SELECT supp, st AS day, 1::BIGINT AS d FROM iv
-           UNION ALL
-           SELECT supp, en AS day, -1::BIGINT AS d FROM iv),
-         byday AS (
-           SELECT supp, day, sum(d)::BIGINT AS net,
-             sum(CASE WHEN d > 0 THEN 1 ELSE 0 END)::BIGINT AS n_starts
-           FROM ev GROUP BY 1, 2),
-         dep AS (
-           SELECT supp, day, n_starts,
-             sum(net) OVER (PARTITION BY supp ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS depth,
-             sum(n_starts) OVER (PARTITION BY supp) AS n_intervals
-           FROM byday),
-         pk AS (
-           SELECT *, row_number() OVER (PARTITION BY supp
-               ORDER BY depth DESC, day) AS rn
-           FROM dep)
-         SELECT supp, n_intervals::BIGINT AS n_intervals,
-           depth::BIGINT AS max_concurrent,
-           strftime(day, '%Y-%m-%d') AS peak_day
-         FROM pk WHERE rn = 1 ORDER BY supp""",
-
-    "q187_ndcg" ->
-      """WITH o AS (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-             (6 - CAST(substring(o_orderpriority, 1, 1) AS INT))::DOUBLE
-               AS rel
-           FROM orders),
-         p AS (
-           SELECT o_custkey, rel,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey) AS pos
-           FROM o QUALIFY pos <= 10),
-         i AS (
-           SELECT o_custkey, rel,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY rel DESC, o_orderkey) AS ipos
-           FROM o QUALIFY ipos <= 10),
-         d AS (
-           SELECT o_custkey, count(*)::BIGINT AS n_ranked,
-             list_sum(list_sort(list(rel * ln(2.0) / ln(pos + 1))))
-               AS dcg
-           FROM p GROUP BY 1),
-         ideal AS (
-           SELECT o_custkey,
-             list_sum(list_sort(list(rel * ln(2.0) / ln(ipos + 1))))
-               AS idcg
-           FROM i GROUP BY 1)
-         SELECT d.o_custkey, n_ranked, round(dcg, 6) AS dcg,
-           round(dcg / idcg, 6) AS ndcg
-         FROM d JOIN ideal USING (o_custkey) ORDER BY o_custkey""",
-
-    "q188_date_spine" ->
-      """WITH li AS (
-           SELECT l_returnflag AS flag,
-             (CAST(l_shipdate AS DATE) - DATE '1970-01-05') // 7 AS wk,
-             round(l_extendedprice * 100)::BIGINT AS cents
-           FROM lineitem),
-         weekly AS (
-           SELECT flag, wk, sum(cents)::BIGINT AS cents
-           FROM li GROUP BY 1, 2),
-         span AS (SELECT min(wk) AS w0, max(wk) AS w1 FROM weekly),
-         spine AS (
-           SELECT f.flag, unnest(generate_series(w0, w1)) AS wk
-           FROM (SELECT DISTINCT flag FROM weekly) f
-           CROSS JOIN span),
-         z AS (
-           SELECT sp.flag, sp.wk, coalesce(w.cents, 0)::BIGINT AS cents
-           FROM spine sp LEFT JOIN weekly w
-             ON sp.flag = w.flag AND sp.wk = w.wk),
-         lg AS (
-           SELECT *, lag(cents) OVER (PARTITION BY flag ORDER BY wk)
-             AS prev
-           FROM z)
-         SELECT flag, wk::BIGINT AS wk,
-           round(cents::DOUBLE / 100.0, 2) AS revenue,
-           (cents = 0) AS is_gap,
-           round((cents - coalesce(prev, 0))::DOUBLE / 100.0, 2)
-             AS wow_delta
-         FROM lg ORDER BY flag, wk""",
-
-    "q189_zipf_fit" ->
-      """WITH tk AS (
-           SELECT string_split(
-             lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
-             AS ts
-           FROM documents),
-         w AS (
-           SELECT unnest(list_transform(range(1, len(ts) - 1),
-             j -> ts[j] || ' ' || ts[j+1] || ' ' || ts[j+2])) AS w
-           FROM tk),
-         f AS (SELECT w, count(*)::BIGINT AS c FROM w GROUP BY 1),
-         r AS (
-           SELECT ln(row_number() OVER (ORDER BY c DESC, w)::DOUBLE)
-               AS x,
-             ln(c::DOUBLE) AS y,
-             row_number() OVER (ORDER BY c DESC, w) AS rn
-           FROM f QUALIFY rn <= 50000),
-         m AS (
-           SELECT count(*)::BIGINT AS n,
-             list_sum(list_sort(list(x))) AS sx,
-             list_sum(list_sort(list(y))) AS sy,
-             list_sum(list_sort(list(x * y))) AS sxy,
-             list_sum(list_sort(list(x * x))) AS sxx
-           FROM r)
-         SELECT n AS n_terms,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) AS slope,
-           round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
-             / n, 4) AS intercept
-         FROM m""",
-
-    "q190_degree_histogram" ->
-      """WITH e AS (
-           SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-         d AS (
-           SELECT l_partkey, count(*)::BIGINT AS deg FROM e GROUP BY 1)
-         SELECT length(bin(deg))::BIGINT AS bin,
-           count(*)::BIGINT AS n_nodes, min(deg)::BIGINT AS min_deg,
-           max(deg)::BIGINT AS max_deg, sum(deg)::BIGINT AS n_edges
-         FROM d GROUP BY 1 ORDER BY 1""",
-
-    "q191_weighted_percentile" ->
-      """WITH li AS (
-           SELECT l_returnflag AS flag,
-             round(l_extendedprice * 100)::BIGINT AS cents,
-             CAST(l_quantity AS BIGINT) AS w, l_orderkey, l_linenumber
-           FROM lineitem),
-         c AS (
-           SELECT flag, cents,
-             sum(w) OVER (PARTITION BY flag
-               ORDER BY cents, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cumw,
-             sum(w) OVER (PARTITION BY flag) AS tw
-           FROM li)
-         SELECT flag, max(tw)::BIGINT AS total_weight,
-           round(min(CASE WHEN cumw * 4 >= tw THEN cents END)::DOUBLE
-             / 100.0, 2) AS w_p25,
-           round(min(CASE WHEN cumw * 2 >= tw THEN cents END)::DOUBLE
-             / 100.0, 2) AS w_median,
-           round(min(CASE WHEN cumw * 4 >= tw * 3 THEN cents END)::DOUBLE
-             / 100.0, 2) AS w_p75
-         FROM c GROUP BY 1 ORDER BY 1""",
-
-    "q192_interpolate" ->
-      """WITH daily AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS c0,
-             (CAST(ts AS DATE) - DATE '1970-01-05')::BIGINT AS t
-           FROM events GROUP BY 1, 2, 4),
-         sp AS (
-           SELECT *, CASE WHEN t % 5 = 0 THEN NULL ELSE c0 END AS v
-           FROM daily),
-         f AS (
-           SELECT *,
-             last_value(v IGNORE NULLS) OVER (PARTITION BY ty ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-             last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-               OVER (PARTITION BY ty ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-             first_value(v IGNORE NULLS) OVER (PARTITION BY ty ORDER BY t
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-             first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-               OVER (PARTITION BY ty ORDER BY t
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-           FROM sp),
-         o AS (
-           SELECT ty, day, (v IS NULL) AS was_gap,
-             CASE WHEN v IS NOT NULL THEN v::DOUBLE
-               WHEN pv IS NULL THEN nv::DOUBLE
-               WHEN nv IS NULL THEN pv::DOUBLE
-               ELSE pv + (nv - pv)::DOUBLE * (t - pt) / (nt - pt)
-             END AS fill
-           FROM f)
-         SELECT ty, day::VARCHAR AS day, was_gap,
-           round(fill / 100.0, 4) AS value
-         FROM o ORDER BY ty, day""",
-
-    "q193_rank_shift" ->
-      """WITH li AS (
-           SELECT l_partkey, epoch_us(l_shipdate) AS us FROM lineitem),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM li),
-         cnt AS (
-           SELECT l_partkey, (us < mid) AS is_a, count(*)::BIGINT AS n
-           FROM li CROSS JOIN span GROUP BY 1, 2),
-         rk AS (
-           SELECT *, row_number() OVER (PARTITION BY is_a
-               ORDER BY n DESC, l_partkey) AS rk
-           FROM cnt QUALIFY rk <= 20),
-         a AS (
-           SELECT l_partkey, n AS cnt_a, rk AS rank_a
-           FROM rk WHERE is_a),
-         b AS (
-           SELECT l_partkey, n AS cnt_b, rk AS rank_b
-           FROM rk WHERE NOT is_a)
-         SELECT coalesce(a.l_partkey, b.l_partkey) AS l_partkey,
-           rank_a, rank_b, cnt_a, cnt_b,
-           CASE WHEN rank_a IS NULL THEN 'new'
-             WHEN rank_b IS NULL THEN 'dropped'
-             WHEN rank_b < rank_a THEN 'up'
-             WHEN rank_b > rank_a THEN 'down'
-             ELSE 'flat' END AS status
-         FROM a FULL OUTER JOIN b USING (l_partkey)
-         ORDER BY coalesce(rank_b, 999), coalesce(rank_a, 999),
-           l_partkey""",
-
-    "q194_ppr" ->
-      """WITH e0 AS (
-           SELECT DISTINCT l_suppkey * 2 AS src,
-             l_partkey * 2 + 1 AS dst
-           FROM lineitem),
-         e AS (
-           SELECT src, dst FROM e0
-           UNION ALL SELECT dst AS src, src AS dst FROM e0),
-         dg AS (SELECT src, count(*)::BIGINT AS deg FROM e GROUP BY 1),
-         seeds AS (
-           SELECT s_suppkey * 2 AS node FROM supplier
-           WHERE s_suppkey % 10 = 0),
-         m0 AS (SELECT node, 1000000000000::BIGINT AS m FROM seeds),
-         m1 AS (
-           SELECT node, sum(c)::BIGINT AS m FROM (
-             SELECT e.dst AS node, (m.m * 85) // 100 // dg.deg AS c
-             FROM m0 m JOIN e ON m.node = e.src JOIN dg ON e.src = dg.src
-             UNION ALL
-             SELECT node, 150000000000::BIGINT AS c FROM seeds)
-           GROUP BY 1),
-         m2 AS (
-           SELECT node, sum(c)::BIGINT AS m FROM (
-             SELECT e.dst AS node, (m.m * 85) // 100 // dg.deg AS c
-             FROM m1 m JOIN e ON m.node = e.src JOIN dg ON e.src = dg.src
-             UNION ALL
-             SELECT node, 150000000000::BIGINT AS c FROM seeds)
-           GROUP BY 1),
-         m3 AS (
-           SELECT node, sum(c)::BIGINT AS m FROM (
-             SELECT e.dst AS node, (m.m * 85) // 100 // dg.deg AS c
-             FROM m2 m JOIN e ON m.node = e.src JOIN dg ON e.src = dg.src
-             UNION ALL
-             SELECT node, 150000000000::BIGINT AS c FROM seeds)
-           GROUP BY 1)
-         SELECT row_number() OVER (ORDER BY m DESC, node) AS rk,
-           node, m AS mass_micro
-         FROM m3 QUALIFY rk <= 20 ORDER BY rk""",
-
-    "q195_ks_test" ->
-      """WITH ev AS (
-           SELECT event_type AS ty, round(value * 100)::BIGINT AS cents,
-             epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         g AS (
-           SELECT ty, cents,
-             sum(CASE WHEN us < mid THEN 1 ELSE 0 END)::BIGINT AS ca,
-             sum(CASE WHEN us >= mid THEN 1 ELSE 0 END)::BIGINT AS cb
-           FROM ev CROSS JOIN span GROUP BY 1, 2),
-         c AS (
-           SELECT *,
-             sum(ca) OVER (PARTITION BY ty ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cuma,
-             sum(cb) OVER (PARTITION BY ty ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cumb,
-             sum(ca) OVER (PARTITION BY ty) AS na,
-             sum(cb) OVER (PARTITION BY ty) AS nb
-           FROM g),
-         d AS (
-           SELECT *, abs(cuma * nb - cumb * na) AS diff,
-             row_number() OVER (PARTITION BY ty
-               ORDER BY abs(cuma * nb - cumb * na) DESC, cents) AS rn
-           FROM c)
-         SELECT ty, na::BIGINT AS na, nb::BIGINT AS nb,
-           round(diff::DOUBLE / (na * nb)::DOUBLE, 6) AS ks_stat,
-           round(cents::DOUBLE / 100.0, 2) AS at_value
-         FROM d WHERE rn = 1 ORDER BY ty""",
-
-    "q196_mean_zoo" ->
-      """WITH li AS (
-           SELECT l_returnflag AS flag,
-             round(l_extendedprice * 100)::BIGINT AS cents,
-             l_orderkey % 4096 AS bk,
-             round(l_extendedprice * 100)::BIGINT::DOUBLE / 100.0 AS x
-           FROM lineitem),
-         l1 AS (
-           SELECT flag, bk, count(*)::BIGINT AS n,
-             sum(cents)::BIGINT AS sc, sum(cents * cents) AS sq,
-             list_sum(list_sort(list(ln(x)))) AS sln,
-             list_sum(list_sort(list(1.0 / x))) AS srec
-           FROM li GROUP BY 1, 2),
-         l2 AS (
-           SELECT flag, sum(n)::BIGINT AS n, sum(sc)::BIGINT AS sc,
-             sum(sq) AS sq,
-             list_sum(list_sort(list(sln))) AS sln,
-             list_sum(list_sort(list(srec))) AS srec
-           FROM l1 GROUP BY 1)
-         SELECT flag, n,
-           round(sc::DOUBLE / n / 100.0, 4) AS mean_arith,
-           round(exp(sln / n), 4) AS mean_geom,
-           round(n / srec, 4) AS mean_harm,
-           round(sqrt(sq::DOUBLE / n) / 100.0, 4) AS mean_quad
-         FROM l2 ORDER BY flag""",
-
-    "q197_cohens_kappa" ->
-      """WITH docs AS (
-           SELECT source, (n_chars >= 500) AS r1,
-             ((length(text) - length(replace(text, 'e', ''))) * 8
-               >= length(text)) AS r2
-           FROM documents),
-         c AS (
-           SELECT source, count(*)::BIGINT AS n,
-             sum(CASE WHEN r1 AND r2 THEN 1 ELSE 0 END)::BIGINT AS yy,
-             sum(CASE WHEN r1 AND NOT r2 THEN 1 ELSE 0 END)::BIGINT
-               AS yn,
-             sum(CASE WHEN NOT r1 AND r2 THEN 1 ELSE 0 END)::BIGINT
-               AS ny,
-             sum(CASE WHEN NOT r1 AND NOT r2 THEN 1 ELSE 0 END)::BIGINT
-               AS nn
-           FROM docs GROUP BY 1)
-         SELECT source, n, yy, yn, ny, nn,
-           round((yy + nn)::DOUBLE / n, 6) AS p_o,
-           round((((yy + yn) * (yy + ny))::DOUBLE
-             + ((ny + nn) * (yn + nn))::DOUBLE) / (n * n)::DOUBLE, 6)
-             AS p_e,
-           round(CASE WHEN (n * n)::DOUBLE
-               = ((yy + yn) * (yy + ny))::DOUBLE
-                 + ((ny + nn) * (yn + nn))::DOUBLE THEN 0.0
-             ELSE ((n * (yy + nn))::DOUBLE
-               - (((yy + yn) * (yy + ny))::DOUBLE
-                 + ((ny + nn) * (yn + nn))::DOUBLE)) /
-               ((n * n)::DOUBLE
-                 - (((yy + yn) * (yy + ny))::DOUBLE
-                   + ((ny + nn) * (yn + nn))::DOUBLE)) END, 6) AS kappa
-         FROM c ORDER BY source""",
-
-    "q198_calibration" ->
-      """WITH o AS (
-           SELECT round(o_totalprice * 100)::BIGINT AS cents,
-             (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS y
-           FROM orders),
-         s AS (
-           SELECT *, least(9, cents // 5000000)::BIGINT AS bin,
-             1.0 / (1.0 + exp(-(cents::DOUBLE / 100.0 - 25000.0)
-               / 10000.0)) AS score
-           FROM o),
-         bins AS (
-           SELECT bin, count(*)::BIGINT AS n_bin,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS n_pos,
-             list_sum(list_sort(list(score))) AS ssc
-           FROM s GROUP BY 1),
-         b2 AS (
-           SELECT *, ssc / n_bin AS conf,
-             n_pos::DOUBLE / n_bin AS acc
-           FROM bins),
-         tot AS (SELECT sum(n_bin)::BIGINT AS nn FROM bins),
-         ece AS (
-           SELECT list_sum(list_sort(list(
-             n_bin::DOUBLE / nn * abs(acc - conf)))) AS ece
-           FROM b2 CROSS JOIN tot)
-         SELECT bin, n_bin, n_pos, round(conf, 6) AS mean_score,
-           round(acc, 6) AS pos_rate, round(ece, 6) AS ece
-         FROM b2 CROSS JOIN ece ORDER BY bin""",
-
-    "q199_auc" ->
-      """WITH o AS (
-           SELECT round(o_totalprice * 100)::BIGINT AS cents,
-             (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS y
-           FROM orders),
-         g AS (
-           SELECT cents,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS np,
-             sum(CASE WHEN NOT y THEN 1 ELSE 0 END)::BIGINT AS nn
-           FROM o GROUP BY 1),
-         c AS (
-           SELECT *, coalesce(sum(nn) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cumnn
-           FROM g),
-         u AS (
-           SELECT sum(np)::BIGINT AS n_pos, sum(nn)::BIGINT AS n_neg,
-             sum(np * (2 * cumnn + nn)) AS u2
-           FROM c)
-         SELECT n_pos, n_neg,
-           round(u2::DOUBLE / (2.0 * n_pos * n_neg), 6) AS auc
-         FROM u""",
-
-    "q200_oof_encoding" ->
-      """WITH c AS (
-           SELECT c_custkey, c_mktsegment AS seg,
-             round(c_acctbal * 100)::BIGINT AS cents,
-             ('0x' || substring(md5('0:' || c_custkey), 1, 12))::BIGINT
-               % 5 AS fold
-           FROM customer),
-         cell AS (
-           SELECT fold, seg, count(*)::BIGINT AS nf,
-             sum(cents)::BIGINT AS sf
-           FROM c GROUP BY 1, 2),
-         st AS (
-           SELECT seg, sum(nf)::BIGINT AS ns, sum(sf)::BIGINT AS ss
-           FROM cell GROUP BY 1)
-         SELECT fold, seg, nf AS n_rows,
-           round((ss - sf)::DOUBLE / (ns - nf)::DOUBLE / 100.0, 4)
-             AS oof_mean
-         FROM cell JOIN st USING (seg)
-         ORDER BY fold, seg""",
-
-    "q201_nucleus_topp" ->
-      """WITH cnt AS (
-           SELECT user_id, event_type, count(*)::BIGINT AS c
-           FROM events GROUP BY 1, 2),
-         n AS (
-           SELECT *, sum(c) OVER (PARTITION BY user_id) AS n
-           FROM cnt),
-         e AS (
-           SELECT *, exp(c::DOUBLE / n / 0.5) AS e FROM n),
-         z AS (
-           SELECT *, list_sum(list_sort(
-             list(e) OVER (PARTITION BY user_id))) AS z
-           FROM e),
-         p AS (SELECT *, e / z AS p FROM z),
-         r AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY p DESC, event_type) AS rk,
-             sum(p) OVER (PARTITION BY user_id
-               ORDER BY p DESC, event_type
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             coalesce(sum(p) OVER (PARTITION BY user_id
-               ORDER BY p DESC, event_type
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0)
-               AS prevcum
-           FROM p)
-         SELECT user_id, count(*)::BIGINT AS k_nucleus,
-           max(CASE WHEN rk = 1 THEN event_type END) AS top_type,
-           round(max(cum), 6) AS nucleus_mass
-         FROM r WHERE prevcum < 0.9 GROUP BY 1 ORDER BY user_id""",
-
-    "q202_contamination" ->
-      """WITH w AS (
-           SELECT source,
-             string_split(lower(trim(regexp_replace(text, '\s+', ' ',
-               'g'))), ' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT source,
-             unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS g
-           FROM w),
-         sizes AS (
-           SELECT source, count(*)::BIGINT AS na FROM sh GROUP BY 1),
-         pairs AS (
-           SELECT a.source AS src_a, b.source AS src_b,
-             count(*)::BIGINT AS n_common
-           FROM sh a JOIN sh b ON a.g = b.g AND a.source <> b.source
-           GROUP BY 1, 2)
-         SELECT src_a, src_b, n_common, na,
-           round(n_common::DOUBLE / na, 4) AS containment
-         FROM pairs JOIN sizes ON sizes.source = pairs.src_a
-         WHERE n_common * 20 >= na
-         ORDER BY src_a, src_b""",
-
-    "q203_schema_drift_union" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_orderstatus,
-             round(o_totalprice * 100)::BIGINT AS cents,
-             NULL::VARCHAR AS o_orderpriority
-           FROM orders WHERE o_orderkey % 2 = 0),
-         v2 AS (
-           SELECT o_orderkey, o_orderstatus,
-             round(o_totalprice * 100)::BIGINT AS cents, o_orderpriority
-           FROM orders WHERE o_orderkey % 2 = 1),
-         u AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-         SELECT o_orderstatus, (o_orderpriority IS NULL) AS from_v1,
-           count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents,
-           min(o_orderkey)::BIGINT AS first_key
-         FROM u GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q204_multiset_ops" ->
-      """WITH a AS (
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
-         b AS (
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-         ac AS (SELECT o_custkey, count(*)::BIGINT AS ca
-                FROM a GROUP BY 1),
-         bc AS (SELECT o_custkey, count(*)::BIGINT AS cb
-                FROM b GROUP BY 1),
-         m AS (
-           SELECT coalesce(ac.o_custkey, bc.o_custkey) AS o_custkey,
-             coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-           FROM ac FULL OUTER JOIN bc USING (o_custkey))
-         SELECT o_custkey, least(ca, cb)::BIGINT AS n_inter,
-           greatest(ca - cb, 0)::BIGINT AS n_except
-         FROM m WHERE least(ca, cb) > 0 OR greatest(ca - cb, 0) > 0
-         ORDER BY o_custkey""",
-
-    "q205_kaplan_meier" ->
-      """WITH o AS (
-           SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
-             (o_totalprice >= 300000.0) AS big
-           FROM orders),
-         per AS (
-           SELECT o_custkey, min(d) AS entry,
-             min(CASE WHEN big THEN d END) AS eventd
-           FROM o GROUP BY 1),
-         hz AS (SELECT max(d) AS hz FROM o),
-         times AS (
-           SELECT o_custkey,
-             CASE WHEN eventd IS NOT NULL THEN eventd - entry
-               ELSE hz - entry END AS t,
-             (eventd IS NOT NULL) AS ev
-           FROM per CROSS JOIN hz),
-         tot AS (SELECT count(*)::BIGINT AS nn FROM times),
-         byt AS (
-           SELECT t, sum(CASE WHEN ev THEN 1 ELSE 0 END)::BIGINT AS d_t,
-             count(*)::BIGINT AS leave
-           FROM times GROUP BY 1),
-         risk AS (
-           SELECT *, nn - coalesce(sum(leave) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS n_risk
-           FROM byt CROSS JOIN tot),
-         ev2 AS (
-           SELECT *, ln(1.0 - d_t::DOUBLE / n_risk::DOUBLE) AS lnterm
-           FROM risk WHERE d_t > 0),
-         s AS (
-           SELECT *, exp(list_sum(list_sort(
-             list(lnterm) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))))
-             AS s
-           FROM ev2)
-         SELECT t::BIGINT AS t, n_risk::BIGINT AS n_risk, d_t,
-           round(s, 6) AS survival
-         FROM s ORDER BY t""",
-
-    "q206_rolling_median" ->
-      """WITH daily AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS cents
-           FROM events GROUP BY 1, 2),
-         f AS (
-           SELECT ty, day,
-             list_sort(list(cents) OVER (PARTITION BY ty ORDER BY day
-               ROWS BETWEEN 15 PRECEDING AND 15 FOLLOWING)) AS arr
-           FROM daily)
-         SELECT ty, day::VARCHAR AS day,
-           len(arr)::BIGINT AS n_window,
-           round(arr[(len(arr) + 1) // 2]::DOUBLE / 100.0, 2)
-             AS rolling_median
-         FROM f ORDER BY ty, day""",
-
-    "q207_haar_pyramid" ->
-      """WITH daily AS (
-           SELECT (CAST(l_shipdate AS DATE) - DATE '1970-01-05')::BIGINT
-               AS t,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-           FROM lineitem GROUP BY 1),
-         lv AS (
-           SELECT t, cents, l.range AS lvl,
-             t // (1 << l.range) AS bucket,
-             (t // (1 << (l.range - 1))) % 2 AS half
-           FROM daily CROSS JOIN range(1, 5) l),
-         a AS (
-           SELECT lvl, bucket, count(*)::BIGINT AS n_days,
-             sum(cents)::BIGINT AS sc,
-             sum(CASE WHEN half = 0 THEN cents END)::BIGINT AS s0,
-             sum(CASE WHEN half = 0 THEN 1 ELSE 0 END)::BIGINT AS n0,
-             sum(CASE WHEN half = 1 THEN cents END)::BIGINT AS s1,
-             sum(CASE WHEN half = 1 THEN 1 ELSE 0 END)::BIGINT AS n1
-           FROM lv GROUP BY 1, 2)
-         SELECT lvl::BIGINT AS lvl, bucket, n_days,
-           floor(sc::DOUBLE / n_days + 0.5)::BIGINT AS approx_cents,
-           floor((CASE WHEN n0 > 0 THEN s0::DOUBLE / n0 ELSE 0.0 END
-             - CASE WHEN n1 > 0 THEN s1::DOUBLE / n1 ELSE 0.0 END)
-             + 0.5)::BIGINT AS detail_cents
-         FROM a ORDER BY lvl, bucket""",
-
-    "q208_time_to_convert" ->
-      """WITH ev AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-         su AS (
-           SELECT user_id,
-             min(CASE WHEN event_type = 'signup' THEN us END) AS su
-           FROM ev GROUP BY 1 HAVING su IS NOT NULL),
-         pu AS (
-           SELECT ev.user_id, min(us) AS pu
-           FROM ev JOIN su USING (user_id)
-           WHERE event_type = 'purchase' AND us >= su
-           GROUP BY 1),
-         conv AS (
-           SELECT su.user_id, pu - su AS gap
-           FROM su JOIN pu USING (user_id)),
-         r AS (
-           SELECT gap, row_number() OVER (ORDER BY gap, user_id) AS rk,
-             count(*) OVER () AS n
-           FROM conv)
-         SELECT max(n)::BIGINT AS n_converted,
-           round(min(CASE WHEN rk * 2 >= n THEN gap END)::DOUBLE
-             / 86400000000.0, 4) AS p50_days,
-           round(min(CASE WHEN rk * 10 >= n * 9 THEN gap END)::DOUBLE
-             / 86400000000.0, 4) AS p90_days
-         FROM r""",
-
-    "q209_langid_prf" ->
-      """WITH b AS (
-           SELECT doc_id, lang AS gold,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         s AS (
-           SELECT doc_id, gold,
-             len(list_filter(ws, t -> t IN ('the','a','of','and')))
-               AS en,
-             len(list_filter(ws, t -> t IN ('le','la','et','un'))) AS fr,
-             len(list_filter(ws, t -> t IN ('der','die','und','ein')))
-               AS de,
-             len(list_filter(ws, t -> t IN ('el','los','y','una')))
-               AS es,
-             CAST(length(regexp_replace(d.text,
-               '[^\x{4e00}-\x{9fff}]', '', 'g')) AS DOUBLE)
-               / greatest(length(d.text), 1) AS cjk
-           FROM b JOIN documents d USING (doc_id)),
-         pred AS (
-           SELECT gold,
-             CASE WHEN cjk > 0.1 THEN 'zh'
-               WHEN greatest(en,fr,de,es) = 0 THEN 'und'
-               WHEN en = greatest(en,fr,de,es) THEN 'en'
-               WHEN fr = greatest(en,fr,de,es) THEN 'fr'
-               WHEN de = greatest(en,fr,de,es) THEN 'de'
-               ELSE 'es' END AS pred
-           FROM s),
-         cells AS (
-           SELECT gold, pred, count(*)::BIGINT AS n
-           FROM pred GROUP BY 1, 2),
-         tp AS (
-           SELECT gold AS l, n AS tp FROM cells WHERE gold = pred),
-         gt AS (SELECT gold AS l, sum(n)::BIGINT AS ng
-                FROM cells GROUP BY 1),
-         pt AS (SELECT pred AS l, sum(n)::BIGINT AS np
-                FROM cells GROUP BY 1),
-         m AS (
-           SELECT coalesce(gt.l, pt.l) AS lang,
-             coalesce(ng, 0) AS n_gold, coalesce(np, 0) AS n_pred,
-             coalesce(tp, 0) AS tp
-           FROM gt FULL OUTER JOIN pt ON gt.l = pt.l
-           LEFT JOIN tp ON coalesce(gt.l, pt.l) = tp.l)
-         SELECT lang, n_gold::BIGINT AS n_gold, n_pred::BIGINT AS n_pred,
-           tp::BIGINT AS tp,
-           CASE WHEN n_pred = 0 THEN 0.0
-             ELSE round(tp::DOUBLE / n_pred, 6) END AS prec,
-           CASE WHEN n_gold = 0 THEN 0.0
-             ELSE round(tp::DOUBLE / n_gold, 6) END AS rec,
-           CASE WHEN n_pred + n_gold = 0 OR tp = 0 THEN 0.0
-             ELSE round(2.0 * tp / (n_pred + n_gold), 6) END AS f1
-         FROM m ORDER BY lang""",
-
-    "q210_fifo_allocation" ->
-      """WITH li AS (
-           SELECT l_partkey AS pk, l_orderkey, l_linenumber,
-             CAST(l_quantity AS BIGINT) AS q,
-             round(l_extendedprice * 100)::BIGINT AS cents, l_shipdate
-           FROM lineitem),
-         buys AS (
-           SELECT pk,
-             sum(q) OVER (PARTITION BY pk
-               ORDER BY l_shipdate, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - q
-               AS blo,
-             sum(q) OVER (PARTITION BY pk
-               ORDER BY l_shipdate, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bhi,
-             q AS bq, cents AS bcents
-           FROM li WHERE l_linenumber % 2 = 1),
-         sells AS (
-           SELECT pk,
-             sum(q) OVER (PARTITION BY pk
-               ORDER BY l_shipdate, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - q
-               AS slo,
-             sum(q) OVER (PARTITION BY pk
-               ORDER BY l_shipdate, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS shi
-           FROM li WHERE l_linenumber % 2 = 0),
-         mt AS (
-           SELECT b.pk,
-             least(bhi, shi) - greatest(blo, slo) AS matched,
-             matched::DOUBLE * bcents / bq AS cost
-           FROM buys b JOIN sells s
-             ON b.pk = s.pk AND blo < shi AND slo < bhi)
-         SELECT pk, count(*)::BIGINT AS n_matches,
-           sum(matched)::BIGINT AS matched_qty,
-           floor(list_sum(list_sort(list(cost))) + 0.5)::BIGINT
-             AS fifo_cost_cents
-         FROM mt GROUP BY 1 ORDER BY 1""",
-
-    "q211_theil_sen" ->
-      """WITH daily AS (
-           SELECT (CAST(l_shipdate AS DATE) - DATE '1970-01-05')::BIGINT
-               AS tt,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-           FROM lineitem GROUP BY 1),
-         pairs AS (
-           SELECT a.tt, b.tt AS t2,
-             (b.cents - a.cents)::DOUBLE / (b.tt - a.tt)::DOUBLE
-               AS slope
-           FROM daily a JOIN daily b ON b.tt > a.tt),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY slope, tt, t2) AS rk,
-             count(*) OVER () AS np
-           FROM pairs),
-         ols AS (
-           SELECT round(
-             (count(*) * sum(tt * cents) - sum(tt) * sum(cents))::DOUBLE
-             / (count(*) * sum(tt * tt) - sum(tt) * sum(tt))::DOUBLE, 6)
-             AS ols_slope
-           FROM daily)
-         SELECT np::BIGINT AS n_pairs, round(slope, 6)
-             AS theil_sen_slope, ols_slope
-         FROM r CROSS JOIN ols WHERE rk = (np + 1) // 2""",
-
-    "q212_rbo" ->
-      """WITH rev AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(round(l_extendedprice * 100)::BIGINT) DESC,
-               l_partkey) AS ra
-           FROM lineitem GROUP BY l_partkey QUALIFY ra <= 50),
-         qty AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(CAST(l_quantity AS BIGINT)) DESC, l_partkey) AS rb
-           FROM lineitem GROUP BY l_partkey QUALIFY rb <= 50),
-         tails AS (
-           SELECT m.range AS m,
-             list_sum(list_sort(list_transform(
-               generate_series(m.range::INT, 50),
-               dd -> power(0.9, dd - 1) / dd))) AS tail
-           FROM range(1, 51) m),
-         common AS (
-           SELECT greatest(ra, rb) AS m
-           FROM rev JOIN qty USING (l_partkey))
-         SELECT count(*)::BIGINT AS n_common,
-           sum(CASE WHEN m <= 10 THEN 1 ELSE 0 END)::BIGINT
-             AS overlap_at_10,
-           round(0.1 * list_sum(list_sort(list(tail))), 6) AS rbo
-         FROM common JOIN tails USING (m)""",
-
-    "q213_backtest_mape" ->
-      """WITH daily AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS cents
-           FROM events GROUP BY 1, 2),
-         hz AS (SELECT max(day) - 27 AS h0 FROM daily),
-         f AS (
-           SELECT ty, day + 7 AS day, cents AS fc FROM daily),
-         j AS (
-           SELECT d.ty, d.day, d.cents, f.fc
-           FROM daily d JOIN f ON d.ty = f.ty AND d.day = f.day
-           CROSS JOIN hz WHERE d.day >= h0)
-         SELECT ty, count(*)::BIGINT AS n_eval,
-           round(list_sum(list_sort(list(
-             abs(cents - fc)::DOUBLE / cents))) / count(*), 6) AS mape,
-           round(list_sum(list_sort(list(
-             2.0 * abs(cents - fc)::DOUBLE / (cents + fc))))
-             / count(*), 6) AS smape,
-           sum(fc - cents)::BIGINT AS bias_cents
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "q214_greedy_knapsack" ->
-      """WITH it AS (
-           SELECT l_suppkey AS supp, l_orderkey, l_linenumber,
-             round(l_extendedprice * 100)::BIGINT AS v,
-             CAST(l_quantity AS BIGINT) AS w,
-             round(l_extendedprice * 100)::BIGINT::DOUBLE
-               / CAST(l_quantity AS BIGINT)::DOUBLE AS density
-           FROM lineitem),
-         c AS (
-           SELECT *,
-             sum(w) OVER (PARTITION BY supp
-               ORDER BY density DESC, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cumw
-           FROM it)
-         SELECT supp, count(*)::BIGINT AS n_taken,
-           sum(v)::BIGINT AS value_cents,
-           max(cumw)::BIGINT AS weight_used,
-           round(max(cumw)::DOUBLE / 100, 4) AS utilization
-         FROM c WHERE cumw <= 100 GROUP BY 1 ORDER BY 1""",
-
-    "q215_lead_lag" ->
-      """WITH ev AS (
-           SELECT event_type, CAST(ts AS DATE) AS day FROM events),
-         sp AS (
-           SELECT unnest(generate_series(min(day), max(day),
-             INTERVAL 1 DAY))::DATE AS day
-           FROM ev),
-         cx AS (
-           SELECT day, count(*)::BIGINT AS x FROM ev
-           WHERE event_type = 'click' GROUP BY 1),
-         py AS (
-           SELECT day, count(*)::BIGINT AS y FROM ev
-           WHERE event_type = 'purchase' GROUP BY 1),
-         base AS (
-           SELECT sp.day, coalesce(cx.x, 0) AS x, coalesce(py.y, 0) AS y
-           FROM sp LEFT JOIN cx USING (day) LEFT JOIN py USING (day)),
-         lagged AS (
-           SELECT l.range AS lg, a.x, b.y
-           FROM base a
-           CROSS JOIN range(-7, 8) l
-           JOIN base b ON b.day = a.day + to_days(l.range::INT)),
-         m AS (
-           SELECT lg, count(*)::BIGINT AS n, sum(x) AS sx, sum(y) AS sy,
-             sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-           FROM lagged GROUP BY 1),
-         cc AS (
-           SELECT lg::BIGINT AS lg, n AS n_days,
-             round((n * sxy - sx * sy)::DOUBLE /
-               sqrt((n * sxx - sx * sx)::DOUBLE *
-                 (n * syy - sy * sy)::DOUBLE), 4) + 0.0 AS ccf
-           FROM m)
-         SELECT lg, n_days, ccf,
-           (row_number() OVER (ORDER BY ccf DESC, lg) = 1) AS best
-         FROM cc ORDER BY lg""",
-
-    "q216_price_volume" ->
-      """WITH li AS (
-           SELECT l_partkey AS pk, l_returnflag AS flag,
-             epoch_us(l_shipdate) AS us,
-             round(l_extendedprice * 100)::BIGINT AS cents,
-             CAST(l_quantity AS BIGINT) AS q
-           FROM lineitem),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM li),
-         half AS (
-           SELECT flag, pk, (us < mid) AS a,
-             sum(cents)::BIGINT AS v, sum(q)::BIGINT AS qq
-           FROM li CROSS JOIN span GROUP BY 1, 2, 3),
-         h0 AS (SELECT flag, pk, v AS v0, qq AS q0 FROM half WHERE a),
-         h1 AS (SELECT flag, pk, v AS v1, qq AS q1 FROM half
-                WHERE NOT a),
-         l1 AS (
-           SELECT flag, pk % 4096 AS bk, count(*)::BIGINT AS np,
-             sum(v0)::BIGINT AS s00, sum(v1)::BIGINT AS s11,
-             list_sum(list_sort(list(
-               (v1 * q0)::DOUBLE / q1::DOUBLE))) AS s10,
-             list_sum(list_sort(list(
-               (v0 * q1)::DOUBLE / q0::DOUBLE))) AS s01
-           FROM h0 JOIN h1 USING (flag, pk) GROUP BY 1, 2),
-         l2 AS (
-           SELECT flag, sum(np)::BIGINT AS n_parts,
-             sum(s00)::BIGINT AS s00, sum(s11)::BIGINT AS s11,
-             list_sum(list_sort(list(s10))) AS s10,
-             list_sum(list_sort(list(s01))) AS s01
-           FROM l1 GROUP BY 1)
-         SELECT flag, n_parts,
-           round(s10 / s00::DOUBLE, 6) AS laspeyres_price,
-           round(s11::DOUBLE / s01, 6) AS paasche_price,
-           round(sqrt(s10 / s00::DOUBLE * (s11::DOUBLE / s01)), 6)
-             AS fisher_price,
-           round(s11::DOUBLE / s00::DOUBLE, 6) AS value_index
-         FROM l2 ORDER BY flag""",
-
-    "q217_emd" ->
-      """WITH ev AS (
-           SELECT event_type AS ty, round(value * 100)::BIGINT AS cents,
-             epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         g AS (
-           SELECT ty, cents,
-             sum(CASE WHEN us < mid THEN 1 ELSE 0 END)::BIGINT AS ca,
-             sum(CASE WHEN us >= mid THEN 1 ELSE 0 END)::BIGINT AS cb
-           FROM ev CROSS JOIN span GROUP BY 1, 2),
-         c AS (
-           SELECT *,
-             sum(ca) OVER (PARTITION BY ty ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cuma,
-             sum(cb) OVER (PARTITION BY ty ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cumb,
-             sum(ca) OVER (PARTITION BY ty) AS na,
-             sum(cb) OVER (PARTITION BY ty) AS nb,
-             lead(cents) OVER (PARTITION BY ty ORDER BY cents) - cents
-               AS gap
-           FROM g)
-         SELECT ty, max(na)::BIGINT AS na, max(nb)::BIGINT AS nb,
-           round(sum(abs(cuma * nb - cumb * na) * gap)::DOUBLE
-             / (max(na) * max(nb))::DOUBLE / 100.0, 6) AS emd
-         FROM c WHERE gap IS NOT NULL GROUP BY 1 ORDER BY 1""",
-
-    "q218_conformal" ->
-      """WITH ev AS (
-           SELECT event_type AS ty, round(value * 100)::BIGINT AS cents,
-             epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         h AS (
-           SELECT ev.*, (us < mid) AS cal FROM ev CROSS JOIN span),
-         fit AS (
-           SELECT ty, sum(cents) // count(*) AS pred,
-             count(*)::BIGINT AS n
-           FROM h WHERE cal GROUP BY 1),
-         resid AS (
-           SELECT ty, r AS qhat FROM (
-             SELECT h.ty, abs(cents - pred) AS r,
-               row_number() OVER (PARTITION BY h.ty
-                 ORDER BY abs(cents - pred), cents, us) AS rk,
-               n
-             FROM h JOIN fit USING (ty) WHERE cal)
-           WHERE rk = (9 * (n + 1) + 9) // 10)
-         SELECT ty, count(*)::BIGINT AS n_test,
-           max(qhat)::BIGINT AS qhat,
-           sum(CASE WHEN abs(cents - pred) <= qhat THEN 1 ELSE 0 END)
-             ::BIGINT AS n_covered,
-           round(sum(CASE WHEN abs(cents - pred) <= qhat
-             THEN 1 ELSE 0 END)::DOUBLE / count(*), 4) AS coverage,
-           (round(sum(CASE WHEN abs(cents - pred) <= qhat
-             THEN 1 ELSE 0 END)::DOUBLE / count(*), 4) >= 0.85) AS ok
-         FROM h JOIN fit USING (ty) JOIN resid USING (ty)
-         WHERE NOT cal GROUP BY 1 ORDER BY 1""",
-
-    "q219_capture_recapture" ->
-      """WITH u AS (
-           SELECT DISTINCT user_id FROM events),
-         m AS (
-           SELECT count(*)::BIGINT AS n_true,
-             sum(CASE WHEN ('0x' || substring(md5('0:s1:' || user_id),
-               1, 12))::BIGINT % 5 = 0 THEN 1 ELSE 0 END)::BIGINT
-               AS n1,
-             sum(CASE WHEN ('0x' || substring(md5('0:s2:' || user_id),
-               1, 12))::BIGINT % 5 = 0 THEN 1 ELSE 0 END)::BIGINT
-               AS n2,
-             sum(CASE WHEN ('0x' || substring(md5('0:s1:' || user_id),
-               1, 12))::BIGINT % 5 = 0
-               AND ('0x' || substring(md5('0:s2:' || user_id),
-               1, 12))::BIGINT % 5 = 0 THEN 1 ELSE 0 END)::BIGINT AS m
-           FROM u)
-         SELECT n_true, n1, n2, m,
-           round((n1 + 1)::DOUBLE * (n2 + 1) / (m + 1) - 1.0, 2)
-             AS n_hat,
-           (abs((n1 + 1)::DOUBLE * (n2 + 1) / (m + 1) - 1.0 - n_true)
-             <= 0.5 * n_true + 100.0) AS ok
-         FROM m""",
-
-    "q220_bradley_terry" ->
-      """WITH li AS (
-           SELECT l_orderkey AS ok, l_partkey AS pk,
-             round(l_extendedprice * 100)::BIGINT AS cents, l_linenumber
-           FROM lineitem WHERE l_partkey % 100 < 4),
-         pairs AS (
-           SELECT x.pk AS a, y.pk AS b,
-             CASE WHEN x.cents > y.cents THEN 1
-               WHEN x.cents < y.cents THEN 0
-               WHEN x.l_linenumber < y.l_linenumber THEN 1
-               ELSE 0 END AS a_wins
-           FROM li x JOIN li y ON x.ok = y.ok AND x.pk < y.pk),
-         nab AS (
-           SELECT a, b, count(*)::BIGINT AS n,
-             sum(a_wins)::BIGINT AS wa
-           FROM pairs GROUP BY 1, 2),
-         wins AS (
-           SELECT pk, sum(w)::BIGINT AS wins FROM (
-             SELECT a AS pk, wa AS w FROM nab
-             UNION ALL SELECT b AS pk, (n - wa) AS w FROM nab)
-           GROUP BY 1),
-         sym AS (
-           SELECT a AS pk, b AS opp, n FROM nab
-           UNION ALL SELECT b AS pk, a AS opp, n FROM nab),
-         p0 AS (SELECT pk, 1.0 AS p FROM wins),
-         d1 AS (
-           SELECT s.pk, list_sum(list_sort(list(
-             s.n::DOUBLE / (pa.p + pb.p)))) AS den
-           FROM sym s JOIN p0 pa ON s.pk = pa.pk
-           JOIN p0 pb ON s.opp = pb.pk
-           GROUP BY 1),
-         p1 AS (
-           SELECT w.pk, (w.wins::DOUBLE + 0.5) / d1.den AS p
-           FROM wins w JOIN d1 ON w.pk = d1.pk),
-         d2 AS (
-           SELECT s.pk, list_sum(list_sort(list(
-             s.n::DOUBLE / (pa.p + pb.p)))) AS den
-           FROM sym s JOIN p1 pa ON s.pk = pa.pk
-           JOIN p1 pb ON s.opp = pb.pk
-           GROUP BY 1),
-         p2 AS (
-           SELECT w.pk, (w.wins::DOUBLE + 0.5) / d2.den AS p
-           FROM wins w JOIN d2 ON w.pk = d2.pk),
-         z AS (SELECT list_sum(list_sort(list(p))) AS z FROM p2)
-         SELECT p2.pk, wins, round(p / z, 6) AS strength
-         FROM p2 JOIN wins USING (pk) CROSS JOIN z
-         ORDER BY p2.pk""",
-
-    "q221_priority_sampling" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg, c_custkey,
-             round(c_acctbal * 100)::BIGINT AS w,
-             (('0x' || substring(md5('0:' || c_custkey), 1, 12))::BIGINT
-               ::DOUBLE + 0.5) / 281474976710656.0 AS u
-           FROM customer WHERE c_acctbal > 0),
-         k AS (
-           SELECT *, -ln(u) / w::DOUBLE AS key,
-             row_number() OVER (PARTITION BY seg
-               ORDER BY -ln(u) / w::DOUBLE, c_custkey) AS rk
-           FROM c)
-         SELECT seg, rk::BIGINT AS rk, c_custkey, w,
-           round(key * 1e9, 6) AS priority_x1e9
-         FROM k WHERE rk <= 5 ORDER BY seg, rk""",
-
-    "q222_markov_entropy" ->
-      """WITH ev AS (
-           SELECT user_id, event_type, ts, event_id,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS nxt
-           FROM events),
-         tr AS (
-           SELECT user_id, event_type AS cur, nxt,
-             count(*)::BIGINT AS nij
-           FROM ev WHERE nxt IS NOT NULL GROUP BY 1, 2, 3),
-         ct AS (
-           SELECT user_id, cur, sum(nij)::BIGINT AS ni
-           FROM tr GROUP BY 1, 2),
-         ut AS (
-           SELECT user_id, sum(nij)::BIGINT AS n FROM tr GROUP BY 1),
-         terms AS (
-           SELECT tr.user_id, ut.n,
-             -(nij::DOUBLE / n) * ln(nij::DOUBLE / ni) AS term
-           FROM tr JOIN ct USING (user_id, cur)
-           JOIN ut USING (user_id))
-         SELECT user_id, max(n)::BIGINT AS n_transitions,
-           count(*)::BIGINT AS n_distinct_pairs,
-           round(list_sum(list_sort(list(term))), 6) AS cond_entropy
-         FROM terms GROUP BY 1 ORDER BY user_id""",
-
-    "q223_standardized_rate" ->
-      """WITH ev AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         strat AS (
-           SELECT user_id, length(bin(count(*)))::BIGINT AS stratum
-           FROM ev GROUP BY 1),
-         h AS (
-           SELECT ev.*, stratum, (us < mid) AS is_a
-           FROM ev CROSS JOIN span JOIN strat USING (user_id)),
-         rates AS (
-           SELECT stratum, count(*)::BIGINT AS na,
-             sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               ::BIGINT AS pa
-           FROM h WHERE is_a GROUP BY 1),
-         mix AS (
-           SELECT stratum, count(*)::BIGINT AS nb,
-             sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               ::BIGINT AS pb
-           FROM h WHERE NOT is_a GROUP BY 1),
-         j AS (
-           SELECT r.stratum, pb,
-             nb::DOUBLE * pa / na AS expected
-           FROM rates r JOIN mix USING (stratum))
-         SELECT sum(pb)::BIGINT AS actual,
-           round(list_sum(list_sort(list(expected))), 4) AS expected,
-           round(sum(pb)::DOUBLE
-             / list_sum(list_sort(list(expected))), 6) AS smr,
-           count(*)::BIGINT AS n_strata
-         FROM j""",
-
-    "q224_ab_fdr" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg, c_custkey,
-             (('0x' || substring(md5('0:' || c_custkey), 1, 12))::BIGINT
-               % 2 = 0) AS arm_a,
-             (c_acctbal > 4500.0) AS conv
-           FROM customer),
-         cell AS (
-           SELECT seg,
-             sum(CASE WHEN arm_a THEN 1 ELSE 0 END)::BIGINT AS na,
-             sum(CASE WHEN arm_a AND conv THEN 1 ELSE 0 END)::BIGINT
-               AS xa,
-             sum(CASE WHEN NOT arm_a THEN 1 ELSE 0 END)::BIGINT AS nb,
-             sum(CASE WHEN NOT arm_a AND conv THEN 1 ELSE 0 END)
-               ::BIGINT AS xb
-           FROM c GROUP BY 1),
-         zed AS (
-           SELECT *,
-             CASE WHEN (xa + xb) = 0 OR (xa + xb) = (na + nb) THEN 0.0
-               ELSE (xa::DOUBLE / na - xb::DOUBLE / nb) /
-                 sqrt(((xa + xb)::DOUBLE / (na + nb)) *
-                   (1.0 - (xa + xb)::DOUBLE / (na + nb)) *
-                   (1.0 / na + 1.0 / nb)) END AS z
-           FROM cell),
-         pp AS (
-           SELECT *, abs(z) AS az,
-             1.0 / (1.0 + 0.2316419 * abs(z)) AS tt
-           FROM zed),
-         pv AS (
-           SELECT *,
-             2.0 * exp(az * az * -0.5) * 0.3989422804014327 *
-               (((((1.330274429 * tt - 1.821255978) * tt
-                 + 1.781477937) * tt - 0.356563782) * tt
-                 + 0.319381530) * tt) AS p
-           FROM pp),
-         m AS (SELECT count(*)::BIGINT AS m FROM pv),
-         rks AS (
-           SELECT *, row_number() OVER (ORDER BY p, seg) AS rk,
-             rk::DOUBLE / m.m * 0.10 AS bh_thresh
-           FROM pv CROSS JOIN m),
-         mr AS (
-           SELECT max(CASE WHEN p <= bh_thresh THEN rk END) AS max_rej
-           FROM rks)
-         SELECT seg, na, nb, round(z, 4) AS z, round(p, 6) AS p_value,
-           rk::BIGINT AS rk, round(bh_thresh, 6) AS bh_thresh,
-           (rk <= coalesce(max_rej, 0)) AS rejected
-         FROM rks CROSS JOIN mr ORDER BY rk""",
-
-    "q225_mann_kendall" ->
-      """WITH daily AS (
-           SELECT (CAST(l_shipdate AS DATE) - DATE '1970-01-05')::BIGINT
-               AS tt,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-           FROM lineitem GROUP BY 1),
-         prs AS (
-           SELECT sign(b.cents - a.cents)::BIGINT AS sgn
-           FROM daily a JOIN daily b ON b.tt > a.tt),
-         st AS (
-           SELECT sum(sgn)::BIGINT AS s_stat,
-             count(*)::BIGINT AS n_pairs
-           FROM prs),
-         ties AS (
-           SELECT sum(tj * (tj - 1) * (2 * tj + 5))::BIGINT AS tie_corr
-           FROM (SELECT count(*)::BIGINT AS tj FROM daily
-                 GROUP BY cents)),
-         nn AS (SELECT count(*)::BIGINT AS n FROM daily),
-         v AS (
-           SELECT s_stat, n_pairs, n,
-             (n * (n - 1) * (2 * n + 5) - tie_corr)::DOUBLE / 18.0
-               AS vars
-           FROM st CROSS JOIN nn CROSS JOIN ties)
-         SELECT n AS n_days, n_pairs, s_stat,
-           round(vars, 2) AS var_s,
-           round(CASE WHEN s_stat > 0
-               THEN (s_stat - 1)::DOUBLE / sqrt(vars)
-             WHEN s_stat < 0 THEN (s_stat + 1)::DOUBLE / sqrt(vars)
-             ELSE 0.0 END, 4) AS z,
-           (abs(CASE WHEN s_stat > 0
-               THEN (s_stat - 1)::DOUBLE / sqrt(vars)
-             WHEN s_stat < 0 THEN (s_stat + 1)::DOUBLE / sqrt(vars)
-             ELSE 0.0 END) > 1.96) AS significant
-         FROM v""",
-
-    "q226_hodges_lehmann" ->
-      """WITH daily AS (
-           SELECT (CAST(l_shipdate AS DATE) - DATE '1970-01-05')::BIGINT
-               AS tt,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-           FROM lineitem GROUP BY 1),
-         pairs AS (
-           SELECT (a.cents + b.cents)::BIGINT AS half2, a.tt, b.tt AS t2
-           FROM daily a JOIN daily b ON b.tt >= a.tt),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY half2, tt, t2) AS rk,
-             count(*) OVER () AS np
-           FROM pairs),
-         med AS (
-           SELECT cents AS med_cents, nd FROM (
-             SELECT cents,
-               row_number() OVER (ORDER BY cents, tt) AS rk,
-               count(*) OVER () AS nd
-             FROM daily)
-           WHERE rk = (nd + 1) // 2),
-         mn AS (
-           SELECT sum(cents)::DOUBLE / count(*) AS mean_cents
-           FROM daily)
-         SELECT np::BIGINT AS n_pairs, nd::BIGINT AS n_days,
-           round(half2::DOUBLE / 200.0, 3) AS hl_location,
-           round(med_cents::DOUBLE / 100.0, 2) AS median,
-           round(mean_cents / 100.0, 2) AS mean
-         FROM r CROSS JOIN med CROSS JOIN mn
-         WHERE rk = (np + 1) // 2""",
-
-    "q227_var_cvar" ->
-      """WITH pnl AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum((CASE WHEN event_id % 2 = 0 THEN 1 ELSE -1 END)
-               * round(value * 100)::BIGINT)::BIGINT AS d
-           FROM events GROUP BY 1, 2),
-         r AS (
-           SELECT *, count(*) OVER (PARTITION BY ty) AS n,
-             row_number() OVER (PARTITION BY ty ORDER BY d, day) AS rk
-           FROM pnl),
-         k AS (SELECT *, (n + 19) // 20 AS k FROM r)
-         SELECT ty, max(n)::BIGINT AS n_days, max(k)::BIGINT AS k_tail,
-           (-max(d))::BIGINT AS var95_cents,
-           floor(-(sum(d)::DOUBLE / count(*)) + 0.5)::BIGINT
-             AS cvar95_cents,
-           max(CASE WHEN rk = 1 THEN strftime(day, '%Y-%m-%d') END)
-             AS worst_day
-         FROM k WHERE rk <= k GROUP BY 1 ORDER BY 1""",
-
-    "q228_qq_table" ->
-      """WITH a AS (
-           SELECT round(c_acctbal * 100)::BIGINT AS cents, c_custkey
-           FROM customer
-           WHERE c_mktsegment = 'AUTOMOBILE' AND c_acctbal > 0),
-         b AS (
-           SELECT round(c_acctbal * 100)::BIGINT AS cents, c_custkey
-           FROM customer
-           WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0),
-         ra AS (
-           SELECT cents, row_number() OVER (ORDER BY cents, c_custkey)
-               AS rk, count(*) OVER () AS n
-           FROM a),
-         rb AS (
-           SELECT cents, row_number() OVER (ORDER BY cents, c_custkey)
-               AS rk, count(*) OVER () AS n
-           FROM b),
-         da AS (
-           SELECT d.range AS dec, min(cents) AS q_auto
-           FROM ra CROSS JOIN range(1, 10) d
-           WHERE rk * 10 >= d.range * n AND (rk - 1) * 10 < d.range * n
-           GROUP BY 1),
-         db AS (
-           SELECT d.range AS dec, min(cents) AS q_build
-           FROM rb CROSS JOIN range(1, 10) d
-           WHERE rk * 10 >= d.range * n AND (rk - 1) * 10 < d.range * n
-           GROUP BY 1)
-         SELECT dec::BIGINT AS dec,
-           round(q_auto::DOUBLE / 100.0, 2) AS q_auto,
-           round(q_build::DOUBLE / 100.0, 2) AS q_build,
-           round(q_auto::DOUBLE / q_build, 4) AS ratio
-         FROM da JOIN db USING (dec) ORDER BY dec""",
-
-    "q229_mutual_information" ->
-      """WITH ev AS (
-           SELECT event_type AS ty, CAST(value AS DOUBLE) AS v
-           FROM events),
-         bounds AS (
-           SELECT quantile_cont(v,
-             [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-           FROM ev),
-         binned AS (
-           SELECT ty, 1 + len(list_filter(bs, x -> v > x)) AS bin
-           FROM ev CROSS JOIN bounds),
-         joint AS (
-           SELECT ty, bin, count(*)::BIGINT AS nij
-           FROM binned GROUP BY 1, 2),
-         rows_ AS (SELECT ty, sum(nij)::BIGINT AS ri
-                   FROM joint GROUP BY 1),
-         cols_ AS (SELECT bin, sum(nij)::BIGINT AS cj
-                   FROM joint GROUP BY 1),
-         tot AS (SELECT sum(nij)::BIGINT AS nn FROM joint),
-         mi AS (
-           SELECT list_sum(list_sort(list(
-             nij::DOUBLE / nn *
-               ln(nij::DOUBLE * nn / (ri::DOUBLE * cj))))) AS mi
-           FROM joint JOIN rows_ USING (ty) JOIN cols_ USING (bin)
-           CROSS JOIN tot),
-         hr AS (
-           SELECT list_sum(list_sort(list(
-             -(ri::DOUBLE / nn) * ln(ri::DOUBLE / nn)))) AS h_ty
-           FROM rows_ CROSS JOIN tot),
-         hc AS (
-           SELECT list_sum(list_sort(list(
-             -(cj::DOUBLE / nn) * ln(cj::DOUBLE / nn)))) AS h_bin
-           FROM cols_ CROSS JOIN tot)
-         SELECT round(mi, 6) AS mi, round(h_ty, 6) AS h_ty,
-           round(h_bin, 6) AS h_bin,
-           round(mi / least(h_ty, h_bin), 6) AS nmi
-         FROM mi CROSS JOIN hr CROSS JOIN hc""",
-
-    "q230_robust_location" ->
-      """WITH li AS (
-           SELECT l_returnflag AS flag,
-             round(l_extendedprice * 100)::BIGINT AS cents,
-             l_orderkey, l_linenumber
-           FROM lineitem),
-         r AS (
-           SELECT *, count(*) OVER (PARTITION BY flag) AS n,
-             row_number() OVER (PARTITION BY flag
-               ORDER BY cents, l_orderkey, l_linenumber) AS rk
-           FROM li),
-         c AS (
-           SELECT *, (n + 9) // 10 AS lo, n - (n + 9) // 10 AS hi
-           FROM r),
-         lov AS (
-           SELECT flag, cents AS lov FROM c WHERE rk = lo + 1),
-         hiv AS (
-           SELECT flag, cents AS hiv FROM c WHERE rk = hi)
-         SELECT c.flag, max(n)::BIGINT AS n,
-           round(sum(cents)::DOUBLE / max(n) / 100.0, 2) AS mean,
-           round(sum(CASE WHEN rk > lo AND rk <= hi THEN cents END)
-             ::DOUBLE / sum(CASE WHEN rk > lo AND rk <= hi
-               THEN 1 ELSE 0 END) / 100.0, 2) AS trimmed10,
-           round(sum(least(greatest(cents, lov), hiv))::DOUBLE
-             / max(n) / 100.0, 2) AS winsorized10,
-           round(min(CASE WHEN rk * 2 >= n THEN cents END)::DOUBLE
-             / 100.0, 2) AS median
-         FROM c JOIN lov USING (flag) JOIN hiv USING (flag)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q231_embedding_isotropy" ->
-      """WITH e AS (
-           SELECT vec_id, vec_id % 4096 AS bk,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         px AS (
-           SELECT bk, u.pos, u.x FROM e,
-             LATERAL (SELECT unnest(range(1, len(v) + 1)) AS pos,
-               unnest(v) AS x) u),
-         cells AS (
-           SELECT pos, bk, list_sum(list_sort(list(x))) AS s1,
-             count(*)::BIGINT AS n1
-           FROM px GROUP BY 1, 2),
-         mu AS (
-           SELECT pos, list_sum(list_sort(list(s1))) / sum(n1) AS mu
-           FROM cells GROUP BY 1),
-         mu2 AS (
-           SELECT list_sum(list_sort(list(mu * mu))) AS mu_norm2,
-             count(*)::BIGINT AS dims
-           FROM mu),
-         rows_ AS (
-           SELECT bk,
-             list_sum(list_transform(v, x -> x * x)) AS n2
-           FROM e),
-         l1 AS (
-           SELECT bk, list_sum(list_sort(list(sqrt(n2)))) AS sn,
-             list_sum(list_sort(list(n2))) AS sn2,
-             count(*)::BIGINT AS nb
-           FROM rows_ GROUP BY 1),
-         l2 AS (
-           SELECT list_sum(list_sort(list(sn))) AS sn,
-             list_sum(list_sort(list(sn2))) AS sn2,
-             sum(nb)::BIGINT AS n
-           FROM l1)
-         SELECT n, dims, round(sn / n, 6) AS mean_norm,
-           round(mu_norm2 / (sn2 / n), 6) AS isotropy
-         FROM l2 CROSS JOIN mu2""",
-
-    "q232_ann_recall" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         qs AS (
-           SELECT vec_id AS qid, v AS q, nm AS qn FROM nr
-           WHERE vec_id % 101 = 0),
-         cent AS (
-           SELECT vec_id AS cid, v AS cv, nm AS cn FROM nr
-           WHERE vec_id < 16),
-         exact AS (
-           SELECT qid, vec_id FROM (
-             SELECT q.qid, n.vec_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * q.q[i])) / (n.nm * q.qn), 6) DESC,
-                 n.vec_id) AS rn
-             FROM nr n CROSS JOIN qs q WHERE n.vec_id <> q.qid)
-           WHERE rn <= 10),
-         assigned AS (
-           SELECT vec_id, v, nm, cid AS cluster FROM (
-             SELECT n.vec_id, n.v, n.nm, c.cid,
-               row_number() OVER (PARTITION BY n.vec_id ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * c.cv[i])) / (n.nm * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM nr n CROSS JOIN cent c)
-           WHERE rn = 1),
-         qcl AS (
-           SELECT qid, q, qn, cid AS cluster FROM (
-             SELECT s.qid, s.q, s.qn, c.cid,
-               row_number() OVER (PARTITION BY s.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(s.q) + 1),
-                   i -> s.q[i] * c.cv[i])) / (s.qn * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM qs s CROSS JOIN cent c)
-           WHERE rn = 1),
-         approx AS (
-           SELECT qid, vec_id FROM (
-             SELECT k.qid, a.vec_id,
-               row_number() OVER (PARTITION BY k.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(a.v) + 1),
-                   i -> a.v[i] * k.q[i])) / (a.nm * k.qn), 6) DESC,
-                 a.vec_id) AS rn
-             FROM assigned a JOIN qcl k ON a.cluster = k.cluster
-             WHERE a.vec_id <> k.qid)
-           WHERE rn <= 10)
-         SELECT e.qid, count(*)::BIGINT AS n_truth,
-           sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::BIGINT AS n_hit,
-           round(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::DOUBLE / count(*), 4) AS recall
-         FROM exact e LEFT JOIN approx ap
-           ON e.qid = ap.qid AND e.vec_id = ap.vec_id
-         GROUP BY 1 ORDER BY 1""",
-
-    "q233_sampling_temperature" ->
-      """WITH cnt AS (
-           SELECT source, count(*)::BIGINT AS n_docs,
-             sum(n_chars)::BIGINT AS n_chars
-           FROM documents GROUP BY 1),
-         z AS (
-           SELECT list_sum(list_sort(list(sqrt(n_docs::DOUBLE)))) AS z,
-             sum(n_docs)::BIGINT AS nn
-           FROM cnt)
-         SELECT source, n_docs, n_chars,
-           round(sqrt(n_docs::DOUBLE) / z, 6) AS p_sample,
-           round(sqrt(n_docs::DOUBLE) / z * nn / n_docs, 4)
-             AS oversample_x
-         FROM cnt CROSS JOIN z ORDER BY source""",
-
-    "q234_padding_waste" ->
-      """WITH lens AS (
-           SELECT len(string_split(lower(trim(
-             regexp_replace(text, '\s+', ' ', 'g'))), ' '))::BIGINT
-             AS len
-           FROM documents),
-         b AS (
-           SELECT len,
-             CASE WHEN len = 1 THEN 1
-               ELSE 1 << length(bin(greatest(len - 1, 1))) END::BIGINT
-               AS cap
-           FROM lens WHERE len >= 1)
-         SELECT cap, count(*)::BIGINT AS n_docs,
-           sum(len)::BIGINT AS n_tokens,
-           sum(cap - len)::BIGINT AS n_pad,
-           round(sum(cap - len)::DOUBLE
-             / (sum(len) + sum(cap - len)), 6) AS padding_frac
-         FROM b GROUP BY 1 ORDER BY 1""",
-
-    "q235_cardinality_model" ->
-      """WITH probes AS (
-           SELECT 'orders_customer' AS join_name,
-             (SELECT count(*) FROM orders)::BIGINT AS n_left,
-             (SELECT count(DISTINCT o_custkey) FROM orders)::BIGINT
-               AS d_left,
-             (SELECT count(*) FROM customer)::BIGINT AS n_right,
-             (SELECT count(DISTINCT c_custkey) FROM customer)::BIGINT
-               AS d_right,
-             (SELECT count(*) FROM orders o JOIN customer c
-               ON o.o_custkey = c.c_custkey)::BIGINT AS actual
-           UNION ALL
-           SELECT 'lineitem_part',
-             (SELECT count(*) FROM lineitem)::BIGINT,
-             (SELECT count(DISTINCT l_partkey) FROM lineitem)::BIGINT,
-             (SELECT count(*) FROM part)::BIGINT,
-             (SELECT count(DISTINCT p_partkey) FROM part)::BIGINT,
-             (SELECT count(*) FROM lineitem l JOIN part p
-               ON l.l_partkey = p.p_partkey)::BIGINT
-           UNION ALL
-           SELECT 'lineitem_supplier',
-             (SELECT count(*) FROM lineitem)::BIGINT,
-             (SELECT count(DISTINCT l_suppkey) FROM lineitem)::BIGINT,
-             (SELECT count(*) FROM supplier)::BIGINT,
-             (SELECT count(DISTINCT s_suppkey) FROM supplier)::BIGINT,
-             (SELECT count(*) FROM lineitem l JOIN supplier s
-               ON l.l_suppkey = s.s_suppkey)::BIGINT)
-         SELECT join_name, n_left, d_left, n_right, d_right,
-           floor(n_left::DOUBLE * n_right
-             / greatest(d_left, d_right) + 0.5)::BIGINT AS est,
-           actual,
-           round(greatest(
-             floor(n_left::DOUBLE * n_right
-               / greatest(d_left, d_right) + 0.5)::DOUBLE / actual,
-             actual::DOUBLE /
-               floor(n_left::DOUBLE * n_right
-                 / greatest(d_left, d_right) + 0.5)), 4) AS q_error
-         FROM probes ORDER BY join_name""",
-
-    "q236_rrf_fusion" ->
-      """WITH rev AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(round(l_extendedprice * 100)::BIGINT) DESC,
-               l_partkey) AS ra
-           FROM lineitem GROUP BY l_partkey QUALIFY ra <= 50),
-         qty AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(CAST(l_quantity AS BIGINT)) DESC, l_partkey) AS rb
-           FROM lineitem GROUP BY l_partkey QUALIFY rb <= 50),
-         f AS (
-           SELECT coalesce(rev.l_partkey, qty.l_partkey) AS l_partkey,
-             ra, rb,
-             coalesce(1.0 / (ra + 60), 0.0)
-               + coalesce(1.0 / (rb + 60), 0.0) AS rrf
-           FROM rev FULL OUTER JOIN qty USING (l_partkey)),
-         rk AS (
-           SELECT *, row_number() OVER (ORDER BY rrf DESC, l_partkey)
-             AS fused_rank
-           FROM f)
-         SELECT fused_rank::BIGINT AS fused_rank, l_partkey,
-           ra::BIGINT AS ra, rb::BIGINT AS rb, round(rrf, 6) AS rrf
-         FROM rk WHERE fused_rank <= 20 ORDER BY fused_rank""",
-
-    "q237_popularity_hitrate" ->
-      """WITH li AS (
-           SELECT l_partkey, epoch_us(l_shipdate) AS us FROM lineitem),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM li),
-         t10 AS (
-           SELECT l_partkey FROM (
-             SELECT l_partkey, count(*) AS n,
-               row_number() OVER (ORDER BY count(*) DESC, l_partkey)
-                 AS rk
-             FROM li CROSS JOIN span WHERE us < mid GROUP BY l_partkey)
-           WHERE rk <= 10)
-         SELECT count(*)::BIGINT AS n_test,
-           sum(CASE WHEN t10.l_partkey IS NOT NULL THEN 1 ELSE 0 END)
-             ::BIGINT AS n_hits,
-           round(sum(CASE WHEN t10.l_partkey IS NOT NULL
-             THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS hit_rate
-         FROM li CROSS JOIN span LEFT JOIN t10 USING (l_partkey)
-         WHERE us >= mid""",
-
-    "q238_abc_classification" ->
-      """WITH rev AS (
-           SELECT l_partkey,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS v
-           FROM lineitem GROUP BY 1),
-         tot AS (SELECT sum(v)::BIGINT AS tv FROM rev),
-         rk AS (
-           SELECT v, tv,
-             sum(v) OVER (ORDER BY v DESC, l_partkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum
-           FROM rev CROSS JOIN tot),
-         cls AS (
-           SELECT *, CASE WHEN cum * 100 <= tv * 80 THEN 'A'
-             WHEN cum * 100 <= tv * 95 THEN 'B' ELSE 'C' END AS cls
-           FROM rk)
-         SELECT cls, count(*)::BIGINT AS n_parts,
-           sum(v)::BIGINT AS rev_cents,
-           round(sum(v)::DOUBLE / max(tv), 6) AS rev_share
-         FROM cls GROUP BY 1 ORDER BY 1""",
-
-    "q239_duplicate_payments" ->
-      """WITH o AS (
-           SELECT o_custkey,
-             round(o_totalprice * 100)::BIGINT // 500000 AS bucket,
-             CAST(o_orderdate AS DATE) AS day, o_orderkey
-           FROM orders),
-         l AS (
-           SELECT *,
-             lag(day) OVER (PARTITION BY o_custkey, bucket
-               ORDER BY day, o_orderkey) AS pday,
-             lag(o_orderkey) OVER (PARTITION BY o_custkey, bucket
-               ORDER BY day, o_orderkey) AS pkey
-           FROM o)
-         SELECT o_custkey, pkey AS first_key, o_orderkey AS dup_key,
-           bucket AS amount_bucket,
-           (day - pday)::BIGINT AS gap_days
-         FROM l WHERE pday IS NOT NULL AND day - pday <= 90
-         ORDER BY o_custkey, dup_key""",
-
-    "q240_error_budget" ->
-      """WITH daily AS (
-           SELECT CAST(ts AS DATE) AS day, count(*)::BIGINT AS n,
-             sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-               ::BIGINT AS e
-           FROM events GROUP BY 1),
-         r AS (
-           SELECT day,
-             sum(n) OVER (ORDER BY day
-               ROWS BETWEEN 29 PRECEDING AND CURRENT ROW) AS n30,
-             sum(e) OVER (ORDER BY day
-               ROWS BETWEEN 29 PRECEDING AND CURRENT ROW) AS e30
-           FROM daily)
-         SELECT day::VARCHAR AS day, n30::BIGINT AS n30,
-           e30::BIGINT AS e30,
-           round(e30::DOUBLE * 100.0 / n30, 4) AS err_pct,
-           (e30 * 100 > n30) AS over_budget
-         FROM r ORDER BY day""",
-
-    "q241_recursive_rollup" ->
-      """WITH RECURSIVE anc AS (
-           SELECT p_partkey AS pk, p_partkey AS node, 0 AS depth
-           FROM part
-           UNION ALL
-           SELECT pk, node // 10 AS node, depth + 1
-           FROM anc WHERE node >= 10),
-         rooted AS (
-           SELECT pk, node AS root, depth
-           FROM anc WHERE node < 10),
-         rev AS (
-           SELECT l_partkey AS pk,
-             sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS v
-           FROM lineitem GROUP BY 1)
-         SELECT root, max(depth)::BIGINT AS max_depth,
-           count(*)::BIGINT AS n_parts,
-           sum(coalesce(v, 0))::BIGINT AS rev_cents
-         FROM rooted LEFT JOIN rev USING (pk)
-         GROUP BY root ORDER BY root""",
-
-    "q242_novelty_decay" ->
-      """WITH w AS (
-           SELECT doc_id % 8 AS wk,
-             string_split(lower(trim(regexp_replace(text, '\s+', ' ',
-               'g'))), ' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT wk,
-             unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS g
-           FROM w),
-         fw AS (SELECT g, min(wk) AS fw FROM sh GROUP BY 1),
-         pw AS (SELECT wk, count(*)::BIGINT AS n_distinct
-                FROM sh GROUP BY 1),
-         nv AS (SELECT fw AS wk, count(*)::BIGINT AS n_new
-                FROM fw GROUP BY 1)
-         SELECT pw.wk::BIGINT AS wk, n_distinct,
-           coalesce(n_new, 0)::BIGINT AS n_new,
-           round(coalesce(n_new, 0)::DOUBLE / n_distinct, 6)
-             AS novelty_rate
-         FROM pw LEFT JOIN nv ON pw.wk = nv.wk
-         ORDER BY wk""",
-
-    "q243_water_filling" ->
-      """WITH cnt AS (
-           SELECT source,
-             sum(len(string_split(lower(trim(regexp_replace(text,
-               '\s+', ' ', 'g'))), ' ')))::BIGINT AS n_tok
-           FROM documents GROUP BY 1),
-         tot AS (
-           SELECT count(*)::BIGINT AS m, sum(n_tok) // 2 AS b
-           FROM cnt),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY n_tok, source) AS rk,
-             sum(n_tok) OVER (ORDER BY n_tok, source
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum
-           FROM cnt CROSS JOIN tot),
-         lvl AS (
-           SELECT coalesce(max(CASE WHEN (cum - n_tok)
-               + n_tok * (m - rk + 1) <= b THEN rk END), 0) AS kfull
-           FROM r),
-         ck AS (
-           SELECT coalesce(max(CASE WHEN rk <= kfull THEN cum END), 0)
-             AS cumk
-           FROM r CROSS JOIN lvl)
-         SELECT source, n_tok,
-           (CASE WHEN rk <= kfull THEN n_tok
-             ELSE (b - cumk) // (m - kfull)
-               + (CASE WHEN rk - kfull <= (b - cumk) % (m - kfull)
-                 THEN 1 ELSE 0 END) END)::BIGINT AS alloc,
-           (CASE WHEN rk <= kfull THEN n_tok
-             ELSE (b - cumk) // (m - kfull)
-               + (CASE WHEN rk - kfull <= (b - cumk) % (m - kfull)
-                 THEN 1 ELSE 0 END) END < n_tok) AS clipped
-         FROM r CROSS JOIN lvl CROSS JOIN ck
-         ORDER BY source""",
-
-    "q244_hard_negatives" ->
-      """WITH e AS (
-           SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, label, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         an AS (
-           SELECT vec_id AS aid, label AS albl, v AS av, nm AS anm
-           FROM nr WHERE vec_id % 101 = 0),
-         sc AS (
-           SELECT an.aid, an.albl, nr.vec_id, nr.label,
-             round(list_sum(list_transform(range(1, len(nr.v) + 1),
-               i -> nr.v[i] * an.av[i])) / (nr.nm * an.anm), 6) AS cs,
-             row_number() OVER (PARTITION BY an.aid ORDER BY
-               round(list_sum(list_transform(range(1, len(nr.v) + 1),
-                 i -> nr.v[i] * an.av[i])) / (nr.nm * an.anm), 6)
-               DESC, nr.vec_id) AS rn
-           FROM nr CROSS JOIN an WHERE nr.label <> an.albl)
-         SELECT aid, albl, vec_id AS hard_neg, label AS neg_label,
-           cs AS cosine
-         FROM sc WHERE rn = 1 ORDER BY aid""",
-
-    "q245_class_weights" ->
-      """WITH cnt AS (
-           SELECT label, count(*)::BIGINT AS n,
-             (1.0 - 0.999) / (1.0 - pow(0.999, count(*)::DOUBLE))
-               AS raw
-           FROM embeddings GROUP BY 1),
-         z AS (
-           SELECT list_sum(list_sort(list(raw))) AS z,
-             count(*)::BIGINT AS k
-           FROM cnt)
-         SELECT label, n, round(raw * k / z, 6) AS weight
-         FROM cnt CROSS JOIN z ORDER BY label""",
-
-    "q246_knn_label_purity" ->
-      """WITH e AS (
-           SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, label, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         an AS (
-           SELECT vec_id AS aid, label AS albl, v AS av, nm AS anm
-           FROM nr WHERE vec_id % 101 = 0),
-         sc AS (
-           SELECT an.aid, an.albl, nr.label,
-             row_number() OVER (PARTITION BY an.aid ORDER BY
-               round(list_sum(list_transform(range(1, len(nr.v) + 1),
-                 i -> nr.v[i] * an.av[i])) / (nr.nm * an.anm), 6)
-               DESC, nr.vec_id) AS rn
-           FROM nr CROSS JOIN an WHERE nr.vec_id <> an.aid),
-         ag AS (
-           SELECT aid, albl,
-             sum(CASE WHEN label = albl THEN 1 ELSE 0 END)::BIGINT
-               AS agree
-           FROM sc WHERE rn <= 5 GROUP BY 1, 2)
-         SELECT albl AS label, count(*)::BIGINT AS n_anchors,
-           sum(agree)::BIGINT AS n_agree,
-           round(sum(agree)::DOUBLE / (count(*) * 5), 4)
-             AS mean_purity
-         FROM ag GROUP BY 1 ORDER BY 1""",
-
-    "q247_dedup_impact" ->
-      """WITH d AS (
-           SELECT source, doc_id,
-             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-               AS fp,
-             len(string_split(lower(trim(regexp_replace(text, '\s+',
-               ' ', 'g'))), ' '))::BIGINT AS tok
-           FROM documents),
-         k AS (
-           SELECT *, (row_number() OVER (PARTITION BY fp
-             ORDER BY doc_id) = 1) AS kept
-           FROM d)
-         SELECT source, count(*)::BIGINT AS docs_before,
-           sum(CASE WHEN kept THEN 1 ELSE 0 END)::BIGINT AS docs_after,
-           sum(tok)::BIGINT AS tokens_before,
-           sum(CASE WHEN kept THEN tok ELSE 0 END)::BIGINT
-             AS tokens_after,
-           round(sum(tok)::DOUBLE
-             / sum(CASE WHEN kept THEN tok ELSE 0 END), 4)
-             AS dup_factor
-         FROM k GROUP BY 1 ORDER BY 1""",
-     "q248_geohash" ->
-      """WITH cust AS (
-           SELECT c_custkey,
-             (c_custkey * 37547 % 17000) / 100.0 - 85.0 AS lat,
-             (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
-           FROM customer),
-         q AS (
-           SELECT c_custkey,
-             floor((lon + 180.0) / 360.0 * 8192)::BIGINT AS lonb,
-             floor((lat + 90.0) / 180.0 * 4096)::BIGINT AS latb
-           FROM cust),
-         bits AS (
-           SELECT c_custkey, lonb, latb, i.range AS i,
-             (CASE WHEN i.range % 2 = 0
-               THEN (lonb // CAST(pow(2, 12 - i.range // 2) AS BIGINT))
-                 % 2
-               ELSE (latb // CAST(pow(2, 11 - i.range // 2) AS BIGINT))
-                 % 2 END)
-               * CAST(pow(2, 24 - i.range) AS BIGINT) AS contrib
-           FROM q CROSS JOIN range(0, 25) i),
-         m AS (
-           SELECT c_custkey, sum(contrib)::BIGINT AS m
-           FROM bits GROUP BY 1),
-         gh AS (
-           SELECT c_custkey,
-             substring('0123456789bcdefghjkmnpqrstuvwxyz',
-               ((m // 1048576) % 32 + 1)::INT, 1) ||
-             substring('0123456789bcdefghjkmnpqrstuvwxyz',
-               ((m // 32768) % 32 + 1)::INT, 1) ||
-             substring('0123456789bcdefghjkmnpqrstuvwxyz',
-               ((m // 1024) % 32 + 1)::INT, 1) ||
-             substring('0123456789bcdefghjkmnpqrstuvwxyz',
-               ((m // 32) % 32 + 1)::INT, 1) ||
-             substring('0123456789bcdefghjkmnpqrstuvwxyz',
-               (m % 32 + 1)::INT, 1) AS gh
-           FROM m)
-         SELECT c_custkey, gh FROM gh ORDER BY c_custkey""",
-
-    "q249_markov_backtest" ->
-      """WITH ev AS (
-           SELECT user_id, event_type, ts, event_id, epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         s0 AS (
-           SELECT ev.*, mid,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS nxt,
-             lead(us) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS nxt_us
-           FROM ev CROSS JOIN span),
-         model AS (
-           SELECT cur, nxt AS pred FROM (
-             SELECT event_type AS cur, nxt, count(*) AS n,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY count(*) DESC, nxt) AS rn
-             FROM s0 WHERE nxt IS NOT NULL AND nxt_us < mid
-             GROUP BY 1, 2)
-           WHERE rn = 1)
-         SELECT event_type, count(*)::BIGINT AS n_test,
-           sum(CASE WHEN nxt = pred THEN 1 ELSE 0 END)::BIGINT
-             AS n_correct,
-           max(pred) AS predicted_next,
-           round(sum(CASE WHEN nxt = pred THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 4) AS accuracy
-         FROM s0 LEFT JOIN model ON s0.event_type = model.cur
-         WHERE nxt IS NOT NULL AND us >= mid
-         GROUP BY 1 ORDER BY 1""",
-
-    "q250_cuped" ->
-      """WITH ev AS (
-           SELECT user_id, round(value * 100)::BIGINT AS cents,
-             epoch_us(ts) AS us
-           FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         per AS (
-           SELECT user_id,
-             sum(CASE WHEN us < mid THEN cents ELSE 0 END)::BIGINT
-               AS x,
-             sum(CASE WHEN us >= mid THEN cents ELSE 0 END)::BIGINT
-               AS y
-           FROM ev CROSS JOIN span GROUP BY 1),
-         m AS (
-           SELECT count(*)::BIGINT AS n, sum(x) AS sx, sum(y) AS sy,
-             sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-           FROM per)
-         SELECT n AS n_users,
-           round((n * sxy - sx * sy)::DOUBLE
-             / (n * sxx - sx * sx)::DOUBLE, 6) AS theta,
-           round(((n * sxy - sx * sy)::DOUBLE
-               * (n * sxy - sx * sy)::DOUBLE)
-             / ((n * sxx - sx * sx)::DOUBLE
-               * (n * syy - sy * sy)::DOUBLE), 6) AS rho2,
-           round(1.0 - ((n * sxy - sx * sy)::DOUBLE
-               * (n * sxy - sx * sy)::DOUBLE)
-             / ((n * sxx - sx * sx)::DOUBLE
-               * (n * syy - sy * sy)::DOUBLE), 6) AS var_ratio
-         FROM m""",
-
-    "q251_decomposition" ->
-      """WITH daily AS (
-           SELECT CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS cents,
-             ((CAST(ts AS DATE) - DATE '1970-01-05') % 7 + 7) % 7
-               AS dow
-           FROM events GROUP BY 1, 3),
-         tr AS (
-           SELECT *,
-             count(*) OVER (ORDER BY day
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS nw,
-             sum(cents) OVER (ORDER BY day
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)::DOUBLE / 7.0
-               AS trend
-           FROM daily),
-         det AS (
-           SELECT *, cents - trend AS detr FROM tr WHERE nw = 7),
-         seas AS (
-           SELECT dow,
-             list_sum(list_sort(list(detr))) / count(*) AS seasonal
-           FROM det GROUP BY 1),
-         dec AS (
-           SELECT det.*, seasonal, detr - seasonal AS resid
-           FROM det JOIN seas USING (dow))
-         SELECT dow::BIGINT AS dow, count(*)::BIGINT AS n_days,
-           round(max(seasonal) / 100.0, 4) AS seasonal,
-           round(list_sum(list_sort(list(resid * resid)))
-             / count(*) / 10000.0, 2) AS resid_var,
-           round(list_sum(list_sort(list(abs(resid))))
-             / count(*) / 100.0, 4) AS resid_mad
-         FROM dec GROUP BY 1 ORDER BY 1""",
-
-    "q252_aa_calibration" ->
-      """WITH per AS (
-           SELECT user_id,
-             (sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               > 0)::BIGINT AS y
-           FROM events GROUP BY 1),
-         sp AS (
-           SELECT user_id, y, s.range AS seed,
-             (('0x' || substring(md5('0:' || s.range || ':' || user_id),
-               1, 12))::BIGINT % 2 = 0) AS arm_a
-           FROM per CROSS JOIN range(0, 20) s),
-         cells AS (
-           SELECT seed,
-             sum(CASE WHEN arm_a THEN 1 ELSE 0 END)::BIGINT AS na,
-             sum(CASE WHEN arm_a THEN y ELSE 0 END)::BIGINT AS xa,
-             sum(CASE WHEN NOT arm_a THEN 1 ELSE 0 END)::BIGINT AS nb,
-             sum(CASE WHEN NOT arm_a THEN y ELSE 0 END)::BIGINT AS xb
-           FROM sp GROUP BY 1),
-         z AS (
-           SELECT *, (xa + xb)::DOUBLE / (na + nb) AS pp
-           FROM cells)
-         SELECT seed::BIGINT AS seed, na, nb,
-           round(CASE WHEN pp = 0 OR pp = 1 THEN 0.0
-             ELSE (xa::DOUBLE / na - xb::DOUBLE / nb)
-               / sqrt(pp * (1.0 - pp) * (1.0 / na + 1.0 / nb)) END, 4)
-             AS z,
-           (abs(CASE WHEN pp = 0 OR pp = 1 THEN 0.0
-             ELSE (xa::DOUBLE / na - xb::DOUBLE / nb)
-               / sqrt(pp * (1.0 - pp) * (1.0 / na + 1.0 / nb)) END)
-             > 1.96) AS rejected
-         FROM z ORDER BY seed""",
-
-    "q253_rank_gauss" ->
-      """WITH ev AS (
-           SELECT event_id, event_type AS ty,
-             round(value * 100)::BIGINT AS cents
-           FROM events),
-         r AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY ty
-               ORDER BY cents, event_id) AS rk,
-             count(*) OVER (PARTITION BY ty) AS n
-           FROM ev),
-         u AS (
-           SELECT *, (rk::DOUBLE - 0.5) / n AS u,
-             (rk::DOUBLE - 0.5) / n - 0.5 AS rr
-           FROM r),
-         f AS (
-           SELECT *, rr * rr AS r2,
-             CASE WHEN u < 0.5 THEN u ELSE 1.0 - u END AS w
-           FROM u),
-         g AS (
-           SELECT *, ln(-ln(w)) AS kk,
-             rr * (((-25.44106049637 * r2 + 41.39119773534) * r2
-               - 18.61500062529) * r2 + 2.50662823884) /
-               ((((3.13082909833 * r2 - 21.06224101826) * r2
-               + 23.08336743743) * r2 - 8.47351093090) * r2 + 1.0)
-               AS central
-           FROM f),
-         h AS (
-           SELECT *,
-             ((((((((0.0000003960315187 * kk + 0.0000002888167364) * kk
-               + 0.0000321767881768) * kk + 0.0003951896511919) * kk
-               + 0.0038405729373609) * kk + 0.0276438810333863) * kk
-               + 0.1607979714918209) * kk + 0.9761690190917186) * kk
-               + 0.3374754822726147) AS tail
-           FROM g),
-         tf AS (
-           SELECT *, CASE WHEN abs(rr) <= 0.42 THEN central
-             WHEN u < 0.5 THEN -tail ELSE tail END AS rg
-           FROM h),
-         mom AS (
-           SELECT ty, count(*)::BIGINT AS n_rows,
-             round(list_sum(list_sort(list(rg))) / count(*), 4) + 0.0
-               AS mean_rg,
-             round(sqrt(list_sum(list_sort(list(rg * rg)))
-               / count(*)), 4) AS std_rg
-           FROM tf GROUP BY 1)
-         SELECT tf.ty, event_id, round(u, 6) AS u,
-           round(rg, 4) AS rank_gauss, n_rows, mean_rg, std_rg
-         FROM tf JOIN mom ON tf.ty = mom.ty
-         WHERE event_id % 997 = 0
-         ORDER BY tf.ty, event_id""",
-
-    "q254_bloom_fpr" ->
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) AS us FROM events),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-         h AS (
-           SELECT user_id, (min(us) < mid) AS in_a
-           FROM ev CROSS JOIN span GROUP BY user_id, mid),
-         bits AS (
-           SELECT unnest([
-             ('0x' || substring(md5('0:bl0:' || user_id), 1, 12))
-               ::BIGINT % 2048,
-             ('0x' || substring(md5('0:bl1:' || user_id), 1, 12))
-               ::BIGINT % 2048,
-             ('0x' || substring(md5('0:bl2:' || user_id), 1, 12))
-               ::BIGINT % 2048]) AS hb
-           FROM h WHERE in_a),
-         words AS (
-           SELECT hb // 63 AS w, bit_or(1::BIGINT << (hb % 63)::INT)
-             AS word
-           FROM bits GROUP BY 1),
-         probes AS (
-           SELECT user_id,
-             ('0x' || substring(md5('0:bl0:' || user_id), 1, 12))
-               ::BIGINT % 2048 AS h0,
-             ('0x' || substring(md5('0:bl1:' || user_id), 1, 12))
-               ::BIGINT % 2048 AS h1,
-             ('0x' || substring(md5('0:bl2:' || user_id), 1, 12))
-               ::BIGINT % 2048 AS h2
-           FROM h WHERE NOT in_a),
-         ww AS (
-           SELECT p.*,
-             w0.word AS word0, w1.word AS word1, w2.word AS word2
-           FROM probes p
-           LEFT JOIN words w0 ON p.h0 // 63 = w0.w
-           LEFT JOIN words w1 ON p.h1 // 63 = w1.w
-           LEFT JOIN words w2 ON p.h2 // 63 = w2.w),
-         res AS (
-           SELECT count(*)::BIGINT AS n_probes,
-             sum(CASE WHEN word0 IS NOT NULL
-               AND (word0 & (1::BIGINT << (h0 % 63)::INT)) != 0
-               AND word1 IS NOT NULL
-               AND (word1 & (1::BIGINT << (h1 % 63)::INT)) != 0
-               AND word2 IS NOT NULL
-               AND (word2 & (1::BIGINT << (h2 % 63)::INT)) != 0
-               THEN 1 ELSE 0 END)::BIGINT AS n_fp
-           FROM ww),
-         na AS (SELECT count(*)::BIGINT AS n_a FROM h WHERE in_a)
-         SELECT n_a, n_probes, n_fp,
-           round(n_fp::DOUBLE / n_probes, 4) AS fpr_measured,
-           round(pow(1.0 - exp(-3.0 * n_a / 2048.0), 3.0), 4)
-             AS fpr_theory
-         FROM res CROSS JOIN na""",
-
-    "q255_strict_funnel" ->
-      """WITH ev AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-         su AS (
-           SELECT user_id, min(us) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         cl AS (
-           SELECT ev.user_id, min(us) AS t1
-           FROM ev JOIN su USING (user_id)
-           WHERE event_type = 'click' AND us >= t0
-             AND us <= t0 + 604800000000
-           GROUP BY 1),
-         pu AS (
-           SELECT ev.user_id, min(us) AS t2
-           FROM ev JOIN cl USING (user_id)
-           WHERE event_type = 'purchase' AND us >= t1
-             AND us <= t1 + 604800000000
-           GROUP BY 1),
-         n0 AS (SELECT count(*)::BIGINT AS n_signup FROM su),
-         n1 AS (SELECT count(*)::BIGINT AS n_click_7d FROM cl),
-         n2 AS (SELECT count(*)::BIGINT AS n_purchase_7d FROM pu)
-         SELECT n_signup, n_click_7d, n_purchase_7d,
-           round(n_click_7d::DOUBLE / n_signup, 4) AS step1_rate,
-           round(n_purchase_7d::DOUBLE / n_click_7d, 4) AS step2_rate,
-           round(n_purchase_7d::DOUBLE / n_signup, 4) AS overall_rate
-         FROM n0 CROSS JOIN n1 CROSS JOIN n2""",
-
-    "q256_salt_planner" ->
-      """WITH s1 AS (
-           SELECT 'lineitem.l_orderkey' AS join_key,
-             count(*)::BIGINT AS n_keys, sum(n)::BIGINT AS n_rows,
-             max(n)::BIGINT AS max_key_rows
-           FROM (SELECT l_orderkey, count(*)::BIGINT AS n
-                 FROM lineitem GROUP BY 1)),
-         s2 AS (
-           SELECT 'lineitem.l_partkey', count(*)::BIGINT,
-             sum(n)::BIGINT, max(n)::BIGINT
-           FROM (SELECT l_partkey, count(*)::BIGINT AS n
-                 FROM lineitem GROUP BY 1)),
-         s3 AS (
-           SELECT 'lineitem.l_suppkey', count(*)::BIGINT,
-             sum(n)::BIGINT, max(n)::BIGINT
-           FROM (SELECT l_suppkey, count(*)::BIGINT AS n
-                 FROM lineitem GROUP BY 1)),
-         s4 AS (
-           SELECT 'orders.o_custkey', count(*)::BIGINT,
-             sum(n)::BIGINT, max(n)::BIGINT
-           FROM (SELECT o_custkey, count(*)::BIGINT AS n
-                 FROM orders GROUP BY 1)),
-         u AS (
-           SELECT * FROM s1 UNION ALL SELECT * FROM s2
-           UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4)
-         SELECT join_key, n_keys, n_rows, max_key_rows,
-           (n_rows * 1000) // n_keys AS avg_x1000,
-           (max_key_rows * 1000 * n_keys) // n_rows AS skew_x1000,
-           ((max_key_rows + 999) // 1000)::BIGINT AS salt,
-           ((max_key_rows + 999) // 1000 > 1) AS needs_salt
-         FROM u ORDER BY join_key""",
-
-    "q257_churn_labels" ->
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) AS us FROM events),
-         hz AS (SELECT max(us) AS tmax FROM ev),
-         per AS (
-           SELECT user_id, min(us) AS first_us, max(us) AS last_us,
-             count(*)::BIGINT AS n_events
-           FROM ev GROUP BY 1),
-         lab AS (
-           SELECT *,
-             (first_us > tmax - 2592000000000) AS censored,
-             (NOT (first_us > tmax - 2592000000000)
-               AND last_us < tmax - 2592000000000) AS churned,
-             length(bin(n_events))::BIGINT AS band
-           FROM per CROSS JOIN hz)
-         SELECT band, count(*)::BIGINT AS n_users,
-           sum(CASE WHEN churned THEN 1 ELSE 0 END)::BIGINT
-             AS n_churned,
-           sum(CASE WHEN censored THEN 1 ELSE 0 END)::BIGINT
-             AS n_censored,
-           sum(CASE WHEN NOT churned AND NOT censored THEN 1 ELSE 0
-             END)::BIGINT AS n_retained,
-           (sum(CASE WHEN churned THEN 1 ELSE 0 END)
-             + sum(CASE WHEN censored THEN 1 ELSE 0 END)
-             + sum(CASE WHEN NOT churned AND NOT censored
-               THEN 1 ELSE 0 END) = count(*)) AS balanced
-         FROM lab GROUP BY 1 ORDER BY 1""",
-     "q258_woe_encoding" ->
-      """WITH lbl AS (
-           SELECT DISTINCT o_custkey FROM orders
-           WHERE o_orderstatus = 'O'),
-         c AS (
-           SELECT c_custkey, c_acctbal,
-             CASE WHEN lbl.o_custkey IS NOT NULL THEN 1 ELSE 0 END
-               AS good
-           FROM customer LEFT JOIN lbl
-             ON customer.c_custkey = lbl.o_custkey),
-         bounds AS (
-           SELECT quantile_cont(c_acctbal,
-             [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-           FROM c),
-         binned AS (
-           SELECT 1 + len(list_filter(bs, x -> c_acctbal > x)) AS bin,
-             good
-           FROM c CROSS JOIN bounds),
-         cells AS (
-           SELECT bin, sum(good)::BIGINT AS ng,
-             sum(1 - good)::BIGINT AS nb
-           FROM binned GROUP BY 1),
-         tot AS (
-           SELECT sum(ng)::BIGINT AS tg, sum(nb)::BIGINT AS tb
-           FROM cells),
-         woe AS (
-           SELECT *,
-             (ng::DOUBLE + 0.5) / (tg::DOUBLE + 5.0) AS pg,
-             (nb::DOUBLE + 0.5) / (tb::DOUBLE + 5.0) AS pb
-           FROM cells CROSS JOIN tot),
-         w2 AS (
-           SELECT *, ln(pg / pb) AS woe,
-             (pg - pb) * ln(pg / pb) AS ivterm
-           FROM woe),
-         iv AS (
-           SELECT list_sum(list_sort(list(ivterm))) AS iv FROM w2)
-         SELECT bin, ng, nb, round(woe, 6) AS woe,
-           round(iv, 6) AS information_value
-         FROM w2 CROSS JOIN iv ORDER BY bin""",
-
-    "q259_diff_in_diff" ->
-      """WITH o AS (
-           SELECT o_custkey, round(o_totalprice * 100)::BIGINT AS cents,
-             epoch_us(o_orderdate) AS us
-           FROM orders),
-         span AS (SELECT (min(us) + max(us)) // 2 AS mid FROM o),
-         cells AS (
-           SELECT
-             (('0x' || substring(md5('0:' || o_custkey), 1, 12))
-               ::BIGINT % 2 = 0) AS treated,
-             (us >= mid) AS after,
-             count(*)::BIGINT AS n,
-             sum(cents)::DOUBLE / count(*) AS mean_cents
-           FROM o CROSS JOIN span GROUP BY 1, 2),
-         wide AS (
-           SELECT
-             max(CASE WHEN treated AND NOT after THEN mean_cents END)
-               AS t1,
-             max(CASE WHEN treated AND after THEN mean_cents END)
-               AS t2,
-             max(CASE WHEN NOT treated AND NOT after THEN mean_cents
-               END) AS c1,
-             max(CASE WHEN NOT treated AND after THEN mean_cents END)
-               AS c2,
-             sum(n)::BIGINT AS n_orders
-           FROM cells)
-         SELECT n_orders, round(t1 / 100.0, 2) AS treated_before,
-           round(t2 / 100.0, 2) AS treated_after,
-           round(c1 / 100.0, 2) AS control_before,
-           round(c2 / 100.0, 2) AS control_after,
-           round(((t2 - t1) - (c2 - c1)) / 100.0, 4) AS did_estimate
-         FROM wide""",
-
-    "q260_boilerplate" ->
-      """WITH docs AS (
-           SELECT source, doc_id,
-             string_split(lower(trim(regexp_replace(text, '\s+', ' ',
-               'g'))), ' ') AS ws
-           FROM documents),
-         nd AS (
-           SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs
-           FROM docs GROUP BY 1),
-         sh AS (
-           SELECT DISTINCT source, doc_id,
-             unnest(list_distinct(list_transform(range(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS g
-           FROM docs),
-         f AS (
-           SELECT source, g, count(*)::BIGINT AS n_in
-           FROM sh GROUP BY 1, 2),
-         fl AS (
-           SELECT f.*, n_docs,
-             row_number() OVER (PARTITION BY f.source
-               ORDER BY n_in DESC, g) AS rn
-           FROM f JOIN nd USING (source)
-           WHERE n_in * 10 >= n_docs)
-         SELECT source, max(n_docs)::BIGINT AS n_docs,
-           count(*)::BIGINT AS n_boiler_ngrams,
-           max(n_in)::BIGINT AS max_repeat,
-           max(CASE WHEN rn = 1 THEN g END) AS top_boiler_ngram
-         FROM fl GROUP BY 1 ORDER BY 1""",
-
-    "q261_quota_spillover" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg, c_custkey,
-             round(c_acctbal * 100)::BIGINT AS cents
-           FROM customer WHERE c_acctbal > 9000),
-         r AS (
-           SELECT *, row_number() OVER (PARTITION BY seg
-               ORDER BY cents DESC, c_custkey) AS srk
-           FROM c),
-         segw AS (SELECT * FROM r WHERE srk <= 20),
-         meta AS (
-           SELECT (SELECT count(DISTINCT seg) FROM c) * 20
-             - (SELECT count(*) FROM segw) AS spill),
-         lo AS (
-           SELECT r.*, row_number() OVER (ORDER BY cents DESC,
-             c_custkey) AS grk
-           FROM r WHERE srk > 20),
-         sp AS (
-           SELECT lo.* FROM lo CROSS JOIN meta WHERE grk <= spill),
-         u AS (
-           SELECT seg, c_custkey, cents, 'segment' AS via FROM segw
-           UNION ALL
-           SELECT seg, c_custkey, cents, 'spill' AS via FROM sp)
-         SELECT seg, via, count(*)::BIGINT AS n_awarded,
-           min(cents)::BIGINT AS min_cents,
-           max(cents)::BIGINT AS max_cents
-         FROM u GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q262_kendall_tau" ->
-      """WITH rev AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(round(l_extendedprice * 100)::BIGINT) DESC,
-               l_partkey) AS ra
-           FROM lineitem GROUP BY l_partkey QUALIFY ra <= 50),
-         qty AS (
-           SELECT l_partkey,
-             row_number() OVER (ORDER BY
-               sum(CAST(l_quantity AS BIGINT)) DESC, l_partkey) AS rb
-           FROM lineitem GROUP BY l_partkey QUALIFY rb <= 50),
-         common AS (
-           SELECT l_partkey, ra, rb FROM rev JOIN qty
-             USING (l_partkey)),
-         pairs AS (
-           SELECT sign((a.ra - b.ra) * (a.rb - b.rb))::BIGINT AS s
-           FROM common a JOIN common b
-             ON a.l_partkey < b.l_partkey)
-         SELECT count(*)::BIGINT AS n_pairs,
-           sum(CASE WHEN s = 1 THEN 1 ELSE 0 END)::BIGINT
-             AS concordant,
-           sum(CASE WHEN s = -1 THEN 1 ELSE 0 END)::BIGINT
-             AS discordant,
-           round((sum(CASE WHEN s = 1 THEN 1 ELSE 0 END)
-             - sum(CASE WHEN s = -1 THEN 1 ELSE 0 END))::DOUBLE
-             / count(*), 6) AS tau
-         FROM pairs""",
-
-    "q263_percentile_of_latest" ->
-      """WITH daily AS (
-           SELECT event_type AS ty, CAST(ts AS DATE) AS day,
-             sum(round(value * 100)::BIGINT)::BIGINT AS cents
-           FROM events GROUP BY 1, 2),
-         latest AS (
-           SELECT ty, day AS lday, cents AS lcents FROM (
-             SELECT *, row_number() OVER (PARTITION BY ty
-               ORDER BY day DESC) AS rn
-             FROM daily)
-           WHERE rn = 1),
-         hist AS (
-           SELECT d.ty, d.cents, l.lcents
-           FROM daily d JOIN latest l ON d.ty = l.ty
-           WHERE d.day < l.lday AND d.day >= l.lday - 90)
-         SELECT ty, count(*)::BIGINT AS n_hist,
-           max(lcents)::BIGINT AS latest_cents,
-           sum(CASE WHEN cents <= lcents THEN 1 ELSE 0 END)::BIGINT
-             AS n_below,
-           round(sum(CASE WHEN cents <= lcents THEN 1 ELSE 0 END)
-             ::DOUBLE / count(*), 4) AS pctile,
-           (sum(CASE WHEN cents <= lcents THEN 1 ELSE 0 END) * 20
-               >= count(*) * 19
-             OR sum(CASE WHEN cents <= lcents THEN 1 ELSE 0 END) * 20
-               <= count(*)) AS alert
-         FROM hist GROUP BY 1 ORDER BY 1""",
-
-    "q264_wilson_interval" ->
-      """WITH cells AS (
-           SELECT c_mktsegment AS seg, count(*)::BIGINT AS n,
-             sum(CASE WHEN c_acctbal > 4500.0 THEN 1 ELSE 0 END)
-               ::BIGINT AS x
-           FROM customer GROUP BY 1),
-         w AS (
-           SELECT *, x::DOUBLE / n AS p,
-             1.0 + 3.8416 / n AS den,
-             (x::DOUBLE / n + 3.8416 / (n * 2))
-               / (1.0 + 3.8416 / n) AS ctr,
-             1.96 * sqrt((x::DOUBLE / n) * (1.0 - x::DOUBLE / n) / n
-               + 3.8416 / (n::DOUBLE * n * 4))
-               / (1.0 + 3.8416 / n) AS hw
-           FROM cells)
-         SELECT seg, n, x, round(p, 6) AS p_hat,
-           round(ctr - hw, 6) AS wilson_lo,
-           round(ctr + hw, 6) AS wilson_hi
-         FROM w ORDER BY seg""",
-
-    "q265_pareto_layers" ->
-      """WITH p AS (
-           SELECT p_partkey, p_retailprice, p_size FROM part),
-         f1 AS (
-           SELECT p_partkey, p_retailprice, p_size FROM (
-             SELECT *, max(p_size) OVER (ORDER BY p_retailprice,
-               p_size DESC, p_partkey ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING) AS mx
-             FROM p)
-           WHERE mx IS NULL OR p_size > mx),
-         rest AS (
-           SELECT p.* FROM p LEFT JOIN f1 USING (p_partkey)
-           WHERE f1.p_partkey IS NULL),
-         f2 AS (
-           SELECT p_partkey, p_retailprice, p_size FROM (
-             SELECT *, max(p_size) OVER (ORDER BY p_retailprice,
-               p_size DESC, p_partkey ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING) AS mx
-             FROM rest)
-           WHERE mx IS NULL OR p_size > mx),
-         u AS (
-           SELECT 1::BIGINT AS front, p_partkey, p_retailprice, p_size
-           FROM f1
-           UNION ALL
-           SELECT 2::BIGINT, p_partkey, p_retailprice, p_size FROM f2)
-         SELECT front, p_partkey, round(p_retailprice, 2) AS price,
-           p_size
-         FROM u ORDER BY front, p_partkey""",
-
-    "q266_growth_accounting" ->
-      """WITH uw AS (
-           SELECT DISTINCT user_id,
-             (CAST(ts AS DATE) - DATE '1970-01-05') // 7 AS wk
-           FROM events),
-         fw AS (SELECT user_id, min(wk) AS fw FROM uw GROUP BY 1),
-         fl AS (
-           SELECT uw.user_id, wk, fw,
-             lag(wk) OVER (PARTITION BY uw.user_id ORDER BY wk)
-               AS prev_wk
-           FROM uw JOIN fw USING (user_id)),
-         cls AS (
-           SELECT *, CASE WHEN wk = fw THEN 'new'
-             WHEN prev_wk = wk - 1 THEN 'retained'
-             ELSE 'resurrected' END AS cls
-           FROM fl),
-         act AS (
-           SELECT wk, count(*)::BIGINT AS wau,
-             sum(CASE WHEN cls = 'new' THEN 1 ELSE 0 END)::BIGINT
-               AS n_new,
-             sum(CASE WHEN cls = 'retained' THEN 1 ELSE 0 END)::BIGINT
-               AS n_retained,
-             sum(CASE WHEN cls = 'resurrected' THEN 1 ELSE 0 END)
-               ::BIGINT AS n_resurrected
-           FROM cls GROUP BY 1),
-         churn AS (
-           SELECT wk, count(*)::BIGINT AS n_churned FROM (
-             SELECT user_id, wk + 1 AS wk FROM cls
-             EXCEPT
-             SELECT user_id, wk FROM uw)
-           GROUP BY 1)
-         SELECT act.wk::BIGINT AS wk, wau, n_new, n_retained,
-           n_resurrected,
-           coalesce(n_churned, 0)::BIGINT AS n_churned,
-           (n_new + n_retained + n_resurrected = wau) AS balanced
-         FROM act LEFT JOIN churn ON act.wk = churn.wk
-         ORDER BY wk""",
-
-    "q267_revenue_retention" ->
-      """WITH cm AS (
-           SELECT o_custkey,
-             ((year(o_orderdate) - 1990) * 12 + month(o_orderdate))
-               ::BIGINT AS mo,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS cents
-           FROM orders GROUP BY 1, 2),
-         prev AS (
-           SELECT o_custkey, mo + 1 AS mo, cents AS prev_cents
-           FROM cm),
-         paired AS (
-           SELECT prev.o_custkey, prev.mo, prev.prev_cents,
-             coalesce(cm.cents, 0) AS cur
-           FROM prev LEFT JOIN cm
-             ON prev.o_custkey = cm.o_custkey AND prev.mo = cm.mo)
-         SELECT mo, count(*)::BIGINT AS n_prev_customers,
-           round(sum(least(cur, prev_cents))::DOUBLE
-             / sum(prev_cents), 6) AS grr,
-           round(sum(cur)::DOUBLE / sum(prev_cents), 6) AS nrr
-         FROM paired GROUP BY 1 ORDER BY 1""",
-
-    "q268_ucb_priority" ->
-      """WITH cnt AS (
-           SELECT source, count(*)::BIGINT AS n,
-             sum(n_chars)::BIGINT AS sc
-           FROM documents GROUP BY 1),
-         tot AS (SELECT sum(n)::BIGINT AS nn FROM cnt),
-         u AS (
-           SELECT *, sc::DOUBLE / n / 1000.0 AS mean_q,
-             sqrt(2.0 * ln(nn::DOUBLE) / n) AS explore,
-             sc::DOUBLE / n / 1000.0 + sqrt(2.0 * ln(nn::DOUBLE) / n)
-               AS ucb
-           FROM cnt CROSS JOIN tot)
-         SELECT row_number() OVER (ORDER BY ucb DESC, source)::BIGINT
-             AS rk,
-           source, n, round(mean_q, 6) AS mean_q,
-           round(explore, 6) AS explore_bonus,
-           round(ucb, 6) AS ucb_score
-         FROM u ORDER BY rk""",
-
-    "q269_info_gain" ->
-      """WITH o AS (
-           SELECT (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS y,
-             round(o_totalprice * 100)::BIGINT // 10000000
-               AS f_price_band,
-             ((CAST(o_orderdate AS DATE) - DATE '1970-01-05') % 7 + 7)
-               % 7 AS f_dow,
-             (o_orderstatus = 'O')::BIGINT AS f_open
-           FROM orders),
-         l AS (
-           SELECT y, 'price_band' AS feat, f_price_band::BIGINT AS v
-           FROM o
-           UNION ALL SELECT y, 'dow', f_dow::BIGINT FROM o
-           UNION ALL SELECT y, 'open', f_open FROM o),
-         joint AS (
-           SELECT feat, v, count(*)::BIGINT AS n,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS np
-           FROM l GROUP BY 1, 2),
-         tot AS (
-           SELECT feat, sum(n)::BIGINT AS nn, sum(np)::BIGINT AS tp
-           FROM joint GROUP BY 1),
-         cond AS (
-           SELECT j.feat, count(*)::BIGINT AS n_values,
-             max(tp::DOUBLE / nn) AS p0,
-             list_sum(list_sort(list(n::DOUBLE / nn *
-               (CASE WHEN np::DOUBLE / n > 0 AND np::DOUBLE / n < 1
-                 THEN -((np::DOUBLE / n) * ln(np::DOUBLE / n)
-                   + (1.0 - np::DOUBLE / n)
-                     * ln(1.0 - np::DOUBLE / n))
-                 ELSE 0.0 END)))) AS h_cond
-           FROM joint j JOIN tot USING (feat) GROUP BY 1),
-         hg AS (
-           SELECT *,
-             CASE WHEN p0 > 0 AND p0 < 1
-               THEN -(p0 * ln(p0) + (1.0 - p0) * ln(1.0 - p0))
-               ELSE 0.0 END AS h_label
-           FROM cond)
-         SELECT row_number() OVER (ORDER BY h_label - h_cond DESC,
-             feat)::BIGINT AS rk,
-           feat, n_values, round(h_label, 6) AS h_label,
-           round(h_cond, 6) AS h_cond,
-           round(h_label - h_cond, 6) AS info_gain
-         FROM hg ORDER BY rk""",
-
-    "q270_busy_hours" ->
-      """WITH hr AS (
-           SELECT event_type AS ty, hour(ts) AS h,
-             count(*)::BIGINT AS n
-           FROM events GROUP BY 1, 2),
-         r AS (
-           SELECT *, row_number() OVER (PARTITION BY ty
-               ORDER BY n DESC, h) AS rk
-           FROM hr)
-         SELECT ty, sum(n)::BIGINT AS total,
-           max(CASE WHEN rk = 1 THEN h END)::BIGINT AS peak_hour,
-           round(max(CASE WHEN rk = 1 THEN n END)::DOUBLE * count(*)
-             / sum(n), 4) AS peak_to_mean,
-           round(sum(CASE WHEN rk <= 3 THEN n ELSE 0 END)::DOUBLE
-             / sum(n), 4) AS top3_share
-         FROM r GROUP BY 1 ORDER BY 1""",
-
-    "q271_price_elasticity" ->
-      """WITH pp AS (
-           SELECT p.p_brand AS brand,
-             ln(sum(round(l_extendedprice * 100)::BIGINT)::DOUBLE
-               / sum(CAST(l_quantity AS BIGINT)) / 100.0) AS x,
-             ln(sum(CAST(l_quantity AS BIGINT))::DOUBLE) AS y
-           FROM lineitem JOIN part p ON l_partkey = p.p_partkey
-           GROUP BY l_partkey, p.p_brand),
-         m AS (
-           SELECT brand, count(*)::BIGINT AS n_parts,
-             list_sum(list_sort(list(x))) AS sx,
-             list_sum(list_sort(list(y))) AS sy,
-             list_sum(list_sort(list(x * y))) AS sxy,
-             list_sum(list_sort(list(x * x))) AS sxx
-           FROM pp GROUP BY 1)
-         SELECT brand, n_parts,
-           round((n_parts * sxy - sx * sy)
-             / (n_parts * sxx - sx * sx), 4) AS elasticity
-         FROM m ORDER BY brand""",
-
-    "q272_threshold_crossing" ->
-      """WITH daily AS (
-           SELECT (CAST(ts AS DATE) - DATE '1970-01-05')::BIGINT AS tt,
-             count(*)::BIGINT AS n
-           FROM events GROUP BY 1),
-         m AS (
-           SELECT count(*)::BIGINT AS k, sum(tt) AS sx, sum(n) AS sy,
-             sum(tt * n) AS sxy, sum(tt * tt) AS sxx,
-             max(tt)::BIGINT AS tmax
-           FROM daily),
-         f AS (
-           SELECT *,
-             (k * sxy - sx * sy)::DOUBLE
-               / (k * sxx - sx * sx)::DOUBLE AS slope
-           FROM m),
-         g AS (
-           SELECT *,
-             (sy::DOUBLE - slope * sx::DOUBLE) / k::DOUBLE
-               AS intercept,
-             sy::DOUBLE / k::DOUBLE * 1.5 AS threshold
-           FROM f)
-         SELECT k AS n_days, round(slope, 6) AS slope,
-           round(intercept, 4) AS intercept,
-           round(threshold, 4) AS threshold,
-           round((threshold - intercept) / slope - tmax, 2)
-             AS days_to_threshold,
-           (slope > 0) AS growing
-         FROM g""",
-
-    // Replays the TxLog micro-batch algebra in pure SQL: latest-wins
-    // per key over epochs 1..2, predicate delete, epoch-3 merge on top.
-    "q273_txlog_exactly_once" ->
-      """WITH b1 AS (
-           SELECT o_orderkey AS k,
-             round(o_totalprice * 100)::BIGINT + 0 AS v,
-             1::BIGINT AS upload_id
-           FROM orders WHERE o_orderkey % 7 = 0),
-         b2 AS (
-           SELECT o_orderkey AS k,
-             round(o_totalprice * 100)::BIGINT + 1 AS v,
-             2::BIGINT AS upload_id
-           FROM orders WHERE o_orderkey % 5 = 0),
-         b3 AS (
-           SELECT o_orderkey AS k,
-             round(o_totalprice * 100)::BIGINT + 2 AS v,
-             3::BIGINT AS upload_id
-           FROM orders WHERE o_orderkey % 11 = 0),
-         s12 AS (
-           SELECT k, v, upload_id FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY k ORDER BY upload_id DESC) AS rn
-             FROM (SELECT * FROM b1 UNION ALL SELECT * FROM b2))
-           WHERE rn = 1),
-         surv AS (SELECT * FROM s12 WHERE k % 3 <> 0),
-         fin AS (
-           SELECT * FROM b3
-           UNION ALL
-           SELECT * FROM surv WHERE k NOT IN (SELECT k FROM b3))
-         SELECT upload_id, count(*)::BIGINT AS n_rows,
-           sum(v)::BIGINT AS sum_cents,
-           min(k)::BIGINT AS min_key, max(k)::BIGINT AS max_key
-         FROM fin GROUP BY 1 ORDER BY 1""",
-
-    "q274_benford" ->
-      """WITH digits AS (
-           SELECT left((round(o_totalprice * 100)::BIGINT)::VARCHAR,
-               1)::INT AS dg,
-             count(*)::BIGINT AS n
-           FROM orders GROUP BY 1),
-         tot AS (SELECT sum(n)::BIGINT AS nn FROM digits),
-         terms AS (
-           SELECT dg, n, nn, log10(1.0 + 1.0 / dg) AS p_exp,
-             log10(1.0 + 1.0 / dg) * nn AS n_exp
-           FROM digits CROSS JOIN tot),
-         t2 AS (
-           SELECT *, (n::DOUBLE - n_exp) * (n::DOUBLE - n_exp) / n_exp
-             AS chi_term
-           FROM terms),
-         chi AS (
-           SELECT list_sum(list_sort(list(chi_term))) AS chi2 FROM t2)
-         SELECT dg, n, round(n::DOUBLE / nn, 6) AS obs_share,
-           round(p_exp, 6) AS exp_share,
-           round(chi_term, 4) AS chi_term, round(chi2, 4) AS chi2
-         FROM t2 CROSS JOIN chi ORDER BY dg""",
-
-    "q275_gini_lorenz" ->
-      """WITH o AS (
-           SELECT o_orderkey,
-             round(o_totalprice * 100)::BIGINT AS cents
-           FROM orders),
-         r AS (
-           SELECT cents,
-             row_number() OVER (ORDER BY cents, o_orderkey)::BIGINT
-               AS rk,
-             sum(cents) OVER (ORDER BY cents, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
-               AS cum
-           FROM o),
-         g AS (
-           SELECT count(*)::BIGINT AS n, sum(cents)::BIGINT AS sx,
-             sum(rk::HUGEINT * cents) AS srx
-           FROM r),
-         g2 AS (
-           SELECT n, sx,
-             round((2.0 * srx::DOUBLE - (n + 1)::DOUBLE * sx::DOUBLE)
-               / (n::DOUBLE * sx::DOUBLE), 6) AS gini
-           FROM g)
-         SELECT ((rk - 1) * 10) // n + 1 AS decile,
-           count(*)::BIGINT AS n_orders, max(cum)::BIGINT AS cum_cents,
-           round(max(cum)::DOUBLE / max(sx), 6) AS cum_share,
-           max(gini) AS gini
-         FROM r CROSS JOIN g2
-         GROUP BY 1 ORDER BY 1""",
-
-    "q276_daily_kl_drift" ->
-      """WITH dt AS (
-           SELECT CAST(ts AS DATE) AS day, event_type AS ty,
-             count(*)::BIGINT AS n
-           FROM events GROUP BY 1, 2),
-         bt AS (SELECT ty, sum(n)::BIGINT AS nt FROM dt GROUP BY 1),
-         tot AS (SELECT sum(nt)::BIGINT AS nn FROM bt),
-         j AS (
-           SELECT dt.day, dt.n, bt.nt, tot.nn,
-             sum(dt.n) OVER (PARTITION BY dt.day)::BIGINT AS nd
-           FROM dt JOIN bt USING (ty) CROSS JOIN tot),
-         k AS (
-           SELECT day, max(nd)::BIGINT AS n_events,
-             count(*)::BIGINT AS n_types,
-             list_sum(list_sort(list(n::DOUBLE / nd
-               * ln((n::DOUBLE / nd) / (nt::DOUBLE / nn))))) AS kl
-           FROM j GROUP BY 1)
-         SELECT day::VARCHAR AS day, n_events, n_types,
-           round(kl, 6) AS kl
-         FROM k ORDER BY day""",
-
-    "q277_containment_quotes" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM sh),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 10),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         v AS (
-           SELECT id_a, id_b,
-             len(sa.shs)::BIGINT AS n_a, len(sb.shs)::BIGINT AS n_b,
-             len(list_intersect(sa.shs, sb.shs))::BIGINT AS inter
-           FROM cand
-           JOIN sh sa ON sa.doc_id = id_a
-           JOIN sh sb ON sb.doc_id = id_b),
-         m AS (
-           SELECT id_a, id_b, n_a, n_b, inter,
-             round(inter::DOUBLE / (n_a + n_b - inter), 4) AS jaccard,
-             round(inter::DOUBLE / least(n_a, n_b), 4) AS containment
-           FROM v)
-         SELECT id_a, id_b, n_a, n_b, inter, jaccard, containment,
-           (containment >= 0.8 AND jaccard < 0.5) AS is_quote
-         FROM m WHERE containment >= 0.5
-         ORDER BY id_a, id_b""",
-
-    "q278_attribution" ->
-      """WITH p AS (
-           SELECT event_id AS pid, user_id, ts AS pts,
-             round(value * 100)::BIGINT AS cents
-           FROM events WHERE event_type = 'purchase'),
-         t AS (
-           SELECT user_id, event_id AS tid, ts AS tts,
-             event_type AS channel
-           FROM events WHERE event_type IN ('view', 'click')),
-         j AS (
-           SELECT * FROM p JOIN t USING (user_id)
-           WHERE tts <= pts AND tts > pts - INTERVAL 7 DAY),
-         r AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY pid ORDER BY tts, tid)
-               AS rn,
-             count(*) OVER (PARTITION BY pid) AS n
-           FROM j),
-         b AS (
-           SELECT channel, cents,
-             (CASE WHEN n = 1 THEN 10000
-                   WHEN n = 2 THEN 5000
-                   WHEN rn = 1 OR rn = n THEN 4000
-                   ELSE 2000 // (n - 2)
-                     + (CASE WHEN rn - 1 <= 2000 % (n - 2)
-                        THEN 1 ELSE 0 END)
-              END)::BIGINT AS bp
-           FROM r),
-         a AS (
-           SELECT channel, count(*)::BIGINT AS n_touches,
-             sum(cents * bp)::BIGINT AS cents_bp
-           FROM b GROUP BY 1),
-         tot AS (SELECT sum(cents_bp)::BIGINT AS tot FROM a)
-         SELECT channel, n_touches,
-           round(cents_bp::DOUBLE / 1000000.0, 4) AS attributed_usd,
-           round(cents_bp::DOUBLE / tot, 6) AS share
-         FROM a CROSS JOIN tot ORDER BY channel""",
-
-    "q279_psi" ->
-      """WITH o AS (
-           SELECT round(o_totalprice * 100)::BIGINT AS cents,
-             (o_orderdate >= TIMESTAMP '1998-01-01') AS cur
-           FROM orders),
-         bounds AS (
-           SELECT list_transform(
-             quantile_cont(cents, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-             b -> floor(b)::BIGINT) AS bs
-           FROM o WHERE NOT cur),
-         bucketed AS (
-           SELECT 1 + len(list_filter(bs, b -> cents > b)) AS bk,
-             sum(CASE WHEN cur THEN 0 ELSE 1 END)::BIGINT AS n_ref,
-             sum(CASE WHEN cur THEN 1 ELSE 0 END)::BIGINT AS n_cur
-           FROM o CROSS JOIN bounds GROUP BY 1),
-         totals AS (
-           SELECT sum(n_ref)::BIGINT AS m, sum(n_cur)::BIGINT AS nn
-           FROM bucketed),
-         terms AS (
-           SELECT bk, n_ref, n_cur,
-             (n_ref::DOUBLE + 1.0) / (m + 10) AS q,
-             (n_cur::DOUBLE + 1.0) / (nn + 10) AS p
-           FROM bucketed CROSS JOIN totals),
-         t2 AS (
-           SELECT *, (p - q) * ln(p / q) AS term FROM terms),
-         psi AS (
-           SELECT list_sum(list_sort(list(term))) AS psi FROM t2)
-         SELECT bk, n_ref, n_cur, round(term, 6) AS term,
-           round(psi, 6) AS psi
-         FROM t2 CROSS JOIN psi ORDER BY bk""",
-
-    "q280_ewma_anomaly" ->
-      """WITH daily AS (
-           SELECT CAST(ts AS DATE) AS day, count(*)::BIGINT AS n
-           FROM events WHERE event_type = 'error' GROUP BY 1),
-         pairs AS (
-           SELECT a.day AS d1, a.n AS n1, b.n AS n2,
-             power(0.7, datediff('day', b.day, a.day)) AS w
-           FROM daily a JOIN daily b ON b.day <= a.day),
-         e AS (
-           SELECT d1, max(n1)::BIGINT AS n_err,
-             list_sum(list_sort(list(w * n2))) AS wx,
-             list_sum(list_sort(list(w))) AS ws
-           FROM pairs GROUP BY 1),
-         r AS (
-           SELECT d1, n_err, wx / ws AS ewma,
-             round(n_err::DOUBLE / (wx / ws), 4) AS ratio
-           FROM e)
-         SELECT d1::VARCHAR AS day, n_err, round(ewma, 4) AS ewma,
-           ratio, (ratio > 1.5) AS spike
-         FROM r ORDER BY day""",
-
-    "q281_conversion_lag" ->
-      """WITH su AS (
-           SELECT user_id, min(ts) AS s0 FROM events
-           WHERE event_type = 'signup' GROUP BY 1),
-         conv AS (
-           SELECT e.user_id,
-             epoch_us(min(e.ts)) - epoch_us(min(su.s0)) AS lag_us
-           FROM events e JOIN su USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts >= su.s0
-           GROUP BY 1),
-         ns AS (SELECT count(*)::BIGINT AS n_signup FROM su),
-         agg AS (
-           SELECT count(*)::BIGINT AS n_converted,
-             floor(quantile_cont(lag_us, 0.5))::BIGINT AS med_us,
-             floor(quantile_cont(lag_us, 0.9))::BIGINT AS p90_us
-           FROM conv)
-         SELECT n_signup, n_converted,
-           round(n_converted::DOUBLE / n_signup, 6) AS conv_rate,
-           round(med_us::DOUBLE / 3600000000.0, 2) AS median_hours,
-           round(p90_us::DOUBLE / 3600000000.0, 2) AS p90_hours
-         FROM agg CROSS JOIN ns""",
-
-    "q282_streak_histogram" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-           FROM events),
-         grp AS (
-           SELECT user_id, day,
-             day - row_number() OVER (PARTITION BY user_id
-               ORDER BY day)::INT AS island
-           FROM ud),
-         streaks AS (
-           SELECT user_id, island, count(*)::BIGINT AS len
-           FROM grp GROUP BY 1, 2)
-         SELECT len, count(*)::BIGINT AS n_streaks,
-           count(DISTINCT user_id)::BIGINT AS n_users
-         FROM streaks GROUP BY 1 ORDER BY 1""",
-
-    "q283_session_bounce" ->
-      """WITH e0 AS (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-           FROM events),
-         e1 AS (
-           SELECT *,
-             lag(us) OVER (PARTITION BY user_id
-               ORDER BY us, event_id) AS prev_us
-           FROM e0),
-         e2 AS (
-           SELECT *, (CASE WHEN prev_us IS NULL
-               OR us - prev_us > 1800000000 THEN 1 ELSE 0 END)::BIGINT
-             AS is_new
-           FROM e1),
-         e3 AS (
-           SELECT *, sum(is_new) OVER (PARTITION BY user_id
-             ORDER BY us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM e2),
-         s AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY user_id, sid
-               ORDER BY us, event_id) AS rn,
-             count(*) OVER (PARTITION BY user_id, sid) AS n
-           FROM e3),
-         entries AS (SELECT * FROM s WHERE rn = 1)
-         SELECT event_type AS entry_channel,
-           count(*)::BIGINT AS n_sessions,
-           sum(CASE WHEN n = 1 THEN 1 ELSE 0 END)::BIGINT AS n_bounces,
-           round(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 6) AS bounce_rate,
-           round(sum(n)::DOUBLE / count(*), 4) AS mean_depth
-         FROM entries GROUP BY 1 ORDER BY 1""",
-
-    "q284_rfm_segments" ->
-      """WITH base AS (
-           SELECT o_custkey AS ck,
-             max(CAST(o_orderdate AS DATE)) AS last_day,
-             count(*)::BIGINT AS freq,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS cents
-           FROM orders GROUP BY 1),
-         n AS (SELECT count(*)::BIGINT AS nn FROM base),
-         q AS (
-           SELECT ck, cents,
-             ((row_number() OVER (ORDER BY last_day, ck) - 1) * 5)
-               // nn + 1 AS r_q,
-             ((row_number() OVER (ORDER BY freq, ck) - 1) * 5)
-               // nn + 1 AS f_q,
-             ((row_number() OVER (ORDER BY cents, ck) - 1) * 5)
-               // nn + 1 AS m_q
-           FROM base CROSS JOIN n)
-         SELECT r_q, f_q, m_q, count(*)::BIGINT AS n_customers,
-           sum(cents)::BIGINT AS sum_cents
-         FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-
-    "q285_burst_histogram" ->
-      """WITH c AS (
-           SELECT user_id,
-             count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-               RANGE BETWEEN 59999999 PRECEDING AND CURRENT ROW)
-               AS c60
-           FROM events),
-         b AS (
-           SELECT user_id, max(c60)::BIGINT AS burst
-           FROM c GROUP BY 1)
-         SELECT burst, count(*)::BIGINT AS n_users
-         FROM b GROUP BY 1 ORDER BY 1""",
-
-    "q286_crosslang_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')
-               AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM sh),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 10),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         v AS (
-           SELECT id_a, id_b,
-             round(CAST(len(list_filter(sa.shs,
-                 x -> list_contains(sb.shs, x))) AS DOUBLE)
-               / (len(sa.shs) + len(sb.shs)
-                  - len(list_filter(sa.shs,
-                      x -> list_contains(sb.shs, x)))), 4) AS jaccard
-           FROM cand
-           JOIN sh sa ON cand.id_a = sa.doc_id
-           JOIN sh sb ON cand.id_b = sb.doc_id),
-         pairs AS (
-           SELECT v.*, da.lang AS lang_a, db.lang AS lang_b
-           FROM v
-           JOIN documents da ON da.doc_id = v.id_a
-           JOIN documents db ON db.doc_id = v.id_b
-           WHERE jaccard >= 0.3)
-         SELECT least(lang_a, lang_b) AS pair_lo,
-           greatest(lang_a, lang_b) AS pair_hi,
-           count(*)::BIGINT AS n_pairs,
-           min(jaccard) AS min_j, max(jaccard) AS max_j,
-           (least(lang_a, lang_b) <> greatest(lang_a, lang_b))
-             AS cross_lang
-         FROM pairs GROUP BY 1, 2, 6 ORDER BY 1, 2""",
-
-    "q287_label_centroids" ->
-      """WITH cells AS (
-           SELECT label, i AS dim, embedding[i]::DOUBLE AS v
-           FROM embeddings CROSS JOIN range(1, 65) r(i)),
-         cent AS (
-           SELECT label, dim,
-             list_sum(list_sort(list(v))) / count(*) AS m
-           FROM cells GROUP BY 1, 2),
-         p AS (
-           SELECT a.label AS la, b.label AS lb, a.m AS ma, b.m AS mb
-           FROM cent a JOIN cent b USING (dim)
-           WHERE a.label < b.label)
-         SELECT la AS label_a, lb AS label_b,
-           round(list_sum(list_sort(list(ma * mb)))
-             / sqrt(list_sum(list_sort(list(ma * ma)))
-                  * list_sum(list_sort(list(mb * mb)))), 6) AS cosine
-         FROM p GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q288_scd2_intervals" ->
-      """WITH e AS (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-           FROM events),
-         iv AS (
-           SELECT event_type,
-             lead(us) OVER (PARTITION BY user_id
-               ORDER BY us, event_id) - us AS dur_us
-           FROM e),
-         closed AS (SELECT * FROM iv WHERE dur_us IS NOT NULL)
-         SELECT event_type AS state, count(*)::BIGINT AS n_intervals,
-           round(sum(dur_us)::DOUBLE / 3600000000.0, 2) AS total_hours,
-           round(sum(dur_us)::DOUBLE / count(*) / 3600000000.0, 4)
-             AS mean_hours
-         FROM closed GROUP BY 1 ORDER BY 1""",
-
-    "q289_percentile_bands" ->
-      """WITH e AS (
-           SELECT event_type AS ty, event_id,
-             round(value * 100)::BIGINT AS cents
-           FROM events),
-         r AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY ty
-               ORDER BY cents, event_id)::BIGINT AS rk,
-             count(*) OVER (PARTITION BY ty)::BIGINT AS n
-           FROM e)
-         SELECT ty, max(n)::BIGINT AS n_events,
-           round(max(CASE WHEN rk = ceil(0.5 * n)::BIGINT
-             THEN cents END)::DOUBLE / 100.0, 2) AS p50,
-           round(max(CASE WHEN rk = ceil(0.9 * n)::BIGINT
-             THEN cents END)::DOUBLE / 100.0, 2) AS p90,
-           round(max(CASE WHEN rk = ceil(0.99 * n)::BIGINT
-             THEN cents END)::DOUBLE / 100.0, 2) AS p99
-         FROM r GROUP BY 1 ORDER BY 1""",
-
-    "q290_cross_source_dupes" ->
-      """WITH docs AS (
-           SELECT doc_id, source,
-             md5(array_to_string(list_slice(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))), ' '),
-               1, 8), ' ')) AS h
-           FROM documents),
-         sized AS (
-           SELECT *, count(*) OVER (PARTITION BY h) AS gs FROM docs),
-         dup AS (SELECT * FROM sized WHERE gs > 1),
-         pairs AS (
-           SELECT least(a.source, b.source) AS source_lo,
-             greatest(a.source, b.source) AS source_hi
-           FROM dup a JOIN dup b
-             ON a.h = b.h AND a.doc_id < b.doc_id)
-         SELECT source_lo, source_hi, count(*)::BIGINT AS n_dup_pairs,
-           (source_lo <> source_hi) AS cross_source
-         FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q291_split_balance" ->
-      """WITH e AS (
-           SELECT label,
-             (('0x' || substring(md5('0:' || vec_id::VARCHAR), 1, 12))
-               ::BIGINT % 10) AS b
-           FROM embeddings),
-         s AS (
-           SELECT label, CASE WHEN b < 8 THEN 'train'
-             WHEN b = 8 THEN 'val' ELSE 'test' END AS split
-           FROM e),
-         cell AS (
-           SELECT split, label, count(*)::BIGINT AS o
-           FROM s GROUP BY 1, 2),
-         bysplit AS (
-           SELECT split, sum(o)::BIGINT AS ns FROM cell GROUP BY 1),
-         bylabel AS (
-           SELECT label, sum(o)::BIGINT AS nl FROM cell GROUP BY 1),
-         tot AS (SELECT sum(o)::BIGINT AS nn FROM cell),
-         terms AS (
-           SELECT c.split, c.label,
-             (c.o::DOUBLE - ns::DOUBLE * nl / nn)
-               * (c.o::DOUBLE - ns::DOUBLE * nl / nn)
-               / (ns::DOUBLE * nl / nn) AS term
-           FROM cell c JOIN bysplit USING (split)
-           JOIN bylabel USING (label) CROSS JOIN tot),
-         chi AS (
-           SELECT list_sum(list_sort(list(term))) AS chi2,
-             count(DISTINCT split)::BIGINT AS nsplits,
-             count(DISTINCT label)::BIGINT AS nlabels
-           FROM terms)
-         SELECT split, ns AS n_vectors,
-           round(ns::DOUBLE / nn, 6) AS share,
-           round(chi2, 4) AS chi2,
-           (nsplits - 1) * (nlabels - 1) AS dof
-         FROM bysplit CROSS JOIN tot CROSS JOIN chi
-         ORDER BY split""",
-
-    "q292_quantile_mapping" ->
-      """WITH docs AS (
-           SELECT doc_id, source, n_chars FROM documents),
-         sr AS (
-           SELECT *,
-             row_number() OVER (PARTITION BY source
-               ORDER BY n_chars, doc_id)::BIGINT AS rk,
-             count(*) OVER (PARTITION BY source)::BIGINT AS n
-           FROM docs),
-         srcq AS (
-           SELECT source, d.i AS decile, n_chars AS src_q
-           FROM sr CROSS JOIN range(1, 11) d(i)
-           WHERE (d.i * n + 9) // 10 = rk),
-         gr AS (
-           SELECT *,
-             row_number() OVER (ORDER BY n_chars, doc_id)::BIGINT
-               AS grk,
-             count(*) OVER ()::BIGINT AS gn
-           FROM docs),
-         g AS (
-           SELECT d.i AS decile, n_chars AS global_q
-           FROM gr CROSS JOIN range(1, 11) d(i)
-           WHERE (d.i * gn + 9) // 10 = grk)
-         SELECT source, decile, src_q, global_q
-         FROM srcq JOIN g USING (decile)
-         ORDER BY source, decile""",
-
-    "q293_retrieval_mrr" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         qs AS (
-           SELECT vec_id AS qid, v AS q, nm AS qn FROM nr
-           WHERE vec_id % 101 = 0),
-         cent AS (
-           SELECT vec_id AS cid, v AS cv, nm AS cn FROM nr
-           WHERE vec_id < 16),
-         truth AS (
-           SELECT qid, vec_id AS truth_id FROM (
-             SELECT q.qid, n.vec_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * q.q[i])) / (n.nm * q.qn), 6) DESC,
-                 n.vec_id) AS rn
-             FROM nr n CROSS JOIN qs q WHERE n.vec_id <> q.qid)
-           WHERE rn = 1),
-         assigned AS (
-           SELECT vec_id, v, nm, cid AS cluster FROM (
-             SELECT n.vec_id, n.v, n.nm, c.cid,
-               row_number() OVER (PARTITION BY n.vec_id ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * c.cv[i])) / (n.nm * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM nr n CROSS JOIN cent c)
-           WHERE rn = 1),
-         qcl AS (
-           SELECT qid, q, qn, cid AS cluster FROM (
-             SELECT s.qid, s.q, s.qn, c.cid,
-               row_number() OVER (PARTITION BY s.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(s.q) + 1),
-                   i -> s.q[i] * c.cv[i])) / (s.qn * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM qs s CROSS JOIN cent c)
-           WHERE rn = 1),
-         approx AS (
-           SELECT qid, vec_id, rn AS sys_rank FROM (
-             SELECT k.qid, a.vec_id,
-               row_number() OVER (PARTITION BY k.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(a.v) + 1),
-                   i -> a.v[i] * k.q[i])) / (a.nm * k.qn), 6) DESC,
-                 a.vec_id) AS rn
-             FROM assigned a JOIN qcl k ON a.cluster = k.cluster
-             WHERE a.vec_id <> k.qid)
-           WHERE rn <= 10),
-         scored AS (
-           SELECT t.qid, t.truth_id, a.sys_rank,
-             CASE WHEN a.sys_rank IS NOT NULL
-               THEN 1.0 / a.sys_rank ELSE 0.0 END AS rr
-           FROM truth t LEFT JOIN approx a
-             ON a.qid = t.qid AND a.vec_id = t.truth_id),
-         m AS (
-           SELECT round(list_sum(list_sort(list(rr))) / count(*), 6)
-             AS mrr
-           FROM scored)
-         SELECT qid, truth_id,
-           coalesce(sys_rank, 0)::BIGINT AS sys_rank,
-           round(rr, 6) AS rr, mrr
-         FROM scored CROSS JOIN m ORDER BY qid""",
-
-    "q294_reconciliation_audit" ->
-      """WITH calc AS (
-           SELECT l_orderkey AS o_orderkey,
-             sum(round(l_extendedprice * (1 - l_discount)
-               * (1 + l_tax) * 100)::BIGINT)::BIGINT AS calc_cents
-           FROM lineitem GROUP BY 1),
-         o AS (
-           SELECT o_orderkey,
-             round(o_totalprice * 100)::BIGINT AS hdr_cents
-           FROM orders),
-         j AS (
-           SELECT o.hdr_cents, calc.calc_cents,
-             CASE WHEN calc_cents IS NULL THEN 'no_lineitems'
-               WHEN hdr_cents = calc_cents THEN 'exact'
-               WHEN abs((hdr_cents - calc_cents)::DOUBLE) / hdr_cents
-                 < 0.01 THEN 'lt_1pct'
-               WHEN abs((hdr_cents - calc_cents)::DOUBLE) / hdr_cents
-                 < 0.1 THEN 'lt_10pct'
-               WHEN abs((hdr_cents - calc_cents)::DOUBLE) / hdr_cents
-                 < 0.5 THEN 'lt_50pct'
-               ELSE 'ge_50pct' END AS band
-           FROM o LEFT JOIN calc USING (o_orderkey))
-         SELECT band, count(*)::BIGINT AS n_orders,
-           sum(abs(hdr_cents - coalesce(calc_cents, 0)))::BIGINT
-             AS abs_diff_cents
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "q295_weighted_sample" ->
-      """WITH docs AS (
-           SELECT doc_id, source, n_chars,
-             (('0x' || substring(md5('0:' || doc_id::VARCHAR), 1, 12))
-               ::BIGINT + 1) / 281474976710656.0 AS u
-           FROM documents),
-         keyed AS (
-           SELECT *, power(u, 1.0 / n_chars) AS key FROM docs),
-         r AS (
-           SELECT source, doc_id, n_chars, key,
-             row_number() OVER (PARTITION BY source
-               ORDER BY key DESC, doc_id) AS rk
-           FROM keyed)
-         SELECT source, rk, doc_id, n_chars, round(key, 6) AS key
-         FROM r WHERE rk <= 3 ORDER BY source, rk""",
-
-    "q296_fd_histogram" ->
-      """WITH o AS (
-           SELECT round(o_totalprice * 100)::BIGINT AS cents
-           FROM orders),
-         stats AS (
-           SELECT count(*)::BIGINT AS n,
-             floor(quantile_cont(cents, 0.25))::BIGINT AS q1,
-             floor(quantile_cont(cents, 0.75))::BIGINT AS q3
-           FROM o),
-         w AS (
-           SELECT n,
-             greatest(ceil(2.0 * (q3 - q1) / cbrt(n::DOUBLE))::BIGINT, 1) AS width
-           FROM stats)
-         SELECT cents // width AS bin,
-           (cents // width) * width AS lo_cents,
-           count(*)::BIGINT AS n_orders, max(width)::BIGINT AS width
-         FROM o CROSS JOIN w
-         GROUP BY 1, 2 ORDER BY 1""",
-
-    "q297_distance_histogram" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         qs AS (
-           SELECT vec_id AS qid, v AS q, nm AS qn FROM nr
-           WHERE vec_id % 101 = 0),
-         d AS (
-           SELECT floor((1.0 -
-             round(list_sum(list_transform(range(1, len(n.v) + 1),
-               i -> n.v[i] * q.q[i])) / (n.nm * q.qn), 6)) / 0.05)
-             ::BIGINT AS bucket
-           FROM nr n CROSS JOIN qs q WHERE n.vec_id <> q.qid)
-         SELECT bucket, count(*)::BIGINT AS n_pairs,
-           round(bucket * 0.05, 2) AS dist_lo
-         FROM d GROUP BY 1 ORDER BY 1""",
-
-    "q298_hubness" ->
-      """WITH banded AS (
-           SELECT vec_id,
-             unnest(list_transform(range(0,8), t ->
-               CAST(t AS VARCHAR) || ':' ||
-               CAST(CAST(list_sum(list_transform(range(0,4), p ->
-                 CASE WHEN list_sum(list_transform(range(1,65), i ->
-                   CAST(embedding[i] AS DOUBLE) *
-                   ((((('0x' || substring(md5(CAST(t*4+p AS VARCHAR) || '_'
-                         || CAST(i-1 AS VARCHAR)),1,12))::BIGINT) % 1000)
-                     / 500.0) - 1.0))) >= 0
-                 THEN (1::BIGINT << p) ELSE 0 END)) AS BIGINT) AS VARCHAR)))
-               AS band_key
-           FROM embeddings),
-         cand AS (
-           SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.vec_id <> b.vec_id),
-         v AS (SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(range(1, len(embedding)+1),
-               i -> CAST(embedding[i] AS DOUBLE)*CAST(embedding[i] AS DOUBLE))))
-               AS nrm
-           FROM embeddings),
-         p AS (
-           SELECT qid, nid, round(
-             list_sum(list_transform(range(1, len(a.embedding)+1),
-               i -> CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE)))
-             / (a.nrm * b.nrm), 4) AS cos
-           FROM cand JOIN v a ON cand.qid = a.vec_id
-                     JOIN v b ON cand.nid = b.vec_id),
-         r AS (
-           SELECT qid, nid, row_number() OVER (
-             PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-           FROM p),
-         knn AS (SELECT qid, nid FROM r WHERE rank <= 3),
-         ind AS (
-           SELECT nid, count(*)::BIGINT AS indeg FROM knn GROUP BY 1)
-         SELECT indeg, count(*)::BIGINT AS n_vectors
-         FROM ind GROUP BY 1 ORDER BY 1""",
-
-    "q299_seasonal_backtest" ->
-      """WITH daily AS (
-           SELECT event_type AS ty,
-             datediff('day', DATE '1970-01-05', CAST(ts AS DATE)) AS dd,
-             count(*)::BIGINT AS n
-           FROM events GROUP BY 1, 2),
-         pred AS (
-           SELECT ty, dd + 7 AS dd, n AS pred FROM daily),
-         scored AS (
-           SELECT d.ty,
-             abs((d.n - p.pred)::DOUBLE) / d.n AS ape,
-             abs((d.n - p.pred)::DOUBLE) * 2.0 / (d.n + p.pred) AS sape
-           FROM daily d JOIN pred p USING (ty, dd))
-         SELECT ty, count(*)::BIGINT AS n_days,
-           round(list_sum(list_sort(list(ape))) / count(*) * 100, 4)
-             AS mape_pct,
-           round(list_sum(list_sort(list(sape))) / count(*) * 100, 4)
-             AS smape_pct
-         FROM scored GROUP BY 1 ORDER BY 1""",
-
-    "q300_bpe_batched" -> bpeTrainBatchedOracle(8, 8),
-
-    "q301_fellegi_sunter" ->
-      """WITH base AS (
-           SELECT c_custkey AS key, c_name AS nm,
-             c_nationkey::BIGINT AS nat,
-             round(c_acctbal * 100)::BIGINT AS balc,
-             c_mktsegment AS seg
-           FROM customer),
-         u AS (
-           SELECT key, nm, nat, balc, seg, 'a' AS src FROM base
-           UNION ALL
-           SELECT key,
-             CASE WHEN key % 7 = 0 THEN nm || 'x' ELSE nm END,
-             CASE WHEN key % 5 = 0 THEN (nat + 1) % 25 ELSE nat END,
-             CASE WHEN key % 3 = 0 THEN balc + 10000 ELSE balc END,
-             CASE WHEN key % 11 = 0 THEN 'UNKNOWN' ELSE seg END,
-             'b'
-           FROM base),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY nm || '|' || src) AS rk
-           FROM u),
-         p AS (
-           SELECT a.key = b.key AS mt,
-             a.nm = b.nm AS ag_nm, a.nat = b.nat AS ag_nat,
-             abs(a.balc - b.balc) <= 5000 AS ag_bal,
-             a.seg = b.seg AS ag_seg
-           FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
-           WHERE a.src <> b.src),
-         agg AS (
-           SELECT count(*)::BIGINT AS np,
-             sum(CASE WHEN mt THEN 1 ELSE 0 END)::BIGINT AS nmt,
-             sum(CASE WHEN mt AND ag_nm THEN 1 ELSE 0 END)::BIGINT AS am_nm,
-             sum(CASE WHEN NOT mt AND ag_nm THEN 1 ELSE 0 END)::BIGINT
-               AS au_nm,
-             sum(CASE WHEN mt AND ag_nat THEN 1 ELSE 0 END)::BIGINT
-               AS am_nat,
-             sum(CASE WHEN NOT mt AND ag_nat THEN 1 ELSE 0 END)::BIGINT
-               AS au_nat,
-             sum(CASE WHEN mt AND ag_bal THEN 1 ELSE 0 END)::BIGINT
-               AS am_bal,
-             sum(CASE WHEN NOT mt AND ag_bal THEN 1 ELSE 0 END)::BIGINT
-               AS au_bal,
-             sum(CASE WHEN mt AND ag_seg THEN 1 ELSE 0 END)::BIGINT
-               AS am_seg,
-             sum(CASE WHEN NOT mt AND ag_seg THEN 1 ELSE 0 END)::BIGINT
-               AS au_seg
-           FROM p),
-         f AS (
-           SELECT 'bal' AS field, am_bal AS am, au_bal AS au, np, nmt
-             FROM agg
-           UNION ALL SELECT 'nm', am_nm, au_nm, np, nmt FROM agg
-           UNION ALL SELECT 'nat', am_nat, au_nat, np, nmt FROM agg
-           UNION ALL SELECT 'seg', am_seg, au_seg, np, nmt FROM agg),
-         mu AS (
-           SELECT field,
-             (am::DOUBLE + 0.5) / (nmt::DOUBLE + 1.0) AS m,
-             (au::DOUBLE + 0.5) / ((np - nmt)::DOUBLE + 1.0) AS u
-           FROM f)
-         SELECT field,
-           round(m * 1e6)::BIGINT AS m_micro,
-           round(u * 1e6)::BIGINT AS u_micro,
-           round(ln(m / u) / ln(2.0) * 1e6)::BIGINT AS w_agree_micro,
-           round(ln((1.0 - m) / (1.0 - u)) / ln(2.0) * 1e6)::BIGINT
-             AS w_disagree_micro
-         FROM mu ORDER BY field""",
-
-    "q302_multiprobe_lsh" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         qs AS (
-           SELECT vec_id AS qid, v AS q, nm AS qn FROM nr
-           WHERE vec_id % 101 = 0),
-         truth AS (
-           SELECT qid, vec_id FROM (
-             SELECT q.qid, n.vec_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * q.q[i])) / (n.nm * q.qn), 6) DESC,
-                 n.vec_id) AS rn
-             FROM nr n CROSS JOIN qs q WHERE n.vec_id <> q.qid)
-           WHERE rn <= 10),
-         b AS (
-           SELECT vec_id, CAST(list_sum(list_transform(range(0, 8), p ->
-             CASE WHEN list_sum(list_transform(range(1, 65), i ->
-               CAST(embedding[i] AS DOUBLE) *
-               ((((('0x' || substring(md5(CAST(p AS VARCHAR) || '_'
-                     || CAST(i - 1 AS VARCHAR)), 1, 12))::BIGINT) % 1000)
-                 / 500.0) - 1.0))) >= 0
-             THEN (1::BIGINT << p) ELSE 0 END)) AS BIGINT) AS bkt
-           FROM embeddings),
-         h AS (
-           SELECT t.qid, bit_count(xor(qb.bkt, nb.bkt)) AS hd
-           FROM truth t
-           JOIN b qb ON qb.vec_id = t.qid
-           JOIN b nb ON nb.vec_id = t.vec_id)
-         SELECT qid, count(*)::BIGINT AS n_truth,
-           sum(CASE WHEN hd = 0 THEN 1 ELSE 0 END)::BIGINT AS hit_exact,
-           sum(CASE WHEN hd <= 1 THEN 1 ELSE 0 END)::BIGINT AS hit_probe1,
-           round(sum(CASE WHEN hd = 0 THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 4) AS recall_exact,
-           round(sum(CASE WHEN hd <= 1 THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 4) AS recall_probe1
-         FROM h GROUP BY 1 ORDER BY 1""",
-
-    "q303_holt_backtest" ->
-      """WITH daily AS (
-           SELECT event_type AS ty,
-             datediff('day', DATE '1970-01-05', CAST(ts AS DATE)) AS dd,
-             count(*)::BIGINT AS n
-           FROM events GROUP BY 1, 2),
-         folded AS (
-           SELECT ty, list_reduce(list_prepend(
-             CAST([0.0, 0.0, 0.0, 0.0, 0.0] AS DOUBLE[]),
-             list_sort(list([dd::DOUBLE, n::DOUBLE]))), (acc, x) ->
-             CASE WHEN acc[1] = 0.0
-                  THEN [1.0, x[2], 0.0, 0.0, 0.0]
-                  WHEN acc[1] = 1.0
-                  THEN [2.0, x[2], x[2] - acc[2], 0.0, 0.0]
-                  ELSE [acc[1] + 1.0,
-                        (x[2] + acc[2] + acc[3]) * 0.5,
-                        ((x[2] + acc[2] + acc[3]) * 0.5 - acc[2]) * 0.5
-                          + acc[3] * 0.5,
-                        acc[4] + abs(x[2] - (acc[2] + acc[3])) / x[2],
-                        acc[5] + 1.0] END) AS st
-           FROM daily GROUP BY 1)
-         SELECT ty, st[5]::BIGINT AS n_scored,
-           round(st[4] / st[5] * 100, 4) AS holt_mape_pct
-         FROM folded ORDER BY ty""",
-
-    "q304_compaction_plan" ->
-      """WITH files AS (
-           SELECT strftime(o_orderdate, '%Y-%m') AS part,
-             o_orderkey % 8 AS fid,
-             sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS bytes
-           FROM orders GROUP BY 1, 2),
-         stats AS (
-           SELECT (sum(bytes)::BIGINT // count(*)) * 4 AS target
-           FROM files),
-         small AS (
-           SELECT f.part, f.fid, f.bytes, s.target,
-             sum(f.bytes) OVER (PARTITION BY f.part
-               ORDER BY f.bytes DESC, f.fid) AS cum
-           FROM files f CROSS JOIN stats s
-           WHERE f.bytes < s.target)
-         SELECT part, ((cum + target - 1) // target)::BIGINT AS bin,
-           count(*)::BIGINT AS n_files, sum(bytes)::BIGINT AS bin_bytes
-         FROM small GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q306_linkage_em" -> linkageEmOracle(3),
-
-    "q307_ivf_nprobe" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         qs AS (
-           SELECT vec_id AS qid, v AS q, nm AS qn FROM nr
-           WHERE vec_id % 101 = 0),
-         cent AS (
-           SELECT vec_id AS cid, v AS cv, nm AS cn FROM nr
-           WHERE vec_id < 16),
-         exact AS (
-           SELECT qid, vec_id FROM (
-             SELECT q.qid, n.vec_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * q.q[i])) / (n.nm * q.qn), 6) DESC,
-                 n.vec_id) AS rn
-             FROM nr n CROSS JOIN qs q WHERE n.vec_id <> q.qid)
-           WHERE rn <= 10),
-         assigned AS (
-           SELECT vec_id, v, nm, cid AS cluster FROM (
-             SELECT n.vec_id, n.v, n.nm, c.cid,
-               row_number() OVER (PARTITION BY n.vec_id ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * c.cv[i])) / (n.nm * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM nr n CROSS JOIN cent c)
-           WHERE rn = 1),
-         qcl AS (
-           SELECT qid, q, qn, cluster, np FROM (
-             SELECT s.qid, s.q, s.qn, c.cid AS cluster,
-               row_number() OVER (PARTITION BY s.qid ORDER BY
-                 round(list_sum(list_transform(range(1, len(s.q) + 1),
-                   i -> s.q[i] * c.cv[i])) / (s.qn * c.cn), 6) DESC,
-                 c.cid) AS np
-             FROM qs s CROSS JOIN cent c)
-           WHERE np <= 2),
-         scored AS (
-           SELECT k.qid, a.vec_id, k.np,
-             round(list_sum(list_transform(range(1, len(a.v) + 1),
-               i -> a.v[i] * k.q[i])) / (a.nm * k.qn), 6) AS cs
-           FROM assigned a JOIN qcl k ON a.cluster = k.cluster
-           WHERE a.vec_id <> k.qid),
-         ap1 AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY cs DESC, vec_id) AS rn
-             FROM scored WHERE np = 1)
-           WHERE rn <= 10),
-         ap2 AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY cs DESC, vec_id) AS rn
-             FROM scored)
-           WHERE rn <= 10)
-         SELECT e.qid, count(*)::BIGINT AS n_truth,
-           sum(CASE WHEN a1.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::BIGINT AS hit_np1,
-           sum(CASE WHEN a2.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::BIGINT AS hit_np2,
-           round(sum(CASE WHEN a1.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::DOUBLE / count(*), 4) AS recall_np1,
-           round(sum(CASE WHEN a2.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-             ::DOUBLE / count(*), 4) AS recall_np2
-         FROM exact e
-         LEFT JOIN ap1 a1 ON e.qid = a1.qid AND e.vec_id = a1.vec_id
-         LEFT JOIN ap2 a2 ON e.qid = a2.qid AND e.vec_id = a2.vec_id
-         GROUP BY 1 ORDER BY 1""",
-
-    "q308_fs_classify" ->
-      """WITH base AS (
-           SELECT c_custkey AS key, c_name AS nm,
-             c_nationkey::BIGINT AS nat,
-             round(c_acctbal * 100)::BIGINT AS balc,
-             c_mktsegment AS seg
-           FROM customer),
-         u AS (
-           SELECT key, nm, nat, balc, seg, 'a' AS src FROM base
-           UNION ALL
-           SELECT key,
-             CASE WHEN key % 7 = 0 THEN nm || 'x' ELSE nm END,
-             CASE WHEN key % 5 = 0 THEN (nat + 1) % 25 ELSE nat END,
-             CASE WHEN key % 3 = 0 THEN balc + 10000 ELSE balc END,
-             CASE WHEN key % 11 = 0 THEN 'UNKNOWN' ELSE seg END,
-             'b'
-           FROM base),
-         r AS (
-           SELECT *, row_number() OVER (ORDER BY nm || '|' || src) AS rk
-           FROM u),
-         p AS (
-           SELECT a.key = b.key AS mt,
-             a.nm = b.nm AS ag_nm, a.nat = b.nat AS ag_nat,
-             abs(a.balc - b.balc) <= 5000 AS ag_bal,
-             a.seg = b.seg AS ag_seg
-           FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
-           WHERE a.src <> b.src),
-         agg AS (
-           SELECT count(*)::BIGINT AS np,
-             sum(CASE WHEN mt THEN 1 ELSE 0 END)::BIGINT AS nmt,
-             sum(CASE WHEN mt AND ag_nm THEN 1 ELSE 0 END)::BIGINT AS am_nm,
-             sum(CASE WHEN NOT mt AND ag_nm THEN 1 ELSE 0 END)::BIGINT
-               AS au_nm,
-             sum(CASE WHEN mt AND ag_nat THEN 1 ELSE 0 END)::BIGINT
-               AS am_nat,
-             sum(CASE WHEN NOT mt AND ag_nat THEN 1 ELSE 0 END)::BIGINT
-               AS au_nat,
-             sum(CASE WHEN mt AND ag_bal THEN 1 ELSE 0 END)::BIGINT
-               AS am_bal,
-             sum(CASE WHEN NOT mt AND ag_bal THEN 1 ELSE 0 END)::BIGINT
-               AS au_bal,
-             sum(CASE WHEN mt AND ag_seg THEN 1 ELSE 0 END)::BIGINT
-               AS am_seg,
-             sum(CASE WHEN NOT mt AND ag_seg THEN 1 ELSE 0 END)::BIGINT
-               AS au_seg
-           FROM p),
-         mu AS (
-           SELECT
-             (am_nm::DOUBLE + 0.5) / (nmt::DOUBLE + 1.0) AS m_nm,
-             (au_nm::DOUBLE + 0.5) / ((np - nmt)::DOUBLE + 1.0) AS u_nm,
-             (am_nat::DOUBLE + 0.5) / (nmt::DOUBLE + 1.0) AS m_nat,
-             (au_nat::DOUBLE + 0.5) / ((np - nmt)::DOUBLE + 1.0) AS u_nat,
-             (am_bal::DOUBLE + 0.5) / (nmt::DOUBLE + 1.0) AS m_bal,
-             (au_bal::DOUBLE + 0.5) / ((np - nmt)::DOUBLE + 1.0) AS u_bal,
-             (am_seg::DOUBLE + 0.5) / (nmt::DOUBLE + 1.0) AS m_seg,
-             (au_seg::DOUBLE + 0.5) / ((np - nmt)::DOUBLE + 1.0) AS u_seg
-           FROM agg),
-         scored AS (
-           SELECT mt,
-             (CASE WHEN ag_nm THEN ln(m_nm / u_nm) / ln(2.0)
-                   ELSE ln((1.0 - m_nm) / (1.0 - u_nm)) / ln(2.0) END)
-             + (CASE WHEN ag_nat THEN ln(m_nat / u_nat) / ln(2.0)
-                     ELSE ln((1.0 - m_nat) / (1.0 - u_nat)) / ln(2.0) END)
-             + (CASE WHEN ag_bal THEN ln(m_bal / u_bal) / ln(2.0)
-                     ELSE ln((1.0 - m_bal) / (1.0 - u_bal)) / ln(2.0) END)
-             + (CASE WHEN ag_seg THEN ln(m_seg / u_seg) / ln(2.0)
-                     ELSE ln((1.0 - m_seg) / (1.0 - u_seg)) / ln(2.0) END)
-               AS score
-           FROM p CROSS JOIN mu)
-         SELECT band, count(*)::BIGINT AS n_pairs,
-           sum(CASE WHEN mt THEN 1 ELSE 0 END)::BIGINT AS n_true,
-           round(sum(CASE WHEN mt THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 4) AS true_rate
-         FROM (
-           SELECT mt, CASE WHEN score >= 3.0 THEN 'match'
-                           WHEN score <= -3.0 THEN 'nonmatch'
-                           ELSE 'possible' END AS band
-           FROM scored)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q309_bpe_fertility" ->
-      """WITH RECURSIVE m AS (
-           SELECT string_split(pair, ' ')[1] AS a,
-                  string_split(pair, ' ')[2] AS b,
-                  row_number() OVER (ORDER BY cnt DESC, pair) AS r
-           FROM (
-             SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-               SELECT freq, unnest(list_transform(range(1, length(w)),
-                 i -> substring(w, i, 1) || ' ' || substring(w, i + 1, 1)))
-                 AS pair
-               FROM (
-                 SELECT w, count(*) AS freq FROM (
-                   SELECT unnest(string_split(
-                     lower(trim(regexp_replace(text,'\s+',' ','g'))),' '))
-                     AS w
-                   FROM documents)
-                 WHERE length(w) >= 2 GROUP BY 1))
-             GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 10)),
-         wd AS (
-           SELECT doc_id, source, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         wdne AS (SELECT doc_id, source, w FROM wd WHERE w <> ''),
-         v0 AS (
-           SELECT DISTINCT w,
-             regexp_replace(w, '(.)', chr(31) || '\1' || chr(31), 'g') AS s
-           FROM wdne),
-         enc(w, s, r) AS (
-           SELECT w, s, 0 FROM v0
-           UNION ALL
-           SELECT enc.w,
-             replace(enc.s, chr(31) || m.a || chr(31) || chr(31) || m.b
-               || chr(31), chr(31) || m.a || m.b || chr(31)),
-             enc.r + 1
-           FROM enc JOIN m ON m.r = enc.r + 1),
-         fin AS (
-           SELECT w, (length(s) - length(replace(s, chr(31), ''))) // 2
-             AS nt
-           FROM enc WHERE r = 10)
-         SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs,
-           count(*)::BIGINT AS n_words,
-           sum(nt)::BIGINT AS n_bpe_tokens,
-           round(sum(nt)::DOUBLE / count(*), 4) AS fertility
-         FROM wdne JOIN fin USING (w)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q310_perplexity_buckets" ->
-      """WITH w AS (
-           SELECT doc_id, source, unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         v AS (SELECT w, count(*) AS wc FROM w GROUP BY 1),
-         tot AS (SELECT sum(wc) AS tot FROM v),
-         nll AS (
-           SELECT doc_id, source, -ln(CAST(wc AS DOUBLE) / tot) AS nll
-           FROM w JOIN v USING (w) CROSS JOIN tot),
-         pd AS (
-           SELECT doc_id, source,
-             list_sum(list_sort(list(nll))) / count(*) AS msur
-           FROM nll GROUP BY 1, 2),
-         td AS (
-           SELECT source, msur,
-             ntile(3) OVER (PARTITION BY source
-               ORDER BY msur, doc_id)::BIGINT AS bucket
-           FROM pd)
-         SELECT source, bucket, count(*)::BIGINT AS n_docs,
-           round(min(msur), 4) AS min_surprisal,
-           round(max(msur), 4) AS max_surprisal
-         FROM td GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q311_join_size_cm" ->
-      """WITH a AS (
-           SELECT CAST(l_partkey AS VARCHAR) AS k FROM lineitem),
-         b AS (
-           SELECT CAST(l_partkey AS VARCHAR) AS k FROM lineitem
-           WHERE l_shipdate > TIMESTAMP '2000-01-01'),
-         ska AS (
-           SELECT d, ('0x' || substring(md5(CAST(d AS VARCHAR) || ':'
-               || k), 1, 12))::BIGINT % 256 AS bucket,
-             count(*)::BIGINT AS cnt
-           FROM a, unnest([0, 1, 2, 3]) AS t(d) GROUP BY 1, 2),
-         skb AS (
-           SELECT d, ('0x' || substring(md5(CAST(d AS VARCHAR) || ':'
-               || k), 1, 12))::BIGINT % 256 AS bucket,
-             count(*)::BIGINT AS cntb
-           FROM b, unnest([0, 1, 2, 3]) AS t(d) GROUP BY 1, 2),
-         est AS (
-           SELECT min(ip)::BIGINT AS est_pairs FROM (
-             SELECT ska.d, sum(cnt * cntb)::BIGINT AS ip
-             FROM ska JOIN skb USING (d, bucket) GROUP BY 1)),
-         ex AS (
-           SELECT sum(ca * cb)::BIGINT AS exact_pairs FROM (
-             SELECT k, count(*)::BIGINT AS ca FROM a GROUP BY 1) fa
-           JOIN (
-             SELECT k, count(*)::BIGINT AS cb FROM b GROUP BY 1) fb
-           USING (k))
-         SELECT est_pairs, exact_pairs,
-           round(est_pairs::DOUBLE / exact_pairs, 4) AS inflation
-         FROM est CROSS JOIN ex""",
-
-    "q312_selectivity_histogram" ->
-      """WITH o AS (
-           SELECT round(o_totalprice * 100)::BIGINT AS c FROM orders),
-         hist AS (
-           SELECT c // 5000000 AS b, count(*)::BIGINT AS cnt
-           FROM o GROUP BY 1),
-         preds AS (
-           SELECT * FROM (VALUES (0::BIGINT, 1234567::BIGINT, 8888888::BIGINT),
-             (1, 7500000, 20000000), (2, 12345678, 13000000),
-             (3, 30000000, 47500000), (4, 2500000, 52345678))
-             t(pred, lo, hi)),
-         est AS (
-           SELECT pred, round(list_sum(list_sort(list(
-               cnt::DOUBLE * greatest(0.0,
-                 (least(hi, (b + 1) * 5000000)::DOUBLE
-                   - greatest(lo, b * 5000000)::DOUBLE)
-                 / CAST(5000000 AS DOUBLE))))), 2) AS est_rows
-           FROM hist CROSS JOIN preds GROUP BY 1),
-         ex AS (
-           SELECT pred, count(*)::BIGINT AS exact_rows
-           FROM o JOIN preds ON c >= lo AND c < hi GROUP BY 1)
-         SELECT pred, est_rows,
-           coalesce(exact_rows, 0::BIGINT) AS exact_rows
-         FROM est LEFT JOIN ex USING (pred) ORDER BY pred""",
-
-    "q313_sampling_design" ->
-      """WITH li AS (
-           SELECT l_orderkey AS ok, l_linenumber AS ln,
-             round(l_extendedprice * 100)::BIGINT AS cents
-           FROM lineitem),
-         tg AS (
-           SELECT cents,
-             ('0x' || substring(md5('0:' || CAST(ok AS VARCHAR) || '_'
-               || CAST(ln AS VARCHAR)), 1, 12))::BIGINT % 10 = 0 AS row_in,
-             ('0x' || substring(md5('0:' || CAST(ok AS VARCHAR)), 1, 12))
-               ::BIGINT % 10 = 0 AS blk_in
-           FROM li)
-         SELECT * FROM (
-           SELECT 'block10' AS design, count(*)::BIGINT AS n_rows,
-             round(sum(cents)::DOUBLE / count(*) / 100.0, 4) AS mean_price
-           FROM tg WHERE blk_in
-           UNION ALL
-           SELECT 'row10', count(*)::BIGINT,
-             round(sum(cents)::DOUBLE / count(*) / 100.0, 4)
-           FROM tg WHERE row_in
-           UNION ALL
-           SELECT 'full', count(*)::BIGINT,
-             round(sum(cents)::DOUBLE / count(*) / 100.0, 4)
-           FROM tg)
-         ORDER BY design""",
-
-    "q314_watermark_planning" ->
-      """WITH e AS (
-           SELECT event_type AS ty,
-             ('0x' || substring(md5('0:' || CAST(event_id AS VARCHAR)),
-               1, 12))::BIGINT % 600 AS late_s
-           FROM events)
-         SELECT ty, delay_s, count(*)::BIGINT AS n_events,
-           sum(CASE WHEN late_s > delay_s THEN 1 ELSE 0 END)::BIGINT
-             AS n_dropped,
-           round(sum(CASE WHEN late_s > delay_s THEN 1 ELSE 0 END)::DOUBLE
-             / count(*) * 100, 4) AS dropped_pct
-         FROM e, unnest([0::BIGINT, 60, 120, 300, 600]) AS t(delay_s)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q317_ivf_list_balance" ->
-      """WITH e AS (
-           SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         nr AS (
-           SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) AS nm
-           FROM e),
-         c8 AS (SELECT vec_id AS cid, v AS cv, nm AS cn FROM nr
-                WHERE vec_id < 8),
-         c16 AS (SELECT vec_id AS cid, v AS cv, nm AS cn FROM nr
-                 WHERE vec_id < 16),
-         a8 AS (
-           SELECT vec_id, cid AS cluster FROM (
-             SELECT n.vec_id, c.cid,
-               row_number() OVER (PARTITION BY n.vec_id ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * c.cv[i])) / (n.nm * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM nr n CROSS JOIN c8 c)
-           WHERE rn = 1),
-         a16 AS (
-           SELECT vec_id, cid AS cluster FROM (
-             SELECT n.vec_id, c.cid,
-               row_number() OVER (PARTITION BY n.vec_id ORDER BY
-                 round(list_sum(list_transform(range(1, len(n.v) + 1),
-                   i -> n.v[i] * c.cv[i])) / (n.nm * c.cn), 6) DESC,
-                 c.cid) AS rn
-             FROM nr n CROSS JOIN c16 c)
-           WHERE rn = 1),
-         s AS (
-           SELECT 8::BIGINT AS nlists, count(*)::BIGINT AS lists_used,
-             min(occ)::BIGINT AS min_occ, max(occ)::BIGINT AS max_occ,
-             sum(occ)::BIGINT AS n_vectors
-           FROM (SELECT cluster, count(*) AS occ FROM a8 GROUP BY 1)
-           UNION ALL
-           SELECT 16::BIGINT, count(*)::BIGINT, min(occ)::BIGINT,
-             max(occ)::BIGINT, sum(occ)::BIGINT
-           FROM (SELECT cluster, count(*) AS occ FROM a16 GROUP BY 1))
-         SELECT nlists, lists_used, min_occ, max_occ, n_vectors,
-           round(max_occ::DOUBLE * nlists / n_vectors, 4) AS imbalance
-         FROM s ORDER BY nlists""",
-
-    "q318_shingle_df_profile" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         shx AS (
-           SELECT doc_id,
-             unnest(list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1]))) AS sh
-           FROM w),
-         dfx AS (SELECT sh, count(*)::BIGINT AS df FROM shx GROUP BY 1),
-         banded AS (
-           SELECT df,
-             CASE WHEN df = 1 THEN '1_unique'
-                  WHEN df = 2 THEN '2_pair'
-                  WHEN df <= 5 THEN '3_to_5'
-                  WHEN df <= 20 THEN '6_to_20'
-                  ELSE '9_over_cut' END AS band
-           FROM dfx),
-         tot AS (
-           SELECT sum(df)::BIGINT AS tp, sum(df * df)::BIGINT AS tw
-           FROM banded)
-         SELECT band, count(*)::BIGINT AS n_shingles,
-           sum(df)::BIGINT AS postings,
-           round(sum(df)::DOUBLE / tp * 100, 4) AS posting_pct,
-           round(sum(df * df)::DOUBLE / tw * 100, 4) AS pairwork_pct
-         FROM banded CROSS JOIN tot
-         GROUP BY band, tp, tw ORDER BY band""",
-
-    "q319_dedup_threshold_sweep" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         e0 AS (SELECT doc_id, unnest(shs) AS sh FROM sh),
-         rare AS (
-           SELECT sh FROM e0 GROUP BY 1 HAVING count(*) <= 20),
-         e AS (SELECT e0.* FROM e0 JOIN rare USING (sh)),
-         m AS (SELECT doc_id, count(*)::BIGINT AS mm FROM e GROUP BY 1),
-         em AS (SELECT e.doc_id, e.sh, m.mm FROM e JOIN m USING (doc_id)),
-         pr AS (
-           SELECT id_a, id_b,
-             round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4) AS j
-           FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.mm AS m_a, b.mm AS m_b, count(*)::BIGINT AS inter
-             FROM em a JOIN em b
-               ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2, 3, 4)
-           WHERE round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4)
-             >= 0.5),
-         sw AS (
-           SELECT id_a, id_b, thr_pct
-           FROM pr, unnest([50::BIGINT, 60, 70, 80, 90]) AS t(thr_pct)
-           WHERE j >= thr_pct::DOUBLE / 100.0),
-         np AS (
-           SELECT thr_pct, count(*)::BIGINT AS n_pairs
-           FROM sw GROUP BY 1),
-         nd AS (
-           SELECT thr_pct, count(DISTINCT d)::BIGINT AS n_docs FROM (
-             SELECT thr_pct, unnest([id_a, id_b]) AS d FROM sw)
-           GROUP BY 1)
-         SELECT thr_pct, n_pairs, n_docs
-         FROM np JOIN nd USING (thr_pct) ORDER BY thr_pct""",
-
-    "q320_minhash_estimator" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         e0 AS (SELECT doc_id, unnest(shs) AS sh FROM sh),
-         rare AS (
-           SELECT sh FROM e0 GROUP BY 1 HAVING count(*) <= 20),
-         e AS (SELECT e0.* FROM e0 JOIN rare USING (sh)),
-         m AS (SELECT doc_id, count(*)::BIGINT AS mm FROM e GROUP BY 1),
-         em AS (SELECT e.doc_id, e.sh, m.mm FROM e JOIN m USING (doc_id)),
-         pr AS (
-           SELECT id_a, id_b,
-             round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4) AS j
-           FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.mm AS m_a, b.mm AS m_b, count(*)::BIGINT AS inter
-             FROM em a JOIN em b
-               ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2, 3, 4)
-           WHERE round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4)
-             >= 0.05),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), kk ->
-               list_min(list_transform(shs, s ->
-                 ((2*kk+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*kk) % 2147483647))) AS sigs
-           FROM sh),
-         jj AS (
-           SELECT p.j, a.sigs AS sa, b.sigs AS sb
-           FROM pr p
-           JOIN sig a ON p.id_a = a.doc_id
-           JOIN sig b ON p.id_b = b.doc_id),
-         er AS (
-           SELECT k,
-             CAST(list_sum(list_transform(range(1, k + 1),
-               i -> CASE WHEN sa[i] = sb[i] THEN 1 ELSE 0 END))
-               AS DOUBLE) / k - j AS err
-           FROM jj, unnest([4::BIGINT, 8, 16]) AS t(k))
-         SELECT k, count(*)::BIGINT AS n_pairs,
-           round(list_sum(list_sort(list(abs(err)))) / count(*), 6)
-             AS mae,
-           round(list_sum(list_sort(list(err))) / count(*), 6) AS bias
-         FROM er GROUP BY 1 ORDER BY 1""",
-
-    "q315_curation_funnel" ->
-      """WITH d AS (
-           SELECT doc_id, text,
-             md5(lower(trim(regexp_replace(text,'\s+',' ','g')))) AS fp,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         k2 AS (SELECT fp, min(doc_id) AS doc_id FROM d GROUP BY 1),
-         s2 AS (SELECT d.* FROM d JOIN k2 USING (fp, doc_id)),
-         g AS (
-           SELECT doc_id FROM (
-             SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-               round(CAST(list_sum(list_transform(ws, x -> len(x)))
-                 AS DOUBLE) / len(ws), 4) AS mwl,
-               CAST(len(list_filter(ws, x -> x = 'the' OR x = 'a'))
-                 AS BIGINT) AS sc
-             FROM s2)
-           WHERE n_words >= 50 AND n_words <= 90
-             AND mwl >= 3.0 AND mwl <= 10.0 AND sc >= 2),
-         s3 AS (SELECT s2.* FROM s2 JOIN g USING (doc_id)),
-         s4 AS (
-           SELECT * FROM s3
-           WHERE len(list_filter(ws, x -> x = 'the' OR x = 'a'
-             OR x = 'of' OR x = 'and')) >= 2),
-         raw AS (SELECT count(*)::BIGINT AS nr FROM d),
-         st AS (
-           SELECT '1_raw' AS stage, count(*)::BIGINT AS n_docs FROM d
-           UNION ALL SELECT '2_exact_dedup', count(*)::BIGINT FROM s2
-           UNION ALL SELECT '3_quality', count(*)::BIGINT FROM s3
-           UNION ALL SELECT '4_english', count(*)::BIGINT FROM s4)
-         SELECT stage, n_docs,
-           round(n_docs::DOUBLE / nr * 100, 4) AS pct_of_raw
-         FROM st CROSS JOIN raw ORDER BY stage""",
-
-    "q316_minhash_scurve" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(ws)),
-               i -> ws[i] || ' ' || ws[i+1])) AS shs
-           FROM w),
-         e0 AS (SELECT doc_id, unnest(shs) AS sh FROM sh),
-         rare AS (
-           SELECT sh FROM e0 GROUP BY 1 HAVING count(*) <= 20),
-         e AS (SELECT e0.* FROM e0 JOIN rare USING (sh)),
-         m AS (SELECT doc_id, count(*)::BIGINT AS mm FROM e GROUP BY 1),
-         em AS (SELECT e.doc_id, e.sh, m.mm FROM e JOIN m USING (doc_id)),
-         pr AS (
-           SELECT id_a, id_b,
-             round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4) AS j
-           FROM (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.mm AS m_a, b.mm AS m_b, count(*)::BIGINT AS inter
-             FROM em a JOIN em b
-               ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2, 3, 4)
-           WHERE round(CAST(inter AS DOUBLE)/(m_a + m_b - inter), 4)
-             >= 0.05),
-         sig AS (
-           SELECT doc_id,
-             list_transform(range(0,16), k ->
-               list_min(list_transform(shs, s ->
-                 ((2*k+1) * ((('0x' || substring(md5('0:' || s),1,12))::BIGINT)
-                             % 2147483647)
-                  + 7919*k) % 2147483647))) AS sigs
-           FROM sh),
-         banded0 AS (
-           SELECT doc_id,
-             unnest(list_transform(range(0,8), b ->
-               CAST(b AS VARCHAR) || ':'
-               || CAST(sigs[2*b+1] AS VARCHAR) || ':'
-               || CAST(sigs[2*b+2] AS VARCHAR))) AS band_key
-           FROM sig),
-         bsz AS (SELECT band_key, count(*) AS c FROM banded0 GROUP BY 1),
-         banded AS (
-           SELECT banded0.* FROM banded0 JOIN bsz USING (band_key)
-           WHERE bsz.c <= 10),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM banded a JOIN banded b
-             ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         sc1 AS (
-           SELECT CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS hit,
-             round(j * 10000)::BIGINT // 500 AS bin,
-             1.0 - j * j AS x
-           FROM pr p LEFT JOIN cand c
-             ON p.id_a = c.id_a AND p.id_b = c.id_b),
-         sc2 AS (SELECT hit, bin, x * x AS x2 FROM sc1),
-         sc3 AS (SELECT hit, bin, x2 * x2 AS x4 FROM sc2),
-         sc4 AS (SELECT hit, bin, 1.0 - x4 * x4 AS p FROM sc3)
-         SELECT bin, count(*)::BIGINT AS n_pairs,
-           sum(hit)::BIGINT AS n_collided,
-           round(sum(hit)::DOUBLE / count(*), 4) AS obs_rate,
-           round(list_sum(list_sort(list(p))) / count(*), 4) AS theo_rate
-         FROM sc4 GROUP BY 1 ORDER BY 1""",
-
-    "q305_zonemap_skipping" ->
-      """WITH base AS (
-           SELECT strftime(o_orderdate, '%Y-%m') AS part,
-             round(o_totalprice * 100)::BIGINT AS c,
-             o_orderkey AS k
-           FROM orders),
-         tagged AS (
-           SELECT part, c, k % 8 AS fid, 'hash' AS layout FROM base
-           UNION ALL
-           SELECT part, c,
-             ntile(8) OVER (PARTITION BY part ORDER BY c, k)::BIGINT,
-             'clustered'
-           FROM base),
-         zones AS (
-           SELECT layout, part, fid, min(c) AS zmin, max(c) AS zmax
-           FROM tagged GROUP BY 1, 2, 3),
-         z AS (
-           SELECT layout, unnest(range(0, 20)) AS pred, zmin, zmax
-           FROM zones)
-         SELECT layout, pred, count(*)::BIGINT AS n_files,
-           sum(CASE WHEN zmax < pred * 2500000
-                      OR zmin >= (pred + 1) * 2500000
-                    THEN 1 ELSE 0 END)::BIGINT AS n_skipped,
-           round(sum(CASE WHEN zmax < pred * 2500000
-                            OR zmin >= (pred + 1) * 2500000
-                          THEN 1 ELSE 0 END)::DOUBLE
-             / count(*) * 100, 2) AS skip_pct
-         FROM z GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // computed by sqlite3 over the committed fixture at generation time
-    // (tools/make_sqlite_fixture.py prints this block) — regenerate the
-    // fixture and the script re-prints identical literals
-    "q321_sqlite_scan" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 187, 0, 85920, 4488, 148359),
-           ('beta', 188, 188, 86471, 4491, 32580),
-           ('bigint', 1, -1125899906842624, -98764, 1099511627776, 3),
-           ('delta', 188, 188, 85221, 4497, 32766),
-           ('epsilon', 188, 0, 84420, 4500, 33138),
-           ('eta', 187, 0, 85596, 4482, 32365),
-           ('gamma', 188, 0, 85670, 4494, 32766),
-           ('theta', 187, 187, 85758, 4485, 32735),
-           ('zeta', 187, 187, 84082, 4479, 32550)
-         ) AS t(cat, n_docs, n_flagged, sum_score_x8, max_id, body_chars)""",
-
-    "q322_benford_screen" ->
-      """WITH d AS (
-           SELECT CAST(substring(CAST(CAST(round(o_totalprice * 100)
-             AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit
-           FROM orders),
-         o AS (SELECT digit, count(*) AS n_obs FROM d GROUP BY 1),
-         t AS (SELECT CAST(sum(n_obs) AS DOUBLE) AS nn FROM o),
-         p AS (SELECT [0.3010299956639812, 0.17609125905568124,
-           0.12493873660829992, 0.09691001300805642, 0.07918124604762482,
-           0.06694678963061322, 0.05799194697768673, 0.05115252244738129,
-           0.04575749056067514] AS bl)
-         SELECT digit, n_obs,
-           round(bl[digit::INT], 6) AS p_benford,
-           round(nn * bl[digit::INT], 4) AS expected,
-           round((n_obs - nn * bl[digit::INT])
-               * (n_obs - nn * bl[digit::INT])
-             / (nn * bl[digit::INT]), 6) AS chi2_term
-         FROM o, t, p ORDER BY digit""",
-
-    "q323_winsorize_groups" ->
-      """WITH c AS (
-           SELECT c_mktsegment AS seg,
-             CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-           FROM customer),
-         cuts AS (
-           SELECT seg, quantile_cont(cents, 0.1) AS lo,
-             quantile_cont(cents, 0.9) AS hi
-           FROM c GROUP BY 1),
-         j AS (
-           SELECT c.seg, cents, lo, hi,
-             greatest(least(CAST(cents AS DOUBLE), hi), lo) AS w
-           FROM c JOIN cuts USING (seg))
-         SELECT seg, count(*) AS n,
-           sum(CASE WHEN CAST(cents AS DOUBLE) < lo THEN 1 ELSE 0 END)
-             ::BIGINT AS n_clip_lo,
-           sum(CASE WHEN CAST(cents AS DOUBLE) > hi THEN 1 ELSE 0 END)
-             ::BIGINT AS n_clip_hi,
-           round(min(lo), 4) AS p10, round(min(hi), 4) AS p90,
-           round(list_sum(list_sort(list(w))), 4) AS sum_winsorized
-         FROM j GROUP BY seg ORDER BY seg""",
-
-    "q324_good_turing" ->
-      """WITH wd AS (
-           SELECT unnest(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))), ' ')) AS w
-           FROM documents),
-         wc AS (SELECT w, count(*) AS r FROM wd GROUP BY 1),
-         nr AS (SELECT r, count(*) AS n_r FROM wc GROUP BY 1),
-         nxt AS (SELECT r - 1 AS r, n_r AS n1 FROM nr),
-         tot AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM wd)
-         SELECT nr.r, nr.n_r,
-           round(CAST(nr.r + 1 AS DOUBLE) * nxt.n1 / nr.n_r, 6) AS r_star,
-           round(CAST(nr.r AS DOUBLE) * nr.n_r / tot.nn, 6) AS mass_share
-         FROM nr LEFT JOIN nxt USING (r), tot
-         ORDER BY r LIMIT 10""",
-
-    "q325_token_budget_shards" ->
-      """WITH d AS (
-           SELECT doc_id, CAST(len(string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))), ' '))
-             AS BIGINT) AS tok
-           FROM documents),
-         r AS (
-           SELECT doc_id, tok,
-             coalesce(sum(tok) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS excl
-           FROM d)
-         SELECT (excl // 5000)::BIGINT AS shard, count(*) AS n_docs,
-           sum(tok)::BIGINT AS sum_tokens,
-           min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         FROM r GROUP BY 1 ORDER BY shard""",
-
-    "q326_grouped_folds" ->
-      """WITH e AS (
-           SELECT user_id, event_type,
-             (('0x' || substring(md5('0:fold' || CAST(user_id AS VARCHAR)),
-               1, 12))::BIGINT) % 5 AS fold
-           FROM events)
-         SELECT fold, count(DISTINCT user_id) AS n_users,
-           count(*) AS n_events,
-           sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT
-             AS n_purchases
-         FROM e GROUP BY 1 ORDER BY fold""",
-
-    "q328_lsh_planner" ->
-      """WITH g AS (SELECT * FROM (VALUES
-           (16,1,16),(16,2,8),(16,4,4),(16,8,2),(16,16,1),
-           (32,1,32),(32,2,16),(32,4,8),(32,8,4),(32,16,2),(32,32,1),
-           (64,1,64),(64,2,32),(64,4,16),(64,8,8),(64,16,4),(64,32,2),
-           (64,64,1)) AS t(k, b, r)),
-         sv AS (SELECT unnest([0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS s),
-         x AS (
-           SELECT k, b, r, s,
-             list_reduce(list_prepend(CAST(1.0 AS DOUBLE),
-               list_transform(range(r), i -> s)), (a, v) -> a * v) AS sr
-           FROM g, sv)
-         SELECT k, b, r, s,
-           round(1.0 - list_reduce(list_prepend(CAST(1.0 AS DOUBLE),
-             list_transform(range(b), i -> 1.0 - sr)), (a, v) -> a * v), 6)
-             AS p_candidate
-         FROM x ORDER BY k, b, s""",
-
-    // the shipped reference snapshot's shape: 22/5/19 DDL columns,
-    // INTEGER-PK rowid aliases, all tables empty (SqliteSourceSpec
-    // re-derives the same facts from the DDL goldens)
-    "q327_sqlite_warehouse_catalog" ->
-      """SELECT * FROM (VALUES
-           ('DWH_DOCUMENT', 19, 'DOCUMENT_NUM', 0),
-           ('DWH_PATIENT', 22, 'PATIENT_NUM', 0),
-           ('DWH_PATIENT_IPPHIST', 5, '', 0)
-         ) AS t(table_name, n_cols, rowid_alias, n_rows)""",
-
-    "q329_dedup_audit" ->
-      """WITH g AS (
-           SELECT md5(array_to_string((string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))), ' '))[1:5],
-               ' ')) AS fp,
-             count(*) AS n, list_sort(list(doc_id)) AS ids
-           FROM documents GROUP BY 1)
-         SELECT fp, ids[1] AS keeper, n - 1 AS n_dropped,
-           ids[2] AS dropped_lo, ids[-1] AS dropped_hi
-         FROM g WHERE n >= 2 ORDER BY fp""",
-
-    // computed by sqlite3 over the committed fixture at generation time
-    // (tools/make_sqlite_fixture.py prints this block)
-    "q330_sqlite_kv_join" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 187, 2236800),
-           ('beta', 188, 2271836),
-           ('bigint', 1, 15625),
-           ('delta', 188, 2343036),
-           ('epsilon', 188, 2379200),
-           ('eta', 187, 2442252),
-           ('gamma', 188, 2307248),
-           ('theta', 187, 2479339),
-           ('zeta', 187, 2405539)
-         ) AS t(cat, n_docs, sum_v)""",
-
-    // computed by sqlite3 over the committed fixture at generation time
-    // (tools/make_sqlite_fixture.py prints this block)
-    "q331_sqlite_rowid_window" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 63, 104328, 60779),
-           ('beta', 62, 102114, 1860),
-           ('delta', 62, 102486, 1922),
-           ('epsilon', 63, 103572, 15546),
-           ('eta', 63, 103950, 15298),
-           ('gamma', 62, 102300, 1922),
-           ('theta', 63, 104139, 15422),
-           ('zeta', 63, 103761, 15360)
-         ) AS t(cat, n_docs, sum_id, body_chars)""",
-
-    "q332_incremental_dedup" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             md5(array_to_string((string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))), ' '))[1:5],
-               ' ')) AS fp
-           FROM documents),
-         h AS (SELECT DISTINCT fp FROM d WHERE doc_id % 4 <> 0),
-         b AS (SELECT * FROM d WHERE doc_id % 4 = 0),
-         k AS (SELECT fp, min(doc_id) AS keep FROM b GROUP BY 1)
-         SELECT source,
-           CASE WHEN b.fp IN (SELECT fp FROM h) THEN 'dup_vs_history'
-                WHEN b.doc_id <> k.keep THEN 'dup_in_batch'
-                ELSE 'kept' END AS decision,
-           count(*) AS n_docs
-         FROM b JOIN k USING (fp)
-         GROUP BY 1, 2 ORDER BY source, decision""",
-
-    // computed by sqlite3 over the committed fixture at generation time
-    // (tools/make_sqlite_fixture.py prints this block)
-    // the STRONG oracle shape: DuckDB computes from parquet what Spark
-    // routes through the written .db — corruption anywhere mismatches
-    "q337_sqlite_export_roundtrip" ->
-      """SELECT c_mktsegment AS seg, count(*) AS n,
-           sum(CAST(round(c_acctbal * 100) AS BIGINT))::BIGINT AS sum_cents,
-           min(c_custkey) AS min_key, max(c_custkey) AS max_key
-         FROM customer GROUP BY 1 ORDER BY seg""",
-
-    // the q321 projection of the fixture (sqlite3-computed) — the
-    // migration read-back must equal the legacy source exactly
-    "q336_sqlite_migration" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 187, 0, 148359),
-           ('beta', 188, 188, 32580),
-           ('bigint', 1, -1125899906842624, 3),
-           ('delta', 188, 188, 32766),
-           ('epsilon', 188, 0, 33138),
-           ('eta', 187, 0, 32365),
-           ('gamma', 188, 0, 32766),
-           ('theta', 187, 187, 32735),
-           ('zeta', 187, 187, 32550)
-         ) AS t(cat, n_docs, n_flagged, body_chars)""",
-
-    "q335_sqlite_without_rowid" ->
-      """SELECT * FROM (VALUES
-           ('g0', 72, 14140, 355, 936),
-           ('g1', 72, 14276, 356, 936),
-           ('g2', 72, 14012, 357, 7423),
-           ('g3', 72, 14148, 358, 936),
-           ('g4', 72, 13884, 359, 936)
-         ) AS t(grp, n_rows, sum_val_x4, max_id, note_chars)""",
-
-    "q333_rendezvous_sharding" ->
-      """WITH k AS (SELECT c_custkey AS k FROM customer),
-         h8 AS (
-           SELECT k.k, t.s,
-             ('0x' || substring(md5('0:' || CAST(k.k AS VARCHAR) || ':' ||
-               CAST(t.s AS VARCHAR)), 1, 12))::BIGINT AS h
-           FROM k, unnest(range(8)) AS t(s)),
-         a8 AS (SELECT k, arg_max(s, h)::BIGINT AS shard FROM h8 GROUP BY k),
-         h9 AS (
-           SELECT k.k, t.s,
-             ('0x' || substring(md5('0:' || CAST(k.k AS VARCHAR) || ':' ||
-               CAST(t.s AS VARCHAR)), 1, 12))::BIGINT AS h
-           FROM k, unnest(range(9)) AS t(s)),
-         a9 AS (SELECT k, arg_max(s, h)::BIGINT AS shard9 FROM h9 GROUP BY k)
-         SELECT shard, count(*) AS n_keys,
-           sum(CASE WHEN shard9 <> shard THEN 1 ELSE 0 END)::BIGINT
-             AS n_moved,
-           round(sum(CASE WHEN shard9 <> shard THEN 1 ELSE 0 END)::DOUBLE
-             / count(*) * 100, 4) AS pct_moved
-         FROM a8 JOIN a9 USING (k)
-         GROUP BY shard ORDER BY shard""",
-
-    "q334_cdc_chunking" ->
-      """WITH wd AS (
-           SELECT doc_id, d.ws[t.p] AS w, t.p,
-             CASE WHEN (('0x' || substring(md5('0:' || d.ws[t.p]), 1, 12))
-               ::BIGINT) % 8 = 0 THEN 1 ELSE 0 END AS flag
-           FROM (SELECT doc_id, string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))), ' ') AS ws
-             FROM documents) d,
-             unnest(range(1, len(d.ws) + 1)) AS t(p)),
-         ch AS (
-           SELECT doc_id, w, p,
-             sum(flag) OVER (PARTITION BY doc_id ORDER BY p) AS chunk
-           FROM wd),
-         cs AS (
-           SELECT doc_id, chunk, count(*) AS n_words,
-             md5(string_agg(w, ' ' ORDER BY p)) AS fp
-           FROM ch GROUP BY doc_id, chunk),
-         f AS (SELECT fp, count(*) AS occ, min(n_words) AS n_words
-               FROM cs GROUP BY fp)
-         SELECT occ, count(*) AS n_chunks, sum(n_words)::BIGINT AS sum_words
-         FROM f GROUP BY occ ORDER BY occ""",
-
-    // computed by sqlite3 over the committed WAL fixture pair at
-    // generation time (tools/make_sqlite_wal_fixture.py prints this
-    // block after validating the normalized sidecar with a fresh
-    // sqlite3 connection) — a main-file-only read would return 800
-    // stale rows and zero alerts, nothing close to these numbers
-    "q338_sqlite_wal_scan" ->
-      """SELECT * FROM (VALUES
-           ('s-core', 237, 61454, 0, 1199),
-           ('s-east', 237, 60917, 0, 1197),
-           ('s-north', 238, 73900, 20, 1200),
-           ('s-south', 238, 60502, 0, 1196),
-           ('s-west', 238, 60685, 0, 1198)
-         ) AS t(sensor, n, sum_temp_x8, n_alert, max_id)""",
-
-    // computed by sqlite3 over the committed fixture at generation time
-    // (tools/make_sqlite_fixture.py prints this block); sqlite3 routes
-    // the same IN predicate through the same idx_docs_cat index
-    "q339_sqlite_index_lookup" ->
-      """SELECT * FROM (VALUES
-           ('delta', 188, 423564, 32766),
-           ('zeta', 187, 420189, 32550)
-         ) AS t(cat, n_docs, sum_id, body_chars)""",
-
-    "q340_phrase_tagging" ->
-      """WITH tk AS (
-           SELECT doc_id, source,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, source,
-             ws[i] || ' ' || ws[i+1] AS g2,
-             CASE WHEN i + 2 <= len(ws)
-               THEN ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] END AS g3
-           FROM tk, unnest(range(1, len(ws))) AS t(i)),
-         u AS (
-           SELECT doc_id, source, g2 AS gram FROM g
-           UNION ALL
-           SELECT doc_id, source, g3 FROM g WHERE g3 IS NOT NULL),
-         d AS (SELECT * FROM (VALUES ('table scan'), ('hash join'),
-           ('key agg'), ('window table'), ('slow filter value'),
-           ('fast merge batch')) AS p(phrase))
-         SELECT phrase, count(*) AS n_hits,
-           count(DISTINCT doc_id) AS n_docs,
-           count(DISTINCT source) AS n_sources
-         FROM u JOIN d ON u.gram = d.phrase
-         GROUP BY 1 ORDER BY phrase""",
-
-    "q341_isotonic_pava" ->
-      """WITH o AS (
-           SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-             o_orderpriority IN ('1-URGENT', '2-HIGH') AS y
-           FROM orders),
-         b AS (
-           SELECT least(99, cents // 600000) AS b, count(*) AS n,
-             sum(CASE WHEN y THEN 1 ELSE 0 END)::BIGINT AS pos
-           FROM o GROUP BY 1),
-         c AS (
-           SELECT b, n, pos,
-             sum(n) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING)::BIGINT
-               AS cn,
-             sum(pos) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING)::BIGINT
-               AS cp
-           FROM b),
-         jk AS (
-           SELECT j.b AS j, k.b AS k,
-             ((1000000000 * (k.cp - (j.cp - j.pos)))
-               // (k.cn - (j.cn - j.n)))::BIGINT AS avg_e9
-           FROM c j JOIN c k ON j.b <= k.b),
-         m AS (
-           SELECT j, k AS i,
-             min(avg_e9) OVER (PARTITION BY j ORDER BY k DESC
-               ROWS UNBOUNDED PRECEDING) AS m
-           FROM jk),
-         f AS (
-           SELECT j, i,
-             max(m) OVER (PARTITION BY i ORDER BY j
-               ROWS UNBOUNDED PRECEDING) AS fit_e9
-           FROM m WHERE j <= i)
-         SELECT c.b, c.n, c.pos,
-           ((1000000000 * c.pos) // c.n)::BIGINT AS rate_e9,
-           ff.fit_e9
-         FROM c JOIN (SELECT i AS b, fit_e9 FROM f WHERE j = i) ff
-           ON c.b = ff.b
-         ORDER BY c.b""",
-
-    "q342_wfq_schedule" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             len(string_split(lower(trim(regexp_replace(text,'\s+',' ',
-               'g'))), ' '))::BIGINT AS ntok
-           FROM documents),
-         w AS (SELECT source, sum(ntok)::BIGINT AS wtok FROM d GROUP BY 1),
-         r AS (
-           SELECT d.doc_id, d.source, wtok,
-             row_number() OVER (PARTITION BY d.source ORDER BY d.doc_id)
-               AS k
-           FROM d JOIN w USING (source)),
-         t AS (
-           SELECT doc_id, source, k, (k * 1000000000) // wtok AS finish
-           FROM r ORDER BY finish, source, doc_id LIMIT 40)
-         SELECT row_number() OVER (ORDER BY finish, source, doc_id)
-             AS slot,
-           source, doc_id, k, finish
-         FROM t ORDER BY slot""",
-
-    "q343_winnowing" ->
-      """WITH tk AS (
-           SELECT doc_id, source,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         gr AS (
-           SELECT doc_id, source, i AS p,
-             ('0x' || substring(md5('0:' || ws[i] || ' ' || ws[i+1] ||
-               ' ' || ws[i+2]), 1, 12))::BIGINT AS h
-           FROM tk, unnest(range(1, len(ws) - 1)) AS t(i)),
-         wm AS (
-           SELECT doc_id, source,
-             min(h) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             count(*) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wlen
-           FROM gr),
-         fp AS (SELECT DISTINCT doc_id, source, mh
-                FROM wm WHERE wlen = 4),
-         g2 AS (SELECT mh, count(DISTINCT doc_id) AS nd
-                FROM fp GROUP BY 1)
-         SELECT source, count(DISTINCT doc_id) AS n_docs,
-           count(*) AS n_fps,
-           count(DISTINCT mh) AS n_distinct_fps,
-           count(DISTINCT CASE WHEN nd >= 2 THEN mh END) AS n_shared_fps
-         FROM fp JOIN g2 USING (mh)
-         GROUP BY 1 ORDER BY source""",
-
-    // sqlite3's own answers over the committed fixture (count/min/max
-    // are schema facts of the generator: 1500 docs + the bigint row,
-    // ids i*3 with the 2^40 outlier, 360 wr_metrics, 200 kv)
-    "q344_sqlite_agg_pushdown" ->
-      """SELECT * FROM (VALUES
-           (1501, 3, 1099511627776, 360, 200)
-         ) AS t(docs_n, docs_min_id, docs_max_id, wr_n, kv_n)""",
-
-    "q345_source_overlap" ->
-      """WITH tk AS (
-           SELECT doc_id, source,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         gr AS (
-           SELECT doc_id, source, i AS p,
-             ('0x' || substring(md5('0:' || ws[i] || ' ' || ws[i+1] ||
-               ' ' || ws[i+2]), 1, 12))::BIGINT AS h
-           FROM tk, unnest(range(1, len(ws) - 1)) AS t(i)),
-         wm AS (
-           SELECT doc_id, source,
-             min(h) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             count(*) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wlen
-           FROM gr),
-         fp AS MATERIALIZED (
-           SELECT DISTINCT source, mh FROM wm WHERE wlen = 4),
-         sz AS (SELECT source, count(*) AS n_fp FROM fp GROUP BY 1),
-         iv AS (
-           SELECT a.source AS src_a, b.source AS src_b, count(*) AS inter
-           FROM fp a JOIN fp b USING (mh)
-           WHERE a.source <> b.source GROUP BY 1, 2),
-         sc AS (
-           SELECT src_a, src_b, inter, n_fp,
-             ((1000000 * inter) // n_fp)::BIGINT AS containment_e6
-           FROM iv JOIN sz ON sz.source = iv.src_a),
-         top AS (
-           SELECT * FROM sc
-           ORDER BY containment_e6 DESC, src_a, src_b LIMIT 20)
-         SELECT row_number() OVER (ORDER BY containment_e6 DESC, src_a,
-             src_b) AS rk,
-           src_a, src_b, inter, n_fp, containment_e6
-         FROM top ORDER BY rk""",
-
-    "q346_kneser_ney" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         bi AS MATERIALIZED (
-           SELECT ws[i] AS w1, ws[i+1] AS w2, count(*)::BIGINT AS c12
-           FROM tk, unnest(range(1, len(ws))) AS t(i)
-           GROUP BY 1, 2),
-         b1 AS (SELECT w1, sum(c12)::BIGINT AS c1,
-             count(*)::BIGINT AS n_follow
-           FROM bi GROUP BY 1),
-         b2 AS (SELECT w2, count(*)::BIGINT AS n_precede FROM bi GROUP BY 1),
-         tb AS (SELECT count(*)::BIGINT AS n_bigrams FROM bi),
-         tm AS (
-           SELECT w1,
-             greatest(c12 - 0.75, 0.0) / c1::DOUBLE
-               + 0.75 * n_follow::DOUBLE / c1::DOUBLE
-                 * (n_precede::DOUBLE / n_bigrams::DOUBLE) AS pkn
-           FROM bi JOIN b1 USING (w1) JOIN b2 USING (w2) CROSS JOIN tb),
-         ms AS (SELECT w1, list_sum(list_sort(list(pkn))) AS m
-                FROM tm GROUP BY 1)
-         SELECT w1, c1, n_follow,
-           CAST(round(m * 1e9) AS BIGINT) AS mass_e9
-         FROM b1 JOIN ms USING (w1)
-         ORDER BY c1 DESC, w1 LIMIT 20""",
-
-    // computed by sqlite3 over the committed fixture (the generator
-    // prints these blocks; EXPLAIN QUERY PLAN confirms sqlite itself
-    // serves each predicate from the same index)
-    "q347_sqlite_index_range" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 13, 28368, 10872),
-           ('beta', 14, 29658, 11782),
-           ('delta', 15, 35487, 12673),
-           ('epsilon', 15, 34668, 12572),
-           ('eta', 12, 28872, 10088),
-           ('gamma', 16, 37248, 13392),
-           ('theta', 12, 25788, 10052),
-           ('zeta', 13, 32499, 10821)
-         ) AS t(cat, n_docs, sum_id, sum_score_x8)""",
-
-    "q348_sqlite_index_prefix" ->
-      """SELECT * FROM (VALUES
-           ('alpha', 15, 33648, 2992),
-           ('epsilon', 12, 25656, 2424),
-           ('eta', 15, 31542, 3018),
-           ('gamma', 12, 28728, 2312)
-         ) AS t(cat, n_docs, sum_id, sum_score_x8)""",
-
-    "q349_sqlite_partial_index" ->
-      """SELECT * FROM (VALUES
-           (369, 'delta', 'doc 00123', 551),
-           (1371, 'beta', 'doc 00457', 909),
-           (2997, 'theta', 'doc 00999', 963)
-         ) AS t(id, cat, title, score_x8)""",
-
-    // computed by replaying the committed WAL fixture with sqlite3 at
-    // both cursors — head view vs the WAL truncated at the first
-    // commit boundary (tools/make_wal_cdc_oracle.py)
-    "q350_sqlite_wal_cdc" ->
-      """SELECT * FROM (VALUES
-           ('delete', 8, 3492, 97),
-           ('insert', 396, 396126, 801),
-           ('update', 8, 3600, 100)
-         ) AS t(op, n, sum_rowid, min_rowid)""",
-
-    "q351_exact_substring_dedup" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS p,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         hits AS (SELECT doc_id, p FROM g JOIN dup USING (gram)),
-         brk AS (
-           SELECT doc_id, p,
-             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 8
-               THEN 0 ELSE 1 END AS b
-           FROM hits),
-         sid AS (
-           SELECT doc_id, p,
-             sum(b) OVER (PARTITION BY doc_id ORDER BY p) AS span_id
-           FROM brk),
-         sp AS (
-           SELECT doc_id, span_id, min(p) AS s, max(p) + 8 AS e
-           FROM sid GROUP BY doc_id, span_id)
-         SELECT doc_id, count(*)::BIGINT AS n_spans,
-           sum(e - s)::BIGINT AS dup_tokens, max(e - s)::BIGINT AS max_span
-         FROM sp GROUP BY doc_id ORDER BY doc_id""",
-
-    "q353_dup_span_removal" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         n AS (SELECT doc_id, len(ws) AS n_tokens FROM tk),
-         g AS (
-           SELECT doc_id, i AS p,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         hits AS (SELECT g.gram, g.doc_id, g.p FROM g JOIN dup USING (gram)),
-         k AS (
-           SELECT gram, doc_id, p,
-             row_number() OVER (PARTITION BY gram ORDER BY doc_id, p)
-               AS rn
-           FROM hits),
-         rm AS (SELECT doc_id, p FROM k WHERE rn > 1),
-         brk AS (
-           SELECT doc_id, p,
-             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p)
-               <= 8 THEN 0 ELSE 1 END AS b
-           FROM rm),
-         sid AS (
-           SELECT doc_id, p,
-             sum(b) OVER (PARTITION BY doc_id ORDER BY p) AS s
-           FROM brk),
-         sp AS (SELECT doc_id, s, min(p) AS st, max(p) + 8 AS en
-                FROM sid GROUP BY doc_id, s),
-         per_doc AS (
-           SELECT doc_id, sum(en - st) AS removed FROM sp GROUP BY doc_id)
-         SELECT n.doc_id, n.n_tokens::BIGINT AS n_tokens,
-           removed::BIGINT AS removed_tokens,
-           (n.n_tokens - removed)::BIGINT AS kept_tokens
-         FROM n JOIN per_doc USING (doc_id)
-         WHERE removed > 0
-         ORDER BY doc_id""",
-
-    // the q338 head-view oracle VERBATIM: the CDC-synced TxLog table
-    // must reproduce the full re-read bit-exactly
-    "q352_sqlite_cdc_sync" ->
-      """SELECT * FROM (VALUES
-           ('s-core', 237, 61454, 0, 1199),
-           ('s-east', 237, 60917, 0, 1197),
-           ('s-north', 238, 73900, 20, 1200),
-           ('s-south', 238, 60502, 0, 1196),
-           ('s-west', 238, 60685, 0, 1198)
-         ) AS t(sensor, n, sum_temp_x8, n_alert, max_id)""",
-
-    // the q351 gram-algebra oracle VERBATIM: the suffix-array (prefix-
-    // doubling) path must agree with the L-gram path exactly
-    "q354_suffix_array_dedup" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS p,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         hits AS (SELECT doc_id, p FROM g JOIN dup USING (gram)),
-         brk AS (
-           SELECT doc_id, p,
-             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 8
-               THEN 0 ELSE 1 END AS b
-           FROM hits),
-         sid AS (
-           SELECT doc_id, p,
-             sum(b) OVER (PARTITION BY doc_id ORDER BY p) AS span_id
-           FROM brk),
-         sp AS (
-           SELECT doc_id, span_id, min(p) AS s, max(p) + 8 AS e
-           FROM sid GROUP BY doc_id, span_id)
-         SELECT doc_id, count(*)::BIGINT AS n_spans,
-           sum(e - s)::BIGINT AS dup_tokens, max(e - s)::BIGINT AS max_span
-         FROM sp GROUP BY doc_id ORDER BY doc_id""",
-
-    "q355_dsir_weights" ->
-      """WITH w AS (
-           SELECT doc_id, lang = 'en' AS tgt,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         f AS (
-           SELECT doc_id, tgt,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 256 AS b,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096
-               AS sb
-           FROM w),
-         m AS (
-           SELECT b, sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS tc,
-             sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS rc
-           FROM f GROUP BY b),
-         tot AS (SELECT sum(tc) AS tt, sum(rc) AS rr FROM m),
-         lam AS (
-           SELECT b, ln((tc+1)::DOUBLE/(tt+256)) -
-             ln((rc+1)::DOUBLE/(rr+256)) AS lam
-           FROM m CROSS JOIN tot),
-         l1 AS (
-           SELECT doc_id, tgt, sb, count(*) AS n1,
-             list_sum(list_sort(list(lam))) AS s1
-           FROM f JOIN lam USING (b) GROUP BY 1, 2, 3)
-         SELECT doc_id, tgt AS is_target, sum(n1)::BIGINT AS n_tokens,
-           round(list_sum(list_sort(list(s1))) / sum(n1), 4) + 0.0
-             AS dsir_weight
-         FROM l1 GROUP BY doc_id, tgt ORDER BY doc_id""",
-
-    // two GD iterations unrolled; iter 1's residuals are exactly
-    // 0.5 - y (all scores start at 0), iter 2 replays the sigmoid +
-    // two-level fold + per-step round-9
-    "q356_train_quality_lr" ->
-      """WITH tok AS (
-           SELECT doc_id, CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END
-             AS y,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         fx AS (
-           SELECT DISTINCT doc_id, y,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 64 AS b
-           FROM tok),
-         n AS (SELECT count(DISTINCT doc_id)::DOUBLE AS nd FROM fx),
-         census AS (
-           SELECT b,
-             sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)::BIGINT AS n_pos,
-             sum(CASE WHEN y = 1.0 THEN 0 ELSE 1 END)::BIGINT AS n_neg
-           FROM fx GROUP BY b),
-         e1 AS (SELECT DISTINCT doc_id, 0.5 - y AS e FROM fx),
-         g1 AS (
-           SELECT b, list_sum(list_sort(list(e1l))) AS g FROM (
-             SELECT f.b, ('0x' || substring(md5('0:' || f.doc_id::VARCHAR), 1, 12))
-                   ::BIGINT % 4096 AS sb,
-               list_sum(list_sort(list(e.e))) AS e1l
-             FROM fx f JOIN e1 e USING (doc_id) GROUP BY 1, 2)
-           GROUP BY b),
-         w1 AS (SELECT b, round(0.0 - 0.5 * g / (SELECT nd FROM n), 9)
-                  AS w FROM g1),
-         b1 AS (
-           SELECT round(0.0 - 0.5 * (SELECT
-               list_sum(list_sort(list(e1l))) FROM (
-                 SELECT ('0x' || substring(md5('0:' || doc_id::VARCHAR), 1, 12))
-                   ::BIGINT % 4096 AS sb,
-                   list_sum(list_sort(list(e))) AS e1l
-                 FROM e1 GROUP BY 1))
-             / (SELECT nd FROM n), 9) AS bv),
-         s2 AS (
-           SELECT f.doc_id, f.y,
-             (SELECT bv FROM b1) + list_sum(list_sort(list(w1.w))) AS s
-           FROM fx f JOIN w1 USING (b) GROUP BY f.doc_id, f.y),
-         e2 AS (SELECT doc_id, 1.0/(1.0 + exp(-s)) - y AS e FROM s2),
-         g2 AS (
-           SELECT b, list_sum(list_sort(list(e1l))) AS g FROM (
-             SELECT f.b, ('0x' || substring(md5('0:' || f.doc_id::VARCHAR), 1, 12))
-                   ::BIGINT % 4096 AS sb,
-               list_sum(list_sort(list(e.e))) AS e1l
-             FROM fx f JOIN e2 e USING (doc_id) GROUP BY 1, 2)
-           GROUP BY b),
-         w2 AS (
-           SELECT w1.b, round(w1.w - 0.5 * g2.g / (SELECT nd FROM n), 9)
-             AS w
-           FROM w1 JOIN g2 USING (b)),
-         b2 AS (
-           SELECT round((SELECT bv FROM b1) - 0.5 * (SELECT
-               list_sum(list_sort(list(e1l))) FROM (
-                 SELECT ('0x' || substring(md5('0:' || doc_id::VARCHAR), 1, 12))
-                   ::BIGINT % 4096 AS sb,
-                   list_sum(list_sort(list(e))) AS e1l
-                 FROM e2 GROUP BY 1))
-             / (SELECT nd FROM n), 9) AS bv)
-         SELECT c.b AS bucket, c.n_pos AS n_pos_docs,
-           c.n_neg AS n_neg_docs, round(w2.w, 6) + 0.0 AS weight
-         FROM census c JOIN w2 USING (b)
-         UNION ALL
-         SELECT -1, 0, 0, round((SELECT bv FROM b2), 6) + 0.0
-         ORDER BY bucket""",
-
-    // the rank is recomputed as a dense_rank over the literal gram
-    // sort — binary UTF-8 collation in both engines
-    "q357_suffix_rank_order" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS p,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         c AS (SELECT gram, count(*) AS n_occurrences FROM g
-               GROUP BY gram)
-         SELECT dense_rank() OVER (ORDER BY gram) AS rank, gram,
-           n_occurrences
-         FROM c ORDER BY rank""",
-
-    // q355's weight pipeline + the Gumbel top-k draw
-    "q358_dsir_resample" ->
-      """WITH w AS (
-           SELECT doc_id, lang = 'en' AS tgt,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         f AS (
-           SELECT doc_id, tgt,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 256 AS b,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096
-               AS sb
-           FROM w),
-         m AS (
-           SELECT b, sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS tc,
-             sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS rc
-           FROM f GROUP BY b),
-         tot AS (SELECT sum(tc) AS tt, sum(rc) AS rr FROM m),
-         lam AS (
-           SELECT b, ln((tc+1)::DOUBLE/(tt+256)) -
-             ln((rc+1)::DOUBLE/(rr+256)) AS lam
-           FROM m CROSS JOIN tot),
-         l1 AS (
-           SELECT doc_id, tgt, sb, count(*) AS n1,
-             list_sum(list_sort(list(lam))) AS s1
-           FROM f JOIN lam USING (b) GROUP BY 1, 2, 3),
-         dw AS (
-           SELECT doc_id, tgt, sum(n1)::BIGINT AS n_tokens,
-             round(list_sum(list_sort(list(s1))) / sum(n1), 4) + 0.0
-               AS dsir_weight
-           FROM l1 GROUP BY doc_id, tgt),
-         raw AS (
-           SELECT doc_id, n_tokens, dsir_weight,
-             (('0x' || substring(md5('0:' || doc_id::VARCHAR), 1, 12))
-               ::BIGINT + 0.5) / 281474976710656.0 AS u
-           FROM dw WHERE NOT tgt),
-         keyed AS (
-           SELECT doc_id, n_tokens,
-             dsir_weight * n_tokens - ln(-ln(u)) AS key
-           FROM raw),
-         top AS (SELECT * FROM keyed ORDER BY key DESC, doc_id LIMIT 25)
-         SELECT row_number() OVER (ORDER BY key DESC, doc_id) AS rank,
-           doc_id, n_tokens, round(key, 4) + 0.0 AS gumbel_key
-         FROM top ORDER BY rank""",
-
-    // the q351 string-key gram algebra VERBATIM: the 16-byte
-    // (h1, h2) gram-hash key must reproduce the string-key spans
-    // exactly — the hash-form ≡ string-form proof
-    "q359_gram_hash_dedup" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS p,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-         hits AS (SELECT doc_id, p FROM g JOIN dup USING (gram)),
-         brk AS (
-           SELECT doc_id, p,
-             CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 8
-               THEN 0 ELSE 1 END AS b
-           FROM hits),
-         sid AS (
-           SELECT doc_id, p,
-             sum(b) OVER (PARTITION BY doc_id ORDER BY p) AS span_id
-           FROM brk),
-         sp AS (
-           SELECT doc_id, span_id, min(p) AS s, max(p) + 8 AS e
-           FROM sid GROUP BY doc_id, span_id)
-         SELECT doc_id, count(*)::BIGINT AS n_spans,
-           sum(e - s)::BIGINT AS dup_tokens, max(e - s)::BIGINT AS max_span
-         FROM sp GROUP BY doc_id ORDER BY doc_id""",
-
-    // every lcp recomputed from the LITERAL gram sort: order the
-    // depth-8 grams (string sort = tokenwise sort, the corpus is
-    // control-char-free — gated in-engine), pair each with its
-    // successor, and take the first token mismatch position over the
-    // token arrays. Any rank-order defect at any doubling level
-    // changes adjacency or an lcp and hash-mismatches.
-    "q360_suffix_lcp" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS p, ws[i:i+7] AS ga,
-             list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         ord AS (
-           SELECT doc_id, p, ga,
-             row_number() OVER (ORDER BY gram, doc_id, p) AS sa
-           FROM g),
-         pr AS (
-           SELECT a.doc_id AS dl, a.ga AS gl, b.ga AS gr
-           FROM ord a JOIN ord b ON b.sa = a.sa + 1),
-         l AS (
-           SELECT dl,
-             coalesce(nullif(list_position(
-               list_transform(range(1, 9), i -> gl[i] = gr[i]), false),
-               0) - 1, 8)::BIGINT AS lcp
-           FROM pr)
-         SELECT dl AS doc_id, count(*)::BIGINT AS n_pairs,
-           max(lcp) AS max_lcp, sum(lcp)::BIGINT AS sum_lcp
-         FROM l GROUP BY dl ORDER BY doc_id""",
-
-    // the full curation chain replayed: q356's two unrolled GD
-    // iterations (label = n_chars >= 250) -> 6-dp published model ->
-    // trained-score sigmoid -> top-half rank threshold -> q355's DSIR
-    // weights -> Gumbel top-15 -> first-5-token fingerprint keep-first
-    "q361_curation_pipeline" ->
-      """WITH tok AS (
-           SELECT doc_id,
-             CASE WHEN n_chars >= 250 THEN 1.0 ELSE 0.0 END AS y,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         fx AS (
-           SELECT DISTINCT doc_id, y,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 64 AS b
-           FROM tok),
-         n AS (SELECT count(DISTINCT doc_id)::DOUBLE AS nd FROM fx),
-         e1 AS (SELECT DISTINCT doc_id, 0.5 - y AS e FROM fx),
-         g1 AS (
-           SELECT b, list_sum(list_sort(list(e1l))) AS g FROM (
-             SELECT f.b, ('0x' || substring(md5('0:' ||
-                 f.doc_id::VARCHAR), 1, 12))::BIGINT % 4096 AS sb,
-               list_sum(list_sort(list(e.e))) AS e1l
-             FROM fx f JOIN e1 e USING (doc_id) GROUP BY 1, 2)
-           GROUP BY b),
-         w1 AS (SELECT b, round(0.0 - 0.5 * g / (SELECT nd FROM n), 9)
-                  AS w FROM g1),
-         b1 AS (
-           SELECT round(0.0 - 0.5 * (SELECT
-               list_sum(list_sort(list(e1l))) FROM (
-                 SELECT ('0x' || substring(md5('0:' ||
-                     doc_id::VARCHAR), 1, 12))::BIGINT % 4096 AS sb,
-                   list_sum(list_sort(list(e))) AS e1l
-                 FROM e1 GROUP BY 1))
-             / (SELECT nd FROM n), 9) AS bv),
-         s2 AS (
-           SELECT f.doc_id, f.y,
-             (SELECT bv FROM b1) + list_sum(list_sort(list(w1.w))) AS s
-           FROM fx f JOIN w1 USING (b) GROUP BY f.doc_id, f.y),
-         e2 AS (SELECT doc_id, 1.0/(1.0 + exp(-s)) - y AS e FROM s2),
-         g2 AS (
-           SELECT b, list_sum(list_sort(list(e1l))) AS g FROM (
-             SELECT f.b, ('0x' || substring(md5('0:' ||
-                 f.doc_id::VARCHAR), 1, 12))::BIGINT % 4096 AS sb,
-               list_sum(list_sort(list(e.e))) AS e1l
-             FROM fx f JOIN e2 e USING (doc_id) GROUP BY 1, 2)
-           GROUP BY b),
-         w2 AS (
-           SELECT w1.b, round(w1.w - 0.5 * g2.g / (SELECT nd FROM n), 9)
-             AS w
-           FROM w1 JOIN g2 USING (b)),
-         b2 AS (
-           SELECT round((SELECT bv FROM b1) - 0.5 * (SELECT
-               list_sum(list_sort(list(e1l))) FROM (
-                 SELECT ('0x' || substring(md5('0:' ||
-                     doc_id::VARCHAR), 1, 12))::BIGINT % 4096 AS sb,
-                   list_sum(list_sort(list(e))) AS e1l
-                 FROM e2 GROUP BY 1))
-             / (SELECT nd FROM n), 9) AS bv),
-         mw AS (SELECT b, round(w, 6) + 0.0 AS w FROM w2),
-         mb AS (SELECT round(bv, 6) + 0.0 AS bv FROM b2),
-         sc AS (
-           SELECT f.doc_id,
-             round(1.0/(1.0 + exp(-((SELECT bv FROM mb) +
-               list_sum(list_sort(list(mw.w)))))), 4) + 0.0
-               AS quality_score
-           FROM fx f JOIN mw USING (b) GROUP BY f.doc_id),
-         nn AS (SELECT count(*)::BIGINT AS n FROM sc),
-         rk AS (
-           SELECT doc_id, quality_score,
-             row_number() OVER (ORDER BY quality_score DESC, doc_id)
-               AS qr
-           FROM sc),
-         surv AS (SELECT doc_id, quality_score FROM rk
-                  WHERE qr * 2 <= (SELECT n FROM nn) + 1),
-         tok2 AS (
-           SELECT doc_id, lang = 'en' AS tgt,
-             unnest(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-           FROM documents),
-         f2 AS (
-           SELECT doc_id, tgt,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 256
-               AS b,
-             ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096
-               AS sb
-           FROM tok2),
-         m2 AS (
-           SELECT b, sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS tc,
-             sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS rc
-           FROM f2 GROUP BY b),
-         tot2 AS (SELECT sum(tc) AS tt, sum(rc) AS rr FROM m2),
-         lam2 AS (
-           SELECT b, ln((tc+1)::DOUBLE/(tt+256)) -
-             ln((rc+1)::DOUBLE/(rr+256)) AS lam
-           FROM m2 CROSS JOIN tot2),
-         l12 AS (
-           SELECT doc_id, tgt, sb, count(*) AS n1,
-             list_sum(list_sort(list(lam))) AS s1
-           FROM f2 JOIN lam2 USING (b) GROUP BY 1, 2, 3),
-         dwt AS (
-           SELECT doc_id, tgt, sum(n1)::BIGINT AS n_tokens,
-             round(list_sum(list_sort(list(s1))) / sum(n1), 4) + 0.0
-               AS dsir_weight
-           FROM l12 GROUP BY doc_id, tgt),
-         keyed AS (
-           SELECT d.doc_id, d.n_tokens, s.quality_score,
-             d.dsir_weight * d.n_tokens -
-               ln(-ln((('0x' || substring(md5('0:' ||
-                 d.doc_id::VARCHAR), 1, 12))::BIGINT + 0.5)
-                 / 281474976710656.0)) AS key
-           FROM dwt d JOIN surv s USING (doc_id) WHERE NOT d.tgt),
-         top AS (SELECT * FROM keyed ORDER BY key DESC, doc_id
-                 LIMIT 15),
-         fpt AS (
-           SELECT doc_id, md5(list_aggregate(string_split(
-               lower(trim(regexp_replace(text,'\s+',' ','g'))),
-               ' ')[1:5], 'string_agg', ' ')) AS fpv
-           FROM documents),
-         drawn AS (SELECT t.*, fpt.fpv FROM top t
-                   JOIN fpt USING (doc_id)),
-         kp AS (SELECT fpv, min(doc_id) AS keep FROM drawn GROUP BY fpv)
-         SELECT row_number() OVER (ORDER BY d.key DESC, d.doc_id)
-             AS rank,
-           d.doc_id, d.n_tokens, d.quality_score,
-           round(d.key, 4) + 0.0 AS gumbel_key,
-           CASE WHEN d.doc_id = k.keep THEN 'kept' ELSE 'dup' END
-             AS decision
-         FROM drawn d JOIN kp k USING (fpv)
-         ORDER BY rank""",
-
-    // both EM iterations statically unrolled; the lattice DP is a
-    // list_reduce over positions with a growing alpha list — the same
-    // recurrence (and IEEE op order) as the engine's higher-order
-    // aggregate; backward = the forward recurrence on the REVERSED
-    // piece-prob arrays in both engines
-    "q362_unigram_lm_train" ->
-      """WITH wd AS (
-           SELECT substring(w0, 1, 8) AS w, count(*)::BIGINT AS f,
-             length(substring(w0, 1, 8))::BIGINT AS n
-           FROM (SELECT unnest(string_split(
-                   lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w0
-                 FROM documents)
-           WHERE length(w0) >= 1
-           GROUP BY 1, 3),
-         occ AS (
-           SELECT w, f, n, 1 AS k, i, substring(w, i, 1) AS piece
-           FROM wd CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, n, 2 AS k, i, substring(w, i-1, 2) AS piece
-           FROM wd CROSS JOIN unnest(range(2, n+1)) AS t(i)),
-         c0i AS (SELECT piece, sum(f)::BIGINT AS c FROM occ GROUP BY piece),
-         t0i AS (SELECT sum(c)::BIGINT AS tt FROM c0i),
-         p0m AS (SELECT piece, round(c::DOUBLE / (SELECT tt FROM t0i)::DOUBLE, 9)
-                   AS p FROM c0i),
-         ar_1 AS (
-           SELECT w, f, n,
-             list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 1)), x -> x.p) AS pa,
-             [0.0] || list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 2)), x -> x.p) AS pb
-           FROM occ JOIN p0m USING (piece) GROUP BY w, f, n),
-         dp_1 AS (
-           SELECT w, f, n, pa, pb,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * pa[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] * pb[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS al,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * (list_transform(range(1, n+1), j -> pa[n+1-j]))[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] *
-                   ([0.0] || list_transform(range(2, n+1), j -> pb[n-j+2]))[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS tl
-           FROM ar_1),
-         dpz_1 AS (SELECT *, al[(n+1)::BIGINT] AS z FROM dp_1),
-         gam_1 AS (
-           SELECT w, f, substring(w, i, 1) AS piece,
-             al[i::BIGINT] * pa[i::BIGINT] * tl[(n-i+1)::BIGINT] / z AS g
-           FROM dpz_1 CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, substring(w, i, 2) AS piece,
-             al[i::BIGINT] * pb[(i+1)::BIGINT] * tl[(n-i)::BIGINT] / z AS g
-           FROM dpz_1 CROSS JOIN unnest(range(1, n)) AS t(i)),
-         wc_1 AS (SELECT w, f, piece, list_sum(list_sort(list(g))) AS gs
-                  FROM gam_1 GROUP BY w, f, piece),
-         c_1 AS (SELECT piece, list_sum(list_sort(list(sub))) AS c FROM (
-                   SELECT piece,
-                     ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096 AS sb,
-                     list_sum(list_sort(list(f::DOUBLE * gs))) AS sub
-                   FROM wc_1 GROUP BY 1, 2) GROUP BY piece),
-         t_1 AS (SELECT list_sum(list_sort(list(c))) AS tt FROM c_1),
-         p_1m AS (SELECT piece, round(c / (SELECT tt FROM t_1), 9) AS p FROM c_1),
-         ar_2 AS (
-           SELECT w, f, n,
-             list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 1)), x -> x.p) AS pa,
-             [0.0] || list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 2)), x -> x.p) AS pb
-           FROM occ JOIN p_1m USING (piece) GROUP BY w, f, n),
-         dp_2 AS (
-           SELECT w, f, n, pa, pb,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * pa[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] * pb[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS al,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * (list_transform(range(1, n+1), j -> pa[n+1-j]))[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] *
-                   ([0.0] || list_transform(range(2, n+1), j -> pb[n-j+2]))[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS tl
-           FROM ar_2),
-         dpz_2 AS (SELECT *, al[(n+1)::BIGINT] AS z FROM dp_2),
-         gam_2 AS (
-           SELECT w, f, substring(w, i, 1) AS piece,
-             al[i::BIGINT] * pa[i::BIGINT] * tl[(n-i+1)::BIGINT] / z AS g
-           FROM dpz_2 CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, substring(w, i, 2) AS piece,
-             al[i::BIGINT] * pb[(i+1)::BIGINT] * tl[(n-i)::BIGINT] / z AS g
-           FROM dpz_2 CROSS JOIN unnest(range(1, n)) AS t(i)),
-         wc_2 AS (SELECT w, f, piece, list_sum(list_sort(list(g))) AS gs
-                  FROM gam_2 GROUP BY w, f, piece),
-         c_2 AS (SELECT piece, list_sum(list_sort(list(sub))) AS c FROM (
-                   SELECT piece,
-                     ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096 AS sb,
-                     list_sum(list_sort(list(f::DOUBLE * gs))) AS sub
-                   FROM wc_2 GROUP BY 1, 2) GROUP BY piece),
-         t_2 AS (SELECT list_sum(list_sort(list(c))) AS tt FROM c_2),
-         p_2m AS (SELECT piece, round(c / (SELECT tt FROM t_2), 9) AS p FROM c_2)
-         SELECT c_2.piece, length(c_2.piece)::BIGINT AS piece_len,
-           round(c_2.c, 6) + 0.0 AS em_count, round(p_2m.p, 7) + 0.0 AS prob
-         FROM c_2 JOIN p_2m USING (piece) ORDER BY piece""",
-
-    // the q337 export oracle VERBATIM: base image + two WAL-appended
-    // transactions must reproduce the full-table aggregate exactly
-    "q363_sqlite_wal_append" ->
-      """SELECT c_mktsegment AS seg, count(*) AS n,
-           sum(CAST(round(c_acctbal * 100) AS BIGINT))::BIGINT AS sum_cents,
-           min(c_custkey) AS min_key, max(c_custkey) AS max_key
-         FROM customer GROUP BY 1 ORDER BY seg""",
-
-    // q362's model CTEs verbatim + the Viterbi encode chain; the
-    // backtrace is a recursive CTE (plain column refs — DuckDB 1.0
-    // misaligns captured outer STRING columns in list_reduce lambdas)
-    "q364_unigram_encode" ->
-      """WITH RECURSIVE wd AS (
-           SELECT substring(w0, 1, 8) AS w, count(*)::BIGINT AS f,
-             length(substring(w0, 1, 8))::BIGINT AS n
-           FROM (SELECT unnest(string_split(
-                   lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w0
-                 FROM documents)
-           WHERE length(w0) >= 1
-           GROUP BY 1, 3),
-         occ AS (
-           SELECT w, f, n, 1 AS k, i, substring(w, i, 1) AS piece
-           FROM wd CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, n, 2 AS k, i, substring(w, i-1, 2) AS piece
-           FROM wd CROSS JOIN unnest(range(2, n+1)) AS t(i)),
-         c0i AS (SELECT piece, sum(f)::BIGINT AS c FROM occ GROUP BY piece),
-         t0i AS (SELECT sum(c)::BIGINT AS tt FROM c0i),
-         p0m AS (SELECT piece, round(c::DOUBLE / (SELECT tt FROM t0i)::DOUBLE, 9)
-                   AS p FROM c0i),
-         ar_1 AS (
-           SELECT w, f, n,
-             list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 1)), x -> x.p) AS pa,
-             [0.0] || list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 2)), x -> x.p) AS pb
-           FROM occ JOIN p0m USING (piece) GROUP BY w, f, n),
-         dp_1 AS (
-           SELECT w, f, n, pa, pb,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * pa[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] * pb[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS al,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * (list_transform(range(1, n+1), j -> pa[n+1-j]))[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] *
-                   ([0.0] || list_transform(range(2, n+1), j -> pb[n-j+2]))[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS tl
-           FROM ar_1),
-         dpz_1 AS (SELECT *, al[(n+1)::BIGINT] AS z FROM dp_1),
-         gam_1 AS (
-           SELECT w, f, substring(w, i, 1) AS piece,
-             al[i::BIGINT] * pa[i::BIGINT] * tl[(n-i+1)::BIGINT] / z AS g
-           FROM dpz_1 CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, substring(w, i, 2) AS piece,
-             al[i::BIGINT] * pb[(i+1)::BIGINT] * tl[(n-i)::BIGINT] / z AS g
-           FROM dpz_1 CROSS JOIN unnest(range(1, n)) AS t(i)),
-         wc_1 AS (SELECT w, f, piece, list_sum(list_sort(list(g))) AS gs
-                  FROM gam_1 GROUP BY w, f, piece),
-         c_1 AS (SELECT piece, list_sum(list_sort(list(sub))) AS c FROM (
-                   SELECT piece,
-                     ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096 AS sb,
-                     list_sum(list_sort(list(f::DOUBLE * gs))) AS sub
-                   FROM wc_1 GROUP BY 1, 2) GROUP BY piece),
-         t_1 AS (SELECT list_sum(list_sort(list(c))) AS tt FROM c_1),
-         p_1m AS (SELECT piece, round(c / (SELECT tt FROM t_1), 9) AS p FROM c_1),
-         ar_2 AS (
-           SELECT w, f, n,
-             list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 1)), x -> x.p) AS pa,
-             [0.0] || list_transform(list_sort(list(struct_pack(i := i, p := p))
-               FILTER (k = 2)), x -> x.p) AS pb
-           FROM occ JOIN p_1m USING (piece) GROUP BY w, f, n),
-         dp_2 AS (
-           SELECT w, f, n, pa, pb,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * pa[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] * pb[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS al,
-             list_reduce([[1.0]] || list_transform(range(1, n+1), i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc,
-                 acc[-1] * (list_transform(range(1, n+1), j -> pa[n+1-j]))[x[1]::BIGINT] +
-                 CASE WHEN x[1] >= 2 THEN acc[-2] *
-                   ([0.0] || list_transform(range(2, n+1), j -> pb[n-j+2]))[x[1]::BIGINT]
-                      ELSE 0.0 END)) AS tl
-           FROM ar_2),
-         dpz_2 AS (SELECT *, al[(n+1)::BIGINT] AS z FROM dp_2),
-         gam_2 AS (
-           SELECT w, f, substring(w, i, 1) AS piece,
-             al[i::BIGINT] * pa[i::BIGINT] * tl[(n-i+1)::BIGINT] / z AS g
-           FROM dpz_2 CROSS JOIN unnest(range(1, n+1)) AS t(i)
-           UNION ALL
-           SELECT w, f, substring(w, i, 2) AS piece,
-             al[i::BIGINT] * pb[(i+1)::BIGINT] * tl[(n-i)::BIGINT] / z AS g
-           FROM dpz_2 CROSS JOIN unnest(range(1, n)) AS t(i)),
-         wc_2 AS (SELECT w, f, piece, list_sum(list_sort(list(g))) AS gs
-                  FROM gam_2 GROUP BY w, f, piece),
-         c_2 AS (SELECT piece, list_sum(list_sort(list(sub))) AS c FROM (
-                   SELECT piece,
-                     ('0x' || substring(md5('0:' || w), 1, 12))::BIGINT % 4096 AS sb,
-                     list_sum(list_sort(list(f::DOUBLE * gs))) AS sub
-                   FROM wc_2 GROUP BY 1, 2) GROUP BY piece),
-         t_2 AS (SELECT list_sum(list_sort(list(c))) AS tt FROM c_2),
-         p_2m AS (SELECT piece, round(c / (SELECT tt FROM t_2), 9) AS p FROM c_2)
-         ,
-         enc_ar AS (
-           SELECT o.w, o.f, o.n,
-             list_transform(list_sort(list(struct_pack(i := o.i,
-               p := m.p)) FILTER (o.k = 1)), x -> x.p) AS pa,
-             [0.0] || list_transform(list_sort(list(struct_pack(
-               i := o.i, p := m.p)) FILTER (o.k = 2)), x -> x.p) AS pb
-           FROM occ o JOIN (SELECT piece, round(p, 7) + 0.0 AS p
-             FROM p_2m) m USING (piece)
-           GROUP BY o.w, o.f, o.n),
-         enc_l AS (
-           SELECT w, f, n,
-             list_transform(pa, x -> CASE WHEN x <= 0
-               THEN '-infinity'::DOUBLE ELSE ln(x) END) AS la,
-             list_transform(range(1, n+1), j -> CASE WHEN j = 1
-                 OR pb[j] <= 0
-               THEN '-infinity'::DOUBLE ELSE ln(pb[j]) END) AS lb
-           FROM enc_ar),
-         enc_v AS (
-           SELECT w, f, n, la, lb,
-             list_reduce([[0.0]] || list_transform(range(1, n+1),
-                 i -> [i::DOUBLE]),
-               (acc, x) -> list_append(acc, greatest(
-                 acc[-1] + la[x[1]::BIGINT],
-                 CASE WHEN x[1] >= 2 THEN acc[-2] + lb[x[1]::BIGINT]
-                      ELSE '-infinity'::DOUBLE END))) AS vb
-           FROM enc_l),
-         enc_u AS (
-           SELECT w, f, n,
-             list_transform(range(1, n+1), i ->
-               i >= 2 AND vb[(i-1)::BIGINT] + lb[i::BIGINT]
-                 >= vb[i::BIGINT] + la[i::BIGINT]) AS u2
-           FROM enc_v),
-         walk AS (
-           SELECT w, f, u2, n AS pos, ''::VARCHAR AS seg,
-             0::BIGINT AS np
-           FROM enc_u
-           UNION ALL
-           SELECT w, f, u2,
-             CASE WHEN u2[pos] THEN pos - 2 ELSE pos - 1 END AS pos,
-             CASE WHEN u2[pos] THEN substring(w, (pos - 1)::INT, 2)
-                  ELSE substring(w, pos::INT, 1) END ||
-               CASE WHEN seg = '' THEN '' ELSE '|' END || seg AS seg,
-             np + 1 AS np
-           FROM walk WHERE pos > 0)
-         SELECT w AS word, f, np AS n_pieces, seg
-         FROM walk WHERE pos = 0 ORDER BY word""",
-
-    // the CDC-detected batch == the second appended transaction ==
-    // the top-sixth key slice of customer
-    "q365_walwrite_cdc_roundtrip" ->
-      """WITH cut AS (
-           SELECT (max(c_custkey) * 5) // 6 AS m2 FROM customer)
-         SELECT c_mktsegment AS seg, count(*) AS n,
-           sum(CAST(round(c_acctbal * 100) AS BIGINT))::BIGINT
-             AS sum_cents,
-           min(c_custkey) AS min_key, max(c_custkey) AS max_key
-         FROM customer, cut WHERE c_custkey > m2
-         GROUP BY 1 ORDER BY seg""",
-
-    // three power-iteration rounds unrolled: per-vector dot = sorted
-    // fold over its 64 products; per-dim sums = two-level sorted fold
-    // within md5(vec_id) subbuckets; renormalize + round-9 per round
-    "q366_power_iteration" ->
-      """WITH e AS (
-           SELECT vec_id, j, embedding[(j+1)::INT]::DOUBLE AS x
-           FROM embeddings CROSS JOIN unnest(range(0, 64)) AS t(j)),
-         mu AS (
-           SELECT j, list_sum(list_sort(list(s1))) / any_value(nd) AS m FROM (
-             SELECT j,
-               ('0x' || substring(md5('0:' || vec_id::VARCHAR), 1, 12))::BIGINT
-                 % 4096 AS sb,
-               list_sum(list_sort(list(x))) AS s1,
-               (SELECT count(*) FROM embeddings)::DOUBLE AS nd
-             FROM e GROUP BY 1, 2) GROUP BY j),
-         c AS (SELECT e.vec_id, e.j, e.x - mu.m AS x FROM e JOIN mu USING (j)),
-         v0 AS (SELECT j, 0.125 AS v FROM range(0, 64) t(j)),
-         s_1 AS (
-           SELECT vec_id, list_sum(list_sort(list(c.x * v0.v))) AS s
-           FROM c JOIN v0 USING (j) GROUP BY vec_id),
-         w_1 AS (
-           SELECT j, list_sum(list_sort(list(s1))) AS w FROM (
-             SELECT c.j,
-               ('0x' || substring(md5('0:' || c.vec_id::VARCHAR), 1, 12))::BIGINT
-                 % 4096 AS sb,
-               list_sum(list_sort(list(c.x * s_1.s))) AS s1
-             FROM c JOIN s_1 USING (vec_id) GROUP BY 1, 2) GROUP BY j),
-         l_1 AS (SELECT sqrt(list_sum(list_sort(list(w * w)))) AS l FROM w_1),
-         v_1 AS (SELECT j, round(w / (SELECT l FROM l_1), 9) AS v FROM w_1),
-         s_2 AS (
-           SELECT vec_id, list_sum(list_sort(list(c.x * v_1.v))) AS s
-           FROM c JOIN v_1 USING (j) GROUP BY vec_id),
-         w_2 AS (
-           SELECT j, list_sum(list_sort(list(s1))) AS w FROM (
-             SELECT c.j,
-               ('0x' || substring(md5('0:' || c.vec_id::VARCHAR), 1, 12))::BIGINT
-                 % 4096 AS sb,
-               list_sum(list_sort(list(c.x * s_2.s))) AS s1
-             FROM c JOIN s_2 USING (vec_id) GROUP BY 1, 2) GROUP BY j),
-         l_2 AS (SELECT sqrt(list_sum(list_sort(list(w * w)))) AS l FROM w_2),
-         v_2 AS (SELECT j, round(w / (SELECT l FROM l_2), 9) AS v FROM w_2),
-         s_3 AS (
-           SELECT vec_id, list_sum(list_sort(list(c.x * v_2.v))) AS s
-           FROM c JOIN v_2 USING (j) GROUP BY vec_id),
-         w_3 AS (
-           SELECT j, list_sum(list_sort(list(s1))) AS w FROM (
-             SELECT c.j,
-               ('0x' || substring(md5('0:' || c.vec_id::VARCHAR), 1, 12))::BIGINT
-                 % 4096 AS sb,
-               list_sum(list_sort(list(c.x * s_3.s))) AS s1
-             FROM c JOIN s_3 USING (vec_id) GROUP BY 1, 2) GROUP BY j),
-         l_3 AS (SELECT sqrt(list_sum(list_sort(list(w * w)))) AS l FROM w_3),
-         v_3 AS (SELECT j, round(w / (SELECT l FROM l_3), 9) AS v FROM w_3),
-         nn AS (SELECT count(*)::DOUBLE AS n FROM embeddings)
-         SELECT j::BIGINT AS dim, round(v, 6) + 0.0 AS loading FROM v_3
-         UNION ALL
-         SELECT -1, round((SELECT l FROM l_3) / (SELECT n FROM nn), 6) + 0.0
-         ORDER BY dim""",
-
-    // the projection replayed sign-for-sign; pair sample and folds
-    // mirror the engine exactly
-    "q367_jl_distortion" ->
-      """WITH e AS (
-           SELECT vec_id, j, embedding[(j+1)::INT]::DOUBLE AS x
-           FROM embeddings CROSS JOIN unnest(range(0, 64)) AS t(j)),
-         r AS (
-           SELECT t AS rt, j,
-             (1.0 - 2.0 * (('0x' || substring(md5('1:' || (t*64+j)::VARCHAR),
-               1, 12))::BIGINT % 2)) AS sgn
-           FROM range(0, 16) a(t) CROSS JOIN range(0, 64) b(j)),
-         y AS (
-           SELECT e.vec_id, r.rt,
-             list_sum(list_sort(list(r.sgn * e.x))) / 4.0 AS y
-           FROM e JOIN r USING (j) GROUP BY e.vec_id, r.rt),
-         np AS (SELECT (count(*) // 2)::BIGINT AS h FROM embeddings),
-         po AS (
-           SELECT a.vec_id AS pa,
-             list_sum(list_sort(list((a.x - b.x) * (a.x - b.x)))) AS d2o
-           FROM e a JOIN e b ON b.vec_id = a.vec_id + (SELECT h FROM np)
-             AND b.j = a.j
-           WHERE a.vec_id < (SELECT h FROM np)
-           GROUP BY a.vec_id),
-         pp AS (
-           SELECT a.vec_id AS pa,
-             list_sum(list_sort(list((a.y - b.y) * (a.y - b.y)))) AS d2p
-           FROM y a JOIN y b ON b.vec_id = a.vec_id + (SELECT h FROM np)
-             AND b.rt = a.rt
-           WHERE a.vec_id < (SELECT h FROM np)
-           GROUP BY a.vec_id),
-         ratio AS (
-           SELECT po.pa, pp.d2p / po.d2o AS rr FROM po JOIN pp USING (pa)
-           WHERE po.d2o > 0)
-         SELECT CAST(floor(round(rr, 6) / 0.25) AS BIGINT) AS bin,
-           count(*)::BIGINT AS n_pairs,
-           round(list_sum(list_sort(list(rr))) / count(*), 4) + 0.0 AS mean_ratio
-         FROM ratio GROUP BY 1 ORDER BY bin""",
-
-    // decile counts, the sorted-fold OLS and the 100x extrapolation
-    // replayed exactly
-    "q368_heaps_law" ->
-      """WITH tk AS (
-           SELECT doc_id, string_split(
-             lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, list_aggregate(ws[i:i+7], 'string_agg', ' ') AS gram
-           FROM tk, unnest(range(1, len(ws)-6)) AS t(i)),
-         mx AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         cuts AS (
-           SELECT k, ((SELECT n FROM mx) * k) // 10 AS cut
-           FROM range(1, 11) t(k)),
-         fo AS (SELECT gram, min(doc_id) AS fd FROM g GROUP BY gram),
-         vv AS (
-           SELECT c.k, c.cut,
-             (SELECT count(*) FROM g WHERE doc_id < c.cut) AS n_grams,
-             (SELECT count(*) FROM fo WHERE fd < c.cut) AS vocab
-           FROM cuts c),
-         pts AS (SELECT k, n_grams, vocab, ln(n_grams::DOUBLE) AS x,
-                   ln(vocab::DOUBLE) AS y
-                 FROM vv
-                 WHERE n_grams > 0 AND vocab > 0),
-         mn AS (
-           SELECT list_sum(list_sort(list(x))) / count(*) AS xb,
-             list_sum(list_sort(list(y))) / count(*) AS yb
-           FROM pts),
-         fit AS (
-           SELECT
-             CASE WHEN list_sum(list_sort(list((x - xb) * (x - xb)))) > 0
-               THEN list_sum(list_sort(list((x - xb) * (y - yb)))) /
-                 list_sum(list_sort(list((x - xb) * (x - xb))))
-               ELSE 0.0 END AS beta,
-             any_value(xb) AS xb2, any_value(yb) AS yb2
-           FROM pts CROSS JOIN mn),
-         tmax AS (SELECT max(n_grams) AS t10 FROM pts)
-         SELECT 'decile_' || lpad(k::VARCHAR, 2, '0') AS stat,
-           round(vocab::DOUBLE, 1) + 0.0 AS value, n_grams::BIGINT AS n_grams
-         FROM pts
-         UNION ALL
-         SELECT 'beta', round(beta, 6) + 0.0, 0 FROM fit
-         UNION ALL
-         SELECT 'log_k', round(yb2 - beta * xb2, 6) + 0.0, 0 FROM fit
-         UNION ALL
-         SELECT 'vocab_at_100x',
-           round(exp((yb2 - beta * xb2) + beta *
-             ln(100.0 * (SELECT t10 FROM tmax)::DOUBLE)), 1) + 0.0, 0
-         FROM fit
-         ORDER BY stat""",
-
-    // q08's oracle verbatim: the transactional path must preserve plain
-    // MERGE semantics exactly.
-    "q369_txn_merge_upsert" ->
-      """SELECT * FROM (
-           SELECT o_orderkey, o_orderstatus, round(o_totalprice,2) AS total
-           FROM orders
-           WHERE o_orderkey NOT IN (
-             SELECT o_orderkey FROM orders
-             WHERE o_orderdate >= TIMESTAMP '2001-01-01')
-           UNION ALL
-           SELECT o_orderkey, 'U' AS o_orderstatus,
-                  round(o_totalprice*2,2) AS total
-           FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01')
-         ORDER BY o_orderkey""",
-
-    // both format paths must reproduce the parquet table exactly, so
-    // the oracle is the SAME parquet aggregate on both column sets
-    "q370_jsonl_csv_roundtrip" ->
-      """WITH agg AS (
-           SELECT source, count(*) AS n,
-             sum(n_chars)::BIGINT AS chars,
-             sum(('0x' || substring(md5('0:' ||
-               concat_ws('|', doc_id, lang, text)), 1, 12))::BIGINT)
-               ::BIGINT AS hash
-           FROM documents GROUP BY source)
-         SELECT source, n AS n_json, chars AS chars_json,
-           hash AS hash_json, n AS n_csv, chars AS chars_csv,
-           hash AS hash_csv
-         FROM agg ORDER BY source""",
-
-    "q371_html_extract" ->
-      """WITH expected AS (
-           SELECT doc_id,
-             'Doc ' || doc_id || chr(10) ||
-             'Heading ' || doc_id || chr(10) ||
-             text || chr(10) ||
-             'link ' || doc_id || chr(10) ||
-             'entities: & <tag> "q" ' || chr(39) || 's' || chr(39) ||
-             ' x y caf' || chr(233) || ' na' || chr(239) ||
-             've &lt; &bogus; 1 < 2' || chr(10) ||
-             'raw <b> & text' AS x
-           FROM documents)
-         SELECT doc_id, length(x) AS n_chars_text,
-           ('0x' || substring(md5('0:' || x), 1, 12))::BIGINT AS fp48,
-           len(string_split(x, ' '))::BIGINT AS n_tokens
-         FROM expected ORDER BY doc_id""",
-
-    "q372_xlsx_roundtrip" ->
-      """SELECT source, count(*)::BIGINT AS n,
-           sum(n_chars)::BIGINT AS chars,
-           sum(('0x' || substring(md5('0:' || doc_id || '|' || lang ||
-             '|' || text), 1, 12))::BIGINT)::BIGINT AS hash
-         FROM documents GROUP BY source ORDER BY source""",
-  )
+  /** The registry: every family's records, viewed through [[derive]]. */
+  val (queries, oracleSql, eagerSinks) = derive(
+    TpchQueries.all ++ StatsQueries.all ++ EventsQueries.all ++
+      DedupQueries.all ++ SuffixQueries.all ++ GraphQueries.all ++
+      SqliteQueries.all ++ StreamingQueries.all ++ TextQueries.all ++
+      MultimodalQueries.all)
 }

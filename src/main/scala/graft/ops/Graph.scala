@@ -30,7 +30,13 @@ object Graph {
     * Per-node constant form: pr = (1−d) + d·Σ pr(u)/outdeg(u) (ranks
     * sum to N, not 1 — the per-page variant of Brin/Page; dangling mass
     * is dropped, documented standard for ranking use). Returns
-    * `(node, pr)` for every node with at least one edge. */
+    * `(node, pr)` for every node with at least one edge.
+    *
+    * Plan depth is bounded for any `iters`: each round nests a join and
+    * two aggregations, so the rank vector is re-checkpointed
+    * ([[Caches.iteration]]) after every 5th round that is not the last.
+    * The returned plan therefore holds at most 5 rounds, and `iters` ≤ 5
+    * still evaluates in one job. */
   def pageRank(edges: DataFrame, src: String = "src", dst: String = "dst",
                iters: Int = 3, damping: Double = 0.75): DataFrame = {
     val nodes = Caches.small(
@@ -42,7 +48,8 @@ object Graph {
       edges.select(col(src).as("__u"), col(dst).as("__v"))
         .join(outDeg, "__u"))
     var pr = nodes.withColumn("pr", lit(1.0))
-    for (_ <- 1 to iters) {
+    var held: Option[DataFrame] = None
+    for (i <- 1 to iters) {
       // Two-level sorted fold: level 1 within 4096 source-hash buckets,
       // level 2 over the sorted bucket subtotals. A web-scale hub node's
       // in-degree is power-law-unbounded, so a single-level fold would
@@ -65,13 +72,20 @@ object Graph {
       // — so the per-round localCheckpoint was a pure blocking-job tax
       // (the r14 dsir lesson: eager checkpoints of once-consumed
       // frames cost more than the lineage they truncate; contrast the
-      // suffix rounds, consumed 2-3×, where LAZY measured slower). The
-      // full iters-round plan is a linear DAG over the two checkpointed
-      // frames (nodes, e) and evaluates in one job.
+      // suffix rounds, consumed 2-3×, where LAZY measured slower). Up
+      // to 5 rounds form a linear DAG over the two checkpointed frames
+      // (nodes, e) and evaluate in one job; beyond that the plan-depth
+      // bound checkpoints pr and releases the checkpoint it replaces.
       pr = nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
           (lit(1.0 - damping)
             + lit(damping) * coalesce(col("__s"), lit(0.0))).as("pr"))
+      if (i % 5 == 0 && i < iters) {
+        val cp = Caches.iteration(pr)
+        held.foreach(Caches.release)
+        held = Some(cp)
+        pr = cp
+      }
     }
     pr
   }

@@ -1,15 +1,22 @@
 package graft
 
-/** Driver-contract invariants: every query is oracle-gated and every
-  * oracle has a query — a typo in either map would silently downgrade a
-  * row to the weaker rows-only check (or orphan an oracle). */
+import graft.queries.QueryDef
+
+/** Driver-contract invariants. Every query carries its oracle in the
+  * same [[QueryDef]], so coverage holds by construction; what remains is
+  * that a name is registered once and every plan is scale-safe. */
 class ContractSpec extends SparkSpec {
 
-  test("queries and oracleSql cover exactly the same names") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o) === Set.empty[String], "queries without an oracle")
-    assert((o -- q) === Set.empty[String], "oracles without a query")
+  test("the registry rejects a query name defined twice and an empty " +
+    "oracle") {
+    val d = QueryDef("q01_x", (s, _) => s.emptyDataFrame, "SELECT 1")
+    intercept[IllegalArgumentException] {
+      SparkEntry.derive(Seq(d, d.copy(oracleSql = "SELECT 2")))
+    }
+    intercept[IllegalArgumentException] {
+      SparkEntry.derive(Seq(d.copy(oracleSql = " ")))
+    }
+    assert(SparkEntry.derive(Seq(d))._2 === Map("q01_x" -> "SELECT 1"))
   }
 
   test("query names follow the qNN_ prefix convention and are unique " +

@@ -35,6 +35,27 @@ class GraphSpec extends SparkSpec {
     assert(got("c") === 0.625)
   }
 
+  test("pageRank: iters beyond the checkpoint period match a " +
+    "driver-side power iteration, and the plan depth stays bounded") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val edges = Seq(("a", "c"), ("b", "c")).toDF("src", "dst")
+    val outDeg = Map("a" -> 1.0, "b" -> 1.0)
+    val d = 0.75
+    var want = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0)
+    for (_ <- 1 to 12) want = want.keys.map { v =>
+      val s = Seq("a" -> "c", "b" -> "c").collect {
+        case (u, `v`) => want(u) / outDeg(u) }.sorted.sum
+      v -> ((1 - d) + d * s)
+    }.toMap
+    val got = Graph.pageRank(edges, iters = 12, damping = d)
+      .as[(String, Double)].collect().toMap
+    assert(got.keySet === want.keySet)
+    want.foreach { case (v, p) => assert(math.abs(got(v) - p) < 1e-12, v) }
+    def joins(iters: Int) = Graph.pageRank(edges, iters = iters)
+      .queryExecution.analyzed.collect { case j: Join => j }.size
+    assert(joins(20) <= joins(5))
+  }
+
   test("pageRank: partition-count invariant (sorted-fold sums) and " +
     "more-linked nodes rank higher") {
     val edges = (1L to 60L).flatMap { i =>

@@ -186,6 +186,26 @@ class SketchSampleSpec extends SparkSpec {
     assert(rawSub.except(wSub).isEmpty && wSub.except(rawSub).isEmpty)
   }
 
+  test("q311 exact_pairs is the inner-join size: null l_partkey rows " +
+    "never equi-join, so they add no pairs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q311").toString
+    val late = java.sql.Timestamp.valueOf("2001-01-01 00:00:00")
+    val early = java.sql.Timestamp.valueOf("1999-01-01 00:00:00")
+    Seq[(Option[Long], java.sql.Timestamp)](
+      (Some(1L), late), (Some(1L), early), (Some(1L), late),
+      (Some(2L), late), (Some(3L), early),
+      (None, late), (None, late), (None, early))
+      .toDF("l_partkey", "l_shipdate")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val b = li.filter(col("l_shipdate") > lit("2000-01-01").cast("timestamp"))
+    val joined = li.select("l_partkey").join(b.select("l_partkey"),
+      "l_partkey").count()
+    assert(joined === 7L) // key 1: 3·2, key 2: 1·1, key 3: 1·0
+    val out = SparkEntry.queries("q311_join_size_cm")(spark, dir).head()
+    assert(out.getAs[Long]("exact_pairs") === joined)
+  }
+
   test("countMin: sketches MERGE by cell-wise addition (sketch of " +
     "union == summed sketches)") {
     val a = Seq.fill(50)("x").toDF("w")

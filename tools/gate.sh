@@ -4,7 +4,8 @@
 #   tools/gate.sh r06
 #
 # 1. sbt test                      — every ScalaTest spec
-# 2. Smoke (sf0.001)               — entry() + every query builds & runs
+# 2. Smoke (sf0.001)               — entry() + every query builds & runs;
+#                                    FAILS on any [smoke] FAIL line
 # 3. Verify (sf0.01) + DuckDB      — the t2 correctness gate: FAILS on
 #                                    check_oracle.py's exit status AND on
 #                                    a non-equal-count summary (the
@@ -80,6 +81,9 @@ grep -q "All tests passed" /tmp/gate_test.log || { echo "FAIL: sbt test"; exit 1
 echo "== [2/7] Smoke sf0.001"
 sbt -batch "runMain graft.Smoke" 2>/dev/null | grep '\[smoke\]' >/tmp/gate_smoke.log
 wc -l </tmp/gate_smoke.log
+if grep -qw 'FAIL' /tmp/gate_smoke.log; then
+  grep -w 'FAIL' /tmp/gate_smoke.log | head -5; echo "FAIL: smoke"; exit 1
+fi
 
 echo "== [3/7] Verify sf0.01 + DuckDB oracle"
 rm -rf /tmp/graft_verify
