@@ -83,9 +83,27 @@ object Documents {
       current_date().as("UPDATE_DATE"),
       lit(uploadId).as("UPLOAD_ID"))
 
-  /** Full pipeline: scan-shaped input → DWH_DOCUMENT rows. */
-  def pipeline(docs: DataFrame, ipphist: DataFrame, uploadId: Long): DataFrame =
-    toDwhDocument(
-      resolvePatients(extractMetadata(dropEmpty(parseFilenames(docs))), ipphist),
-      uploadId)
+  /** Full pipeline: scan-shaped input → DWH_DOCUMENT rows, numbered and
+    * materialized (the returned frame reads a checkpoint, so consumers
+    * never re-run the extraction).
+    *
+    * Materialization boundary: `text` is usually a UDF over the scanned
+    * bytes (PDF/DOCX extraction), the costly step. The parsed batch is
+    * checkpointed once ([[graft.ops.Caches.corpusScale]]: a batch grows
+    * with the landed files) and every later step reads those blocks.
+    * [[dropEmpty]] sits after the checkpoint on purpose: its filter on
+    * `text` would otherwise be pushed below the projection that computes
+    * `text`, so the extraction would run once in the Filter and again in
+    * the Project, and [[Dedup.numberRows]]' range exchange (a sampling
+    * job plus a shuffle-map job) would run that pass twice — four
+    * extractions per file instead of one. The filename filter stays in
+    * [[parseFilenames]], below the extraction: an unparseable name is
+    * dropped without being extracted. The checkpoint is released as soon
+    * as numberRows' own checkpoint holds the numbered batch. */
+  def pipeline(docs: DataFrame, ipphist: DataFrame, uploadId: Long): DataFrame = {
+    val parsed = graft.ops.Caches.corpusScale(parseFilenames(docs))
+    try toDwhDocument(
+      resolvePatients(extractMetadata(dropEmpty(parsed)), ipphist), uploadId)
+    finally graft.ops.Caches.release(parsed)
+  }
 }

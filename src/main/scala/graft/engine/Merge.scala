@@ -53,7 +53,7 @@ object Merge {
     * Returns the post-merge table read, so call sites can swap
     * `upsert(existing, incoming, keys)` + write for
     * `upsertTransactional(spark, root, incoming, key)` without further
-    * changes. Single long-castable key: that is [[TxLog]]'s file-stat
+    * changes. Single integral key: that is [[TxLog]]'s file-stat
     * pruning contract. */
   def upsertTransactional(spark: org.apache.spark.sql.SparkSession,
                           root: String, incoming: DataFrame, key: String,

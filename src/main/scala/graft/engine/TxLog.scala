@@ -1,11 +1,13 @@
 package graft.engine
 
 import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StructType}
 
 /** One data file tracked by the transaction log, with its row count and
   * min/max stats on the table's key column (the pruning index). `part`
@@ -92,8 +94,9 @@ final class TxSchemaConflictException(msg: String)
   * refusing rename on HDFS, selected per-filesystem by
   * [[logStoreProvider]] — an object-store deployment plugs a
   * conditional-PUT/lock-service impl there instead of rewriting the
-  * commit path). Key-column contract: numeric (castable to long) — the
-  * same restriction Iceberg's lower/upper bounds relax with typed
+  * commit path). Key-column contract: castable to long, with a
+  * non-null key in every data file (see [[writeData]]) — the same
+  * restriction Iceberg's lower/upper bounds relax with typed
   * serialization, kept simple here.
   *
   * Reference behavior covered: the S7/S8 append + update-in-place sinks
@@ -314,36 +317,99 @@ object TxLog {
   }
 
   /** Write `df` as immutable data files under `data/` (NOT visible until
-    * a manifest lists them) and return their entries with per-file
-    * min/max stats on `keyCol` — one stats pass over the NEW batch only,
-    * never the table. */
+    * a manifest lists them) and return their entries with per-file row
+    * counts and min/max stats on `keyCol`. Zero-row part files are not
+    * listed. For an integral key (byte, short, int or long) the stats
+    * come from the parquet footers the writer just produced — `rows`
+    * sums the row-group counts, and `minKey`/`maxKey` fold the key
+    * column's chunk statistics — so the write is this method's only job
+    * (Delta also takes per-file stats while writing, not from a second
+    * scan). Any other key, such as a numeric string id, is cast to long
+    * by a stats job over the new files only: a string column's footer
+    * bounds are lexicographic, not numeric.
+    *
+    * Key contract: every non-empty file holds a non-null key castable to
+    * long — an all-null file has no [min,max] for merge pruning. A
+    * violation throws before any file is placed: an all-null file with a
+    * message naming the contract, a string that is not a number with
+    * Spark's cast error. The staging directory is deleted on success and
+    * on any failure. */
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
                         keyCol: String): Seq[TxFile] = {
+    val key = df.select(col(keyCol)).schema.head
     val fs = hfs(spark, root)
     fs.mkdirs(new Path(s"$root/data"))
-    // no leading dot: Spark must be able to re-list the staging dir for
-    // the stats pass (hidden-path filters skip dot/underscore names)
-    val tmp = s"$root/data/tmp-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(tmp)
-    // read back only the key column, typed as just written: no footer
-    // job to learn a schema the writer already holds
-    val key = df.select(col(keyCol)).schema.head
-    val stats = spark.read.schema(StructType(Seq(key))).parquet(tmp)
-      .groupBy(input_file_name().as("__f"))
-      .agg(count(lit(1)).as("__rows"),
-        min(col(keyCol).cast("long")).as("__mn"),
-        max(col(keyCol).cast("long")).as("__mx"))
-      .collect()
-    val moved = stats.toSeq.map { r =>
-      val src = new Path(new java.net.URI(r.getString(0)))
-      val name = s"${java.util.UUID.randomUUID()}.parquet"
-      require(fs.rename(src, new Path(s"$root/data/$name")),
-        s"failed to place data file $name")
-      TxFile(s"data/$name", r.getLong(1), r.getLong(2), r.getLong(3))
-    }
-    fs.delete(new Path(tmp), true)
-    moved
+    // no leading dot: the stats job of a non-integral key re-lists the
+    // staging dir (hidden-path filters skip dot/underscore names)
+    val tmp = new Path(s"$root/data/tmp-${java.util.UUID.randomUUID()}")
+    try {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      val stats = key.dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          val conf = spark.sessionState.newHadoopConf()
+          fs.listStatus(tmp).toSeq
+            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+            .sortBy(_.getPath.getName)
+            .flatMap(st => footerStats(conf, st, key.name).map(st.getPath -> _))
+        case _ => scannedStats(spark, tmp, key)
+      }
+      stats.map { case (src, (rows, mn, mx)) =>
+        val name = s"${java.util.UUID.randomUUID()}.parquet"
+        require(fs.rename(src, new Path(s"$root/data/$name")),
+          s"failed to place data file $name")
+        TxFile(s"data/$name", rows, mn, mx)
+      }
+    } finally fs.delete(tmp, true)
   }
+
+  private def keyContract(keyName: String): IllegalArgumentException =
+    new IllegalArgumentException(s"TxLog key column '$keyName' has no " +
+      "non-null key in a non-empty data file: every data file needs a " +
+      "non-null key castable to long (its min/max pruning index)")
+
+  /** (rows, minKey, maxKey) of one written parquet file of an integral
+    * key, read from its footer; None for a zero-row file. Throws when a
+    * non-empty file has no non-null key statistics. */
+  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
+                          st: org.apache.hadoop.fs.FileStatus,
+                          keyName: String): Option[(Long, Long, Long)] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    val blocks =
+      try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      finally reader.close()
+    val rows = blocks.map(_.getRowCount).sum
+    if (rows == 0L) None
+    else {
+      val keyStats = blocks.map(_.getColumns.asScala
+        .find(_.getPath.toArray.sameElements(Array(keyName)))
+        .map(_.getStatistics).filterNot(_.isEmpty))
+      val nonNull = keyStats.flatten.filter(_.hasNonNullValue)
+      if (keyStats.exists(_.isEmpty) || nonNull.isEmpty)
+        throw keyContract(keyName)
+      def num(v: Any): Long = v.asInstanceOf[Number].longValue
+      Some((rows, nonNull.map(s => num(s.genericGetMin)).min,
+        nonNull.map(s => num(s.genericGetMax)).max))
+    }
+  }
+
+  /** Per-file (rows, minKey, maxKey) of the staged files at `tmp` for a
+    * key that is not integral, by one aggregate over the key cast to
+    * long (read back typed as written). Throws when a non-empty file has
+    * no key castable to long. */
+  private def scannedStats(spark: SparkSession, tmp: Path,
+                           key: org.apache.spark.sql.types.StructField)
+      : Seq[(Path, (Long, Long, Long))] =
+    spark.read.schema(StructType(Seq(key))).parquet(tmp.toString)
+      .groupBy(input_file_name())
+      .agg(count(lit(1)), min(col(key.name).cast("long")),
+        max(col(key.name).cast("long")))
+      .collect().toSeq.sortBy(_.getString(0)).map { r =>
+        if (r.isNullAt(2)) throw keyContract(key.name)
+        new Path(new java.net.URI(r.getString(0))) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3)))
+      }
 
   /** Atomic commit attempt: the manifest of version `next.version`,
     * listing `next`'s files, column mapping and schema. False iff
@@ -439,20 +505,44 @@ object TxLog {
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
+  /** The batch's [min,max] over the non-null values of `keyCol`, None
+    * when it has none. One job with no exchange: each partition folds
+    * its own bounds and the driver folds the per-partition results
+    * (an `agg(min, max)` pays a partial and a final stage). */
+  private def keyBounds(df: DataFrame, keyCol: String): Option[(Long, Long)] = {
+    import org.apache.spark.sql.Encoders
+    df.select(col(keyCol).cast("long")).as(Encoders.LONG)
+      .mapPartitions { it =>
+        var (mn, mx, seen) = (Long.MaxValue, Long.MinValue, false)
+        it.foreach { k =>
+          if (k != null) { mn = math.min(mn, k); mx = math.max(mx, k); seen = true }
+        }
+        if (seen) Iterator((mn, mx)) else Iterator.empty
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect()
+      .reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+  }
+
   /** Transactional MERGE (incoming wins on key match): reads and
     * rewrites ONLY the files whose [min,max] key range overlaps the
     * batch; every other file is carried into the new version untouched.
     * Retries from a fresh snapshot on a concurrent-commit conflict, so
     * the merge serializes after the winner. A batch may ADD columns
     * (see [[read]]'s schema-evolution contract): rewritten files carry
-    * the union schema, untouched old files keep reading with nulls. */
+    * the union schema, untouched old files keep reading with nulls.
+    *
+    * Jobs: one for the batch's key bounds ([[keyBounds]]), then the
+    * write's own; with an integral key the new files' stats come from
+    * their footers ([[writeData]]). `incoming` is evaluated by both, so a costly
+    * batch should arrive materialized ([[Documents.pipeline]]'s does).
+    * A batch with no non-null key is empty: nothing is committed and
+    * the current version is returned. */
   def merge(spark: SparkSession, root: String, incoming: DataFrame,
             keyCol: String, epoch: Option[Long] = None): Long = {
     val fs = hfs(spark, root)
-    val bounds = incoming.agg(min(col(keyCol).cast("long")),
-      max(col(keyCol).cast("long"))).collect()(0)
-    if (bounds.isNullAt(0)) return currentVersion(spark, root) // empty batch
-    val (incMin, incMax) = (bounds.getLong(0), bounds.getLong(1))
+    val bounds = keyBounds(incoming, keyCol)
+    if (bounds.isEmpty) return currentVersion(spark, root) // empty batch
+    val (incMin, incMax) = bounds.get
     // Incremental epoch-scan state shared across retry attempts: the
     // single-epoch-writer contract makes epochs monotone in version, so
     // each attempt only scans the manifests COMMITTED SINCE the last

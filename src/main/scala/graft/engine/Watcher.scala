@@ -102,7 +102,16 @@ object Watcher {
   /** One incremental warehouse table maintained by polling a source
     * directory. `process(files, uploadId)` turns the CURRENT full file
     * set into warehouse rows; the watcher merges them by `keys` into the
-    * parquet table at `tablePath`. */
+    * parquet table at `tablePath`.
+    *
+    * `process` contract: `files` is a lazy `binaryFile` scan (`path`,
+    * `content`, ...), and `process` runs on the driver inside
+    * [[pollOnce]], so it may run jobs of its own. The frame it returns
+    * is read more than once by the sink (the TxLog merge takes the
+    * batch's key bounds, then writes it), so a `process` whose rows are
+    * costly to compute, such as text extraction, should return them
+    * materialized: [[Documents.pipeline]] does, so each landed file is
+    * extracted once per poll. */
   /** @param partitionCol when set, the warehouse table is stored
     *   partitioned by this (process-emitted) column and batches are
     *   merged via [[Merge.upsertPartitioned]] — only batch-affected

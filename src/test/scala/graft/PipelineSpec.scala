@@ -67,6 +67,60 @@ class PipelineSpec extends SparkSpec {
       === Seq("RADIOLOGIE_SOFTWARE", "DOSSIER_PATIENT"))
   }
 
+  test("document pipeline over a binaryFile landing dir extracts each " +
+    "file once and returns the rows of the unmaterialized composition") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("landing")
+    def signer(i: Int) = if (i % 2 == 0) "dupont" else "morel"
+    // 15 parseable names: one empty text, one IPP unknown to ipphist
+    val landed = (1 to 15).map { i =>
+      val ipp = if (i == 7) "99999999" else f"${i % 4}%08d"
+      val text =
+        if (i == 4) "   " // extracts to empty text
+        else f"compte rendu du $i%02d/03/2019 signé dr ${signer(i)}"
+      (s"${ipp}_${1000 + i}.${if (i % 5 == 0) "docx" else "pdf"}", text)
+    } :+ ("notes.pdf" -> "pas un nom valide") // unparseable: dropped
+    landed.foreach { case (n, t) => Files.write(dir.resolve(n), t.getBytes(UTF_8)) }
+    val ipphist = Seq((101L, "00000000"), (102L, "00000001"),
+      (103L, "00000002"), (104L, "00000003"))
+      .toDF("PATIENT_NUM", "HOSPITAL_PATIENT_ID")
+    val calls = spark.sparkContext.longAccumulator("extract_calls")
+    val extract = udf { (b: Array[Byte]) =>
+      calls.add(1); new String(b, UTF_8).trim }
+    val files = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.{pdf,docx}").load(dir.toString)
+      .select(col("path"), extract(col("content")).as("text"))
+
+    val out = Documents.pipeline(files, ipphist, uploadId = 5L)
+    val got = out.collect().toSet
+    assert(out.count() === 13) // 16 landed: no name, empty text, no IPP
+    // one extraction per parseable file: the unmaterialized composition
+    // ran the UDF in the text Filter and the Project, twice over
+    assert(calls.value === 15L)
+
+    // the same rows as the composition over pre-extracted text
+    val texts = landed.map { case (n, t) =>
+      (s"file:${dir.resolve(n).toAbsolutePath}", t.trim) }.toDF("path", "text")
+    val composed = Documents.toDwhDocument(Documents.resolvePatients(
+      Documents.extractMetadata(Documents.dropEmpty(
+        Documents.parseFilenames(texts))), ipphist), uploadId = 5L)
+    assert(got === composed.collect().toSet)
+    val byPath = out.select("DOCUMENT_NUM", "ID_DOC_SOURCE", "PATIENT_NUM",
+      "DOCUMENT_DATE", "AUTHOR").as[(Long, String, Long, java.sql.Date, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(byPath.map(_._1) === (1L to 13L))
+    val kept = (1 to 15).filterNot(Set(4, 7))
+    // path order: ipp prefix first, then the document id
+    assert(byPath.map(_._2) === kept.sortBy(i => (i % 4, i)).map(i => s"${1000 + i}"))
+    assert(byPath.forall { case (_, id, pnum, date, author) =>
+      val i = id.toInt - 1000
+      pnum == 101L + i % 4 &&
+        date == java.sql.Date.valueOf(f"2019-03-$i%02d") &&
+        author == s"Dr ${signer(i).capitalize}"
+    }, byPath)
+  }
+
   test("real video decode: AVI encode -> RIFF walk -> per-frame imageio " +
     "decode recovers dimensions, frame count and closed-form size; " +
     "frame pixels match the equivalent stills; garbage is contained") {

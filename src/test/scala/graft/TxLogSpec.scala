@@ -31,20 +31,26 @@ class TxLogSpec extends SparkSpec {
   /** The jobs `body` launches, each as true iff it ran outside any SQL
     * execution. Every TxLog action is a Dataset action and runs inside
     * one; the job parquet schema inference launches to read footers
-    * does not. A marker job before and after `body` brackets the
-    * asynchronous (but ordered) listener bus: jobs between the two
-    * markers' starts are exactly `body`'s. */
-  private def jobsDuring(body: => Any): Seq[Boolean] = {
+    * does not. */
+  private def jobsDuring(body: => Any): Seq[Boolean] =
+    jobExecutions(body).map(_.isEmpty)
+
+  /** The SQL execution id of each job `body` launches, in launch order
+    * (None for a job outside any SQL execution). A marker job before
+    * and after `body` brackets the asynchronous (but ordered) listener
+    * bus: jobs between the two markers' starts are exactly `body`'s. */
+  private def jobExecutions(body: => Any): Seq[Option[String]] = {
     val sc = spark.sparkContext
     val markers = new AtomicInteger(0)
-    val seen = new ConcurrentLinkedQueue[Boolean]()
+    val seen = new ConcurrentLinkedQueue[Option[String]]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val props = Option(j.properties)
         if (props.exists(_.getProperty("spark.job.description") == Marker))
           markers.incrementAndGet()
         else if (markers.get == 1)
-          seen.add(props.forall(_.getProperty("spark.sql.execution.id") == null))
+          seen.add(props.flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))))
       }
     }
     def marker(n: Int): Unit = {
@@ -817,5 +823,104 @@ class TxLogSpec extends SparkSpec {
       case r => r
     })
     assert(jobsDuring(TxLog.read(spark, root)).isEmpty)
+  }
+
+  /** Each manifest entry's (rows, minKey, maxKey) at every version of
+    * `root`, against a groupBy(input_file_name) scan of its file. */
+  private def assertStatsAsScanned(root: String): Unit =
+    for (v <- 1L to TxLog.currentVersion(spark, root)) {
+      val files = TxLog.snapshot(spark, root, Some(v)).files
+      assert(files.forall(_.rows > 0), files)
+      if (files.nonEmpty) {
+        val scanned = spark.read.parquet(files.map(f => s"$root/${f.path}"): _*)
+          .groupBy(input_file_name().as("f"))
+          .agg(count(lit(1)), min(col("id").cast("long")),
+            max(col("id").cast("long")))
+          .as[(String, Long, Long, Long)].collect()
+          .map { case (f, n, mn, mx) =>
+            f.substring(f.lastIndexOf('/') + 1) -> ((n, mn, mx)) }.toMap
+        assert(files.map(f => f.path.stripPrefix("data/") ->
+          ((f.rows, f.minKey, f.maxKey))).toMap === scanned, s"version $v")
+      }
+    }
+
+  test("write stats come from the parquet footers: every entry equals a " +
+    "groupBy(input_file_name) scan across several files, null keys, an " +
+    "int key and an empty partition, and no zero-row file is listed") {
+    val root = freshRoot()
+    // four partitions, the last (ids 30-39 of 40) filtered empty; with
+    // `nulls`, every id = 3 mod 7 has a null key
+    def batch(lo: Long, tag: String, nulls: Boolean) =
+      spark.range(lo, lo + 40L, 1, 4)
+        .select(when(lit(nulls) && col("id") % 7 === 3, lit(null))
+          .otherwise(col("id").cast("int")).as("id"),
+          concat(lit(tag), col("id").cast("string")).as("v"),
+          col("id").as("src"))
+        .filter(col("src") < lo + 30L).drop("src")
+    val first = batch(0L, "a", nulls = true)
+    assert(first.schema("id").dataType === org.apache.spark.sql.types.IntegerType)
+    TxLog.append(spark, root, first, "id")
+    assert(TxLog.snapshot(spark, root).files.size === 3)
+    TxLog.append(spark, root, first.limit(0), "id") // writes one 0-row file
+    assert(TxLog.snapshot(spark, root).files.size === 3)
+    TxLog.append(spark, root, batch(100L, "b", nulls = false), "id")
+    // touches only the second append's files: a batch that replaced
+    // every other key of a file holding a null key would leave that
+    // row alone in a file, which the key contract rejects
+    TxLog.merge(spark, root, batch(110L, "m", nulls = false), "id")
+    TxLog.delete(spark, root, "id", col("id") % 5 === 0)
+    TxLog.compact(spark, root, "id", smallRows = 1000L, targetRows = 12L)
+    assert(TxLog.snapshot(spark, root).files.size > 3)
+    TxLog.overwrite(spark, root, batch(200L, "o", nulls = true), "id")
+    assertStatsAsScanned(root)
+    assert(TxLog.read(spark, root).count() === 30)
+    // a numeric string key (a document's source id) is not integral: its
+    // footer bounds would be lexicographic, so its stats are scanned
+    val ids = freshRoot()
+    TxLog.append(spark, ids, Seq("9", "10", "200", "7").toDF("id"), "id")
+    TxLog.merge(spark, ids, Seq("10", "31").toDF("id"), "id")
+    assertStatsAsScanned(ids)
+    assert(TxLog.snapshot(spark, ids).files.map(f => (f.minKey, f.maxKey))
+      .reduce((a, b) => (a._1 min b._1, a._2 max b._2)) === ((7L, 200L)))
+  }
+
+  test("job pins: append of a local frame is one job (no stats read-back), " +
+    "and merge spends one job on its key bounds before its write") {
+    val root = freshRoot()
+    assert(jobsDuring(TxLog.append(spark, root, rows(0 until 50, "a"), "id"))
+      .size === 1)
+    val jobs = jobExecutions(
+      TxLog.merge(spark, root, rows(40 until 60, "m"), "id"))
+    // executions in launch order: the bounds, then the write; the bounds
+    // execution is one job, and no stats execution follows the write
+    val executions = jobs.distinct
+    assert(executions.size === 2 && !executions.contains(None), jobs)
+    assert(jobs.count(_ == executions.head) === 1, jobs)
+    assert(TxLog.read(spark, root).count() === 60)
+  }
+
+  test("the key contract fails loudly: an all-null key and a string key " +
+    "that does not cast to long each throw, leave the version unchanged " +
+    "and leave no new entry under data/") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 10, "a"), "id")
+    def entries = Files.list(Paths.get(root, "data")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    val before = entries
+    val nullKeys = Seq((None: Option[Long], "x"), (None, "y")).toDF("id", "v")
+    val stringKeys = Seq(("k1", "x"), ("k2", "y")).toDF("id", "v")
+    def fails(write: => Any, cause: String): Unit = {
+      val e = intercept[Exception](write)
+      assert(e.getMessage.contains(cause), e.getMessage)
+      assert(TxLog.currentVersion(spark, root) === 1L)
+      assert(entries === before) // the staging dir is gone too
+    }
+    fails(TxLog.append(spark, root, nullKeys, "id"), "non-null key")
+    fails(TxLog.overwrite(spark, root, nullKeys, "id"), "non-null key")
+    // the stats job's cast fails after the files are staged
+    fails(TxLog.overwrite(spark, root, stringKeys, "id"), "CAST_INVALID_INPUT")
+    // merge reads an all-null batch as empty: nothing to commit
+    assert(TxLog.merge(spark, root, nullKeys, "id") === 1L)
+    assert(TxLog.read(spark, root).count() === 10)
   }
 }

@@ -33,6 +33,12 @@
 #                                    FAILS on a crashed bench run, a
 #                                    missing or zero timing, or an
 #                                    8c/32c ratio under 0.7
+# 8. Ingest pass counters          — one traced dwh_ingest benchmark run
+#                                    (perfbench/run.py, seed 1, 15 s);
+#                                    FAILS on a crashed run, any failed
+#                                    operation, or more than 150
+#                                    extractions per pass (one per landed
+#                                    file); prints engine.poll_jobs
 #
 # Step 0 (baseline freshness) and step 3b (Verify under adverse planner
 # settings) run before steps 1 and 4 respectively.
@@ -57,7 +63,7 @@ if bad:
 EOF
 }
 
-echo "== [0/7] baseline freshness"
+echo "== [0/8] baseline freshness"
 # The >2x guardrail is meaningless when the committed baseline predates
 # the plans it judges (the round-6 q265 lesson): fail unless
 # BENCH_BASELINE.json's last commit is at least as new as the last
@@ -73,19 +79,19 @@ if [ -z "$BASE_T" ] || [ "$BASE_T" -lt "$SRC_T" ]; then
 fi
 echo "baseline commit >= source commit: OK"
 
-echo "== [1/7] sbt test"
+echo "== [1/8] sbt test"
 sbt -batch test >/tmp/gate_test.log 2>&1
 grep -E "Tests:|All tests passed|TESTS FAILED" /tmp/gate_test.log | tail -3
 grep -q "All tests passed" /tmp/gate_test.log || { echo "FAIL: sbt test"; exit 1; }
 
-echo "== [2/7] Smoke sf0.001"
+echo "== [2/8] Smoke sf0.001"
 sbt -batch "runMain graft.Smoke" 2>/dev/null | grep '\[smoke\]' >/tmp/gate_smoke.log
 wc -l </tmp/gate_smoke.log
 if grep -qw 'FAIL' /tmp/gate_smoke.log; then
   grep -w 'FAIL' /tmp/gate_smoke.log | head -5; echo "FAIL: smoke"; exit 1
 fi
 
-echo "== [3/7] Verify sf0.01 + DuckDB oracle"
+echo "== [3/8] Verify sf0.01 + DuckDB oracle"
 rm -rf /tmp/graft_verify
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify" >/dev/null 2>&1
 if ! python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify \
@@ -97,7 +103,7 @@ tail -2 /tmp/gate_oracle.log
 tail -1 /tmp/gate_oracle.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: oracle (partial pass)"; exit 1; }
 
-echo "== [3b/7] Verify sf0.01 under ADVERSE physical-planner settings"
+echo "== [3b/8] Verify sf0.01 under ADVERSE physical-planner settings"
 # Plan-shape-independence soak (the r13 numberRows lesson: a correctness
 # bug hid behind ReuseExchange + lucky AQE coalescing): identical
 # results required under reuse off, no auto-broadcast, 7 shuffle
@@ -114,7 +120,7 @@ tail -1 /tmp/gate_adverse.log
 tail -1 /tmp/gate_adverse.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: adverse-plan oracle (partial pass)"; exit 1; }
 
-echo "== [4/7] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
+echo "== [4/8] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
 if ! SPARK_GRAFT_PLANS_JSON="PLANS_${ROUND}.json" \
     sbt -batch "runMain graft.PlanAudit" \
     >/tmp/gate_plan_out.log 2>/tmp/gate_plan_err.log; then
@@ -140,14 +146,14 @@ if n != 0 or errs:
 print(f"plan sidecar: {len(d['queries'])} queries, undocumented_total=0")
 EOF
 
-echo "== [5/7] Bench sf0.1 (full sweep, auto re-measured flags)"
+echo "== [5/8] Bench sf0.1 (full sweep, auto re-measured flags)"
 rm -f BENCH_QUERIES.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   sbt -batch "runMain graft.Bench" 2>/tmp/gate_bench_err.log | grep '"metric"' | tail -1
 check_bench_json BENCH_QUERIES.json \
   || { echo "FAIL: bench sweep (failed or >2x-flagged queries)"; exit 1; }
 
-echo "== [6/7] Top-15-by-baseline isolated re-bench (fresh JVM)"
+echo "== [6/8] Top-15-by-baseline isolated re-bench (fresh JVM)"
 TOP15=$(python3 -c "
 import json
 b = json.load(open('BENCH_BASELINE.json'))
@@ -159,7 +165,7 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
 check_bench_json BENCH_TOP15_ISOLATED.json \
   || { echo "FAIL: top-15 isolated bench"; exit 1; }
 
-echo "== [7/7] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
+echo "== [7/8] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
 # One representative per iterative family (suffix, LSH, graph, selection)
 # at 10x the bench SF, 32 vs 8 cores. MEASURED REALITY (r15, SCALE.md
 # §scaling-spot-check): at sf1 the per-stage data is still KB-MB across
@@ -210,6 +216,30 @@ for q, v in sorted(out.items()):
 if bad:
     print(f"ANTI-SCALING (32c materially slower than 8c): {sorted(bad)}")
     sys.exit(1)
+EOF
+
+echo "== [8/8] dwh_ingest traced counters (one extraction per landed file)"
+# A pass lands 10 batches of 15 files, so 150 is one extraction per file;
+# the pipeline's materialization boundary (Documents.pipeline) keeps it
+# there. The counters are medians over the run's passes.
+python3 perfbench/run.py --workload dwh_ingest --seed 1 --seconds 15 \
+  --trace 1 2>/tmp/gate_ingest_err.log | tail -1 >/tmp/gate_ingest.json
+python3 - /tmp/gate_ingest.json <<'EOF' || { echo "FAIL: dwh_ingest counters"; exit 1; }
+import json, sys
+try:
+    d = json.load(open(sys.argv[1]))
+except Exception as e:
+    print(f"dwh_ingest result unreadable: {e}"); sys.exit(1)
+m = {k: v["value"] for k, v in d["metrics"].items()}
+print(f"  failed {d['failed']}/{d['attempted']}  "
+      f"sources.extract_docs {m['sources.extract_docs']:.0f}  "
+      f"engine.poll_jobs {m['engine.poll_jobs']:.0f}")
+bad = []
+if d["failed"] > 0: bad.append(f"failed={d['failed']}")
+if m["sources.extract_docs"] > 150:
+    bad.append(f"sources.extract_docs={m['sources.extract_docs']:.0f} > 150")
+if bad:
+    print("; ".join(bad)); sys.exit(1)
 EOF
 
 echo "== gate complete for ${ROUND}"
