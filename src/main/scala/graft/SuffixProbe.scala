@@ -71,19 +71,16 @@ object SuffixProbe {
 
     for (l <- ls) {
       val (gn, gt, gb) = time {
-        val grams = DedupOps.posGrams(toks, "doc_id", "p", "w", l)
-        val dup = grams.groupBy("gram")
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2).select("gram")
-        grams.join(dup, "gram").count()
+        DedupOps.duplicatedKeyRows(
+          DedupOps.posGrams(toks, "doc_id", "p", "w", l), Seq("gram"))
+          .count()
       }
-      // the 16-byte (h1, h2) gram-hash key — q359's deployment shape:
-      // same plan as the string form, hash keys through every shuffle
+      // the 16-byte (h1, h2) gram-hash key — q359's plan: the same
+      // window count as the string form, hash keys through the shuffle
       val (hn, ht, hb) = time {
-        val keys = DedupOps.posGramHashes(toks, "doc_id", "p", "w", l)
-        val dup = keys.groupBy("h1", "h2")
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select("h1", "h2")
-        keys.join(dup, Seq("h1", "h2")).count()
+        DedupOps.duplicatedKeyRows(
+          DedupOps.posGramHashes(toks, "doc_id", "p", "w", l),
+          Seq("h1", "h2")).count()
       }
       val (rn, rt, rb) = time {
         DedupOps.prefixDoublingDupStarts(toks, "doc_id", "p", "w", l)

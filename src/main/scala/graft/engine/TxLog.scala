@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StructType}
 
 /** One data file tracked by the transaction log, with its row count and
-  * min/max stats on the table's key column (the pruning index). `part`
+  * min/max stats on the table's key column (the pruning index). A file
+  * whose keys are all null has the empty range `minKey > maxKey`
+  * (`Long.MaxValue`, `Long.MinValue`), so no merge selects it: a null
+  * key never matches. `part`
   * is the file's partition value when the table is partitioned (every
   * row in a data file shares it — the Hive-layout invariant kept in the
   * manifest instead of the directory tree); None for unpartitioned
@@ -95,7 +98,7 @@ final class TxSchemaConflictException(msg: String)
   * [[logStoreProvider]] — an object-store deployment plugs a
   * conditional-PUT/lock-service impl there instead of rewriting the
   * commit path). Key-column contract: castable to long, with a
-  * non-null key in every data file (see [[writeData]]) — the same
+  * non-null key in every append or overwrite (see [[writeNew]]) — the same
   * restriction Iceberg's lower/upper bounds relax with typed
   * serialization, kept simple here.
   *
@@ -328,10 +331,10 @@ object TxLog {
     * by a stats job over the new files only: a string column's footer
     * bounds are lexicographic, not numeric.
     *
-    * Key contract: every non-empty file holds a non-null key castable to
-    * long — an all-null file has no [min,max] for merge pruning. A
-    * violation throws before any file is placed: an all-null file with a
-    * message naming the contract, a string that is not a number with
+    * A file whose keys are all null gets the empty key range (see
+    * [[TxFile]]): a merge can leave a touched file's null-key rows alone
+    * in a part file, and a delete or compaction can too. A key that is
+    * not castable to long throws before any file is placed, with
     * Spark's cast error. The staging directory is deleted on success and
     * on any failure. */
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
@@ -362,14 +365,34 @@ object TxLog {
     } finally fs.delete(tmp, true)
   }
 
-  private def keyContract(keyName: String): IllegalArgumentException =
-    new IllegalArgumentException(s"TxLog key column '$keyName' has no " +
-      "non-null key in a non-empty data file: every data file needs a " +
-      "non-null key castable to long (its min/max pruning index)")
+  /** The key range of a file whose keys are all null: empty, so no
+    * merge's key bounds overlap it. */
+  private val NullKeys = (Long.MaxValue, Long.MinValue)
+
+  /** [[writeData]] for rows new to the table (`append`, `overwrite`).
+    * Key contract: such a write carries at least one non-null key
+    * castable to long; a batch of null keys only is rejected, and its
+    * files are removed before the error is thrown. Merge batches always
+    * carry a non-null key ([[merge]] commits nothing otherwise), and a
+    * delete or compaction rewrites rows the table already holds. */
+  private def writeNew(spark: SparkSession, root: String, df: DataFrame,
+                       keyCol: String): Seq[TxFile] = {
+    val files = writeData(spark, root, df, keyCol)
+    if (files.nonEmpty && files.forall(f => f.minKey > f.maxKey)) {
+      val fs = hfs(spark, root)
+      files.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+      throw new IllegalArgumentException(s"TxLog key column '$keyCol' " +
+        "has no non-null key in an append or overwrite: a write of new " +
+        "rows needs a non-null key castable to long (its min/max " +
+        "pruning index)")
+    }
+    files
+  }
 
   /** (rows, minKey, maxKey) of one written parquet file of an integral
-    * key, read from its footer; None for a zero-row file. Throws when a
-    * non-empty file has no non-null key statistics. */
+    * key, read from its footer; None for a zero-row file, [[NullKeys]]
+    * for a file whose keys are all null. Throws when the footer has no
+    * statistics for the key column. */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
                           st: org.apache.hadoop.fs.FileStatus,
                           keyName: String): Option[(Long, Long, Long)] = {
@@ -385,19 +408,23 @@ object TxLog {
       val keyStats = blocks.map(_.getColumns.asScala
         .find(_.getPath.toArray.sameElements(Array(keyName)))
         .map(_.getStatistics).filterNot(_.isEmpty))
+      if (keyStats.exists(_.isEmpty))
+        throw new IllegalStateException(
+          s"${st.getPath} has no statistics for key column '$keyName'")
       val nonNull = keyStats.flatten.filter(_.hasNonNullValue)
-      if (keyStats.exists(_.isEmpty) || nonNull.isEmpty)
-        throw keyContract(keyName)
       def num(v: Any): Long = v.asInstanceOf[Number].longValue
-      Some((rows, nonNull.map(s => num(s.genericGetMin)).min,
-        nonNull.map(s => num(s.genericGetMax)).max))
+      val (mn, mx) =
+        if (nonNull.isEmpty) NullKeys
+        else (nonNull.map(s => num(s.genericGetMin)).min,
+          nonNull.map(s => num(s.genericGetMax)).max)
+      Some((rows, mn, mx))
     }
   }
 
   /** Per-file (rows, minKey, maxKey) of the staged files at `tmp` for a
     * key that is not integral, by one aggregate over the key cast to
-    * long (read back typed as written). Throws when a non-empty file has
-    * no key castable to long. */
+    * long (read back typed as written); [[NullKeys]] for a file whose
+    * keys are all null. */
   private def scannedStats(spark: SparkSession, tmp: Path,
                            key: org.apache.spark.sql.types.StructField)
       : Seq[(Path, (Long, Long, Long))] =
@@ -406,9 +433,9 @@ object TxLog {
       .agg(count(lit(1)), min(col(key.name).cast("long")),
         max(col(key.name).cast("long")))
       .collect().toSeq.sortBy(_.getString(0)).map { r =>
-        if (r.isNullAt(2)) throw keyContract(key.name)
-        new Path(new java.net.URI(r.getString(0))) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))
+        val (mn, mx) =
+          if (r.isNullAt(2)) NullKeys else (r.getLong(2), r.getLong(3))
+        new Path(new java.net.URI(r.getString(0))) -> ((r.getLong(1), mn, mx))
       }
 
   /** Atomic commit attempt: the manifest of version `next.version`,
@@ -471,7 +498,7 @@ object TxLog {
     val phys = toPhysical(df, snap0)
     // fail fast: a column-type conflict must not leave files in data/
     widen(spark, root, snap0, phys.schema)
-    val newFiles = writeData(spark, root, phys, physName(keyCol, snap0))
+    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0))
     commitLoop(spark, root, { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
       snap.copy(files = snap.files ++ newFiles,
@@ -488,7 +515,7 @@ object TxLog {
     val snap0 = snapshot(spark, root)
     assertNoSchemaConflict(df.columns.toSeq, snap0)
     val phys = toPhysical(df, snap0)
-    val newFiles = writeData(spark, root, phys, physName(keyCol, snap0))
+    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0))
     commitLoop(spark, root, { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
       snap.copy(files = newFiles,

@@ -396,9 +396,20 @@ object DedupOps {
       if (salts == 1L) reps
       else reps.withColumn("__salt", pmod(xxhash64(col("__mt")), lit(salts)))
     val joinKeys = if (salts == 1L) blockCols else blockCols :+ "__salt"
-    val a = salted.select((col("__gid").as("gid_a") +:
+    // The pair join's work is quadratic in a block's reps, not linear in
+    // its bytes, so both sides read one hash exchange on the join keys
+    // with the planned shuffle partition count: an exchange the join
+    // itself plans is coalesced by AQE to a byte target, which packs a
+    // small rep frame (a few hundred KB expanding to ~1 M scored pairs)
+    // into 1–2 tasks (measured at local[4] on q46's panel: 2 pair
+    // tasks before, 4 after). A count-fixed repartition is also outside
+    // AQE's skew-join splitting, so a hot block is bounded only by the
+    // salt above: about `targetRepsPerBlock` reps per join key.
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
+    val byBlock = salted.repartition(parts, joinKeys.map(col): _*)
+    val a = byBlock.select((col("__gid").as("gid_a") +:
       col("__mt").as("text_a") +: joinKeys.map(col)): _*)
-    val b = salted.select((col("__gid").as("gid_b") +:
+    val b = byBlock.select((col("__gid").as("gid_b") +:
       col("__mt").as("text_b") +: joinKeys.map(col)): _*)
     // distinct-text rep pairs (dist >= 1 possible) + dist-0 self pairs
     // for multi-member groups; both expand through the SAME member join
@@ -799,6 +810,42 @@ object DedupOps {
       .select(col(id), col(pos),
         TextFunctions.md5Hash48(col("gram"), seed = 1).as("h1"),
         TextFunctions.md5Hash48(col("gram"), seed = 2).as("h2"))
+
+  /** The rows of `df` whose key (the `keys` tuple) occurs at least
+    * twice, all columns kept — the duplicated-gram filter of the
+    * substring-dedup queries q351/q353/q359. One window count over
+    * the key partitioning: a single exchange, and the key projection
+    * (the gram string, or its md5 hashes) runs once. The equivalent
+    * `groupBy(keys).count → filter → join back` reads the key frame
+    * twice, so each side of the join re-runs that projection.
+    *
+    * Null keys never qualify, as that equi-join drops them; a plain
+    * window would count them as one group. They are counted as 0
+    * rather than filtered out first: the optimizer pushes an
+    * `isNotNull` filter on a computed key below the projection that
+    * computes it, which evaluates the key expression a second time.
+    *
+    * Skew trade-off: every row of one key lands in one window task,
+    * which buffers the whole group; the semi-join's probe side can be
+    * split by AQE's skew-join handling, and its count is map-side
+    * combined. Measured at local[4] on 1.86 M gram-hash rows where one
+    * boilerplate 8-gram holds 25 % of them, the window ran 2.2–2.3×
+    * faster than the semi-join (5.7 vs 12.8 s at 4 shuffle partitions;
+    * 5.3 vs 12.4 s at 16, with broadcast off and a 1 MB skew-join
+    * threshold), and its slowest task took no longer than without the
+    * hot gram. Not measured where one gram's rows outgrow a task's
+    * memory, so this is not yet the 100 TB form. [[dupSpans]] (q103)
+    * therefore keeps the semi-join as the skew-safe form, and
+    * [[prefixDoublingDupStarts]] keeps it because its key frame is
+    * checkpointed, so the join re-runs no key projection. */
+  def duplicatedKeyRows(df: DataFrame, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "duplicatedKeyRows needs at least one key")
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+    df.withColumn("__kc", count(when(keyed, lit(1)))
+        .over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__kc") >= 2)
+      .drop("__kc")
+  }
 
   /** Merge duplicated-START positions (each covering [pos, pos+L))
     * into maximal per-doc spans: a new span opens when the gap to the

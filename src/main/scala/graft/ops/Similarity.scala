@@ -206,13 +206,6 @@ object Similarity {
     corpus.select(col(id), bucket.as("bucket"))
   }
 
-  /** Multi-table sign-LSH band keys: `tables` independent hash tables,
-    * each bucketing on `planesPerTable` hyperplanes (global plane index
-    * t·planesPerTable + p, same deterministic family as [[lshBuckets]]).
-    * One output row per (vector, table) — the blocking relation for
-    * bucketed near-dup search. Multiple tables are the standard sign-LSH
-    * recall lever: a true near-dup pair only needs to agree in ONE
-    * table's bucket (P[miss] = (1 − (1 − θ/π)^planes)^tables). */
   /** Deployment rule for the sign-LSH family, MEASURED in SCALE.md §6g
     * (graft.ScaleProbe): planes per table ≈ log₂(corpus /
     * targetBucketRows), so per-bucket density — and the candidate pair
@@ -231,7 +224,8 @@ object Similarity {
     math.min(20, math.max(minPlanes, needed))
   }
 
-  /** The `tables` per-table band-key expressions over `vec` — shared
+  /** The `tables` per-table band-key expressions over the
+    * `array<double>` column `vec` ([[asDoubleVectors]]) — shared
     * by [[lshBandKeys]] and the fused banded projection in
     * [[scoredBandPairs]]. */
   private def bandKeyExprs(vec: String, planesPerTable: Int, tables: Int,
@@ -245,11 +239,29 @@ object Similarity {
       concat_ws(":", lit(t.toString), bucket.cast("string"))
     }
 
+  /** Multi-table sign-LSH band keys: `tables` independent hash tables,
+    * each bucketing on `planesPerTable` hyperplanes (global plane index
+    * t·planesPerTable + p, same deterministic family as [[lshBuckets]]).
+    * One output row per (vector, table) — the blocking relation for
+    * bucketed near-dup search. Multiple tables are the standard sign-LSH
+    * recall lever: a true near-dup pair only needs to agree in ONE
+    * table's bucket (P[miss] = (1 − (1 − θ/π)^planes)^tables).
+    *
+    * The vector is cast to `array<double>` in a projection below the
+    * generator: cast inside the generator, it would run once per
+    * hyperplane dot product (`tables × planesPerTable` times per row),
+    * as a generator's children get no subexpression elimination. */
   def lshBandKeys(corpus: DataFrame, id: String, vec: String,
                   planesPerTable: Int, tables: Int, dims: Int): DataFrame =
-    corpus.select(col(id).as("__id"),
-      explode(array(bandKeyExprs(vec, planesPerTable, tables, dims): _*))
+    asDoubleVectors(corpus, id, vec).select(col("__id"),
+      explode(array(bandKeyExprs("__pv", planesPerTable, tables, dims): _*))
         .as("band_key"))
+
+  /** (__id, __pv): the id and the vector cast once to `array<double>`,
+    * the input of every band-key generator. */
+  private def asDoubleVectors(corpus: DataFrame, id: String,
+                              vec: String): DataFrame =
+    corpus.select(col(id).as("__id"), col(vec).cast("array<double>").as("__pv"))
 
   /** Parameter scaling law for sign-LSH blocking: the planes-per-table
     * that keeps the EXPECTED bucket size near `targetBucket` for an
@@ -317,11 +329,14 @@ object Similarity {
     // frame, both hashed by id) purely to reunite columns of one row.
     // The band_key exchange downstream is unchanged; it was always the
     // first (and only) exchange the arrays cross.
-    val banded0 = corpus.select(col(id).as("__id"),
-      col(vec).cast("array<double>").as("__pv"),
-      sqrt(dot(col(vec), col(vec))).as("__pn"),
-      explode(array(bandKeyExprs(vec, planes, tables, dims): _*))
-        .as("band_key"))
+    // The cast and the norm run below the generator, once per vector
+    // (see [[lshBandKeys]]); in its select list they would run once per
+    // emitted band row.
+    val banded0 = asDoubleVectors(corpus, id, vec)
+      .withColumn("__pn", sqrt(dot(col("__pv"), col("__pv"))))
+      .select(col("__id"), col("__pv"), col("__pn"),
+        explode(array(bandKeyExprs("__pv", planes, tables, dims): _*))
+          .as("band_key"))
     val banded =
       if (maxBucket <= 0) banded0
       else banded0.join(

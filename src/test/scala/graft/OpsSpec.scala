@@ -1,13 +1,23 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.functions.VectorExpressions
 import graft.ops.{DedupOps, Similarity, TextAnalysis}
 
 /** Training-data operator behavior: vector math correctness, dedup-family
   * invariants, text-analysis determinism. */
-class OpsSpec extends SparkSpec {
+class OpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("DotProductD: codegen'd native expression computes an exact " +
@@ -774,5 +784,95 @@ class OpsSpec extends SparkSpec {
     assert(top(3L) === "the") // only term, score 0, still ranked
     assert(got.groupBy("doc_id").count()
       .filter(col("count") > 2).count() === 0)
+  }
+
+  /** 48 seeded 64-dim vectors in three loose clusters, as `array<float>`;
+    * the float values are exact in double. */
+  private def knnVectors: Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(5)
+    val centers = Seq.fill(3)(Array.fill(64)(rnd.nextFloat() - 0.5f))
+    (0L until 48L).map(i => (i, centers((i % 3).toInt)
+      .map(c => c + (rnd.nextFloat() - 0.5f) * 0.6f)))
+  }
+
+  test("knnJoin casts the vector once: no band-key generator holds a " +
+    "cast of an array column") {
+    val knn = Similarity.knnJoin(knnVectors.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", k = 3, planesPerTable = 4, tables = 8,
+      dims = 64)
+    val gens = knn.queryExecution.optimizedPlan.collect {
+      case g: Generate => g.generator }
+    // the band-key generator is there: its children hold the dot products
+    assert(gens.exists(_.find(_.prettyName == "dot_product_d").isDefined),
+      gens)
+    val arrayCasts = gens.flatMap(_.collect {
+      case c: Cast if c.child.dataType.isInstanceOf[ArrayType] => c })
+    assert(arrayCasts.isEmpty, knn.queryExecution.optimizedPlan)
+  }
+
+  test("knnJoin returns the same rows on array<float> and array<double> " +
+    "input, and the rows pinned before the cast moved out of the " +
+    "band-key generator") {
+    val floats = knnVectors.toDF("vec_id", "embedding")
+    val doubles = knnVectors.map { case (i, v) => (i, v.map(_.toDouble)) }
+      .toDF("vec_id", "embedding")
+    def rowsOf(df: DataFrame) =
+      Similarity.knnJoin(df, "vec_id", "embedding", k = 3,
+          planesPerTable = 4, tables = 8, dims = 64)
+        .as[(Long, Long, Double, Int)].collect().sorted.toSeq
+    val got = rowsOf(floats)
+    assert(got === rowsOf(doubles))
+    // row count and digest measured on the previous banding, which cast
+    // the vector inside the band-key generator
+    assert((got.size, got.mkString(";").hashCode) === ((144, 2143206691)))
+  }
+
+  test("fuzzyPairs: both sides of the block-pair join read one hash " +
+    "exchange on the block columns with the planned shuffle partition " +
+    "count, and the pairs equal a brute-force reference") {
+    val rnd = new scala.util.Random(3)
+    val stems = Seq("anna", "bernd", "carla", "dieter", "emil")
+    val people = (0L until 120L).map { i =>
+      val s = stems(rnd.nextInt(stems.size))
+      val name = if (rnd.nextBoolean()) s else s + ('a' + rnd.nextInt(3)).toChar
+      (i, name, rnd.nextInt(3), if (rnd.nextBoolean()) "x" else "y")
+    }
+    val df = people.toDF("id", "name", "nat", "seg")
+    val pairs = DedupOps.fuzzyPairs(df, "id", "name",
+      blockCols = Seq("nat", "seg"), maxDist = 1)
+    // collected through `pairs` itself, so its adaptive plan is final
+    val got = pairs.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
+        if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = Seq(d(i - 1)(j) + 1, d(i)(j - 1) + 1,
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)).min
+      d(a.length)(b.length)
+    }
+    val want = (for {
+      (ia, na, ta, sa) <- people; (ib, nb, tb, sb) <- people
+      if ia < ib && ta == tb && sa == sb && lev(na, nb) <= 1
+    } yield (ia, ib, lev(na, nb).toLong)).sorted
+    assert(got === want)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the exchange each side of a join reads, through its query stage
+    def exchanges(side: SparkPlan) = collect(side) {
+      case s: ShuffleQueryStageExec => s.shuffle }
+    def onBlocks(e: ShuffleExchangeLike) =
+      e.outputPartitioning match {
+        case HashPartitioning(exprs, n) =>
+          n == parts && exprs.map(_.references.head.name) == Seq("nat", "seg")
+        case _ => false
+      }
+    val plan = pairs.queryExecution.executedPlan
+    val pairJoins = collect(plan) {
+      case j: BaseJoinExec
+          if j.children.forall(c => exchanges(c).exists(onBlocks)) => j }
+    assert(pairJoins.size === 1, plan)
+    val sides = pairJoins.head.children.map(c => exchanges(c).filter(onBlocks))
+    assert(sides.forall(_.size == 1), plan)
+    assert(sides(0).head eq sides(1).head, plan)
   }
 }

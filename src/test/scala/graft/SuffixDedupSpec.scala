@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Md5
+import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.ops.{DedupOps, TextAnalysis}
@@ -7,7 +10,7 @@ import graft.ops.{DedupOps, TextAnalysis}
 /** Prefix-doubling suffix-rank dedup (DedupOps.prefixDoublingDupStarts)
   * vs a brute-force L-gram reference, across power-of-two and general L
   * (the overlap-pair path), plus DSIR log-weight invariants. */
-class SuffixDedupSpec extends SparkSpec {
+class SuffixDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** Brute force: duplicated length-L run starts by direct gram count. */
@@ -177,5 +180,43 @@ class SuffixDedupSpec extends SparkSpec {
     assert(byId(40L) > byId(20L) && byId(40L) < byId(0L))
     // token counts ride along
     assert(got.find(_._1 == 40L).get._3 === 4L)
+  }
+
+  test("duplicatedKeyRows equals groupBy -> count filter -> join back on " +
+    "a high-collision frame with null keys") {
+    val rnd = new scala.util.Random(7)
+    def maybe[T](v: T): Option[T] = if (rnd.nextInt(6) == 0) None else Some(v)
+    val df = (0 until 400).map(i =>
+        (maybe(rnd.nextInt(15)), maybe("k" + rnd.nextInt(8)), i.toLong))
+      .toDF("k1", "k2", "payload")
+    val keys = Seq("k1", "k2")
+    val dup = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
+      .select(keys.map(col): _*)
+    val joined = df.join(dup, keys)
+      .as[(Option[Int], Option[String], Long)].collect().sortBy(_._3).toSeq
+    val got = DedupOps.duplicatedKeyRows(df, keys)
+      .select("k1", "k2", "payload")
+      .as[(Option[Int], Option[String], Long)].collect().sortBy(_._3).toSeq
+    assert(got === joined)
+    assert(got.nonEmpty && got.size < 400, got.size)
+    // null-key rows are frequent enough to form groups of 2 or more,
+    // which a bare window count would keep
+    assert(df.filter(col("k1").isNull).groupBy("k2").count()
+      .filter(col("count") >= 2).count() > 0)
+  }
+
+  test("q359 builds its gram hash keys once: md5 sits in exactly one " +
+    "operator of the executed plan, a projection") {
+    val plan = SparkEntry.queries("q359_gram_hash_dedup")(
+      spark, "/root/testdata/sf0.001").queryExecution.executedPlan
+    val md5Nodes = collect(plan) {
+      case p if p.expressions.exists(_.find {
+        case _: Md5 => true
+        case _ => false
+      }.isDefined) => p
+    }
+    assert(md5Nodes.size === 1 && md5Nodes.head.isInstanceOf[ProjectExec],
+      plan.toString)
   }
 }

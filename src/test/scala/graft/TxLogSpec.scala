@@ -866,7 +866,8 @@ class TxLogSpec extends SparkSpec {
     TxLog.append(spark, root, batch(100L, "b", nulls = false), "id")
     // touches only the second append's files: a batch that replaced
     // every other key of a file holding a null key would leave that
-    // row alone in a file, which the key contract rejects
+    // row alone in a file with the empty key range, which the scan in
+    // assertStatsAsScanned has no bounds for (the last test covers it)
     TxLog.merge(spark, root, batch(110L, "m", nulls = false), "id")
     TxLog.delete(spark, root, "id", col("id") % 5 === 0)
     TxLog.compact(spark, root, "id", smallRows = 1000L, targetRows = 12L)
@@ -922,5 +923,35 @@ class TxLogSpec extends SparkSpec {
     // merge reads an all-null batch as empty: nothing to commit
     assert(TxLog.merge(spark, root, nullKeys, "id") === 1L)
     assert(TxLog.read(spark, root).count() === 10)
+  }
+
+  test("a merge that leaves a file's null-key rows alone commits: the " +
+    "null-key file gets an empty key range, and compact and delete keep " +
+    "its rows") {
+    val root = freshRoot()
+    def ids(r: Range, tag: String) = rows(r, tag).repartition(1)
+    TxLog.append(spark, root, ids(0 until 10, "a"), "id")
+    // the 20-29 file holds a null id
+    TxLog.append(spark, root, ids(20 until 30, "b")
+      .union(Seq((None: Option[Long], "nullkey")).toDF("id", "v")), "id")
+    // replaces every non-null key of the 20-29 file
+    assert(TxLog.merge(spark, root, ids(20 until 50, "m"), "id") === 3L)
+    def contents = TxLog.read(spark, root)
+      .as[(Option[Long], String)].collect().toSeq
+    val want = (0L until 10L).map(i => (Some(i), "a")) ++
+      (20L until 50L).map(i => (Some(i), "m")) :+ ((None, "nullkey"))
+    assert(contents.sortBy(_.toString) === want.sortBy(_.toString))
+    // the null key sits in a file of its own, whose empty range no merge
+    // overlaps
+    val keyless = TxLog.snapshot(spark, root).files.filter(f => f.minKey > f.maxKey)
+    assert(keyless.map(_.rows) === Seq(1L), TxLog.snapshot(spark, root).files)
+    TxLog.merge(spark, root, ids(45 until 55, "n"), "id")
+    assert(TxLog.snapshot(spark, root).files.exists(keyless.contains))
+    TxLog.compact(spark, root, "id", smallRows = 1000L, targetRows = 1000L)
+    assert(TxLog.snapshot(spark, root).files.size === 1)
+    assert(contents.count(_._1.isEmpty) === 1 && contents.size === 46)
+    // a delete of every non-null key leaves the null-key row alone
+    TxLog.delete(spark, root, "id", col("id") >= 0)
+    assert(contents === Seq((None, "nullkey")))
   }
 }

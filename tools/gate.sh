@@ -39,6 +39,13 @@
 #                                    operation, or more than 150
 #                                    extractions per pass (one per landed
 #                                    file); prints engine.poll_jobs
+# 9. Panel execute counters        — one traced query_panels benchmark run
+#                                    (perfbench/run.py, seed 1, 15 s);
+#                                    FAILS on a crashed run or any failed
+#                                    query (a golden-hash mismatch);
+#                                    prints execute.s,
+#                                    execute.max_tasks_per_stage and each
+#                                    panel query's execute.s
 #
 # Step 0 (baseline freshness) and step 3b (Verify under adverse planner
 # settings) run before steps 1 and 4 respectively.
@@ -63,7 +70,7 @@ if bad:
 EOF
 }
 
-echo "== [0/8] baseline freshness"
+echo "== [0/9] baseline freshness"
 # The >2x guardrail is meaningless when the committed baseline predates
 # the plans it judges (the round-6 q265 lesson): fail unless
 # BENCH_BASELINE.json's last commit is at least as new as the last
@@ -79,19 +86,19 @@ if [ -z "$BASE_T" ] || [ "$BASE_T" -lt "$SRC_T" ]; then
 fi
 echo "baseline commit >= source commit: OK"
 
-echo "== [1/8] sbt test"
+echo "== [1/9] sbt test"
 sbt -batch test >/tmp/gate_test.log 2>&1
 grep -E "Tests:|All tests passed|TESTS FAILED" /tmp/gate_test.log | tail -3
 grep -q "All tests passed" /tmp/gate_test.log || { echo "FAIL: sbt test"; exit 1; }
 
-echo "== [2/8] Smoke sf0.001"
+echo "== [2/9] Smoke sf0.001"
 sbt -batch "runMain graft.Smoke" 2>/dev/null | grep '\[smoke\]' >/tmp/gate_smoke.log
 wc -l </tmp/gate_smoke.log
 if grep -qw 'FAIL' /tmp/gate_smoke.log; then
   grep -w 'FAIL' /tmp/gate_smoke.log | head -5; echo "FAIL: smoke"; exit 1
 fi
 
-echo "== [3/8] Verify sf0.01 + DuckDB oracle"
+echo "== [3/9] Verify sf0.01 + DuckDB oracle"
 rm -rf /tmp/graft_verify
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify" >/dev/null 2>&1
 if ! python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify \
@@ -103,7 +110,7 @@ tail -2 /tmp/gate_oracle.log
 tail -1 /tmp/gate_oracle.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: oracle (partial pass)"; exit 1; }
 
-echo "== [3b/8] Verify sf0.01 under ADVERSE physical-planner settings"
+echo "== [3b/9] Verify sf0.01 under ADVERSE physical-planner settings"
 # Plan-shape-independence soak (the r13 numberRows lesson: a correctness
 # bug hid behind ReuseExchange + lucky AQE coalescing): identical
 # results required under reuse off, no auto-broadcast, 7 shuffle
@@ -120,7 +127,7 @@ tail -1 /tmp/gate_adverse.log
 tail -1 /tmp/gate_adverse.log | grep -qE '^([0-9]+)/\1 OK$' \
   || { echo "FAIL: adverse-plan oracle (partial pass)"; exit 1; }
 
-echo "== [4/8] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
+echo "== [4/9] PlanAudit -> PLANS_${ROUND}.txt + PLANS_${ROUND}.json"
 if ! SPARK_GRAFT_PLANS_JSON="PLANS_${ROUND}.json" \
     sbt -batch "runMain graft.PlanAudit" \
     >/tmp/gate_plan_out.log 2>/tmp/gate_plan_err.log; then
@@ -146,14 +153,14 @@ if n != 0 or errs:
 print(f"plan sidecar: {len(d['queries'])} queries, undocumented_total=0")
 EOF
 
-echo "== [5/8] Bench sf0.1 (full sweep, auto re-measured flags)"
+echo "== [5/9] Bench sf0.1 (full sweep, auto re-measured flags)"
 rm -f BENCH_QUERIES.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   sbt -batch "runMain graft.Bench" 2>/tmp/gate_bench_err.log | grep '"metric"' | tail -1
 check_bench_json BENCH_QUERIES.json \
   || { echo "FAIL: bench sweep (failed or >2x-flagged queries)"; exit 1; }
 
-echo "== [6/8] Top-15-by-baseline isolated re-bench (fresh JVM)"
+echo "== [6/9] Top-15-by-baseline isolated re-bench (fresh JVM)"
 TOP15=$(python3 -c "
 import json
 b = json.load(open('BENCH_BASELINE.json'))
@@ -165,7 +172,7 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
 check_bench_json BENCH_TOP15_ISOLATED.json \
   || { echo "FAIL: top-15 isolated bench"; exit 1; }
 
-echo "== [7/8] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
+echo "== [7/9] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
 # One representative per iterative family (suffix, LSH, graph, selection)
 # at 10x the bench SF, 32 vs 8 cores. MEASURED REALITY (r15, SCALE.md
 # §scaling-spot-check): at sf1 the per-stage data is still KB-MB across
@@ -218,7 +225,7 @@ if bad:
     sys.exit(1)
 EOF
 
-echo "== [8/8] dwh_ingest traced counters (one extraction per landed file)"
+echo "== [8/9] dwh_ingest traced counters (one extraction per landed file)"
 # A pass lands 10 batches of 15 files, so 150 is one extraction per file;
 # the pipeline's materialization boundary (Documents.pipeline) keeps it
 # there. The counters are medians over the run's passes.
@@ -240,6 +247,29 @@ if m["sources.extract_docs"] > 150:
     bad.append(f"sources.extract_docs={m['sources.extract_docs']:.0f} > 150")
 if bad:
     print("; ".join(bad)); sys.exit(1)
+EOF
+
+echo "== [9/9] query_panels traced counters (execute-bound pair operators)"
+# q46/q359/q91 are execute-bound; their execute.s and the widest stage's
+# task count show whether the pair operators keep their planned
+# partitions. The counters are medians over the run's passes.
+python3 perfbench/run.py --workload query_panels --seed 1 --seconds 15 \
+  --trace 1 2>/tmp/gate_panels_err.log | tail -1 >/tmp/gate_panels.json
+python3 - /tmp/gate_panels.json <<'EOF' || { echo "FAIL: query_panels counters"; exit 1; }
+import json, sys
+try:
+    d = json.load(open(sys.argv[1]))
+except Exception as e:
+    print(f"query_panels result unreadable: {e}"); sys.exit(1)
+m = {k: v["value"] for k, v in d["metrics"].items()}
+print(f"  failed {d['failed']}/{d['attempted']}  "
+      f"execute.s {m['execute.s']:.2f}  "
+      f"execute.max_tasks_per_stage {m['execute.max_tasks_per_stage']:.0f}")
+for q in ("q360_suffix_lcp", "q46_fuzzy_pairs", "q359_gram_hash_dedup",
+          "q91_knn_join"):
+    print(f"  {q}.execute.s {m[q + '.execute.s']:.2f}")
+if d["failed"] > 0:
+    print(f"failed={d['failed']} (golden-hash mismatch or error)"); sys.exit(1)
 EOF
 
 echo "== gate complete for ${ROUND}"
