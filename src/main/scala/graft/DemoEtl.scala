@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Documents, Patients, Watcher}
@@ -16,13 +15,7 @@ object DemoEtl {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
 
     // --- patient load (reference entry point 1) ---------------------
     val excel = XlsxSource.read(spark,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-query physical-plan shape summary: exchange/join counts,
   * nested-loop detection, parquet pushdown + column pruning. Run with
@@ -30,12 +29,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     var bad = 0
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val dir = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
     // iteration aid; the driver always runs the full set)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as long (ns since epoch) and convert in the queries.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_ADVERSE=1: hostile physical-planner settings — results
     // must be IDENTICAL (correctness may not depend on exchange reuse,
     // auto-broadcast size estimates, AQE coalescing geometry, input
@@ -29,18 +19,14 @@ object Verify {
     // at oracle scale. An odd partition count + tiny split/advisory
     // sizes maximize boundary diversity; reuse off forces every
     // exchange to stand alone.
-    val adverse = sys.env.get("SPARK_GRAFT_ADVERSE").contains("1")
-    if (adverse) {
-      builder
-        .config("spark.sql.exchange.reuse", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.shuffle.partitions", "7")
-        .config("spark.sql.files.maxPartitionBytes", "1m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (sys.env.get("SPARK_GRAFT_ADVERSE").contains("1")) Seq(
+      "spark.sql.exchange.reuse" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b"
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
     new java.io.File(outDir).mkdirs()
     // Auto-geometry guard: q23/q91/q298 derive sign-LSH planes from the
     // embeddings count (targetBucket 125 / 32); their DuckDB oracles pin

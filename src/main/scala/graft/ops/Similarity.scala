@@ -207,7 +207,7 @@ object Similarity {
   }
 
   /** Deployment rule for the sign-LSH family, MEASURED in SCALE.md §6g
-    * (graft.ScaleProbe): planes per table ≈ log₂(corpus /
+    * (the 10× replica point): planes per table ≈ log₂(corpus /
     * targetBucketRows), so per-bucket density — and the candidate pair
     * space PER ROW — stays constant as the corpus grows. Held fixed,
     * the pair space grows quadratically (104 M vs 14.2 M candidates at

@@ -1,5 +1,10 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+
 import graft.queries.QueryDef
 
 /** Driver-contract invariants. Every query carries its oracle in the
@@ -27,6 +32,21 @@ class ContractSpec extends SparkSpec {
     assert(nums.distinct.size === nums.size, "duplicate query numbers")
   }
 
+  test("graft.Session is the only SparkSession builder in the library, " +
+    "so the mains cannot drift apart in their session conf") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val builder = "SparkSession\\s*\\.\\s*builder".r
+    val st = java.nio.file.Files.walk(root)
+    val builders = try st.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => builder.findFirstIn(java.nio.file.Files.readString(f)).nonEmpty)
+      .map(root.relativize(_).toString).toSeq.sorted
+    finally st.close()
+    assert(builders === Seq("graft/Session.scala"))
+  }
+
   /** Builds plans under ADVERSE statistics: auto-broadcast disabled, so
     * a join is broadcast only if the CODE says `broadcast(...)`. Round
     * 12 proved the favorable-stats gate is run-order-dependent: q368's
@@ -37,11 +57,30 @@ class ContractSpec extends SparkSpec {
     * DETERMINISTICALLY — a scale-killer can never hide behind lucky
     * runtime statistics. Explicit broadcast hints are unaffected by the
     * threshold, so hinted model-frame joins still plan as BNLJ/BHJ. */
-  private def withAdverseStats[A](body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body finally spark.conf.set(key, prev)
+  private def withAdverseStats[A](body: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** Runs `build` for query `q`; a build that throws becomes a finding in
+    * `bad` instead of aborting the gate, so one unreadable input cannot
+    * leave the queries after it unchecked. */
+  private def gated[A](q: String, bad: collection.mutable.Buffer[String])(
+      build: => A): Option[A] =
+    try Some(build)
+    catch { case NonFatal(e) =>
+      bad += s"$q: plan build threw ${e.getClass.getSimpleName}: ${e.getMessage}"
+      None
+    }
+
+  /** `q`'s final physical plan plus the checkpoint sub-plans its
+    * construction materialized (empty when the build threw). */
+  private def allPlans(q: String, fn: (SparkSession, String) => DataFrame,
+      dir: String, bad: collection.mutable.Buffer[String]): Seq[SparkPlan] = {
+    graft.ops.Caches.startCapture()
+    try gated(q, bad) {
+      val finalPlan = fn(spark, dir).queryExecution.executedPlan
+      graft.ops.Caches.stopCapturePlans() :+ finalPlan
+    }.getOrElse(Nil)
+    finally graft.ops.Caches.stopCapture()
   }
 
   test("no nested-loop/cartesian operator in ANY stage of the " +
@@ -151,10 +190,7 @@ class ContractSpec extends SparkSpec {
     val dirsBefore = graftTmpDirs
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((q, fn) <- planGateQueries) {
-      graft.ops.Caches.startCapture()
-      val finalPlan = fn(spark, dir).queryExecution.executedPlan
-      val subs = graft.ops.Caches.stopCapturePlans()
-      for (p <- subs :+ finalPlan;
+      for (p <- allPlans(q, fn, dir, bad);
            w <- graft.plans.PlanGuard.globalWindows(p)) {
         if (graft.plans.PlanGuard.bounded(w.child)) ()
         else if (globalWindowRawSlivers.contains(q)) ()
@@ -188,10 +224,7 @@ class ContractSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((q, fn) <- planGateQueries) {
-      graft.ops.Caches.startCapture()
-      val finalPlan = fn(spark, dir).queryExecution.executedPlan
-      val subs = graft.ops.Caches.stopCapturePlans()
-      for (p <- subs :+ finalPlan) {
+      for (p <- allPlans(q, fn, dir, bad)) {
         for (k <- graft.plans.PlanGuard.killers(p)
              if !k.startsWith("BroadcastNestedLoopJoin"))
           bad += s"$q: $k"
@@ -221,11 +254,13 @@ class ContractSpec extends SparkSpec {
       .filterNot(SparkEntry.eagerSinks)
       .filter(n => n.take(4).drop(1).toIntOption.exists(_ >= 171))
     assert(family.size >= 35, family.mkString(","))
-    for (q <- family) {
-      val plan = SparkEntry.queries(q)(spark, dir)
-        .queryExecution.executedPlan.toString
-      val cp = plan.linesIterator.count(_.contains("CartesianProduct"))
-      assert(cp === 0, s"$q plan has a CartesianProduct")
-    }
+    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (q <- family;
+         plan <- gated(q, bad) {
+           SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+         }
+         if plan.linesIterator.exists(_.contains("CartesianProduct")))
+      bad += s"$q plan has a CartesianProduct"
+    assert(bad.isEmpty, "\n" + bad.mkString("\n"))
   } }
 }

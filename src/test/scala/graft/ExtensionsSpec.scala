@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.functions.GraftExtensions
 
 /** SQL registration of the native expressions via SparkSessionExtensions
   * (post-hoc `register` here: suites share one JVM-wide session, and
   * extensions only bind at construction). */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends SparkSpec {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+  GraftExtensions.register(spark)
 
   test("dot_product_d is callable from SQL") {
     val got = spark.sql(

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.engine.Partitioning
 
 /** Physical-layout behavior: bucketed joins plan no exchange; salted
   * joins return exactly the plain join's rows on skewed data. */
-class PartitioningSpec extends AnyFunSuite {
+class PartitioningSpec extends SparkSpec {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    .getOrCreate()
   import spark.implicits._
 
   /** The shared-session catalog is in-memory but table LOCATIONS persist
@@ -33,16 +21,12 @@ class PartitioningSpec extends AnyFunSuite {
     }
   }
 
+  // auto-broadcast off in the two join-shape tests: both joins must plan
+  // as sort-merge joins
   test("bucketed co-located join plans ZERO exchanges") {
-    val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-    val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    // the session is SHARED across suites — restore the threshold or
-    // every later suite sees auto-broadcast disabled (intended tiny
-    // cross joins then plan as CartesianProduct and trip the PlanGuard
-    // gate; cost a real debugging round)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
+      val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
       resetTable("t_bucketed_a"); resetTable("t_bucketed_b")
       Partitioning.writeBucketed(a, "t_bucketed_a", "k", 4)
       Partitioning.writeBucketed(b, "t_bucketed_b", "k", 4)
@@ -52,16 +36,17 @@ class PartitioningSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucketed join should be exchange-free, got:\n$plan")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
   }
 
   test("unbucketed control: the same join DOES shuffle") {
-    val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-    val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    val joined = a.join(b, "k")
-    joined.count()
-    assert(joined.queryExecution.executedPlan.toString.contains("Exchange"))
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
+      val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
+      val joined = a.join(b, "k")
+      joined.count()
+      assert(joined.queryExecution.executedPlan.toString.contains("Exchange"))
+    }
   }
 
   test("salted join equals the plain join on skewed data") {

@@ -3,17 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), small local parallelism. */
+/** Shared session: every suite in the forked test JVM gets the same
+  * `Session.local(4)`, so a suite must not leave a conf changed. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  lazy val spark: SparkSession = Session.local(4)
+
+  /** Runs `body` with the runtime SQL conf `key` set to `value`, then
+    * puts the previous setting back for the suites that follow. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

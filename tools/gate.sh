@@ -5,7 +5,8 @@
 #
 # 1. sbt test                      — every ScalaTest spec
 # 2. Smoke (sf0.001)               — entry() + every query builds & runs;
-#                                    FAILS on any [smoke] FAIL line
+#                                    FAILS on any [smoke] FAIL line and
+#                                    on a missing "[smoke] entry rows=N OK"
 # 3. Verify (sf0.01) + DuckDB      — the t2 correctness gate: FAILS on
 #                                    check_oracle.py's exit status AND on
 #                                    a non-equal-count summary (the
@@ -48,7 +49,9 @@
 #                                    panel query's execute.s
 #
 # Step 0 (baseline freshness) and step 3b (Verify under adverse planner
-# settings) run before steps 1 and 4 respectively.
+# settings) run before steps 1 and 4 respectively. Every `runMain` must
+# exit 0: a main that crashes fails its own step, with the tail of its
+# stderr, not a later parse or oracle check.
 set -u
 cd "$(dirname "$0")/.."
 ROUND=${1:?usage: tools/gate.sh rNN}
@@ -68,6 +71,17 @@ if d.get("flagged"): bad.append(f"flagged={d['flagged']}")
 if bad:
     print("; ".join(bad)); sys.exit(1)
 EOF
+}
+
+# Shared runner: one `sbt runMain <main> [args]` with all output in the
+# log file $1 (sbt relays the main's stderr there as [error] lines). A
+# non-zero exit fails the gate and prints the tail of that stderr.
+run_main() {
+  local log=$1; shift
+  if ! sbt -batch "runMain $*" >"$log" 2>&1; then
+    grep '\[error\]' "$log" | tail -20
+    echo "FAIL: runMain $1 exited non-zero (log: $log)"; exit 1
+  fi
 }
 
 echo "== [0/9] baseline freshness"
@@ -92,15 +106,18 @@ grep -E "Tests:|All tests passed|TESTS FAILED" /tmp/gate_test.log | tail -3
 grep -q "All tests passed" /tmp/gate_test.log || { echo "FAIL: sbt test"; exit 1; }
 
 echo "== [2/9] Smoke sf0.001"
-sbt -batch "runMain graft.Smoke" 2>/dev/null | grep '\[smoke\]' >/tmp/gate_smoke.log
+run_main /tmp/gate_smoke_run.log graft.Smoke
+grep '\[smoke\]' /tmp/gate_smoke_run.log >/tmp/gate_smoke.log
 wc -l </tmp/gate_smoke.log
+grep -q '\[smoke\] entry rows=[1-9][0-9]* OK' /tmp/gate_smoke.log \
+  || { echo "FAIL: smoke (no '[smoke] entry rows=N OK' line)"; exit 1; }
 if grep -qw 'FAIL' /tmp/gate_smoke.log; then
   grep -w 'FAIL' /tmp/gate_smoke.log | head -5; echo "FAIL: smoke"; exit 1
 fi
 
 echo "== [3/9] Verify sf0.01 + DuckDB oracle"
 rm -rf /tmp/graft_verify
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify" >/dev/null 2>&1
+run_main /tmp/gate_verify.log graft.Verify /root/testdata/sf0.01 /tmp/graft_verify
 if ! python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify \
     >/tmp/gate_oracle.log 2>&1; then
   tail -8 /tmp/gate_oracle.log; echo "FAIL: oracle"; exit 1
@@ -116,9 +133,8 @@ echo "== [3b/9] Verify sf0.01 under ADVERSE physical-planner settings"
 # results required under reuse off, no auto-broadcast, 7 shuffle
 # partitions, 1m input splits, 64k advisory AQE target.
 rm -rf /tmp/graft_adverse
-SPARK_GRAFT_ADVERSE=1 \
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_adverse" \
-  >/dev/null 2>&1
+SPARK_GRAFT_ADVERSE=1 run_main /tmp/gate_verify_adverse.log \
+  graft.Verify /root/testdata/sf0.01 /tmp/graft_adverse
 if ! python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_adverse \
     >/tmp/gate_adverse.log 2>&1; then
   tail -8 /tmp/gate_adverse.log; echo "FAIL: adverse-plan oracle"; exit 1
@@ -133,6 +149,7 @@ if ! SPARK_GRAFT_PLANS_JSON="PLANS_${ROUND}.json" \
     >/tmp/gate_plan_out.log 2>/tmp/gate_plan_err.log; then
   grep -h '\[plan\].*\(GATE FAIL\|ERROR\)' /tmp/gate_plan_out.log \
     /tmp/gate_plan_err.log | head -5
+  grep -h '\[error\]' /tmp/gate_plan_out.log /tmp/gate_plan_err.log | tail -20
   echo "FAIL: plan gate (CartesianProduct / undocumented BNLJ / build error)"
   exit 1
 fi
@@ -156,7 +173,8 @@ EOF
 echo "== [5/9] Bench sf0.1 (full sweep, auto re-measured flags)"
 rm -f BENCH_QUERIES.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  sbt -batch "runMain graft.Bench" 2>/tmp/gate_bench_err.log | grep '"metric"' | tail -1
+  run_main /tmp/gate_bench.log graft.Bench
+grep '"metric"' /tmp/gate_bench.log | tail -1
 check_bench_json BENCH_QUERIES.json \
   || { echo "FAIL: bench sweep (failed or >2x-flagged queries)"; exit 1; }
 
@@ -168,7 +186,8 @@ print(','.join(sorted(b, key=b.get, reverse=True)[:15]))")
 rm -f BENCH_TOP15_ISOLATED.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_QUERIES="$TOP15" SPARK_GRAFT_BENCH_OUT=BENCH_TOP15_ISOLATED.json \
-  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' | tail -1
+  run_main /tmp/gate_top15.log graft.Bench
+grep '"metric"' /tmp/gate_top15.log | tail -1
 check_bench_json BENCH_TOP15_ISOLATED.json \
   || { echo "FAIL: top-15 isolated bench"; exit 1; }
 
@@ -191,16 +210,14 @@ echo "== [7/9] sf1 scaling spot-check (8 vs 32 cores, family representatives)"
 SF1_DIR=${SPARK_GRAFT_SF1_DIR:-/tmp/graft_sf1}
 if [ ! -d "$SF1_DIR" ]; then
   echo "generating $SF1_DIR (ScaleUp 10x of sf0.1)"
-  sbt -batch "runMain graft.ScaleUp /root/testdata/sf0.1 $SF1_DIR 10" \
-    >/dev/null 2>&1 || { echo "FAIL: ScaleUp"; exit 1; }
+  run_main /tmp/gate_scaleup.log graft.ScaleUp /root/testdata/sf0.1 "$SF1_DIR" 10
 fi
 REPS=q354_suffix_array_dedup,q19_dedup_ngram_jaccard,q96_cc_star,q211_theil_sen
 for c in 32 8; do
   rm -f "/tmp/gate_scaling_c${c}.json"
   SPARK_GRAFT_SF_DIR=$SF1_DIR SPARK_GRAFT_CPUS=$c SPARK_GRAFT_QUERIES=$REPS \
     SPARK_GRAFT_BENCH_OUT="/tmp/gate_scaling_c${c}.json" \
-    sbt -batch "runMain graft.Bench" >/dev/null 2>&1 \
-    || { echo "FAIL: scaling bench (c${c})"; exit 1; }
+    run_main "/tmp/gate_scaling_c${c}.log" graft.Bench
 done
 python3 - "$ROUND" "$REPS" <<'EOF' || { echo "FAIL: scaling spot-check"; exit 1; }
 import json, sys
