@@ -988,133 +988,60 @@ object DedupOps {
     cur
   }
 
-  /** The FULL prefix-doubling SPARSE TABLE up to `depth`: k → the
-    * depth-k order-consistent rank table (the [[suffixRanks]]
-    * contract — one row per (id, pos) with ≥ k tokens remaining,
-    * `__r` = dense 1..K tokenwise-lexicographic rank of the k-token
-    * run), for every k in {1, 2, 4, ..., depth}. The depth-1 table is
-    * the dense lexicographic rank of the single token.
+  /** LONGEST-DUPLICATE-EXTENSION over the truncated suffix array (Lee
+    * et al. 2021 report maximal duplicated span lengths this way): for
+    * every pair of positions ADJACENT in depth-`depth` suffix order,
+    * the length of their longest common token prefix, capped at
+    * `depth`. `docs` has one row per document with its tokens in the
+    * array column `words`. Returns one row per adjacent pair:
+    * (sa, idL, posL, idR, posR, lcp) where `sa` is the left element's
+    * 1-based suffix-array index, posL/posR are 0-based token positions
+    * and lcp ∈ [0, depth]. A position with fewer than `depth` tokens
+    * left in its doc has no suffix, so runs never cross documents.
     *
-    * This is what an LCP CONSUMER needs (Lee et al. 2021's
-    * longest-duplicate-extension): two suffixes' longest common
-    * prefix is recovered by greedy doubling-rank comparisons —
-    * accept step k at offset l iff rank_k(p+l) = rank_k(q+l), for k
-    * = depth/2, depth/4, ..., 1 — which probes EVERY level, so unlike
-    * [[suffixRanks]] the intermediate rounds are retained, each
-    * persisted via [[Caches.iteration]] (MEMORY_AND_DISK; at
-    * warehouse scale these are written tables — the classic sparse
-    * table is log·n extra storage by design). No early unpersist is
-    * possible (the consumer probes all levels in one plan); the
-    * frames are freed on GC / the bench inter-query sweep. */
-  def suffixRankTables(toks: DataFrame, id: String, pos: String,
-                       tok: String, depth: Int): Map[Int, DataFrame] = {
-    require(depth >= 2 && Integer.highestOneBit(depth) == depth,
-      s"suffixRankTables needs a power-of-two depth >= 2, got $depth")
-    val byDoc = Window.partitionBy(col(id)).orderBy(col(pos))
-    val base = toks.select(col(id), col(pos), col(tok).as("__a"))
-    val seed1 = graft.engine.Dedup.numberRows(
-      base.select(col("__a")).distinct(), col("__a"), "__nr")
-    // same contract gate as [[suffixRanks]], scanned on the seed rank
-    // table (r14): numberRows already materialized the vocab frame
-    // internally, so the gate reads that checkpoint instead of paying
-    // its own corpus-grain distinct; every position's token appears in
-    // the depth-1 table, so coverage is all rank-participating tokens
-    require(seed1.filter(col("__a").rlike("[\\x00-\\x1f]")).isEmpty,
-      "suffixRankTables: a corpus token carries a control character " +
-        "below 0x20 — tokenwise rank order would diverge from the " +
-        "space-joined gram sort (see scaladoc)")
-    var cur = Caches.iteration(base.join(seed1, Seq("__a"))
-      .select(col(id), col(pos), col("__nr").as("__r")))
-    var tables = Map(1 -> cur)
-    var k = 1
-    while (k < depth) {
-      // the pair frame is consumed twice (the census feeding
-      // numberRows + the rank join): persist for the round, release
-      // once the next level's table is materialized. A lazy pair
-      // frame measured SLOWER (r14 A/B: q360 8.1 s → 9.0 s — the two
-      // re-derivations each re-run the level's window pass)
-      val paired = Caches.iteration(cur
-        .withColumn("__b", lead(col("__r"), k).over(byDoc))
-        .filter(col("__b").isNotNull)
-        .select(col(id), col(pos), col("__r").as("__a"), col("__b")))
-      val ranked = graft.engine.Dedup.numberRows(
-        paired.select(col("__a"), col("__b")).distinct(),
-        struct(col("__a"), col("__b")), "__nr")
-      cur = Caches.iteration(paired.join(ranked, Seq("__a", "__b"))
-        .select(col(id), col(pos), col("__nr").as("__r")))
-      Caches.release(paired)
-      k *= 2
-      tables += k -> cur
-    }
-    tables
-  }
-
-  /** LONGEST-DUPLICATE-EXTENSION over the truncated suffix array (the
-    * consumer that actually NEEDS the rank ORDER the suffix-rank
-    * machinery guarantees — Lee et al. 2021 report maximal duplicated
-    * span lengths exactly this way): for every pair of positions
-    * ADJACENT in depth-`depth` suffix order, the length of their
-    * longest common token prefix (capped at `depth`), computed from
-    * the [[suffixRankTables]] sparse table WITHOUT re-reading any
-    * text. Returns one row per adjacent pair:
-    * (sa, idL, posL, idR, posR, lcp) where `sa` is the left
-    * element's 1-based suffix-array index under
-    * (rank, id, pos) order and lcp ∈ [0, depth].
+    * Each position's next `depth` tokens are a `slice` of its doc's
+    * array (no exchange), one [[graft.engine.Dedup.numberRows]] sorts
+    * the grams, one equi-join on sa + 1 pairs neighbours, and lcp is
+    * the first index where the two token arrays differ. The sort key
+    * is (space-joined gram, id, pos), the oracle's own order, so the
+    * suffix order is the gram-string order for ANY token content: no
+    * control-character gate is needed (unlike [[suffixRanks]], whose
+    * tokenwise rank order matches the string sort only for tokens
+    * without sub-0x20 characters). Because (id, pos) completes the
+    * key, one hot gram repeated across the corpus is split across
+    * range partitions instead of landing in one.
     *
-    * LCP recovery is the classic sparse-table walk: if the depth
-    * ranks are equal the runs are identical (lcp = depth); otherwise
-    * greedily accept step k = depth/2, depth/4, ..., 1 at offset l
-    * iff rank_k at (idL, posL+l) equals rank_k at (idR, posR+l) —
-    * the accepted steps are exactly the binary digits of the true
-    * lcp, and every probed position is guaranteed present in table k
-    * (both suffixes carry ≥ depth tokens and l + k ≤ depth holds
-    * along the walk). Each level is ONE equi-join of the pair frame
-    * against that level's rank table on (id, pos + l) — log₂(depth)
-    * joins of (long, long) keys, never a token comparison: the
-    * answer depends on rank ORDER at every level, which is what
-    * makes this the gate for order consistency (a q357-style rank
-    * table that was mere equality classes would mis-order adjacency
-    * AND mis-extend every lcp).
-    *
-    * Scale: the suffix-array index comes from the two-phase
-    * [[graft.engine.Dedup.numberRows]] (range partition + broadcast
-    * offsets — no single-partition sort); adjacency is an equi-join
-    * on sa+1; everything else is the log-depth join ladder above.
-    * Shuffle keys stay fixed-width integers at any depth. */
-  def suffixLcpPairs(toks: DataFrame, id: String, pos: String,
-                     tok: String, depth: Int): DataFrame = {
-    val tabs = suffixRankTables(toks, id, pos, tok, depth)
-    val sa = graft.engine.Dedup.numberRows(tabs(depth),
-      struct(col("__r"), col(id), col(pos)), "sa")
-    val lhs = sa.select(col("sa"), col(id).as("idL"), col(pos).as("posL"),
-      col("__r").as("__rl"))
+    * This replaced a prefix-doubling sparse table (ranks at depths 1,
+    * 2, 4, ..., depth, then a log-depth walk of rank comparisons) whose
+    * shuffle keys stayed fixed-width longs at any depth. Its cost was
+    * not the key width but one checkpointed numberRows and join per
+    * level: 41 construct jobs for q360 at depth 8, against 4 now. At
+    * sf0.1 (median of 3 after a warm-up, `local[4]`) the gram sort was
+    * also 2.8-3.4x faster at depths 16, 32 and 64 (12.2 → 3.9 s,
+    * 11.7 → 3.4 s, 9.4 → 3.3 s; 65-89 jobs → 9). sf0.1 documents are
+    * short, so very long depths over large corpora stay unmeasured:
+    * there each row carries `depth` strings. */
+  def suffixLcpPairs(docs: DataFrame, id: String, words: String,
+                     depth: Int): DataFrame = {
+    require(depth >= 1, s"suffixLcpPairs needs depth >= 1, got $depth")
+    val grams = docs
+      .select(col(id), col(words), posexplode(col(words)).as(Seq("__p", "__w")))
+      .filter(col("__p") <= size(col(words)) - depth)
+      .select(col(id), col("__p"),
+        slice(col(words), col("__p") + 1, lit(depth)).as("__g"))
+    val sa = graft.engine.Dedup.numberRows(grams,
+      struct(concat_ws(" ", col("__g")), col(id), col("__p")), "sa")
+    val lhs = sa.select(col("sa"), col(id).as("idL"), col("__p").as("posL"),
+      col("__g").as("__gl"))
     val rhs = sa.select((col("sa") - 1).as("sa"), col(id).as("idR"),
-      col(pos).as("posR"), col("__r").as("__rr"))
-    var pairs = lhs.join(rhs, Seq("sa"))
-      .withColumn("lcp",
-        when(col("__rl") === col("__rr"), lit(depth.toLong))
-          .otherwise(lit(0L)))
-    var k = depth / 2
-    while (k >= 1) {
-      val a = tabs(k).select(col(id).as(s"__da$k"), col(pos).as(s"__pa$k"),
-        col("__r").as(s"__ra$k"))
-      val b = tabs(k).select(col(id).as(s"__db$k"), col(pos).as(s"__pb$k"),
-        col("__r").as(s"__rb$k"))
-      pairs = pairs
-        .join(a, col("idL") === col(s"__da$k") &&
-          col("posL") + col("lcp") === col(s"__pa$k"), "left")
-        .join(b, col("idR") === col(s"__db$k") &&
-          col("posR") + col("lcp") === col(s"__pb$k"), "left")
-        .withColumn("lcp",
-          when(col("lcp") < depth && col(s"__ra$k").isNotNull &&
-              col(s"__ra$k") === col(s"__rb$k"),
-            col("lcp") + k).otherwise(col("lcp")))
-        .drop(s"__da$k", s"__pa$k", s"__ra$k",
-          s"__db$k", s"__pb$k", s"__rb$k")
-      k /= 2
-    }
-    pairs.select(col("sa"), col("idL"), col("posL"), col("idR"),
-      col("posR"), col("lcp"))
+      col("__p").as("posR"), col("__g").as("__gr"))
+    // 1-based index of the first unequal token; the appended `false`
+    // stops it at depth + 1 when all `depth` tokens agree
+    val miss = array_position(concat(
+      zip_with(col("__gl"), col("__gr"), (l, r) => l === r),
+      array(lit(false))), false)
+    lhs.join(rhs, Seq("sa")).select(col("sa"), col("idL"), col("posL"),
+      col("idR"), col("posR"), (miss - 1).as("lcp"))
   }
 
   /** Duplicated-run START positions by bounded PREFIX DOUBLING — the

@@ -99,46 +99,76 @@ class SuffixDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  private def lcpPairs(docs: Seq[(Long, Seq[String])], depth: Int) =
+    DedupOps.suffixLcpPairs(docs.toDF("doc_id", "ws"), "doc_id", "ws", depth)
+      .as[(Long, Long, Int, Long, Int, Long)].collect().sortBy(_._1).toSeq
+
+  /** Brute force: sort all depth-runs by (space-joined run, id, pos),
+    * pair neighbours, count common leading tokens. */
+  private def bruteLcpPairs(docs: Seq[(Long, Seq[String])], depth: Int) = {
+    val runs = (for {
+      (id, ws) <- docs; p <- 0 to ws.length - depth
+    } yield (id, p, ws.slice(p, p + depth)))
+      .sortBy { case (id, p, run) => (run.mkString(" "), id, p) }
+    runs.zip(runs.drop(1)).zipWithIndex.map {
+      case (((idL, pL, rL), (idR, pR, rR)), i) =>
+        val lcp = rL.zip(rR).takeWhile { case (a, b) => a == b }.length
+        (i + 1L, idL, pL, idR, pR, lcp.toLong)
+    }
+  }
+
   test("suffixLcpPairs on a hand-computed corpus: adjacency in suffix " +
     "order and exact lcp per adjacent pair") {
     val docs = Seq((0L, Seq("a", "b", "c", "d", "e")),
                    (1L, Seq("a", "b", "c", "x", "y")))
-    val toks = docs.toDF("doc_id", "ws")
-      .select(col("doc_id"), posexplode(col("ws")).as(Seq("p", "w")))
-    val got = DedupOps.suffixLcpPairs(toks, "doc_id", "p", "w", depth = 4)
-      .as[(Long, Long, Int, Long, Int, Long)].collect().sortBy(_._1)
     // suffix order of the depth-4 runs: [a b c d](0,0), [a b c x](1,0),
     // [b c d e](0,1), [b c x y](1,1) → lcps 3, 0, 2
-    assert(got.toSeq === Seq(
+    assert(lcpPairs(docs, depth = 4) === Seq(
       (1L, 0L, 0, 1L, 0, 3L),
       (2L, 1L, 0, 0L, 1, 0L),
       (3L, 0L, 1, 1L, 1, 2L)))
   }
 
   test("suffixLcpPairs matches a brute-force sorted-suffix reference " +
-    "(depth 4 and 8) on high-collision random corpora, including " +
+    "(depth 4, 8 and 16) on high-collision random corpora, including " +
     "full-depth ties (lcp = depth)") {
-    for (depth <- Seq(4, 8); seed <- Seq(5, 6)) {
-      val docs = corpus(seed, nDocs = 10, len = 25, vocab = 3)
-      val toks = docs.toDF("doc_id", "ws")
-        .select(col("doc_id"), posexplode(col("ws")).as(Seq("p", "w")))
-      val got = DedupOps.suffixLcpPairs(toks, "doc_id", "p", "w", depth)
-        .as[(Long, Long, Int, Long, Int, Long)].collect().sortBy(_._1)
-      // brute force: sort all depth-runs (tokens carry no sub-0x20
-      // chars, so the joined-string sort IS the tokenwise sort),
-      // pair neighbors, count common leading tokens
-      val runs = (for {
-        (id, ws) <- docs; p <- 0 to ws.length - depth
-      } yield (id, p, ws.slice(p, p + depth)))
-        .sortBy { case (id, p, run) => (run.mkString(" "), id, p) }
-      val want = runs.zip(runs.tail).zipWithIndex.map {
-        case (((idL, pL, rL), (idR, pR, rR)), i) =>
-          val lcp = rL.zip(rR).takeWhile { case (a, b) => a == b }.length
-          (i + 1L, idL, pL, idR, pR, lcp.toLong)
-      }
-      assert(got.toSeq === want, s"depth=$depth seed=$seed")
+    for (depth <- Seq(4, 8, 16); seed <- Seq(5, 6)) {
+      val random = corpus(seed, nDocs = 10, len = 25, vocab = 3)
+      // a planted copy of doc 0's head makes a full-depth tie certain
+      // at every depth (a random depth-16 tie over 3 tokens is not)
+      val docs = random :+ (10L, random.head._2.take(depth + 3))
+      val want = bruteLcpPairs(docs, depth)
+      assert(lcpPairs(docs, depth) === want, s"depth=$depth seed=$seed")
       assert(want.exists(_._6 == depth.toLong),
         s"fixture should contain a full-depth tie (depth=$depth seed=$seed)")
+    }
+  }
+
+  test("suffixLcpPairs orders suffixes by the space-joined gram even when " +
+    "a token carries a sub-0x20 control character") {
+    val vocab = Seq("a", "a\u0001", "a\u0001b", "b", "a b")
+    for (depth <- Seq(2, 4); seed <- Seq(11, 12)) {
+      val rnd = new scala.util.Random(seed)
+      val docs = (0L until 8L).map(id =>
+        (id, Seq.fill(12 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size)))))
+      val want = bruteLcpPairs(docs, depth)
+      // the fixture is only a check if tokenwise order differs here
+      val runs = for ((_, ws) <- docs; p <- 0 to ws.length - depth)
+        yield ws.slice(p, p + depth)
+      import Ordering.Implicits.seqOrdering
+      assert(runs.sorted != runs.sortBy(_.mkString(" ")),
+        s"depth=$depth seed=$seed")
+      assert(lcpPairs(docs, depth) === want, s"depth=$depth seed=$seed")
+    }
+  }
+
+  test("suffixLcpPairs builds and collects in at most 5 jobs at depth 4 " +
+    "and 8: one gram sort, not one numberRows per depth level") {
+    val docs = corpus(9, nDocs = 6, len = 20, vocab = 4).toDF("doc_id", "ws")
+    for (depth <- Seq(4, 8)) {
+      val jobs = jobExecutions(
+        DedupOps.suffixLcpPairs(docs, "doc_id", "ws", depth).collect())
+      assert(jobs.size <= 5, s"depth=$depth: ${jobs.size} jobs")
     }
   }
 

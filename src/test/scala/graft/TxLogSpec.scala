@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,45 +23,12 @@ class TxLogSpec extends SparkSpec {
   private def scored(ids: Range) =
     ids.map(i => (i.toLong, s"new$i", i * 1.5)).toDF("id", "v", "score")
 
-  private val Marker = "txlogspec-drain"
-
   /** The jobs `body` launches, each as true iff it ran outside any SQL
     * execution. Every TxLog action is a Dataset action and runs inside
     * one; the job parquet schema inference launches to read footers
     * does not. */
   private def jobsDuring(body: => Any): Seq[Boolean] =
     jobExecutions(body).map(_.isEmpty)
-
-  /** The SQL execution id of each job `body` launches, in launch order
-    * (None for a job outside any SQL execution). A marker job before
-    * and after `body` brackets the asynchronous (but ordered) listener
-    * bus: jobs between the two markers' starts are exactly `body`'s. */
-  private def jobExecutions(body: => Any): Seq[Option[String]] = {
-    val sc = spark.sparkContext
-    val markers = new AtomicInteger(0)
-    val seen = new ConcurrentLinkedQueue[Option[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        if (props.exists(_.getProperty("spark.job.description") == Marker))
-          markers.incrementAndGet()
-        else if (markers.get == 1)
-          seen.add(props.flatMap(p =>
-            Option(p.getProperty("spark.sql.execution.id"))))
-      }
-    }
-    def marker(n: Int): Unit = {
-      sc.setJobDescription(Marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (markers.get < n && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(markers.get == n, "listener bus not drained")
-    }
-    sc.addSparkListener(listener)
-    try { marker(1); body; marker(2) }
-    finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
 
   /** What `TxLog.read` returned before manifests carried the schema:
     * `mergeSchema` footer inference over the version's files, then the

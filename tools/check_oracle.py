@@ -16,11 +16,18 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+# graft.Verify records why a query left no result (query -> exception)
+failed_path = f"{outdir}/verify_failures.json"
+verify_failures = (json.load(open(failed_path))
+                   if os.path.exists(failed_path) else {})
 fails = []
 for name, sql in sorted(oracle.items()):
     respath = f"{outdir}/{name}"
     if not os.path.isdir(respath):
-        print(f"{name}: MISSING spark result"); fails.append(name); continue
+        cause = verify_failures.get(name)
+        print(f"{name}: MISSING spark result"
+              + (f" ({cause[:300]})" if cause else ""))
+        fails.append(name); continue
     try:
         got = con.execute(
             f"SELECT * FROM parquet_scan('{respath}/*.parquet')").df()

@@ -269,7 +269,9 @@ EOF
 echo "== [9/9] query_panels traced counters (execute-bound pair operators)"
 # q46/q359/q91 are execute-bound; their execute.s and the widest stage's
 # task count show whether the pair operators keep their planned
-# partitions. The counters are medians over the run's passes.
+# partitions. q360's construct jobs show that suffixLcpPairs sorts its
+# grams once (4 jobs) instead of one numberRows per doubling level (41).
+# The counters are medians over the run's passes.
 python3 perfbench/run.py --workload query_panels --seed 1 --seconds 15 \
   --trace 1 2>/tmp/gate_panels_err.log | tail -1 >/tmp/gate_panels.json
 python3 - /tmp/gate_panels.json <<'EOF' || { echo "FAIL: query_panels counters"; exit 1; }
@@ -285,8 +287,15 @@ print(f"  failed {d['failed']}/{d['attempted']}  "
 for q in ("q360_suffix_lcp", "q46_fuzzy_pairs", "q359_gram_hash_dedup",
           "q91_knn_join"):
     print(f"  {q}.execute.s {m[q + '.execute.s']:.2f}")
+q360_jobs = m["q360_suffix_lcp.construct.jobs"]
+print(f"  q360_suffix_lcp.construct.jobs {q360_jobs:.0f}")
+bad = []
 if d["failed"] > 0:
-    print(f"failed={d['failed']} (golden-hash mismatch or error)"); sys.exit(1)
+    bad.append(f"failed={d['failed']} (golden-hash mismatch or error)")
+if q360_jobs > 8:
+    bad.append(f"q360_suffix_lcp.construct.jobs={q360_jobs:.0f} > 8")
+if bad:
+    print("; ".join(bad)); sys.exit(1)
 EOF
 
 echo "== gate complete for ${ROUND}"
