@@ -85,7 +85,9 @@ object Documents {
 
   /** Full pipeline: scan-shaped input → DWH_DOCUMENT rows, numbered and
     * materialized (the returned frame reads a checkpoint, so consumers
-    * never re-run the extraction).
+    * never re-run the extraction). The checkpoints serve the numbering
+    * and the one extraction per file, not the sink: [[TxLog.merge]]
+    * reads its batch once whatever it is given.
     *
     * Materialization boundary: `text` is usually a UDF over the scanned
     * bytes (PDF/DOCX extraction), the costly step. The parsed batch is

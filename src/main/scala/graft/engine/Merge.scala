@@ -42,6 +42,11 @@ object Merge {
     *     byte-identical (TxLogSpec proves path- and byte-identity), so a
     *     micro-batch of thousands of keys against a warehouse of
     *     billions rewrites a handful of files, not the table;
+    *   - `incoming` is evaluated once: the batch is written as files of
+    *     its own, and the overlapping files are rewritten with only the
+    *     rows whose key the batch does not carry, so the new version
+    *     lists those survivor files beside the batch's (compaction folds
+    *     them);
     *   - visibility is an atomic manifest CAS — readers see the old
     *     version or the new one, never a half-written directory (the
     *     plain-parquet [[upsert]] + overwrite has a destroy-then-rebuild

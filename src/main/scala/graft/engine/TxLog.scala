@@ -532,44 +532,47 @@ object TxLog {
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
-  /** The batch's [min,max] over the non-null values of `keyCol`, None
-    * when it has none. One job with no exchange: each partition folds
-    * its own bounds and the driver folds the per-partition results
-    * (an `agg(min, max)` pays a partial and a final stage). */
-  private def keyBounds(df: DataFrame, keyCol: String): Option[(Long, Long)] = {
-    import org.apache.spark.sql.Encoders
-    df.select(col(keyCol).cast("long")).as(Encoders.LONG)
-      .mapPartitions { it =>
-        var (mn, mx, seen) = (Long.MaxValue, Long.MinValue, false)
-        it.foreach { k =>
-          if (k != null) { mn = math.min(mn, k); mx = math.max(mx, k); seen = true }
-        }
-        if (seen) Iterator((mn, mx)) else Iterator.empty
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .collect()
-      .reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
-  }
-
   /** Transactional MERGE (incoming wins on key match): reads and
     * rewrites ONLY the files whose [min,max] key range overlaps the
     * batch; every other file is carried into the new version untouched.
     * Retries from a fresh snapshot on a concurrent-commit conflict, so
     * the merge serializes after the winner. A batch may ADD columns
-    * (see [[read]]'s schema-evolution contract): rewritten files carry
-    * the union schema, untouched old files keep reading with nulls.
+    * (see [[read]]'s schema-evolution contract): the batch's files carry
+    * them, and every other file reads them as null.
     *
-    * Jobs: one for the batch's key bounds ([[keyBounds]]), then the
-    * write's own; with an integral key the new files' stats come from
-    * their footers ([[writeData]]). `incoming` is evaluated by both, so a costly
-    * batch should arrive materialized ([[Documents.pipeline]]'s does).
-    * A batch with no non-null key is empty: nothing is committed and
-    * the current version is returned. */
+    * The batch is written first, once, as data files of its own, and
+    * its key range is the fold of their footer ranges ([[writeData]]),
+    * so `incoming` is evaluated exactly once. Each attempt then rewrites
+    * the SURVIVORS of the overlapping files (their rows whose key the
+    * batch does not carry, by an anti-join against the key column read
+    * back from the batch's files) and commits the untouched files, the
+    * survivors and the batch. Jobs: the batch write's, then, when some
+    * file overlaps, the survivors write's. A batch that overlaps no
+    * file, such as one whose keys ascend past the table's, is one write.
+    * A lost commit race rewrites only the survivors; an attempt that
+    * throws removes the files this merge wrote. A batch with no non-null
+    * key is empty: its files are removed, nothing is committed and the
+    * current version is returned. */
   def merge(spark: SparkSession, root: String, incoming: DataFrame,
             keyCol: String, epoch: Option[Long] = None): Long = {
     val fs = hfs(spark, root)
-    val bounds = keyBounds(incoming, keyCol)
-    if (bounds.isEmpty) return currentVersion(spark, root) // empty batch
-    val (incMin, incMax) = bounds.get
+    def remove(files: Seq[TxFile]): Unit =
+      files.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+    def orRemove[A](files: Seq[TxFile])(body: => A): A =
+      try body catch { case e: Throwable => remove(files); throw e }
+    // the batch under `snap`'s column mapping; as in `append`, a type
+    // conflict fails before any file is written
+    def writeBatch(snap: TxSnapshot): (StructType, Seq[TxFile]) = {
+      assertNoSchemaConflict(incoming.columns.toSeq, snap)
+      val phys = toPhysical(incoming, snap)
+      widen(spark, root, snap, phys.schema)
+      (phys.schema, writeData(spark, root, phys, physName(keyCol, snap)))
+    }
+    val (schema0, batch0) = writeBatch(snapshot(spark, root))
+    if (batch0.forall(f => f.minKey > f.maxKey)) { // no non-null key
+      remove(batch0)
+      return currentVersion(spark, root)
+    }
     // Incremental epoch-scan state shared across retry attempts: the
     // single-epoch-writer contract makes epochs monotone in version, so
     // each attempt only scans the manifests COMMITTED SINCE the last
@@ -593,7 +596,7 @@ object TxLog {
       }
       if (epochSeen.exists(_ >= e)) Some(cur) else None
     }
-    @tailrec def loop(): Long = {
+    @tailrec def loop(written: StructType, batch: Seq[TxFile]): Long = {
       val snap = snapshot(spark, root)
       // DOUBLE-DEPLOYMENT guard, re-checked per ATTEMPT: mergeEpoch's
       // entry check only sees epochs committed before this call, but a
@@ -606,34 +609,52 @@ object TxLog {
       // AFTER snapshot(), so a commit landing between the two reads
       // can't make the skip report a version one behind the epoch's.
       val skippedAt = epoch.flatMap(epochCommittedAt)
-      if (skippedAt.isDefined)
+      if (skippedAt.isDefined) {
+        remove(batch)
         skippedAt.get
-      else {
+      } else {
         // schema-conflict check runs per ATTEMPT: a rename/drop committed
         // while this merge raced fails the retry instead of resurrecting
-        // the stale name as a "new" column
-        assertNoSchemaConflict(incoming.columns.toSeq, snap)
-        val physKey = physName(keyCol, snap)
-        val inc = toPhysical(incoming, snap)
-        val (touched, untouched) =
-          snap.files.partition(f => f.maxKey >= incMin && f.minKey <= incMax)
-        val existing =
-          if (touched.isEmpty) inc.limit(0)
-          else dropRetired(scan(spark, root, touched, snap), snap)
-        val merged = Merge.upsert(align(existing, inc),
-          align(inc, existing), Seq(physKey))
-        val schema = widen(spark, root, snap, merged.schema)
-        val newFiles = writeData(spark, root, merged, physKey)
-        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-            files = untouched ++ newFiles, schema = schema), epoch)) {
-          snap.version + 1
+        // the stale name as a "new" column. A rename can also map one of
+        // the batch's new columns to another stored name; files written
+        // under the old mapping must not commit, so the batch is written
+        // again under the new one.
+        val remapped = orRemove(batch) {
+          assertNoSchemaConflict(incoming.columns.toSeq, snap)
+          toPhysical(incoming, snap).columns.toSeq != written.fieldNames.toSeq
+        }
+        if (remapped) {
+          remove(batch)
+          val (schema, rewritten) = writeBatch(snap)
+          loop(schema, rewritten)
         } else {
-          newFiles.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
-          loop()
+          val physKey = physName(keyCol, snap)
+          val keyed = batch.filter(f => f.minKey <= f.maxKey)
+          val (lo, hi) = (keyed.map(_.minKey).min, keyed.map(_.maxKey).max)
+          val (touched, untouched) =
+            snap.files.partition(f => f.maxKey >= lo && f.minKey <= hi)
+          val (schema, survivors) = orRemove(batch) {
+            val schema = widen(spark, root, snap, written)
+            val batchKeys = spark.read.schema(written)
+              .parquet(batch.map(f => s"$root/${f.path}"): _*).select(physKey)
+            (schema,
+              if (touched.isEmpty) Seq.empty
+              else writeData(spark, root,
+                dropRetired(scan(spark, root, touched, snap), snap)
+                  .join(batchKeys, Seq(physKey), "left_anti"), physKey))
+          }
+          if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
+              files = untouched ++ survivors ++ batch, schema = schema),
+              epoch)) {
+            snap.version + 1
+          } else {
+            remove(survivors)
+            loop(written, batch)
+          }
         }
       }
     }
-    loop()
+    loop(schema0, batch0)
   }
 
   /** EXACTLY-ONCE micro-batch MERGE: the batch's epoch id is stamped

@@ -106,12 +106,14 @@ object Watcher {
     *
     * `process` contract: `files` is a lazy `binaryFile` scan (`path`,
     * `content`, ...), and `process` runs on the driver inside
-    * [[pollOnce]], so it may run jobs of its own. The frame it returns
-    * is read more than once by the sink (the TxLog merge takes the
-    * batch's key bounds, then writes it), so a `process` whose rows are
-    * costly to compute, such as text extraction, should return them
-    * materialized: [[Documents.pipeline]] does, so each landed file is
-    * extracted once per poll. */
+    * [[pollOnce]], so it may run jobs of its own. The unpartitioned
+    * TxLog sink reads the frame it returns once: [[TxLog.merge]] writes
+    * the batch first and takes its key range from the written files.
+    * The other sinks read it more than once (the partitioned TxLog
+    * merge takes per-partition key bounds, then writes; the parquet
+    * upserts join on its keys, then union its rows), so there a
+    * `process` whose rows are costly to compute, such as text
+    * extraction, should return them materialized. */
   /** @param partitionCol when set, the warehouse table is stored
     *   partitioned by this (process-emitted) column and batches are
     *   merged via [[Merge.upsertPartitioned]] — only batch-affected

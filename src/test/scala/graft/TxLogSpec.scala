@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.TxLog
+import graft.engine.{Merge, TxLog}
 
 /** The transactional table format: atomic commits, snapshot isolation,
   * time travel, stats-pruned MERGE, concurrency, crash safety, vacuum. */
@@ -849,19 +849,39 @@ class TxLogSpec extends SparkSpec {
       .reduce((a, b) => (a._1 min b._1, a._2 max b._2)) === ((7L, 200L)))
   }
 
-  test("job pins: append of a local frame is one job (no stats read-back), " +
-    "and merge spends one job on its key bounds before its write") {
+  test("job pins: append of a local frame is one job (no stats read-back); " +
+    "a merge that overlaps no file is one SQL execution, the batch write, " +
+    "and an overlapping merge adds one, the survivors rewrite") {
     val root = freshRoot()
     assert(jobsDuring(TxLog.append(spark, root, rows(0 until 50, "a"), "id"))
       .size === 1)
+    // keys past the table's: the batch's files are the whole commit
+    val disjoint = jobExecutions(
+      TxLog.merge(spark, root, rows(50 until 60, "n"), "id"))
+    assert(disjoint.size === 1 && !disjoint.contains(None), disjoint)
+    // executions in launch order: the batch write (one job), then the
+    // survivors rewrite; no stats execution follows either write
     val jobs = jobExecutions(
-      TxLog.merge(spark, root, rows(40 until 60, "m"), "id"))
-    // executions in launch order: the bounds, then the write; the bounds
-    // execution is one job, and no stats execution follows the write
+      TxLog.merge(spark, root, rows(40 until 70, "m"), "id"))
     val executions = jobs.distinct
     assert(executions.size === 2 && !executions.contains(None), jobs)
     assert(jobs.count(_ == executions.head) === 1, jobs)
-    assert(TxLog.read(spark, root).count() === 60)
+    assert(TxLog.read(spark, root).count() === 70)
+  }
+
+  test("merge evaluates its batch once: a UDF computing the batch's key " +
+    "runs once per batch row") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 50, "a"), "id")
+    val calls = spark.sparkContext.longAccumulator("batch rows")
+    val counted = udf { (i: Long) => calls.add(1L); i }
+    val batch = spark.range(40L, 100L, 1L, 3)
+      .select(counted(col("id")).as("id"), lit("m").as("v"))
+    assert(TxLog.merge(spark, root, batch, "id") === 2L)
+    assert(calls.value === 60L)
+    val df = TxLog.read(spark, root)
+    assert(df.count() === 100)
+    assert(df.filter(col("id") >= 40 && col("v") =!= "m").count() === 0)
   }
 
   test("the key contract fails loudly: an all-null key and a string key " +
@@ -917,5 +937,112 @@ class TxLogSpec extends SparkSpec {
     // a delete of every non-null key leaves the null-key row alone
     TxLog.delete(spark, root, "id", col("id") >= 0)
     assert(contents === Seq((None, "nullkey")))
+  }
+
+  /** `df` with a null column for each of `other`'s columns it lacks. */
+  private def padded(df: DataFrame, other: DataFrame): DataFrame =
+    other.schema.fields.filterNot(f => df.columns.contains(f.name))
+      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+
+  test("merge equals Merge.upsert of the table before it, as multisets, " +
+    "over seeded batches with duplicate keys, null keys and an added " +
+    "column that overlap no file, some files or every file") {
+    def contents(df: DataFrame): Seq[String] =
+      padded(df, Seq.empty[(Long, String, Double)].toDF("id", "v", "score"))
+        .select("id", "v", "score").collect().map(_.toString).toSeq.sorted
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val root = freshRoot()
+      // three files over keys 0-99, 100-199 and 200-299, the second
+      // holding a null key
+      for (lo <- Seq(0, 100, 200)) {
+        val keys = (lo until lo + 100).map(i => Option(i.toLong)) ++
+          (if (lo == 100) Seq(None) else Seq.empty)
+        TxLog.append(spark, root, keys.map(k => (k, s"t$lo"))
+          .toDF("id", "v").repartition(1), "id")
+      }
+      for ((overlap, step) <- Seq("none", "some", "every").zipWithIndex) {
+        val (lo, hi) = overlap match {
+          case "none" => (1000 + 100 * seed, 1050 + 100 * seed)
+          case "some" => (120, 180)
+          case _ => (-10, 310)
+        }
+        // at least one non-null key; duplicates and nulls mixed in
+        val keys = Option(lo.toLong) +: Seq.fill(30)(
+          if (rnd.nextInt(8) == 0) None
+          else Some((lo + rnd.nextInt(hi - lo)).toLong))
+        val tag = s"s$seed-$step"
+        // each overlap comes with and without the added column
+        val batch =
+          if ((seed + step) % 2 == 0) keys.zipWithIndex.map { case (k, i) =>
+            (k, s"$tag-$i", Option(i * 0.5)) }.toDF("id", "v", "score")
+          else keys.zipWithIndex.map { case (k, i) => (k, s"$tag-$i") }
+            .toDF("id", "v")
+        val before = TxLog.read(spark, root)
+        val want = contents(Merge.upsert(padded(before, batch),
+          padded(batch, before), Seq("id")))
+        val v = TxLog.currentVersion(spark, root)
+        assert(TxLog.merge(spark, root, batch, "id") === v + 1)
+        assert(contents(TxLog.read(spark, root)) === want,
+          s"seed $seed, $overlap overlap")
+      }
+    }
+  }
+
+  test("a merge whose survivors rewrite throws leaves the version " +
+    "unchanged and no new entry under data/") {
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 50, "a").repartition(1), "id")
+    TxLog.append(spark, root, rows(100 until 150, "b").repartition(1), "id")
+    // the file the batch overlaps is unreadable: the batch write succeeds,
+    // the rewrite of that file's survivors fails
+    val low = TxLog.snapshot(spark, root).files.filter(_.maxKey < 100)
+    assert(low.size === 1)
+    Files.write(Paths.get(root, low.head.path), "not parquet".getBytes("UTF-8"))
+    def entries = Files.list(Paths.get(root, "data")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    val before = entries
+    intercept[Exception](TxLog.merge(spark, root, rows(40 until 60, "m"), "id"))
+    assert(TxLog.currentVersion(spark, root) === 2L)
+    assert(entries === before)
+  }
+
+  test("a rename committed while a merge races it maps the batch's new " +
+    "column to the renamed column's stored name: the batch is written " +
+    "again under the new mapping, never committed under the old one") {
+    import graft.engine.LogStore
+    val root = freshRoot()
+    TxLog.append(spark, root, rows(0 until 20, "a"), "id")
+    val prev = TxLog.logStoreProvider
+    @volatile var armed = true
+    // the merge's first commit attempt loses to a rename of v to z
+    TxLog.logStoreProvider = fs => new LogStore {
+      def commitExclusive(f: org.apache.hadoop.fs.FileSystem,
+                          tmp: org.apache.hadoop.fs.Path,
+                          dest: org.apache.hadoop.fs.Path): Boolean = {
+        if (armed) {
+          armed = false
+          assert(TxLog.renameColumn(spark, root, "v", "z") === 2L)
+        }
+        prev(fs).commitExclusive(f, tmp, dest)
+      }
+    }
+    try {
+      assert(TxLog.merge(spark, root,
+        (15 until 25).map(i => (i.toLong, s"z$i")).toDF("id", "z"),
+        "id") === 3L)
+      assert(!armed)
+    } finally TxLog.logStoreProvider = prev
+    // the files written under the old mapping are gone: every data file
+    // (checksum files aside) is listed by a committed version
+    val listed = (1L to 3L).flatMap(v =>
+      TxLog.snapshot(spark, root, Some(v)).files.map(_.path)).toSet
+    assert(Files.list(Paths.get(root, "data")).iterator().asScala
+      .map(p => s"data/${p.getFileName}").filterNot(_.endsWith(".crc"))
+      .toSet === listed)
+    val df = TxLog.read(spark, root)
+    assert(df.columns.toSeq === Seq("id", "z"))
+    assert(df.as[(Long, String)].collect().toSeq.sortBy(_._1) ===
+      (0L until 15L).map(i => (i, "a")) ++ (15L until 25L).map(i => (i, s"z$i")))
   }
 }
