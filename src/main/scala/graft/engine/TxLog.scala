@@ -7,18 +7,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
-  ShortType, StructType}
+  ShortType, StringType, StructField, StructType}
 
 /** One data file tracked by the transaction log, with its row count and
   * min/max stats on the table's key column (the pruning index). A file
   * whose keys are all null has the empty range `minKey > maxKey`
   * (`Long.MaxValue`, `Long.MinValue`), so no merge selects it: a null
-  * key never matches. `part`
-  * is the file's partition value when the table is partitioned (every
-  * row in a data file shares it — the Hive-layout invariant kept in the
-  * manifest instead of the directory tree); None for unpartitioned
-  * tables. Contract: partition values must not contain tab or newline
-  * (the manifest's field/record separators). */
+  * key never matches. `part` is the value every row of the file holds
+  * in a partitioned table's partition column (the Hive-layout invariant
+  * kept in the manifest), None in an unpartitioned table: the column
+  * cast to string, non-null and without tab or newline (the manifest's
+  * separators), of any length and characters. */
 final case class TxFile(path: String, rows: Long, minKey: Long,
                         maxKey: Long, part: Option[String] = None)
 
@@ -39,12 +38,18 @@ final case class TxFile(path: String, rows: Long, minKey: Long,
   * its own files' schema), so it covers every listed file (columns a
   * file lacks read as null). Scans read with it instead of merging the
   * files' parquet footers. None only for a version committed before
-  * manifests carried it. */
+  * manifests carried it.
+  *
+  * `partCol` is the PHYSICAL name of the partition column, recorded at
+  * the table's first partitioned merge and kept by every later version.
+  * None when unpartitioned, or when the files' partition values predate
+  * the record (a merge given the column records it). */
 final case class TxSnapshot(version: Long, files: Seq[TxFile],
                             renames: Seq[(String, String)] = Seq.empty,
                             dropped: Seq[String] = Seq.empty,
                             retired: Seq[String] = Seq.empty,
-                            schema: Option[StructType] = None)
+                            schema: Option[StructType] = None,
+                            partCol: Option[String] = None)
 
 /** A writer raced a concurrent RENAME/DROP it could not have seen: its
   * batch names a column that no longer exists under that name. Raised
@@ -68,10 +73,14 @@ final class TxSchemaConflictException(msg: String)
   *
   * A manifest lists the version's data files with their key stats and
   * carries the table's metadata: the column mapping (`#rename=`,
-  * `#drop=`, `#retired=`), the epoch tag (`#epoch=`), and the union
-  * schema of the listed files (`#schema=`, Spark's StructType JSON).
-  * Readers take the schema from the log, so no read opens footers to
-  * learn it (Delta keeps the schema in its log for the same reason).
+  * `#drop=`, `#retired=`), the epoch tag (`#epoch=`), the union
+  * schema of the listed files (`#schema=`, Spark's StructType JSON) and
+  * the partition column (`#partition=`). Readers take the schema from
+  * the log and writers the partition column, so neither opens footers
+  * to learn them (Delta keeps both in its log for the same reason).
+  * Once a [[merge]] given `partCol` records the column, every write
+  * splits its rows into single-partition files, row identity is
+  * (partition, key), and [[readPartitions]] prunes from the manifest.
   *
   * The core invariant: READERS ONLY SEE MANIFEST-LISTED FILES. Writers
   * first write immutable data files (invisible), then publish a new
@@ -184,7 +193,9 @@ object TxLog {
         .map(_.stripPrefix("#retired="))
       val schema = lines.find(_.startsWith("#schema=")).map(l =>
         DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType])
-      TxSnapshot(v, files, renames, dropped, retired, schema)
+      val partCol = lines.find(_.startsWith("#partition="))
+        .map(_.stripPrefix("#partition="))
+      TxSnapshot(v, files, renames, dropped, retired, schema, partCol)
     }
   }
 
@@ -244,6 +255,23 @@ object TxLog {
       s"batch references column(s) ${bad.mkString(", ")} renamed or " +
         s"dropped at table version ${snap.version} — rebuild the batch " +
         "against the current schema")
+  }
+
+  /** The physical partition column a write at `snap` splits its rows
+    * by: the recorded one, else `given` (a logical name, a merge's
+    * `partCol`). Throws when `given` is not the recorded column, and
+    * when the files' partitioning disagrees with the result. */
+  private def partColumn(snap: TxSnapshot,
+                         given: Option[String]): Option[String] = {
+    val asked = given.map(physName(_, snap))
+    require(snap.partCol.forall(r => asked.forall(_ == r)),
+      s"the table is partitioned by '${snap.partCol.get}', " +
+        s"not by '${given.get}'")
+    val pc = snap.partCol.orElse(asked)
+    require(snap.files.forall(_.part.isDefined == pc.isDefined),
+      s"the table's files are ${if (pc.isDefined) "un" else ""}partitioned " +
+        "(a merge given partCol records an unrecorded partition column)")
+    pc
   }
 
   /** The `#epoch=N` tag of version `v`'s manifest, None if untagged. */
@@ -331,6 +359,13 @@ object TxLog {
     * by a stats job over the new files only: a string column's footer
     * bounds are lexicographic, not numeric.
     *
+    * With `partCol` (physical) this is the ONE place rows are split
+    * into single-partition files and `TxFile.part` is set: each value's
+    * rows go to a staging directory named by its hash (so any value
+    * makes a valid name), and each file's value is read back from its
+    * footer (a string column) or by the stats job. A null value, or one
+    * holding tab or newline, throws before any file is placed.
+    *
     * A file whose keys are all null gets the empty key range (see
     * [[TxFile]]): a merge can leave a touched file's null-key rows alone
     * in a part file, and a delete or compaction can too. A key that is
@@ -338,36 +373,64 @@ object TxLog {
     * Spark's cast error. The staging directory is deleted on success and
     * on any failure. */
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
-                        keyCol: String): Seq[TxFile] = {
+                        keyCol: String,
+                        partCol: Option[String]): Seq[TxFile] = {
     val key = df.select(col(keyCol)).schema.head
+    val part = partCol.map(p => df.select(col(p)).schema.head)
     val fs = hfs(spark, root)
     fs.mkdirs(new Path(s"$root/data"))
     // no leading dot: the stats job of a non-integral key re-lists the
     // staging dir (hidden-path filters skip dot/underscore names)
     val tmp = new Path(s"$root/data/tmp-${java.util.UUID.randomUUID()}")
     try {
-      df.write.mode("overwrite").parquet(tmp.toString)
-      val stats = key.dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
+      val writer = part.fold(df)(p =>
+          df.withColumn(PartDir, sha2(col(p.name).cast("string"), 256)))
+        .write.mode("overwrite")
+      part.fold(writer)(_ => writer.partitionBy(PartDir)).parquet(tmp.toString)
+      val footers = (key.dataType, part.map(_.dataType)) match {
+        case (ByteType | ShortType | IntegerType | LongType,
+            None | Some(StringType)) =>
           val conf = spark.sessionState.newHadoopConf()
-          fs.listStatus(tmp).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .flatMap(st => footerStats(conf, st, key.name).map(st.getPath -> _))
-        case _ => scannedStats(spark, tmp, key)
+          val listing = fs.listFiles(tmp, true)
+          Some(Iterator.continually(listing).takeWhile(_.hasNext)
+              .map(_.next()).filter(_.getPath.getName.endsWith(".parquet"))
+              .toSeq.sortBy(_.getPath.toString)
+              .flatMap(st => footerStats(conf, st, key.name, part.map(_.name))
+                .map(st.getPath -> _)))
+            // parquet keeps no statistics for a string of over 2 KiB
+            .filter(_.forall(_._2._4.isDefined == part.isDefined))
+        case _ => None
       }
-      stats.map { case (src, (rows, mn, mx)) =>
-        val name = s"${java.util.UUID.randomUUID()}.parquet"
-        require(fs.rename(src, new Path(s"$root/data/$name")),
-          s"failed to place data file $name")
-        TxFile(s"data/$name", rows, mn, mx)
+      footers.getOrElse(scannedStats(spark, tmp, key, part)).map {
+        case (src, (rows, mn, mx, p)) =>
+          val name = s"${java.util.UUID.randomUUID()}.parquet"
+          require(fs.rename(src, new Path(s"$root/data/$name")),
+            s"failed to place data file $name")
+          TxFile(s"data/$name", rows, mn, mx, p)
       }
     } finally fs.delete(tmp, true)
   }
 
+  /** The staging directory column of a partitioned [[writeData]]. */
+  private val PartDir = "__txlog_part"
+
   /** The key range of a file whose keys are all null: empty, so no
     * merge's key bounds overlap it. */
   private val NullKeys = (Long.MaxValue, Long.MinValue)
+
+  /** A written file's (rows, minKey, maxKey, partition value). */
+  private type Stats = (Long, Long, Long, Option[String])
+
+  /** The one partition value of a written file, from its distinct
+    * non-null values and whether it holds a null. */
+  private def partValue(values: Seq[String], hasNull: Boolean): String = {
+    require(!hasNull, "partition values must be non-null")
+    require(values.distinct.size == 1,
+      s"a written file holds several partition values: ${values.distinct}")
+    require(!values.head.contains("\t") && !values.head.contains("\n"),
+      "partition values must not contain tab or newline")
+    values.head
+  }
 
   /** [[writeData]] for rows new to the table (`append`, `overwrite`).
     * Key contract: such a write carries at least one non-null key
@@ -376,11 +439,10 @@ object TxLog {
     * carry a non-null key ([[merge]] commits nothing otherwise), and a
     * delete or compaction rewrites rows the table already holds. */
   private def writeNew(spark: SparkSession, root: String, df: DataFrame,
-                       keyCol: String): Seq[TxFile] = {
-    val files = writeData(spark, root, df, keyCol)
+                       keyCol: String, partCol: Option[String]): Seq[TxFile] = {
+    val files = writeData(spark, root, df, keyCol, partCol)
     if (files.nonEmpty && files.forall(f => f.minKey > f.maxKey)) {
-      val fs = hfs(spark, root)
-      files.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+      remove(hfs(spark, root), root, files)
       throw new IllegalArgumentException(s"TxLog key column '$keyCol' " +
         "has no non-null key in an append or overwrite: a write of new " +
         "rows needs a non-null key castable to long (its min/max " +
@@ -389,13 +451,19 @@ object TxLog {
     files
   }
 
-  /** (rows, minKey, maxKey) of one written parquet file of an integral
-    * key, read from its footer; None for a zero-row file, [[NullKeys]]
-    * for a file whose keys are all null. Throws when the footer has no
-    * statistics for the key column. */
+  /** Delete the data files of a write that will not commit. */
+  private def remove(fs: FileSystem, root: String, files: Seq[TxFile]): Unit =
+    files.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+
+  /** [[Stats]] of one written parquet file of an integral key, read
+    * from its footer; None for a zero-row file, [[NullKeys]] for a file
+    * whose keys are all null. The partition value (of a string column)
+    * is None when the footer has no statistics for it. Throws when the
+    * footer has no statistics for the key column. */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
                           st: org.apache.hadoop.fs.FileStatus,
-                          keyName: String): Option[(Long, Long, Long)] = {
+                          keyName: String,
+                          partName: Option[String]): Option[Stats] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
@@ -403,11 +471,12 @@ object TxLog {
       try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
       finally reader.close()
     val rows = blocks.map(_.getRowCount).sum
+    def chunkStats(name: String) = blocks.map(_.getColumns.asScala
+      .find(_.getPath.toArray.sameElements(Array(name)))
+      .map(_.getStatistics).filterNot(_.isEmpty))
     if (rows == 0L) None
     else {
-      val keyStats = blocks.map(_.getColumns.asScala
-        .find(_.getPath.toArray.sameElements(Array(keyName)))
-        .map(_.getStatistics).filterNot(_.isEmpty))
+      val keyStats = chunkStats(keyName)
       if (keyStats.exists(_.isEmpty))
         throw new IllegalStateException(
           s"${st.getPath} has no statistics for key column '$keyName'")
@@ -417,39 +486,59 @@ object TxLog {
         if (nonNull.isEmpty) NullKeys
         else (nonNull.map(s => num(s.genericGetMin)).min,
           nonNull.map(s => num(s.genericGetMax)).max)
-      Some((rows, mn, mx))
+      val value = partName.map(chunkStats).filterNot(_.exists(_.isEmpty))
+        .map { ps =>
+          def str(v: Any) =
+            v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
+          partValue(ps.flatten.filter(_.hasNonNullValue)
+            .flatMap(s => Seq(str(s.genericGetMin), str(s.genericGetMax))),
+            ps.flatten.exists(_.getNumNulls > 0))
+        }
+      Some((rows, mn, mx, value))
     }
   }
 
-  /** Per-file (rows, minKey, maxKey) of the staged files at `tmp` for a
-    * key that is not integral, by one aggregate over the key cast to
-    * long (read back typed as written); [[NullKeys]] for a file whose
-    * keys are all null. */
+  /** Per-file [[Stats]] of the staged files at `tmp` when the footers
+    * cannot give them, by one aggregate over the key cast to long and
+    * the partition column cast to string (read back typed as written);
+    * [[NullKeys]] for a file whose keys are all null. */
   private def scannedStats(spark: SparkSession, tmp: Path,
-                           key: org.apache.spark.sql.types.StructField)
-      : Seq[(Path, (Long, Long, Long))] =
-    spark.read.schema(StructType(Seq(key))).parquet(tmp.toString)
-      .groupBy(input_file_name())
-      .agg(count(lit(1)), min(col(key.name).cast("long")),
-        max(col(key.name).cast("long")))
+                           key: StructField, part: Option[StructField])
+      : Seq[(Path, Stats)] = {
+    val p = part.map(f => col(f.name).cast("string"))
+    val aggs = Seq(count(lit(1)), min(col(key.name).cast("long")),
+      max(col(key.name).cast("long"))) ++
+      p.toSeq.flatMap(c => Seq(min(c), max(c), count(when(c.isNull, 1))))
+    spark.read.option("recursiveFileLookup", "true")
+      .schema(StructType(key +: part.toSeq)).parquet(tmp.toString)
+      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
       .collect().toSeq.sortBy(_.getString(0)).map { r =>
         val (mn, mx) =
           if (r.isNullAt(2)) NullKeys else (r.getLong(2), r.getLong(3))
-        new Path(new java.net.URI(r.getString(0))) -> ((r.getLong(1), mn, mx))
+        val value = part.map(_ => partValue(
+          Seq(4, 5).filterNot(r.isNullAt).map(r.getString), r.getLong(6) > 0))
+        new Path(new java.net.URI(r.getString(0))) ->
+          ((r.getLong(1), mn, mx, value))
       }
+  }
 
   /** Atomic commit attempt: the manifest of version `next.version`,
-    * listing `next`'s files, column mapping and schema. False iff
-    * another writer already committed that version. Writes the full
-    * manifest to a hidden temp name, then hands publication to the
-    * filesystem's [[LogStore]] — the create-exclusive CAS that makes
-    * exactly one racer win (see [[logStoreProvider]]). */
+    * listing `next`'s files, column mapping, schema and partition
+    * column. False iff another writer already committed that version.
+    * Writes the full manifest to a hidden temp name, then hands
+    * publication to the filesystem's [[LogStore]] — the create-exclusive
+    * CAS that makes exactly one racer win (see [[logStoreProvider]]).
+    * Throws when `next` mixes partitioned and unpartitioned files (a
+    * write that raced the table's first partitioned merge). */
   private def tryCommit(fs: FileSystem, root: String, next: TxSnapshot,
                         epoch: Option[Long]): Boolean = {
     require((next.renames.flatMap(r => Seq(r._1, r._2)) ++ next.dropped ++
-        next.retired).forall(n =>
+        next.retired ++ next.partCol).forall(n =>
         !n.contains(":") && !n.contains("\t") && !n.contains("\n")),
       "column names must not contain ':', tab, or newline")
+    require(next.files.map(_.part.isDefined).distinct.size <= 1 &&
+        next.partCol.forall(_ => next.files.forall(_.part.isDefined)),
+      "a table's files are all partitioned or all unpartitioned")
     fs.mkdirs(new Path(s"$root/$LogDir"))
     val dest = manifestPath(root, next.version)
     if (fs.exists(dest)) return false // fast path; the real CAS is below
@@ -462,6 +551,7 @@ object TxLog {
         next.dropped.map(d => s"#drop=$d") ++
         next.retired.map(r => s"#retired=$r") ++
         next.schema.map(st => s"#schema=${st.json}").toSeq ++
+        next.partCol.map(p => s"#partition=$p").toSeq ++
         next.files.map(f =>
           s"${f.path}\t${f.rows}\t${f.minKey}\t${f.maxKey}" +
             f.part.map("\t" + _).getOrElse(""))).mkString("\n")
@@ -470,17 +560,31 @@ object TxLog {
     logStoreProvider(fs).commitExclusive(fs, tmp, dest)
   }
 
-  /** Commit the version after the latest, as `nextAt(latest)` (whose
-    * version field is set here), retrying from a fresh snapshot until
-    * no rival takes that version first. */
+  /** Every writer's retry loop: commit the version after the latest,
+    * retrying from a fresh snapshot until no rival takes it first. An
+    * attempt maps the snapshot to `Left(v)` (no commit, return `v`) or
+    * `Right((next, wrote))`, the next version (numbered here) and the
+    * data files the attempt wrote, which a lost race or a failed commit
+    * removes. Files written before the loop are the writer's own. */
   @tailrec
   private def commitLoop(spark: SparkSession, root: String,
-                         nextAt: TxSnapshot => TxSnapshot): Long = {
+                         epoch: Option[Long] = None)(
+      attempt: TxSnapshot => Either[Long, (TxSnapshot, Seq[TxFile])]): Long = {
     val fs = hfs(spark, root)
     val snap = snapshot(spark, root)
-    val v = snap.version + 1
-    if (tryCommit(fs, root, nextAt(snap).copy(version = v), None)) v
-    else commitLoop(spark, root, nextAt)
+    attempt(snap) match {
+      case Left(v) => v
+      case Right((next, wrote)) =>
+        val v = snap.version + 1
+        val won =
+          try tryCommit(fs, root, next.copy(version = v), epoch)
+          catch { case e: Throwable => remove(fs, root, wrote); throw e }
+        if (won) v
+        else {
+          remove(fs, root, wrote)
+          commitLoop(spark, root, epoch)(attempt)
+        }
+    }
   }
 
   /** Transactional append: new files + everything already committed.
@@ -490,7 +594,8 @@ object TxLog {
     * re-checked against EVERY retry snapshot, so a rename committed
     * while this append raced is detected, not silently resurrected
     * (physical storage names never change, so the already-written data
-    * files stay valid across retries). */
+    * files stay valid across retries). A partitioned table's rows are
+    * split by its recorded partition column. */
   def append(spark: SparkSession, root: String, df: DataFrame,
              keyCol: String): Long = {
     val snap0 = snapshot(spark, root)
@@ -498,38 +603,32 @@ object TxLog {
     val phys = toPhysical(df, snap0)
     // fail fast: a column-type conflict must not leave files in data/
     widen(spark, root, snap0, phys.schema)
-    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0))
-    commitLoop(spark, root, { snap =>
+    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0),
+      partColumn(snap0, None))
+    commitLoop(spark, root) { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
-      snap.copy(files = snap.files ++ newFiles,
-        schema = widen(spark, root, snap, phys.schema))
-    })
+      Right((snap.copy(files = snap.files ++ newFiles,
+        schema = widen(spark, root, snap, phys.schema)), Seq.empty))
+    }
   }
 
   /** Transactional full overwrite (the new version lists ONLY the new
     * files; old versions stay readable until vacuum). The new version's
     * schema is the new files' own, not widened: a column the new files
-    * drop leaves the table, and a column may change type. */
+    * drop leaves the table, and a column may change type. A partitioned
+    * table stays partitioned by its recorded column. */
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
                 keyCol: String): Long = {
     val snap0 = snapshot(spark, root)
     assertNoSchemaConflict(df.columns.toSeq, snap0)
     val phys = toPhysical(df, snap0)
-    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0))
-    commitLoop(spark, root, { snap =>
+    val newFiles = writeNew(spark, root, phys, physName(keyCol, snap0),
+      partColumn(snap0, None))
+    commitLoop(spark, root) { snap =>
       assertNoSchemaConflict(df.columns.toSeq, snap)
-      snap.copy(files = newFiles,
-        schema = Some(GraftSqlBridge.asNullable(phys.schema)))
-    })
-  }
-
-  /** Pad `df` with null columns for every field `other` has and it
-    * lacks — the additive-schema-evolution alignment both MERGE sides
-    * need when a batch adds (or a pruned read predates) a column. */
-  private def align(df: DataFrame, other: DataFrame): DataFrame = {
-    val mine = df.columns.toSet
-    other.schema.fields.filterNot(f => mine.contains(f.name))
-      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+      Right((snap.copy(files = newFiles,
+        schema = Some(GraftSqlBridge.asNullable(phys.schema))), Seq.empty))
+    }
   }
 
   /** Transactional MERGE (incoming wins on key match): reads and
@@ -552,25 +651,33 @@ object TxLog {
     * A lost commit race rewrites only the survivors; an attempt that
     * throws removes the files this merge wrote. A batch with no non-null
     * key is empty: its files are removed, nothing is committed and the
-    * current version is returned. */
+    * current version is returned.
+    *
+    * `partCol` (logical, cast to string) partitions the table at its
+    * first partitioned merge; later merges may omit it, and naming
+    * another column throws before any file is written. The key range is
+    * then taken per partition of the batch's files, so a batch touching
+    * 2 of 10 000 partitions rewrites only their overlapping files, in
+    * one manifest, and survivors anti-join on (partition, key): the
+    * same key in two partitions is two rows. */
   def merge(spark: SparkSession, root: String, incoming: DataFrame,
-            keyCol: String, epoch: Option[Long] = None): Long = {
+            keyCol: String, epoch: Option[Long] = None,
+            partCol: Option[String] = None): Long = {
     val fs = hfs(spark, root)
-    def remove(files: Seq[TxFile]): Unit =
-      files.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
-    def orRemove[A](files: Seq[TxFile])(body: => A): A =
-      try body catch { case e: Throwable => remove(files); throw e }
-    // the batch under `snap`'s column mapping; as in `append`, a type
-    // conflict fails before any file is written
-    def writeBatch(snap: TxSnapshot): (StructType, Seq[TxFile]) = {
+    // the batch under `snap`'s column mapping and partition column; as
+    // in `append`, a type conflict fails before any file is written
+    def writeBatch(
+        snap: TxSnapshot): (StructType, Option[String], Seq[TxFile]) = {
       assertNoSchemaConflict(incoming.columns.toSeq, snap)
+      val pc = partColumn(snap, partCol)
       val phys = toPhysical(incoming, snap)
       widen(spark, root, snap, phys.schema)
-      (phys.schema, writeData(spark, root, phys, physName(keyCol, snap)))
+      (phys.schema, pc,
+        writeData(spark, root, phys, physName(keyCol, snap), pc))
     }
-    val (schema0, batch0) = writeBatch(snapshot(spark, root))
-    if (batch0.forall(f => f.minKey > f.maxKey)) { // no non-null key
-      remove(batch0)
+    var (written, pc, batch) = writeBatch(snapshot(spark, root))
+    if (batch.forall(f => f.minKey > f.maxKey)) { // no non-null key
+      remove(fs, root, batch)
       return currentVersion(spark, root)
     }
     // Incremental epoch-scan state shared across retry attempts: the
@@ -596,8 +703,7 @@ object TxLog {
       }
       if (epochSeen.exists(_ >= e)) Some(cur) else None
     }
-    @tailrec def loop(written: StructType, batch: Seq[TxFile]): Long = {
-      val snap = snapshot(spark, root)
+    commitLoop(spark, root, epoch) { snap =>
       // DOUBLE-DEPLOYMENT guard, re-checked per ATTEMPT: mergeEpoch's
       // entry check only sees epochs committed before this call, but a
       // RACING writer (two watcher instances accidentally deployed on
@@ -610,51 +716,46 @@ object TxLog {
       // can't make the skip report a version one behind the epoch's.
       val skippedAt = epoch.flatMap(epochCommittedAt)
       if (skippedAt.isDefined) {
-        remove(batch)
-        skippedAt.get
-      } else {
+        remove(fs, root, batch)
+        Left(skippedAt.get)
+      } else try {
         // schema-conflict check runs per ATTEMPT: a rename/drop committed
         // while this merge raced fails the retry instead of resurrecting
         // the stale name as a "new" column. A rename can also map one of
-        // the batch's new columns to another stored name; files written
-        // under the old mapping must not commit, so the batch is written
-        // again under the new one.
-        val remapped = orRemove(batch) {
-          assertNoSchemaConflict(incoming.columns.toSeq, snap)
-          toPhysical(incoming, snap).columns.toSeq != written.fieldNames.toSeq
+        // the batch's new columns to another stored name, and a racing
+        // first partitioned merge can record the partition column; files
+        // written under the old mapping or partitioning must not commit,
+        // so the batch is written again under the new one.
+        assertNoSchemaConflict(incoming.columns.toSeq, snap)
+        val mapped = toPhysical(incoming, snap).columns.toSeq
+        if (mapped != written.fieldNames.toSeq ||
+            partColumn(snap, partCol) != pc) {
+          remove(fs, root, batch)
+          batch = Seq.empty
+          val (schema, p, rewritten) = writeBatch(snap)
+          written = schema; pc = p; batch = rewritten
         }
-        if (remapped) {
-          remove(batch)
-          val (schema, rewritten) = writeBatch(snap)
-          loop(schema, rewritten)
-        } else {
-          val physKey = physName(keyCol, snap)
-          val keyed = batch.filter(f => f.minKey <= f.maxKey)
-          val (lo, hi) = (keyed.map(_.minKey).min, keyed.map(_.maxKey).max)
-          val (touched, untouched) =
-            snap.files.partition(f => f.maxKey >= lo && f.minKey <= hi)
-          val (schema, survivors) = orRemove(batch) {
-            val schema = widen(spark, root, snap, written)
-            val batchKeys = spark.read.schema(written)
-              .parquet(batch.map(f => s"$root/${f.path}"): _*).select(physKey)
-            (schema,
-              if (touched.isEmpty) Seq.empty
-              else writeData(spark, root,
-                dropRetired(scan(spark, root, touched, snap), snap)
-                  .join(batchKeys, Seq(physKey), "left_anti"), physKey))
-          }
-          if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-              files = untouched ++ survivors ++ batch, schema = schema),
-              epoch)) {
-            snap.version + 1
-          } else {
-            remove(survivors)
-            loop(written, batch)
-          }
-        }
-      }
+        val physKey = physName(keyCol, snap)
+        val ids = pc.toSeq :+ physKey
+        val ranges = batch.filter(f => f.minKey <= f.maxKey).groupBy(_.part)
+          .map { case (p, b) =>
+            p -> ((b.map(_.minKey).min, b.map(_.maxKey).max)) }
+        val (touched, untouched) = snap.files.partition(f =>
+          ranges.get(f.part).exists { case (lo, hi) =>
+            f.maxKey >= lo && f.minKey <= hi })
+        val schema = widen(spark, root, snap, written)
+        val batchIds = spark.read.schema(written)
+          .parquet(batch.map(f => s"$root/${f.path}"): _*)
+          .select(ids.map(col): _*)
+        val survivors =
+          if (touched.isEmpty) Seq.empty
+          else writeData(spark, root,
+            dropRetired(scan(spark, root, touched, snap), snap)
+              .join(batchIds, ids, "left_anti"), physKey, pc)
+        Right((snap.copy(files = untouched ++ survivors ++ batch,
+          schema = schema, partCol = pc), survivors))
+      } catch { case e: Throwable => remove(fs, root, batch); throw e }
     }
-    loop(schema0, batch0)
   }
 
   /** EXACTLY-ONCE micro-batch MERGE: the batch's epoch id is stamped
@@ -669,103 +770,15 @@ object TxLog {
     * re-run against every retry snapshot inside [[merge]], so a writer
     * that loses the commit CAS to a racer carrying the same epoch
     * skips instead of re-delivering (WatcherSpec races two live
-    * watchers through this path). Returns the table version holding
-    * the epoch (current version when skipped). */
+    * watchers through this path). `partCol` is [[merge]]'s. Returns
+    * the table version holding the epoch (current version when
+    * skipped). */
   def mergeEpoch(spark: SparkSession, root: String, incoming: DataFrame,
-                 keyCol: String, epochId: Long): Long =
+                 keyCol: String, epochId: Long,
+                 partCol: Option[String] = None): Long =
     if (lastEpoch(spark, root).exists(_ >= epochId))
       currentVersion(spark, root) // replayed epoch: already committed
-    else merge(spark, root, incoming, keyCol, Some(epochId))
-
-  /** PARTITION-AWARE transactional MERGE for tables whose rows carry a
-    * partition column: row identity is (partition, key) — a row never
-    * moves partitions — and candidate files are pruned by PARTITION
-    * VALUE first, then by key-range overlap against the batch's
-    * PER-PARTITION key bounds. A micro-batch that touches 2 of 10 000
-    * partitions therefore reads and rewrites only those 2 partitions'
-    * key-overlapping files; everything else carries into the new
-    * version untouched — while the commit stays ONE atomic manifest
-    * publication across all touched partitions (per-partition tables
-    * would need a cross-table transaction for the same guarantee).
-    * Every data file holds exactly one partition value (the Hive-layout
-    * invariant, recorded in the manifest rather than the directory
-    * tree), so partitioned and unpartitioned files never mix in one
-    * table. */
-  def mergePartitioned(spark: SparkSession, root: String,
-                       incoming: DataFrame, keyCol: String, partCol: String,
-                       epoch: Option[Long] = None): Long = {
-    val fs = hfs(spark, root)
-    // per-partition key bounds of the batch: the two-level pruning index
-    val boundRows = incoming
-      .groupBy(col(partCol).cast("string").as("__p"))
-      .agg(min(col(keyCol).cast("long")).as("__mn"),
-        max(col(keyCol).cast("long")).as("__mx"))
-      .collect()
-    if (boundRows.isEmpty) return currentVersion(spark, root)
-    require(boundRows.forall(r => !r.isNullAt(0)),
-      s"null $partCol in batch — partition values must be non-null")
-    val bounds = boundRows.map(r =>
-      r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    require(bounds.keysIterator.forall(p =>
-        !p.contains("\t") && !p.contains("\n")),
-      "partition values must not contain tab or newline")
-    @tailrec def loop(): Long = {
-      val snap = snapshot(spark, root)
-      // same per-attempt double-deployment guard as [[merge]]: a CAS
-      // loser re-reads the log and skips an epoch a racing writer has
-      // meanwhile committed, instead of re-delivering the batch
-      if (epoch.exists(e => lastEpoch(spark, root).exists(_ >= e)))
-        snap.version
-      else {
-        require(snap.files.forall(_.part.isDefined),
-          s"$root holds unpartitioned files — not a partitioned table")
-        assertNoSchemaConflict(incoming.columns.toSeq, snap)
-        val physKey = physName(keyCol, snap)
-        val physPart = physName(partCol, snap)
-        val inc = toPhysical(incoming, snap)
-        val (touched, untouched) = snap.files.partition(f =>
-          f.part.exists(p => bounds.get(p).exists { case (mn, mx) =>
-            f.maxKey >= mn && f.minKey <= mx }))
-        val existing =
-          if (touched.isEmpty) inc.limit(0)
-          else dropRetired(scan(spark, root, touched, snap), snap)
-        val upserted = Merge.upsert(align(existing, inc),
-          align(inc, existing), Seq(physPart, physKey))
-        val schema = widen(spark, root, snap, upserted.schema)
-        val merged = upserted.persist()
-        // one write per touched partition so each data file carries a
-        // single partition value — batches touch few partitions (the
-        // point of partitioning), so this loop is micro-batch-sized
-        val newFiles =
-          try bounds.keys.toSeq.sorted.flatMap { p =>
-            writeData(spark, root,
-                merged.filter(col(physPart).cast("string") === p), physKey)
-              .map(_.copy(part = Some(p)))
-          } finally merged.unpersist()
-        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-            files = untouched ++ newFiles, schema = schema), epoch)) {
-          snap.version + 1
-        } else {
-          newFiles.foreach(f =>
-            fs.delete(new Path(s"$root/${f.path}"), false))
-          loop()
-        }
-      }
-    }
-    loop()
-  }
-
-  /** EXACTLY-ONCE partitioned micro-batch MERGE — [[mergeEpoch]]'s
-    * guarantee over a partitioned table: the epoch tag and ALL touched
-    * partitions' rewrites publish in one atomic manifest commit, and a
-    * replayed epoch is skipped from the log. */
-  def mergeEpochPartitioned(spark: SparkSession, root: String,
-                            incoming: DataFrame, keyCol: String,
-                            partCol: String, epochId: Long): Long =
-    if (lastEpoch(spark, root).exists(_ >= epochId))
-      currentVersion(spark, root) // replayed epoch: already committed
-    else mergePartitioned(spark, root, incoming, keyCol, partCol,
-      Some(epochId))
+    else merge(spark, root, incoming, keyCol, Some(epochId), partCol)
 
   /** Manifest-pruned read of selected partitions: only files whose
     * recorded partition value is in `parts` are scanned — partition
@@ -792,50 +805,46 @@ object TxLog {
     * costs the matching files, not the table. Files left empty by the
     * delete simply drop out of the manifest. Conflict-retrying like
     * [[merge]]; old versions still read the deleted rows (time travel)
-    * until vacuum. Returns the new version (current if nothing
-    * matched). */
+    * until vacuum. A partitioned table's survivors keep their
+    * partition. Returns the new version (current if nothing matched). */
   def delete(spark: SparkSession, root: String, keyCol: String,
-             predicate: org.apache.spark.sql.Column): Long = {
-    val fs = hfs(spark, root)
-    @tailrec def loop(): Long = {
-      val snap = snapshot(spark, root)
-      if (snap.files.isEmpty) return snap.version
-      // predicate references LOGICAL names → evaluate on the logical view
-      val withFile = toLogical(scan(spark, root, snap.files, snap), snap)
-        .withColumn("__f", input_file_name())
-      // absolute URI → the manifest's root-relative path
-      val hitUris = withFile.filter(predicate)
-        .select(col("__f")).distinct().collect().map(_.getString(0))
-      val hitNames = hitUris
-        .map(u => new Path(new java.net.URI(u)).getName).toSet
-      val (touched, untouched) =
-        snap.files.partition(f => hitNames.contains(new Path(f.path).getName))
-      if (touched.isEmpty) return snap.version
-      // SQL DELETE semantics: remove rows where the predicate is TRUE,
-      // KEEP rows where it is FALSE **or NULL**. `filter(!predicate)`
-      // would drop NULL-evaluating rows too — and schema evolution makes
-      // NULLs routine (a delete on a later-added column must not destroy
-      // co-located legacy rows whose column is NULL).
-      // Survivors round-trip logical (filter) → physical (storage);
-      // dropped columns fall away in toLogical, so the rewrite purges
-      // them from the touched files.
-      val survivors = toPhysical(
-        toLogical(scan(spark, root, touched, snap), snap)
-          .filter(!coalesce(predicate, lit(false))), snap)
-      val schema = widen(spark, root, snap, survivors.schema)
-      val newFiles =
-        if (survivors.isEmpty) Seq.empty
-        else writeData(spark, root, survivors, physName(keyCol, snap))
-      if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-          files = untouched ++ newFiles, schema = schema), None)) {
-        snap.version + 1
-      } else {
-        newFiles.foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
-        loop()
+             predicate: org.apache.spark.sql.Column): Long =
+    commitLoop(spark, root) { snap =>
+      if (snap.files.isEmpty) Left(snap.version)
+      else {
+        // predicate references LOGICAL names → evaluate on the logical view
+        val withFile = toLogical(scan(spark, root, snap.files, snap), snap)
+          .withColumn("__f", input_file_name())
+        // absolute URI → the manifest's root-relative path
+        val hitUris = withFile.filter(predicate)
+          .select(col("__f")).distinct().collect().map(_.getString(0))
+        val hitNames = hitUris
+          .map(u => new Path(new java.net.URI(u)).getName).toSet
+        val (touched, untouched) =
+          snap.files.partition(f => hitNames.contains(new Path(f.path).getName))
+        if (touched.isEmpty) Left(snap.version)
+        else {
+          // SQL DELETE semantics: remove rows where the predicate is TRUE,
+          // KEEP rows where it is FALSE **or NULL**. `filter(!predicate)`
+          // would drop NULL-evaluating rows too — and schema evolution
+          // makes NULLs routine (a delete on a later-added column must not
+          // destroy co-located legacy rows whose column is NULL).
+          // Survivors round-trip logical (filter) → physical (storage);
+          // dropped columns fall away in toLogical, so the rewrite purges
+          // them from the touched files.
+          val survivors = toPhysical(
+            toLogical(scan(spark, root, touched, snap), snap)
+              .filter(!coalesce(predicate, lit(false))), snap)
+          val schema = widen(spark, root, snap, survivors.schema)
+          val newFiles =
+            if (survivors.isEmpty) Seq.empty
+            else writeData(spark, root, survivors, physName(keyCol, snap),
+              partColumn(snap, None))
+          Right((snap.copy(files = untouched ++ newFiles, schema = schema),
+            newFiles))
+        }
       }
     }
-    loop()
-  }
 
   /** Small-file COMPACTION (the OPTIMIZE of this format): bin-pack
     * every file under `smallRows` into ~`targetRows`-sized files,
@@ -847,15 +856,14 @@ object TxLog {
     * lists the repacked files plus every untouched large file; a
     * concurrent writer that commits first wins and compaction retries
     * against the fresh snapshot (its conflict loses nothing but work).
-    * Old versions still time-travel until [[vacuum]]. */
+    * Old versions still time-travel until [[vacuum]]. A partitioned
+    * table's output files are split by partition as well. */
   def compact(spark: SparkSession, root: String, keyCol: String,
               smallRows: Long = 100000L,
-              targetRows: Long = 1000000L): Long = {
-    val fs = hfs(spark, root)
-    @tailrec def loop(): Long = {
-      val snap = snapshot(spark, root)
+              targetRows: Long = 1000000L): Long =
+    commitLoop(spark, root) { snap =>
       val (small, big) = snap.files.partition(_.rows < smallRows)
-      if (small.size <= 1) snap.version // nothing to gain
+      if (small.size <= 1) Left(snap.version) // nothing to gain
       else {
         val totalRows = small.map(_.rows).sum
         val nParts = math.max(1L, (totalRows + targetRows - 1) / targetRows)
@@ -867,19 +875,11 @@ object TxLog {
         val repacked = dropRetired(scan(spark, root, small, snap), snap)
           .repartitionByRange(nParts.toInt, col(physKey))
         val schema = widen(spark, root, snap, repacked.schema)
-        val newFiles = writeData(spark, root, repacked, physKey)
-        if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-            files = big ++ newFiles, schema = schema), None)) {
-          snap.version + 1
-        } else {
-          newFiles.foreach(f =>
-            fs.delete(new Path(s"$root/${f.path}"), false))
-          loop()
-        }
+        val newFiles = writeData(spark, root, repacked, physKey,
+          partColumn(snap, None))
+        Right((snap.copy(files = big ++ newFiles, schema = schema), newFiles))
       }
     }
-    loop()
-  }
 
   /** METADATA-ONLY column rename via name-based column mapping (the
     * Delta column-mapping / Iceberg name-evolution idea): no data file
@@ -897,9 +897,7 @@ object TxLog {
   def renameColumn(spark: SparkSession, root: String, from: String,
                    to: String): Long = {
     require(from != to, s"rename target equals source '$from'")
-    val fs = hfs(spark, root)
-    @tailrec def loop(): Long = {
-      val snap = snapshot(spark, root)
+    commitLoop(spark, root) { snap =>
       val logicalCols: Set[String] =
         if (snap.files.isEmpty) Set.empty
         else read(spark, root, Some(snap.version)).columns.toSet
@@ -919,12 +917,9 @@ object TxLog {
         else snap.renames :+ ((from, to))
       val newRetired =
         (snap.retired.filterNot(_ == to) :+ from).distinct
-      if (tryCommit(fs, root, snap.copy(version = snap.version + 1,
-          renames = newRenames, retired = newRetired), None))
-        snap.version + 1
-      else loop()
+      Right((snap.copy(renames = newRenames, retired = newRetired),
+        Seq.empty))
     }
-    loop()
   }
 
   /** METADATA-ONLY column drop: the column's stored name joins the
@@ -934,26 +929,18 @@ object TxLog {
     * batch still carrying it fails the schema-conflict check rather
     * than re-creating the column over un-purged files. Old versions
     * still read the column via time travel until vacuum. */
-  def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    val fs = hfs(spark, root)
-    @tailrec def loop(): Long = {
-      val snap = snapshot(spark, root)
+  def dropColumn(spark: SparkSession, root: String, name: String): Long =
+    commitLoop(spark, root) { snap =>
       if (snap.files.nonEmpty)
         require(read(spark, root, Some(snap.version)).columns.contains(name),
           s"no column '$name' at $root v${snap.version}")
       val phys = snap.renames.find(_._2 == name).map(_._1).getOrElse(name)
-      val next = snap.copy(version = snap.version + 1,
-        renames = snap.renames.filterNot(_._2 == name),
+      Right((snap.copy(renames = snap.renames.filterNot(_._2 == name),
         dropped = (snap.dropped :+ phys).distinct,
         retired =
           if (phys != name) (snap.retired :+ name).distinct
-          else snap.retired)
-      if (tryCommit(fs, root, next, None))
-        snap.version + 1
-      else loop()
+          else snap.retired), Seq.empty))
     }
-    loop()
-  }
 
   /** Drop data files referenced by NO manifest among the kept versions
     * (the last `keepVersions`), then drop the older manifests. Bounds

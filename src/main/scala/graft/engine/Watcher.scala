@@ -106,18 +106,19 @@ object Watcher {
     *
     * `process` contract: `files` is a lazy `binaryFile` scan (`path`,
     * `content`, ...), and `process` runs on the driver inside
-    * [[pollOnce]], so it may run jobs of its own. The unpartitioned
-    * TxLog sink reads the frame it returns once: [[TxLog.merge]] writes
-    * the batch first and takes its key range from the written files.
-    * The other sinks read it more than once (the partitioned TxLog
-    * merge takes per-partition key bounds, then writes; the parquet
-    * upserts join on its keys, then union its rows), so there a
+    * [[pollOnce]], so it may run jobs of its own. The TxLog sink,
+    * partitioned or not, reads the frame it returns once:
+    * [[TxLog.merge]] writes the batch first and takes its key ranges
+    * from the written files. The parquet sinks read it more than once
+    * (the upserts join on its keys, then union its rows), so there a
     * `process` whose rows are costly to compute, such as text
     * extraction, should return them materialized. */
   /** @param partitionCol when set, the warehouse table is stored
-    *   partitioned by this (process-emitted) column and batches are
-    *   merged via [[Merge.upsertPartitioned]] — only batch-affected
-    *   partitions are read and rewritten, the warehouse-scale sink.
+    *   partitioned by this (process-emitted) column and only
+    *   batch-affected partitions are read and rewritten, the
+    *   warehouse-scale sink: the parquet table merges through
+    *   [[Merge.upsertPartitioned]], and a TxLog table (`useTxLog`)
+    *   records the column in its manifest at the first batch.
     * @param incremental when true, only CHANGED files (added/modified;
     *   all files on the first poll) are processed per batch instead of
     *   the reference's reprocess-all T3 semantics — the natural partner
@@ -138,9 +139,10 @@ object Watcher {
     *   from the log and skipped). Upload-id recovery reads the LOG,
     *   not the rows, so it survives batches whose rows were later
     *   overwritten. Single numeric key (the TxLog contract). Combines
-    *   with `partitionCol`: the merge then prunes files by (partition,
-    *   key-range) via [[TxLog.mergeEpochPartitioned]] and all touched
-    *   partitions commit in the same atomic manifest.
+    *   with `partitionCol`, passed to [[TxLog.mergeEpoch]]: the merge
+    *   then prunes files by (partition, key-range), row identity is
+    *   (partition, key), and all touched partitions commit in the same
+    *   atomic manifest.
     */
   final class IncrementalLoader(
       spark: SparkSession,
@@ -287,17 +289,11 @@ object Watcher {
       * warehouse under the configured mode (TxLog exactly-once /
       * partition-pruned / plain upsert). */
     private def commitBatch(incoming: DataFrame, nextId: Long): Unit =
-      if (useTxLog) {
-        // exactly-once: epoch (=uploadId) rides in the manifest commit;
-        // with a partition column the merge prunes by (partition,
-        // key-range) and all touched partitions commit atomically
-        partitionCol match {
-          case Some(pc) => TxLog.mergeEpochPartitioned(
-            spark, tablePath, incoming, keys.head, pc, nextId)
-          case None =>
-            TxLog.mergeEpoch(spark, tablePath, incoming, keys.head, nextId)
-        }
-      } else partitionCol match {
+      if (useTxLog)
+        // exactly-once: epoch (=uploadId) rides in the manifest commit
+        TxLog.mergeEpoch(spark, tablePath, incoming, keys.head, nextId,
+          partitionCol)
+      else partitionCol match {
         case Some(pc) =>
           // partition-scoped sink: only batch-affected partitions are
           // read, merged and rewritten

@@ -47,6 +47,23 @@ class ContractSpec extends SparkSpec {
     assert(builders === Seq("graft/Session.scala"))
   }
 
+  test("TxLog has one data write and one commit call: every writer goes " +
+    "through writeData and commitLoop, so none can bypass the partition " +
+    "split or the retry loop's cleanup") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/engine/TxLog.scala"))
+    // the name of the method whose body holds offset `i`
+    def enclosing(i: Int): String =
+      "def (\\w+)".r.findAllMatchIn(src.substring(0, i)).toSeq.last.group(1)
+    // a DataFrameWriter: `.write` not followed by `(` (an output stream's)
+    val writes = "\\.write(?![\\w(])".r.findAllMatchIn(src)
+      .map(m => enclosing(m.start)).toSeq
+    assert(writes === Seq("writeData"))
+    val commits = "(?<!def )tryCommit\\(".r.findAllMatchIn(src)
+      .map(m => enclosing(m.start)).toSeq
+    assert(commits === Seq("commitLoop"))
+  }
+
   /** Builds plans under ADVERSE statistics: auto-broadcast disabled, so
     * a join is broadcast only if the CODE says `broadcast(...)`. Round
     * 12 proved the favorable-stats gate is run-order-dependent: q368's

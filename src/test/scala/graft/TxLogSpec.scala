@@ -23,6 +23,13 @@ class TxLogSpec extends SparkSpec {
   private def scored(ids: Range) =
     ids.map(i => (i.toLong, s"new$i", i * 1.5)).toDF("id", "v", "score")
 
+  private def part(ids: Range, p: String, tag: String) =
+    ids.map(i => (i.toLong, p, tag)).toDF("id", "pc", "v")
+
+  private def dataEntries(root: String): Set[String] =
+    Files.list(Paths.get(root, "data")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+
   /** The jobs `body` launches, each as true iff it ran outside any SQL
     * execution. Every TxLog action is a Dataset action and runs inside
     * one; the job parquet schema inference launches to read footers
@@ -386,12 +393,10 @@ class TxLogSpec extends SparkSpec {
     "row identity, epochs replay-skip, readPartitions prunes from the " +
     "manifest") {
     val root = freshRoot()
-    def part(ids: Range, p: String, tag: String) =
-      ids.map(i => (i.toLong, p, tag)).toDF("id", "pc", "v")
-    val v1 = TxLog.mergePartitioned(spark, root,
+    val v1 = TxLog.merge(spark, root,
       part(0 until 50, "a", "t0")
         .union(part(0 until 50, "b", "t0"))
-        .union(part(0 until 50, "c", "t0")), "id", "pc")
+        .union(part(0 until 50, "c", "t0")), "id", partCol = Some("pc"))
     assert(v1 === 1L)
     val before = TxLog.snapshot(spark, root)
     assert(before.files.forall(_.part.isDefined))
@@ -402,7 +407,7 @@ class TxLogSpec extends SparkSpec {
     // 100-109 to partition b (no key overlap with b's existing files)
     val batch = part(10 until 20, "a", "t1")
       .union(part(100 until 110, "b", "t1"))
-    val v2 = TxLog.mergeEpochPartitioned(spark, root, batch, "id", "pc", 7L)
+    val v2 = TxLog.mergeEpoch(spark, root, batch, "id", 7L, Some("pc"))
     val after = TxLog.snapshot(spark, root)
     // partition c: not in the batch — every file carried by path
     assert(cFiles.subsetOf(after.files.map(_.path).toSet))
@@ -417,14 +422,88 @@ class TxLogSpec extends SparkSpec {
       .filter(col("count") > 1).count() === 0)
     assert(df.filter(col("id") === 10L).count() === 3)
     // epoch replay: detected from the log, no version bump
-    assert(TxLog.mergeEpochPartitioned(spark, root, batch, "id", "pc", 7L)
-      === v2)
+    assert(TxLog.mergeEpoch(spark, root, batch, "id", 7L, Some("pc")) === v2)
     assert(TxLog.currentVersion(spark, root) === v2)
     assert(TxLog.lastEpoch(spark, root) === Some(7L))
     // manifest-served partition pruning
     val pb = TxLog.readPartitions(spark, root, Set("b"))
     assert(pb.count() === 60)
     assert(pb.select("pc").distinct().as[String].collect().toSeq === Seq("b"))
+  }
+
+  test("every writer keeps a partitioned table's partition values, and " +
+    "a merge without partCol keeps (partition, key) as the row identity") {
+    def fresh(): String = {
+      val root = freshRoot()
+      TxLog.merge(spark, root, part(0 until 60, "a", "t0")
+        .union(part(0 until 50, "b", "t0")), "id", partCol = Some("pc"))
+      root
+    }
+    def contents(df: DataFrame) =
+      df.select("id", "pc", "v").collect().map(_.toString).toSeq.sorted
+    val writes: Seq[(String, String => Any)] = Seq(
+      "append" -> (r => TxLog.append(spark, r, part(100 until 110, "a", "ap")
+        .union(part(100 until 105, "c", "ap")), "id")),
+      "overwrite" -> (r => TxLog.overwrite(spark, r, part(0 until 30, "a", "ow")
+        .union(part(0 until 20, "b", "ow")), "id")),
+      "delete" -> (r => TxLog.delete(spark, r, "id", col("id") === 5L)),
+      "compact" -> (r => TxLog.compact(spark, r, "id", smallRows = 1000L,
+        targetRows = 1000L)),
+      "merge" -> (r => TxLog.merge(spark, r, part(5 until 6, "a", "m"), "id")))
+    for ((what, write) <- writes) {
+      val root = fresh()
+      write(root)
+      val snap = TxLog.snapshot(spark, root)
+      assert(snap.version === 2L && snap.partCol === Some("pc"), what)
+      // every file is listed with the one value its rows hold
+      for (f <- snap.files) assert(spark.read.parquet(s"$root/${f.path}")
+        .select("pc").distinct().as[String].collect().toSeq === f.part.toSeq,
+        s"$what: $f")
+      assert(contents(TxLog.readPartitions(spark, root, Set("a"))) ===
+        contents(TxLog.read(spark, root).filter(col("pc") === "a")), what)
+      assert(TxLog.merge(spark, root, part(200 until 201, "b", "later"), "id",
+        partCol = Some("pc")) === 3L, what)
+    }
+    // the merge above, without partCol, replaced (5, a) only
+    val root = fresh()
+    TxLog.merge(spark, root, part(5 until 6, "a", "m"), "id")
+    assert(TxLog.read(spark, root).filter(col("id") === 5L).select("pc", "v")
+      .as[(String, String)].collect().toSet === Set(("a", "m"), ("b", "t0")))
+    // another partition column throws before any file is written
+    val before = dataEntries(root)
+    val e = intercept[IllegalArgumentException](TxLog.merge(spark, root,
+      part(7 until 8, "a", "x"), "id", partCol = Some("v")))
+    assert(e.getMessage.contains("partitioned by 'pc'"), e.getMessage)
+    assert(TxLog.currentVersion(spark, root) === 2L)
+    assert(dataEntries(root) === before)
+  }
+
+  test("partition values round-trip whatever their characters and " +
+    "length; a null value or one holding tab or newline is rejected, " +
+    "leaving the version and data/ unchanged") {
+    val root = freshRoot()
+    val values = Seq("", "x/y", "k=v", "50%", ":c", "é",
+      "__HIVE_DEFAULT_PARTITION__", "p" * 300, "q" * 3000)
+    TxLog.merge(spark, root, values.zipWithIndex.map { case (p, i) =>
+      (i.toLong, p, s"t$i") }.toDF("id", "pc", "v"), "id", partCol = Some("pc"))
+    assert(TxLog.snapshot(spark, root).files.flatMap(_.part).sorted
+      === values.sorted)
+    for ((p, i) <- values.zipWithIndex)
+      assert(TxLog.readPartitions(spark, root, Set(p))
+        .as[(Long, String, String)].collect().toSeq
+        === Seq((i.toLong, p, s"t$i")))
+    val before = dataEntries(root)
+    for (bad <- Seq(None, Some("a\tb"), Some("a\nb"))) {
+      val batch = Seq((1L, bad, "x")).toDF("id", "pc", "v")
+      for (write <- Seq(
+          () => TxLog.merge(spark, root, batch, "id"),
+          () => TxLog.append(spark, root, batch, "id"))) {
+        val e = intercept[IllegalArgumentException](write())
+        assert(e.getMessage.contains("partition values must"), e.getMessage)
+        assert(TxLog.currentVersion(spark, root) === 1L)
+        assert(dataEntries(root) === before)
+      }
+    }
   }
 
   test("LogStore seam: the DML cycle runs identically under LocalLink " +
@@ -762,12 +841,14 @@ class TxLogSpec extends SparkSpec {
     val cols = TxLog.read(spark, root).columns.toSeq
     val before = contents(TxLog.read(spark, root))
     // rewrite every manifest as an older writer left it
-    Files.list(Paths.get(root, "_txlog")).iterator().asScala
-      .filter(_.toString.endsWith(".manifest")).foreach { p =>
-        val kept = Files.readAllLines(p).asScala
-          .filterNot(_.startsWith("#schema="))
-        Files.write(p, kept.mkString("\n").getBytes("UTF-8"))
-      }
+    def strip(root: String, line: String): Unit =
+      Files.list(Paths.get(root, "_txlog")).iterator().asScala
+        .filter(_.toString.endsWith(".manifest")).foreach { p =>
+          val kept = Files.readAllLines(p).asScala
+            .filterNot(_.startsWith(line))
+          Files.write(p, kept.mkString("\n").getBytes("UTF-8"))
+        }
+    strip(root, "#schema=")
     assert(TxLog.snapshot(spark, root).schema === None)
     assert(TxLog.read(spark, root).columns.toSeq === cols)
     assert(contents(TxLog.read(spark, root)) === before)
@@ -787,6 +868,22 @@ class TxLogSpec extends SparkSpec {
       case r => r
     })
     assert(jobsDuring(TxLog.read(spark, root)).isEmpty)
+    // files with partition values under a manifest that records no
+    // partition column: the table reads, and a merge given the column
+    // records it
+    val parted = freshRoot()
+    TxLog.merge(spark, parted, part(0 until 3, "a", "x")
+      .union(part(0 until 3, "b", "x")), "id", partCol = Some("pc"))
+    strip(parted, "#partition=")
+    assert(TxLog.snapshot(spark, parted).partCol === None)
+    assert(TxLog.read(spark, parted).count() === 6)
+    assert(TxLog.readPartitions(spark, parted, Set("b")).count() === 3)
+    TxLog.merge(spark, parted, part(1 until 2, "b", "y"), "id",
+      partCol = Some("pc"))
+    assert(TxLog.snapshot(spark, parted).partCol === Some("pc"))
+    assert(TxLog.read(spark, parted).filter(col("id") === 1L)
+      .select("pc", "v").as[(String, String)].collect().toSet
+      === Set(("a", "x"), ("b", "y")))
   }
 
   /** Each manifest entry's (rows, minKey, maxKey) at every version of
@@ -882,6 +979,26 @@ class TxLogSpec extends SparkSpec {
     val df = TxLog.read(spark, root)
     assert(df.count() === 100)
     assert(df.filter(col("id") >= 40 && col("v") =!= "m").count() === 0)
+    // a batch spanning two partitions of a partitioned table: one write
+    // of single-partition files, then the survivors rewrite
+    val parted = freshRoot()
+    def pc(c: org.apache.spark.sql.Column) =
+      when(c % 2 === 0, "x").otherwise("y").as("pc")
+    TxLog.merge(spark, parted, spark.range(0L, 50L)
+      .select(col("id"), lit("a").as("v"), pc(col("id"))), "id",
+      partCol = Some("pc"))
+    calls.reset()
+    val jobs = jobExecutions(assert(TxLog.merge(spark, parted,
+      spark.range(40L, 100L, 1L, 3).select(counted(col("id")).as("id"),
+        lit("m").as("v"), pc(col("id"))), "id") === 2L))
+    assert(calls.value === 60L)
+    assert(jobs.size < 7 && jobs.distinct.size === 2 && !jobs.contains(None),
+      jobs)
+    val p = TxLog.read(spark, parted)
+    assert(p.count() === 100)
+    assert(p.filter(col("id") >= 40 && col("v") =!= "m").count() === 0)
+    assert(p.filter(col("pc") =!= when(col("id") % 2 === 0, "x")
+      .otherwise("y")).count() === 0)
   }
 
   test("the key contract fails loudly: an all-null key and a string key " +
@@ -987,6 +1104,22 @@ class TxLogSpec extends SparkSpec {
           s"seed $seed, $overlap overlap")
       }
     }
+    // a partitioned table holding keys 0-99 in both partitions: the row
+    // identity is (partition, key), so the expected result is the upsert
+    // over both columns
+    val root = freshRoot()
+    TxLog.merge(spark, root, part(0 until 100, "a", "t0")
+      .union(part(0 until 100, "b", "t0")), "id", partCol = Some("pc"))
+    val rnd = new scala.util.Random(4)
+    val batch = ((5L, "a", "m") +: (5L, "b", "m") +: Seq.fill(30)(
+      (rnd.nextInt(150).toLong, if (rnd.nextBoolean()) "a" else "b", "r")))
+      .toDF("id", "pc", "v")
+    def rows(df: DataFrame) =
+      df.select("id", "pc", "v").collect().map(_.toString).toSeq.sorted
+    val want = rows(Merge.upsert(TxLog.read(spark, root), batch,
+      Seq("pc", "id")))
+    assert(TxLog.merge(spark, root, batch, "id") === 2L)
+    assert(rows(TxLog.read(spark, root)) === want)
   }
 
   test("a merge whose survivors rewrite throws leaves the version " +

@@ -384,8 +384,7 @@ class WatcherSpec extends SparkSpec {
       .filter(col("count") > 1).count() === 0)
     // replay of the committed epoch: skipped, no version bump
     val vNow = TxLog.currentVersion(spark, wh)
-    assert(TxLog.mergeEpochPartitioned(spark, wh, t, "doc_id", "ext", 3L)
-      === vNow)
+    assert(TxLog.mergeEpoch(spark, wh, t, "doc_id", 3L, Some("ext")) === vNow)
     // manifest-pruned partition read
     assert(TxLog.readPartitions(spark, wh, Set("pdf")).count() === 2)
     assert(TxLog.lastEpoch(spark, wh) === Some(3L))
