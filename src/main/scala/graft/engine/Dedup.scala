@@ -30,13 +30,32 @@ object Dedup {
       .drop("__graft_rn")
   }
 
-  /** P5/A2 — dense 1-based row numbering by `order`, without a global
-    * single-partition sort: sort within partitions, then add per-partition
-    * offsets computed from partition sizes (zipWithIndex-style, but staying
-    * in the DataFrame API). `order` must be globally monotone across
-    * partitions for the numbering to equal a global `row_number()` —
-    * callers get that by range-partitioning on `order` first. */
-  def numberRows(df: DataFrame, order: Column, as: String, partitions: Int = 0): DataFrame = {
+  /** P5/A2 — dense 1-based row numbering by `order`. By default there is
+    * no global single-partition sort: sort within partitions, then add
+    * per-partition offsets computed from partition sizes (zipWithIndex-
+    * style, but staying in the DataFrame API). `order` must be globally
+    * monotone across partitions for the numbering to equal a global
+    * `row_number()` — callers get that by range-partitioning on `order`
+    * first.
+    *
+    * `partitions = 1` is the form for a batch the caller knows to be
+    * small: `coalesce(1)`, a sort within that one partition and
+    * `monotonically_increasing_id() + 1`. It has no exchange and no
+    * checkpoint, building it runs no job, and the numbering runs inside
+    * the consumer's own job, as one task. The returned frame is lazy, so
+    * every read recomputes `df` and the numbering: give it a
+    * deterministic input, such as a checkpoint, and an `order` that is
+    * unique, or two reads may number tied rows differently. */
+  def numberRows(df: DataFrame, order: Column, as: String, partitions: Int = 0): DataFrame =
+    if (partitions == 1)
+      df.coalesce(1).sortWithinPartitions(order)
+        .withColumn(as, monotonically_increasing_id() + 1)
+    else numberRanged(df, order, as, partitions)
+
+  /** [[numberRows]] over `partitions` range partitions (0: as many as
+    * the range exchange plans), numbered in one counted checkpoint. */
+  private def numberRanged(df: DataFrame, order: Column, as: String,
+                           partitions: Int): DataFrame = {
     val ranged = if (partitions > 0) df.repartitionByRange(partitions, order)
                  else df.repartitionByRange(order)
     // Phase 1 — local rank WITHOUT a window: after the explicit local
@@ -93,7 +112,7 @@ object Dedup {
     val offs = new Array[Long](perPart.length)
     var acc = 0L
     var p = 0
-    while (p < perPart.length) { offs(p) = acc; acc += perPart(p); p += 1 }
+    while (p < perPart.length) { offs(p) = acc; acc += perPart(p)._1; p += 1 }
     shared
       .withColumn(as, col("__graft_local") +
         element_at(typedlit(offs.toSeq), col("__graft_pid") + 1))

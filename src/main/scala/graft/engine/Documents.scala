@@ -59,9 +59,16 @@ object Documents {
 
   /** P3/P6 — final 19-column DWH_DOCUMENT projection with deterministic
     * path-order numbering (only successfully parsed+resolved docs consume
-    * ids, like the reference's on-success counter `exo_2.py:282`). */
+    * ids, like the reference's on-success counter `exo_2.py:282`). The
+    * numbering is [[Dedup.numberRows]]' general form, which materializes
+    * the numbered rows in a counted checkpoint; [[pipeline]] numbers a
+    * small batch in one task instead. */
   def toDwhDocument(resolved: DataFrame, uploadId: Long): DataFrame =
-    Dedup.numberRows(resolved, col("path"), "DOCUMENT_NUM").select(
+    toDwhDocument(resolved, uploadId, partitions = 0)
+
+  private def toDwhDocument(resolved: DataFrame, uploadId: Long,
+                            partitions: Int): DataFrame =
+    Dedup.numberRows(resolved, col("path"), "DOCUMENT_NUM", partitions).select(
       col("DOCUMENT_NUM"),
       col("PATIENT_NUM"),
       lit(null).cast("string").as("ENCOUNTER_NUM"),
@@ -83,29 +90,56 @@ object Documents {
       current_date().as("UPDATE_DATE"),
       lit(uploadId).as("UPLOAD_ID"))
 
-  /** Full pipeline: scan-shaped input → DWH_DOCUMENT rows, numbered and
-    * materialized (the returned frame reads a checkpoint, so consumers
-    * never re-run the extraction). The checkpoints serve the numbering
-    * and the one extraction per file, not the sink: [[TxLog.merge]]
-    * reads its batch once whatever it is given.
+  /** Full pipeline: scan-shaped input → DWH_DOCUMENT rows, numbered in
+    * path order. Whatever reads the returned frame never re-runs the
+    * extraction: it reads a checkpoint. [[TxLog.merge]] reads its batch
+    * once whatever it is given.
     *
     * Materialization boundary: `text` is usually a UDF over the scanned
-    * bytes (PDF/DOCX extraction), the costly step. The parsed batch is
-    * checkpointed once ([[graft.ops.Caches.corpusScale]]: a batch grows
-    * with the landed files) and every later step reads those blocks.
-    * [[dropEmpty]] sits after the checkpoint on purpose: its filter on
-    * `text` would otherwise be pushed below the projection that computes
-    * `text`, so the extraction would run once in the Filter and again in
-    * the Project, and [[Dedup.numberRows]]' range exchange (a sampling
-    * job plus a shuffle-map job) would run that pass twice — four
-    * extractions per file instead of one. The filename filter stays in
-    * [[parseFilenames]], below the extraction: an unparseable name is
-    * dropped without being extracted. The checkpoint is released as soon
-    * as numberRows' own checkpoint holds the numbered batch. */
+    * bytes (PDF/DOCX extraction), the costly step. The parsed batch and
+    * its regex metadata ([[extractMetadata]]) are checkpointed once
+    * ([[graft.ops.Caches.corpusScaleCounted]]: a batch grows with the
+    * landed files) and every later step reads those blocks, so the
+    * regexes run beside the extraction, one task per scan partition,
+    * not in the one task that numbers a small batch. [[dropEmpty]] sits
+    * after the checkpoint on purpose: its filter on `text` would
+    * otherwise be pushed below the projection that computes `text`, so
+    * the extraction would run once in the Filter and again in the
+    * Project, and each read of the batch would run that pass again. The
+    * filename filter stays in [[parseFilenames]], below the extraction:
+    * an unparseable name is dropped without being extracted.
+    *
+    * The same job that fills the checkpoint measures it, and the size
+    * picks one of two numberings:
+    *  - a small batch, at most
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes
+    *    (1 MiB by default), is numbered in one partition
+    *    ([[Dedup.numberRows]] with `partitions = 1`). AQE never coalesces
+    *    below that size, so the range exchange of the general form would
+    *    end in one partition anyway; here there is no range sample, no
+    *    range shuffle and no numbering checkpoint, and the patient
+    *    join and a one-task sort run inside the consumer's job.
+    *    The returned frame reads `parsed`, so it is not released; the
+    *    ContextCleaner frees it once the frame is garbage-collected, as
+    *    [[graft.ops.Caches.small]] documents. Paths are unique in a
+    *    listing, so every read numbers the batch alike; every read also
+    *    reads `ipphist` again, so a consumer that reads the frame twice
+    *    needs an `ipphist` that holds still in between (a [[TxLog.read]]
+    *    frame does: it reads one version's files);
+    *  - a larger batch, such as a first poll over a big share, takes the
+    *    general form: range-partitioned numbering into its own counted
+    *    checkpoint, after which `parsed` is released. */
   def pipeline(docs: DataFrame, ipphist: DataFrame, uploadId: Long): DataFrame = {
-    val parsed = graft.ops.Caches.corpusScale(parseFilenames(docs))
-    try toDwhDocument(
-      resolvePatients(extractMetadata(dropEmpty(parsed)), ipphist), uploadId)
-    finally graft.ops.Caches.release(parsed)
+    val (parsed, sizes) =
+      graft.ops.Caches.corpusScaleCounted(extractMetadata(parseFilenames(docs)))
+    val resolved = resolvePatients(dropEmpty(parsed), ipphist)
+    val oneTask = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      docs.sparkSession.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    if (sizes.map(_._2).sum <= oneTask)
+      toDwhDocument(resolved, uploadId, partitions = 1)
+    else
+      try toDwhDocument(resolved, uploadId)
+      finally graft.ops.Caches.release(parsed)
   }
 }

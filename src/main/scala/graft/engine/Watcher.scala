@@ -112,7 +112,10 @@ object Watcher {
     * from the written files. The parquet sinks read it more than once
     * (the upserts join on its keys, then union its rows), so there a
     * `process` whose rows are costly to compute, such as text
-    * extraction, should return them materialized. */
+    * extraction, should return them from a checkpoint. [[Documents.pipeline]]
+    * does: a second read of a small batch repeats the patient join and
+    * the one-task numbering sort over its checkpoint, never the
+    * extraction or the regexes. */
   /** @param partitionCol when set, the warehouse table is stored
     *   partitioned by this (process-emitted) column and only
     *   batch-affected partitions are read and rewritten, the

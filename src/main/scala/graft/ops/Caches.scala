@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 
 /** Cache-lifecycle helpers for multi-stage ops (LSH candidate pipelines)
   * that persist intermediate frames consumed by several downstream joins.
@@ -85,10 +86,12 @@ private[graft] object Caches {
   def modelSized(rddId: Int): Boolean = !corpusRdds.contains(rddId)
 
   /** Like [[corpusScale]], but FUSES the checkpoint's materialization
-    * job with a per-partition row count: returns the checkpointed
-    * frame plus `counts(i)` = rows in partition i of the materialized
-    * RDD. [[graft.engine.Dedup.numberRows]] previously paid TWO
-    * blocking driver actions per call — the eager localCheckpoint job,
+    * job with a per-partition size: returns the checkpointed frame plus
+    * `sizes(i)` = (rows, bytes) of partition i of the materialized RDD,
+    * the bytes being the checkpointed rows' `UnsafeRow` sizes (what the
+    * blocks hold in memory, before any compression).
+    * [[graft.engine.Dedup.numberRows]] previously paid TWO blocking
+    * driver actions per call — the eager localCheckpoint job,
     * then a `groupBy(pid).count().collect()` re-scan of the cached
     * blocks — and the suffix-doubling family pays numberRows once per
     * level, so the double action was the largest remaining block of
@@ -99,8 +102,10 @@ private[graft] object Caches {
     * returns the per-partition sizes. Counting rides runJob's
     * per-partition RESULT channel — exactly-once per partition by
     * construction, with none of the retry double-count hazards a
-    * transformation-site accumulator would carry. */
-  def corpusScaleCounted(df: DataFrame): (DataFrame, Array[Long]) = {
+    * transformation-site accumulator would carry. The bytes ride the
+    * same loop, so a caller can choose its next step by the batch's
+    * size without another job ([[graft.engine.Documents.pipeline]]). */
+  def corpusScaleCounted(df: DataFrame): (DataFrame, Array[(Long, Long)]) = {
     if (capturing) synchronized {
       val p = df.queryExecution.executedPlan
       captured += p.toString
@@ -121,13 +126,22 @@ private[graft] object Caches {
         l.rdd
       case _ => cp.queryExecution.toRdd
     }
-    val counts = df.sparkSession.sparkContext.runJob(rdd,
+    val schema = df.schema
+    val sizes = df.sparkSession.sparkContext.runJob(rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        lazy val toUnsafe = UnsafeProjection.create(schema)
         var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
+        var bytes = 0L
+        while (it.hasNext) {
+          bytes += (it.next() match {
+            case u: UnsafeRow => u.getSizeInBytes
+            case r => toUnsafe(r).getSizeInBytes
+          })
+          n += 1
+        }
+        (n, bytes)
       })
-    (cp, counts)
+    (cp, sizes)
   }
 
   /** Like [[small]], but FUSES the materialization job with a count of

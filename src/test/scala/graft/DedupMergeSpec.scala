@@ -71,6 +71,24 @@ class DedupMergeSpec extends SparkSpec {
     assert(!tail.contains("Join"), tail)
   }
 
+  test("numberRows(partitions = 1) numbers in the consumer's job: no " +
+    "exchange in its plan, no job to build it, one job to collect it") {
+    val df = (1 to 2000).map(i => (i * 13L % 2003, i.toLong)).toDF("ord", "v")
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobExecutions {
+      out = Dedup.numberRows(df, col("ord"), "rn", partitions = 1)
+    }.isEmpty, "building the one-partition numbering ran a job")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    var got: Seq[(Long, Long)] = Nil
+    assert(jobExecutions {
+      got = out.select("ord", "rn").as[(Long, Long)].collect().toSeq
+    }.size === 1)
+    val byOrd = got.sortBy(_._1)
+    assert(byOrd.map(_._2) === (1L to 2000L))
+    assert(byOrd.map(_._1) === df.select("ord").as[Long].collect().sorted.toSeq)
+  }
+
   test("numberRows is EXACT on wide frames whose payload survives into " +
     "the output, under default AQE coalescing — the r13 two-branch " +
     "form silently dropped rows and duplicated ranks when column " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Documents, Patients}
+import graft.engine.{Documents, Patients, TxLog}
 import graft.ops.Multimodal
 import graft.streaming.EventStreams
 
@@ -92,12 +92,40 @@ class PipelineSpec extends SparkSpec {
       .option("pathGlobFilter", "*.{pdf,docx}").load(dir.toString)
       .select(col("path"), extract(col("content")).as("text"))
 
-    val out = Documents.pipeline(files, ipphist, uploadId = 5L)
+    val table = Files.createTempDirectory("landing_wh").resolve("docs").toString
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobExecutions {
+      out = Documents.pipeline(files, ipphist, uploadId = 5L)
+      TxLog.merge(spark, table, out, "DOCUMENT_NUM")
+    }
+    // the parse checkpoint, the ipphist window shuffle, its broadcast and
+    // the batch write; the range numbering added a range sample, a range
+    // shuffle and a counted checkpoint
+    assert(jobs.size === 4, jobs)
     val got = out.collect().toSet
     assert(out.count() === 13) // 16 landed: no name, empty text, no IPP
-    // one extraction per parseable file: the unmaterialized composition
-    // ran the UDF in the text Filter and the Project, twice over
+    // one extraction per parseable file, however often the frame is read:
+    // the unmaterialized composition ran the UDF in the text Filter and
+    // the Project, twice over
     assert(calls.value === 15L)
+    assert(TxLog.read(spark, table).select(out.columns.map(col): _*)
+      .collect().toSet === got)
+
+    // a batch above minPartitionSize takes the range numbering, which
+    // materializes the numbered rows while the pipeline is built: the
+    // parse checkpoint, the window shuffle, the broadcast, the range
+    // sample, the range shuffle and the counted checkpoint
+    val minPart = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    withConf(minPart, "1") {
+      var ranged: org.apache.spark.sql.DataFrame = null
+      val built = jobExecutions {
+        ranged = Documents.pipeline(files, ipphist, uploadId = 5L)
+      }
+      assert(built.size === 6, built)
+      assert(!ranged.queryExecution.executedPlan.toString.contains("Coalesce"))
+      assert(ranged.collect().toSet === got)
+    }
+    assert(calls.value === 30L)
 
     // the same rows as the composition over pre-extracted text
     val texts = landed.map { case (n, t) =>
