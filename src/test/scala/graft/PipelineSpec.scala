@@ -98,10 +98,11 @@ class PipelineSpec extends SparkSpec {
       out = Documents.pipeline(files, ipphist, uploadId = 5L)
       TxLog.merge(spark, table, out, "DOCUMENT_NUM")
     }
-    // the parse checkpoint, the ipphist window shuffle, its broadcast and
-    // the batch write; the range numbering added a range sample, a range
-    // shuffle and a counted checkpoint
-    assert(jobs.size === 4, jobs)
+    // the parse checkpoint and the batch write, which also resolves and
+    // numbers the batch: the patient map of an in-memory ipphist is built
+    // on the driver without a job. The window dedup and broadcast join
+    // added two jobs, the range numbering three more
+    assert(jobs.size === 2, jobs)
     val got = out.collect().toSet
     assert(out.count() === 13) // 16 landed: no name, empty text, no IPP
     // one extraction per parseable file, however often the frame is read:
@@ -113,15 +114,15 @@ class PipelineSpec extends SparkSpec {
 
     // a batch above minPartitionSize takes the range numbering, which
     // materializes the numbered rows while the pipeline is built: the
-    // parse checkpoint, the window shuffle, the broadcast, the range
-    // sample, the range shuffle and the counted checkpoint
+    // parse checkpoint, the range sample, the range shuffle and the
+    // counted checkpoint
     val minPart = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     withConf(minPart, "1") {
       var ranged: org.apache.spark.sql.DataFrame = null
       val built = jobExecutions {
         ranged = Documents.pipeline(files, ipphist, uploadId = 5L)
       }
-      assert(built.size === 6, built)
+      assert(built.size === 4, built)
       assert(!ranged.queryExecution.executedPlan.toString.contains("Coalesce"))
       assert(ranged.collect().toSet === got)
     }
@@ -147,6 +148,96 @@ class PipelineSpec extends SparkSpec {
         date == java.sql.Date.valueOf(f"2019-03-$i%02d") &&
         author == s"Dr ${signer(i).capitalize}"
     }, byPath)
+  }
+
+  test("patient lookup returns the shuffle join's rows from a TxLog-backed " +
+    "and an in-memory ipphist: null ids never match, a null smallest " +
+    "number still lands, the smaller of two numbers wins") {
+    val ipphist = Seq[(Option[Long], Option[String])](
+      (Some(5L), None),                              // null id: never matches
+      (Some(3L), Some("A")), (None, Some("A")),      // smallest number is null
+      (Some(20L), Some("B")), (Some(10L), Some("B")), // the smaller one wins
+      (Some(7L), Some("C"))
+    ).toDF("PATIENT_NUM", "HOSPITAL_PATIENT_ID")
+    val docs = Seq[(String, Option[String])](
+      ("d1", Some("A")), ("d2", Some("B")), ("d3", Some("C")), ("d4", Some("B")),
+      ("d5", Some("Z")),   // unknown id: drops
+      ("d6", None)         // null id: drops
+    ).toDF("path", "ipp")
+    val root = java.nio.file.Files.createTempDirectory("ipphist_adverse")
+      .resolve("ipphist").toString
+    TxLog.append(spark, root, ipphist, "PATIENT_NUM")
+    val expected = Set[(String, Option[Long])](
+      ("d1", None), ("d2", Some(10L)), ("d3", Some(7L)), ("d4", Some(10L)))
+    for (ipp <- Seq(ipphist, TxLog.read(spark, root))) {
+      def rows(hint: Boolean) = Documents.resolvePatients(docs, ipp, hint)
+        .select("path", "ipp", "PATIENT_NUM").as[(String, String, Option[Long])]
+        .collect().toSeq.sortBy(_._1)
+      val looked = rows(hint = true)
+      assert(looked === rows(hint = false))
+      assert(looked.map(r => (r._1, r._3)).toSet === expected)
+      assert(Documents.resolvePatients(docs, ipp).columns.toSeq
+        === docs.columns.toSeq :+ "PATIENT_NUM")
+    }
+  }
+
+  test("the patient map is built once per ipphist version: an unchanged " +
+    "version adds no job, a new or time-travelled version rebuilds it, " +
+    "and a frame built before a rebuild still reads its own map") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("landing_dim")
+    // ids 0-3 are known from the start, 9 only after the second export
+    (0 to 4).foreach { i =>
+      val ipp = if (i == 4) "00000009" else f"$i%08d"
+      Files.write(dir.resolve(s"${ipp}_${2000 + i}.pdf"),
+        s"consultation du 1$i/03/2019".getBytes(UTF_8))
+    }
+    val files = spark.read.format("binaryFile").load(dir.toString)
+      .select(col("path"), col("content").cast("string").as("text"))
+    val ippRoot = Files.createTempDirectory("ipphist_dim")
+      .resolve("ipphist").toString
+    val first = (0 to 3).map(i => (101L + i, f"$i%08d"))
+      .toDF("PATIENT_NUM", "HOSPITAL_PATIENT_ID")
+    TxLog.mergeEpoch(spark, ippRoot, first, "HOSPITAL_PATIENT_ID", 1L)
+    val wh = Files.createTempDirectory("docs_dim")
+    def resolved(df: org.apache.spark.sql.DataFrame) =
+      df.select("ID_DOC_SOURCE", "PATIENT_NUM").as[(String, Long)].collect().toMap
+    def landAndCount(n: Int) = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobExecutions {
+        out = Documents.pipeline(files, TxLog.read(spark, ippRoot), uploadId = n)
+        TxLog.merge(spark, wh.resolve(s"docs_$n").toString, out, "DOCUMENT_NUM")
+      }
+      (out, jobs)
+    }
+    val known = (0 to 3).map(i => s"${2000 + i}" -> (101L + i)).toMap
+
+    // a new table's map is built: the parse checkpoint, the one ipphist
+    // scan and the write
+    val (_, firstJobs) = landAndCount(1)
+    assert(firstJobs.size === 3, firstJobs)
+    // the same version, read again: the parse checkpoint and the write
+    val (before, sameJobs) = landAndCount(2)
+    assert(sameJobs.size === 2, sameJobs)
+    assert(resolved(before) === known)
+
+    // an export adds patient 9: the next batch resolves its document
+    val v2 = TxLog.mergeEpoch(spark, ippRoot,
+      Seq((109L, "00000009")).toDF("PATIENT_NUM", "HOSPITAL_PATIENT_ID"),
+      "HOSPITAL_PATIENT_ID", 2L)
+    val (after, newJobs) = landAndCount(3)
+    assert(newJobs.size === 3, newJobs)
+    assert(resolved(after) === known + ("2004" -> 109L))
+
+    // a read of the old version resolves against the old rows
+    val old = Documents.pipeline(files,
+      TxLog.read(spark, ippRoot, version = Some(v2 - 1)), uploadId = 4L)
+    assert(resolved(old) === known)
+    // the frame built before both rebuilds still reads its own map
+    assert(resolved(before) === known)
+    assert(resolved(Documents.pipeline(files, TxLog.read(spark, ippRoot),
+      uploadId = 5L)) === known + ("2004" -> 109L))
   }
 
   test("real video decode: AVI encode -> RIFF walk -> per-frame imageio " +

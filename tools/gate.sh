@@ -39,9 +39,9 @@
 #                                    FAILS on a crashed run, any failed
 #                                    operation, more than 150
 #                                    extractions per pass (one per landed
-#                                    file), or engine.poll_jobs above 40
-#                                    (4 jobs per poll: a small batch is
-#                                    numbered inside the merge's write)
+#                                    file), or engine.poll_jobs above 21
+#                                    (2 jobs per poll, plus one ipphist
+#                                    scan per pass for the patient map)
 # 9. Panel execute counters        — one traced query_panels benchmark run
 #                                    (perfbench/run.py, seed 1, 15 s);
 #                                    FAILS on a crashed run or any failed
@@ -247,11 +247,13 @@ EOF
 echo "== [8/9] dwh_ingest traced counters (one extraction per landed file)"
 # A pass lands 10 batches of 15 files, so 150 is one extraction per file;
 # the pipeline's materialization boundary (Documents.pipeline) keeps it
-# there. Each poll runs 4 jobs: the parse checkpoint, the ipphist window
-# shuffle, its broadcast and the batch write, which also numbers the
-# small batch in one task. A pass's polls run 40 jobs (70 with the range
-# numbering, 80 with the merge's bounds job too). The counters are
-# medians over the run's passes.
+# there. Each poll runs 2 jobs: the parse checkpoint and the batch write,
+# which also resolves patients from the broadcast map and numbers the
+# small batch in one task. The map is rebuilt by one ipphist scan when a
+# re-export changes ipphist's version, once per pass, so a pass's polls
+# run 21 jobs (40 with the per-poll window dedup and broadcast join, 70
+# with the range numbering too, 80 with the merge's bounds job too). The
+# counters are medians over the run's passes.
 python3 perfbench/run.py --workload dwh_ingest --seed 1 --seconds 15 \
   --trace 1 2>/tmp/gate_ingest_err.log | tail -1 >/tmp/gate_ingest.json
 python3 - /tmp/gate_ingest.json <<'EOF' || { echo "FAIL: dwh_ingest counters"; exit 1; }
@@ -268,8 +270,8 @@ bad = []
 if d["failed"] > 0: bad.append(f"failed={d['failed']}")
 if m["sources.extract_docs"] > 150:
     bad.append(f"sources.extract_docs={m['sources.extract_docs']:.0f} > 150")
-if m["engine.poll_jobs"] > 40:
-    bad.append(f"engine.poll_jobs={m['engine.poll_jobs']:.0f} > 40")
+if m["engine.poll_jobs"] > 21:
+    bad.append(f"engine.poll_jobs={m['engine.poll_jobs']:.0f} > 21")
 if bad:
     print("; ".join(bad)); sys.exit(1)
 EOF
